@@ -345,70 +345,24 @@ def main() -> None:
         release_new_persistent_rdds,
         snapshot_persistent_rdds,
     )
-    from clinical_data_warehouse_bi_spark.registry import registered_queries
+    from clinical_data_warehouse_bi_spark.registry import auditable_queries
     from clinical_data_warehouse_bi_spark.session import get_spark
 
     spark = get_spark("bench")
     # registry-retired operators stay in the bench for historical
-    # comparability (their library code is live; only their
-    # correctness-gate slot moved to tests/test_retired_parity.py)
-    from clinical_data_warehouse_bi_spark.queries.core import (
-        q_agg_per_order,
-        q_approx_stats,
-        q_calendar_dim,
-        q_grouped_percentiles,
-    )
-    from clinical_data_warehouse_bi_spark.queries.dedup import (
-        q_minhash_lsh_pairs,
-        q_paragraph_dedup,
-        q_repeated_spans,
-        q_simhash_pairs,
-    )
-    from clinical_data_warehouse_bi_spark.queries.join_ops import (
-        q_anti_new_dates,
-        q_range_join,
-    )
-    from clinical_data_warehouse_bi_spark.queries.similarity import q_cosine_topk
+    # comparability: auditable_queries() resolves every rotation-pool
+    # retiree; the three rows-only retirees are not in the pool
+    from clinical_data_warehouse_bi_spark.queries.core import q_approx_stats
     from clinical_data_warehouse_bi_spark.queries.similarity import (
         q_ann_hnsw_routed,
         q_ann_ivf_learned,
     )
-    from clinical_data_warehouse_bi_spark.queries.text_ops import (
-        q_quota_sample,
-    )
-    from clinical_data_warehouse_bi_spark.queries.windows import (
-        q_cohort_retention,
-        q_frame_sample,
-        q_funnel_steps,
-        q_readmission_gap,
-        q_resample_fill,
-        q_scd2_dim,
-        q_stream_dedup_dual,
-    )
 
     queries = {
-        **registered_queries(),
+        **auditable_queries(),
         "q_approx_stats": q_approx_stats,
-        "q_paragraph_dedup": q_paragraph_dedup,
-        "q_range_join": q_range_join,
-        "q_frame_sample": q_frame_sample,
-        "q_agg_per_order": q_agg_per_order,
-        "q_cosine_topk": q_cosine_topk,
-        "q_minhash_lsh_pairs": q_minhash_lsh_pairs,
-        "q_scd2_dim": q_scd2_dim,
-        "q_funnel_steps": q_funnel_steps,
-        "q_cohort_retention": q_cohort_retention,
-        "q_quota_sample": q_quota_sample,
         "q_ann_ivf_learned": q_ann_ivf_learned,
         "q_ann_hnsw_routed": q_ann_hnsw_routed,
-        "q_resample_fill": q_resample_fill,
-        "q_readmission_gap": q_readmission_gap,
-        "q_grouped_percentiles": q_grouped_percentiles,
-        "q_repeated_spans": q_repeated_spans,
-        "q_calendar_dim": q_calendar_dim,
-        "q_stream_dedup_dual": q_stream_dedup_dual,
-        "q_simhash_pairs": q_simhash_pairs,
-        "q_anti_new_dates": q_anti_new_dates,
     }
     timings: dict[str, float] = {}
     spreads: dict[str, float] = {}

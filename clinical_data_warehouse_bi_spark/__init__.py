@@ -5,23 +5,60 @@ Spark-first and extended with large-scale training-data-pipeline
 operators (dedup, similarity search, text analysis, multimodal
 plumbing).
 
+Every top-level def is reached from the entry points
+(``__spark_entry__.py``, ``bench.py``, ``queries/``), except the
+tested-only defs that tests/test_reachability.py lists in TESTED_ONLY
+(reached only from their own tests, awaiting their cut); that test
+keeps it that way.
+
 Layout:
-  session.py   SparkSession factory (AQE, UTC, sane shuffle partitions)
-  io.py        parquet/csv/json sources+sinks, catalog DDL, bucketed
-               tables, fan_out (adaptive scan rebalance)
-  cleanse.py   cleansing expressions (sentinel timestamps, keyword
-               filters, regex-guarded numeric parse, calendar attrs)
-  keys.py      surrogate-key strategies (test-scale + 100TB-scale)
-  joins.py     lookup / normalized-string / interval (as-of) /
-               null-safe / semi / anti / salted-skew join operators
-  qa.py        the reference's QA suite as reusable DataFrame checks
-  star.py      the 3-stage clinical pipeline (staging -> dwh -> agg)
-  text.py      tokenize / shingle / MinHash / LSH / SimHash blocks
-  similarity.py Arrow-batched numpy top-k + MLlib KMeans IVF buckets
-  queries/     registered (query, oracle-SQL) pairs for the driver
-  streaming.py Structured Streaming surface (watermark windows,
-               session windows, stateful ops, streaming dedup)
-  multimodal.py binary-column (image/audio) plumbing via mapInPandas
+  session.py     SparkSession factory (AQE, UTC, sane shuffle partitions)
+  io.py          scale-factor table reads, footer stats, fan_out, layer and
+                 bucketed-table writes, index publish, temperature
+                 mixing, dataset manifests; tested-only: format
+                 sources/sinks, raw-file reads, sized writes, shuffles,
+                 compaction under a maintenance lock
+  cleanse.py     cleansing expressions (sentinel timestamps, keyword
+                 filters, regex-guarded numeric parse, calendar attrs)
+  keys.py        surrogate keys (row_number, zip_index_key)
+  joins.py       lookup / normalized-string / interval (as-of) /
+                 null-safe / semi / anti / range / fuzzy join operators;
+                 tested-only: salted and binned-interval joins,
+                 survivorship
+  fixtures.py    seeded MIMIC-shaped sources for the star pipeline
+  star.py        the 3-stage clinical pipeline (staging -> dwh -> agg)
+  qa.py          the reference's QA suite plus expectation, pivot,
+                 Benford, outlier, freshness and snapshot reports;
+                 tested-only: profile, drift, skew and corpus-card
+                 reports
+  kpi.py         readmission and daily-census KPIs; tested-only: length
+                 of stay and mortality
+  layout.py      Z-order (Morton) clustered writes
+  percentiles.py distributed exact percentiles (tested-only: winsorize)
+  timeseries.py  resample/fill, rolling aggregates, attribution;
+                 tested-only: EWMA and seasonal anomalies
+  funnel.py      ordered-sequence funnels
+  text.py        tokenize / shingle / MinHash / LSH, chunk and
+                 boilerplate dedup, sampling, top n-grams, TF-IDF
+  suffix.py      exact-substring dedup and the persisted digest index
+  corpus.py      the corpus release pipeline (build_corpus_release)
+  scrub.py       repetition metrics, contamination, DP release;
+                 tested-only: PII scrub, pseudonyms, k-anonymity
+  bpe.py         BPE encoding under a merge table (tested-only: training)
+  unigram.py     tested-only: unigram-LM tokenizer training and encoding
+  classifier.py  tested-only: logistic-regression quality classifier
+  lm.py          n-gram language-model perplexity
+  graph.py       connected components for dedup clusters
+                 (tested-only: pagerank)
+  similarity.py  Arrow-batched numpy top-k, sign-LSH, IVF and IVF-PQ;
+                 tested-only: semantic dedup, PCA, hard negatives
+  hnsw.py        sharded HNSW-class graph ANN
+  retrieval.py   BM25 top-k and its persisted index
+  multimodal.py  binary-column (image/audio) plumbing via mapInPandas
+  streaming.py   streaming event dedup (dedup_events); tested-only:
+                 pre-agg and census synopses
+  registry.py    query registry and gate-slot rotation
+  queries/       registered (query, oracle-SQL) pairs
 """
 
 __version__ = "0.1.0"

@@ -170,113 +170,3 @@ def bpe_encode(
             )
 
     return docs.select(id_col, text_col).mapInPandas(_encode, out_schema)
-
-
-def token_vocab(encoded: DataFrame, tokens_col: str = "bpe_tokens") -> list[str]:
-    """Deterministic id assignment for an encoded corpus: id 0 is
-    <unk>, then every distinct BPE token in sorted order. One
-    distinct pass over the (deduped-per-partition) token stream;
-    the vocabulary is merge-table-bounded, so the collect is small
-    by construction."""
-    toks = (
-        encoded.select(F.explode(F.array_distinct(F.col(tokens_col))).alias("t"))
-        .distinct()
-        .collect()
-    )
-    return ["<unk>"] + sorted(r["t"] for r in toks)
-
-
-def write_training_contexts(
-    docs: DataFrame,
-    merges: list[tuple[str, str]],
-    out: str,
-    ctx: int = 128,
-    num_shards: int = 4,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> dict:
-    """The end artifact of the tokenizer story: fixed-``ctx``-length
-    contexts of BPE token IDS on disk, partitioned by shard — what a
-    pretraining dataloader actually reads. Composes bpe_encode (no
-    shuffle) -> vocab id mapping (broadcast dict, Arrow map) -> the
-    per-shard running-offset window (q_pack_sequences' shape; never
-    a global sort) -> ONE (shard, chunk) exchange of (pos, id) INT
-    pairs — token text never shuffles — -> sorted assembly into
-    exact-length contexts. The trailing partial context per shard is
-    dropped (the standard packing trade; its tokens are counted in
-    the returned stats).
-
-    Writes parquet (chunk_idx, input_ids) under shard=*/ plus
-    _vocab.json + _merges.json (underscore-prefixed so parquet
-    readers ignore them) for reproducibility. Returns
-    {"n_contexts", "n_tokens", "n_dropped_tokens", "vocab_size"}."""
-    import json
-    import os
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import Window
-
-    encoded = bpe_encode(docs, merges, id_col=id_col, text_col=text_col)
-    vocab = token_vocab(encoded)
-    tok2id = {t: i for i, t in enumerate(vocab)}
-
-    def _map_ids(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "input_ids": [
-                        np.array(
-                            [tok2id.get(t, 0) for t in toks], dtype=np.int64
-                        )
-                        for toks in pdf["bpe_tokens"]
-                    ],
-                }
-            )
-
-    with_ids = encoded.filter(F.col("n_bpe_tokens") > 0).mapInPandas(
-        _map_ids, f"{id_col} long, input_ids array<long>"
-    )
-    sharded = with_ids.withColumn(
-        "shard", (F.col(id_col) % num_shards).cast("int")
-    ).withColumn("n", F.size("input_ids").cast("bigint"))
-    w = Window.partitionBy("shard").orderBy(id_col).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    offs = sharded.withColumn("off", F.sum("n").over(w) - F.col("n"))
-    flat = offs.select(
-        "shard",
-        F.posexplode("input_ids").alias("i", "tid"),
-        F.col("off"),
-    ).select(
-        "shard",
-        ((F.col("off") + F.col("i")) / ctx).cast("bigint").alias("chunk_idx"),
-        ((F.col("off") + F.col("i")) % ctx).cast("int").alias("pos"),
-        "tid",
-    )
-    contexts = (
-        flat.groupBy("shard", "chunk_idx")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "tid"))),
-                lambda s: s["tid"],
-            ).alias("input_ids"),
-            F.count("*").alias("__n"),
-        )
-        .filter(F.col("__n") == ctx)
-        .drop("__n")
-    )
-    contexts.write.mode("overwrite").partitionBy("shard").parquet(out)
-    n_contexts = docs.sparkSession.read.parquet(out).count()
-    n_tokens = sharded.agg(F.sum("n")).first()[0] or 0
-    with open(os.path.join(out, "_vocab.json"), "w") as f:
-        json.dump(vocab, f)
-    with open(os.path.join(out, "_merges.json"), "w") as f:
-        json.dump(merges, f)
-    return {
-        "n_contexts": n_contexts,
-        "n_tokens": int(n_tokens),
-        "n_dropped_tokens": int(n_tokens - n_contexts * ctx),
-        "vocab_size": len(vocab),
-    }

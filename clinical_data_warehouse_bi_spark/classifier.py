@@ -20,9 +20,6 @@ Scale contract (the covariance_stats idiom, similarity.py:801):
   fixed arithmetic over array elements (d is small for quality
   features), so scoring stays inside whole-stage codegen; no Python
   in the hot path.
-* ``featurize_documents`` — per-row token/array expressions (no
-  shuffle), the same Gopher/C4-cheap-signal family as
-  q_quality_score.
 
 Determinism: full-batch GD with a fixed iteration count and a fixed
 init is exactly reproducible (no sampling, no data-order dependence
@@ -37,29 +34,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from clinical_data_warehouse_bi_spark import text as T
-
-
-def featurize_documents(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """(doc_id, features array<double>) — bias + cheap quality
-    signals, computed per-row with built-ins (no shuffle, no UDF)."""
-    toks = T.tokens(text_col)
-    n_tok = F.size(toks)
-    n_types = F.size(F.array_distinct(toks))
-    stop_arr = F.array(*[F.lit(w) for w in T.EN_STOPWORDS])
-    stop_ratio = F.size(F.array_intersect(toks, stop_arr)).cast("double") / F.greatest(
-        n_types, F.lit(1)
-    )
-    ttr = n_types.cast("double") / F.greatest(n_tok, F.lit(1))
-    len_score = F.least(n_tok.cast("double") / F.lit(100.0), F.lit(1.0))
-    log_len = F.log1p(n_tok.cast("double"))
-    return docs.select(
-        "doc_id",
-        F.array(
-            F.lit(1.0), stop_ratio, ttr, len_score, log_len / F.lit(10.0)
-        ).alias("features"),
-    )
 
 
 def train_logreg(
@@ -148,21 +122,6 @@ def predict_proba(
     return df.withColumn("proba", F.lit(1.0) / (F.lit(1.0) + F.exp(-z)))
 
 
-def quality_filter(
-    docs: DataFrame,
-    w: np.ndarray,
-    threshold: float = 0.5,
-    text_col: str = "text",
-) -> DataFrame:
-    """Corpus filtering composition: featurize -> score -> keep docs
-    with P(quality) >= threshold. The join back to the full document
-    row is by doc_id; at scale prefer scoring the slim feature
-    relation and semi-joining the corpus (pushdown-friendly)."""
-    scored = predict_proba(featurize_documents(docs, text_col), w)
-    keep = scored.where(F.col("proba") >= F.lit(threshold)).select("doc_id")
-    return docs.join(keep, "doc_id", "left_semi")
-
-
 def train_test_split(
     df: DataFrame, test_frac: float, id_col: str = "doc_id", seed: str = "cv0"
 ) -> tuple[DataFrame, DataFrame]:
@@ -190,39 +149,6 @@ def train_test_split(
     return train, test
 
 
-def auc(
-    scored: DataFrame, proba_col: str = "proba", label_col: str = "label"
-) -> float:
-    """Exact ROC-AUC, distributed (the Mann-Whitney U form with the
-    standard tie correction: average ranks per tied score): a
-    distributed range-partitioned sort + keys.zip_index_key's
-    shuffle-free dense ranking — never a single-partition window —
-    then one aggregation over per-score groups. Driver sees three
-    scalars."""
-    from clinical_data_warehouse_bi_spark.keys import zip_index_key
-
-    slim = scored.select(
-        F.col(proba_col).alias("__s"), F.col(label_col).cast("double").alias("__y")
-    )
-    ranked = zip_index_key(slim.orderBy(F.col("__s").asc()), "__rank")
-    per_score = ranked.groupBy("__s").agg(
-        F.avg("__rank").alias("__ar"),
-        F.sum("__y").alias("__np"),
-        F.count("*").alias("__n"),
-    )
-    row = per_score.agg(
-        F.sum(F.col("__ar") * F.col("__np")).alias("rsum"),
-        F.sum("__np").alias("np"),
-        F.sum("__n").alias("n"),
-    ).first()
-    n_pos = float(row["np"] or 0.0)
-    n_neg = float(row["n"]) - n_pos
-    if n_pos == 0 or n_neg == 0:
-        raise ValueError("auc needs both classes present")
-    u = float(row["rsum"]) - n_pos * (n_pos + 1.0) / 2.0
-    return u / (n_pos * n_neg)
-
-
 def threshold_for_keep_rate(
     scored: DataFrame, keep_rate: float, proba_col: str = "proba"
 ) -> float:
@@ -234,68 +160,6 @@ def threshold_for_keep_rate(
     if not (0.0 < keep_rate < 1.0):
         raise ValueError("keep_rate must be in (0, 1)")
     return scored.approxQuantile(proba_col, [1.0 - keep_rate], 0.001)[0]
-
-
-def standardize(
-    df: DataFrame,
-    *,
-    features_col: str = "features",
-    skip_dims: tuple[int, ...] = (0,),
-    eps: float = 1e-9,
-) -> tuple[DataFrame, dict]:
-    """Z-score the feature vectors (x - mean) / std per dimension —
-    the conditioning step that keeps full-batch GD's single learning
-    rate honest when feature scales differ by orders of magnitude.
-    Reuses similarity.covariance_stats' one-pass batch-partial sweep
-    (mean and std arrive together; the vectors never shuffle); the
-    scaling itself is a per-row array expression with the mean/std
-    vectors inlined as literals — no UDF, no join. ``skip_dims``
-    defaults to (0,): the bias dimension must stay 1.0, not become
-    0/0. Returns (scaled_df, {"mean", "std"}) so the SAME transform
-    replays on serving-time data (train/serve skew is the classic
-    failure this guards)."""
-    from clinical_data_warehouse_bi_spark.similarity import covariance_stats
-
-    stats = covariance_stats(df, vec_col=features_col)
-    mean = stats["mean"]
-    std = np.sqrt(np.maximum(np.diag(stats["cov"]), 0.0)) + eps
-    keep = set(skip_dims)
-    mean_l = ", ".join(
-        "0.0" if i in keep else repr(float(m)) for i, m in enumerate(mean)
-    )
-    std_l = ", ".join(
-        "1.0" if i in keep else repr(float(s)) for i, s in enumerate(std)
-    )
-    expr = (
-        f"zip_with({features_col}, "
-        f" zip_with(array({mean_l}), array({std_l}),"
-        f"          (m, s) -> named_struct('m', m, 's', s)),"
-        f" (x, ms) -> (x - ms.m) / ms.s)"
-    )
-    out = df.withColumn(features_col, F.expr(expr))
-    return out, {"mean": mean, "std": std}
-
-
-def apply_standardize(
-    df: DataFrame, stats: dict, *, features_col: str = "features",
-    skip_dims: tuple[int, ...] = (0,),
-) -> DataFrame:
-    """Replay a fitted standardization on new data (serving path)."""
-    mean, std = stats["mean"], stats["std"]
-    keep = set(skip_dims)
-    mean_l = ", ".join(
-        "0.0" if i in keep else repr(float(m)) for i, m in enumerate(mean)
-    )
-    std_l = ", ".join(
-        "1.0" if i in keep else repr(float(s)) for i, s in enumerate(std)
-    )
-    expr = (
-        f"zip_with({features_col}, "
-        f" zip_with(array({mean_l}), array({std_l}),"
-        f"          (m, s) -> named_struct('m', m, 's', s)),"
-        f" (x, ms) -> (x - ms.m) / ms.s)"
-    )
-    return df.withColumn(features_col, F.expr(expr))
 
 
 def calibration_table(

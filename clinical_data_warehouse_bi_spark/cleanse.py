@@ -51,11 +51,6 @@ def keyword_filter(col: Column | str, keywords: list[str]) -> Column:
     return pred
 
 
-def keyword_filter_rlike(col: Column | str, keywords: list[str]) -> Column:
-    c = F.lower(F.col(col) if isinstance(col, str) else col)
-    return c.rlike("|".join(kw.lower() for kw in keywords))
-
-
 def regex_guarded_numeric(col: Column | str, target: str = "decimal(10,2)") -> Column:
     """M1/P5/F7: value-as-string -> numeric iff it matches the numeric
     regex, else NULL (the reference's UPDATE ... WHERE REGEXP idiom as

@@ -102,10 +102,10 @@ def build_corpus_release(
     TRAVERSAL PER ACTION — measured 1.60x end-to-end on the plain
     composition (3.52 -> 2.20 s at sf0.1) and 1.46x on the full one
     (10.07 -> 6.92 s), identical outputs, alternating in-process A/B
-    (scripts/bench_corpus_barriers.py); re-measured at replica scale
-    in round 17 (1.4x at 16x, 1.6x at 64x, checkpoint storage
-    33/127 MB all-memory, zero disk spill — BASELINE.md barrier
-    audit). This is staged materialization WITHIN one run (the
+    (recorded in OPTIMIZATION_r16.md and BASELINE.md); re-measured at
+    replica scale in round 17 (1.4x at 16x, 1.6x at 64x, checkpoint
+    storage 33/127 MB all-memory, zero disk spill — BASELINE.md
+    barrier audit). This is staged materialization WITHIN one run (the
     reference's own stage->DWH->agg discipline), not cross-run
     caching: every invocation still computes everything from the
     input relation.

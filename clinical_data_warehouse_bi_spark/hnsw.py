@@ -19,9 +19,9 @@ Distributed design — the part that must survive 100 TB:
   id and each shard builds its OWN small-world graph inside one
   ``applyInPandas`` task (numpy GEMM for the k-NN base layer — no
   Python loops over rows for distance work). Shards build in
-  parallel, append/compact per shard, and a query fans out to every
-  shard's graph and merges top-k — the standard sharded-HNSW layout
-  (what Vespa/Qdrant/Weaviate do across segments). Searching S
+  parallel, and a query fans out to every shard's graph and merges
+  top-k — the standard sharded-HNSW layout (what
+  Vespa/Qdrant/Weaviate do across segments). Searching S
   shards costs S small beam searches; recall is UNHURT by sharding
   (each shard's true top-k is a superset contributor to the global
   top-k candidates).
@@ -37,11 +37,6 @@ Distributed design — the part that must survive 100 TB:
   meta JSON written last (complete-iff-present marker), published
   via io.publish_index_dir — the exact contract of the BM25 and
   IVF-PQ indexes (lost race discarded, corrupt leftover healed).
-  APPENDS republish the whole directory via the crash-safe rename
-  swap (rebuilt touched shards + hardlinked untouched shards
-  assembled in a scratch sibling, io.maintenance_lock held), so a
-  concurrent reader sees a complete old or complete new index —
-  never dynamic-overwrite's mixed shard state.
 - **Budget accounting.** Every search reports distance evaluations
   (``n_evals``), the currency recall-vs-cost comparisons use; the
   property tests pin recall at EQUAL probe budget against IVF-PQ's
@@ -158,10 +153,8 @@ MAX_SHARD_ROWS = 50_000
 
 
 def _make_shard_builder(m: int, upper_every: int, vec_col: str):
-    """The per-shard graph construction as a reusable applyInPandas
-    callable — shared by build_graph (full build) and
-    hnsw_index_append (touched-shard rebuild) so the two paths can
-    never diverge on link construction."""
+    """The per-shard graph construction as an applyInPandas
+    callable for build_graph."""
 
     def _build(pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pdf) > MAX_SHARD_ROWS:
@@ -221,8 +214,8 @@ def build_graph(
     is_upper): per-shard two-layer small-world graph. One exchange
     (the shard hash repartition); ALL distance work is numpy GEMM
     inside the per-shard task. Upper-layer membership is
-    deterministic (vec_id % upper_every == 0), so rebuilds and
-    appends agree on layer assignment without coordination."""
+    deterministic (vec_id % upper_every == 0), so rebuilds agree on
+    layer assignment without coordination."""
     if n_shards < 1 or m < 1 or upper_every < 2:
         raise ValueError("n_shards >= 1, m >= 1, upper_every >= 2")
     sharded = vectors.select(
@@ -453,148 +446,6 @@ def search_graph(
     )
 
 
-def _publish_rebuilt_shards(
-    path: str, rebuilt: DataFrame, touched: set[int], meta: dict
-) -> None:
-    """Assemble the post-append index state in a ``.tmp-compact``
-    scratch sibling — rebuilt touched shards written by Spark,
-    untouched shard directories HARDLINKED in (O(#files) metadata
-    ops, zero bytes copied: batch-proportional byte-work survives),
-    meta written last — and swap it in with the shared crash-safe
-    rename protocol (io.recover_compacted_dir sibling names,
-    io.maintenance_lock held), so the directory is never observable
-    in a mixed shard state. Readers follow the repo's read-before-
-    lock convention (the same exposure compact_parquet_dir has): a
-    reader that recovers-before-reading and materializes promptly is
-    safe, and one issued DURING the append fails fast on the
-    maintenance lock — but a lazy plan captured before the appender
-    took the lock and executed after the swap can hit FileNotFound
-    on a replaced touched-shard file and must retry."""
-    import shutil
-
-    from clinical_data_warehouse_bi_spark.io import maintenance_lock
-
-    with maintenance_lock(path):
-        tmp = f"{path}.tmp-compact"
-        old_dir = f"{path}.old-compact"
-        shutil.rmtree(tmp, ignore_errors=True)
-        rebuilt.write.mode("overwrite").partitionBy("shard").parquet(tmp)
-        # untouched shards: hardlink every file (same inode — mtime
-        # and bytes provably untouched; no data copied)
-        for entry in os.listdir(path):
-            if not entry.startswith("shard="):
-                continue
-            if int(entry.split("=", 1)[1]) in touched:
-                continue
-            os.makedirs(os.path.join(tmp, entry), exist_ok=True)
-            src_dir = os.path.join(path, entry)
-            for fn in os.listdir(src_dir):
-                os.link(
-                    os.path.join(src_dir, fn), os.path.join(tmp, entry, fn)
-                )
-        with open(os.path.join(tmp, HNSW_INDEX_META), "w") as f:
-            json.dump(meta, f)
-        os.rename(path, old_dir)
-        os.rename(tmp, path)
-        shutil.rmtree(old_dir, ignore_errors=True)
-
-
-def hnsw_index_append(
-    spark,
-    path: str,
-    new_vectors: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> int:
-    """Incremental ingest for the persisted graph index: because
-    every shard's graph is SELF-CONTAINED (links never cross
-    shards), appending vectors only requires rebuilding the shards
-    the new ids hash into — untouched shard directories are not
-    read, not rewritten. The operational analogue of IVF-PQ's
-    batch-proportional append, with the graph twist that a touched
-    shard's k-NN links must be recomputed over its union (links are
-    a function of the whole shard, not of the batch).
-
-    A ROUTED index (meta kind == "routed") delegates to
-    routed_index_append: its shards are k-means cells, so new
-    vectors must land by centroid assignment — hashing them by id
-    would put them in cells unrelated to their embedding, where
-    hnsw_routed_search silently never probes them (round-14 advice
-    item 1). Callers (streaming_graph_ingest included) therefore
-    ingest correctly into either index kind through this one entry
-    point.
-
-    Replay-safe: new ids already present in a touched shard are
-    dropped before the rebuild. The anti-join probe is SCOPED to the
-    touched shards (ids can only collide inside the shard they hash
-    to), so the existing-id scan partition-prunes to the batch's
-    shard= directories — each micro-batch pays a touched-shards id
-    scan, not an O(index) one (round-13 advice item 2).
-
-    Atomic publish (round-13 advice item 1): see
-    _publish_rebuilt_shards — crash-safe rename swap under the
-    maintenance lock, untouched shards hardlinked; readers keep the
-    repo's recover-before-read + prompt-materialize convention.
-
-    Returns the number of vectors actually added."""
-    from clinical_data_warehouse_bi_spark.io import recover_compacted_dir
-
-    recover_compacted_dir(path)
-    with open(os.path.join(path, HNSW_INDEX_META)) as f:
-        meta = json.load(f)
-    if meta.get("format_version") != HNSW_FORMAT_VERSION:
-        raise ValueError(f"stale hnsw index format at {path}")
-    if meta.get("kind") == "routed":
-        return routed_index_append(
-            spark, path, new_vectors, vec_col=vec_col, id_col=id_col
-        )
-    n_shards, m = meta["n_shards"], meta["m"]
-    # dropDuplicates: an at-least-once source can re-deliver a row in
-    # the SAME micro-batch (two copies of a file discovered together),
-    # where the index anti-join below cannot catch it — intra-batch
-    # dedup keeps exactly-once independent of file-batch grouping
-    batch = new_vectors.select(
-        (F.crc32(F.col(id_col).cast("string")) % n_shards)
-        .cast("int")
-        .alias("shard"),
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("embedding"),
-    ).dropDuplicates(["vec_id"]).localCheckpoint()
-    batch_shards = [
-        r["shard"] for r in batch.select("shard").distinct().collect()
-    ]
-    if not batch_shards:
-        return 0
-    # ids collide only within their own shard: scope the replay probe
-    # to the batch's shard= dirs (partition-pruned scan of one column)
-    existing_ids = (
-        spark.read.parquet(path)
-        .where(F.col("shard").isin(batch_shards))
-        .select("vec_id")
-    )
-    fresh = batch.join(existing_ids, "vec_id", "left_anti").localCheckpoint()
-    n = fresh.count()
-    if not n:
-        return 0
-    touched = {
-        r["shard"] for r in fresh.select("shard").distinct().collect()
-    }
-    old = (
-        spark.read.parquet(path)
-        .where(F.col("shard").isin(sorted(touched)))
-        .select("shard", "vec_id", "embedding")
-        # a reused vec_col name is fine: GRAPH_SCHEMA fixes the name
-        .localCheckpoint()  # the rebuild must never stream from the
-        # directory the swap below is about to replace
-    )
-    rebuilt = old.unionByName(fresh).groupBy("shard").applyInPandas(
-        _make_shard_builder(m, meta["upper_every"], "embedding"),
-        GRAPH_SCHEMA,
-    )
-    _publish_rebuilt_shards(path, rebuilt, touched, meta)
-    return n
-
-
 def hnsw_index_search(
     spark,
     path: str,
@@ -605,13 +456,7 @@ def hnsw_index_search(
     """Serve queries FROM a persisted graph directory (the
     operational twin of search_graph): meta is the
     complete-iff-present marker, the scan reads the shard-partitioned
-    parquet, and the search path is identical. Recovers-before-
-    reading (the compacted-sink convention): a crashed append's
-    rename swap is healed first, and a LIVE append's maintenance
-    lock fails this read fast instead of racing the swap."""
-    from clinical_data_warehouse_bi_spark.io import recover_compacted_dir
-
-    recover_compacted_dir(path)
+    parquet, and the search path is identical."""
     meta_path = os.path.join(path, HNSW_INDEX_META)
     with open(meta_path) as f:
         meta = json.load(f)
@@ -643,9 +488,8 @@ def _default_cell_shards(
     n_clusters: int, sub_shards: int
 ) -> dict[int, list[int]]:
     """The dense cell -> shard-id mapping a fresh routed build uses:
-    cell c owns [c*sub_shards, (c+1)*sub_shards). Appends may extend
-    a hot cell's list past this layout (skew guard), so the mapping
-    is persisted in the index meta and read back, never re-derived."""
+    cell c owns [c*sub_shards, (c+1)*sub_shards). The mapping is
+    persisted in the index meta and read back."""
     return {
         c: list(range(c * sub_shards, (c + 1) * sub_shards))
         for c in range(n_clusters)
@@ -672,10 +516,7 @@ def _assign_clusters(
     centroid cell's sub-shard picked by id hash (crc32(id) %
     len(cell_shards[cell])): ONE broadcast-GEMM Arrow pass (the
     centroid_rank kernel, embedding kept in the output so no join
-    back), no exchange until the caller's groupBy(shard). Build and
-    append BOTH go through this kernel, so an appended index and a
-    from-scratch build over the same vectors with the same centroids
-    and mapping place every vector identically."""
+    back), no exchange until the caller's groupBy(shard)."""
     from typing import Iterator
 
     cids = np.array(sorted(cell_shards), dtype=np.int64)
@@ -773,10 +614,7 @@ def build_routed_hnsw_index(
         "centroids": [
             [int(c), [float(x) for x in v]] for c, v in centroids
         ],
-        # cell -> shard ids; appends EXTEND a hot cell's list (skew
-        # guard), so the mapping is persisted, never re-derived
         "cell_shards": [[c, ss] for c, ss in sorted(cell_shards.items())],
-        "next_shard": n_clusters * sub_shards,
     }
     with open(os.path.join(path, HNSW_INDEX_META), "w") as f:
         json.dump(meta, f)
@@ -791,8 +629,7 @@ def route_queries(
     """shard -> positions into ``queries``: each query ranks the meta
     centroids by euclidean distance (the assignment metric) and
     probes every sub-shard of its top-``probe_clusters`` cells (the
-    meta's persisted cell_shards mapping, which appends may have
-    extended past the dense build-time layout). Driver-side numpy
+    meta's persisted cell_shards mapping). Driver-side numpy
     over a bounded query list — the IVF probe-selection pattern
     (similarity.search_ivf_pq_index)."""
     if probe_clusters < 1:
@@ -838,9 +675,6 @@ def hnsw_routed_search(
     standard IVF trade dialed by ``probe_clusters``; the recall
     property test pins >=0.85 at a 25% probe fraction on clustered
     data."""
-    from clinical_data_warehouse_bi_spark.io import recover_compacted_dir
-
-    recover_compacted_dir(path)
     with open(os.path.join(path, HNSW_INDEX_META)) as f:
         meta = json.load(f)
     if meta.get("format_version") != HNSW_FORMAT_VERSION:
@@ -859,151 +693,3 @@ def hnsw_routed_search(
         F.col("shard").isin(sorted(qbs))
     )
     return search_graph(graph, queries, k, beam=beam, queries_by_shard=qbs)
-
-
-#: skew-guard fill target: a cell whose projected rows exceed
-#: len(cell_shards[cell]) * this * MAX_SHARD_ROWS grows enough new
-#: sub-shards to bring the EXPECTED per-shard load back under the
-#: target. Headroom below 1.0 because the id-hash split is uniform
-#: only in expectation — the builder's MAX_SHARD_ROWS loud-fail stays
-#: the hard backstop for a pathological hash skew.
-ROUTED_TARGET_FILL = 0.8
-
-
-def routed_index_append(
-    spark,
-    path: str,
-    new_vectors: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> int:
-    """Incremental ingest for a ROUTED graph index (round-14 verdict
-    item 1): new vectors are assigned to their nearest k-means cell
-    with the SAME broadcast-GEMM kernel the build used (frozen
-    centroids — the IVF frozen-quantizer append contract
-    similarity.ivf_pq_index_append already follows), then only the
-    touched cells' shards rebuild; untouched cells hardlink through
-    the crash-safe rename swap unread. Because build and append
-    share _assign_clusters verbatim, an appended index equals a
-    from-scratch build over the union under the same centroids and
-    cell->shard mapping (pinned by the parity test).
-
-    **Skew guard**: routed shards are k-means cells, so a hot cell
-    (data drift toward one region of embedding space) can outgrow
-    the per-shard GEMM bound that hash sharding's uniformity rules
-    out. Before rebuilding, each touched cell's projected row count
-    is checked against its sub-shard capacity
-    (ROUTED_TARGET_FILL x MAX_SHARD_ROWS per sub-shard); a cell past
-    it GROWS — new shard ids are allocated from meta["next_shard"],
-    the cell's rows re-split by the same id hash over the extended
-    list, and the whole cell (cell-proportional, not
-    index-proportional) rebuilds — instead of failing the append.
-    The extended cell_shards mapping persists in the meta;
-    route_queries probes every sub-shard of a routed cell, so grown
-    cells stay fully searchable.
-
-    Replay-safe like the hash tier: the existing-id anti-join is
-    scoped to the batch's target shards (a vector's cell is a pure
-    function of its embedding and the frozen centroids, and its
-    sub-shard of its id, so a replayed id can only collide exactly
-    where it landed before). Returns the number of vectors added."""
-    from clinical_data_warehouse_bi_spark.io import recover_compacted_dir
-
-    recover_compacted_dir(path)
-    with open(os.path.join(path, HNSW_INDEX_META)) as f:
-        meta = json.load(f)
-    if meta.get("format_version") != HNSW_FORMAT_VERSION:
-        raise ValueError(f"stale hnsw index format at {path}")
-    if meta.get("kind") != "routed":
-        raise ValueError(
-            f"index at {path} is not routed — use hnsw_index_append "
-            "(which dispatches on the index kind)"
-        )
-    cell_shards = _meta_cell_shards(meta)
-    centroids = [
-        (int(c), [float(x) for x in v]) for c, v in meta["centroids"]
-    ]
-    base = new_vectors.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
-    ).dropDuplicates(["vec_id"])  # same-batch redelivery guard (see
-    # hnsw_index_append) — the index anti-join only covers PRIOR batches
-    batch = _assign_clusters(base, centroids, cell_shards).localCheckpoint()
-    batch_shards = [
-        r["shard"] for r in batch.select("shard").distinct().collect()
-    ]
-    if not batch_shards:
-        return 0
-    existing_ids = (
-        spark.read.parquet(path)
-        .where(F.col("shard").isin(batch_shards))
-        .select("vec_id")
-    )
-    fresh = batch.join(existing_ids, "vec_id", "left_anti").localCheckpoint()
-    fresh_counts = {
-        r["shard"]: r["cnt"]
-        for r in fresh.groupBy("shard").agg(F.count("*").alias("cnt")).collect()
-    }
-    n = sum(fresh_counts.values())
-    if not n:
-        return 0
-    shard_cell = {s: c for c, ss in cell_shards.items() for s in ss}
-    fresh_cells = sorted({shard_cell[s] for s in fresh_counts})
-    cell_dirs = sorted(s for c in fresh_cells for s in cell_shards[c])
-    # per-shard existing counts for the touched cells only (partition-
-    # pruned vec_id scan) — the skew-guard input
-    old_counts = {
-        r["shard"]: r["cnt"]
-        for r in spark.read.parquet(path)
-        .where(F.col("shard").isin(cell_dirs))
-        .groupBy("shard")
-        .agg(F.count("*").alias("cnt"))
-        .collect()
-    }
-    next_shard = int(meta.get("next_shard", meta["n_shards"]))
-    new_cell_shards = {c: list(ss) for c, ss in cell_shards.items()}
-    grown: set[int] = set()
-    per_shard_target = max(1, int(MAX_SHARD_ROWS * ROUTED_TARGET_FILL))
-    for c in fresh_cells:
-        total = sum(
-            old_counts.get(s, 0) + fresh_counts.get(s, 0)
-            for s in cell_shards[c]
-        )
-        need = -(-total // per_shard_target)  # ceil
-        if need > len(cell_shards[c]):
-            extra = need - len(cell_shards[c])
-            new_cell_shards[c] = cell_shards[c] + list(
-                range(next_shard, next_shard + extra)
-            )
-            next_shard += extra
-            grown.add(c)
-    # a grown cell re-splits ALL its rows (hash modulus changed), so
-    # every one of its old shards joins the rebuild set
-    touched = set(fresh_counts) | {
-        s for c in grown for s in cell_shards[c]
-    }
-    old = (
-        spark.read.parquet(path)
-        .where(F.col("shard").isin(sorted(touched)))
-        .select("vec_id", "embedding")
-        .localCheckpoint()  # never stream from the dir the swap replaces
-    )
-    rebuilt = (
-        _assign_clusters(
-            old.unionByName(fresh.select("vec_id", "embedding")),
-            centroids,
-            new_cell_shards,
-        )
-        .groupBy("shard")
-        .applyInPandas(
-            _make_shard_builder(meta["m"], meta["upper_every"], "embedding"),
-            GRAPH_SCHEMA,
-        )
-    )
-    new_meta = dict(meta)
-    new_meta["cell_shards"] = [
-        [c, ss] for c, ss in sorted(new_cell_shards.items())
-    ]
-    new_meta["next_shard"] = next_shard
-    new_meta["n_shards"] = sum(len(ss) for ss in new_cell_shards.values())
-    _publish_rebuilt_shards(path, rebuilt, touched, new_meta)
-    return n

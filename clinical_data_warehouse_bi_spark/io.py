@@ -186,15 +186,6 @@ def fan_out(df: DataFrame, *keys: str) -> DataFrame:
     return df.repartition(target, *keys) if keys else df.repartition(target)
 
 
-def register_views(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = DRIVER_TABLES
-) -> None:
-    """Register each table as a temp view so operators can be written
-    in Spark SQL when that is clearer than the DataFrame API."""
-    for name in names:
-        read_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def read_source(
     spark: SparkSession,
     path: str,
@@ -411,20 +402,6 @@ def mix_sources(
     return out
 
 
-def show_tables(spark: SparkSession) -> DataFrame:
-    """S7 catalog listing (DWH.sql:215 `SHOW TABLES`)."""
-    return spark.sql("SHOW TABLES")
-
-
-def reset_database(spark: SparkSession, name: str) -> None:
-    """S5 DDL lifecycle (Stage_area.sql:4-19 / DWH.sql:4-16):
-    `DROP DATABASE IF EXISTS ... ; CREATE DATABASE ... ; USE ...` —
-    the reference resets each layer's schema before rebuilding it."""
-    spark.sql(f"DROP DATABASE IF EXISTS {name} CASCADE")
-    spark.sql(f"CREATE DATABASE {name}")
-    spark.sql(f"USE {name}")
-
-
 def write_bucketed_table(
     df: DataFrame,
     name: str,
@@ -629,43 +606,30 @@ def recover_compacted_dir(path: str) -> None:
 
 
 def compact_parquet_dir(
-    spark: SparkSession, path: str, target_files: int, transform=None
+    spark: SparkSession, path: str, target_files: int
 ) -> dict:
     """Small-file compaction for append-style parquet sinks (the
-    operational complement of streaming_dedup_ingest / any
-    foreachBatch append, which write >=1 file per micro-batch): read
+    operational complement of any foreachBatch append, which writes
+    >=1 file per micro-batch): read
     the directory, localCheckpoint it (the rewrite must never stream
     from the files it is about to replace), coalesce to
-    ``target_files``, and publish with the same write-to-tmp +
-    rename swap as streaming.publish_scd2_dim — at no point is the
-    only copy deleted before its replacement committed; a crash
-    leaves either the old or the new directory, both complete, and
-    recover_compacted_dir (invoked here first, like
-    streaming.read_scd2_dim's recover-before-read) restores ``path``
-    from a _SUCCESS-complete sibling before anything reads it.
+    ``target_files``, and publish with a write-to-tmp + rename swap —
+    at no point is the only copy deleted before its replacement
+    committed; a crash leaves either the old or the new directory,
+    both complete, and recover_compacted_dir (invoked here first, and
+    by every reader of a compacted sink) restores ``path`` from a
+    _SUCCESS-complete sibling before anything reads it.
     coalesce, not repartition: compaction must not pay a shuffle —
     it only narrows the file count.
 
-    ``transform`` (optional, DataFrame -> DataFrame) is applied
-    before the checkpoint — the hook maintenance rewrites use to fold
-    semantic cleanup into the same crash-safe publish (e.g.
-    streaming.compact_pairs_distinct passes ``.distinct()`` so a
-    replay-duplicated pairs sink is bounded by its true pair set).
-    A transform MAY shuffle (distinct does); plain compaction never
-    does.
-
-    Returns {"files_before": n, "files_after": m, "rows": r} with
-    ``rows`` counted AFTER the transform."""
+    Returns {"files_before": n, "files_after": m, "rows": r}."""
     import glob
     import shutil
 
     recover_compacted_dir(path)
     with maintenance_lock(path):
         files_before = len(glob.glob(os.path.join(path, "*.parquet")))
-        df = spark.read.parquet(path)
-        if transform is not None:
-            df = transform(df)
-        df = df.localCheckpoint()
+        df = spark.read.parquet(path).localCheckpoint()
         rows = df.count()
         tmp = f"{path}.tmp-compact"
         old = f"{path}.old-compact"
@@ -752,7 +716,7 @@ def read_evolved(spark, path: str, format: str = "parquet"):
 def raw_to_documents(
     raw: DataFrame, path_col: str = "path", text_col: str = "text"
 ) -> DataFrame:
-    """Adapt read_raw_files/read_text_file_stream output to the
+    """Adapt read_raw_files output to the
     engine's `documents` shape: doc_id = xxhash64(path) (stable,
     layout-independent — file identity, not row position), source =
     the parent directory name (the per-source knob quota_sample /
@@ -764,61 +728,6 @@ def raw_to_documents(
         F.element_at(F.split(F.col(path_col), "/"), -2).alias("source"),
         F.length(F.col(text_col)).cast("bigint").alias("n_chars"),
         F.col(path_col).alias("path"),
-    )
-
-
-class HistoryCompactedError(RuntimeError):
-    """Raised by read_as_of when the requested historical point
-    predates a compaction — the batch partitions it would need were
-    folded into the base partition and no longer exist separately."""
-
-
-def list_batches(spark: SparkSession, path: str) -> list[int]:
-    """Batch ids present in a batch_id-partitioned exactly-once sink
-    (negative = a compaction base partition). Listing-level only —
-    reads directory names, no data files."""
-    import glob as _glob
-
-    recover_compacted_dir(path)
-    out = []
-    for p in _glob.glob(os.path.join(path, "batch_id=*")):
-        with contextlib.suppress(ValueError):
-            out.append(int(os.path.basename(p).split("=", 1)[1]))
-    return sorted(out)
-
-
-def read_as_of(spark: SparkSession, path: str, through_batch: int) -> DataFrame:
-    """Historical (time-travel) read of a batch_id-partitioned
-    exactly-once sink: the rows contributed by batches
-    ``<= through_batch`` — the state a reader would have derived had
-    it run just after that batch committed. Works on every sink in
-    the family (preagg, expectations, heavy hitters, quantile
-    synopsis, join views): their batch partitions are immutable
-    once written, so history IS the partition set.
-
-    Scale shape: batch_id is a PARTITION column, so the filter
-    prunes at the listing level — an as-of read touches only the
-    partitions it returns, never the full sink (plan-asserted in
-    tests).
-
-    Compaction contract: compaction deliberately folds history into
-    one base partition to bound the read side — after it, points at
-    or before the fold are unanswerable. If a base partition
-    (negative batch_id) exists, this raises HistoryCompactedError
-    naming the trade instead of silently returning a mixture of
-    "all history" (the base) and "some history" (the filter) that
-    equals neither. Readers that want current state compose base +
-    live partitions via the family's own read_* functions."""
-    batches = list_batches(spark, path)
-    if any(b < 0 for b in batches):
-        raise HistoryCompactedError(
-            f"{path} has a compacted base partition; batches folded into it "
-            "cannot be separated, so as-of reads are only valid on the "
-            "uncompacted window. Read current state via the sink family's "
-            "read_* function instead."
-        )
-    return spark.read.parquet(path).filter(
-        F.col("batch_id") <= int(through_batch)
     )
 
 

@@ -7,9 +7,6 @@ has no auto-increment; two strategies:
 - ``row_number_key``: exact, contiguous, deterministic given an
   ORDER BY — but a global window collapses to ONE partition. Fine for
   dimension tables (thousands of rows); never for the fact table.
-- ``distributed_key``: `monotonically_increasing_id()` — unique,
-  non-contiguous, fully parallel (partition id in the high bits).
-  The 100 TB path for fact surrogate keys.
 - ``zip_index_key``: contiguous AND distributed: per-partition counts
   + offset cumsum, one extra tiny job. Use when downstream genuinely
   needs dense keys at scale.
@@ -24,11 +21,6 @@ from pyspark.sql import functions as F
 def row_number_key(order_by: list[str | Column]) -> Column:
     """W1: dense surrogate key; single-partition — dims only."""
     return F.row_number().over(Window.orderBy(*order_by))
-
-
-def distributed_key() -> Column:
-    """W2 at scale: unique, sparse, shuffle-free."""
-    return F.monotonically_increasing_id()
 
 
 def zip_index_key(df: DataFrame, name: str = "surrogate_id") -> DataFrame:

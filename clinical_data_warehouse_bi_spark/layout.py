@@ -266,41 +266,3 @@ def zorder_effectiveness(
         "zordered_frac": z_hit / max(z_tot, 1),
         "skip_improvement": (p_hit / max(p_tot, 1)) / max(z_hit / max(z_tot, 1), 1e-9),
     }
-
-
-def optimize_zordered(
-    spark, path: str, cols: list[str], **zorder_opts
-) -> dict:
-    """Crash-safe re-clustering maintenance for an appended parquet
-    directory — the OPTIMIZE ZORDER half of the small-file story
-    (io.compact_parquet_dir is the size half): streaming/batch
-    appends land in arrival order and erode the curve's locality;
-    run this periodically to rewrite the directory Z-ordered on
-    ``cols`` again.
-
-    Same protocol as compact_parquet_dir, and the SAME sibling names,
-    so io.recover_compacted_dir (invoked first here, and by the
-    compaction path) restores any crash point for both maintenance
-    ops: localCheckpoint (never stream from the files being
-    replaced), write_zordered to ``.tmp-compact``, rename-swap,
-    sweep. ``zorder_opts`` forwards to write_zordered (bits,
-    partitions, parquet_block_bytes, normalize).
-
-    Returns {"rows": n, "files_after": m}."""
-    import glob
-    import os
-    import shutil
-
-    from clinical_data_warehouse_bi_spark.io import recover_compacted_dir
-
-    recover_compacted_dir(path)
-    df = spark.read.parquet(path).localCheckpoint()
-    rows = df.count()
-    tmp = f"{path}.tmp-compact"
-    old = f"{path}.old-compact"
-    write_zordered(df, tmp, cols, **zorder_opts)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
-    files_after = len(glob.glob(os.path.join(path, "*.parquet")))
-    return {"rows": rows, "files_after": files_after}

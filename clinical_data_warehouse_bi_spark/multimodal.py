@@ -32,10 +32,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: media metadata carried alongside every blob
-MEDIA_META_FIELDS = (
-    "media_type string, width int, height int, sample_rate int, duration_s double"
-)
 
 FEATURE_SCHEMA = (
     "doc_id bigint, n_bytes bigint, mean_byte double, byte_entropy double, "
@@ -765,7 +761,6 @@ def _phash_bands(hashes: DataFrame, n_bands: int) -> DataFrame:
 def incremental_phash_pairs(
     batch_hashes: DataFrame,
     index: DataFrame,
-    max_hamming: int = PHASH_MAX_HAMMING,
     n_bands: int = PHASH_BANDS,
 ) -> DataFrame:
     """Perceptual near-dup pairs for an INCOMING batch of image
@@ -776,15 +771,15 @@ def incremental_phash_pairs(
     similarity.incremental_semantic_dedup for embeddings; this is
     the image tier's). Work is batch-proportional: the batch's bands
     join the index's bands (bounded buckets, pigeonhole-exact for
-    max_hamming < n_bands), plus a batch self-join.
+    PHASH_MAX_HAMMING < n_bands), plus a batch self-join.
 
     Returns distinct (doc_a, doc_b, hamming, origin) with origin
     'corpus-batch' (doc_a from the index) or 'batch' (both new,
     doc_a < doc_b). Corpus and batch id spaces MUST be disjoint."""
-    if max_hamming >= n_bands:
+    if PHASH_MAX_HAMMING >= n_bands:
         raise ValueError(
-            f"banding is exact only for max_hamming < n_bands"
-            f" ({max_hamming} >= {n_bands}): raise n_bands"
+            f"banding is exact only for PHASH_MAX_HAMMING < n_bands"
+            f" ({PHASH_MAX_HAMMING} >= {n_bands}): raise n_bands"
         )
     if 64 % n_bands:
         raise ValueError(f"n_bands must divide 64, got {n_bands}")
@@ -808,10 +803,10 @@ def incremental_phash_pairs(
         .select("doc_a", "doc_b", "ha", "hb")
         .distinct()
         .select("doc_a", "doc_b", hamming.alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= PHASH_MAX_HAMMING)
         .withColumn("origin", F.lit("corpus-batch"))
     )
     batch_batch = phash_near_dup_pairs(
-        batch_hashes, max_hamming, n_bands
+        batch_hashes, PHASH_MAX_HAMMING, n_bands
     ).withColumn("origin", F.lit("batch"))
     return corpus_batch.unionByName(batch_batch)

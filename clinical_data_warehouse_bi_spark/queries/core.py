@@ -14,7 +14,7 @@ Determinism rules used throughout (100 TB notes inline):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from clinical_data_warehouse_bi_spark import cleanse
@@ -387,32 +387,6 @@ def q_keyword_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_null_reject(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P1/P2/P4 — project + rename + NULL-rejection in one pass
-    (Stage_area.sql:27-29 `subject_id AS patient_id`, 183-185). One
-    query carries all three trivial projection operators (registry cap
-    consolidation: the former q_project_rename was this same
-    select/alias shape on `customer`); column pruning + the NOT NULL
-    predicates both reach the parquet scan.
-
-    Round-5 registry retirement (cap is 50; the slot went to
-    q_ann_ivf_learned): every operator here is strictly subsumed by
-    q_multi_source_union's branches — each branch projects, renames
-    (`l_orderkey AS source_id`), and NULL-rejects with the same
-    pushdown-checked shapes, hash-verified against its oracle. Kept
-    unregistered for the narrow-API form."""
-    ev = load_tables(spark, sf_dir, ("events",))["events"]
-    return ev.filter(
-        F.col("user_id").isNotNull()
-        & F.col("ts").isNotNull()
-        & F.col("props").isNotNull()
-    ).select(
-        F.col("event_id").alias("evt_id"),
-        F.col("user_id").alias("patient_id"),
-        F.col("ts").alias("event_ts"),
-    )
-
-
 @register("q_regex_numeric_parse", oracle="""
     WITH ex AS (
       SELECT event_id,
@@ -576,7 +550,7 @@ def q_surrogate_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W1 — ROW_NUMBER() OVER () surrogate key (Stage_area.sql:58).
     Deterministic ORDER BY replaces MariaDB's insertion order. This
     global window single-partitions — correct for dimension tables
-    only; fact keys use keys.distributed_key() at scale.
+    only; fact keys use keys.zip_index_key at scale.
 
     Round-8 registry retirement (cap is 50; the slot went to
     q_funnel_steps): hash-checked for seven straight rounds on a
@@ -755,24 +729,6 @@ def exact_percentiles_bucketed(
         release(out_df)
 
 
-def percentiles_native_lowcard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The low-cardinality fast path: Spark's `percentile` aggregate
-    (== DuckDB `quantile_cont`: same linear-interpolation definition,
-    bit-identical on the same data) in one shuffle-free-partial pass.
-    Its merge state is a value->count map per group — bounded by
-    DISTINCT values, so it is the right plan when the measured column
-    is discrete (l_quantity: 50 values) and an executor-memory risk
-    when it is continuous (l_extendedprice at 100 TB). Registered
-    q_percentiles uses the bounded-state refinement instead;
-    tests/test_properties.py proves the two bit-equal."""
-    li = load_tables(spark, sf_dir, ("lineitem",))["lineitem"]
-    return li.groupBy("l_returnflag").agg(
-        F.expr("percentile(l_quantity, 0.5)").alias("median_qty"),
-        F.expr("percentile(l_quantity, 0.95)").alias("p95_qty"),
-        F.expr("percentile(l_extendedprice, 0.5)").alias("median_price"),
-    )
-
-
 @register("q_percentiles", oracle="""
     SELECT l_returnflag,
            quantile_cont(l_quantity, 0.5) AS median_qty,
@@ -793,9 +749,8 @@ def q_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     the distributed form's driver traffic is O(1) scalars, so the same
     plan serves 3 groups or 10 million (high-cardinality property
     test). Bit-equal to the native aggregate AND the DuckDB
-    quantile_cont oracle; the native form stays available as
-    percentiles_native_lowcard for discrete columns, and
-    q_approx_stats carries the one-pass sketch twin.
+    quantile_cont oracle; q_approx_stats carries the one-pass
+    sketch twin.
 
     Reference analogue: the BI summary surface (DWH.sql:203-210)."""
     import os

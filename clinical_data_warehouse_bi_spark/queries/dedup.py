@@ -5,7 +5,7 @@ every query here is DuckDB-oracle-checked (not rows-only)."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from clinical_data_warehouse_bi_spark import text as T
@@ -81,8 +81,7 @@ def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     over md5 hex is a valid uniform MinHash family and
     engine-portable) is this query's first stage; the former
     standalone q_minhash_signatures entry was retired as subsumed
-    (registry cap consolidation) — text.minhash_signatures remains
-    the narrow API.
+    (registry cap consolidation).
 
     Round-9 registry retirement (cap is 50; slot went to
     q_grouped_percentiles): the registered q_lsh_near_dup is a strict
@@ -244,8 +243,11 @@ _SQL_SIMHASH = f"""
 
 
 def _simhash_fingerprints(docs: DataFrame) -> DataFrame:
-    """32-bit SimHash fingerprint relation (doc_id, simhash) — shared
-    by q_simhash and q_simhash_pairs."""
+    """32-bit SimHash fingerprint relation (doc_id, simhash) for
+    q_simhash_pairs: each token votes +1/-1 on every bit of its hash;
+    bit j of the fingerprint is the vote sign. Token bit j is
+    extracted from md5 hex nibble j//4 (portable: strpos-based nibble
+    decode, identical in both engines)."""
     # md5 projected ONCE per token; the 32 bit-votes are 32 column
     # expressions aggregated in a single groupBy — no 32x row blowup,
     # no per-bit md5 recompute. fan_out keyed on doc_id so the
@@ -273,25 +275,6 @@ def _simhash_fingerprints(docs: DataFrame) -> DataFrame:
         + " AS BIGINT)"
     )
     return bitsums.select("doc_id", fingerprint.alias("simhash"))
-
-
-def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """32-bit SimHash per document (Charikar): each token votes +1/-1
-    on every bit of its hash; bit j of the fingerprint is the vote
-    sign. Token bit j is extracted from md5 hex nibble j//4 (portable:
-    strpos-based nibble decode, identical in both engines). Near-dup
-    = small Hamming distance between fingerprints (q_simhash_pairs).
-
-    Round-6 registry retirement (cap is 50; slot went to q_scd2_asof):
-    q_simhash_pairs runs THIS function's exact output relation —
-    the shared ``_simhash_fingerprints`` stage — as the persisted
-    input of its banded Hamming join, and its oracle re-derives the
-    same fingerprints (the fp CTE is _SQL_SIMHASH verbatim), so the
-    signature expression stays hash-checked cross-engine through the
-    surviving witness (the round-5 q_minhash_signatures precedent).
-    Kept unregistered as the narrow-API form."""
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    return _simhash_fingerprints(docs)
 
 
 #: Hamming radius for SimHash near-dup pairs. With 4 bands of 8 bits

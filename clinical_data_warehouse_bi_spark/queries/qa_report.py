@@ -538,7 +538,6 @@ def q_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     window over the histogram would fuse the passes but serialize
     n_keys rows through one partition — wrong at scale; persist of
     the slim (key, n) relation is the qa.skew_report pattern."""
-    from clinical_data_warehouse_bi_spark import qa  # noqa: F401 (family)
 
     o = load_tables(spark, sf_dir, ("orders",))["orders"]
     hist = o.groupBy("o_custkey").agg(F.count(F.lit(1)).alias("n")).persist()

@@ -10,7 +10,7 @@ hypothetical 1-ulp divergence cannot flip the compared output."""
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from clinical_data_warehouse_bi_spark.io import load_tables
@@ -27,32 +27,6 @@ _SQL_VECS = """
                           CAST(embedding AS DOUBLE[])) AS n2
   FROM embeddings
 """
-
-
-def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """vec_id, double[] embedding, squared norm. No pre-repartition:
-    shuffling the raw arrays costs more than the fold parallelism
-    buys (measured at sf0.1); on a real multi-split scan the fold is
-    already partition-parallel."""
-    emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    e = F.transform("embedding", lambda x: x.cast("double"))
-    return emb.select(
-        "vec_id",
-        e.alias("e"),
-        F.aggregate(
-            F.zip_with(e, e, lambda a, b: a * b), F.lit(0.0), lambda acc, x: acc + x
-        ).alias("n2"),
-    )
-
-
-def _dot_expr(a: str, b: str) -> Column:
-    """Sequential-fold dot product (same summation order as DuckDB's
-    list_dot_product), built as ONE parsed SQL string: a Column-object
-    fold costs ~10 py4j round-trips per use in plan-build time; a
-    string costs one."""
-    return F.expr(
-        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
-    )
 
 
 #: q_cosine_topk's DuckDB oracle, preserved after its round-9
@@ -103,105 +77,8 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cosine_topk_numpy(emb, queries, k=TOP_K)
 
 
-_SQL_ANN_IVF = f"""
-    WITH n AS ({_SQL_VECS}),
-    cent AS (SELECT vec_id AS cid, e AS ce, n2 AS cn2 FROM n
-             WHERE vec_id < {N_CENTROIDS}),
-    assign AS (
-      SELECT vec_id, cid AS bucket FROM (
-        SELECT v.vec_id, c.cid,
-               row_number() OVER (
-                 PARTITION BY v.vec_id
-                 ORDER BY round(list_dot_product(v.e, c.ce)
-                               / (sqrt(v.n2) * sqrt(c.cn2)), 6) DESC,
-                          c.cid ASC) AS rn
-        FROM n v, cent c)
-      WHERE rn = 1),
-    q AS (SELECT v.vec_id AS qid, v.e AS qe, v.n2 AS qn2, a.bucket
-          FROM n v JOIN assign a ON a.vec_id = v.vec_id
-          WHERE v.vec_id < {N_QUERIES}),
-    p AS (SELECT q.qid, v.vec_id AS nid,
-                 list_dot_product(q.qe, v.e) / (sqrt(q.qn2) * sqrt(v.n2)) AS cos
-          FROM q
-          JOIN assign a ON a.bucket = q.bucket
-          JOIN n v ON v.vec_id = a.vec_id
-          WHERE v.vec_id <> q.qid)
-    SELECT qid, nid, rank, round(cos, 4) AS cosine
-    FROM (SELECT qid, nid, cos,
-                 row_number() OVER (PARTITION BY qid
-                                    ORDER BY round(cos, 6) DESC, nid ASC) AS rank
-          FROM p)
-    WHERE rank <= 5
-    """
-
-
-def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-style bucketed ANN (the scale path): assign every vector to
-    its nearest of {N_CENTROIDS} deterministic centroids (here: the
-    first vectors; k-means at scale), then search only the query's
-    bucket. Turns O(N*Q) brute force into O(N/buckets * Q) with a
-    shuffle keyed on bucket id. Same portable-cosine machinery as
-    q_cosine_topk.
-
-    Not registered: exactly the NPROBE=1 special case of
-    q_ann_ivf_nprobe (registry cap consolidation). Kept as the
-    narrow-API form; tests/test_similarity_engine.py checks it
-    against the nprobe query, and _SQL_ANN_IVF stays its runnable
-    DuckDB oracle."""
-    n = _vectors(spark, sf_dir)
-    cent = n.filter(F.col("vec_id") < N_CENTROIDS).select(
-        F.col("vec_id").alias("cid"), F.col("e").alias("ce"), F.col("n2").alias("cn2")
-    )
-    scored = n.crossJoin(F.broadcast(cent)).select(
-        "vec_id",
-        "cid",
-        F.round(
-            _dot_expr("e", "ce") / (F.sqrt(F.col("n2")) * F.sqrt(F.col("cn2"))),
-            6,
-        ).alias("ccos"),
-    )
-    w_assign = Window.partitionBy("vec_id").orderBy(
-        F.col("ccos").desc(), F.col("cid").asc()
-    )
-    assign = (
-        scored.withColumn("rn", F.row_number().over(w_assign))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", F.col("cid").alias("bucket"))
-    )
-    q = (
-        n.join(assign, "vec_id")
-        .filter(F.col("vec_id") < N_QUERIES)
-        .select(
-            F.col("vec_id").alias("qid"),
-            F.col("e").alias("qe"),
-            F.col("n2").alias("qn2"),
-            "bucket",
-        )
-    )
-    cand = assign.select(F.col("vec_id").alias("cand_id"), F.col("bucket").alias("cb"))
-    p = (
-        q.join(cand, F.col("bucket") == F.col("cb"))
-        .join(n, F.col("cand_id") == n["vec_id"])
-        .filter(F.col("cand_id") != F.col("qid"))
-        .select(
-            "qid",
-            F.col("cand_id").alias("nid"),
-            (
-                _dot_expr("qe", "e")
-                / (F.sqrt(F.col("qn2")) * F.sqrt(F.col("n2")))
-            ).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("qid").orderBy(F.round(F.col("cos"), 6).desc(), F.col("nid").asc())
-    return (
-        p.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select("qid", "nid", "rank", F.round("cos", 4).alias("cosine"))
-    )
-
-
 #: probe the NPROBE nearest centroid buckets per query (the standard
-#: IVF recall knob; q_ann_ivf is the nprobe=1 form)
+#: IVF recall knob)
 NPROBE = 2
 
 
@@ -254,10 +131,8 @@ def q_ann_ivf_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid matrix — replacing a crossJoin + 64-step scalar fold +
     row_number window (whose per-vector shuffle disappears: ranking
     happens inside the batch) — and candidate scoring is a row-wise
-    einsum over the joined pairs. The SQL-fold construction remains
-    as unregistered q_ann_ivf (nprobe=1), equivalence-tested against
-    this query, and the unchanged DuckDB oracle hash-checks the GEMM
-    numerics end-to-end.
+    einsum over the joined pairs. The unchanged DuckDB oracle
+    hash-checks the GEMM numerics end-to-end.
 
     Round-7 registry retirement (cap is 50; slot went to
     q_ann_ivf_pq, which composes THIS query's probe machinery —
@@ -265,9 +140,9 @@ def q_ann_ivf_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact re-rank): the driver now row-checks the composed flagship
     pipeline instead of this intermediate form. The full oracle
     comparison stays live in tests/test_retired_parity.py against
-    SQL_ANN_IVF_NPROBE, and tests/test_similarity_engine.py keeps the
-    nprobe/q_ann_ivf equivalence. Kept unregistered as the
-    raw-vector IVF API."""
+    SQL_ANN_IVF_NPROBE, and tests/test_similarity_engine.py checks
+    that nprobe=2 is never worse than the single-probe oracle. Kept
+    unregistered as the raw-vector IVF API."""
     from clinical_data_warehouse_bi_spark.similarity import (
         centroid_rank,
         pairwise_cosine,
@@ -337,9 +212,9 @@ def _quantizer_key(spark: SparkSession, sf_dir: str, *params) -> tuple:
 
 
 def q_ann_ivf_learned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN over a LEARNED index, end-to-end: KMeans centroids
-    (similarity.kmeans_ivf_index) bucket every vector, each query
-    probes its {NPROBE} nearest learned centroids by EUCLIDEAN
+    """IVF ANN over a LEARNED index, end-to-end: k-means centroids
+    (similarity.sampled_kmeans_centroids) bucket every vector, each
+    query probes its {NPROBE} nearest learned centroids by EUCLIDEAN
     distance — the same metric KMeans assigns with, so the probe set
     and the index agree — and only candidates from those buckets pay
     exact cosine scoring (similarity.pairwise_cosine), top-5 per
@@ -372,10 +247,9 @@ def q_ann_ivf_learned(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the quantizer trains on a BOUNDED deterministic
     sample driver-side (similarity.sampled_kmeans_centroids — the
     FAISS IVF recipe: hash-smallest ids via TakeOrdered, seeded
-    restarted Lloyd's in numpy; the MLlib distributed fit remains
-    available as kmeans_ivf_index, it just pays ~2 job barriers per
-    iteration); full-table assignment and probe ranking are one
-    broadcast-GEMM Arrow pass each (similarity.ivf_search — no
+    restarted Lloyd's in numpy; a distributed MLlib fit would pay ~2 job
+    barriers per iteration); full-table assignment and probe ranking are
+    one broadcast-GEMM Arrow pass each (similarity.ivf_search — no
     crossJoin, no per-vector window shuffle); candidate volume is
     nprobe x bucket size with buckets sized by k."""
     from clinical_data_warehouse_bi_spark.similarity import (
@@ -688,8 +562,8 @@ def q_ann_ivf_pq_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     Lloyd's, which no portable SQL reproduces. Value-level evidence
     in tests/test_similarity_engine.py: served == in-memory composed
     pipeline on the same seeded quantizers, recall >= 0.8 vs brute
-    force on planted clusters, incremental-append searchability, and
-    filtered-search pre-join semantics."""
+    force on planted clusters, and filtered-search pre-join
+    semantics."""
     import os
     import shutil
 

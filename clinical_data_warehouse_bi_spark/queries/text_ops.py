@@ -294,8 +294,8 @@ _SQL_QUALITY = f"""
 def q_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The end-to-end training-corpus cleaning pipeline in one plan:
     quality filter (q_quality_score's exact blend) -> canonical
-    fingerprint (q_doc_fingerprint) -> exact dedup keeping the lowest
-    doc_id per fingerprint. This is the composition a 100 TB corpus
+    fingerprint -> exact dedup keeping the lowest doc_id per
+    fingerprint. This is the composition a 100 TB corpus
     job runs before any near-dup machinery: per-row scoring and
     hashing, then one window over the uniform fingerprint. No
     pre-repartition: shuffling the raw text costs more than parallel
@@ -328,22 +328,6 @@ def q_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("rn") == 1)
         .select("doc_id", "fingerprint", "n_tokens", "quality_score", "n_copies")
-    )
-
-
-def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Content fingerprint over whitespace/punctuation-normalized
-    text: robust to formatting-only differences, the key for exact
-    near-canonical dedup (md5 — portable across engines).
-
-    Round-5 registry retirement (cap is 50; slot went to
-    q_pack_sequences): the identical fingerprint expression is a
-    hash-checked output column of q_corpus_clean (its `fingerprint`),
-    which also exercises it as a join/window key. Kept unregistered
-    as the narrow-API form."""
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    return docs.select(
-        "doc_id", F.md5(T.normalized_text("text")).alias("fingerprint")
     )
 
 
@@ -416,18 +400,6 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: BPE geometry for the registered encode: enough merges that real
-#: multi-character tokens win (the corpus vocabulary is ~40 words),
-#: few enough that training is a sub-second driver loop at any sf
-#: (the histogram, not the corpus, bounds the loop)
-BPE_MERGES = 64
-#: fitted-merge-table memo per (application, sf_dir) — the quantizer
-#: convention (queries/similarity.py): a production tokenizer trains
-#: once and encodes many corpora; refitting per query would
-#: misrepresent the operator's cost
-_BPE_CACHE: dict[tuple, list] = {}
-
-
 #: PINNED merge table for the registered q_bpe_encode (round-16
 #: verdict item 4: converting the gate from rows-only to
 #: value-checked requires the oracle to know the merges, and
@@ -435,9 +407,8 @@ _BPE_CACHE: dict[tuple, list] = {}
 #: encodes under this committed constant instead of refitting per
 #: corpus). Provenance: bpe.train_bpe over the sf0.001 documents
 #: histogram at n_merges=64, deterministic (lexicographic
-#: tie-break); regenerate with scripts shown in SURVEY.md round-16
-#: log. Corpus-FITTED training stays exercised by tests/test_bpe.py
-#: and the q_bpe_encode_fitted form below.
+#: tie-break). Corpus-fitted training stays exercised by
+#: tests/test_bpe.py.
 BPE_GATE_MERGES: list[tuple[str, str]] = [
     ('e', 'r'), ('e', '</w>'), ('n', '</w>'), ('o', 'r'), ('t', '</w>'),
     ('er', '</w>'), ('o', 'w'), ('ow', '</w>'), ('l', 'u'), ('i', 'n'),
@@ -521,9 +492,7 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     encoder as a rank-ordered chain of separator-aware
     regexp_replace rewrites over the same merge constants
     (_sql_bpe_encode) — the real mapInPandas encoder vs an
-    independent SQL reimplementation, hash-compared. Corpus-FITTED
-    merge learning (histogram -> train_bpe) stays exercised through
-    q_bpe_encode_fitted, bench, and tests/test_bpe.py.
+    independent SQL reimplementation, hash-compared.
 
     Scale shape: encoding is a pure map with a per-batch word cache —
     no shuffle, no per-row Python, Arrow batches in and out."""
@@ -533,35 +502,6 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     enc = bpe.bpe_encode(
         fan_out(docs.select("doc_id", "text")), BPE_GATE_MERGES
     )
-    return enc.select(
-        "doc_id",
-        F.col("n_bpe_tokens").cast("bigint").alias("n_bpe_tokens"),
-        F.array_join("bpe_tokens", " ").alias("bpe_text"),
-    )
-
-
-def q_bpe_encode_fitted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The corpus-FITTED form (the registered entry through round
-    15): ONE histogram job (bpe.word_histogram), the deterministic
-    driver-side merge-learning loop (bpe.train_bpe — vocabulary-
-    sized, not corpus-sized), then the same distributed encode.
-    Unregistered since the round-16 value-check conversion pinned the
-    gate's merges; kept for bench/scale probes and as the
-    production-shaped API (train once, encode many corpora — the
-    _BPE_CACHE memo)."""
-    from clinical_data_warehouse_bi_spark import bpe
-
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    ck = (spark.sparkContext.applicationId, sf_dir, BPE_MERGES)
-    merges = _BPE_CACHE.get(ck)
-    if merges is None:
-        hist = [
-            (r.word, r.n)
-            for r in bpe.word_histogram(docs).orderBy("word").collect()
-        ]
-        merges = bpe.train_bpe(hist, n_merges=BPE_MERGES)
-        _BPE_CACHE[ck] = merges
-    enc = bpe.bpe_encode(fan_out(docs.select("doc_id", "text")), merges)
     return enc.select(
         "doc_id",
         F.col("n_bpe_tokens").cast("bigint").alias("n_bpe_tokens"),

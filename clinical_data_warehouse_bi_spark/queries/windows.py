@@ -1,7 +1,5 @@
-"""Windowed / sessionization / multimodal queries. The tumbling
-window and sessionization are the BATCH duals of streaming.py's
-operators (Spark's unified API: same groupBy(window(...)) shape),
-so they get full DuckDB oracles; the multimodal feature extraction
+"""Windowed / sessionization / multimodal queries. The window
+queries get full DuckDB oracles; the multimodal feature extraction
 is mapInPandas-based and therefore rows-only checked."""
 
 from __future__ import annotations
@@ -25,18 +23,14 @@ SQL_WINDOW_TUMBLING = """
 
 
 def q_window_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 1-hour window aggregation (batch dual of
-    streaming.windowed_counts — identical groupBy(window(...))).
-    Epoch-aligned tumbling window == date_trunc('hour'). Exact
-    decimal sum -> string -> double for cross-engine bit equality.
+    """Tumbling 1-hour window aggregation. Epoch-aligned tumbling
+    window == date_trunc('hour'). Exact decimal sum -> string ->
+    double for cross-engine bit equality.
 
     Round-8 registry retirement (cap is 50; the slot went to
-    q_resample_fill — the window family's densified form): the
-    identical groupBy(window(...)) stays VALUE-checked against batch
-    ground truth by tests/test_streaming.py::
-    test_windowed_counts_matches_batch on the real events table, and
-    the full oracle comparison stays live in
-    tests/test_retired_parity.py against SQL_WINDOW_TUMBLING."""
+    q_resample_fill — the window family's densified form): the full
+    oracle comparison stays live in tests/test_retired_parity.py
+    against SQL_WINDOW_TUMBLING."""
     ev = load_tables(spark, sf_dir, ("events",))["events"]
     return (
         ev.groupBy(F.window("ts", "1 hour"), "event_type")
@@ -82,14 +76,12 @@ def q_window_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """)
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (30-min inactivity), the lag +
-    gap-flag + running-sum construction — batch dual of
-    streaming.sessionized's session_window. One shuffle on user_id;
+    gap-flag + running-sum construction. One shuffle on user_id;
     both windows and the final groupBy share that partitioning.
 
     The gap compares epoch MICROSECONDS on both engines:
     second-truncated diffs disagree with DuckDB's fractional epoch()
-    whenever a gap sits within a second of the threshold, and
-    session_window (the streaming dual) works in true time — the
+    whenever a gap sits within a second of the threshold — the
     rolling_aggregate sf0.1 lesson applied before it bit here."""
     ev = load_tables(spark, sf_dir, ("events",))["events"]
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -182,17 +174,16 @@ def q_stream_dedup_dual(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep one row per event_id. The replayed rows are exact copies, so
     the arbitrary-representative semantics of streaming first-arrival
     dedup are deterministic here and the DuckDB oracle is a full-row
-    DISTINCT. Streaming-mode state bounds are exercised by
-    tests/test_streaming.py on the same function.
+    DISTINCT. Streaming mode is exercised by tests/test_streaming.py
+    on the same function.
 
     Round-12 registry retirement (cap is 50; the slot went to
     q_skew_report): hash-checked for eleven straight rounds on a
-    frozen implementation. Witnesses: streaming.dedup_events stays
-    under the two-drain replay-idempotence + state-bound suite in
-    tests/test_streaming.py (the streaming-mode semantics this dual
-    exists to anchor), q_corpus_clean keeps the registered exact-
-    dedup family under the hash gate, and the full-row DISTINCT
-    oracle comparison survives here via SQL_STREAM_DEDUP_DUAL in
+    frozen implementation. Witnesses: streaming.dedup_events stays under
+    the redelivery test in tests/test_streaming.py (the streaming-mode
+    semantics this dual exists to anchor), q_corpus_clean keeps the
+    registered exact-dedup family under the hash gate, and the full-row
+    DISTINCT oracle comparison survives here via SQL_STREAM_DEDUP_DUAL in
     tests/test_retired_parity.py."""
     from clinical_data_warehouse_bi_spark.streaming import dedup_events
 

@@ -67,10 +67,10 @@ _CHECK_ORDER = [
     # expression form keeps its own cross-engine value check in
     # tests/test_properties.py::test_raw_md5_dedup_matches_duckdb.
     # q_stream_dedup_dual retired round 12 — slot went to
-    # q_skew_report; witnesses: streaming.dedup_events' two-drain
-    # replay-idempotence + state-bound suite in tests/test_streaming
-    # and q_corpus_clean's registered exact-dedup; full oracle
-    # comparison in tests/test_retired_parity.py.)
+    # q_skew_report; witnesses: streaming.dedup_events' redelivery
+    # test in tests/test_streaming and q_corpus_clean's registered
+    # exact-dedup; full oracle comparison in
+    # tests/test_retired_parity.py.)
     "q_multimodal_features",
     "q_sessionize",
     # round-3 additions
@@ -81,9 +81,10 @@ _CHECK_ORDER = [
     # row-checked, recall/probe properties live in
     # tests/test_similarity_engine.py + tests/test_retired_parity.py)
     "q_pack_sequences",
-    # round-6 additions (slot freed by retiring q_simhash — witness:
-    # q_simhash_pairs persists the identical _simhash_fingerprints
-    # relation and its oracle's fp CTE is _SQL_SIMHASH verbatim)
+    # round-6 additions (slot freed by retiring a standalone simhash
+    # entry — witness: q_simhash_pairs persists the identical
+    # _simhash_fingerprints relation and its oracle's fp CTE is
+    # _SQL_SIMHASH verbatim)
     "q_scd2_asof",
     # round-7 additions (slots freed by retiring q_keyword_filter,
     # q_ngram_jaccard, and q_ann_ivf_nprobe — each keeps a live
@@ -99,9 +100,8 @@ _CHECK_ORDER = [
     # tests/test_retired_parity.py)
     "q_fuzzy_match",
     # (q_funnel_steps retired round 10 — slot went to q_daily_census;
-    # witnesses: streaming funnel batch==stream value check +
-    # q_sessionize's registered ordered-timeline machinery; full
-    # oracle comparison in tests/test_retired_parity.py)
+    # witness: q_sessionize's registered ordered-timeline machinery;
+    # full oracle comparison in tests/test_retired_parity.py)
     # round-8 additions, part 2 (slot freed by retiring
     # q_semi_valid_fact — witness: q_orphan_cleanup's registered J10
     # keep/drop recompute; full oracle comparison lives in
@@ -117,9 +117,7 @@ _CHECK_ORDER = [
     # q_stratified_sample — witness: q_quota_sample carries the
     # registered sampling family with the same md5-priority
     # discipline, plus the batch==stream set-equality pytest —
-    # q_window_tumbling — witness: the identical groupBy(window)
-    # stays value-checked vs batch ground truth in
-    # tests/test_streaming.py — and q_embed_quantize — witness:
+    # q_window_tumbling — and q_embed_quantize — witness:
     # q_ann_ivf_pq is quantization's richer registered tier; all
     # three keep full oracle comparisons in
     # tests/test_retired_parity.py)
@@ -273,8 +271,7 @@ _CHECK_ORDER = [
     # tests/test_retired_parity.py)
     # trivial tail: empty since round 8 (q_dup_probe retired last —
     # witness: pipeline QA duplicate probes + TakeOrderedAndProject
-    # plan lock; round 5 retired q_null_reject — witness:
-    # q_multi_source_union; round 7 retired q_keyword_filter —
+    # plan lock; round 7 retired q_keyword_filter —
     # witness: the plan test plus tests/test_retired_parity.py's
     # full oracle comparison)
 ]

@@ -631,61 +631,6 @@ def hybrid_topk(
     return rrf_fuse([bm_ranked, dense], k, rrf_k=rrf_k)
 
 
-def hybrid_topk_served(
-    spark,
-    bm25_path: str,
-    ivfpq_path: str,
-    vectors: DataFrame,
-    query_terms: list[str],
-    k: int,
-    *,
-    pool: int = 50,
-    rrf_k: int = 60,
-    nprobe: int = 4,
-) -> DataFrame:
-    """Hybrid retrieval served entirely FROM persisted indexes — the
-    production composition of the two serving paths this module and
-    similarity.py maintain: the lexical leg reads the term-bucket
-    pruned BM25 postings (bm25_index_search), the dense leg reads
-    the bucket-pruned IVF-PQ postings for query vector 0 of
-    ``vectors`` (similarity.search_ivf_pq_index: ADC shortlist +
-    exact re-rank), and only the two bounded top-``pool`` lists meet
-    in the RRF fusion. Indexing cost was paid at ingest; a query
-    touches ~|terms|/n_buckets of one index and ~nprobe/n_clusters
-    of the other, never a corpus-sized relation — the shape that
-    still serves at 100 TB.
-
-    The inline twin (hybrid_topk) recomputes both legs from the raw
-    tables; equivalence of the lexical legs and of the fusion
-    arithmetic is pytest-pinned, the dense legs differ only by the
-    documented IVF-PQ approximation."""
-    from pyspark.sql import Window
-
-    from clinical_data_warehouse_bi_spark.similarity import search_ivf_pq_index
-
-    bm = bm25_index_search(spark, bm25_path, query_terms, pool)
-    bm_ranked = bm.withColumn(
-        "rank",
-        F.row_number().over(
-            Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        ),
-    )
-    dense = (
-        search_ivf_pq_index(
-            spark,
-            ivfpq_path,
-            vectors,
-            n_queries=1,
-            nprobe=nprobe,
-            shortlist=max(2 * pool, 64),
-            topk=pool,
-        )
-        .where(F.col("qid") == 0)
-        .select(F.col("nid").alias("doc_id"), "rank")
-    )
-    return rrf_fuse([bm_ranked, dense], k, rrf_k=rrf_k)
-
-
 def hybrid_topk_served_graph(
     spark,
     bm25_path: str,
@@ -702,7 +647,7 @@ def hybrid_topk_served_graph(
     lexical leg is the term-bucket pruned BM25 index, the dense leg
     is a beam search over the persisted sharded small-world graph
     (hnsw.hnsw_index_search) — the high-recall serving-side
-    alternative to the IVF-PQ leg of hybrid_topk_served, composed
+    alternative to an IVF-PQ dense leg (hybrid_topk), composed
     through the SAME rrf_fuse arithmetic so the fusion stays
     rank-calibration-free. Every leg touches index-shaped data only
     (pruned postings / per-shard graphs); the fused relation is the

@@ -627,29 +627,3 @@ def suppress_to_k(
         "classes_suppressed long",
     )
     return released, report
-
-
-def decontaminate(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    corpus_id: str = "doc_id",
-    bench_id: str = "bench_id",
-    text_col: str = "text",
-    n: int = 8,
-    min_overlap_frac: float = 0.5,
-) -> tuple[DataFrame, DataFrame]:
-    """Enforcement half of contamination_report (the measure ->
-    remove -> re-measure-green loop, the suppress_to_k pattern):
-    returns (clean_corpus, removed) where ``removed`` is the
-    contaminated (corpus_id, bench_id, overlap) evidence and
-    ``clean_corpus`` is the input minus those documents via ONE
-    broadcast anti-join on the contaminated-id relation (orders of
-    magnitude smaller than the corpus — it is the report's output,
-    never the corpus side). re-running contamination_report on the
-    result is all-clear by construction (asserted in tests)."""
-    removed = contamination_report(
-        corpus, benchmark, corpus_id, bench_id, text_col, n, min_overlap_frac
-    )
-    dirty_ids = removed.select(F.col(corpus_id)).distinct()
-    clean = corpus.join(F.broadcast(dirty_ids), corpus_id, "left_anti")
-    return clean, removed

@@ -1,6 +1,6 @@
 """Similarity-search engine pieces beyond the oracle-checked queries
 (queries/similarity.py): the Arrow-batched numpy path for brute-force
-top-k, and an MLlib-KMeans IVF index for learned partitioning.
+top-k, a sampled k-means IVF quantizer, and IVF-PQ indexes.
 
 Why a second implementation of cosine top-k: the SQL-expression form
 (F.aggregate fold over arrays) is portable and oracle-checkable, but
@@ -254,42 +254,6 @@ def centroid_rank(
     )
 
 
-def kmeans_ivf_index(
-    vectors: DataFrame, n_clusters: int = 16, seed: int = 7
-) -> tuple[DataFrame, list[tuple[int, list[float]]]]:
-    """Learned IVF index: KMeans over the embedding column (MLlib),
-    returning BOTH the assignment relation (vec_id, bucket) and the
-    learned centroids [(cid, vector)] — the piece that lets a search
-    probe the same buckets the index was built with
-    (queries/similarity.py::q_ann_ivf_learned). The bucket column is
-    the shuffle/bucketing key for the index table; at scale the model
-    is fit on a sample and `transform` is one broadcast-GEMM pass.
-    Not oracle-checkable (KMeans is iterative/seeded); the learned
-    search is recall-property-tested against brute force instead."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    feat = vectors.select(
-        "vec_id", array_to_vector(F.col("embedding").cast("array<double>")).alias("features")
-    )
-    model = KMeans(k=n_clusters, seed=seed, featuresCol="features").fit(feat)
-    assign = model.transform(feat).select(
-        "vec_id", F.col("prediction").cast("int").alias("bucket")
-    )
-    centroids = [
-        (cid, [float(x) for x in center])
-        for cid, center in enumerate(model.clusterCenters())
-    ]
-    return assign, centroids
-
-
-def kmeans_ivf_assign(vectors: DataFrame, n_clusters: int = 16,
-                      seed: int = 7) -> DataFrame:
-    """Assignment-only view of kmeans_ivf_index (kept as the narrow
-    API used by the bucketed-index write path)."""
-    return kmeans_ivf_index(vectors, n_clusters, seed)[0]
-
-
 def sampled_kmeans_centroids(
     vectors: DataFrame,
     n_clusters: int,
@@ -308,8 +272,8 @@ def sampled_kmeans_centroids(
     iteration count, all driven by a seeded RNG: the same data gives
     the same centroids run-to-run.
 
-    Compared to distributing the fit (kmeans_ivf_index / MLlib): a
-    quantizer needs only a representative sample (FAISS trains IVF
+    Compared to distributing the fit (MLlib): a quantizer needs only
+    a representative sample (FAISS trains IVF
     cells exactly this way), and the distributed fit pays ~2 job
     barriers PER ITERATION — pure scheduling latency that dwarfs the
     math at any k where IVF makes sense. Assignment of the full table
@@ -537,91 +501,6 @@ def pq_pack_codes(codes: DataFrame, codes_col: str = "codes") -> DataFrame:
     return codes.withColumn(codes_col, pack(codes_col))
 
 
-def pq_unpack_codes(packed: DataFrame, codes_col: str = "codes") -> DataFrame:
-    """Inverse of pq_pack_codes: ``binary`` back to ``array<int>`` for
-    the ADC scorers (exact round-trip, property-tested)."""
-
-    @F.pandas_udf("array<int>")
-    def unpack(s: pd.Series) -> pd.Series:
-        return s.map(lambda b: [int(x) for x in bytes(b)])
-
-    return packed.withColumn(codes_col, unpack(codes_col))
-
-
-def pq_adc_topk(
-    codes: DataFrame,
-    codebooks: list[list[list[float]]],
-    queries: list[tuple[int, list[float]]],
-    k: int = 10,
-) -> DataFrame:
-    """Asymmetric-distance top-k over PQ codes: per query build the
-    m x ksub lookup table of squared distances from the query's
-    subvectors to every codeword (tiny, driver-side), then score each
-    database vector as the SUM of m table lookups — never
-    reconstructing vectors, never touching floats per row. Output
-    (qid, nid, rank, adist), ascending approximate squared euclidean,
-    ties by nid (the engine's standard deterministic order).
-
-    Plan shape mirrors cosine_topk_numpy: mapInPandas partial top-k
-    per partition under the same rounded total order, then a global
-    window over |partitions| x |queries| x k rows — the codes table
-    never shuffles."""
-    mats = [np.array(b, dtype=np.float64) for b in codebooks]
-    m = len(mats)
-    dsub = mats[0].shape[1]
-    qids = np.array([q[0] for q in queries], dtype=np.int64)
-    luts = []  # per query: m x ksub squared-distance table
-    for _, qv in queries:
-        qarr = np.asarray(qv, dtype=np.float64)
-        lut = np.stack(
-            [
-                np.sum(
-                    (mats[sub] - qarr[sub * dsub : (sub + 1) * dsub][None, :])
-                    ** 2,
-                    axis=1,
-                )
-                for sub in range(m)
-            ]
-        )
-        luts.append(lut)
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sub_idx = np.arange(m)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            cm = np.array(pdf["codes"].tolist(), dtype=np.int64)  # N x m
-            out = []
-            for j, qid in enumerate(qids):
-                dist = luts[j][sub_idx[None, :], cm].sum(axis=1)  # N
-                mask = ids != qid
-                cand = np.nonzero(mask)[0]
-                if cand.size == 0:
-                    continue
-                order = np.lexsort((ids[cand], np.round(dist[cand], 6)))
-                top = cand[order[:k]]
-                out.append(
-                    pd.DataFrame(
-                        {"qid": qid, "nid": ids[top], "adist": dist[top]}
-                    )
-                )
-            if out:
-                yield pd.concat(out, ignore_index=True)
-
-    partials = codes.select("vec_id", "codes").mapInPandas(
-        op, "qid long, nid long, adist double"
-    )
-    w = Window.partitionBy("qid").orderBy(
-        F.round(F.col("adist"), 6).asc(), F.col("nid").asc()
-    )
-    return (
-        partials.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid", "rank", F.round("adist", 4).alias("adist"))
-    )
-
-
 def ivf_pq_search(
     vectors: DataFrame,
     centroids: list[tuple[int, list[float]]],
@@ -836,7 +715,6 @@ def incremental_semantic_dedup(
     batch: DataFrame,
     index: DataFrame,
     centroids: list[tuple[int, list[float]]],
-    threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -852,10 +730,10 @@ def incremental_semantic_dedup(
     EXACTLY the full rebuild's verdicts (pinned by
     tests/test_similarity_engine.py): corpus ids MUST all precede
     batch ids (any real ingest assigns monotone ids), so 'dropped
-    iff some lower-id cluster-mate is above threshold' decomposes
-    into the two candidate legs above — including near-dups of
-    corpus members that were themselves dropped, which is why the
-    index keeps them (see semdedup_index). Cost: cluster-bounded
+    iff some lower-id cluster-mate is above threshold' (0.95, as in
+    semantic_dedup) decomposes into the two candidate legs above —
+    including near-dups of corpus members that were themselves
+    dropped, which is why the index keeps them (see semdedup_index). Cost: cluster-bounded
     pairwise over touched clusters only, one shuffle on cluster id,
     never corpus^2 and never a corpus re-scan."""
     b = batch.select(
@@ -891,7 +769,7 @@ def incremental_semantic_dedup(
     ).select("id_a", "id_b", "va", "vb")
     close = pairwise_cosine(
         corpus_cand.unionByName(batch_cand), ("id_a", "id_b"), ("va", "vb")
-    ).filter(F.col("cos") >= threshold)
+    ).filter(F.col("cos") >= 0.95)
     dropped = close.select(F.col("id_b").alias("vec_id")).distinct()
     return (
         assign.select("vec_id", F.col("cid").alias("cluster"))
@@ -1192,141 +1070,6 @@ def search_ivf_pq_index(
     )
 
 
-def append_to_ivf_pq_index(spark, path: str, new_vectors: DataFrame) -> int:
-    """Incremental ingest for the persisted IVF-PQ index: assign and
-    encode ONLY the new batch against the index's frozen quantizers
-    (the FAISS operational model — centroids/codebooks retrain on a
-    cadence, not per batch), anti-join away vec_ids the postings
-    already contain (column-pruned id scan, the dedup_ingest
-    discipline — replaying a crashed append is a no-op), and append
-    into the bucket partitions. Work is batch-proportional: the
-    existing postings are only ever read as a one-column id relation.
-
-    Returns the number of postings appended. Same single-writer
-    scope as every file sink here; quantizer drift (a batch far from
-    the trained distribution) is the signal to rebuild — monitor
-    with centroid_rank distances."""
-    meta = load_ivf_pq_index(path)
-    assign = centroid_rank(
-        new_vectors, meta["centroids"], max_rank=1, metric="euclidean"
-    ).select("vec_id", F.col("cid").alias("bucket"))
-    codes = pq_pack_codes(pq_encode(new_vectors, meta["codebooks"]))
-    postings = codes.join(assign, "vec_id").select(
-        "vec_id", "codes", "bucket"
-    )
-    existing = spark.read.parquet(path).select("vec_id")
-    fresh = postings.join(existing, "vec_id", "left_anti").localCheckpoint()
-    n = fresh.count()
-    if n:
-        fresh.write.mode("append").partitionBy("bucket").parquet(path)
-    return n
-
-
-def compact_ivf_pq_index(spark, path: str) -> dict:
-    """Maintenance rewrite for an appended index: incremental ingest
-    leaves >=1 file per batch per touched bucket; this rewrites the
-    postings to ~one file per bucket (hash repartition on the
-    partition column — each bucket's rows land in one task) with the
-    shared crash-safe rename-swap (io.recover_compacted_dir sibling
-    names), carrying the metadata JSON into the replacement BEFORE
-    the swap so the commit-marker invariant (meta present => postings
-    complete) holds at every crash point.
-
-    Returns {"rows": n, "files_before": a, "files_after": b}."""
-    import glob
-    import os
-    import shutil
-
-    from clinical_data_warehouse_bi_spark.io import (
-        maintenance_lock,
-        recover_compacted_dir,
-    )
-
-    recover_compacted_dir(path)
-    with maintenance_lock(path):
-        meta = load_ivf_pq_index(path)
-        files = lambda p: len(  # noqa: E731
-            glob.glob(os.path.join(p, "bucket=*", "*.parquet"))
-        )
-        files_before = files(path)
-        df = spark.read.parquet(path).localCheckpoint()
-        rows = df.count()
-        tmp = f"{path}.tmp-compact"
-        old = f"{path}.old-compact"
-        (
-            df.repartition("bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(tmp)
-        )
-        import json
-
-        with open(os.path.join(tmp, INDEX_META), "w") as f:
-            json.dump(
-                {
-                    **meta,
-                    "centroids": [
-                        [int(c), [float(x) for x in v]]
-                        for c, v in meta["centroids"]
-                    ],
-                },
-                f,
-            )
-        os.rename(path, old)
-        os.rename(tmp, path)
-        shutil.rmtree(old, ignore_errors=True)
-    return {
-        "rows": rows,
-        "files_before": files_before,
-        "files_after": files(path),
-    }
-
-
-def pq_distortion(
-    vectors: DataFrame, codebooks: list[list[list[float]]]
-) -> dict:
-    """Mean PQ quantization distortion over a vector set: encode with
-    the FROZEN codebooks, reconstruct (concatenate the selected
-    codewords), and average ||x - x_hat||^2 — the drift statistic
-    that tells an operator WHEN the persisted index's quantizers
-    need retraining (append_to_ivf_pq_index deliberately freezes
-    them; distribution drift shows up here long before recall decays
-    enough to notice in production). One Arrow-batched pass: each
-    batch reduces to (n, sum squared error) — the covariance_stats
-    idiom; vectors never shuffle.
-
-    Returns {"n", "mse", "rmse"}. Compare against the value recorded
-    at build time: a sustained rise is the rebuild signal."""
-    mats = [np.array(b, dtype=np.float64) for b in codebooks]
-    m = len(mats)
-    dsub = mats[0].shape[1]
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            mat = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            err = 0.0
-            for sub in range(m):
-                xs = mat[:, sub * dsub : (sub + 1) * dsub]
-                c = mats[sub]
-                d2 = (
-                    np.einsum("ij,ij->i", xs, xs)[:, None]
-                    - 2.0 * xs @ c.T
-                    + np.einsum("ij,ij->i", c, c)[None, :]
-                )
-                err += float(np.maximum(d2.min(axis=1), 0.0).sum())
-            yield pd.DataFrame({"n": [len(mat)], "sse": [err]})
-
-    parts = vectors.select("embedding").mapInPandas(op, "n long, sse double").collect()
-    n = sum(r.n for r in parts)
-    if n == 0:
-        raise ValueError("pq_distortion: empty input")
-    sse = sum(r.sse for r in parts)
-    mse = sse / n
-    return {"n": n, "mse": mse, "rmse": float(np.sqrt(mse))}
-
-
 def frechet_distance(
     a: DataFrame,
     b: DataFrame,
@@ -1338,9 +1081,8 @@ def frechet_distance(
     construction, Heusel 2017): |m_a - m_b|^2 + Tr(C_a + C_b -
     2 (C_a C_b)^{1/2}) — the drift scalar that tells an embedding
     pipeline its serving distribution has moved off the one the ANN
-    index / classifier was fitted on (pq_distortion flags quantizer
-    damage; this flags upstream distribution shift even when the
-    quantizer still reconstructs well).
+    index / classifier was fitted on (it flags upstream distribution
+    shift even when the quantizer still reconstructs well).
 
     Distributed shape: one covariance_stats pass per side (each
     Arrow batch reduces to a (n, sum, Gram) partial — vectors never

@@ -190,14 +190,6 @@ def _winnow_anchors(sel_hash: np.ndarray, w: int) -> np.ndarray:
 
 
 def _tok_rel(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    if set(docs.columns) == {"doc_id", "__toks"}:
-        # already tokenized (strip_duplicate_spans materializes the
-        # token relation once and feeds it to all three consumers —
-        # round-16); pass through untouched. Gated on the EXACT
-        # column set (round-16 advice): an arbitrary caller frame
-        # that merely happens to carry a '__toks' column must not
-        # silently bypass tokenization and id_col/text_col.
-        return docs
     return docs.select(
         F.col(id_col).alias("doc_id"), tokens(text_col).alias("__toks")
     )
@@ -488,7 +480,6 @@ def strip_duplicate_spans(
     spans: DataFrame | None = None,
     spans_broadcast_max_rows: int = 2_000_000,
     keep_first: bool = False,
-    materialize_tokens: bool = False,
 ) -> DataFrame:
     """(id_col, text): the corpus with duplicated spans' tokens
     REMOVED — every occurrence by default (the conservative
@@ -507,32 +498,15 @@ def strip_duplicate_spans(
     from clinical_data_warehouse_bi_spark.joins import size_gated_broadcast
 
     if spans is None:
-        src = docs
-        if materialize_tokens:
-            # tokenize once for the three consumers (winnow anchors,
-            # SA tier, rebuild) instead of three times. OFF BY
-            # DEFAULT: the round-16 quiet-host A/B measured the
-            # materialized array<string> relation SLOWER than
-            # re-tokenizing (best 3.78 vs 2.19 s at sf0.1, w=8) —
-            # columnar-encoding token arrays costs more than the
-            # 0.44 s tokenize pass saves, re-confirming the module
-            # header's caching verdict. The knob stays for callers
-            # whose tokenizer is genuinely expensive (subword/
-            # normalizing tokenizers, not whitespace split).
-            src = _tok_rel(docs, id_col, text_col).localCheckpoint(
-                eager=False
-            )
         spans = duplicate_spans(
-            src, min_tokens, winnow_w, id_col, text_col,
+            docs, min_tokens, winnow_w, id_col, text_col,
             keep_first=keep_first,
         )
-    else:
-        src = docs
     per_doc = spans.groupBy("doc_id").agg(
         F.collect_list(F.struct("span_start", "span_end")).alias("__spans")
     )
     side, _ = size_gated_broadcast(per_doc, spans_broadcast_max_rows)
-    rel = _tok_rel(src, id_col, text_col).join(side, "doc_id", "left")
+    rel = _tok_rel(docs, id_col, text_col).join(side, "doc_id", "left")
     kept = F.expr(
         "array_join(transform(filter(transform("
         "sequence(1, size(__toks)), i -> struct(i AS i, __toks[i-1] AS t)), "
@@ -609,39 +583,6 @@ def _load_suffix_meta(path: str) -> dict:
     if meta.get("format_version") != SUFFIX_INDEX_FORMAT_VERSION:
         raise ValueError(f"stale suffix index format at {path}")
     return meta
-
-
-def append_suffix_index(
-    spark,
-    path: str,
-    new_docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> int:
-    """Fold a new batch's window digests into the persisted index:
-    distinct batch digests anti-joined against the TOUCHED buckets
-    only (partition-pruned one-column scan, the hnsw/IVF-PQ replay
-    discipline — re-running a crashed append is a no-op), appended
-    into their bucket partitions. Returns digests added."""
-    meta = _load_suffix_meta(path)
-    rel = window_hash_relation(
-        new_docs, meta["min_tokens"], 1, id_col, text_col
-    )
-    batch = _bucketed(rel.select("h").distinct(), meta["n_buckets"])
-    batch = batch.localCheckpoint()
-    touched = [r["bucket"] for r in batch.select("bucket").distinct().collect()]
-    if not touched:
-        return 0
-    existing = (
-        spark.read.parquet(path)
-        .where(F.col("bucket").isin(touched))
-        .select("h")
-    )
-    fresh = batch.join(existing, "h", "left_anti").localCheckpoint()
-    n = fresh.count()
-    if n:
-        fresh.write.mode("append").partitionBy("bucket").parquet(path)
-    return n
 
 
 def probe_suffix_index(

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 
 #: default MinHash configuration: 16 hashes in 4 bands of 4 rows
 MINHASH_SEEDS = 16
@@ -71,9 +72,9 @@ def word_shingles(tok_col: Column, n: int = 3) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def shingled(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-             shingle_n: int = 3) -> DataFrame:
-    """(doc_id, sh): exploded word shingles.
+def shingled(docs: DataFrame, id_col: str = "doc_id",
+             text_col: str = "text") -> DataFrame:
+    """(doc_id, sh): exploded word 3-shingles.
 
     fan_out first: the explode and the k-per-shingle hashing pipelined
     on top of it are the dedup pipeline's hot loop — they must run on
@@ -85,7 +86,7 @@ def shingled(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
 
     return fan_out(docs.select(id_col, text_col), id_col).select(
         F.col(id_col).alias("doc_id"),
-        F.explode(word_shingles(tokens(text_col), shingle_n)).alias("sh"),
+        F.explode(word_shingles(tokens(text_col), 3)).alias("sh"),
     )
 
 
@@ -93,42 +94,21 @@ def minhash_wide(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    num_seeds: int = MINHASH_SEEDS,
-    shingle_n: int = 3,
 ) -> DataFrame:
     """(doc_id, mh0..mh{k-1}): all k minhashes in ONE aggregation —
     k min() columns over the exploded shingles, one shuffle total.
     (The naive shape — explode x seeds then groupBy(doc, seed) —
     multiplies the shuffle k-fold for no reason; this one holds at
     100 TB: map-side partial min per column, tiny reduce.)"""
-    sh = shingled(docs, id_col, text_col, shingle_n)
+    sh = shingled(docs, id_col, text_col)
     # one parsed SQL string per column: k Column-object towers cost
     # ~4 py4j round-trips each in plan-build time, a string costs one
     return sh.groupBy("doc_id").agg(
         *[
             F.expr(f"min(md5(concat('{i}:', sh)))").alias(f"mh{i}")
-            for i in range(num_seeds)
+            for i in range(MINHASH_SEEDS)
         ]
     )
-
-
-def minhash_signatures(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_seeds: int = MINHASH_SEEDS,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """(doc_id, seed, minhash): minhash = min over the doc's shingles
-    of md5(seed || ':' || shingle). Lexicographic min over md5 hex is
-    a valid uniform MinHash family and is engine-portable. Computed
-    via minhash_wide + a shuffle-free stack() unpivot."""
-    wide = minhash_wide(docs, id_col, text_col, num_seeds, shingle_n)
-    stack_args = ", ".join(f"{i}, mh{i}" for i in range(num_seeds))
-    return wide.select(
-        "doc_id",
-        F.expr(f"stack({num_seeds}, {stack_args}) AS (seed, minhash)"),
-    ).select("doc_id", F.col("seed").cast("int"), "minhash")
 
 
 def lsh_band_signatures_wide(
@@ -146,20 +126,6 @@ def lsh_band_signatures_wide(
         "doc_id",
         F.expr(f"stack({bands}, {', '.join(exprs)}) AS (band_id, band_sig)"),
     ).select("doc_id", F.col("band_id").cast("int"), "band_sig")
-
-
-def lsh_band_signatures(minhash: DataFrame, bands: int = MINHASH_BANDS) -> DataFrame:
-    """(doc_id, band_id, band_sig) from the UNPIVOTED signature
-    matrix (kept for API parity; prefer lsh_band_signatures_wide)."""
-    banded = minhash.withColumn(
-        "band_id", F.floor(F.col("seed") / F.lit(MINHASH_SEEDS // bands)).cast("int")
-    )
-    ordered = F.transform(
-        F.array_sort(F.collect_list(F.struct("seed", "minhash"))), lambda x: x["minhash"]
-    )
-    return banded.groupBy("doc_id", "band_id").agg(
-        F.md5(F.array_join(ordered, "|")).alias("band_sig")
-    )
 
 
 def lsh_candidate_pairs(band_sigs: DataFrame) -> DataFrame:
@@ -326,7 +292,7 @@ def incremental_near_dup_pairs(
     'corpus-batch' (doc_a from the index) or 'batch' (doc_a < doc_b,
     both new). Exact-verification stays candidates-only downstream:
     semi-join candidate ids against the corpus to re-read just those
-    documents (see incremental_verify_jaccard).
+    documents.
 
     Corpus and batch id spaces MUST be disjoint (any real ingest
     assigns new ids); pair orientation relies on it."""
@@ -353,56 +319,6 @@ def incremental_near_dup_pairs(
         "origin", F.lit("batch")
     )
     return corpus_batch.unionByName(batch_batch)
-
-
-def incremental_verify_jaccard(
-    pairs: DataFrame,
-    corpus_docs: DataFrame,
-    batch_docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 3,
-) -> DataFrame:
-    """Exact 3-gram Jaccard on incremental candidates ONLY: the
-    corpus side is semi-joined down to candidate ids BEFORE any
-    shingling, so the expensive re-tokenization touches O(candidates)
-    corpus documents, never the corpus (predicate pushdown carries
-    the id filter into the corpus scan). Returns
-    (doc_a, doc_b, origin, jaccard)."""
-    pairs = pairs.cache()
-    a_ids = pairs.select(F.col("doc_a").alias(id_col)).distinct()
-    b_ids = pairs.select(F.col("doc_b").alias(id_col)).distinct()
-    touched = (
-        corpus_docs.select(id_col, text_col)
-        .join(a_ids, id_col, "left_semi")
-        .unionByName(batch_docs.select(id_col, text_col))
-        .join(a_ids.unionByName(b_ids).distinct(), id_col, "left_semi")
-    )
-    sh = shingled(touched, id_col, text_col, shingle_n).distinct().cache()
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a = sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    b = sh.select(F.col("doc_id").alias("b_id"), F.col("sh").alias("sh_b"))
-    inter = (
-        pairs.join(a, "doc_a")
-        .join(b, (F.col("doc_b") == F.col("b_id")) & (F.col("sh_a") == F.col("sh_b")))
-        .groupBy("doc_a", "doc_b", "origin")
-        .agg(F.count("*").alias("inter_n"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
-    return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            "origin",
-            (
-                F.col("inter_n").cast("double")
-                / (F.col("na") + F.col("nb") - F.col("inter_n")).cast("double")
-            ).alias("jaccard"),
-        )
-    )
 
 
 def paragraph_dedup(
@@ -600,57 +516,6 @@ def cdc_chunk_dedup(
         F.lit("").alias("clean_text"),
     )
     return nonempty.unionByName(empty)
-
-
-def normalize_unicode(
-    docs: DataFrame,
-    text_col: str = "text",
-    *,
-    form: str = "NFKC",
-    strip_accents: bool = True,
-) -> DataFrame:
-    """Unicode-normalize a text column (NFKC by default: ligatures,
-    fullwidth forms, and compatibility characters fold to canonical
-    ASCII-ish equivalents; optionally strip combining marks so
-    accented letters match their base forms) — the standard first
-    step of multilingual corpus prep, before any tokenizer sees the
-    bytes.
-
-    Spark SQL has no unicode-normalization builtin, so this is an
-    Arrow-batched mapInPandas pass (pure map: no shuffle, schema
-    preserved with text replaced in place). Idempotent: normal forms
-    are fixpoints, and mark-stripping removes what a second pass
-    would no longer find."""
-    import unicodedata
-
-    import pandas as pd
-
-    if form not in ("NFC", "NFD", "NFKC", "NFKD"):
-        raise ValueError(f"unknown normal form: {form}")
-    schema = docs.schema
-
-    def _norm(s):
-        if s is None:
-            return None
-        out = unicodedata.normalize(form, s)
-        if strip_accents:
-            out = "".join(
-                ch
-                for ch in unicodedata.normalize("NFD", out)
-                if not unicodedata.combining(ch)
-            )
-            out = unicodedata.normalize(form, out)
-        return out
-
-    def op(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf[text_col] = pd.Series(
-                [_norm(s) for s in pdf[text_col]], index=pdf.index, dtype=object
-            )
-            yield pdf
-
-    return docs.mapInPandas(op, schema)
 
 
 def weighted_sample(
@@ -1161,8 +1026,8 @@ def top_ngrams(
       counts (which also removes h1-collision false positives),
       n_docs resolved over surviving occurrences, TakeOrdered to k.
 
-    Measured (alternating A/B, identical 100-row reports,
-    scripts/bench_topngrams_arrow.py): equal at sf0.1 (2.13 vs
+    Measured (alternating A/B, identical 100-row reports; recorded
+    in BASELINE.md and OPTIMIZATION_r17.md): equal at sf0.1 (2.13 vs
     2.23 s best — fixed job costs dominate), **2.0x at 16x**
     (7.41 -> 3.74 s) and **2.1x at 64x** (12.93 -> 6.21 s) — the
     r12/r14 records showed map-side hashing was the floor, and the
@@ -1178,9 +1043,19 @@ def top_ngrams(
     gated the literal prefilter on volume — np.isin needs no such
     gate). An oversized tie set (> NGRAM_CAND_CAP rows sharing the
     k-th count) falls back to building every window's string before
-    the join, exactly like the old fallback."""
+    the join, exactly like the old fallback.
+
+    ``id_col`` must be a bigint column: the recovery stage's Arrow
+    schema carries it as ``long``, so any other type raises TypeError
+    here, at plan-build time, instead of an Arrow error in a task."""
     if n < 1 or k < 1:
         raise ValueError("n and k must be positive")
+    id_type = docs.schema[id_col].dataType
+    if not isinstance(id_type, LongType):
+        raise TypeError(
+            f"top_ngrams needs a bigint id column; {id_col!r} is "
+            f"{id_type.simpleString()}"
+        )
     spark = docs.sparkSession
     schema = "ngram string, n_occ bigint, n_docs bigint"
     counts = (
@@ -1511,10 +1386,9 @@ def divergence_from_counts(
 ) -> DataFrame:
     """vocabulary_divergence's counts-based core: takes the two
     (token, n_a) / (token, n_b) count relations directly — the shape
-    a PERSISTED token-count synopsis serves (streaming.
-    read_token_counts), so drift against a reference snapshot never
-    re-tokenizes the corpus. Same output contract as
-    vocabulary_divergence."""
+    a persisted token-count synopsis serves, so drift against a
+    reference snapshot never re-tokenizes the corpus. Same output
+    contract as vocabulary_divergence."""
     if top_k < 1:
         raise ValueError("top_k must be positive")
     tot_a = ca.agg(F.sum("n_a").alias("__ta"))

@@ -102,81 +102,6 @@ def test_distributed_encode_matches_driver_side(spark, sf_dir):
     assert any(len(a) + len(b) > 2 for a, b in merges)
 
 
-@pytest.mark.slow
-def test_write_training_contexts_exact_stream(spark, tmp_path, sf_dir):
-    """The on-disk contexts are the per-shard concatenated token-id
-    stream, chunked to exactly ctx ids, truncated at the last full
-    context — verified id-for-id against a driver-side rebuild."""
-    import json
-    import os
-
-    from clinical_data_warehouse_bi_spark.io import read_table
-
-    docs = read_table(spark, sf_dir, "documents").limit(120)
-    hist = [
-        (r["word"], r["n"]) for r in bpe.word_histogram(docs).collect()
-    ]
-    merges = bpe.train_bpe(hist, n_merges=40)
-    out = str(tmp_path / "ctx")
-    CTX = 64
-    stats = bpe.write_training_contexts(docs, merges, out, ctx=CTX, num_shards=3)
-    assert stats["n_contexts"] > 0
-    assert 0 <= stats["n_dropped_tokens"] < 3 * CTX  # < ctx per shard
-
-    with open(os.path.join(out, "_vocab.json")) as f:
-        vocab = json.load(f)
-    assert vocab[0] == "<unk>" and stats["vocab_size"] == len(vocab)
-
-    # driver-side ground truth: encode every doc, concatenate per
-    # shard in doc_id order, map through the same vocab
-    enc = {
-        r["doc_id"]: r["bpe_tokens"]
-        for r in bpe.bpe_encode(docs, merges).collect()
-    }
-    tok2id = {t: i for i, t in enumerate(vocab)}
-    streams = {s: [] for s in range(3)}
-    for did in sorted(enc):
-        if enc[did]:
-            streams[did % 3].extend(tok2id[t] for t in enc[did])
-
-    back = spark.read.parquet(out).collect()
-    got = {}
-    for r in back:
-        got.setdefault(r["shard"], {})[r["chunk_idx"]] = list(r["input_ids"])
-    total_ctx = 0
-    for s, chunks in got.items():
-        assert sorted(chunks) == list(range(len(chunks)))  # contiguous
-        flat = [tid for ci in sorted(chunks) for tid in chunks[ci]]
-        for ci in chunks:
-            assert len(chunks[ci]) == CTX  # exact-length contexts only
-        want = streams[s][: (len(streams[s]) // CTX) * CTX]
-        assert flat == want, f"shard {s} stream mismatch"
-        total_ctx += len(chunks)
-    assert total_ctx == stats["n_contexts"]
-
-
-@pytest.mark.slow
-def test_write_training_contexts_deterministic(spark, tmp_path, sf_dir):
-    from clinical_data_warehouse_bi_spark.io import read_table
-
-    docs = read_table(spark, sf_dir, "documents").limit(60)
-    hist = [(r["word"], r["n"]) for r in bpe.word_histogram(docs).collect()]
-    merges = bpe.train_bpe(hist, n_merges=25)
-    a, b = str(tmp_path / "a"), str(tmp_path / "b")
-    sa = bpe.write_training_contexts(docs, merges, a, ctx=32, num_shards=2)
-    sb = bpe.write_training_contexts(docs, merges, b, ctx=32, num_shards=2)
-    assert sa == sb
-    ra = sorted(
-        (r["shard"], r["chunk_idx"], tuple(r["input_ids"]))
-        for r in spark.read.parquet(a).collect()
-    )
-    rb = sorted(
-        (r["shard"], r["chunk_idx"], tuple(r["input_ids"]))
-        for r in spark.read.parquet(b).collect()
-    )
-    assert ra == rb
-
-
 def test_gate_oracle_sweep_equals_greedy_encode():
     """The round-16 oracle conversion's correctness core: applying
     BPE_GATE_MERGES once each, in rank order, as leftmost

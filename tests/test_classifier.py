@@ -1,6 +1,7 @@
 """Distributed logistic-regression quality classifier: equivalence
-with the driver-side numpy trainer, planted-signal recovery, JVM-side
-scoring, and the corpus-filter composition."""
+with the driver-side numpy trainer, planted-signal recovery,
+determinism, JVM-side scoring, leakage-safe splits, calibration and
+keep-rate thresholds."""
 
 from __future__ import annotations
 
@@ -10,7 +11,6 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from clinical_data_warehouse_bi_spark import classifier
-from clinical_data_warehouse_bi_spark.io import load_tables
 from test_plans import physical_plan
 
 
@@ -85,81 +85,6 @@ def test_predict_proba_is_jvm_side(spark):
         assert abs(got[i] - want[i]) < 1e-12
 
 
-@pytest.mark.slow
-def test_quality_filter_end_to_end(spark, sf_dir):
-    """Train on heuristic labels over the real documents table; the
-    learned filter must agree with the labeling rule on ~all docs
-    (features are the rule's own inputs, so this is separable)."""
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    feats = classifier.featurize_documents(docs)
-    # linear teacher: docs of >= 20 tokens (len_score threshold) —
-    # learnable by a linear model; boundary docs have a thin margin
-    # so agreement, not exact equality, is the contract
-    labeled = feats.withColumn(
-        "label", (F.col("features")[3] >= 0.2).cast("double")
-    )
-    w = classifier.train_logreg(labeled, n_iter=120, lr=2.0)
-    scored = classifier.predict_proba(labeled, w)
-    n = labeled.count()
-    agree = scored.where(
-        (F.col("proba") >= 0.5).cast("double") == F.col("label")
-    ).count()
-    assert agree / n >= 0.90, (agree, n)
-    # the filter composition preserves the full document schema
-    kept = classifier.quality_filter(docs, w, threshold=0.5)
-    assert kept.columns == docs.columns
-    assert 0 < kept.count() < n
-
-
-@pytest.mark.slow
-def test_auc_matches_numpy_reference_with_ties(spark):
-    """Exact tie-corrected AUC vs an independent numpy Mann-Whitney
-    implementation, on scores with heavy ties."""
-    rng = np.random.default_rng(11)
-    scores = np.round(rng.uniform(0, 1, 300), 1)  # ties everywhere
-    labels = (rng.uniform(0, 1, 300) < scores).astype(float)
-    if labels.sum() in (0, len(labels)):  # safety for the fixed seed
-        labels[0], labels[1] = 0.0, 1.0
-    df = spark.createDataFrame(
-        [(float(s), float(y)) for s, y in zip(scores, labels)],
-        "proba double, label double",
-    )
-    got = classifier.auc(df)
-    # numpy reference: average ranks (1-based) over sorted scores
-    order = np.argsort(scores, kind="stable")
-    ranks = np.empty(len(scores))
-    sorted_scores = scores[order]
-    i = 0
-    pos = 1
-    while i < len(scores):
-        j = i
-        while j < len(scores) and sorted_scores[j] == sorted_scores[i]:
-            j += 1
-        ranks[order[i:j]] = (pos + pos + (j - i) - 1) / 2.0
-        pos += j - i
-        i = j
-    n_pos = labels.sum()
-    n_neg = len(labels) - n_pos
-    u = ranks[labels == 1].sum() - n_pos * (n_pos + 1) / 2
-    want = u / (n_pos * n_neg)
-    assert abs(got - want) < 1e-9
-    # degenerate extremes
-    perfect = spark.createDataFrame(
-        [(0.9, 1.0), (0.8, 1.0), (0.2, 0.0), (0.1, 0.0)], "proba double, label double"
-    )
-    assert classifier.auc(perfect) == 1.0
-    inverted = spark.createDataFrame(
-        [(0.9, 0.0), (0.1, 1.0)], "proba double, label double"
-    )
-    assert classifier.auc(inverted) == 0.0
-    import pytest as _pt
-
-    with _pt.raises(ValueError):
-        classifier.auc(
-            spark.createDataFrame([(0.5, 1.0)], "proba double, label double")
-        )
-
-
 def test_split_is_deterministic_and_disjoint(spark, sf_dir):
     from clinical_data_warehouse_bi_spark.io import read_table
 
@@ -185,42 +110,6 @@ def test_threshold_for_keep_rate(spark):
     t = classifier.threshold_for_keep_rate(df, 0.2)
     kept = df.where(F.col("proba") >= t).count()
     assert 15 <= kept <= 25
-
-
-@pytest.mark.slow
-def test_standardize_zero_mean_unit_std_and_replays(spark):
-    df, x, y = _planted(spark, n=300)
-    scaled, stats = classifier.standardize(df)
-    mat = np.array(
-        [r["features"] for r in scaled.orderBy("doc_id").collect()],
-        dtype=np.float64,
-    )
-    # bias untouched; other dims ~N(0, 1)
-    assert np.allclose(mat[:, 0], 1.0)
-    assert np.allclose(mat[:, 1:].mean(axis=0), 0.0, atol=1e-9)
-    assert np.allclose(mat[:, 1:].std(axis=0), 1.0, atol=1e-3)
-    # the fitted transform replays identically on the same data
-    replayed = classifier.apply_standardize(df, stats)
-    mat2 = np.array(
-        [r["features"] for r in replayed.orderBy("doc_id").collect()]
-    )
-    assert np.allclose(mat, mat2)
-    # training on standardized features still recovers the signal
-    labeled = scaled.join(
-        df.select("doc_id", F.col("label").alias("lab")), "doc_id"
-    ).select("doc_id", "features", F.col("lab").alias("label"))
-    w = classifier.train_logreg(labeled, n_iter=40, lr=1.0)
-    acc = (
-        classifier.predict_proba(labeled, w)
-        .select(
-            ((F.col("proba") >= 0.5).cast("double") == F.col("label"))
-            .cast("double")
-            .alias("hit")
-        )
-        .agg(F.avg("hit"))
-        .first()[0]
-    )
-    assert acc >= 0.95
 
 
 def test_train_logreg_persists_then_releases(spark):

@@ -66,16 +66,28 @@ def test_training_corpus_pipeline_end_to_end(spark, sf_dir, tmp_path):
 
     # 2c. learned quality gate (classifier.train_logreg, round 8) —
     # the fastText/CCNet-style step: train on a cheap heuristic
-    # teacher (here: docs of >= 20 tokens), then keep what the model
-    # scores as quality. One job per GD iteration, scoring JVM-side.
+    # teacher (here: docs of >= 20 tokens) over per-row length
+    # features, then keep what the model scores as quality. One job
+    # per GD iteration, scoring JVM-side.
     from clinical_data_warehouse_bi_spark import classifier
 
-    feats = classifier.featurize_documents(gated)
+    n_tok = F.size(T.tokens("text")).cast("double")
+    feats = gated.select(
+        "doc_id",
+        F.array(
+            F.lit(1.0),
+            F.least(n_tok / F.lit(100.0), F.lit(1.0)),
+            F.log1p(n_tok) / F.lit(10.0),
+        ).alias("features"),
+    )
     labeled = feats.withColumn(
-        "label", (F.col("features")[3] >= 0.2).cast("double")
+        "label", (F.col("features")[1] >= 0.2).cast("double")
     )
     wvec = classifier.train_logreg(labeled, n_iter=40, lr=2.0)
-    gated = classifier.quality_filter(gated, wvec, threshold=0.5).persist()
+    keep_ids = classifier.predict_proba(labeled, wvec).filter(
+        F.col("proba") >= F.lit(0.5)
+    ).select("doc_id")
+    gated = gated.join(keep_ids, "doc_id", "left_semi").persist()
     n_clf = gated.count()
     teacher_pos = labeled.filter("label = 1.0").count()
     assert 0 < n_clf <= n_lm
@@ -186,18 +198,20 @@ def test_release_packaging_pipeline(spark, sf_dir, tmp_path):
     end — temperature-weighted source mixing -> RAG chunking ->
     sharded sink -> manifest -> consumer-side verification."""
     from clinical_data_warehouse_bi_spark.io import (
-        temperature_mix,
+        temperature_mix_keyed,
         verify_dataset_manifest,
         write_dataset_manifest,
     )
     from clinical_data_warehouse_bi_spark.text import chunk_text
 
-    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
-    big = docs.filter(F.col("doc_id") % 5 != 0)
-    small = docs.filter(F.col("doc_id") % 5 == 0)
+    docs = read_table(spark, sf_dir, "documents").select(
+        "doc_id", "text", (F.col("doc_id") % 5 == 0).alias("src")
+    )
     budget = docs.count() * 0.4
 
-    mixed = temperature_mix([big, small], "doc_id", alpha=0.5, budget=budget)
+    mixed = temperature_mix_keyed(
+        docs, "src", "doc_id", alpha=0.5, budget=budget
+    ).select("doc_id", "text")
     n_mixed = mixed.count()
     assert 0 < n_mixed < docs.count()
 

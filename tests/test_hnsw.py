@@ -11,7 +11,6 @@ import os
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from clinical_data_warehouse_bi_spark import hnsw
 
@@ -177,60 +176,6 @@ def test_tiny_shards_and_validation(spark):
         hnsw.search_graph(g, [], 2)
 
 
-@pytest.mark.slow
-def test_index_append_rebuilds_only_touched_shards(spark, corpus, tmp_path):
-    """hnsw_index_append: batch-proportional ingest — only shards the
-    new ids hash into are rebuilt (untouched shard files stay
-    byte-identical on disk), the appended vectors are searchable, a
-    replayed append is a no-op, and the appended index equals a
-    from-scratch build over the union corpus (same links: the shard
-    builder is shared)."""
-    import glob
-
-    x, df = corpus
-    n = len(x)
-    first = df.where(F.col("vec_id") < n - 8)
-    rest = df.where(F.col("vec_id") >= n - 8)
-    path = str(tmp_path / "hnsw_append")
-    hnsw.build_hnsw_index(first, path, n_shards=4, m=12)
-
-    def file_state():
-        return {
-            p: os.path.getmtime(p)
-            for p in glob.glob(os.path.join(path, "shard=*/*.parquet"))
-        }
-
-    before = file_state()
-    added = hnsw.hnsw_index_append(spark, path, rest)
-    assert added == 8
-    after = file_state()
-    touched_shards = {
-        r["shard"]
-        for r in hnsw.build_graph(rest, n_shards=4).select("shard")
-        .distinct().collect()
-    }
-    for p, mtime in before.items():
-        shard = int(p.split("shard=")[1].split("/")[0])
-        if shard not in touched_shards and p in after:
-            assert after[p] == mtime, f"untouched shard rewritten: {p}"
-    # replay: everything already present -> no-op
-    assert hnsw.hnsw_index_append(spark, path, rest) == 0
-
-    queries = [(int(n - 1), [float(v) for v in x[n - 1]])]
-    served = {
-        (r["query_id"], r["vec_id"]): r["score"]
-        for r in hnsw.hnsw_index_search(spark, path, queries, K).collect()
-    }
-    assert any(vid == n - 1 for _, vid in served), served
-    scratch = {
-        (r["query_id"], r["vec_id"]): r["score"]
-        for r in hnsw.search_graph(
-            hnsw.build_graph(df, n_shards=4, m=12), queries, K
-        ).collect()
-    }
-    assert served == scratch
-
-
 def test_beam_clamped_to_k(spark, corpus):
     """A beam smaller than k must not cap the result set below k:
     shard_search clamps beam = max(beam, k)."""
@@ -387,169 +332,6 @@ def test_route_queries_probe_guard(spark, corpus, tmp_path):
         hnsw.route_queries(meta, queries, probe_clusters=0)
     with pytest.raises(ValueError, match="probe_clusters"):
         hnsw.hnsw_routed_search(spark, path, queries, K, probe_clusters=0)
-
-
-@pytest.mark.slow
-def test_routed_append_parity_replay_and_hardlinks(
-    spark, corpus, tmp_path
-):
-    """Round-14 verdict item 1: appending to a ROUTED index through
-    hnsw_index_append (which must dispatch on the index kind —
-    round-14 advice item 1) assigns the batch by frozen-centroid
-    GEMM, rebuilds only the touched cells (untouched cell files stay
-    byte-identical), is replay-idempotent, preserves routed recall,
-    and yields EXACTLY the index a from-scratch build over the union
-    would produce under the same centroids and cell->shard mapping
-    (build and append share the _assign_clusters kernel and the
-    shard builder)."""
-    import glob
-
-    x, df = corpus
-    n = len(x)
-    first = df.where(F.col("vec_id") < n - 12)
-    rest = df.where(F.col("vec_id") >= n - 12)
-    path = str(tmp_path / "routed_append")
-    hnsw.build_routed_hnsw_index(first, path, n_clusters=8, m=12)
-
-    def file_state():
-        return {
-            p: os.path.getmtime(p)
-            for p in glob.glob(os.path.join(path, "shard=*/*.parquet"))
-        }
-
-    before = file_state()
-    added = hnsw.hnsw_index_append(spark, path, rest)
-    assert added == 12
-    # replay: all ids already present -> no-op, no rewrite
-    state_after_append = file_state()
-    assert hnsw.hnsw_index_append(spark, path, rest) == 0
-    assert file_state() == state_after_append
-
-    with open(os.path.join(path, hnsw.HNSW_INDEX_META)) as f:
-        meta = json.load(f)
-    centroids = [(int(c), [float(v) for v in vec])
-                 for c, vec in meta["centroids"]]
-    cell_shards = hnsw._meta_cell_shards(meta)
-    touched = {
-        r["shard"]
-        for r in hnsw._assign_clusters(
-            rest.select("vec_id", "embedding"), centroids, cell_shards
-        ).select("shard").distinct().collect()
-    }
-    after = file_state()
-    for p, mtime in before.items():
-        shard = int(p.split("shard=")[1].split("/")[0])
-        if shard not in touched and p in after:
-            assert after[p] == mtime, f"untouched cell rewritten: {p}"
-
-    # appended == from-scratch build over the union with the SAME
-    # frozen centroids and mapping (the append parity contract)
-    def canon(rows):
-        return sorted(
-            (
-                r["shard"], r["vec_id"],
-                tuple(round(float(v), 5) for v in r["embedding"]),
-                tuple(r["neighbors"]), tuple(r["upper_neighbors"]),
-                r["is_upper"],
-            )
-            for r in rows
-        )
-
-    got = canon(spark.read.parquet(path).collect())
-    expected = canon(
-        hnsw._assign_clusters(
-            df.select("vec_id", "embedding"), centroids, cell_shards
-        )
-        .groupBy("shard")
-        .applyInPandas(
-            hnsw._make_shard_builder(
-                meta["m"], meta["upper_every"], "embedding"
-            ),
-            hnsw.GRAPH_SCHEMA,
-        )
-        .collect()
-    )
-    assert got == expected
-
-    # routed recall holds after the append, probing 2 of 8 cells,
-    # and the appended vectors are routed-searchable
-    queries = [
-        (qid, [float(v) for v in x[qid]])
-        for qid in list(QUERIES) + [n - 1]
-    ]
-    by_q = {}
-    for r in hnsw.hnsw_routed_search(
-        spark, path, queries, K, probe_clusters=2
-    ).collect():
-        by_q.setdefault(r["query_id"], []).append(r["vec_id"])
-    for qid, _ in queries:
-        truth = set(_exact_topk(x, x[qid], K))
-        assert len(set(by_q[qid]) & truth) / K >= 0.85, qid
-        assert qid in by_q[qid]
-
-
-@pytest.mark.slow
-def test_routed_append_skew_guard_grows_hot_cell(
-    spark, tmp_path, monkeypatch
-):
-    """A hot cell whose projected rows outgrow the GEMM bound must
-    SUB-SHARD (allocate new shard ids, re-split by id hash, rebuild
-    that cell only) instead of failing the append; the grown mapping
-    persists in the meta and route_queries probes every sub-shard of
-    the grown cell, so recall-by-construction (self-retrieval)
-    survives the growth."""
-    monkeypatch.setattr(hnsw, "MAX_SHARD_ROWS", 20)
-    monkeypatch.setattr(hnsw, "ROUTED_TARGET_FILL", 0.5)
-    rng = np.random.RandomState(5)
-    centers = rng.randn(3, 8) * 6.0
-    seed_rows = [
-        (int(c * 12 + i),
-         [float(v) for v in centers[c] + rng.randn(8) * 0.2])
-        for c in range(3)
-        for i in range(12)
-    ]
-    df = spark.createDataFrame(
-        seed_rows, "vec_id bigint, embedding array<float>"
-    )
-    path = str(tmp_path / "routed_skew")
-    meta0 = hnsw.build_routed_hnsw_index(df, path, n_clusters=3, m=6)
-    n_shards0 = meta0["n_shards"]
-    # hot batch: 50 new vectors all in cluster 0's region
-    hot = spark.createDataFrame(
-        [
-            (1000 + i,
-             [float(v) for v in centers[0] + rng.randn(8) * 0.2])
-            for i in range(50)
-        ],
-        "vec_id bigint, embedding array<float>",
-    )
-    added = hnsw.hnsw_index_append(spark, path, hot)
-    assert added == 50
-    with open(os.path.join(path, hnsw.HNSW_INDEX_META)) as f:
-        meta1 = json.load(f)
-    assert meta1["n_shards"] > n_shards0, "hot cell did not grow"
-    assert meta1["next_shard"] > meta0["next_shard"]
-    cell_shards = hnsw._meta_cell_shards(meta1)
-    grown = [c for c, ss in cell_shards.items() if len(ss) > 1]
-    assert grown, cell_shards
-    # every persisted shard respects the (patched) GEMM bound
-    counts = {
-        r["shard"]: r["cnt"]
-        for r in spark.read.parquet(path)
-        .groupBy("shard").agg(F.count("*").alias("cnt")).collect()
-    }
-    assert sum(counts.values()) == 36 + 50
-    assert max(counts.values()) <= 20, counts
-    # the grown cell stays fully searchable: a new hot vector used as
-    # its own query must be found probing its rank-1 cell alone
-    q_emb = hot.where(F.col("vec_id") == 1000).collect()[0]["embedding"]
-    queries = [(1000, [float(v) for v in q_emb])]
-    got = hnsw.hnsw_routed_search(
-        spark, path, queries, 5, probe_clusters=1
-    ).collect()
-    assert any(r["vec_id"] == 1000 for r in got), got
-    # replay of the hot batch after growth: still a no-op
-    assert hnsw.hnsw_index_append(spark, path, hot) == 0
 
 
 @pytest.mark.slow

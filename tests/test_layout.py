@@ -135,63 +135,6 @@ def test_quantile_normalization_is_equi_depth_under_skew(spark):
     assert min(qtl.values()) > ideal / 4, qtl
 
 
-@pytest.mark.slow
-def test_optimize_zordered_recovers_and_reclusters(spark, tmp_path):
-    """Appended arrival-order batches -> optimize_zordered rewrites
-    the directory clustered (footer pruning improves vs the appended
-    layout), preserves content exactly, and recovers from a crash
-    between the two publish renames."""
-    import glob
-    import os
-    import shutil
-
-    from clinical_data_warehouse_bi_spark.layout import (
-        optimize_zordered,
-        zorder_effectiveness,
-    )
-
-    rng_rows = [
-        (i, (i * 7919) % 1000, ((i * 104729) % 1000))
-        for i in range(4000)
-    ]
-    path = str(tmp_path / "appended")
-    for b in range(4):  # interleaved appends: worst-case locality
-        spark.createDataFrame(
-            rng_rows[b::4], "rid long, x long, y long"
-        ).coalesce(1).write.mode("append").option(
-            "parquet.block.size", str(16 * 1024)
-        ).parquet(path)
-    before = sorted(rng_rows)
-    plain = str(tmp_path / "plain_copy")
-    shutil.copytree(path, plain)
-
-    stats = optimize_zordered(
-        spark, path, ["x", "y"], partitions=4,
-        parquet_block_bytes=16 * 1024,
-    )
-    assert stats["rows"] == 4000
-    got = sorted(
-        (r.rid, r.x, r.y) for r in spark.read.parquet(path).collect()
-    )
-    assert got == before
-    box = {"x": (100, 200), "y": (100, 200)}
-    eff = zorder_effectiveness(plain, path, box)
-    assert eff["skip_improvement"] > 1.0, eff
-
-    # crash between the renames: path gone, complete old present
-    os.rename(path, f"{path}.old-compact")
-    stats2 = optimize_zordered(
-        spark, path, ["x", "y"], partitions=4,
-        parquet_block_bytes=16 * 1024,
-    )
-    assert stats2["rows"] == 4000
-    got2 = sorted(
-        (r.rid, r.x, r.y) for r in spark.read.parquet(path).collect()
-    )
-    assert got2 == before
-    assert not glob.glob(f"{path}.old-compact")
-
-
 def test_matching_row_groups_treats_missing_stats_as_unprunable(tmp_path):
     """The parquet spec makes per-chunk min/max statistics OPTIONAL
     (writers omit them for oversized binary values, or when

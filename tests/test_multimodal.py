@@ -601,51 +601,3 @@ def test_incremental_phash_matches_full_rebuild(spark):
     assert inc == want
     assert any(o == "corpus-batch" for *_x, o in inc)
     assert any(o == "batch" for *_x, o in inc)
-
-
-@pytest.mark.slow
-def test_streaming_phash_ingest_two_drains_and_replay(spark, tmp_path):
-    """Two drains of fake-media batches: the pairs sink (distinct)
-    equals the full-rebuild pair id-set; a verbatim replay of the
-    second batch (its hashes already in the index) appends only
-    duplicate rows — no self-pairs, no inventions."""
-    from clinical_data_warehouse_bi_spark import streaming as S
-
-    docs1 = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta"),
-         (2, "completely different words entirely here now"),
-         (3, "alpha beta gamma delta epsilon zeta")],  # dup of 1
-        "doc_id long, text string",
-    )
-    docs2 = spark.createDataFrame(
-        [(10, "alpha beta gamma delta epsilon zeta"),   # dup of 1/3
-         (11, "yet another unrelated body of text")],
-        "doc_id long, text string",
-    )
-    m1 = multimodal.attach_fake_media(docs1)
-    m2 = multimodal.attach_fake_media(docs2)
-    index_path = str(tmp_path / "phash_index")
-    pairs_path = str(tmp_path / "phash_pairs")
-    S.phash_ingest_batch(m1, index_path, pairs_path)
-    S.phash_ingest_batch(m2, index_path, pairs_path)
-    got = {
-        frozenset((r.doc_a, r.doc_b))
-        for r in spark.read.parquet(pairs_path).collect()
-    }
-    want = {
-        frozenset((r.doc_a, r.doc_b))
-        for r in multimodal.image_near_dup(
-            multimodal.attach_fake_media(
-                docs1.unionByName(docs2)
-            )
-        ).collect()
-    }
-    assert got == want and {1, 3} in got and {1, 10} in got
-    first_rows = spark.read.parquet(pairs_path).count()
-    S.phash_ingest_batch(m2, index_path, pairs_path)  # replay
-    rep = spark.read.parquet(pairs_path)
-    assert all(r.doc_a != r.doc_b for r in rep.collect())
-    assert {
-        frozenset((r.doc_a, r.doc_b)) for r in rep.collect()
-    } == want
-    assert rep.count() > first_rows  # at-least-once duplicates landed

@@ -116,9 +116,12 @@ def test_doc_pipeline_aggregates_in_place(spark, sf_dir):
     fingerprint relation, which would collapse this plan to an
     InMemoryTableScan and hide the shape under test."""
     spark.catalog.clearCache()
-    from clinical_data_warehouse_bi_spark.queries.dedup import q_simhash
+    from clinical_data_warehouse_bi_spark.queries.dedup import (
+        _simhash_fingerprints,
+    )
 
-    plan = physical_plan(q_simhash(spark, sf_dir))
+    docs = read_table(spark, sf_dir, "documents")
+    plan = physical_plan(_simhash_fingerprints(docs))
     assert plan.count("Exchange hashpartitioning") == 1
 
 
@@ -309,9 +312,11 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir):
     """M8: two tables bucketed on the join key must sort-merge join
     with ZERO exchanges — the write-time shuffle replaces the
     reference's B-tree indexes for join locality."""
-    from clinical_data_warehouse_bi_spark.io import reset_database, write_bucketed_table
+    from clinical_data_warehouse_bi_spark.io import write_bucketed_table
 
-    reset_database(spark, "bucket_test")
+    spark.sql("DROP DATABASE IF EXISTS bucket_test CASCADE")
+    spark.sql("CREATE DATABASE bucket_test")
+    spark.sql("USE bucket_test")
     orders = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     lineitem = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
     write_bucketed_table(orders, "orders_b", ["o_orderkey"], 8)

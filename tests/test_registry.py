@@ -30,13 +30,12 @@ DRIVER_CORRECTNESS_CAP = 50
 #: surviving ones are pinned here.
 ROUND2_SKIPPED = [
     # q_window_tumbling was the third member until its round-8
-    # retirement (witness: the streaming batch-equivalence test;
-    # full oracle in test_retired_parity.py); q_frame_sample followed
-    # in round 9 (witness: q_multimodal_features + the sampling
-    # family; full oracle in test_retired_parity.py); and
-    # q_stream_dedup_dual in round 12 (witnesses: the streaming
-    # two-drain suite + q_corpus_clean; full oracle in
-    # test_retired_parity.py)
+    # retirement (full oracle in test_retired_parity.py);
+    # q_frame_sample followed in round 9 (witness:
+    # q_multimodal_features + the sampling family; full oracle in
+    # test_retired_parity.py); and q_stream_dedup_dual in round 12
+    # (witnesses: the streaming redelivery test + q_corpus_clean;
+    # full oracle in test_retired_parity.py)
     "q_multimodal_features",
     "q_sessionize",
 ]

@@ -583,54 +583,6 @@ def test_corpus_card_lexical_section(spark, sf_dir, tmp_path):
     assert card["lexical"]["vocab_size"] == qa.zipf_profile(docs)["vocab_size"]
 
 
-@pytest.mark.slow
-def test_hybrid_served_fuses_persisted_indexes(spark, sf_dir, tmp_path):
-    """hybrid_topk_served: both legs come from their persisted
-    indexes and the fusion is exactly the RRF of the two served
-    lists (hand-recomputed) — the lexical leg is identical to the
-    inline bm25 ranking; the dense leg is the IVF-PQ serving path."""
-    from clinical_data_warehouse_bi_spark import similarity
-    from clinical_data_warehouse_bi_spark.io import read_table
-
-    docs = read_table(spark, sf_dir, "documents")
-    vectors = read_table(spark, sf_dir, "embeddings")
-    bm25_path = str(tmp_path / "bm25_idx")
-    ivf_path = str(tmp_path / "ivf_idx")
-    retrieval.bm25_index_build(docs, bm25_path, n_buckets=8)
-    similarity.build_ivf_pq_index(vectors, ivf_path, n_clusters=4, m=4)
-
-    terms = ["hash", "join", "spark"]
-    k, pool = 15, 30
-    fused = retrieval.hybrid_topk_served(
-        spark, bm25_path, ivf_path, vectors, terms, k, pool=pool, nprobe=2
-    )
-    got = {r["doc_id"]: r["rrf_score"] for r in fused.collect()}
-    assert len(got) == k
-
-    # hand-recompute the fusion from the two served legs
-    bm = retrieval.bm25_index_search(spark, bm25_path, terms, pool).collect()
-    bm_rank = {
-        r["doc_id"]: i + 1
-        for i, r in enumerate(
-            sorted(bm, key=lambda r: (-r["score"], r["doc_id"]))
-        )
-    }
-    dense = similarity.search_ivf_pq_index(
-        spark, ivf_path, vectors, n_queries=1, nprobe=2,
-        shortlist=max(2 * pool, 64), topk=pool,
-    ).where("qid = 0").collect()
-    dense_rank = {r["nid"]: r["rank"] for r in dense}
-    scores = {}
-    for d, rk in list(bm_rank.items()) + list(dense_rank.items()):
-        scores[d] = scores.get(d, 0.0) + 1.0 / (60.0 + rk)
-    want = dict(
-        sorted(scores.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
-    )
-    assert set(got) == set(want)
-    for d in got:
-        assert abs(got[d] - round(want[d], 8)) < 1e-9, (d, got[d], want[d])
-
-
 def test_bm25_served_repairs_corrupt_cache_dir(spark):
     """q_bm25_served self-heals a cache directory that exists but
     lost BM25_INDEX_META: the rebuild's publish rename must REPLACE
@@ -663,8 +615,7 @@ def test_bm25_served_repairs_corrupt_cache_dir(spark):
 def test_hybrid_served_graph_leg(spark, sf_dir, tmp_path):
     """hybrid_topk_served_graph: BM25 index leg + persisted graph-ANN
     dense leg, fused by RRF — the fusion must equal a hand-recompute
-    from the two served legs (the hybrid_topk_served test's protocol,
-    with the dense leg swapped for hnsw)."""
+    from the two served legs."""
     from clinical_data_warehouse_bi_spark import retrieval
     from clinical_data_warehouse_bi_spark.hnsw import (
         build_hnsw_index,

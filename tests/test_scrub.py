@@ -603,30 +603,6 @@ def test_suppress_to_k_null_class_follows_same_rule(spark):
     assert (rep3["rows_suppressed"], rep3["classes_suppressed"]) == (6, 3)
 
 
-@pytest.mark.slow
-def test_decontaminate_release_loop(spark, sf_dir):
-    from clinical_data_warehouse_bi_spark.io import read_table
-
-    docs = read_table(spark, sf_dir, "documents").limit(200)
-    # benchmark = verbatim slices of a few corpus docs (planted
-    # contamination) + an unrelated probe
-    bench_rows = [
-        (1000 + r["doc_id"], r["text"][:400])
-        for r in docs.limit(3).collect()
-    ] + [(9999, "completely unrelated benchmark question text")]
-    bench = spark.createDataFrame(bench_rows, "bench_id long, text string")
-    clean, removed = scrub.decontaminate(docs, bench)
-    hit_ids = {r["doc_id"] for r in removed.collect()}
-    assert len(hit_ids) >= 3  # the planted sources are caught
-    assert clean.count() == docs.count() - len(hit_ids)
-    # re-measure green: the cleaned corpus reports zero contamination
-    assert scrub.contamination_report(clean, bench).count() == 0
-    # untouched documents survive verbatim
-    assert clean.join(
-        docs, ["doc_id"], "left_anti"
-    ).count() == 0
-
-
 def test_dp_release_null_group_key_released_cross_engine(spark):
     """A NULL group key must be noised and released like any other
     group, and the q_dp_release ORACLE must agree: the oracle key

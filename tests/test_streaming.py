@@ -1,6 +1,6 @@
-"""Structured Streaming operator tests: drive the streams with the
-driver's events table split into multiple parquet files (one
-micro-batch each) and compare against batch ground truth."""
+"""Structured Streaming tests: drive streams over the events table
+split into multiple parquet files (one micro-batch each) and
+compare against batch ground truth."""
 
 from __future__ import annotations
 
@@ -31,85 +31,6 @@ def batch_events(spark, stream_dir):
 def _drain(q):
     q.processAllAvailable()
     q.stop()
-
-
-def test_windowed_counts_matches_batch(spark, stream_dir, batch_events):
-    stream = streaming.read_event_stream(spark, stream_dir)
-    # files are not chronologically ordered -> watermark must cover the
-    # whole data span or legitimately-late rows get dropped (that IS
-    # the operator's contract; here we test the aggregation itself)
-    q = streaming.run_to_memory(
-        streaming.windowed_counts(stream, watermark="60 days"),
-        "win_counts",
-        output_mode="complete",
-    )
-    _drain(q)
-    got = {
-        (r["window_start"], r["event_type"]): r["n_events"]
-        for r in spark.sql("SELECT * FROM win_counts").collect()
-    }
-    want = {
-        (r["ws"], r["event_type"]): r["n"]
-        for r in batch_events.groupBy(
-            F.date_trunc("hour", "ts").alias("ws"), "event_type"
-        )
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    assert got == want
-
-
-def test_sessionized_runs_and_bounds(spark, stream_dir, batch_events):
-    stream = streaming.read_event_stream(spark, stream_dir)
-    q = streaming.run_to_memory(
-        streaming.sessionized(stream, watermark="60 days"),
-        "sessions",
-        output_mode="complete",
-    )
-    _drain(q)
-    rows = spark.sql("SELECT * FROM sessions").collect()
-    assert len(rows) > 0
-    total = sum(r["n_events"] for r in rows)
-    assert total == batch_events.count()
-    assert all(r["session_start"] <= r["session_end"] for r in rows)
-
-
-def test_stream_static_enrich(spark, stream_dir, batch_events):
-    dim = spark.createDataFrame(
-        [("click", "web"), ("view", "web"), ("purchase", "commerce"),
-         ("signup", "funnel"), ("error", "ops")],
-        ["event_type", "category"],
-    )
-    stream = streaming.read_event_stream(spark, stream_dir)
-    q = streaming.run_to_memory(
-        streaming.enrich(stream, dim, "event_type"), "enriched", output_mode="append"
-    )
-    _drain(q)
-    out = spark.sql("SELECT * FROM enriched")
-    assert out.count() == batch_events.count()
-    assert out.filter(F.col("category").isNull()).count() == 0
-
-
-def test_running_user_state(spark, stream_dir, batch_events):
-    stream = streaming.read_event_stream(spark, stream_dir)
-    q = streaming.run_to_memory(
-        streaming.running_user_state(stream), "user_state", output_mode="update"
-    )
-    _drain(q)
-    rows = spark.sql("SELECT * FROM user_state").collect()
-    assert rows, "stateful operator emitted nothing"
-    # per user: sum of per-batch increments == final total == batch count
-    per_user_batches: dict[int, int] = {}
-    finals: dict[int, int] = {}
-    for r in rows:
-        per_user_batches[r["user_id"]] = per_user_batches.get(r["user_id"], 0) + r["batch_events"]
-        finals[r["user_id"]] = max(finals.get(r["user_id"], 0), r["total_events"])
-    want = {
-        r["user_id"]: r["n"]
-        for r in batch_events.groupBy("user_id").agg(F.count("*").alias("n")).collect()
-    }
-    assert per_user_batches == want
-    assert finals == want
 
 
 def test_dedup_events_drops_redelivered_rows(spark, stream_dir, tmp_path, batch_events):
@@ -156,52 +77,6 @@ def test_stratified_sample_filter_is_stream_compatible(spark, stream_dir, batch_
     assert got == want and len(got) > 0
 
 
-@pytest.mark.slow
-def test_stream_stream_interval_join_matches_batch(spark, stream_dir, batch_events):
-    """Watermarked stream-stream interval join (clicks x purchases of
-    the same user within 1 hour) must produce exactly the batch join's
-    pairs."""
-    clicks = streaming.read_event_stream(spark, stream_dir).filter(
-        F.col("event_type") == "click"
-    )
-    purchases = (
-        streaming.read_event_stream(spark, stream_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("r_event_id"),
-            F.col("ts").alias("r_ts"),
-            F.col("user_id").alias("r_user_id"),
-        )
-    )
-    joined = streaming.stream_stream_interval_join(
-        clicks, purchases, key="user_id", tolerance="1 hour", watermark="60 days"
-    ).select("event_id", "r_event_id")
-    q = streaming.run_to_memory(joined, "ssj")
-    _drain(q)
-    got = {
-        (r["event_id"], r["r_event_id"])
-        for r in spark.sql("SELECT * FROM ssj").collect()
-    }
-    b_clicks = batch_events.filter(F.col("event_type") == "click")
-    b_pur = batch_events.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("r_event_id"),
-        F.col("ts").alias("r_ts"),
-        F.col("user_id").alias("r_user_id"),
-    )
-    want = {
-        (r["event_id"], r["r_event_id"])
-        for r in b_clicks.join(
-            b_pur,
-            (F.col("user_id") == F.col("r_user_id"))
-            & (F.col("r_ts") >= F.col("ts"))
-            & (F.col("r_ts") <= F.col("ts") + F.expr("INTERVAL 1 hour")),
-        )
-        .select("event_id", "r_event_id")
-        .collect()
-    }
-    assert got == want and len(got) > 0
-
-
 def test_salted_join_works_on_streams(spark, stream_dir):
     """salted_join's streaming fallback salt must not use
     monotonically_increasing_id (unsupported on streams) and must
@@ -222,420 +97,6 @@ def test_salted_join_works_on_streams(spark, stream_dir):
         .count()
     )
     assert got == want
-
-
-def test_stream_stream_join_right_key_validated(spark):
-    """A right frame missing the r_<key> convention column fails fast
-    with the convention spelled out (ADVICE r2), and right_key= names
-    an arbitrary column instead."""
-    import pytest
-
-    from clinical_data_warehouse_bi_spark.streaming import (
-        stream_stream_interval_join,
-    )
-
-    left = spark.createDataFrame(
-        [(1, "2024-01-01 00:00:00")], "user_id long, ts string"
-    ).select("user_id", F.col("ts").cast("timestamp"))
-    bad_right = spark.createDataFrame(
-        [(1, "2024-01-01 00:30:00")], "uid long, r_ts string"
-    ).select("uid", F.col("r_ts").cast("timestamp"))
-    with pytest.raises(ValueError, match="r_user_id"):
-        stream_stream_interval_join(left, bad_right, "user_id")
-    out = stream_stream_interval_join(
-        left, bad_right, "user_id", right_key="uid"
-    )
-    assert out.count() == 1
-
-
-def _scd2_rows(df):
-    return {
-        (r["customer_id"], r["state"], r["valid_from"], r["valid_to"], r["is_current"])
-        for r in df.collect()
-    }
-
-
-def test_scd2_apply_changes_semantics(spark):
-    """One merge step: versions chain half-open, same-state
-    observations are absorbed, late observations are dropped."""
-    from datetime import datetime as dt
-
-    d = lambda i: dt(2024, 1, i)  # noqa: E731
-    b1 = spark.createDataFrame(
-        [(1, "A", d(1)), (1, "B", d(3)), (2, "X", d(2))],
-        "customer_id long, state string, ts timestamp",
-    )
-    dim1 = streaming.scd2_apply_changes(None, b1)
-    assert _scd2_rows(dim1) == {
-        (1, "A", d(1), d(3), False),
-        (1, "B", d(3), None, True),
-        (2, "X", d(2), None, True),
-    }
-    b2 = spark.createDataFrame(
-        [
-            (1, "B", d(5)),   # same state: absorbed, no new version
-            (2, "Y", d(6)),   # real change: closes X at d(6)
-            (2, "Z", d(1)),   # LATE (before open row's d(2)): dropped
-            (3, "Q", d(4)),   # brand-new key
-        ],
-        "customer_id long, state string, ts timestamp",
-    )
-    dim2 = streaming.scd2_apply_changes(dim1, b2)
-    assert _scd2_rows(dim2) == {
-        (1, "A", d(1), d(3), False),
-        (1, "B", d(3), None, True),
-        (2, "X", d(2), d(6), False),
-        (2, "Y", d(6), None, True),
-        (3, "Q", d(4), None, True),
-    }
-
-
-def test_scd2_incremental_equals_one_shot(spark):
-    """Composability: any chronological batching of a change history
-    folds to the same dimension as a single batch — pinned over a
-    deterministic pseudo-random history of 40 keys x 12 observations
-    split into 3 chronological batches."""
-    import random
-    from datetime import datetime as dt, timedelta
-
-    rng = random.Random(23)
-    rows = []
-    for k in range(40):
-        t = dt(2024, 1, 1)
-        for _ in range(12):
-            t += timedelta(hours=rng.randint(1, 48))
-            rows.append((k, rng.choice("ABC"), t))
-    schema = "customer_id long, state string, ts timestamp"
-    full = spark.createDataFrame(rows, schema)
-    one_shot = streaming.scd2_apply_changes(None, full)
-
-    cut1, cut2 = dt(2024, 1, 8), dt(2024, 1, 16)
-    dim = None
-    for lo, hi in [(None, cut1), (cut1, cut2), (cut2, None)]:
-        batch = [
-            r for r in rows
-            if (lo is None or r[2] >= lo) and (hi is None or r[2] < hi)
-        ]
-        dim = streaming.scd2_apply_changes(
-            dim, spark.createDataFrame(batch, schema)
-        )
-        # keep the comparison honest: materialize between steps like
-        # the streaming sink does (read-modify-write per batch)
-        dim = dim.localCheckpoint(eager=True)
-    assert _scd2_rows(dim) == _scd2_rows(one_shot)
-    # invariant: exactly one open row per key
-    opens = dim.filter(F.col("is_current")).groupBy("customer_id").count()
-    assert opens.filter(F.col("count") != 1).count() == 0
-
-
-@pytest.mark.slow
-def test_streaming_scd2_end_to_end(spark, tmp_path):
-    """Drive the foreachBatch merge with a file source, adding files
-    between drains so micro-batches arrive in event-time order; the
-    maintained parquet dimension must equal the one-shot fold."""
-    from datetime import datetime as dt
-
-    schema = "customer_id long, state string, ts timestamp"
-    d = lambda i: dt(2024, 2, i)  # noqa: E731
-    batch1 = [(1, "A", d(1)), (2, "X", d(2)), (1, "B", d(4))]
-    batch2 = [(1, "C", d(6)), (2, "X", d(7)), (3, "N", d(5))]
-    src = str(tmp_path / "changes")
-    dim_path = str(tmp_path / "scd2_dim")
-    spark.createDataFrame(batch1, schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    stream = spark.readStream.schema(schema).parquet(src)
-    q = streaming.streaming_scd2(
-        stream, dim_path, checkpoint_dir=str(tmp_path / "ckpt")
-    )
-    try:
-        q.processAllAvailable()
-        spark.createDataFrame(batch2, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = _scd2_rows(spark.read.parquet(dim_path))
-    want = _scd2_rows(
-        streaming.scd2_apply_changes(
-            None, spark.createDataFrame(batch1 + batch2, schema)
-        )
-    )
-    assert got == want
-    assert (1, "C", d(6), None, True) in got  # the current version
-
-
-# ---------------------------------------------------------------------------
-# SCD2 sink crash-safety (publish_scd2_dim / recover_scd2_dim)
-# ---------------------------------------------------------------------------
-
-
-def _mk_dim(spark, tmp_path, rows):
-    schema = "customer_id long, state string, ts timestamp"
-    dim_path = str(tmp_path / "dim")
-    merged = streaming.scd2_apply_changes(
-        None, spark.createDataFrame(rows, schema)
-    )
-    streaming.publish_scd2_dim(merged, dim_path, batch_id=1)
-    return dim_path, _scd2_rows(spark.read.parquet(dim_path))
-
-
-def _dim_rows(spark, tmp_path):
-    from datetime import datetime as dt
-
-    return [(1, "A", dt(2024, 2, 1)), (2, "X", dt(2024, 2, 2))]
-
-
-def test_scd2_publish_survives_crash_during_tmp_write(spark, tmp_path):
-    """A crash while the tmp directory is being written (no _SUCCESS)
-    must leave the live dimension untouched and the recovery sweep
-    must clear the debris."""
-    import os
-
-    dim_path, before = _mk_dim(spark, tmp_path, _dim_rows(spark, tmp_path))
-    tmp = f"{dim_path}.tmp-2"
-    os.makedirs(tmp)
-    with open(os.path.join(tmp, "part-00000.parquet"), "w") as f:
-        f.write("torn half-written parquet bytes")
-    dim = streaming.read_scd2_dim(spark, dim_path)
-    assert dim is not None and _scd2_rows(dim) == before
-    assert not os.path.exists(tmp)  # swept
-
-
-def test_scd2_publish_survives_crash_between_renames(spark, tmp_path):
-    """A crash after the live dim was renamed aside but before the tmp
-    was renamed in (dim_path momentarily absent) must recover the
-    retired pre-batch version — never lose the dimension."""
-    import os
-
-    dim_path, before = _mk_dim(spark, tmp_path, _dim_rows(spark, tmp_path))
-    # simulate the window: dim renamed to .old-2, complete tmp-2 on disk
-    merged = streaming.scd2_apply_changes(
-        spark.read.parquet(dim_path),
-        spark.createDataFrame(
-            [(1, "B", __import__("datetime").datetime(2024, 2, 5))],
-            "customer_id long, state string, ts timestamp",
-        ),
-    ).localCheckpoint(eager=True)
-    merged.write.mode("overwrite").parquet(f"{dim_path}.tmp-2")
-    os.rename(dim_path, f"{dim_path}.old-2")
-    assert not os.path.exists(dim_path)
-    dim = streaming.read_scd2_dim(spark, dim_path)
-    assert dim is not None
-    assert _scd2_rows(dim) == before  # the pre-batch state, intact
-    # debris gone; a replayed batch can publish cleanly on top
-    assert not os.path.exists(f"{dim_path}.old-2")
-    assert not os.path.exists(f"{dim_path}.tmp-2")
-
-
-def test_scd2_read_raises_on_corrupt_existing_dim(spark, tmp_path):
-    """ADVICE r6 (medium): a transient/corrupt read of an EXISTING
-    dimension must raise (batch fails and retries), never be treated
-    as 'first batch' and silently rebuild from scratch."""
-    import os
-
-    import pytest as _pytest
-
-    dim_path = str(tmp_path / "dim")
-    os.makedirs(dim_path)
-    with open(os.path.join(dim_path, "part-00000.parquet"), "w") as f:
-        f.write("not parquet")
-    with _pytest.raises(Exception):
-        df = streaming.read_scd2_dim(spark, dim_path)
-        assert df is not None
-        df.collect()
-
-
-def test_scd2_publish_never_deletes_before_replacement_ready(spark, tmp_path):
-    """publish keeps the old version on disk until the new one is the
-    live path: after a successful publish the dimension reflects the
-    merge and no debris remains."""
-    import os
-    from datetime import datetime as dt
-
-    dim_path, _ = _mk_dim(spark, tmp_path, _dim_rows(spark, tmp_path))
-    merged = streaming.scd2_apply_changes(
-        spark.read.parquet(dim_path),
-        spark.createDataFrame(
-            [(1, "B", dt(2024, 2, 5))],
-            "customer_id long, state string, ts timestamp",
-        ),
-    ).localCheckpoint(eager=True)
-    streaming.publish_scd2_dim(merged, dim_path, batch_id=2)
-    got = _scd2_rows(spark.read.parquet(dim_path))
-    assert (1, "B", dt(2024, 2, 5), None, True) in got
-    base = os.path.dirname(dim_path)
-    assert [p for p in os.listdir(base) if ".old-" in p or ".tmp-" in p] == []
-
-
-# ---------------------------------------------------------------------------
-# streaming exact-dedup corpus ingest
-# ---------------------------------------------------------------------------
-
-
-@pytest.mark.slow
-def test_streaming_dedup_ingest_end_to_end(spark, tmp_path):
-    """File-source stream in two drains with duplicates inside a
-    batch, across batches, and a formatting-only variant (normalized
-    fingerprints): the maintained corpus keeps exactly one copy per
-    normalized content, lowest id wins within a batch."""
-    schema = "doc_id long, text string"
-    b1 = [(1, "alpha beta"), (2, "gamma"), (3, "alpha beta")]
-    b2 = [(4, "  ALPHA   beta "), (5, "delta"), (6, "gamma")]
-    src = str(tmp_path / "docs")
-    corpus = str(tmp_path / "corpus")
-    spark.createDataFrame(b1, schema).coalesce(1).write.mode("append").parquet(src)
-    stream = spark.readStream.schema(schema).parquet(src)
-    q = streaming.streaming_dedup_ingest(
-        stream, corpus, checkpoint_dir=str(tmp_path / "ckpt")
-    )
-    try:
-        q.processAllAvailable()
-        spark.createDataFrame(b2, schema).coalesce(1).write.mode("append").parquet(src)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    rows = {
-        (r.doc_id, r.text) for r in spark.read.parquet(corpus).collect()
-    }
-    # doc 3 (dup of 1 in-batch), doc 4 (normalized dup of 1 across
-    # batches), doc 6 (dup of 2 across batches) are all dropped
-    assert rows == {(1, "alpha beta"), (2, "gamma"), (5, "delta")}
-    fps = [r.fingerprint for r in spark.read.parquet(corpus).collect()]
-    assert len(fps) == len(set(fps))
-
-
-def test_dedup_ingest_batch_replay_is_idempotent(spark, tmp_path):
-    """Crash-after-append, before-offset-commit: the engine replays
-    the same micro-batch; the second application must add nothing."""
-    schema = "doc_id long, text string"
-    corpus = str(tmp_path / "corpus")
-    batch = spark.createDataFrame(
-        [(1, "alpha"), (2, "beta"), (3, "alpha")], schema
-    )
-    streaming.dedup_ingest_batch(batch, corpus)
-    first = sorted(
-        (r.doc_id, r.fingerprint)
-        for r in spark.read.parquet(corpus).collect()
-    )
-    assert [d for d, _ in first] == [1, 2]
-    streaming.dedup_ingest_batch(batch, corpus)  # replay
-    second = sorted(
-        (r.doc_id, r.fingerprint)
-        for r in spark.read.parquet(corpus).collect()
-    )
-    assert second == first
-
-
-def test_streaming_near_dup_matches_batch_rebuild(spark, tmp_path):
-    """Two file-source drains over real documents; the union of the
-    per-batch pair appends must equal the from-scratch LSH rebuild's
-    pairs restricted to (a) within batch 1, (b) batch-1-vs-batch-2,
-    and (c) within batch 2 — i.e. every pair, since every doc arrives
-    in some batch. Orientation differs (corpus-batch pairs are
-    (corpus_id, new_id)); compare as unordered id sets."""
-    from clinical_data_warehouse_bi_spark import text as T
-    from clinical_data_warehouse_bi_spark.io import read_table
-
-    docs = read_table(spark, "/root/testdata/sf0.001", "documents").select(
-        "doc_id", "text"
-    )
-    src = str(tmp_path / "docs_stream")
-    index_path = str(tmp_path / "band_index")
-    pairs_path = str(tmp_path / "pairs")
-    docs.filter(F.col("doc_id") < 250).coalesce(1).write.mode("append").parquet(src)
-    stream = spark.readStream.schema("doc_id long, text string").parquet(src)
-    q = streaming.streaming_near_dup(
-        stream, index_path, pairs_path, checkpoint_dir=str(tmp_path / "ck")
-    )
-    try:
-        q.processAllAvailable()
-        docs.filter(F.col("doc_id") >= 250).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = {
-        frozenset((r.doc_a, r.doc_b))
-        for r in spark.read.parquet(pairs_path).collect()
-    }
-    want = {
-        frozenset((r.doc_a, r.doc_b))
-        for r in T.lsh_candidate_pairs(T.lsh_index(docs)).collect()
-    }
-    assert got == want
-    assert len(want) > 0  # the corpus actually has near-dup candidates
-    # and the index now covers the full corpus
-    n_docs = spark.read.parquet(index_path).select("doc_id").distinct().count()
-    assert n_docs == docs.count()
-
-
-def test_near_dup_replay_after_both_appends_emits_no_inventions(spark, tmp_path):
-    """The worst replay window: crash AFTER pairs+bands appends but
-    before the offset commit. The replayed batch probes an index that
-    already contains its own bands — the anti-join guard must keep it
-    from emitting self-pairs (doc_a == doc_b) or reversed duplicates;
-    replay may only duplicate ROWS of already-correct pairs."""
-    index_path = str(tmp_path / "band_index")
-    pairs_path = str(tmp_path / "pairs")
-    schema = "doc_id long, text string"
-    base = "the quick brown fox jumps over the lazy dog again and again"
-    b1 = spark.createDataFrame([(1, base), (2, base + " ok")], schema)
-    b2 = spark.createDataFrame([(3, base + " yes"), (4, base)], schema)
-    streaming.near_dup_ingest_batch(b1, index_path, pairs_path)
-    streaming.near_dup_ingest_batch(b2, index_path, pairs_path)
-    first = [
-        (r.doc_a, r.doc_b, r.origin)
-        for r in spark.read.parquet(pairs_path).collect()
-    ]
-    assert all(a != b for a, b, _ in first)
-    distinct_first = set(first)
-    # replay batch 2 verbatim (its bands are already in the index)
-    streaming.near_dup_ingest_batch(b2, index_path, pairs_path)
-    replayed = [
-        (r.doc_a, r.doc_b, r.origin)
-        for r in spark.read.parquet(pairs_path).collect()
-    ]
-    assert all(a != b for a, b, _ in replayed)  # no self-pairs
-    # no NEW pair content: replay only duplicates rows already present
-    assert set(replayed) == distinct_first
-    assert len(replayed) > len(first)  # duplicates did land (at-least-once)
-
-
-def test_compact_pairs_distinct_bounds_replayed_sink(spark, tmp_path):
-    """After a forced replay the pairs sink holds duplicate rows
-    across many small files; compact_pairs_distinct must rewrite it
-    to the exact distinct pair set in fewer files, crash-safely."""
-    import glob
-    import os
-
-    index_path = str(tmp_path / "band_index")
-    pairs_path = str(tmp_path / "pairs")
-    schema = "doc_id long, text string"
-    base = "pack my box with five dozen liquor jugs every single day"
-    b1 = spark.createDataFrame([(1, base), (2, base + " ok")], schema)
-    b2 = spark.createDataFrame([(3, base + " yes")], schema)
-    streaming.near_dup_ingest_batch(b1, index_path, pairs_path)
-    streaming.near_dup_ingest_batch(b2, index_path, pairs_path)
-    streaming.near_dup_ingest_batch(b2, index_path, pairs_path)  # replay
-    before_rows = [
-        (r.doc_a, r.doc_b, r.origin)
-        for r in spark.read.parquet(pairs_path).collect()
-    ]
-    want = set(before_rows)
-    assert len(before_rows) > len(want)  # replay really duplicated
-    files_before = len(glob.glob(os.path.join(pairs_path, "*.parquet")))
-    stats = streaming.compact_pairs_distinct(spark, pairs_path, target_files=1)
-    assert stats["rows"] == len(want)
-    assert stats["files_after"] < files_before
-    after = {
-        (r.doc_a, r.doc_b, r.origin)
-        for r in spark.read.parquet(pairs_path).collect()
-    }
-    assert after == want
-    assert spark.read.parquet(pairs_path).count() == len(want)
 
 
 def test_streaming_preagg_exactly_once_and_compaction(spark, tmp_path):
@@ -704,121 +165,6 @@ def test_streaming_preagg_exactly_once_and_compaction(spark, tmp_path):
     assert got4[4] == 1 and got4[1] == want[1][0]
 
 
-@pytest.mark.slow
-def test_streaming_preagg_from_file_stream(spark, tmp_path):
-    """End-to-end through the streaming engine: two drained
-    micro-batches produce the same derived aggregate as a batch
-    groupBy over the union."""
-    schema = (
-        "admission_id long, clinical_concept_id long,"
-        " event_source_type string"
-    )
-    src = str(tmp_path / "events_src")
-    syn = str(tmp_path / "synopsis")
-    b1 = [(1, 10, "Lab"), (2, 10, "Rx"), (1, 11, "Lab")]
-    b2 = [(1, 10, "Rx"), (2, 20, "Rx")]
-    spark.createDataFrame(b1, schema).coalesce(1).write.mode("append").parquet(src)
-    stream = spark.readStream.schema(schema).parquet(src)
-    q = streaming.streaming_preagg(
-        stream, syn, checkpoint_dir=str(tmp_path / "ck")
-    )
-    try:
-        q.processAllAvailable()
-        spark.createDataFrame(b2, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = {
-        r.admission_id: (r.total_events, r.unique_concepts, r.different_sources)
-        for r in streaming.read_preagg(spark, syn).collect()
-    }
-    assert got == {1: (3, 2, 2), 2: (2, 2, 1)}
-
-
-@pytest.mark.slow
-def test_streaming_funnel_matches_batch_fold(spark, tmp_path):
-    """Two event-time-ordered drains through the engine: the LAST
-    emitted row per user must equal funnel_steps' batch fold over the
-    full event set (the oracle-checked q_funnel_steps semantics),
-    including users who stall mid-funnel and out-of-order events
-    WITHIN a batch."""
-    from datetime import datetime
-
-    from clinical_data_warehouse_bi_spark.funnel import funnel_steps
-
-    schema = "user_id long, event_type string, ts timestamp"
-    t = lambda h, m=0: datetime(2024, 3, 1, h, m)  # noqa: E731
-    b1 = [
-        (1, "view", t(9)), (1, "click", t(10)),
-        (2, "click", t(9)),              # wrong order: stalls at 0
-        (3, "view", t(9, 30)), (3, "view", t(9)),  # in-batch disorder
-    ]
-    b2 = [
-        (1, "purchase", t(11)),
-        (2, "view", t(12)), (2, "click", t(13)),
-        (3, "click", t(9)),              # not strictly after step 1
-    ]
-    src = str(tmp_path / "ev_src")
-    out = str(tmp_path / "funnel_out")
-    spark.createDataFrame(b1, schema).coalesce(1).write.mode("append").parquet(src)
-    stream = spark.readStream.schema(schema).parquet(src)
-    steps = ["view", "click", "purchase"]
-    q = (
-        streaming.streaming_funnel(stream, steps)
-        .writeStream.foreachBatch(
-            lambda b, bid: b.withColumn(
-                "bid", F.lit(int(bid))
-            ).write.mode("append").parquet(out)
-        )
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .outputMode("update")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        spark.createDataFrame(b2, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    import pandas as pd
-
-    emitted = pd.read_parquet(out).sort_values("bid")
-    # last (highest-batch) emission per user is the current state
-    last = {}
-    for _, r in emitted.iterrows():
-        last[r.user_id] = (
-            r.steps_completed, r.step_1_ts, r.step_2_ts, r.step_3_ts
-        )
-    batch = spark.createDataFrame(b1 + b2, schema)
-    want = {
-        r.user_id: (r.steps_completed, r.step_1_ts, r.step_2_ts, r.step_3_ts)
-        for r in funnel_steps(batch, steps).collect()
-    }
-    assert set(last) == set(want)
-    for u in want:
-        gs, g1, g2, g3 = last[u]
-        ws, w1, w2, w3 = want[u]
-        assert gs == ws, (u, last[u], want[u])
-        for g, w in ((g1, w1), (g2, w2), (g3, w3)):
-            if w is None:
-                assert pd.isna(g), (u, last[u], want[u])
-            else:
-                # sink parquet reads back tz-aware UTC; batch collect
-                # is naive UTC (the session tz)
-                assert pd.Timestamp(w, tz="UTC") == g, (u, last[u], want[u])
-    # the batch-dual degrade path: same call on a batch frame
-    dual = {
-        r.user_id: r.steps_completed
-        for r in streaming.streaming_funnel(batch, steps).collect()
-    }
-    assert dual == {u: v[0] for u, v in want.items()}
-
-
 def test_preagg_synopsis_recovers_mid_compaction_crash(spark, tmp_path):
     """A crash between compact_preagg's publish renames leaves no
     directory at the synopsis path; the next batch apply and the
@@ -858,1067 +204,3 @@ def test_preagg_synopsis_recovers_mid_compaction_crash(spark, tmp_path):
         for r in streaming.read_preagg(spark, syn).collect()
     }
     assert got2 == {1: 2, 2: 1, 3: 1}
-
-
-@pytest.mark.slow
-def test_streaming_vector_ingest_extends_index(spark, tmp_path):
-    """Two drained micro-batches of embeddings land in the persisted
-    IVF-PQ index exactly once (a re-delivered file adds nothing) and
-    are immediately searchable."""
-    import numpy as np
-
-    from clinical_data_warehouse_bi_spark import similarity
-
-    rng = np.random.RandomState(43)
-    k, dims = 4, 16
-    centers = rng.normal(0, 10.0, size=(k, dims))
-
-    def mk(lo, hi):
-        return [
-            (i, [float(x) for x in centers[i % k] + rng.normal(0, 1.0, dims)])
-            for i in range(lo, hi)
-        ]
-
-    schema = "vec_id long, embedding array<double>"
-    path = str(tmp_path / "idx")
-    similarity.build_ivf_pq_index(
-        spark.createDataFrame(mk(0, 160), schema), path, n_clusters=k, m=4
-    )
-    src = str(tmp_path / "vec_src")
-    spark.createDataFrame(mk(160, 200), schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    stream = spark.readStream.schema(
-        "vec_id long, embedding array<double>"
-    ).parquet(src)
-    q = streaming.streaming_vector_ingest(
-        stream, path, checkpoint_dir=str(tmp_path / "ck")
-    )
-    try:
-        q.processAllAvailable()
-        b2 = spark.createDataFrame(mk(200, 240), schema)
-        b2.coalesce(1).write.mode("append").parquet(src)
-        # re-deliver batch 2's rows in a THIRD file (at-least-once
-        # source): the anti-join guard must drop all of them
-        b2.coalesce(1).write.mode("append").parquet(src)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    ids = [r.vec_id for r in spark.read.parquet(path).select("vec_id").collect()]
-    assert sorted(ids) == list(range(240))  # exactly once, no dupes
-
-
-@pytest.mark.slow
-def test_streaming_bm25_ingest_extends_index(spark, tmp_path):
-    """Two drained document micro-batches land in the persisted BM25
-    index as committed batch dirs, and the served search equals the
-    inline shuffle-free path over the full corpus."""
-    import os
-
-    from clinical_data_warehouse_bi_spark import retrieval
-
-    words = ["hash", "join", "merge", "scan", "sort", "filler"]
-    def mk(lo, hi):
-        return [
-            (i, " ".join(words[(i + j) % len(words)] for j in range(12)))
-            for i in range(lo, hi)
-        ]
-
-    schema = "doc_id long, text string"
-    path = str(tmp_path / "bm25")
-    retrieval.bm25_index_build(
-        spark.createDataFrame(mk(0, 100), schema), path, n_buckets=8
-    )
-    src = str(tmp_path / "doc_src")
-    spark.createDataFrame(mk(100, 150), schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    stream = spark.readStream.schema(schema).parquet(src)
-    q = streaming.streaming_bm25_ingest(
-        stream, path, checkpoint_dir=str(tmp_path / "ck")
-    )
-    try:
-        q.processAllAvailable()
-        spark.createDataFrame(mk(150, 200), schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    batches = sorted(
-        d for d in os.listdir(os.path.join(path, "postings")) if d.startswith("batch=")
-    )
-    assert len(batches) >= 2  # base + streamed commits
-
-    full = spark.createDataFrame(mk(0, 200), schema)
-    served = {
-        r["doc_id"]: r["score"]
-        for r in retrieval.bm25_index_search(
-            spark, path, ["hash", "join"], 100_000
-        ).collect()
-    }
-    inline = {
-        r["doc_id"]: r["score"]
-        for r in retrieval.bm25_topk(full, ["hash", "join"], 100_000).collect()
-    }
-    assert set(served) == set(inline)
-    for d, s in inline.items():
-        assert abs(served[d] - s) < 1e-3
-
-
-def _exp_spec():
-    return [
-        {"check": "not_null", "table": "stream", "column": "user_id"},
-        {"check": "accepted_values", "table": "stream",
-         "column": "event_type", "values": ["click", "view"]},
-        {"check": "referential", "table": "stream", "column": "user_id",
-         "ref_table": "users", "ref_column": "uid"},
-    ]
-
-
-def _exp_rows(lo, hi, bad_every=5):
-    # every 5th row: null user; every 7th: bad event_type; ids >= 90 orphan
-    rows = []
-    for i in range(lo, hi):
-        uid = None if i % bad_every == 0 else (90 + i % 20 if i % 3 == 0 else i % 50)
-        et = "scroll" if i % 7 == 0 else ("click" if i % 2 == 0 else "view")
-        rows.append((i, uid, et))
-    return rows
-
-
-def test_expectations_apply_batch_totals_and_replay(spark, tmp_path):
-    """Two batches accumulate exact per-check totals; replaying a
-    batch id overwrites its own partition (no double counting)."""
-    from clinical_data_warehouse_bi_spark import streaming as S
-
-    users = spark.createDataFrame([(i,) for i in range(60)], ["uid"])
-    schema = "event_id long, user_id long, event_type string"
-    path = str(tmp_path / "dq")
-    b0 = spark.createDataFrame(_exp_rows(0, 100), schema)
-    b1 = spark.createDataFrame(_exp_rows(100, 250), schema)
-    S.expectations_apply_batch(b0, path, 0, _exp_spec(), {"users": users})
-    S.expectations_apply_batch(b1, path, 1, _exp_spec(), {"users": users})
-    totals = {
-        r["check_name"]: (r["violations"], r["total_rows"], r["passed"])
-        for r in S.read_expectation_totals(spark, path).collect()
-    }
-    # ground truth: the same suite over the concatenated batches
-    from clinical_data_warehouse_bi_spark import qa
-
-    full = spark.createDataFrame(_exp_rows(0, 250), schema)
-    want = {
-        r["check_name"]: (r["violations"], r["total_rows"], r["passed"])
-        for r in qa.expectation_report(
-            {"stream": full, "users": users}, _exp_spec()
-        ).collect()
-    }
-    assert totals == want
-    # replay batch 1: identical partition overwrite, totals unchanged
-    S.expectations_apply_batch(b1, path, 1, _exp_spec(), {"users": users})
-    totals2 = {
-        r["check_name"]: (r["violations"], r["total_rows"], r["passed"])
-        for r in S.read_expectation_totals(spark, path).collect()
-    }
-    assert totals2 == want
-
-
-def test_expectations_reject_unique_checks(spark, tmp_path):
-    from clinical_data_warehouse_bi_spark import streaming as S
-
-    b = spark.createDataFrame([(1, 1, "click")],
-                              "event_id long, user_id long, event_type string")
-    with pytest.raises(ValueError):
-        S.expectations_apply_batch(
-            b, str(tmp_path / "dq"), 0,
-            [{"check": "unique", "table": "stream", "columns": ["event_id"]}],
-        )
-
-
-@pytest.mark.slow
-def test_streaming_expectations_end_to_end(spark, tmp_path):
-    """The foreachBatch wrapper drains a file stream and the totals
-    match the batch-computed suite over everything delivered."""
-    from clinical_data_warehouse_bi_spark import qa
-    from clinical_data_warehouse_bi_spark import streaming as S
-
-    users = spark.createDataFrame([(i,) for i in range(60)], ["uid"])
-    schema = "event_id long, user_id long, event_type string"
-    src = str(tmp_path / "src")
-    spark.createDataFrame(_exp_rows(0, 80), schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    stream = spark.readStream.schema(schema).parquet(src)
-    path = str(tmp_path / "dq")
-    q = S.streaming_expectations(
-        stream, path, _exp_spec(), {"users": users},
-        checkpoint_dir=str(tmp_path / "ck"),
-    )
-    try:
-        q.processAllAvailable()
-        spark.createDataFrame(_exp_rows(80, 160), schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    totals = {
-        r["check_name"]: (r["violations"], r["total_rows"])
-        for r in S.read_expectation_totals(spark, path).collect()
-    }
-    full = spark.createDataFrame(_exp_rows(0, 160), schema)
-    want = {
-        r["check_name"]: (r["violations"], r["total_rows"])
-        for r in qa.expectation_report(
-            {"stream": full, "users": users}, _exp_spec()
-        ).collect()
-    }
-    assert totals == want
-
-
-def test_join_view_incremental_matches_full_rebuild(spark, tmp_path):
-    """Two maintained batches == the one-shot join over all facts;
-    replay of a batch changes nothing."""
-    from clinical_data_warehouse_bi_spark import streaming as S
-
-    dim = spark.createDataFrame(
-        [(1, "gold"), (2, "silver"), (3, "bronze")], ["cust_id", "tier"]
-    )
-    schema = "fact_id long, cust long, amount double"
-    f0 = spark.createDataFrame([(i, 1 + i % 3, float(i)) for i in range(40)], schema)
-    f1 = spark.createDataFrame(
-        [(i, 1 + i % 3, float(i)) for i in range(40, 90)], schema
-    )
-    path = str(tmp_path / "view")
-    S.join_view_apply_batch(f0, path, 0, dim, "cust", "cust_id")
-    S.join_view_apply_batch(f1, path, 1, dim, "cust", "cust_id")
-    got = sorted(map(tuple, S.read_join_view(spark, path).collect()))
-    full = f0.unionByName(f1).join(
-        F.broadcast(dim), F.col("cust") == F.col("cust_id"), "left"
-    ).drop("cust_id")
-    want = sorted(map(tuple, full.collect()))
-    assert got == want
-    S.join_view_apply_batch(f1, path, 1, dim, "cust", "cust_id")  # replay
-    assert sorted(map(tuple, S.read_join_view(spark, path).collect())) == want
-
-
-def test_join_view_scd2_as_of_versions_are_stable(spark, tmp_path):
-    """With an SCD2 dim and as_of_col, each fact row is enriched
-    with the version in force at its event time — and a later dim
-    change does NOT alter rows already materialized."""
-    import datetime as dt
-
-    from clinical_data_warehouse_bi_spark import streaming as S
-
-    def d(day):
-        return dt.datetime(2024, 1, day)
-
-    dim_v1 = spark.createDataFrame(
-        [(1, "gold", d(1), None, True)],
-        "cust_id long, tier string, valid_from timestamp,"
-        " valid_to timestamp, is_current boolean",
-    )
-    schema = "fact_id long, cust long, ts timestamp"
-    path = str(tmp_path / "view")
-    b0 = spark.createDataFrame([(0, 1, d(5))], schema)
-    S.join_view_apply_batch(
-        b0, path, 0, dim_v1, "cust", "cust_id", as_of_col="ts"
-    )
-    # the customer is demoted on day 10: a second SCD2 version
-    dim_v2 = spark.createDataFrame(
-        [
-            (1, "gold", d(1), d(10), False),
-            (1, "silver", d(10), None, True),
-        ],
-        dim_v1.schema,
-    )
-    b1 = spark.createDataFrame([(1, 1, d(8)), (2, 1, d(12))], schema)
-    S.join_view_apply_batch(
-        b1, path, 1, dim_v2, "cust", "cust_id", as_of_col="ts"
-    )
-    got = {
-        r["fact_id"]: r["tier"]
-        for r in S.read_join_view(spark, path).collect()
-    }
-    # fact 0 (day 5, materialized under v1) stays gold; fact 1
-    # (day 8) is gold by the as-of interval; fact 2 (day 12) silver
-    assert got == {0: "gold", 1: "gold", 2: "silver"}
-
-
-@pytest.mark.slow
-def test_streaming_join_view_end_to_end(spark, tmp_path):
-    from clinical_data_warehouse_bi_spark import streaming as S
-
-    dim = spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"])
-    schema = "fact_id long, fk long"
-    src = str(tmp_path / "src")
-    spark.createDataFrame([(i, 1 + i % 2) for i in range(30)], schema).coalesce(
-        1
-    ).write.mode("append").parquet(src)
-    stream = spark.readStream.schema(schema).parquet(src)
-    path = str(tmp_path / "view")
-    q = S.streaming_join_view(
-        stream, path, dim, "fk", "k", checkpoint_dir=str(tmp_path / "ck")
-    )
-    try:
-        q.processAllAvailable()
-        spark.createDataFrame([(i, 1 + i % 2) for i in range(30, 60)], schema)\
-            .coalesce(1).write.mode("append").parquet(src)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    view = S.read_join_view(spark, path)
-    assert view.count() == 60
-    assert view.filter(F.col("v").isNull()).count() == 0
-
-
-def test_compact_expectations_preserves_totals(spark, tmp_path):
-    from clinical_data_warehouse_bi_spark import streaming as S
-
-    users = spark.createDataFrame([(i,) for i in range(60)], ["uid"])
-    schema = "event_id long, user_id long, event_type string"
-    path = str(tmp_path / "dq")
-    for bid, (lo, hi) in enumerate([(0, 100), (100, 250), (250, 300)]):
-        S.expectations_apply_batch(
-            spark.createDataFrame(_exp_rows(lo, hi), schema),
-            path, bid, _exp_spec(), {"users": users},
-        )
-    before = sorted(map(tuple, S.read_expectation_totals(spark, path).collect()))
-    res = S.compact_expectations(spark, path)
-    assert res["partitions_after"] == 1
-    after = sorted(map(tuple, S.read_expectation_totals(spark, path).collect()))
-    assert after == before
-
-
-@pytest.mark.slow
-def test_compact_join_view_preserves_rows(spark, tmp_path):
-    from clinical_data_warehouse_bi_spark import streaming as S
-
-    dim = spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"])
-    schema = "fact_id long, fk long"
-    path = str(tmp_path / "view")
-    for bid, (lo, hi) in enumerate([(0, 30), (30, 70), (70, 100)]):
-        S.join_view_apply_batch(
-            spark.createDataFrame([(i, 1 + i % 2) for i in range(lo, hi)], schema),
-            path, bid, dim, "fk", "k",
-        )
-    before = sorted(map(tuple, S.read_join_view(spark, path).collect()))
-    res = S.compact_join_view(spark, path, num_files=2)
-    assert res["partitions_after"] == 1
-    after = sorted(map(tuple, S.read_join_view(spark, path).collect()))
-    assert after == before
-    # maintenance continues cleanly after compaction
-    S.join_view_apply_batch(
-        spark.createDataFrame([(i, 1 + i % 2) for i in range(100, 120)], schema),
-        path, 3, dim, "fk", "k",
-    )
-    assert S.read_join_view(spark, path).count() == 120
-
-
-def test_new_sinks_recover_interrupted_compaction(spark, tmp_path):
-    """Mid-swap crash (path renamed away, tmp complete): the next
-    apply/read on BOTH new sinks restores the live directory before
-    touching it — the recover_compacted_dir contract the preagg
-    family already honors."""
-    import os
-
-    from clinical_data_warehouse_bi_spark import streaming as S
-
-    dim = spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"])
-    schema = "fact_id long, fk long"
-    path = str(tmp_path / "view")
-    S.join_view_apply_batch(
-        spark.createDataFrame([(i, 1 + i % 2) for i in range(20)], schema),
-        path, 0, dim, "fk", "k",
-    )
-    want = sorted(map(tuple, S.read_join_view(spark, path).collect()))
-    # simulate the crash window between compaction's two renames
-    os.rename(path, f"{path}.old-compact")
-    assert sorted(map(tuple, S.read_join_view(spark, path).collect())) == want
-    # and a crashed swap followed directly by an apply_batch
-    os.rename(path, f"{path}.old-compact")
-    S.join_view_apply_batch(
-        spark.createDataFrame([(i, 1 + i % 2) for i in range(20, 30)], schema),
-        path, 1, dim, "fk", "k",
-    )
-    assert S.read_join_view(spark, path).count() == 30
-
-    users = spark.createDataFrame([(i,) for i in range(60)], ["uid"])
-    eschema = "event_id long, user_id long, event_type string"
-    dq = str(tmp_path / "dq")
-    S.expectations_apply_batch(
-        spark.createDataFrame(_exp_rows(0, 50), eschema), dq, 0,
-        _exp_spec(), {"users": users},
-    )
-    before = sorted(map(tuple, S.read_expectation_totals(spark, dq).collect()))
-    os.rename(dq, f"{dq}.old-compact")
-    assert (
-        sorted(map(tuple, S.read_expectation_totals(spark, dq).collect()))
-        == before
-    )
-
-
-@pytest.mark.slow
-def test_streaming_ewma_matches_batch_fold(spark, tmp_path):
-    """Two drained micro-batches of per-key metrics produce the same
-    rows (pre-point estimates + flags) as the batch EWMA fold over
-    the full series — the stateful operator carries (ewma, ewd, n)
-    across the batch boundary exactly."""
-    import datetime as dt
-
-    from clinical_data_warehouse_bi_spark import timeseries as TS
-
-    def mk(lo, hi):
-        rows = []
-        for k in (1, 2):
-            for i in range(lo, hi):
-                v = 10.0 + (i % 3) * 0.1 if not (k == 1 and i == 9) else 99.0
-                rows.append((k, dt.datetime(2024, 1, 1) + dt.timedelta(hours=i), v))
-        return rows
-
-    schema = "user_id long, ts timestamp, value double"
-    src = str(tmp_path / "src")
-    spark.createDataFrame(mk(0, 6), schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    stream = spark.readStream.schema(schema).parquet(src)
-    out = str(tmp_path / "out")
-    q = (
-        streaming.streaming_ewma_anomalies(stream)
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        spark.createDataFrame(mk(6, 12), schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    got = {
-        (r["user_id"], r["ts"]): (r["ewma"], r["dev"], r["is_anomaly"])
-        for r in spark.read.parquet(out).collect()
-    }
-    full = spark.createDataFrame(mk(0, 12), schema)
-    want = {
-        (r["user_id"], r["ts"]): (r["ewma"], r["dev"], r["is_anomaly"])
-        for r in TS.ewma_anomalies(full).collect()
-    }
-    assert set(got) == set(want)
-    for kk in want:
-        gw, ww = got[kk], want[kk]
-        assert gw[2] == ww[2], kk
-        for a, b in zip(gw[:2], ww[:2]):
-            assert (a is None and b is None) or abs(a - b) < 1e-9, kk
-    # the planted spike flags in the streamed output
-    assert any(
-        an for (k, _), (_, _, an) in got.items() if k == 1
-    ) and not any(an for (k, _), (_, _, an) in got.items() if k == 2)
-    # unified API: a batch frame degrades to the batch fold
-    batch_same = streaming.streaming_ewma_anomalies(full)
-    assert {
-        (r["user_id"], r["ts"]) for r in batch_same.collect()
-    } == set(want)
-
-
-def test_text_file_drop_ingest_end_to_end(spark, tmp_path):
-    """The full drop-a-file corpus ingest story: .txt files land in a
-    directory, read_text_file_stream turns each into a document
-    (doc_id = xxhash64(path)), and streaming_dedup_ingest keeps the
-    corpus exact-deduped by CONTENT across drops — duplicate files
-    under new names never re-enter."""
-    drop = tmp_path / "dropbox"
-    drop.mkdir()
-    corpus = str(tmp_path / "corpus")
-    (drop / "a.txt").write_text("alpha document body")
-    (drop / "b.txt").write_text("alpha document body")  # dup content
-    (drop / "notes.md").write_text("ignored by glob")
-
-    stream = streaming.read_text_file_stream(spark, str(drop), glob="*.txt")
-    q = streaming.streaming_dedup_ingest(
-        stream, corpus, checkpoint_dir=str(tmp_path / "ck")
-    )
-    try:
-        q.processAllAvailable()
-        assert spark.read.parquet(corpus).count() == 1
-        # second drop: one new doc + one more duplicate under a new name
-        (drop / "c.txt").write_text("bravo body")
-        (drop / "d.txt").write_text("alpha document body")
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    rows = spark.read.parquet(corpus).collect()
-    assert sorted(r["text"] for r in rows) == [
-        "alpha document body", "bravo body",
-    ]
-    # identity is the path hash: stable and distinct per file
-    assert len({r["doc_id"] for r in rows}) == 2
-
-
-def test_sliding_windowed_counts_matches_batch(spark, stream_dir, batch_events):
-    """Sliding (hopping) windows: stream totals equal the batch dual
-    computed from first principles — every event counted once per
-    overlapping window (window / slide = 2 here)."""
-    stream = streaming.read_event_stream(spark, stream_dir)
-    q = streaming.run_to_memory(
-        streaming.windowed_counts(
-            stream, window="2 hours", slide="1 hour", watermark="60 days"
-        ),
-        "slide_counts",
-        output_mode="complete",
-    )
-    _drain(q)
-    got = {
-        (r["window_start"], r["event_type"]): r["n_events"]
-        for r in spark.sql("SELECT * FROM slide_counts").collect()
-    }
-    # batch dual: an event at hour h belongs to the windows starting
-    # at h-1 and h (2h window hopping every 1h)
-    import collections
-
-    want: dict = collections.Counter()
-    for r in batch_events.select(
-        F.date_trunc("hour", "ts").alias("h"), "event_type"
-    ).collect():
-        for back in (0, 1):
-            ws = r["h"] - __import__("datetime").timedelta(hours=back)
-            want[(ws, r["event_type"])] += 1
-    assert got == dict(want)
-    # every event appears in exactly window/slide = 2 windows
-    assert sum(got.values()) == 2 * batch_events.count()
-
-
-@pytest.mark.slow
-def test_streaming_attribution_matches_batch_dual(spark, tmp_path):
-    """Stream==batch duality for last- and first-touch attribution:
-    two drains over a file source equal timeseries.attribution on
-    the union (the streaming_funnel ordering contract)."""
-    schema = "user_id long, event_type string, ts timestamp"
-    from datetime import datetime as dt
-
-    d = lambda i: dt(2024, 3, 1, i)  # noqa: E731
-    batch1 = [
-        (1, "ad", d(1)), (1, "email", d(2)), (1, "purchase", d(3)),
-        (2, "purchase", d(1)),                    # conversion, no touch
-        (3, "ad", d(2)),
-    ]
-    batch2 = [
-        (1, "social", d(4)), (1, "purchase", d(5)),  # cross-batch journey
-        (3, "purchase", d(6)),                       # touch arrived batch 1
-    ]
-    src = str(tmp_path / "events")
-    spark.createDataFrame(batch1, schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-
-    for model in ("last_touch", "first_touch"):
-        stream = spark.readStream.schema(schema).parquet(src + "")
-        out = streaming.streaming_attribution(
-            stream, ["purchase"], model=model
-        )
-        q = streaming.run_to_memory(out, f"attr_{model}", output_mode="append")
-        try:
-            q.processAllAvailable()
-            if model == "last_touch":  # write batch2 once, first loop
-                spark.createDataFrame(batch2, schema).coalesce(1).write.mode(
-                    "append"
-                ).parquet(src)
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        got = sorted(
-            (r["user"], str(r["conversion_ts"]), r["credited_channel"],
-             str(r["touch_ts"]))
-            for r in spark.sql(f"SELECT * FROM attr_{model}").collect()
-        )
-        want_df = streaming.streaming_attribution(  # batch degradation
-            spark.createDataFrame(batch1 + batch2, schema),
-            ["purchase"], model=model,
-        )
-        want = sorted(
-            (r["user"], str(r["conversion_ts"]), r["credited_channel"],
-             str(r["touch_ts"]))
-            for r in want_df.collect()
-        )
-        assert got == want, (model, got, want)
-        # spot semantics: user 1's second conversion credits
-        # last=social / first=ad; user 2 has no touch
-        by_user = {}
-        for u, cts, ch, tts in got:
-            by_user.setdefault(u, []).append(ch)
-        assert by_user[2] == [None]
-        if model == "last_touch":
-            assert by_user[1] == ["email", "social"]
-        else:
-            assert by_user[1] == ["ad", "ad"]
-
-
-@pytest.mark.slow
-def test_streaming_seasonal_residuals_match_batch(spark, tmp_path):
-    """Two-drain duality: streaming same-slot median baselines equal
-    timeseries.seasonal_anomalies' window on the union."""
-    from datetime import datetime as dt
-    from datetime import timedelta
-
-    schema = "k string, ts timestamp, v double"
-    base = dt(2024, 1, 1)
-    rows = []
-    for d in range(42):
-        ts = base + timedelta(days=d)
-        v = 100.0 if ts.weekday() == 0 else 10.0 + (d % 3)
-        rows.append(("k", ts, v))
-    cut = 28
-    src = str(tmp_path / "sevents")
-    spark.createDataFrame(rows[:cut], schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    stream = spark.readStream.schema(schema).parquet(src)
-    out = streaming.streaming_seasonal_residuals(stream, "k", "ts", "v")
-    q = streaming.run_to_memory(out, "seasonal_stream", output_mode="append")
-    try:
-        q.processAllAvailable()
-        spark.createDataFrame(rows[cut:], schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = {
-        str(r["ts"]): (r["baseline"], r["residual"])
-        for r in spark.sql("SELECT * FROM seasonal_stream").collect()
-    }
-    batch = streaming.streaming_seasonal_residuals(  # batch degradation
-        spark.createDataFrame(rows, schema), "k", "ts", "v"
-    )
-    want = {
-        str(r["ts"]): (r["baseline"], r["residual"]) for r in batch.collect()
-    }
-    assert got == want and len(got) == 42
-    # a warm Monday's baseline is the median of prior Mondays = 100
-    warm_mondays = [
-        v for ts, v in got.items()
-        if v[0] is not None and got[ts][1] == 0.0 and v[0] == 100.0
-    ]
-    assert warm_mondays
-
-
-# -------------------------------------------- token-count synopsis
-
-
-@pytest.mark.slow
-def test_token_counts_exactly_once_compaction_and_drift(spark, tmp_path):
-    """The corpus-drift monitor's state machine end to end: batch
-    partials merge exactly; a REPLAYED batch (same batch_id) is a
-    no-op; compaction rolls to one partition without changing the
-    merged relation; and drift-vs-reference off the synopsis equals
-    text.vocabulary_divergence computed from the raw documents."""
-    from clinical_data_warehouse_bi_spark import streaming, text
-
-    syn = str(tmp_path / "tokcounts")
-    b1 = spark.createDataFrame(
-        [(1, "alpha beta beta"), (2, "alpha gamma")],
-        "doc_id long, text string",
-    )
-    b2 = spark.createDataFrame(
-        [(3, "beta delta"), (4, "delta delta epsilon")],
-        "doc_id long, text string",
-    )
-    streaming.token_counts_apply_batch(b1, syn, batch_id=0)
-    streaming.token_counts_apply_batch(b2, syn, batch_id=1)
-    merged = {
-        r["token"]: r["n"]
-        for r in streaming.read_token_counts(spark, syn).collect()
-    }
-    want = {"alpha": 2, "beta": 3, "gamma": 1, "delta": 3, "epsilon": 1}
-    assert merged == want
-    # replay: same batch_id overwrites its own partition — no double count
-    streaming.token_counts_apply_batch(b2, syn, batch_id=1)
-    again = {
-        r["token"]: r["n"]
-        for r in streaming.read_token_counts(spark, syn).collect()
-    }
-    assert again == want
-    # compaction: one base partition, identical merged relation
-    stats = streaming.compact_token_counts(spark, syn)
-    assert stats["partitions_after"] == 1
-    after = {
-        r["token"]: r["n"]
-        for r in streaming.read_token_counts(spark, syn).collect()
-    }
-    assert after == want
-    # appends keep working post-compaction
-    streaming.token_counts_apply_batch(
-        spark.createDataFrame([(5, "zeta")], "doc_id long, text string"),
-        syn,
-        batch_id=2,
-    )
-    assert streaming.read_token_counts(spark, syn).count() == 6
-    # drift off the synopsis == tokenize-path divergence on raw docs
-    ref_docs = spark.createDataFrame(
-        [(9, "alpha beta"), (10, "beta zeta zeta")],
-        "doc_id long, text string",
-    )
-    ref_counts = (
-        ref_docs.select(F.explode(text.tokens("text")).alias("token"))
-        .groupBy("token")
-        .agg(F.count("*").alias("n"))
-    )
-    via_synopsis = {
-        r["token"]: (round(r["p_a"], 12), round(r["p_b"], 12),
-                     round(r["js_contrib"], 12))
-        for r in streaming.corpus_drift_vs_reference(
-            spark, syn, ref_counts, top_k=100
-        ).collect()
-    }
-    live_docs = b1.unionByName(b2).unionByName(
-        spark.createDataFrame([(5, "zeta")], "doc_id long, text string")
-    )
-    via_tokenize = {
-        r["token"]: (round(r["p_a"], 12), round(r["p_b"], 12),
-                     round(r["js_contrib"], 12))
-        for r in text.vocabulary_divergence(
-            live_docs, ref_docs, top_k=100
-        ).collect()
-    }
-    assert via_synopsis == via_tokenize and len(via_synopsis) > 3
-
-
-def test_streaming_token_counts_two_drain_duality(spark, tmp_path):
-    """Stream==batch duality through the real foreachBatch sink: two
-    file drops drained through streaming_token_counts yield the same
-    merged counts as one batch tokenization of the union."""
-    import json
-    import os
-
-    from clinical_data_warehouse_bi_spark import streaming, text
-
-    src = str(tmp_path / "src"); os.makedirs(src)
-    syn = str(tmp_path / "syn")
-    ckpt = str(tmp_path / "ckpt")
-    rows1 = [(1, "red green green"), (2, "red blue")]
-    rows2 = [(3, "blue blue yellow")]
-
-    def drop(rows, name):
-        with open(os.path.join(src, name), "w") as f:
-            for i, t in rows:
-                f.write(json.dumps({"doc_id": i, "text": t}) + "\n")
-
-    schema = "doc_id long, text string"
-    drop(rows1, "a.json")
-    stream = spark.readStream.schema(schema).json(src)
-    q = streaming.streaming_token_counts(stream, syn, checkpoint_dir=ckpt)
-    try:
-        q.processAllAvailable()
-        drop(rows2, "b.json")
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = {
-        r["token"]: r["n"]
-        for r in streaming.read_token_counts(spark, syn).collect()
-    }
-    union = spark.createDataFrame(rows1 + rows2, schema)
-    want = {
-        r["token"]: r["n"]
-        for r in union.select(
-            F.explode(text.tokens("text")).alias("token")
-        ).groupBy("token").agg(F.count("*").alias("n")).collect()
-    }
-    assert got == want and len(got) == 4
-
-
-@pytest.mark.slow
-def test_streaming_graph_ingest_extends_index(spark, tmp_path):
-    """Two drained micro-batches of embeddings land in the persisted
-    graph-ANN index exactly once (a re-delivered file adds nothing —
-    the append's id anti-join), only touched shards rebuild, and the
-    ingested vectors are immediately searchable via beam search."""
-    import numpy as np
-
-    from clinical_data_warehouse_bi_spark import hnsw
-
-    rng = np.random.RandomState(47)
-    k, dims = 4, 16
-    centers = rng.normal(0, 10.0, size=(k, dims))
-
-    def mk(lo, hi):
-        return [
-            (i, [float(x) for x in centers[i % k] + rng.normal(0, 1.0, dims)])
-            for i in range(lo, hi)
-        ]
-
-    schema = "vec_id long, embedding array<float>"
-    path = str(tmp_path / "gidx")
-    hnsw.build_hnsw_index(
-        spark.createDataFrame(mk(0, 160), schema), path, n_shards=4, m=8
-    )
-    src = str(tmp_path / "gvec_src")
-    spark.createDataFrame(mk(160, 200), schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    stream = spark.readStream.schema(schema).parquet(src)
-    q = streaming.streaming_graph_ingest(
-        stream, path, checkpoint_dir=str(tmp_path / "gck")
-    )
-    try:
-        q.processAllAvailable()
-        b2 = spark.createDataFrame(mk(200, 240), schema)
-        b2.coalesce(1).write.mode("append").parquet(src)
-        # re-deliver batch 2's rows in a THIRD file (at-least-once
-        # source): the id anti-join must drop all of them
-        b2.coalesce(1).write.mode("append").parquet(src)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    rows = spark.read.parquet(path).select("vec_id").collect()
-    assert sorted(r.vec_id for r in rows) == list(range(240))
-    # a streamed-in vector is findable by the served search
-    probe = mk(239, 240)[0][1]
-    got = hnsw.hnsw_index_search(spark, path, [(0, probe)], 5).collect()
-    assert any(r["vec_id"] == 239 for r in got), got
-
-
-@pytest.mark.slow
-def test_streaming_routed_graph_ingest(spark, tmp_path):
-    """The streaming twin of routed_index_append (round-14 verdict
-    item 1): streaming embedding ingest into a ROUTED graph index
-    dispatches through hnsw_index_append to the centroid-assignment
-    path, so streamed vectors land in the k-means cell the router
-    probes (NOT an id-hash shard the router never reads), re-delivered
-    rows no-op via the cell-scoped anti-join, and a streamed-in
-    vector is immediately findable by routed search probing its
-    rank-1 cell alone."""
-    import numpy as np
-
-    from clinical_data_warehouse_bi_spark import hnsw
-
-    rng = np.random.RandomState(53)
-    k, dims = 4, 16
-    centers = rng.normal(0, 10.0, size=(k, dims))
-
-    def mk(lo, hi):
-        return [
-            (i, [float(x) for x in centers[i % k] + rng.normal(0, 1.0, dims)])
-            for i in range(lo, hi)
-        ]
-
-    schema = "vec_id long, embedding array<float>"
-    path = str(tmp_path / "routed_gidx")
-    hnsw.build_routed_hnsw_index(
-        spark.createDataFrame(mk(0, 160), schema), path, n_clusters=4, m=8
-    )
-    src = str(tmp_path / "routed_gvec_src")
-    b1 = spark.createDataFrame(mk(160, 200), schema)
-    b1.coalesce(1).write.mode("append").parquet(src)
-    # re-deliver batch 1 in a second file (at-least-once source)
-    b1.coalesce(1).write.mode("append").parquet(src)
-    stream = spark.readStream.schema(schema).parquet(src)
-    q = streaming.streaming_graph_ingest(
-        stream, path, checkpoint_dir=str(tmp_path / "routed_gck")
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    rows = spark.read.parquet(path).select("vec_id").collect()
-    assert sorted(r.vec_id for r in rows) == list(range(200))
-    # the streamed vector sits in its centroid cell: routed search on
-    # its own (persisted) embedding probing ONE cell must return it as
-    # the exact top hit (an id-hash placement would never be probed)
-    probe = [
-        float(v)
-        for v in spark.read.parquet(path)
-        .where("vec_id = 199").collect()[0]["embedding"]
-    ]
-    got = hnsw.hnsw_routed_search(
-        spark, path, [(0, probe)], 5, probe_clusters=1
-    ).collect()
-    top = max(got, key=lambda r: (r["score"], -r["vec_id"]))
-    assert (top["vec_id"], top["score"]) == (199, 1.0), got
-
-
-@pytest.mark.slow
-def test_streaming_suffix_ingest_and_decontaminate(spark, tmp_path):
-    """Two-drain e2e over the exact-substring decontamination pair:
-    streamed reference docs fold into the persisted digest index
-    exactly once (a re-delivered file adds nothing — the
-    touched-bucket anti-join), and the per-batch decontamination
-    report flags exactly the probe docs carrying reference passages,
-    with a replayed batch overwriting its own batch_id partition
-    rather than duplicating it."""
-    import numpy as np
-
-    from clinical_data_warehouse_bi_spark import suffix
-
-    rng = np.random.RandomState(83)
-    words = [f"w{j}" for j in range(300)]
-
-    def doc(n):
-        return " ".join(words[rng.randint(300)] for _ in range(n))
-
-    L = 5
-    schema = "doc_id long, text string"
-    ref0 = [(i, doc(60)) for i in range(4)]
-    idx = str(tmp_path / "sfx_idx")
-    suffix.build_suffix_index(
-        spark.createDataFrame(ref0, schema), idx, min_tokens=L, n_buckets=8
-    )
-
-    # --- ingest stream: two more reference docs, one file re-delivered
-    ref_extra = [(10, doc(50)), (11, doc(50))]
-    src = str(tmp_path / "sfx_src")
-    spark.createDataFrame(ref_extra, schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    stream = spark.readStream.schema(schema).parquet(src)
-    q = streaming.streaming_suffix_ingest(
-        stream, idx, checkpoint_dir=str(tmp_path / "sfx_ck")
-    )
-    try:
-        q.processAllAvailable()
-        n_after_first = spark.read.parquet(idx).count()
-        # re-deliver the same rows in a second file: anti-join no-op
-        spark.createDataFrame(ref_extra, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    assert spark.read.parquet(idx).count() == n_after_first
-
-    # --- decontamination stream: probe docs, one carrying a passage
-    # from the ORIGINAL reference and one from the STREAMED-IN batch
-    passage0 = ref0[1][1].split()[3 : 3 + L + 2]
-    passage1 = ref_extra[0][1].split()[0 : L + 1]
-    probes = [
-        (100, " ".join(passage0) + " " + doc(30)),
-        (101, doc(30) + " " + " ".join(passage1)),
-        (102, doc(40)),  # clean
-    ]
-    psrc = str(tmp_path / "probe_src")
-    spark.createDataFrame(probes, schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(psrc)
-    out = str(tmp_path / "flags")
-    pstream = spark.readStream.schema(schema).parquet(psrc)
-    q2 = streaming.streaming_decontaminate(
-        pstream, idx, out, checkpoint_dir=str(tmp_path / "probe_ck")
-    )
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
-    flagged = {
-        r["doc_id"]: (r["span_start"], r["span_end"])
-        for r in spark.read.parquet(out).collect()
-    }
-    assert set(flagged) == {100, 101}
-    assert flagged[100][0] == 1  # the planted prefix passage
-
-
-@pytest.mark.slow
-def test_streaming_semantic_ingest_matches_batch_rebuild(spark, tmp_path):
-    """Two file-source drains of embedding batches; the persisted
-    semantic-dedup index (read DISTINCT) must equal the from-scratch
-    similarity.semantic_dedup verdicts over everything ingested —
-    including a cross-drain near-dup (drain-2 vector near a drain-1
-    member) resolved against the index, not a re-scan."""
-    import math
-
-    from clinical_data_warehouse_bi_spark import similarity
-
-    cents = [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0, 0.0])]
-    a = math.radians(17)
-    d1 = [
-        (1, [1.0, 0.0, 0.0, 0.0]),
-        (2, [math.cos(a), 0.0, math.sin(a), 0.0]),  # near 1 -> dropped
-        (3, [0.0, 0.9, 0.0, -0.44]),
-    ]
-    d2 = [
-        (10, [math.cos(2 * a), 0.0, math.sin(2 * a), 0.0]),  # near 2 only
-        (11, [0.1, 0.85, -0.5, 0.1]),
-    ]
-    schema = "vec_id long, embedding array<double>"
-    src = str(tmp_path / "vec_stream")
-    index_path = str(tmp_path / "sem_index")
-    spark.createDataFrame(d1, schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    stream = spark.readStream.schema(schema).parquet(src)
-    q = streaming.streaming_semantic_ingest(
-        stream, index_path, cents, checkpoint_dir=str(tmp_path / "ck")
-    )
-    try:
-        q.processAllAvailable()
-        spark.createDataFrame(d2, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = {
-        (r.vec_id, r.cluster, r.keep)
-        for r in spark.read.parquet(index_path)
-        .select("vec_id", "cluster", "keep")
-        .distinct()
-        .collect()
-    }
-    alldf = spark.createDataFrame(d1 + d2, schema)
-    want = {
-        (r.vec_id, r.cluster, r.keep)
-        for r in similarity.semantic_dedup(alldf, cents).collect()
-    }
-    assert got == want
-    # the cross-drain chain actually exercised the index probe
-    flags = {v: k for v, _c, k in got}
-    assert flags[2] is False and flags[10] is False
-
-
-@pytest.mark.slow
-def test_semantic_ingest_replay_after_append_is_verdict_stable(spark, tmp_path):
-    """Worst replay window: crash AFTER the index append but before
-    the offset commit. The replayed batch's own rows are already in
-    the index — without the anti-join guard every batch vector would
-    match itself (cos 1.0) and flip to keep=False. Replay must
-    append only duplicate ROWS of the SAME verdicts."""
-    import math
-
-    from clinical_data_warehouse_bi_spark import streaming as S
-
-    cents = [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0, 0.0])]
-    a = math.radians(17)
-    schema = "vec_id long, embedding array<double>"
-    b1 = spark.createDataFrame(
-        [(1, [1.0, 0.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0, 0.0])], schema
-    )
-    b2 = spark.createDataFrame(
-        [(10, [math.cos(a), 0.0, math.sin(a), 0.0]), (11, [0.3, 0.8, 0.4, 0.2])],
-        schema,
-    )
-    index_path = str(tmp_path / "sem_index")
-    S.semantic_ingest_batch(b1, index_path, cents)
-    S.semantic_ingest_batch(b2, index_path, cents)
-    first = {
-        (r.vec_id, r.cluster, r.keep)
-        for r in spark.read.parquet(index_path)
-        .select("vec_id", "cluster", "keep")
-        .collect()
-    }
-    n_rows_first = spark.read.parquet(index_path).count()
-    S.semantic_ingest_batch(b2, index_path, cents)  # replay verbatim
-    after = {
-        (r.vec_id, r.cluster, r.keep)
-        for r in spark.read.parquet(index_path)
-        .select("vec_id", "cluster", "keep")
-        .collect()
-    }
-    assert after == first  # no verdict flips, no inventions
-    assert spark.read.parquet(index_path).count() > n_rows_first
-    # 10 is near 1 -> dropped; replay did not resurrect or re-drop it
-    flags = {v: k for v, _c, k in after}
-    assert flags[10] is False and flags[11] is True
