@@ -35,28 +35,26 @@ Layout:
                  of stay and mortality
   layout.py      Z-order (Morton) clustered writes
   percentiles.py distributed exact percentiles (tested-only: winsorize)
-  timeseries.py  resample/fill, rolling aggregates, attribution;
-                 tested-only: EWMA and seasonal anomalies
+  timeseries.py  resample/fill, rolling aggregates, attribution
   funnel.py      ordered-sequence funnels
   text.py        tokenize / shingle / MinHash / LSH, chunk and
                  boilerplate dedup, sampling, top n-grams, TF-IDF
+                 (tested-only: dedup_lines)
   suffix.py      exact-substring dedup and the persisted digest index
   corpus.py      the corpus release pipeline (build_corpus_release)
   scrub.py       repetition metrics, contamination, DP release;
                  tested-only: PII scrub, pseudonyms, k-anonymity
   bpe.py         BPE encoding under a merge table (tested-only: training)
-  unigram.py     tested-only: unigram-LM tokenizer training and encoding
   classifier.py  tested-only: logistic-regression quality classifier
   lm.py          n-gram language-model perplexity
   graph.py       connected components for dedup clusters
-                 (tested-only: pagerank)
-  similarity.py  Arrow-batched numpy top-k, sign-LSH, IVF and IVF-PQ;
-                 tested-only: semantic dedup, PCA, hard negatives
+  similarity.py  Arrow-batched numpy top-k, sign-LSH, IVF and IVF-PQ
+                 (tested-only: covariance, Fréchet drift)
   hnsw.py        sharded HNSW-class graph ANN
   retrieval.py   BM25 top-k and its persisted index
-  multimodal.py  binary-column (image/audio) plumbing via mapInPandas
-  streaming.py   streaming event dedup (dedup_events); tested-only:
-                 pre-agg and census synopses
+  multimodal.py  binary-column (image/audio) plumbing via mapInPandas,
+                 pHash image near-dup
+  streaming.py   streaming event dedup (dedup_events)
   registry.py    query registry and gate-slot rotation
   queries/       registered (query, oracle-SQL) pairs
 """

@@ -7,7 +7,7 @@ high-probability tail). The heuristics in q_quality_score give the
 FEATURES; this module learns the WEIGHTS from a labeled sample and
 scores the full corpus JVM-side.
 
-Scale contract (the covariance_stats idiom, similarity.py:801):
+Scale contract:
 
 * ``train_logreg`` — per iteration, every Arrow batch reduces to ONE
   partial row (count, gradient vector, log-loss sum); the driver sums

@@ -51,8 +51,6 @@ def build_corpus_release(
     decontaminate_index: str | None = None,
     substring_dedup: bool = False,
     substring_min_tokens: int = 12,
-    substring_winnow_w: int = 8,
-    alpha: float = 0.7,
     budget_frac: float = 0.6,
     chunk_tokens: int = 64,
     overlap_tokens: int = 8,
@@ -80,17 +78,18 @@ def build_corpus_release(
     Defaults (both off) reproduce the round-11 pipeline_corpus
     composition unchanged.
 
-    ``substring_winnow_w``: the ExactSubstr stage's winnowing window
-    — w=8 is the documented SCALE default (round-16 verdict item 5):
-    it cuts the window-digest exchange 8-fold and is the measured
-    100 TB configuration (2.33x vs DuckDB at the 1024x planted
-    corpus and improving with volume, vs the exact w=1 form's
-    terminal ~3.3x plateau — BASELINE.md). The guarantee trade:
-    winnowing certifies removal only for duplicated spans of at
-    least ``substring_min_tokens + w - 1`` tokens (Schleimer et al.'s
-    winnowing bound); shorter duplicated spans MAY survive. Pass
-    winnow_w=1 for the exact >= min_tokens guarantee at the
-    enumeration cost (the q_substring_dedup gate form).
+    The ExactSubstr stage winnows with window w=8, the SCALE
+    configuration (round-16 verdict item 5): it cuts the
+    window-digest exchange 8-fold and is the measured 100 TB
+    configuration (2.33x vs DuckDB at the 1024x planted corpus and
+    improving with volume, vs the exact w=1 form's terminal ~3.3x
+    plateau — BASELINE.md). The guarantee trade: winnowing certifies
+    removal only for duplicated spans of at least
+    ``substring_min_tokens + 7`` tokens (Schleimer et al.'s winnowing
+    bound, L + w - 1); shorter duplicated spans MAY survive. The
+    exact >= min_tokens guarantee is suffix.strip_duplicate_spans
+    with winnow_w=1, at the enumeration cost (the q_substring_dedup
+    gate form). The source mix uses temperature alpha=0.7.
 
     ``materialize`` (round-16 optimization): checkpoint the reused
     stage outputs (``cleaned`` — consumed by the dedup window AND the
@@ -182,7 +181,7 @@ def build_corpus_release(
         stripped = strip_duplicate_spans(
             release,
             min_tokens=substring_min_tokens,
-            winnow_w=substring_winnow_w,
+            winnow_w=8,
             keep_first=True,
         )
         release = stripped.join(
@@ -197,7 +196,7 @@ def build_corpus_release(
         release = release.localCheckpoint(eager=False)
     n_release = release.count()
     mixed = temperature_mix_keyed(
-        release, "source", "doc_id", alpha=alpha,
+        release, "source", "doc_id", alpha=0.7,
         budget=n_release * budget_frac,
     )
     chunks = chunk_text(

@@ -49,7 +49,6 @@ def connected_components(
     max_iter: int = 25,
     algorithm: str = "auto",
     stats: dict | None = None,
-    materialize_edges: bool = True,
 ) -> DataFrame:
     """(id, component): each vertex labeled with the smallest vertex
     id reachable from it over the undirected ``edges``.
@@ -81,15 +80,14 @@ def connected_components(
         .unionByName(edges.select(F.col(dst).alias("s"), F.col(src).alias("d")))
         .distinct()
     )
-    if materialize_edges:
-        # one materialization of the symmetric edge list (round-16):
-        # every propagation round joins sym, so an un-materialized sym
-        # recomputes the caller's whole pair-generation subtree (for
-        # q_dedup_clusters: the full MinHash + LSH banding + candidate
-        # join) once PER ROUND. Lazy — the eager labels checkpoint
-        # below is the action that pays for it. Edge-scale state, the
-        # same footprint _star_components already materializes.
-        sym = sym.localCheckpoint(eager=False)
+    # one materialization of the symmetric edge list (round-16):
+    # every propagation round joins sym, so an un-materialized sym
+    # recomputes the caller's whole pair-generation subtree (for
+    # q_dedup_clusters: the full MinHash + LSH banding + candidate
+    # join) once PER ROUND. Lazy — the eager labels checkpoint
+    # below is the action that pays for it. Edge-scale state, the
+    # same footprint _star_components already materializes.
+    sym = sym.localCheckpoint(eager=False)
     base = sym.select(F.col("s").alias("id"))
     if vertices is not None:
         base = base.unionByName(vertices.select(F.col(vertex_col).alias("id")))
@@ -236,138 +234,3 @@ def _star_components(
         "id", F.col("id").alias("component")
     )
     return labeled.unionByName(singles)
-
-
-def pagerank(
-    edges: DataFrame,
-    damping: float = 0.85,
-    max_iter: int = 30,
-    tol: float = 1e-6,
-    src: str = "src",
-    dst: str = "dst",
-    vertices: DataFrame | None = None,
-    vertex_col: str = "id",
-    stats: dict | None = None,
-    materialize_edges: bool = True,
-) -> DataFrame:
-    """(id, rank): PageRank over the directed ``edges`` (Brin &
-    Page 1998) — the link-graph quality weight a web-scale corpus
-    pipeline ranks crawl sources with (the public CommonCrawl
-    practice: centrality over the host graph selects what to keep).
-
-    Semantics: standard damped power iteration with dangling-node
-    handling — a vertex with no out-edges redistributes its rank
-    uniformly (the stochastic-matrix completion), so ranks sum to 1
-    every iteration. ``vertices`` adds isolated ids (they both
-    receive the teleport share and act as dangling mass).
-
-    Scale shape (the connected_components discipline):
-    - per iteration: three bounded keyed exchanges — edges join
-      ranks on the source id, contribution groupBy on the
-      destination, and the update join back on vertex id. Nothing
-      is ever all-pairs; hub skew is AQE-split.
-    - ONE action per iteration: the convergence delta AND the next
-      round's dangling mass are aggregated by the same job that
-      materializes the lazy localCheckpoint — the dangling scalar
-      rides one iteration behind by construction, never costing its
-      own job.
-    - lineage truncated every iteration (localCheckpoint), the
-      iterative-algorithm idiom.
-
-    Convergence: stops when sum(|r_t - r_{t-1}|) < tol; at
-    ``max_iter`` it returns the current ranks with
-    stats['converged']=False rather than raising — unlike
-    min-label propagation there is no exact fixpoint to insist on.
-    """
-    if not 0.0 < damping < 1.0:
-        raise ValueError("damping must be in (0, 1)")
-    e = edges.select(
-        F.col(src).alias("s"), F.col(dst).alias("d")
-    ).filter(F.col(src).isNotNull() & F.col(dst).isNotNull())
-    # materialize the edge list once (round-16, the
-    # connected_components discipline): every power-iteration round
-    # joins e, so an expensive caller-side edge subtree would
-    # recompute per round; the eager verts checkpoint below pays it.
-    # ``materialize_edges=False`` opts out for callers whose edges
-    # are a plain scan (round-16 advice: symmetry with
-    # connected_components' flag — a bare scan pays an extra
-    # edge-scale materialization for nothing)
-    if materialize_edges:
-        e = e.localCheckpoint(eager=False)
-
-    base = e.select(F.col("s").alias("id")).unionByName(
-        e.select(F.col("d").alias("id"))
-    )
-    if vertices is not None:
-        base = base.unionByName(vertices.select(F.col(vertex_col).alias("id")))
-    degs = e.groupBy(F.col("s").alias("id")).agg(
-        F.count(F.lit(1)).alias("out_deg")
-    )
-    verts = (
-        base.distinct()
-        .join(degs, "id", "left")
-        .select("id", F.coalesce("out_deg", F.lit(0)).alias("out_deg"))
-        .localCheckpoint(eager=True)
-    )
-    setup = verts.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count_if(F.col("out_deg") == 0).alias("n_dangling"),
-    ).first()
-    n, n_dangling = setup["n"], setup["n_dangling"]
-    if n == 0:
-        return verts.select("id", F.lit(0.0).alias("rank"))
-
-    ranks = verts.withColumn("rank", F.lit(1.0 / n))
-    dangling_mass = n_dangling / n
-    converged = False
-    rounds = 0
-    for _ in range(max_iter):
-        rounds += 1
-        contrib = (
-            e.join(ranks, e["s"] == ranks["id"])
-            .select(
-                F.col("d").alias("cid"),
-                (F.col("rank") / F.col("out_deg")).alias("c"),
-            )
-            .groupBy("cid")
-            .agg(F.sum("c").alias("contrib"))
-        )
-        updated = (
-            ranks.join(contrib, ranks["id"] == contrib["cid"], "left")
-            .select(
-                "id",
-                "out_deg",
-                (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("contrib"), F.lit(0.0))
-                        + F.lit(dangling_mass / n)
-                    )
-                ).alias("rank"),
-                F.abs(
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("contrib"), F.lit(0.0))
-                        + F.lit(dangling_mass / n)
-                    )
-                    - F.col("rank")
-                ).alias("delta"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        row = updated.agg(
-            F.sum("delta").alias("delta"),
-            F.coalesce(
-                F.sum(F.when(F.col("out_deg") == 0, F.col("rank"))), F.lit(0.0)
-            ).alias("dangling"),
-        ).first()
-        ranks = updated.drop("delta")
-        dangling_mass = row["dangling"]
-        if row["delta"] < tol:
-            converged = True
-            break
-    if stats is not None:
-        stats.update(iterations=rounds, converged=converged)
-    return ranks.select("id", "rank")

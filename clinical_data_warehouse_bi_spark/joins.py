@@ -294,7 +294,7 @@ _SIZE_GATE_MEMO: dict[tuple, bool] = {}
 
 
 def size_gated_broadcast(
-    small: DataFrame, max_rows: int, *, memoize: bool = True
+    small: DataFrame, max_rows: int
 ) -> tuple[DataFrame, bool]:
     """Broadcast ``small`` only while it is actually small —
     otherwise hand it back hinted for a shuffle-hash join, flipping
@@ -313,36 +313,30 @@ def size_gated_broadcast(
     its total outgrows the broadcast budget.
 
     The verdict is MEMOIZED per (plan semantic hash, budget) for the
-    session (``memoize=True`` default): repeated invocations of the
-    same query — the warm-up + timed bench protocol, a dashboard
-    refresh — pay the probe once (measured ~0.3 s per call at
-    sf0.1). The io.read_table-memoization assumption applies: the
-    relations under a plan are immutable test fixtures here; callers
-    whose source mutates under the same plan (e.g. an appended-to
-    directory) must pass ``memoize=False``."""
+    session: repeated invocations of the same query — the warm-up +
+    timed bench protocol, a dashboard refresh — pay the probe once
+    (measured ~0.3 s per call at sf0.1). The io.read_table-memoization
+    assumption applies: the relations under a plan are immutable test
+    fixtures here. A source that mutates under the same plan (e.g. an
+    appended-to directory re-read in one session) must not be gated
+    here: its first-sight verdict would stick and could broadcast a
+    relation that has outgrown the budget."""
     if max_rows < 0:
         raise ValueError("max_rows must be >= 0")
-    if memoize:
-        try:
-            key = (
-                small.sparkSession.sparkContext.applicationId,
-                small.semanticHash(),
-                max_rows,
-            )
-        except Exception:  # noqa: BLE001 — hash unavailable: just probe
-            key = None
-        if key is not None and key in _SIZE_GATE_MEMO:
-            fits = _SIZE_GATE_MEMO[key]
-            return (
-                (F.broadcast(small), True)
-                if fits
-                else (small.hint("shuffle_hash"), False)
-            )
-    else:
+    try:
+        key = (
+            small.sparkSession.sparkContext.applicationId,
+            small.semanticHash(),
+            max_rows,
+        )
+    except Exception:  # noqa: BLE001 — hash unavailable: just probe
         key = None
-    fits = small.count() <= max_rows
-    if key is not None:
-        _SIZE_GATE_MEMO[key] = fits
+    if key is not None and key in _SIZE_GATE_MEMO:
+        fits = _SIZE_GATE_MEMO[key]
+    else:
+        fits = small.count() <= max_rows
+        if key is not None:
+            _SIZE_GATE_MEMO[key] = fits
     if fits:
         return F.broadcast(small), True
     return small.hint("shuffle_hash"), False

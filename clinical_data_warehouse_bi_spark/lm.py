@@ -93,7 +93,6 @@ def perplexity(
     model: tuple[DataFrame, DataFrame, DataFrame] | None = None,
     *,
     model_broadcast_max_rows: int | None = None,
-    memoize_size_gate: bool = True,
 ) -> DataFrame:
     """(id, n_tokens, ppl): per-document bigram perplexity under the
     corpus LM (or a supplied ``model`` trained elsewhere — the
@@ -110,11 +109,9 @@ def perplexity(
     joins flip to the keyed shuffle-hash form (two corpus exchanges
     on (w1, w2) / (w1) — the documented web-scale-vocabulary
     fallback, now in code via joins.size_gated_broadcast). Default
-    is text.VOCAB_BROADCAST_MAX_ROWS. ``memoize_size_gate=False``
-    re-probes the model size per call — required when the scored
-    source grows under an identical plan (appended-to directory
-    re-read in one session), where the memoized 'fits' verdict
-    would freeze at first sight."""
+    is text.VOCAB_BROADCAST_MAX_ROWS. The gate's verdict is memoized
+    per plan, so the scored source must not grow under an identical
+    plan (an appended-to directory re-read in one session)."""
     if model is not None:
         bc, c1, v = model
     else:
@@ -163,9 +160,7 @@ def perplexity(
     # ONE probe decides both model joins: c1 aggregates from bc, so
     # |c1| <= |bc| and bc's count bounds them together (bc is cached
     # on the self-trained path; an external model pays one slim job)
-    bc_side, fits = size_gated_broadcast(
-        bc, model_broadcast_max_rows, memoize=memoize_size_gate
-    )
+    bc_side, fits = size_gated_broadcast(bc, model_broadcast_max_rows)
     c1_side = F.broadcast(c1) if fits else c1.hint("shuffle_hash")
     return (
         bg.join(bc_side, ["w1", "w2"], "left")

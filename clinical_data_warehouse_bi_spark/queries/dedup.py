@@ -772,7 +772,7 @@ def q_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the brute-force window-count definition in DuckDB. The
     100 TB configuration is winnow_w=8 (round-16 verdict item 5),
     which is the DEFAULT in the composed release pipeline
-    (corpus.build_corpus_release substring_winnow_w=8): the w-fold
+    (corpus.build_corpus_release winnows with w=8): the w-fold
     smaller window-digest exchange measured 2.33x vs DuckDB at the
     1024x planted corpus and improves with volume, where this exact
     form plateaus ~3.3x (BASELINE.md). Guarantee trade: winnowing

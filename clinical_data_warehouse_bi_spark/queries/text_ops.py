@@ -748,10 +748,10 @@ def q_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     every document draws a portable md5-uniform and lands in the
     split whose cumulative-fraction interval contains it — stable
     under corpus growth and identical on any cluster layout (two
-    promises Spark's rand() cannot make). The cluster-keyed
-    leakage-safe form (text.cluster_safe_split) composes this with
-    the q_dedup_clusters relation; the per-id form is the
-    oracle-checkable witness.
+    promises Spark's rand() cannot make). Keyed by the
+    q_dedup_clusters label instead of doc_id, the same call gives a
+    leakage-safe split; the per-id form is the oracle-checkable
+    witness.
 
     Scale shape: ONE per-row expression, no shuffle, no RNG state."""
     from clinical_data_warehouse_bi_spark.text import split_assign

@@ -493,8 +493,7 @@ def bm25_index_compact(spark, path: str) -> dict:
     search/append recover an interrupted swap before touching the
     index). Run in the single-writer window between micro-batches,
     after their offsets commit: a batch replayed AFTER compaction
-    removed its directory would re-append (the compact_preagg
-    contract, stated not hidden)."""
+    removed its directory would re-append (stated, not hidden)."""
     import glob
     import json
     import os

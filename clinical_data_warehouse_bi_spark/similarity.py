@@ -1,6 +1,8 @@
 """Similarity-search engine pieces beyond the oracle-checked queries
 (queries/similarity.py): the Arrow-batched numpy path for brute-force
-top-k, a sampled k-means IVF quantizer, and IVF-PQ indexes.
+top-k and pairwise cosine, sign-LSH bands, a sampled k-means IVF
+quantizer, IVF-PQ search with its persisted index, and the
+embedding covariance / Fréchet drift statistics.
 
 Why a second implementation of cosine top-k: the SQL-expression form
 (F.aggregate fold over arrays) is portable and oracle-checkable, but
@@ -606,289 +608,6 @@ def ivf_pq_search(
     )
 
 
-def semantic_dedup(
-    vectors: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """SemDeDup (Abbas et al. 2023, public description): semantic
-    near-duplicate pruning over an embedding table — cluster the
-    embeddings, compute pairwise cosine ONLY within each cluster, and
-    drop every vector that has a higher-priority near-duplicate
-    (cosine >= ``threshold`` to a lower id) in its cluster. The
-    embedding-space complement of the text-hash dedup family: catches
-    paraphrases and re-encodings no n-gram or MinHash machinery can.
-
-    Returns (id, cluster, keep). Deterministic keep rule: a vector is
-    dropped iff some lower-id cluster-mate sits above the threshold —
-    the lowest id of every near-dup group survives (the published
-    method keeps one arbitrary member; lowest-id is its deterministic
-    instance).
-
-    Scale shape: assignment is centroid_rank's broadcast-GEMM Arrow
-    pass (euclidean — the metric the k-means index was built with);
-    the quadratic pairwise stays WITHIN clusters, which is the knob
-    the method itself prescribes (pick k so clusters stay small —
-    cost is sum of cluster_size^2, never corpus^2); the verify is
-    pairwise_cosine's einsum batch. One shuffle on cluster id for the
-    self-join, one aggregation for the keep verdict."""
-    assign = centroid_rank(
-        vectors.select(
-            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
-        ),
-        centroids,
-        max_rank=1,
-        metric="euclidean",
-    ).filter(F.col("rn") == 1)
-    tagged = (
-        vectors.select(
-            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
-        )
-        .join(assign.select("vec_id", "cid"), "vec_id")
-    )
-    a = tagged.select(
-        F.col("vec_id").alias("id_a"),
-        F.col("embedding").alias("va"),
-        F.col("cid").alias("ca"),
-    )
-    b = tagged.select(
-        F.col("vec_id").alias("id_b"),
-        F.col("embedding").alias("vb"),
-        F.col("cid").alias("cb"),
-    )
-    cand = a.join(
-        b, (F.col("ca") == F.col("cb")) & (F.col("id_a") < F.col("id_b"))
-    ).select("id_a", "id_b", "va", "vb")
-    close = pairwise_cosine(cand, ("id_a", "id_b"), ("va", "vb")).filter(
-        F.col("cos") >= threshold
-    )
-    # drop id_b of every close pair (it has a lower-id near-dup)
-    dropped = close.select(F.col("id_b").alias("vec_id")).distinct()
-    return (
-        assign.select("vec_id", F.col("cid").alias("cluster"))
-        .join(dropped.withColumn("__drop", F.lit(True)), "vec_id", "left")
-        .select(
-            F.col("vec_id").alias(id_col),
-            "cluster",
-            F.coalesce(~F.col("__drop"), F.lit(True)).alias("keep"),
-        )
-    )
-
-
-def semdedup_index(
-    vectors: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """The persistable SemDeDup index relation (vec_id, cluster, keep,
-    embedding) for a corpus: semantic_dedup's verdicts joined back
-    with the raw vectors. Build ONCE under a frozen centroid set,
-    persist (io.write_training_shards, or bucketed on ``cluster`` for
-    an exchange-free probe join); incremental batches then probe the
-    stored index (incremental_semantic_dedup) — corpus vectors are
-    never re-read or re-assigned. The lsh_index convention
-    (text.py:299) applied to the embedding-space dedup tier
-    (round-16 verdict item 6).
-
-    DROPPED members stay in the index on purpose: the batch drop
-    rule is 'any lower-id cluster-mate above threshold', and a
-    dropped corpus vector is still a lower-id mate of every future
-    batch vector — pruning them would diverge from the full-rebuild
-    verdicts (chain shape: corpus v dropped for kept u, batch x near
-    v but not u)."""
-    verdicts = semantic_dedup(
-        vectors, centroids, threshold, id_col, vec_col
-    )
-    return verdicts.join(
-        vectors.select(
-            F.col(id_col), F.col(vec_col).alias("embedding")
-        ),
-        id_col,
-    ).select(F.col(id_col).alias("vec_id"), "cluster", "keep", "embedding")
-
-
-def incremental_semantic_dedup(
-    batch: DataFrame,
-    index: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """SemDeDup verdicts for an INCOMING batch without re-scoring the
-    corpus (round-16 verdict item 6 — the index-probe steady state
-    every other dedup tier already has): assign the batch to the
-    FROZEN centroids (one broadcast-GEMM Arrow pass, batch-
-    proportional), then pairwise-verify each batch vector ONLY
-    against (a) the stored members of its cluster and (b) its own
-    lower-id batch cluster-mates. Returns (vec_id, cluster, keep)
-    for the batch rows.
-
-    EXACTLY the full rebuild's verdicts (pinned by
-    tests/test_similarity_engine.py): corpus ids MUST all precede
-    batch ids (any real ingest assigns monotone ids), so 'dropped
-    iff some lower-id cluster-mate is above threshold' (0.95, as in
-    semantic_dedup) decomposes into the two candidate legs above —
-    including near-dups of corpus members that were themselves
-    dropped, which is why the index keeps them (see semdedup_index). Cost: cluster-bounded
-    pairwise over touched clusters only, one shuffle on cluster id,
-    never corpus^2 and never a corpus re-scan."""
-    b = batch.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
-    )
-    assign = centroid_rank(b, centroids, max_rank=1, metric="euclidean").filter(
-        F.col("rn") == 1
-    )
-    tagged = b.join(assign.select("vec_id", "cid"), "vec_id")
-    bx = tagged.select(
-        F.col("vec_id").alias("id_b"),
-        F.col("embedding").alias("vb"),
-        F.col("cid").alias("cb"),
-    )
-    # (a) stored members of the batch rows' clusters (kept AND
-    # dropped — the full-rebuild contract)
-    ix = index.select(
-        F.col("vec_id").alias("id_a"),
-        F.col("embedding").alias("va"),
-        F.col("cluster").alias("ca"),
-    )
-    corpus_cand = ix.join(bx, F.col("ca") == F.col("cb")).select(
-        "id_a", "id_b", "va", "vb"
-    )
-    # (b) within-batch, lower id verifies against higher
-    ax = tagged.select(
-        F.col("vec_id").alias("id_a"),
-        F.col("embedding").alias("va"),
-        F.col("cid").alias("ca"),
-    )
-    batch_cand = ax.join(
-        bx, (F.col("ca") == F.col("cb")) & (F.col("id_a") < F.col("id_b"))
-    ).select("id_a", "id_b", "va", "vb")
-    close = pairwise_cosine(
-        corpus_cand.unionByName(batch_cand), ("id_a", "id_b"), ("va", "vb")
-    ).filter(F.col("cos") >= 0.95)
-    dropped = close.select(F.col("id_b").alias("vec_id")).distinct()
-    return (
-        assign.select("vec_id", F.col("cid").alias("cluster"))
-        .join(dropped.withColumn("__drop", F.lit(True)), "vec_id", "left")
-        .select(
-            F.col("vec_id").alias(id_col),
-            "cluster",
-            F.coalesce(~F.col("__drop"), F.lit(True)).alias("keep"),
-        )
-    )
-
-
-def covariance_stats(vectors: DataFrame, vec_col: str = "embedding") -> dict:
-    """Exact mean vector and covariance matrix of an embedding
-    column, distributed: every Arrow batch reduces to ONE partial row
-    (count n, sum vector d, Gram matrix d*d flattened), the driver
-    sums the per-batch partials and assembles cov = E[xx^T] - mm^T.
-    Driver traffic is O(batches x d^2) — for d=64 that is 32 KB per
-    batch regardless of how many billions of rows each batch covers;
-    the vector table itself never shuffles and never leaves the
-    executors.
-
-    Returns {"n": int, "mean": (d,) float64, "cov": (d, d) float64}."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            mat = np.array(pdf[vec_col].tolist(), dtype=np.float64)  # N x D
-            yield pd.DataFrame({
-                "n": [mat.shape[0]],
-                "s": [mat.sum(axis=0).tolist()],
-                "g": [(mat.T @ mat).ravel().tolist()],
-            })
-
-    parts = vectors.select(vec_col).mapInPandas(
-        op, "n long, s array<double>, g array<double>"
-    ).collect()
-    if not parts:
-        raise ValueError("covariance_stats: empty input")
-    n = sum(r.n for r in parts)
-    s = np.sum([np.asarray(r.s) for r in parts], axis=0)
-    g = np.sum([np.asarray(r.g) for r in parts], axis=0)
-    d = s.shape[0]
-    mean = s / n
-    cov = g.reshape(d, d) / n - np.outer(mean, mean)
-    return {"n": n, "mean": mean, "cov": cov}
-
-
-def pca_model(
-    vectors: DataFrame,
-    vec_col: str = "embedding",
-    k: int = 16,
-    whiten: bool = False,
-    eps: float = 1e-9,
-) -> dict:
-    """PCA (optionally whitening) over an embedding column — the
-    dimensionality-reduction step a vector store runs before IVF/PQ
-    (fewer dims = smaller codes, faster GEMM; whitening equalizes
-    component variances, which PQ's per-subspace codebooks reward).
-    One distributed pass (covariance_stats), then a d x d
-    eigendecomposition on the driver — d is the embedding width, so
-    the driver work is microseconds and independent of corpus size.
-
-    Deterministic: numpy eigh is deterministic for a given matrix,
-    and each component's sign is canonicalized (largest-|coord|
-    entry made positive) so the model is reproducible run-to-run.
-
-    Returns {"mean", "components" (k x d), "explained_var" (k,),
-    "whiten": bool} — pass to pca_project."""
-    st = covariance_stats(vectors, vec_col)
-    vals, vecs = np.linalg.eigh(st["cov"])  # ascending
-    order = np.argsort(vals)[::-1][:k]
-    comp = vecs[:, order].T  # k x d
-    ev = np.maximum(vals[order], 0.0)
-    for i in range(comp.shape[0]):
-        j = np.argmax(np.abs(comp[i]))
-        if comp[i, j] < 0:
-            comp[i] = -comp[i]
-    if whiten:
-        comp = comp / np.sqrt(ev + eps)[:, None]
-    return {
-        "mean": st["mean"],
-        "components": comp,
-        "explained_var": ev,
-        "whiten": whiten,
-    }
-
-
-def pca_project(
-    vectors: DataFrame,
-    model: dict,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    out_col: str = "projected",
-) -> DataFrame:
-    """(id, out_col array<double>): project every vector onto the PCA
-    (or whitening) basis. Pure Arrow-batched map — the (k x d) model
-    rides the closure (serialized once per executor), no shuffle, and
-    the output is ready for the ANN/PQ stack at width k."""
-    mean = np.asarray(model["mean"], dtype=np.float64)
-    comp = np.asarray(model["components"], dtype=np.float64)  # k x d
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            mat = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            proj = (mat - mean) @ comp.T  # N x k
-            yield pd.DataFrame({
-                id_col: pdf[id_col].to_numpy(),
-                out_col: [r.tolist() for r in proj],
-            })
-
-    return vectors.select(id_col, vec_col).mapInPandas(
-        op, f"{id_col} long, {out_col} array<double>"
-    )
-
-
 #: metadata filename inside a persisted IVF-PQ index directory
 INDEX_META = "_index_meta.json"
 
@@ -1070,6 +789,43 @@ def search_ivf_pq_index(
     )
 
 
+def covariance_stats(vectors: DataFrame, vec_col: str = "embedding") -> dict:
+    """Exact mean vector and covariance matrix of an embedding
+    column, distributed: every Arrow batch reduces to ONE partial row
+    (count n, sum vector d, Gram matrix d*d flattened), the driver
+    sums the per-batch partials and assembles cov = E[xx^T] - mm^T.
+    Driver traffic is O(batches x d^2) — for d=64 that is 32 KB per
+    batch regardless of how many billions of rows each batch covers;
+    the vector table itself never shuffles and never leaves the
+    executors.
+
+    Returns {"n": int, "mean": (d,) float64, "cov": (d, d) float64}."""
+
+    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            mat = np.array(pdf[vec_col].tolist(), dtype=np.float64)  # N x D
+            yield pd.DataFrame({
+                "n": [mat.shape[0]],
+                "s": [mat.sum(axis=0).tolist()],
+                "g": [(mat.T @ mat).ravel().tolist()],
+            })
+
+    parts = vectors.select(vec_col).mapInPandas(
+        op, "n long, s array<double>, g array<double>"
+    ).collect()
+    if not parts:
+        raise ValueError("covariance_stats: empty input")
+    n = sum(r.n for r in parts)
+    s = np.sum([np.asarray(r.s) for r in parts], axis=0)
+    g = np.sum([np.asarray(r.g) for r in parts], axis=0)
+    d = s.shape[0]
+    mean = s / n
+    cov = g.reshape(d, d) / n - np.outer(mean, mean)
+    return {"n": n, "mean": mean, "cov": cov}
+
+
 def frechet_distance(
     a: DataFrame,
     b: DataFrame,
@@ -1118,70 +874,3 @@ def _frechet_from_stats(sa: dict, sb: dict, eps: float = 1e-9) -> float:
     wi = np.clip(np.linalg.eigvalsh(inner), 0.0, None)
     tr_sqrt = float(np.sqrt(wi).sum())
     return diff + float(np.trace(ca) + np.trace(cb)) - 2.0 * tr_sqrt
-
-
-def mine_hard_negatives(
-    vectors: DataFrame,
-    labels: DataFrame,
-    anchors: list[tuple[int, list[float]]],
-    k: int = 5,
-    oversample: int = 4,
-    id_col: str = "vec_id",
-    label_col: str = "label",
-) -> DataFrame:
-    """Hard-negative mining for contrastive/embedding training: for
-    each anchor, the ``k`` nearest-by-cosine vectors whose label
-    DIFFERS from the anchor's — the negatives that sit closest to
-    the decision boundary, which is where contrastive pairs earn
-    their gradient (random negatives are trivially separable; the
-    standard in-batch-negatives upgrade, public practice from DPR /
-    sentence-transformers training).
-
-    ``anchors`` follows the cosine_topk_numpy queries convention: a
-    bounded driver-side [(id, vector)] list. Search goes through the
-    same GEMM path with ``k * oversample`` depth so that k survivors
-    remain AFTER the different-label filter (an anchor whose
-    neighborhood is label-pure beyond that depth returns fewer than
-    k — by design, those negatives would not be hard).
-
-    Returns (anchor_id, neg_id, cosine, rank) with rank 1..k per
-    anchor.
-
-    Scale shape: the vector table never shuffles (GEMM partials —
-    the cosine_topk_numpy plan); the label joins run with the TINY
-    candidate relation (<= anchors x k x oversample rows) broadcast
-    against the corpus-sized labels — labels are never broadcast,
-    never collected. The per-anchor re-rank windows over that same
-    tiny relation."""
-    if k <= 0 or oversample <= 0:
-        raise ValueError("k and oversample must be positive")
-    cands = cosine_topk_numpy(vectors, anchors, k * oversample).withColumnRenamed(
-        "rank", "__srank"
-    )
-    # cands: (qid, nid, __srank, cosine) — the search rank carries the
-    # GEMM path's full-precision total order through the label filter
-    # (re-sorting by the 4dp display cosine would reorder near-ties)
-    lab = labels.select(
-        F.col(id_col).alias("__lid"), F.col(label_col).alias("__lab")
-    )
-    anchor_lab = lab.withColumnRenamed("__lab", "__anchor_lab")
-    neigh_lab = lab.withColumnRenamed("__lab", "__neigh_lab")
-    tagged = (
-        F.broadcast(cands)
-        .join(anchor_lab, cands["qid"] == anchor_lab["__lid"])
-        .drop("__lid")
-        .join(neigh_lab, cands["nid"] == neigh_lab["__lid"])
-        .drop("__lid")
-        .filter(F.col("__anchor_lab") != F.col("__neigh_lab"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.asc("__srank"))
-    return (
-        tagged.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= int(k))
-        .select(
-            F.col("qid").alias("anchor_id"),
-            F.col("nid").alias("neg_id"),
-            "cosine",
-            "rank",
-        )
-    )

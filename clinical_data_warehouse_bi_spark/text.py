@@ -159,44 +159,6 @@ def lsh_candidate_pairs(band_sigs: DataFrame) -> DataFrame:
     )
 
 
-def chunk_manifest(packed: DataFrame, ctx: int) -> DataFrame:
-    """Explode a sequence-packing relation (the shape
-    queries/text_ops.py::q_pack_sequences emits: doc_id, shard,
-    n_tokens, tok_offset, first_chunk, last_chunk) into the per-chunk
-    manifest a training data-loader actually consumes: one row per
-    (shard, chunk_id, doc_id) with the token slice [tok_start,
-    tok_end) of the document that lands in that chunk. Every chunk is
-    exactly ``ctx`` tokens except each shard's tail chunk
-    (property-tested).
-
-    Scale shape: sequence() + explode fans each document out to its
-    n_chunks rows — bounded by ceil(n_tokens/ctx), so the explode is
-    proportional to corpus token count / ctx, never quadratic; no
-    shuffle is introduced (chunk ids are already shard-local)."""
-    c = F.lit(ctx)
-    chunk = F.col("chunk_id")
-    lo = F.greatest(chunk * c, F.col("tok_offset"))
-    hi = F.least((chunk + 1) * c, F.col("tok_offset") + F.col("n_tokens"))
-    return (
-        packed.select(
-            "shard",
-            "doc_id",
-            "tok_offset",
-            "n_tokens",
-            F.explode(
-                F.sequence(F.col("first_chunk"), F.col("last_chunk"))
-            ).alias("chunk_id"),
-        )
-        .select(
-            "shard",
-            "chunk_id",
-            "doc_id",
-            (lo - F.col("tok_offset")).alias("tok_start"),
-            (hi - F.col("tok_offset")).alias("tok_end"),
-        )
-    )
-
-
 def chunk_dedup(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -260,65 +222,6 @@ def chunk_dedup(
             .alias("clean_text"),
         )
     )
-
-
-def lsh_index(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """The persistable LSH index relation (doc_id, band_id, band_sig)
-    for a corpus. Build ONCE, write with io.write_training_shards (or
-    write_bucketed_table bucketed on band_sig for an exchange-free
-    probe join); incremental batches then probe the stored index —
-    corpus text is never re-read, re-tokenized, or re-hashed."""
-    return lsh_band_signatures_wide(minhash_wide(docs, id_col, text_col))
-
-
-def incremental_near_dup_pairs(
-    batch: DataFrame,
-    index: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Near-dup candidates for an INCOMING batch without touching the
-    existing corpus: band the batch (work proportional to the batch,
-    not the corpus), then (a) join batch bands against the stored
-    corpus index -> (corpus_id, batch_id) candidates and (b) self-join
-    the batch bands -> within-batch candidates. This is how a corpus
-    that ingests daily actually runs dedup at 100 TB — the full
-    re-band of the union (q_minhash_lsh_pairs' shape) is the
-    from-scratch build, THIS is the steady state.
-
-    Returns distinct (doc_a, doc_b, origin) with origin
-    'corpus-batch' (doc_a from the index) or 'batch' (doc_a < doc_b,
-    both new). Exact-verification stays candidates-only downstream:
-    semi-join candidate ids against the corpus to re-read just those
-    documents.
-
-    Corpus and batch id spaces MUST be disjoint (any real ingest
-    assigns new ids); pair orientation relies on it."""
-    new_bands = lsh_index(batch, id_col, text_col).cache()
-    idx = index.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("band_id").alias("band_id_i"),
-        F.col("band_sig").alias("sig_i"),
-    )
-    nb = new_bands.select(
-        F.col("doc_id").alias("doc_b"), "band_id", F.col("band_sig").alias("sig_b")
-    )
-    corpus_batch = (
-        idx.join(
-            nb,
-            (F.col("band_id_i") == F.col("band_id"))
-            & (F.col("sig_i") == F.col("sig_b")),
-        )
-        .select("doc_a", "doc_b")
-        .distinct()
-        .withColumn("origin", F.lit("corpus-batch"))
-    )
-    batch_batch = lsh_candidate_pairs(new_bands).withColumn(
-        "origin", F.lit("batch")
-    )
-    return corpus_batch.unionByName(batch_batch)
 
 
 def paragraph_dedup(
@@ -673,8 +576,8 @@ def split_assign(
 
     ``by_col`` is the assignment KEY, not just an id: rows sharing a
     value land in the SAME split — pass a cluster/domain/patient
-    column for leakage-safe splitting (cluster_safe_split composes
-    this with the near-dup cluster relation).
+    column (e.g. the graph.connected_components label of the near-dup
+    pairs) for leakage-safe splitting.
 
     Scale shape: one per-row expression, NO shuffle, no RNG state —
     the same (seed, key) produces the same split on any cluster
@@ -714,43 +617,6 @@ def split_assign(
     for n, b in reversed(bounds):
         expr = F.when(u <= F.lit(b), F.lit(n)).otherwise(expr)
     return docs.withColumn(out_col, expr)
-
-
-def cluster_safe_split(
-    docs: DataFrame,
-    clusters: DataFrame,
-    fractions: dict[str, float],
-    seed: str = "split0",
-    id_col: str = "doc_id",
-    cluster_col: str = "cluster_id",
-    out_col: str = "split",
-) -> DataFrame:
-    """Leakage-safe split: assignment happens at the NEAR-DUP CLUSTER
-    level, so two near-duplicate documents can never straddle
-    train/val — the contamination trap a per-document split walks
-    into (a val doc whose near-copy sits in train is a leaked label).
-    ``clusters`` is a (id, cluster id) relation — e.g. the
-    dedup-cluster output of graph.connected_components over LSH/
-    SimHash candidate pairs (the q_dedup_clusters relation);
-    unclustered documents default to their own id (singleton
-    clusters).
-
-    Scale shape: ONE left join against the cluster relation (small
-    side: only documents that HAVE a near-dup need rows — AQE
-    broadcasts it when it fits) and then split_assign's shuffle-free
-    per-row expression on the coalesced key."""
-    c = clusters.select(
-        F.col(id_col).alias("__sid"), F.col(cluster_col).alias("__scl")
-    )
-    joined = docs.join(c, docs[id_col] == F.col("__sid"), "left").drop(
-        "__sid"
-    )
-    keyed = joined.withColumn(
-        "__skey", F.coalesce(F.col("__scl"), F.col(id_col)).cast("string")
-    ).drop("__scl")
-    return split_assign(
-        keyed, fractions, seed=seed, by_col="__skey", out_col=out_col
-    ).drop("__skey")
 
 
 def remove_boilerplate(
@@ -1434,7 +1300,6 @@ def tfidf_keywords(
     text_col: str = "text",
     *,
     vocab_broadcast_max_rows: int = VOCAB_BROADCAST_MAX_ROWS,
-    memoize_size_gate: bool = True,
     count_docs: DataFrame | None = None,
 ) -> DataFrame:
     """Per-document top-``k`` TF-IDF keywords — the classic
@@ -1470,12 +1335,9 @@ def tfidf_keywords(
     1-row broadcast crossJoin onto the vocabulary relation — never
     a driver-side count.
 
-    ``memoize_size_gate=False`` re-probes the vocabulary size on
-    every call: required when ``docs`` reads a source that grows
-    under an identical plan (an appended-to directory re-read in one
-    session) — the memoized 'fits' verdict would otherwise freeze at
-    first sight and broadcast a relation that has outgrown the
-    budget.
+    The size gate's verdict is memoized per plan, so ``docs`` must
+    not read a source that grows under an identical plan (an
+    appended-to directory re-read in one session).
 
     ``count_docs`` (round-17): an alternative relation to count N
     from — MUST hold exactly one row per document of ``docs``.
@@ -1510,9 +1372,7 @@ def tfidf_keywords(
     )
     from clinical_data_warehouse_bi_spark.joins import size_gated_broadcast
 
-    idf_side, _ = size_gated_broadcast(
-        idf, vocab_broadcast_max_rows, memoize=memoize_size_gate
-    )
+    idf_side, _ = size_gated_broadcast(idf, vocab_broadcast_max_rows)
     scored = tf.join(idf_side, "term").select(
         "doc_id",
         "term",

@@ -1,5 +1,6 @@
-"""Time-series regularization: per-key resampling onto a fixed grid
-with gap filling.
+"""Time-series operators: per-key resampling onto a fixed grid with
+gap filling (resample_fill), trailing-window rolling aggregates
+(rolling_aggregate) and first/last-touch attribution (attribution).
 
 The BI question the reference's calendar dimension exists to serve
 (Stage_area.sql builds date rows precisely so sparse facts can be
@@ -7,10 +8,10 @@ reported on a dense axis): observed events are irregular, reports
 want one row per key per bucket, missing buckets filled by policy
 (NULL, zero, or forward-fill of the last observation).
 
-Scale shape: the per-key grid is generated MAP-SIDE from each key's
-own (min, max) span via sequence() — no calendar cross-join of every
-key against a global axis, which at 100 TB multiplies keys x global
-span instead of keys x own span. One key shuffle computes the spans,
+Scale shape of resample_fill: the per-key grid is generated MAP-SIDE
+from each key's own (min, max) span via sequence() — no calendar
+cross-join of every key against a global axis, which at 100 TB
+multiplies keys x global span instead of keys x own span. One key shuffle computes the spans,
 the observed aggregates reuse the same key partitioning, and the
 forward-fill is one window over (key, bucket) — the exchange is
 shared end-to-end.
@@ -106,76 +107,6 @@ def resample_fill(
         F.col("__b").alias("bucket"),
         "n_obs",
         filled.alias("value"),
-    )
-
-
-def ewma_anomalies(
-    obs: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    val_col: str = "value",
-    alpha: float = 0.3,
-    k_sigma: float = 3.0,
-    warmup: int = 3,
-) -> DataFrame:
-    """Per-key exponentially-weighted moving average with residual
-    anomaly flags — the monitoring primitive a metrics pipeline runs
-    over every (key, time, value) stream: a point is anomalous when
-    its deviation from the PRE-POINT forecast exceeds ``k_sigma``
-    times the EW deviation estimate (the standard EWMA control
-    chart). The first ``warmup`` points per key are never flagged
-    (no stable baseline yet).
-
-    Scale shape (funnel_steps' fold idiom): ONE exchange on the key,
-    each key's series folds linearly inside a single parsed
-    aggregate() expression carrying O(1) state (ewma, ewd, n) plus
-    the emitted rows — no self-joins, no per-iteration passes, no
-    recursive SQL. Per-key memory is the key's own series (the same
-    contract as collect_list sessionization); keys are independent
-    so a hot key bounds only its own task.
-
-    Returns (key, ts, value, ewma, dev, is_anomaly) — ewma/dev are
-    the PRE-point estimates the decision used (round-trip
-    reproducible by a driver-side loop; property-tested)."""
-    a = float(alpha)
-    if not (0.0 < a <= 1.0):
-        raise ValueError("alpha must be in (0, 1]")
-    ev = obs.select(
-        F.col(key_col).alias("__k"),
-        F.struct(
-            F.col(ts_col).alias("ts"), F.col(val_col).cast("double").alias("v")
-        ).alias("e"),
-    )
-    arr = ev.groupBy("__k").agg(F.sort_array(F.collect_list("e")).alias("a"))
-    fold = (
-        "aggregate(a,"
-        " named_struct("
-        "   'ewma', cast(0.0 as double), 'ewd', cast(0.0 as double),"
-        "   'n', 0,"
-        "   'out', cast(array() as"
-        "     array<struct<ts:timestamp,v:double,ewma:double,dev:double,an:boolean>>)),"
-        " (st, x) -> named_struct("
-        f"   'ewma', IF(st.n = 0, x.v, {a} * x.v + {1.0 - a} * st.ewma),"
-        f"   'ewd', IF(st.n = 0, 0.0d,"
-        f"             {a} * abs(x.v - st.ewma) + {1.0 - a} * st.ewd),"
-        "   'n', st.n + 1,"
-        "   'out', concat(st.out, array(named_struct("
-        "     'ts', x.ts, 'v', x.v,"
-        "     'ewma', IF(st.n = 0, cast(null as double), st.ewma),"
-        "     'dev', IF(st.n = 0, cast(null as double), st.ewd),"
-        f"    'an', st.n >= {int(warmup)}"
-        f"          AND abs(x.v - st.ewma) > {float(k_sigma)} * st.ewd"
-        "          AND st.ewd > 0.0d)))"
-        " )).out"
-    )
-    flat = arr.select(F.col("__k"), F.explode(F.expr(fold)).alias("r"))
-    return flat.select(
-        F.col("__k").alias(key_col),
-        F.col("r.ts").alias(ts_col),
-        F.col("r.v").alias(val_col),
-        F.col("r.ewma").alias("ewma"),
-        F.col("r.dev").alias("dev"),
-        F.col("r.an").alias("is_anomaly"),
     )
 
 
@@ -339,83 +270,3 @@ def attribution(
             "touch_ts",
         )
     )
-
-
-def seasonal_anomalies(
-    df: DataFrame,
-    key_cols: list[str],
-    ts_col: str,
-    value_col: str,
-    season: str = "dow",
-    baseline_n: int = 4,
-    threshold: float = 3.5,
-) -> DataFrame:
-    """Seasonality-aware anomaly flags: compare each observation to
-    the trailing mean of its OWN seasonal slot (same weekday / same
-    hour), then score residuals with the robust modified z-score —
-    the dashboard rule that catches "this Monday is wrong" without
-    paging on the fact that Mondays always spike (a season-blind
-    EWMA alarms every weekend; the weekday baseline is the classic
-    seasonal-naive forecast).
-
-    ``season``: 'dow' (day-of-week) or 'hour'. Baseline = MEDIAN of
-    the previous ``baseline_n`` observations in the same (key,
-    slot) — median, not mean, because a mean baseline is poisoned
-    by the very anomaly it just flagged and then re-flags the next
-    ``baseline_n`` healthy periods as "low" (observed in testing;
-    the robust baseline echoes nothing). Spark refuses aggregate
-    ``median`` over a window FRAME, so the median is computed
-    exactly from the frame's collect_list (array_sort + middle
-    element(s)) — ``baseline_n`` is a small constant, so the
-    per-row array is bounded. Rows with no history yet get NULL
-    baseline/flag (no cold-start false alarms).
-
-    Scale shape: ONE exchange keyed on (key, slot) for the trailing
-    frame — per-slot state is ``baseline_n`` rows; residual scoring
-    joins the per-key median/MAD of residuals (qa.outlier_report's
-    construction: two grouped percentile aggs over the slim residual
-    relation). No UDF, no self-join.
-
-    Emits: baseline (double), residual (double), modified_z
-    (double), is_anomaly (boolean)."""
-    if season == "dow":
-        slot = F.dayofweek(F.col(ts_col))
-    elif season == "hour":
-        slot = F.hour(F.col(ts_col))
-    else:
-        raise ValueError("season must be 'dow' or 'hour'")
-    if baseline_n <= 0:
-        raise ValueError("baseline_n must be positive")
-
-    w = (
-        Window.partitionBy(*[F.col(k) for k in key_cols], slot)
-        .orderBy(F.unix_micros(F.col(ts_col).cast("timestamp")))
-        .rowsBetween(-baseline_n, -1)
-    )
-    hist = F.array_sort(F.collect_list(F.col(value_col)).over(w))
-    n = F.size(hist)
-    med = F.when(
-        n > 0,
-        (
-            F.element_at(hist, ((n + 1) / 2).cast("int"))
-            + F.element_at(hist, (n / 2 + 1).cast("int"))
-        )
-        / 2.0,
-    )
-    based = df.withColumn("baseline", med).withColumn(
-        "residual", F.col(value_col) - F.col("baseline")
-    )
-    from clinical_data_warehouse_bi_spark.qa import outlier_report
-
-    scored = outlier_report(
-        based.filter(F.col("residual").isNotNull()),
-        "residual",
-        group_cols=key_cols,
-        threshold=threshold,
-    ).withColumnRenamed("is_outlier", "is_anomaly")
-    cold = (
-        based.filter(F.col("residual").isNull())
-        .withColumn("modified_z", F.lit(None).cast("double"))
-        .withColumn("is_anomaly", F.lit(None).cast("boolean"))
-    )
-    return scored.unionByName(cold)

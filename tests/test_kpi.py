@@ -277,62 +277,6 @@ def test_daily_census_rejects_bad_cap():
         kpi.daily_census(None, max_days=0)
 
 
-# ---------------------------------------------- streaming census
-
-
-def test_streaming_census_matches_batch_dual(spark, dims, tmp_path):
-    """Stream==batch duality: census derived from the synopsis over
-    N micro-batches equals kpi.daily_census on the union — including
-    a patient-day RE-OBSERVED across batches (the non-additive case
-    a stored final census could never repair)."""
-    from clinical_data_warehouse_bi_spark import streaming
-
-    prov = dims["prov"]
-    # split the transfers into 3 arrival batches by hash, then
-    # REPLAY a slice of batch 0 inside batch 2 (same patient-days
-    # arriving twice across batches)
-    parts = [
-        prov.filter(F.pmod(F.xxhash64("patient_id"), F.lit(3)) == i)
-        for i in range(3)
-    ]
-    parts[2] = parts[2].unionByName(parts[0].limit(20))
-    path = str(tmp_path / "census_syn")
-    for i, p in enumerate(parts):
-        streaming.census_apply_batch(p, path, i, max_days=60)
-    got = {
-        (r["unit"], str(r["census_date"])): r["census"]
-        for r in streaming.read_census(spark, path).collect()
-    }
-    from clinical_data_warehouse_bi_spark import kpi
-
-    want = {
-        (r["unit"], str(r["census_date"])): r["census"]
-        for r in kpi.daily_census(prov, max_days=60).collect()
-    }
-    assert got == want and len(got) > 0
-
-
-def test_streaming_census_replay_and_compaction(spark, dims, tmp_path):
-    from clinical_data_warehouse_bi_spark import streaming
-
-    prov = dims["prov"]
-    path = str(tmp_path / "census_syn")
-    streaming.census_apply_batch(prov.limit(40), path, 0, max_days=60)
-    streaming.census_apply_batch(prov.limit(80), path, 1, max_days=60)
-    snap = lambda: sorted(  # noqa: E731
-        (tuple(r) for r in streaming.read_census(spark, path).collect()),
-        key=_key,
-    )
-    before = snap()
-    # replay batch 1 (the exactly-once contract)
-    streaming.census_apply_batch(prov.limit(80), path, 1, max_days=60)
-    assert snap() == before
-    # compaction is lossless for distinct-over-keys
-    info = streaming.compact_census(spark, path)
-    assert info["partitions_after"] == 1
-    assert snap() == before
-
-
 def test_daily_census_on_lineitem_matches_duckdb(spark, sf_dir, duck):
     """Round-10 registration candidate pre-staged with its oracle:
     the SAME kpi.daily_census code on driver tables — "active

@@ -12,7 +12,7 @@ import subprocess
 import pytest
 from pyspark.sql import functions as F
 
-from clinical_data_warehouse_bi_spark import streaming
+from clinical_data_warehouse_bi_spark import retrieval
 from clinical_data_warehouse_bi_spark.io import (
     MaintenanceInProgressError,
     compact_parquet_dir,
@@ -21,11 +21,10 @@ from clinical_data_warehouse_bi_spark.io import (
 )
 
 
-def _events(spark, n=20):
-    return spark.range(n).select(
-        F.col("id").alias("admission_id"),
-        (F.col("id") % 3).alias("clinical_concept_id"),
-        F.lit("lab").alias("event_source_type"),
+def _docs(spark, lo, hi):
+    return spark.range(lo, hi).select(
+        F.col("id").alias("doc_id"),
+        F.concat(F.lit("spark join hash "), F.col("id").cast("string")).alias("text"),
     )
 
 
@@ -34,16 +33,17 @@ def test_append_rejected_while_maintenance_live(spark, tmp_path):
     an append landing inside an active compaction window. With the
     lock held by a live process (this one), the appender's
     recover-before-touch raises instead of interleaving."""
-    syn = str(tmp_path / "synopsis")
-    streaming.preagg_apply_batch(_events(spark), syn, batch_id=0)
-    with maintenance_lock(syn):
+    idx = str(tmp_path / "bm25_idx")
+    postings = os.path.join(idx, "postings")
+    retrieval.bm25_index_build(_docs(spark, 0, 10), idx, n_buckets=4)
+    with maintenance_lock(postings):
         with pytest.raises(MaintenanceInProgressError):
-            streaming.preagg_apply_batch(_events(spark), syn, batch_id=1)
+            retrieval.bm25_index_append(_docs(spark, 10, 20), idx, "b1")
         with pytest.raises(MaintenanceInProgressError):
-            recover_compacted_dir(syn)
+            recover_compacted_dir(postings)
     # window closed: the same append now succeeds
-    streaming.preagg_apply_batch(_events(spark), syn, batch_id=1)
-    assert streaming.read_preagg(spark, syn).count() > 0
+    assert retrieval.bm25_index_append(_docs(spark, 10, 20), idx, "b1") is True
+    assert retrieval.bm25_index_search(spark, idx, ["hash"], 100).count() == 20
 
 
 def test_second_maintenance_attempt_rejected(spark, tmp_path):

@@ -197,81 +197,6 @@ def test_extract_features_real_decode_end_to_end(spark):
     assert sum(feats[2]["histogram"]) == wav.size
 
 
-def test_resize_media_shapes_and_determinism(spark, sf_dir):
-    from clinical_data_warehouse_bi_spark.io import read_table
-    from clinical_data_warehouse_bi_spark.multimodal import attach_fake_media, resize_media
-
-    docs = read_table(spark, sf_dir, "documents").limit(50)
-    media = attach_fake_media(docs)
-    resized = resize_media(media, width=8, height=4)
-    rows = resized.collect()
-    assert len(rows) == 50
-    for r in rows:
-        assert len(bytes(r.content)) == 8 * 4
-        assert r.media_meta.width == 8 and r.media_meta.height == 4
-    # deterministic (fake decode is pure)
-    again = {r.doc_id: bytes(r.content) for r in resize_media(media, 8, 4).collect()}
-    assert {r.doc_id: bytes(r.content) for r in rows} == again
-
-
-def test_arrow_batches_bounded_under_skew(spark):
-    """The module docstring's scale claim, measured: with
-    maxRecordsPerBatch set and size-bucket repartitioning, every
-    Arrow batch delivered to Python is bounded in rows AND in bytes
-    (no batch mixes the 100 KB blobs with the 10 B ones, so the row
-    cap is a real memory cap)."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    from clinical_data_warehouse_bi_spark.multimodal import (
-        repartition_by_size_bucket,
-    )
-
-    rows = [(i, b"x" * 10) for i in range(500)]
-    rows += [(1000 + i, b"y" * 100_000) for i in range(8)]
-    media = spark.createDataFrame(rows, "doc_id long, content binary")
-
-    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            sizes = pdf["content"].map(len)
-            yield pd.DataFrame(
-                {
-                    "n_rows": [len(pdf)],
-                    "total_bytes": [int(sizes.sum())],
-                    "min_blob": [int(sizes.min())],
-                    "max_blob": [int(sizes.max())],
-                }
-            )
-
-    cap = 4
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", None)
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(cap))
-    try:
-        stats = repartition_by_size_bucket(media, partitions=8).mapInPandas(
-            probe, "n_rows long, total_bytes long, min_blob long, max_blob long"
-        ).collect()
-    finally:
-        if old is None:
-            spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
-        else:
-            spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-
-    assert stats, "no batches observed"
-    for r in stats:
-        assert r["n_rows"] <= cap  # the row cap is honored per batch
-        # size-bucketing keeps batches homogeneous: power-of-two
-        # buckets mean max/min < 2 within any batch...
-        assert r["max_blob"] < 2 * max(r["min_blob"], 1)
-        # ...so the row cap IS a byte bound: rows x bucket ceiling
-        assert r["total_bytes"] <= cap * r["max_blob"]
-    # and the global worst batch is the big-blob bucket's cap, not
-    # cap x largest blob mixed into every batch
-    assert max(r["total_bytes"] for r in stats) <= cap * 100_000
-
-
 def test_png_sub_filter_vectorized_wide_row():
     """The Sub filter's cumsum vectorization must reconstruct exactly
     on a wide all-Sub image (lane arithmetic wraps mod 256 like the
@@ -311,118 +236,6 @@ def test_png_decode_size_fence():
     )
     with pytest.raises(ValueError, match="PIL branch"):
         multimodal.decode_media(blob, "image/png", real_decode=True)
-
-
-def test_audio_spectrogram_matches_numpy_reference(spark):
-    """audio_spectrogram: sample-for-sample equality with a
-    driver-side numpy reference on real 16-bit WAVs; a pure sine's
-    energy peaks in the right FFT bin; short blobs yield zero
-    frames."""
-    sr, n_fft, hop = 16000, 256, 128
-    t = np.arange(sr // 2) / sr  # 0.5 s
-    sine = (10_000 * np.sin(2 * np.pi * 1000.0 * t)).astype(np.int16)
-    noise = (np.random.default_rng(3).integers(-500, 500, sr // 4)).astype(
-        np.int16
-    )
-    short = np.zeros(10, dtype=np.int16)
-    meta = {
-        "media_type": "audio", "width": 0, "height": 0,
-        "sample_rate": sr, "duration_s": 0.5,
-    }
-    rows = [
-        (1, bytearray(_wav_encode(sine, sr)), meta),
-        (2, bytearray(_wav_encode(noise, sr)), meta),
-        (3, bytearray(_wav_encode(short, sr)), meta),
-    ]
-    media = spark.createDataFrame(
-        rows,
-        "doc_id bigint, content binary, media_meta struct<media_type: string,"
-        " width: int, height: int, sample_rate: int, duration_s: double>",
-    )
-    got = {
-        r["doc_id"]: r
-        for r in multimodal.audio_spectrogram(media, n_fft=n_fft, hop=hop).collect()
-    }
-
-    win = np.hanning(n_fft)
-    for doc_id, samples in ((1, sine), (2, noise)):
-        pcm = samples.astype(np.float64)
-        n_frames = 1 + (pcm.size - n_fft) // hop
-        idx = np.arange(n_fft)[None, :] + hop * np.arange(n_frames)[:, None]
-        want = np.abs(np.fft.rfft(pcm[idx] * win[None, :], axis=1))
-        g = got[doc_id]
-        assert (g["n_frames"], g["n_bins"]) == (n_frames, n_fft // 2 + 1)
-        assert np.allclose(np.array(g["spectrogram"]), want.ravel(), atol=1e-9)
-    # the sine's dominant bin is f * n_fft / sr = 16
-    spec = np.array(got[1]["spectrogram"]).reshape(got[1]["n_frames"], -1)
-    assert int(spec.sum(axis=0)[1:].argmax()) + 1 == round(1000.0 * n_fft / sr)
-    assert got[3]["n_frames"] == 0 and got[3]["spectrogram"] == []
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        multimodal.audio_spectrogram(media, n_fft=1)
-
-
-def test_image_patches_exact_tiles(spark):
-    """image_patches: every tile's pixels equal the numpy slice of
-    the source image; partial edges are cropped; sub-patch images
-    yield no rows."""
-    rng = np.random.default_rng(11)
-    img = rng.integers(0, 256, (10, 13, 3), dtype=np.uint8)  # crops to 8x12
-    tiny = rng.integers(0, 256, (3, 3), dtype=np.uint8)
-    rows = [
-        (1, bytearray(_png_encode(img))),
-        (2, bytearray(_png_encode(tiny))),
-    ]
-    media = spark.createDataFrame(rows, "doc_id bigint, content binary")
-    got = {
-        (r["doc_id"], r["patch_row"], r["patch_col"]): r
-        for r in multimodal.image_patches(media, patch=4).collect()
-    }
-    assert {k[0] for k in got} == {1}
-    assert len(got) == 2 * 3  # 8//4 x 12//4
-    for (_, r, q), row in got.items():
-        want = img[r * 4 : r * 4 + 4, q * 4 : q * 4 + 4, :]
-        assert row["n_channels"] == 3
-        assert np.array_equal(
-            np.array(row["pixels"]).reshape(4, 4, 3), want.astype(np.float64)
-        )
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        multimodal.image_patches(media, patch=0)
-
-
-def test_audio_logmel_matches_numpy_reference(spark):
-    """audio_logmel: filterbank rows sum triangularly and the framed
-    log-mel equals the driver-side numpy composition exactly."""
-    sr, n_fft, hop, n_mels = 16000, 256, 128, 23
-    fb = multimodal.mel_filterbank(n_mels, n_fft, sr)
-    assert fb.shape == (n_mels, n_fft // 2 + 1)
-    assert (fb >= 0).all() and fb.sum() > 0
-    # every filter is unimodal with a peak of at most 1
-    assert fb.max() <= 1.0 + 1e-12
-
-    t = np.arange(sr // 2) / sr
-    sine = (10_000 * np.sin(2 * np.pi * 800.0 * t)).astype(np.int16)
-    media = spark.createDataFrame(
-        [(7, bytearray(_wav_encode(sine, sr)))], "doc_id bigint, content binary"
-    )
-    got = multimodal.audio_logmel(
-        media, n_fft=n_fft, hop=hop, n_mels=n_mels, sample_rate=sr
-    ).first()
-    pcm = sine.astype(np.float64)
-    n_frames = 1 + (pcm.size - n_fft) // hop
-    idx = np.arange(n_fft)[None, :] + hop * np.arange(n_frames)[:, None]
-    power = np.abs(np.fft.rfft(pcm[idx] * np.hanning(n_fft)[None, :], axis=1)) ** 2
-    want = np.log(power @ fb.T + 1e-10)
-    assert (got["n_frames"], got["n_mels"]) == (n_frames, n_mels)
-    assert np.allclose(np.array(got["logmel"]), want.ravel(), atol=1e-9)
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        multimodal.mel_filterbank(0, n_fft, sr)
 
 
 # ---------------------------------------------------------------------------
@@ -557,47 +370,3 @@ def test_q_image_near_dup_registered(spark, sf_dir):
     rows = {tuple(r) for r in out.collect()}
     assert rows and all(h == 0 for *_ab, h in rows)
     assert {tuple(r) for r in q_image_near_dup(spark, sf_dir).collect()} == rows
-
-
-def test_incremental_phash_matches_full_rebuild(spark):
-    """incremental_phash_pairs over a persisted (doc_id, phash) index
-    == the full-rebuild banded pair set over corpus+batch, split by
-    origin — the image tier's index-probe contract (the
-    text.incremental_near_dup_pairs shape)."""
-    rng = np.random.RandomState(5)
-    base = rng.randint(0, 2, 64)
-
-    def mk(flips):
-        v = base.copy()
-        v[flips] ^= 1
-        h = 0
-        for x in v:
-            h = (h << 1) | int(x)
-        return h - (1 << 64) if h >= 1 << 63 else h
-
-    corpus = [(i, mk(rng.choice(64, rng.randint(0, 10), replace=False)))
-              for i in range(12)]
-    batch = [(100 + i, mk(rng.choice(64, rng.randint(0, 10), replace=False)))
-             for i in range(6)]
-    schema = "doc_id long, phash long"
-    cdf = spark.createDataFrame(corpus, schema)
-    bdf = spark.createDataFrame(batch, schema)
-    inc = {
-        (r.doc_a, r.doc_b, r.hamming, r.origin)
-        for r in multimodal.incremental_phash_pairs(bdf, cdf).collect()
-    }
-    full = {
-        (r.doc_a, r.doc_b, r.hamming)
-        for r in multimodal.phash_near_dup_pairs(
-            cdf.unionByName(bdf)
-        ).collect()
-    }
-    want = set()
-    for a, b, h in full:
-        if a < 100 and b < 100:
-            continue  # corpus-internal: resolved at index build time
-        origin = "batch" if a >= 100 and b >= 100 else "corpus-batch"
-        want.add((a, b, h, origin))
-    assert inc == want
-    assert any(o == "corpus-batch" for *_x, o in inc)
-    assert any(o == "batch" for *_x, o in inc)

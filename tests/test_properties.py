@@ -692,37 +692,6 @@ def test_scd2_intervals_partition_history(spark, sf_dir):
             assert a.is_current is False
 
 
-def test_chunk_manifest_covers_every_context(spark, sf_dir):
-    """The exploded chunk manifest must tile each shard's token
-    stream exactly: every chunk holds ctx tokens (tail chunk <= ctx),
-    slices are in-bounds, non-empty, and sum back to each document's
-    token count."""
-    from clinical_data_warehouse_bi_spark.queries.text_ops import (
-        PACK_CTX,
-        q_pack_sequences,
-    )
-    from clinical_data_warehouse_bi_spark.text import chunk_manifest
-
-    packed = q_pack_sequences(spark, sf_dir)
-    rows = chunk_manifest(packed, PACK_CTX).collect()
-    per_chunk: dict[tuple, int] = {}
-    per_doc: dict[int, int] = {}
-    max_chunk: dict[int, int] = {}
-    for r in rows:
-        n = r.tok_end - r.tok_start
-        assert 0 < n <= PACK_CTX
-        per_chunk[(r.shard, r.chunk_id)] = per_chunk.get((r.shard, r.chunk_id), 0) + n
-        per_doc[r.doc_id] = per_doc.get(r.doc_id, 0) + n
-        max_chunk[r.shard] = max(max_chunk.get(r.shard, -1), r.chunk_id)
-    for (shard, chunk), n in per_chunk.items():
-        if chunk < max_chunk[shard]:
-            assert n == PACK_CTX, (shard, chunk, n)
-        else:
-            assert 0 < n <= PACK_CTX
-    want = {r.doc_id: r.n_tokens for r in packed.collect()}
-    assert per_doc == want
-
-
 def test_chunk_dedup_idempotent_and_exhaustive(spark, sf_dir):
     """Re-applying chunk_dedup to its own output must remove nothing
     (every surviving chunk is globally unique, and chunk boundaries
@@ -820,41 +789,6 @@ def test_fuzzy_blocked_pairs_match_brute_force(spark):
                     expected.add((ia, ib, d))
     assert got == expected
     assert (6, 7, 2) in expected  # the pure-insertion distance-2 pair survived
-
-
-def test_incremental_near_dup_matches_full_rebuild(spark, sf_dir):
-    """The steady-state ingest path must find EXACTLY the pairs the
-    from-scratch rebuild finds, restricted to pairs that involve the
-    new batch — banding only the batch and probing the stored corpus
-    index loses nothing (same band family, same signatures)."""
-    from clinical_data_warehouse_bi_spark import text as T
-    from clinical_data_warehouse_bi_spark.io import load_tables
-
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"].select(
-        "doc_id", "text"
-    )
-    corpus = docs.filter(F.col("doc_id") < 400)
-    batch = docs.filter(F.col("doc_id") >= 400)
-
-    full = {
-        (r.doc_a, r.doc_b)
-        for r in T.lsh_candidate_pairs(T.lsh_index(docs)).collect()
-    }
-    # corpus ids < 400 <= batch ids, so any pair touching the batch
-    # has doc_b in the batch
-    expected = {
-        (a, b, "corpus-batch" if a < 400 else "batch")
-        for a, b in full
-        if b >= 400
-    }
-    got = {
-        (r.doc_a, r.doc_b, r.origin)
-        for r in T.incremental_near_dup_pairs(
-            batch, T.lsh_index(corpus)
-        ).collect()
-    }
-    assert got == expected
-    assert any(o == "corpus-batch" for _, _, o in got) or not expected
 
 
 def test_profile_table_matches_duckdb(spark, sf_dir, duck):
@@ -1457,69 +1391,6 @@ def test_weighted_sample_deterministic_and_excludes_nonpositive(spark):
     assert len(a) == 3
 
 
-def test_ewma_anomalies_matches_python_model(spark):
-    """The distributed fold reproduces a driver-side EWMA control
-    chart point-for-point (pre-point estimates, warmup, flags)."""
-    import datetime as dt
-
-    rows = []
-    series = {
-        1: [10.0, 10.2, 9.9, 10.1, 10.0, 50.0, 10.1, 9.8],  # one spike
-        2: [5.0, 5.1, 4.9, 5.05, 5.0, 5.1],                 # calm
-    }
-    for k, vs in series.items():
-        for i, v in enumerate(vs):
-            rows.append((k, dt.datetime(2024, 1, 1 + i), v))
-    df = spark.createDataFrame(rows, ["user_id", "ts", "value"])
-    from clinical_data_warehouse_bi_spark import timeseries as TS
-
-    got = {
-        (r["user_id"], r["ts"]): (r["ewma"], r["dev"], r["is_anomaly"])
-        for r in TS.ewma_anomalies(df, alpha=0.3, k_sigma=3.0, warmup=3).collect()
-    }
-    a = 0.3
-    for k, vs in series.items():
-        ewma = ewd = None
-        n = 0
-        for i, v in enumerate(vs):
-            ts = dt.datetime(2024, 1, 1 + i)
-            g_ewma, g_dev, g_an = got[(k, ts)]
-            if n == 0:
-                assert g_ewma is None and g_dev is None and g_an is False
-                ewma, ewd = v, 0.0
-            else:
-                assert abs(g_ewma - ewma) < 1e-12
-                assert abs(g_dev - ewd) < 1e-12
-                want_an = n >= 3 and ewd > 0 and abs(v - ewma) > 3.0 * ewd
-                assert g_an == want_an, (k, i)
-                ewma, ewd = (
-                    a * v + (1 - a) * ewma,
-                    a * abs(v - ewma) + (1 - a) * ewd,
-                )
-            n += 1
-    # the spike (and only the spike) flags in series 1; calm never
-    flags = {(k, t) for (k, t), (_, _, an) in got.items() if an}
-    assert flags == {(1, dt.datetime(2024, 1, 6))}
-
-
-def test_ewma_anomalies_single_key_exchange(spark, sf_dir):
-    """One keyed exchange (the groupBy collect), nothing else."""
-    from test_plans import _exchange_blocks
-
-    from clinical_data_warehouse_bi_spark import timeseries as TS
-    from clinical_data_warehouse_bi_spark.io import read_table
-
-    ev = read_table(spark, sf_dir, "events").select(
-        "user_id", "ts", F.col("event_id").cast("double").alias("value")
-    )
-    blocks = [
-        b
-        for b in _exchange_blocks(TS.ewma_anomalies(ev))
-        if "RoundRobinPartitioning" not in b
-    ]
-    assert len(blocks) == 1
-
-
 @settings(**SETTINGS)
 @given(
     li=st.lists(st.tuples(st.integers(0, 40), st.integers(0, 12)), min_size=0, max_size=10),
@@ -1771,29 +1642,6 @@ def test_remove_boilerplate_line_text_never_shuffles(spark, sf_dir):
         assert "__clean_lines#" not in b, b
 
 
-def test_dedup_lines_keeps_first_occurrence_in_order(spark):
-    docs = spark.createDataFrame(
-        [
-            (0, "alpha\nbeta\nalpha\ngamma\nbeta"),
-            (1, "one\ntwo\nthree"),
-            (2, "same\nsame\nsame"),
-            (3, ""),
-        ],
-        ["doc_id", "text"],
-    )
-    got = {r["doc_id"]: r for r in T.dedup_lines(docs).collect()}
-    assert got[0]["text"] == "alpha\nbeta\ngamma"
-    assert got[0]["n_removed_lines"] == 2
-    assert got[1]["text"] == "one\ntwo\nthree"
-    assert got[1]["n_removed_lines"] == 0
-    assert got[2]["text"] == "same" and got[2]["n_removed_lines"] == 2
-    assert got[3]["text"] == "" and got[3]["n_removed_lines"] == 0
-    # pure map: no exchange at all
-    from test_plans import _exchange_blocks
-
-    assert not _exchange_blocks(T.dedup_lines(docs))
-
-
 def test_pivot_report_matches_duckdb_case_twin(spark, sf_dir, duck):
     """qa.pivot_report round-10 registration candidate: the DuckDB
     CASE-WHEN aggregation is the oracle shape; values match exactly
@@ -1870,6 +1718,29 @@ def test_pivot_unpivot_roundtrip_and_guards(spark):
         qa.pivot_report(df, ["k"], "p", ["x"], {"v": "median"})
     with _pytest.raises(ValueError):
         qa.unpivot_report(wide, ["k"], [])
+
+
+def test_dedup_lines_keeps_first_occurrence_in_order(spark):
+    docs = spark.createDataFrame(
+        [
+            (0, "alpha\nbeta\nalpha\ngamma\nbeta"),
+            (1, "one\ntwo\nthree"),
+            (2, "same\nsame\nsame"),
+            (3, ""),
+        ],
+        ["doc_id", "text"],
+    )
+    got = {r["doc_id"]: r for r in T.dedup_lines(docs).collect()}
+    assert got[0]["text"] == "alpha\nbeta\ngamma"
+    assert got[0]["n_removed_lines"] == 2
+    assert got[1]["text"] == "one\ntwo\nthree"
+    assert got[1]["n_removed_lines"] == 0
+    assert got[2]["text"] == "same" and got[2]["n_removed_lines"] == 2
+    assert got[3]["text"] == "" and got[3]["n_removed_lines"] == 0
+    # pure map: no exchange at all
+    from test_plans import _exchange_blocks
+
+    assert not _exchange_blocks(T.dedup_lines(docs))
 
 
 def test_top_ngrams_matches_duckdb_and_never_shuffles_text(spark, sf_dir, duck):
@@ -2408,56 +2279,6 @@ def test_skew_report_uniform_keys_need_no_salt(spark, sf_dir):
         qa.skew_report(ev, [])
 
 
-# ---------------------------------------------- seasonal_anomalies
-
-
-def test_seasonal_anomalies_flags_broken_weekday_only(spark):
-    from datetime import datetime, timedelta
-
-    from clinical_data_warehouse_bi_spark.timeseries import seasonal_anomalies
-
-    # 20 weeks of daily data: Mondays always 100, other days 10 —
-    # a season-blind rule would flag every Monday; the weekday
-    # baseline must flag ONLY the one broken Monday (value 500)
-    base = datetime(2024, 1, 1)  # a Monday
-    rows = []
-    for d in range(140):
-        ts = base + timedelta(days=d)
-        v = 100.0 if ts.weekday() == 0 else 10.0
-        if d == 105:  # a Monday (105 = 15 weeks exactly)
-            v = 500.0
-        rows.append(("k", ts.strftime("%Y-%m-%d %H:%M:%S"), v))
-    df = spark.createDataFrame(rows, "k string, ts string, v double").withColumn(
-        "ts", F.to_timestamp("ts")
-    )
-    out = seasonal_anomalies(df, ["k"], "ts", "v", baseline_n=4).collect()
-    flagged = [str(r["ts"]) for r in out if r["is_anomaly"]]
-    assert flagged == ["2024-04-15 00:00:00"]  # day 105 only
-    # normal Mondays score near zero residual against their slot
-    normal_mondays = [
-        r for r in out
-        if r["baseline"] is not None and r["v"] == 100.0 and not r["is_anomaly"]
-    ]
-    assert normal_mondays and all(
-        abs(r["residual"]) < 1e-9 for r in normal_mondays
-    )
-
-
-def test_seasonal_anomalies_cold_start_is_null(spark):
-    from clinical_data_warehouse_bi_spark.timeseries import seasonal_anomalies
-
-    rows = [("k", "2024-01-01 00:00:00", 5.0), ("k", "2024-01-02 00:00:00", 6.0)]
-    df = spark.createDataFrame(rows, "k string, ts string, v double").withColumn(
-        "ts", F.to_timestamp("ts")
-    )
-    out = seasonal_anomalies(df, ["k"], "ts", "v").collect()
-    assert all(r["baseline"] is None and r["is_anomaly"] is None for r in out)
-    import pytest
-
-    with pytest.raises(ValueError):
-        seasonal_anomalies(df, ["k"], "ts", "v", season="month")
-
-
 # ----------------------------------------------- freshness_report
 
 
@@ -2552,7 +2373,7 @@ def test_chunk_text_properties(spark, texts, chunk, overlap):
         assert rebuilt == toks, (t, chunk, overlap)
 
 
-# ---------------------------------------- split_assign / cluster_safe_split
+# ------------------------------------------------------ split_assign
 
 
 def test_split_assign_matches_duckdb_and_covers(spark, sf_dir, duck):
@@ -2614,41 +2435,6 @@ def test_split_assign_is_shuffle_free_and_validates(spark, sf_dir):
         T2.split_assign(docs, {"a": 0.5, "b": 0.6})
     with _pt.raises(ValueError):
         T2.split_assign(docs, {"a": -0.5, "b": 1.5})
-
-
-def test_cluster_safe_split_never_straddles(spark):
-    """Near-dup cluster members always land in the SAME split;
-    singletons get their own-id assignment (== plain split_assign)."""
-    from clinical_data_warehouse_bi_spark import text as T2
-
-    docs = spark.createDataFrame(
-        [(i, f"text {i}") for i in range(400)], "doc_id long, text string"
-    )
-    # 100 clusters of 3 (ids 3k, 3k+1, 3k+2 share cluster 3k)
-    clusters = spark.createDataFrame(
-        [(3 * k + j, 3 * k) for k in range(100) for j in range(3)],
-        "doc_id long, cluster_id long",
-    )
-    fr = {"train": 0.6, "val": 0.2, "test": 0.2}
-    out = T2.cluster_safe_split(docs, clusters, fr, seed="cs1")
-    rows = {r["doc_id"]: r["split"] for r in out.collect()}
-    assert len(rows) == 400
-    for k in range(100):
-        assert rows[3 * k] == rows[3 * k + 1] == rows[3 * k + 2]
-    # singletons (ids 300..399) match plain per-id assignment
-    plain = {
-        r["doc_id"]: r["split"]
-        for r in T2.split_assign(
-            docs.filter("doc_id >= 300").withColumn(
-                "__skey", F.col("doc_id").cast("string")
-            ),
-            fr,
-            seed="cs1",
-            by_col="__skey",
-        ).collect()
-    }
-    for i in range(300, 400):
-        assert rows[i] == plain[i]
 
 
 # -------------------------------------------- vocabulary_divergence
@@ -2775,66 +2561,6 @@ def test_outlier_report_oracle_shaped_duckdb_parity(spark, sf_dir, duck):
     )
     assert len(got) == len(want) > 1000
     assert got == want
-
-
-@settings(**SETTINGS)
-@given(
-    edges=st.lists(
-        st.tuples(st.integers(0, 39), st.integers(0, 39)),
-        min_size=0,
-        max_size=30,
-    ),
-    seed=st.sampled_from(["h1", "h2"]),
-)
-@pytest.mark.slow
-def test_cluster_safe_split_property(spark, edges, seed):
-    """Random near-dup pair sets: composing connected_components with
-    cluster_safe_split never lets two connected documents straddle a
-    split, every document is assigned exactly once, and the
-    assignment is deterministic per seed."""
-    from clinical_data_warehouse_bi_spark import text as T2
-    from clinical_data_warehouse_bi_spark.graph import connected_components
-
-    n = 40
-    docs = spark.createDataFrame(
-        [(i, f"d{i}") for i in range(n)], "doc_id long, text string"
-    )
-    fr = {"train": 0.5, "val": 0.25, "test": 0.25}
-    if edges:
-        pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-        comp = connected_components(pairs, src="doc_a", dst="doc_b")
-        clusters = comp.select(
-            F.col("id").alias("doc_id"), F.col("component").alias("cluster_id")
-        )
-    else:
-        clusters = spark.createDataFrame([], "doc_id long, cluster_id long")
-    out = {
-        r["doc_id"]: r["split"]
-        for r in T2.cluster_safe_split(
-            docs, clusters, fr, seed=seed
-        ).collect()
-    }
-    assert len(out) == n  # exactly one assignment per doc
-    # union-find ground truth for connectivity
-    parent = list(range(n))
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        parent[find(a)] = find(b)
-    for a, b in edges:
-        assert out[a] == out[b], (a, b, out[a], out[b])
-    again = {
-        r["doc_id"]: r["split"]
-        for r in T2.cluster_safe_split(
-            docs, clusters, fr, seed=seed
-        ).collect()
-    }
-    assert again == out
 
 
 def test_attribution_both_equals_union_of_models(spark, sf_dir):

@@ -15,7 +15,9 @@ does not keep its target alive.
 A def reached only from its own tests fails this test. Delete it
 with its tests, or add it to TEST_REFERENCES if a test of a surviving
 function uses it as its reference implementation. TESTED_ONLY lists
-the tested-only defs still waiting for their cut. No Spark work.
+the tested-only defs still waiting for their cut. A module-level
+import that its library module never names fails too: a cut must
+take the imports it orphans. No Spark work.
 """
 
 from __future__ import annotations
@@ -64,7 +66,6 @@ TESTED_ONLY = {
         "_dot_expr", "calibration_table", "group_split", "predict_proba",
         "threshold_for_keep_rate", "train_logreg", "train_test_split",
     ),
-    "graph.py": ("pagerank",),
     "io.py": (
         "compact_parquet_dir", "global_shuffle", "maintenance_lock",
         "mix_sources", "raw_to_documents", "read_evolved", "read_raw_files",
@@ -79,11 +80,6 @@ TESTED_ONLY = {
         "set_pinned_packed_max", "survivorship",
     ),
     "kpi.py": ("length_of_stay", "los_summary", "mortality_rate"),
-    "multimodal.py": (
-        "_phash_bands", "audio_logmel", "audio_spectrogram",
-        "image_patches", "incremental_phash_pairs", "mel_filterbank",
-        "repartition_by_size_bucket", "resize_media",
-    ),
     "percentiles.py": ("winsorize",),
     "qa.py": (
         "corpus_card", "correlation_matrix", "drift_report",
@@ -103,23 +99,8 @@ TESTED_ONLY = {
     ),
     "similarity.py": (
         "_frechet_from_stats", "covariance_stats", "frechet_distance",
-        "incremental_semantic_dedup", "mine_hard_negatives", "pca_model",
-        "pca_project", "semantic_dedup", "semdedup_index",
     ),
-    "streaming.py": (
-        "PREAGG_BASE_BATCH", "census_apply_batch", "compact_census",
-        "compact_preagg", "preagg_apply_batch", "read_census", "read_preagg",
-    ),
-    "text.py": (
-        "chunk_manifest", "cluster_safe_split", "dedup_lines",
-        "incremental_near_dup_pairs", "lsh_index",
-    ),
-    "timeseries.py": ("ewma_anomalies", "seasonal_anomalies"),
-    "unigram.py": (
-        "_expected_counts", "_nbest", "_tokens_py_mirror", "_viterbi",
-        "seed_vocab", "train_unigram", "unigram_encode",
-        "unigram_encode_sampled",
-    ),
+    "text.py": ("dedup_lines",),
 }
 TESTED_ONLY_DEFS = {
     f"{module}::{name}" for module, names in TESTED_ONLY.items()
@@ -225,3 +206,24 @@ def test_test_references_exist():
         tree = ast.parse(open(os.path.join(LIB, module)).read())
         assert any(name in _unit_names(s) for s in tree.body), (module, name)
         assert reason
+
+
+def test_library_imports_are_used():
+    unused = []
+    for path in _py_files(LIB):
+        if os.path.basename(path) == "__init__.py":
+            continue
+        tree = ast.parse(open(path).read(), path)
+        used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        for stmt in tree.body:
+            if isinstance(stmt, ast.ImportFrom) and stmt.module == "__future__":
+                continue
+            if isinstance(stmt, (ast.Import, ast.ImportFrom)):
+                for alias in stmt.names:
+                    bound = alias.asname or alias.name.split(".")[0]
+                    if bound not in used:
+                        unused.append(f"{os.path.relpath(path, LIB)}::{bound}")
+    assert not unused, (
+        "module-level imports never named in their module (drop them "
+        "with the code that used them):\n  " + "\n  ".join(unused)
+    )

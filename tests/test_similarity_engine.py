@@ -292,151 +292,6 @@ def test_pq_pack_codes_roundtrip_and_disk_width(spark, sf_dir, tmp_path):
     assert ebin / en <= m + 8, ebin / en
 
 
-def test_semantic_dedup_drops_planted_near_duplicates(spark):
-    """Planted-copy corpus: originals in well-separated gaussian
-    clusters, near-copies (tiny noise) of a subset with HIGHER ids.
-    semantic_dedup must drop exactly the copies — every original
-    survives, and each copy's lower-id source is in the same
-    cluster."""
-    import numpy as np
-
-    from clinical_data_warehouse_bi_spark.similarity import (
-        sampled_kmeans_centroids,
-        semantic_dedup,
-    )
-
-    rng = np.random.default_rng(11)
-    dims, n_clusters, per = 32, 4, 10
-    # geometry matters: within-cluster cosine must sit well BELOW the
-    # dedup threshold (mean norm ~5*sqrt(32)=28, spread ~2.5*sqrt(32)
-    # =14 -> cluster-mate cosine ~0.8) while planted copies sit at ~1
-    means = rng.normal(size=(n_clusters, dims)) * 5.0
-    rows = []
-    vid = 0
-    originals = []
-    for c in range(n_clusters):
-        for _ in range(per):
-            v = means[c] + rng.normal(size=dims) * 2.5
-            rows.append((vid, [float(x) for x in v]))
-            originals.append(vid)
-            vid += 1
-    copies = {}
-    for src in originals[::3]:  # every 3rd original gets a near-copy
-        v = np.array(rows[src][1]) + rng.normal(size=dims) * 1e-3
-        rows.append((vid, [float(x) for x in v]))
-        copies[vid] = src
-        vid += 1
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cents = sampled_kmeans_centroids(df, n_clusters=n_clusters, seed=3)
-    out = {r.vec_id: r.keep for r in semantic_dedup(df, cents, 0.95).collect()}
-    assert len(out) == len(rows)
-    for v in originals:
-        assert out[v], f"original {v} wrongly dropped"
-    for v in copies:
-        assert not out[v], f"near-copy {v} survived"
-
-
-def test_covariance_stats_matches_numpy(spark):
-    """Distributed batch-partial covariance == direct numpy on the
-    collected matrix, any partitioning."""
-    from clinical_data_warehouse_bi_spark.similarity import covariance_stats
-
-    rng = np.random.RandomState(5)
-    mat = rng.normal(size=(400, 8)) * rng.uniform(0.5, 3.0, size=8)
-    df = spark.createDataFrame(
-        [(i, r.tolist()) for i, r in enumerate(mat)],
-        "vec_id long, embedding array<double>",
-    ).repartition(7)
-    st = covariance_stats(df)
-    assert st["n"] == 400
-    assert np.allclose(st["mean"], mat.mean(axis=0), atol=1e-10)
-    assert np.allclose(st["cov"], np.cov(mat.T, bias=True), atol=1e-9)
-
-
-def test_pca_project_properties(spark):
-    """On planted anisotropic data: components capture variance in
-    descending order, the projection reproduces numpy's, and the
-    whitened output has ~identity covariance. Determinism: two fits
-    give the identical model (sign canonicalization)."""
-    from clinical_data_warehouse_bi_spark.similarity import (
-        covariance_stats,
-        pca_model,
-        pca_project,
-    )
-
-    rng = np.random.RandomState(9)
-    # strong anisotropy: axis 0 dominates, then 1, then noise
-    base = rng.normal(size=(500, 6))
-    mat = base * np.array([10.0, 4.0, 1.0, 0.5, 0.25, 0.1])
-    df = spark.createDataFrame(
-        [(i, r.tolist()) for i, r in enumerate(mat)],
-        "vec_id long, embedding array<double>",
-    ).repartition(5)
-
-    m = pca_model(df, k=3)
-    assert m["explained_var"][0] >= m["explained_var"][1] >= m["explained_var"][2]
-    # first component aligns with the dominant axis
-    assert abs(m["components"][0][0]) > 0.99
-    m2 = pca_model(df, k=3)
-    assert np.allclose(m["components"], m2["components"])
-
-    proj = pca_project(df, m)
-    got = {r.vec_id: np.asarray(r.projected) for r in proj.collect()}
-    want = (mat - mat.mean(axis=0)) @ np.asarray(m["components"]).T
-    for i in range(500):
-        assert np.allclose(got[i], want[i], atol=1e-9)
-
-    mw = pca_model(df, k=3, whiten=True)
-    pw = pca_project(df, mw)
-    wmat = np.array([r.projected for r in pw.collect()])
-    cov = np.cov(wmat.T, bias=True)
-    assert np.allclose(cov, np.eye(3), atol=0.05)
-
-
-@pytest.mark.slow
-def test_pca_composed_ivf_keeps_recall(spark):
-    """The reduced-dimension ANN path end-to-end: project planted
-    16-dim clusters to 6 PCA dims, run the learned-IVF search in the
-    REDUCED space, and recover >=0.8 of the FULL-space brute-force
-    top-5 — the composition a vector store actually serves (PCA cuts
-    the GEMM and code width; cluster structure survives projection
-    because the between-cluster directions carry the variance)."""
-    from clinical_data_warehouse_bi_spark.similarity import (
-        ivf_search,
-        pca_model,
-        pca_project,
-        sampled_kmeans_centroids,
-    )
-
-    rng = np.random.RandomState(41)
-    k, dims, per = 5, 16, 80
-    centers = rng.normal(0, 10.0, size=(k, dims))
-    rows = []
-    for i in range(k * per):
-        v = centers[i % k] + rng.normal(0, 1.0, size=dims)
-        rows.append((i, [float(x) for x in v]))
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-    n_queries = 8
-    model = pca_model(emb, k=6)
-    red = pca_project(emb, model).withColumnRenamed("projected", "embedding")
-    centroids = sampled_kmeans_centroids(red, n_clusters=k, seed=7)
-    hits = [
-        (r.qid, r.nid)
-        for r in ivf_search(
-            red, centroids, n_queries=n_queries, nprobe=2, metric="euclidean"
-        ).collect()
-    ]
-    assert len(hits) == n_queries * 5
-    # within a tight cluster every pairwise cosine is a near-tie, so
-    # exact top-5 identity is not preserved by ANY projection; the
-    # property PCA must preserve is the cluster structure itself:
-    # every retrieved neighbor comes from the query's own planted
-    # cluster (ids interleave mod k)
-    same = sum(1 for q, n in hits if q % 5 == n % 5)
-    assert same / len(hits) >= 0.95, same / len(hits)
-
-
 @pytest.mark.slow
 def test_persisted_ivf_pq_index_serves_searches(spark, tmp_path):
     """Build the IVF-PQ index to disk once, then serve searches from
@@ -539,61 +394,6 @@ def test_filtered_ivf_pq_search_respects_predicate(spark, tmp_path):
     assert hits / (n_queries * topk) >= 0.6  # clustered data: high recall
 
 
-def test_mine_hard_negatives_matches_numpy(spark, sf_dir):
-    import numpy as np
-
-    from clinical_data_warehouse_bi_spark.io import read_table
-    from clinical_data_warehouse_bi_spark.similarity import mine_hard_negatives
-
-    emb = read_table(spark, sf_dir, "embeddings").limit(300)
-    rows = emb.select("vec_id", "embedding").collect()
-    ids = np.array([r["vec_id"] for r in rows])
-    mat = np.array([list(r["embedding"]) for r in rows], dtype=np.float64)
-    # synthetic labels: 4 classes by id hash
-    labels_py = {int(i): int(i) % 4 for i in ids}
-    labels = spark.createDataFrame(
-        [(int(i), labels_py[int(i)]) for i in ids], "vec_id long, label int"
-    )
-    anchors = [(int(ids[j]), mat[j].tolist()) for j in range(5)]
-
-    got = {}
-    out = mine_hard_negatives(emb, labels, anchors, k=4, oversample=8)
-    for r in out.collect():
-        got.setdefault(r["anchor_id"], []).append(
-            (r["rank"], r["neg_id"], r["cosine"])
-        )
-
-    norms = np.linalg.norm(mat, axis=1)
-    for aid, avec in anchors:
-        sims = (mat @ np.array(avec)) / (norms * np.linalg.norm(avec))
-        # the GEMM path's total order: round(cos, 6) desc, id asc
-        order = np.lexsort((ids, -np.round(sims, 6)))
-        # brute force: walk the SEARCH top-k*oversample, then filter
-        # by label (the operator's documented two-stage semantics)
-        search = [
-            int(ids[j]) for j in order if int(ids[j]) != aid
-        ][: 4 * 8]
-        want = [
-            n for n in search if labels_py[n] != labels_py[aid]
-        ][:4]
-        got_ids = [n for _, n, _ in sorted(got.get(aid, []))]
-        assert got_ids == want, (aid, got_ids, want)
-        # every returned negative really is cross-label
-        for n in got_ids:
-            assert labels_py[n] != labels_py[aid]
-
-
-def test_mine_hard_negatives_rejections(spark, sf_dir):
-    import pytest
-
-    from clinical_data_warehouse_bi_spark.io import read_table
-    from clinical_data_warehouse_bi_spark.similarity import mine_hard_negatives
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    with pytest.raises(ValueError):
-        mine_hard_negatives(emb, emb, [(0, [0.0])], k=0)
-
-
 @pytest.mark.slow
 def test_served_index_repairs_corrupt_cache_dir(spark):
     """q_ann_ivf_pq_served self-heals a cache directory that exists
@@ -626,79 +426,18 @@ def test_served_index_repairs_corrupt_cache_dir(spark):
     assert q_ann_ivf_pq_served(spark, sf).count() == n0
 
 
-def _semdedup_fixture(spark):
-    """4-d fixture with frozen centroids, a planted corpus-internal
-    near-dup chain, and a planted batch pair. Geometry: cos(17deg)
-    ~= 0.956 >= 0.95 (near-dup) while cos(34deg) ~= 0.829 < 0.95 —
-    so u(1)~v(2), v~x(100) but u !~ x: the CHAIN case where x's only
-    near-dup in the corpus is a vector the corpus build DROPPED."""
-    import math
+def test_covariance_stats_matches_numpy(spark):
+    """Distributed batch-partial covariance == direct numpy on the
+    collected matrix, any partitioning."""
+    from clinical_data_warehouse_bi_spark.similarity import covariance_stats
 
-    cents = [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0, 0.0])]
-    a = math.radians(17)
-    corpus = [
-        (1, [1.0, 0.0, 0.0, 0.0]),                               # u kept
-        (2, [math.cos(a), 0.0, math.sin(a), 0.0]),               # v dropped (near u)
-        (3, [0.9, 0.05, -0.3, 0.3]),
-        (4, [0.0, 0.9, 0.0, -0.44]),
-        (5, [0.1, 0.9, -0.4, 0.1]),
-    ]
-    batch = [
-        (100, [math.cos(2 * a), 0.0, math.sin(2 * a), 0.0]),     # x: near v only
-        (101, [0.0, 1.0, 0.05, 0.0]),
-        (102, [0.0, math.cos(a / 2), math.sin(a / 2), 0.0]),     # near 101
-        (103, [0.2, 0.8, 0.5, -0.2]),
-    ]
-    schema = "vec_id long, embedding array<double>"
-    return (
-        spark.createDataFrame(corpus, schema),
-        spark.createDataFrame(batch, schema),
-        cents,
-    )
-
-
-@pytest.mark.slow
-def test_incremental_semantic_dedup_matches_full_rebuild(spark):
-    """The contract: incremental verdicts over a batch probed against
-    the persisted index == the full-rebuild semantic_dedup verdicts
-    over corpus+batch, restricted to the batch — INCLUDING the chain
-    case (batch x near a DROPPED corpus member only), which is why
-    semdedup_index keeps dropped members."""
-    corpus, batch, cents = _semdedup_fixture(spark)
-    idx = similarity.semdedup_index(corpus, cents)
-    # the index keeps dropped members (the chain contract)
-    flags = {r.vec_id: r.keep for r in idx.collect()}
-    assert flags[1] is True and flags[2] is False
-    inc = {
-        r.vec_id: (r.cluster, r.keep)
-        for r in similarity.incremental_semantic_dedup(
-            batch, idx, cents
-        ).collect()
-    }
-    full = {
-        r.vec_id: (r.cluster, r.keep)
-        for r in similarity.semantic_dedup(
-            corpus.unionByName(batch), cents
-        ).collect()
-        if r.vec_id >= 100
-    }
-    assert inc == full
-    # chain: x(100) dropped because of the DROPPED corpus member v
-    assert inc[100][1] is False
-    # within-batch: 102 dropped against lower-id batch-mate 101
-    assert inc[101][1] is True and inc[102][1] is False
-
-
-def test_incremental_semantic_dedup_kept_only_index_misses_chain(spark):
-    """The negative control documenting WHY dropped members stay in
-    the index: probing a kept-only index keeps the chain vector x —
-    diverging from the full rebuild."""
-    corpus, batch, cents = _semdedup_fixture(spark)
-    idx = similarity.semdedup_index(corpus, cents).filter(F.col("keep"))
-    inc = {
-        r.vec_id: r.keep
-        for r in similarity.incremental_semantic_dedup(
-            batch, idx, cents
-        ).collect()
-    }
-    assert inc[100] is True  # the miss a pruned index would cause
+    rng = np.random.RandomState(5)
+    mat = rng.normal(size=(400, 8)) * rng.uniform(0.5, 3.0, size=8)
+    df = spark.createDataFrame(
+        [(i, r.tolist()) for i, r in enumerate(mat)],
+        "vec_id long, embedding array<double>",
+    ).repartition(7)
+    st = covariance_stats(df)
+    assert st["n"] == 400
+    assert np.allclose(st["mean"], mat.mean(axis=0), atol=1e-10)
+    assert np.allclose(st["cov"], np.cov(mat.T, bias=True), atol=1e-9)

@@ -97,110 +97,3 @@ def test_salted_join_works_on_streams(spark, stream_dir):
         .count()
     )
     assert got == want
-
-
-def test_streaming_preagg_exactly_once_and_compaction(spark, tmp_path):
-    """Incremental BI pre-aggregate maintenance: streamed synopsis ==
-    full batch recompute; a replayed batch (same epoch id) is a
-    no-op at ANY crash point (dynamic partition overwrite); roll-up
-    compaction preserves the derived aggregate while bounding the
-    partition count."""
-    schema = (
-        "admission_id long, clinical_concept_id long,"
-        " event_source_type string"
-    )
-    rows = [
-        # admission 1 seen in all three batches, concept 10 repeated
-        [(1, 10, "Lab"), (1, 11, "Lab"), (2, 10, "Rx")],
-        [(1, 10, "Vitals"), (2, 20, "Rx"), (3, 30, "Lab")],
-        [(1, 12, "Lab"), (3, 30, "Lab"), (3, 31, "Rx")],
-    ]
-    syn = str(tmp_path / "synopsis")
-    for bid, batch_rows in enumerate(rows):
-        streaming.preagg_apply_batch(
-            spark.createDataFrame(batch_rows, schema), syn, bid
-        )
-    got = {
-        r.admission_id: (r.total_events, r.unique_concepts, r.different_sources)
-        for r in streaming.read_preagg(spark, syn).collect()
-    }
-    flat = [t for b in rows for t in b]
-    want = {}
-    for adm in {t[0] for t in flat}:
-        mine = [t for t in flat if t[0] == adm]
-        want[adm] = (
-            len(mine),
-            len({t[1] for t in mine}),
-            len({t[2] for t in mine}),
-        )
-    assert got == want
-
-    # replay batch 1 verbatim (crash after write, before offset
-    # commit): its partition is overwritten with identical content
-    streaming.preagg_apply_batch(
-        spark.createDataFrame(rows[1], schema), syn, 1
-    )
-    got2 = {
-        r.admission_id: (r.total_events, r.unique_concepts, r.different_sources)
-        for r in streaming.read_preagg(spark, syn).collect()
-    }
-    assert got2 == want
-
-    # roll-up: one base partition, derived aggregate unchanged
-    stats = streaming.compact_preagg(spark, syn)
-    assert stats["partitions_after"] == 1
-    got3 = {
-        r.admission_id: (r.total_events, r.unique_concepts, r.different_sources)
-        for r in streaming.read_preagg(spark, syn).collect()
-    }
-    assert got3 == want
-    # and new batches keep landing after compaction
-    streaming.preagg_apply_batch(
-        spark.createDataFrame([(4, 40, "Lab")], schema), syn, 3
-    )
-    got4 = {
-        r.admission_id: r.total_events
-        for r in streaming.read_preagg(spark, syn).collect()
-    }
-    assert got4[4] == 1 and got4[1] == want[1][0]
-
-
-def test_preagg_synopsis_recovers_mid_compaction_crash(spark, tmp_path):
-    """A crash between compact_preagg's publish renames leaves no
-    directory at the synopsis path; the next batch apply and the
-    next read must both restore it and proceed (recover-before-
-    access discipline)."""
-    import os
-
-    schema = (
-        "admission_id long, clinical_concept_id long,"
-        " event_source_type string"
-    )
-    syn = str(tmp_path / "synopsis")
-    streaming.preagg_apply_batch(
-        spark.createDataFrame([(1, 10, "Lab"), (2, 20, "Rx")], schema), syn, 0
-    )
-    streaming.preagg_apply_batch(
-        spark.createDataFrame([(1, 11, "Rx")], schema), syn, 1
-    )
-    want = {
-        r.admission_id: (r.total_events, r.unique_concepts, r.different_sources)
-        for r in streaming.read_preagg(spark, syn).collect()
-    }
-    # crash between the renames: path gone, complete old present
-    os.rename(syn, f"{syn}.old-compact")
-    got = {
-        r.admission_id: (r.total_events, r.unique_concepts, r.different_sources)
-        for r in streaming.read_preagg(spark, syn).collect()
-    }
-    assert got == want
-    # same crash again, then a new batch lands through recovery
-    os.rename(syn, f"{syn}.old-compact")
-    streaming.preagg_apply_batch(
-        spark.createDataFrame([(3, 30, "Lab")], schema), syn, 2
-    )
-    got2 = {
-        r.admission_id: r.total_events
-        for r in streaming.read_preagg(spark, syn).collect()
-    }
-    assert got2 == {1: 2, 2: 1, 3: 1}
