@@ -102,6 +102,21 @@ BENCH_QUERIES = [
 ]
 
 
+def _best_of_2(run, after=None) -> float:
+    """Best wall time of two timed ``run()`` calls, rounded to 4
+    decimals: the pipeline benches' timing protocol, after the
+    caller's own warm-up run. ``after`` runs untimed after each."""
+    best = None
+    for _ in range(2):
+        t0 = time.time()
+        run()
+        dt = time.time() - t0
+        best = dt if best is None or dt < best else best
+        if after is not None:
+            after()
+    return round(best, 4)
+
+
 def bench_pipeline(spark, sf: float) -> float:
     """Wall-clock of the reference's whole artifact: the 3-layer
     clinical star pipeline (staging -> DWH -> pre-agg) on the
@@ -111,8 +126,6 @@ def bench_pipeline(spark, sf: float) -> float:
     driver-generated rows). Sanity anchors: both fact layers
     non-empty, the DWH fact no larger than staging (orphan cleanup
     only removes), and the pre-agg has one row per admission."""
-    import time
-
     from clinical_data_warehouse_bi_spark import star
     from clinical_data_warehouse_bi_spark.fixtures import make_sources
     from clinical_data_warehouse_bi_spark.io import (
@@ -155,16 +168,12 @@ def bench_pipeline(spark, sf: float) -> float:
         file=sys.stderr,
     )
     release_new_persistent_rdds(spark, rdd_baseline)
-    best = None
-    for _ in range(2):
-        t0 = time.time()
-        run()
-        dt = time.time() - t0
-        best = dt if best is None or dt < best else best
-        release_new_persistent_rdds(spark, rdd_baseline)
+    best = _best_of_2(
+        run, after=lambda: release_new_persistent_rdds(spark, rdd_baseline)
+    )
     for df in src.values():
         df.unpersist()
-    return round(best, 4)
+    return best
 
 
 def bench_corpus(spark, sf_dir: str) -> float:
@@ -188,7 +197,6 @@ def bench_corpus(spark, sf_dir: str) -> float:
     sink + footer-audited manifest."""
     import shutil
     import tempfile
-    import time
 
     from clinical_data_warehouse_bi_spark.corpus import build_corpus_release
     from clinical_data_warehouse_bi_spark.io import (
@@ -235,13 +243,7 @@ def bench_corpus(spark, sf_dir: str) -> float:
         f" chunks={anchor['rows']} verified={anchor['ok']}",
         file=sys.stderr,
     )
-    best = None
-    for _ in range(2):
-        t0 = time.time()
-        run()
-        dt = time.time() - t0
-        best = dt if best is None or dt < best else best
-    return round(best, 4)
+    return _best_of_2(run)
 
 
 def bench_corpus_full(spark, sf_dir: str) -> float:
@@ -258,7 +260,6 @@ def bench_corpus_full(spark, sf_dir: str) -> float:
     import os as _os
     import shutil
     import tempfile
-    import time
 
     from clinical_data_warehouse_bi_spark.corpus import build_corpus_release
     from clinical_data_warehouse_bi_spark.io import (
@@ -329,13 +330,7 @@ def bench_corpus_full(spark, sf_dir: str) -> float:
         f"pipeline_corpus_full anchor: release_docs={anchor['n_release']}",
         file=sys.stderr,
     )
-    best = None
-    for _ in range(2):
-        t0 = time.time()
-        run()
-        dt = time.time() - t0
-        best = dt if best is None or dt < best else best
-    return round(best, 4)
+    return _best_of_2(run)
 
 
 def main() -> None:

@@ -22,15 +22,11 @@ Layout:
                  filters, regex-guarded numeric parse, calendar attrs)
   keys.py        surrogate keys (row_number, zip_index_key)
   joins.py       lookup / normalized-string / interval (as-of) /
-                 null-safe / semi / anti / range / fuzzy join operators;
-                 tested-only: salted and binned-interval joins,
-                 survivorship
+                 null-safe / semi / anti / range / fuzzy join operators
   fixtures.py    seeded MIMIC-shaped sources for the star pipeline
   star.py        the 3-stage clinical pipeline (staging -> dwh -> agg)
   qa.py          the reference's QA suite plus expectation, pivot,
-                 Benford, outlier, freshness and snapshot reports;
-                 tested-only: profile, drift, skew and corpus-card
-                 reports
+                 Benford, outlier, freshness and snapshot reports
   kpi.py         readmission and daily-census KPIs; tested-only: length
                  of stay and mortality
   layout.py      Z-order (Morton) clustered writes
@@ -39,17 +35,14 @@ Layout:
   funnel.py      ordered-sequence funnels
   text.py        tokenize / shingle / MinHash / LSH, chunk and
                  boilerplate dedup, sampling, top n-grams, TF-IDF
-                 (tested-only: dedup_lines)
   suffix.py      exact-substring dedup and the persisted digest index
   corpus.py      the corpus release pipeline (build_corpus_release)
   scrub.py       repetition metrics, contamination, DP release;
                  tested-only: PII scrub, pseudonyms, k-anonymity
   bpe.py         BPE encoding under a merge table (tested-only: training)
-  classifier.py  tested-only: logistic-regression quality classifier
   lm.py          n-gram language-model perplexity
   graph.py       connected components for dedup clusters
   similarity.py  Arrow-batched numpy top-k, sign-LSH, IVF and IVF-PQ
-                 (tested-only: covariance, Fréchet drift)
   hnsw.py        sharded HNSW-class graph ANN
   retrieval.py   BM25 top-k and its persisted index
   multimodal.py  binary-column (image/audio) plumbing via mapInPandas,

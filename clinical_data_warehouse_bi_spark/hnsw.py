@@ -235,7 +235,6 @@ def build_hnsw_index(
     path: str,
     n_shards: int = 8,
     m: int = 12,
-    upper_every: int = 16,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> dict:
@@ -246,15 +245,14 @@ def build_hnsw_index(
     form here writes in place for single-writer callers (the
     registered query wraps it with the publish contract)."""
     g = build_graph(
-        vectors, n_shards=n_shards, m=m, upper_every=upper_every,
-        vec_col=vec_col, id_col=id_col,
+        vectors, n_shards=n_shards, m=m, vec_col=vec_col, id_col=id_col
     )
     g.write.mode("overwrite").partitionBy("shard").parquet(path)
     meta = {
         "format_version": HNSW_FORMAT_VERSION,
         "n_shards": n_shards,
         "m": m,
-        "upper_every": upper_every,
+        "upper_every": 16,
     }
     with open(os.path.join(path, HNSW_INDEX_META), "w") as f:
         json.dump(meta, f)
@@ -574,10 +572,8 @@ def build_routed_hnsw_index(
     n_clusters: int = 8,
     sub_shards: int = 1,
     m: int = 12,
-    upper_every: int = 16,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    seed: int = 7,
 ) -> dict:
     """Persist a ROUTED graph index: shard = k-means cell (trained on
     a bounded sample, similarity.sampled_kmeans_centroids) x optional
@@ -596,11 +592,11 @@ def build_routed_hnsw_index(
     base = vectors.select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
     )
-    centroids = sampled_kmeans_centroids(base, n_clusters, seed=seed)
+    centroids = sampled_kmeans_centroids(base, n_clusters, seed=7)
     cell_shards = _default_cell_shards(n_clusters, sub_shards)
     sharded = _assign_clusters(base, centroids, cell_shards)
     g = sharded.groupBy("shard").applyInPandas(
-        _make_shard_builder(m, upper_every, "embedding"), GRAPH_SCHEMA
+        _make_shard_builder(m, 16, "embedding"), GRAPH_SCHEMA
     )
     g.write.mode("overwrite").partitionBy("shard").parquet(path)
     meta = {
@@ -610,7 +606,7 @@ def build_routed_hnsw_index(
         "n_clusters": n_clusters,
         "sub_shards": sub_shards,
         "m": m,
-        "upper_every": upper_every,
+        "upper_every": 16,
         "centroids": [
             [int(c), [float(x) for x in v]] for c, v in centroids
         ],

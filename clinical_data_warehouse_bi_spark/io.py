@@ -815,7 +815,6 @@ def temperature_mix_keyed(
     id_col: str,
     alpha: float,
     budget: float,
-    seed: int = 0,
     weight_col: str | None = None,
 ) -> DataFrame:
     """``temperature_mix`` for the one-table-many-sources layout (a
@@ -861,7 +860,7 @@ def temperature_mix_keyed(
     )
     # same pmod-not-abs discipline as mix_sources (abs(MIN_VALUE)
     # overflow; % keeps the dividend's sign)
-    h = F.pmod(F.xxhash64(F.col(id_col), F.lit(seed), k), F.lit(_MIX_HASH_SPACE))
+    h = F.pmod(F.xxhash64(F.col(id_col), F.lit(0), k), F.lit(_MIX_HASH_SPACE))
     return df.filter(h < rate_map[k])
 
 

@@ -33,16 +33,16 @@ from pyspark.sql import functions as F
 ZORDER_BITS = 12
 
 
-def _interleave_sql(n_cols: int, bits: int, prefix: str = "__zt") -> str:
+def _interleave_sql(n_cols: int, bits: int) -> str:
     """SQL text for the Morton interleave of ``n_cols`` pre-normalized
-    integer columns ``{prefix}0..{prefix}{n-1}``: bit i of column c
+    integer columns ``__zt0..__zt{n-1}``: bit i of column c
     lands at position i*n_cols + c. Built as ONE parsed SQL string —
     the Column-object tower would cost a py4j round-trip per bit
     (SURVEY §9 items 7/12)."""
     if n_cols * bits > 62:
         raise ValueError(f"{n_cols} cols x {bits} bits exceeds a signed long")
     terms = [
-        f"(shiftleft(shiftright({prefix}{c}, {i}) & 1, {i * n_cols + c}))"
+        f"(shiftleft(shiftright(__zt{c}, {i}) & 1, {i * n_cols + c}))"
         for i in range(bits)
         for c in range(n_cols)
     ]

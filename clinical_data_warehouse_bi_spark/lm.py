@@ -89,7 +89,6 @@ def perplexity(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    alpha: float = DEFAULT_ALPHA,
     model: tuple[DataFrame, DataFrame, DataFrame] | None = None,
     *,
     model_broadcast_max_rows: int | None = None,
@@ -175,8 +174,8 @@ def perplexity(
             F.when(
                 F.col("w1").isNotNull(),
                 F.log(
-                    (F.coalesce(F.col("c12"), F.lit(0)) + F.lit(alpha))
-                    / (F.coalesce(F.col("c1"), F.lit(0)) + F.lit(alpha * v_val))
+                    (F.coalesce(F.col("c12"), F.lit(0)) + F.lit(DEFAULT_ALPHA))
+                    / (F.coalesce(F.col("c1"), F.lit(0)) + F.lit(DEFAULT_ALPHA * v_val))
                 ),
             ).alias("lp"),
         )

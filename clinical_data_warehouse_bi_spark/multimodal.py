@@ -208,11 +208,9 @@ def _as_feature_bytes(arr: np.ndarray) -> np.ndarray:
     raise ValueError(f"no uint8 feature mapping for dtype {a.dtype}")
 
 
-def extract_features(
-    media: DataFrame, bins: int = 16, real_decode: bool = False
-) -> DataFrame:
+def extract_features(media: DataFrame, real_decode: bool = False) -> DataFrame:
     """Arrow-batched feature extraction over the binary column:
-    byte count, mean, entropy, and a `bins`-bucket byte histogram.
+    byte count, mean, entropy, and a 16-bucket byte histogram.
     One mapInPandas pass; partition-parallel; no shuffle.
     ``real_decode=True`` routes blobs through the actual codecs
     (PNG/WAV) and maps decoded samples into the uint8 feature domain;
@@ -227,7 +225,7 @@ def extract_features(
                 arr = _as_feature_bytes(
                     decode_media(bytes(blob), meta["media_type"], real_decode)
                 )
-                hist = np.bincount(arr // (256 // bins), minlength=bins)[:bins]
+                hist = np.bincount(arr // 16, minlength=16)[:16]
                 p = hist / max(arr.size, 1)
                 nz = p[p > 0]
                 rows.append(
@@ -445,12 +443,7 @@ def phash_near_dup_pairs(
     )
 
 
-def image_near_dup(
-    media: DataFrame,
-    max_hamming: int = PHASH_MAX_HAMMING,
-    n_bands: int = PHASH_BANDS,
-    real_decode: bool = False,
-) -> DataFrame:
+def image_near_dup(media: DataFrame, real_decode: bool = False) -> DataFrame:
     """Perceptual image near-duplicate pairs over a media relation
     (doc_id, content, media_meta): pHash each blob (one mapInPandas
     pass), then the exact banded-Hamming candidate join. The hash
@@ -458,4 +451,4 @@ def image_near_dup(
     exchange; image bytes never do. Persisted once: both self-join
     sides and the verification read the materialized form."""
     hashes = image_phash(media, real_decode=real_decode).persist()
-    return phash_near_dup_pairs(hashes, max_hamming, n_bands)
+    return phash_near_dup_pairs(hashes)

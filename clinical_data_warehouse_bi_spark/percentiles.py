@@ -74,12 +74,9 @@ Spark jobs in the common no-refinement case with footer bounds:
 
 Fault tolerance: localCheckpoint trades lineage for speed — an
 executor loss makes the truncated lineage unrecoverable mid-query.
-For long-running fault-tolerant deployments pass
-``checkpointer=lambda d: d.checkpoint(eager=False)`` (with a
-``setCheckpointDir``) to keep the same job structure on reliable
-storage. Checkpointed state is released by ``release(result_df)``
-after the caller's final action; otherwise Spark's ContextCleaner
-reclaims it when the result DataFrame is garbage-collected.
+Checkpointed state is released by ``release(result_df)`` after the
+caller's final action; otherwise Spark's ContextCleaner reclaims it
+when the result DataFrame is garbage-collected.
 
 Executor state: histogram hash-agg O(4096) per group (plus a small
 per-bucket HLL sketch for the ndv gate); the resolve window sorts
@@ -90,7 +87,6 @@ value mass costs nothing beyond its map-side partial counts)."""
 from __future__ import annotations
 
 from itertools import count
-from typing import Callable
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -154,9 +150,7 @@ def exact_percentiles_distributed(
     native_distinct_max: int = 65536,
     refine_cap: int = REFINE_CAP,
     bounds: dict[str, tuple[float, float]] | None = None,
-    checkpointer: Callable[[DataFrame], DataFrame] | None = None,
     n_rows: int | None = None,
-    native_rows_max: int = 16_000_000,
 ) -> DataFrame:
     """Exact interpolated percentiles per group, fully distributed.
 
@@ -186,24 +180,23 @@ def exact_percentiles_distributed(
     is bounded by that group's rows, and EACH percentile expression
     keeps its OWN buffer (three specs over one column = three
     buffers), so the gate budgets n_rows x total-spec-count ENTRIES:
-    the native path is taken only when that product stays under
-    ``native_rows_max``. At ~48 bytes per OpenHashMap entry (16 B
-    value+count payload plus the map's ~3x bucket/array overhead —
-    NOT 8 B/row), the 16M default caps the worst case — one giant
-    all-distinct group — at ~768 MB on one executor, inside a
-    multi-GB executor's headroom but deliberately conservative.
-    Whatever the distinct structure, below the gate the single-job
-    native path is taken with NO probe job at all. At 100 TB the count is far above
-    the gate and the bucketed refinement runs as before; the gate
-    buys back the multi-job overhead exactly where it is pure
-    overhead. ``native_distinct_max=0`` still forces the bucketed
-    path (how the equivalence tests pin it), overriding this gate.
+    the native path is taken only when that product stays under 16M.
+    At ~48 bytes per OpenHashMap entry (16 B value+count payload plus
+    the map's ~3x bucket/array overhead — NOT 8 B/row), that caps the
+    worst case — one giant all-distinct group — at ~768 MB on one
+    executor, inside a multi-GB executor's headroom but deliberately
+    conservative. Whatever the distinct structure, below the gate the
+    single-job native path is taken with NO probe job at all. At
+    100 TB the count is far above the gate and the bucketed
+    refinement runs as before; the gate buys back the multi-job
+    overhead exactly where it is pure overhead.
+    ``native_distinct_max=0`` still forces the bucketed path (how the
+    equivalence tests pin it), overriding this gate.
 
-    ``checkpointer``: how per-level located-target relations truncate
-    lineage; default ``localCheckpoint(eager=False)`` (fast, not
-    executor-loss tolerant — see module docstring)."""
+    Per-level located-target relations truncate lineage with
+    ``localCheckpoint(eager=False)`` (fast, not executor-loss
+    tolerant — see module docstring)."""
     spark = df.sparkSession
-    ckpt = checkpointer or (lambda d: d.localCheckpoint(eager=False))
     checkpoints: list[DataFrame] = []
     cols = list(specs)
     names = [name for c in cols for _, name in specs[c]]
@@ -212,7 +205,7 @@ def exact_percentiles_distributed(
     if (
         n_rows is not None
         and native_distinct_max
-        and n_rows * max(total_specs, 1) <= native_rows_max
+        and n_rows * max(total_specs, 1) <= 16_000_000
     ):
         n_aggs = [
             F.expr(f"percentile({c}, {pfrac})").alias(name)
@@ -360,7 +353,7 @@ def exact_percentiles_distributed(
     WHERE (name IS NOT NULL AND b0 >= 0 AND cb <= tg.rk AND tg.rk < cb + cnt)
        OR (name IS NULL AND rn1 = 1 AND tg.which = 0)
     """
-        located = ckpt(spark.sql(locate_sql))
+        located = spark.sql(locate_sql).localCheckpoint(eager=False)
         checkpoints.append(located)
         loc_view = f"__pctl_loc_{uid}"
         located.createOrReplaceTempView(loc_view)
@@ -464,7 +457,7 @@ def exact_percentiles_distributed(
                     F.col(f"h_{bcol}").alias(bcol),
                 )
             )
-            pending = ckpt(pending)
+            pending = pending.localCheckpoint(eager=False)
             checkpoints.append(pending)
             path = path + [bcol]
 

@@ -103,88 +103,6 @@ def run_all(stage: dict[str, DataFrame], dwh: dict[str, DataFrame]) -> dict[str,
     }
 
 
-def profile_table(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
-    """Long-format data profile — the load-validation report a DWH
-    runs on every fresh table (the generalization of QA.sql's
-    hand-written per-table probes): for each column, row count, null
-    count, exact distinct count, and min/max rendered as strings.
-
-    Two clean jobs, both scale-safe:
-    1. min/max for ALL columns in ONE aggregation (no DISTINCT
-       aggregates, so no Expand blowup — the anti-pattern
-       test_agg_per_order_has_no_expand locks elsewhere).
-    2. distinct/null counts via stack() unpivot to (column, value)
-       then a single-DISTINCT groupBy — two-phase partial aggregation,
-       one shuffle of (column, value) pairs, never k separate
-       count-distinct Expands. Rows multiply by k columns, but the
-       unpivot is a projection (no shuffle of the wide row).
-    """
-    cols = list(cols or df.columns)
-    k = len(cols)
-    # job 1 exprs: min/max on the NATIVE column type (numeric/date
-    # ordering, not lexicographic — cast-then-min would report e.g.
-    # max '9.0' for a quantity column reaching 50), rendered as
-    # strings only for the uniform report schema
-    mm = df.agg(
-        *[F.min(F.col(c)).cast("string").alias(f"mn_{i}") for i, c in enumerate(cols)],
-        *[F.max(F.col(c)).cast("string").alias(f"mx_{i}") for i, c in enumerate(cols)],
-    )
-    # job 2: unpivot -> per-column counts (single DISTINCT aggregate)
-    stack_args = ", ".join(
-        f"'{c}', cast(`{c}` as string)" for c in cols
-    )
-    long = df.select(
-        F.expr(f"stack({k}, {stack_args}) AS (column, value)")
-    )
-    counts = long.groupBy("column").agg(
-        F.count("*").alias("n_rows"),
-        F.sum(F.when(F.col("value").isNull(), 1).otherwise(0)).alias("n_nulls"),
-        F.countDistinct("value").alias("n_distinct"),
-    )
-    spark = df.sparkSession
-    mm_row = mm.first()
-    mm_df = spark.createDataFrame(
-        [
-            (c, mm_row[f"mn_{i}"], mm_row[f"mx_{i}"])
-            for i, c in enumerate(cols)
-        ],
-        "column string, min_value string, max_value string",
-    )
-    return counts.join(mm_df, "column").select(
-        "column", "n_rows", "n_nulls", "n_distinct", "min_value", "max_value"
-    )
-
-
-def correlation_matrix(df: DataFrame, cols: list[str]) -> DataFrame:
-    """Long-format Pearson correlation over numeric columns — the
-    profiler's (qa.profile_table) second-order companion for load
-    validation (a broken feed often shows up as a correlation flip
-    before any single-column bound moves). Returns (col_a, col_b,
-    corr double, rounded to 6) for every unordered pair a < b.
-
-    ONE aggregation job computes all k*(k-1)/2 coefficients as
-    parallel corr() expressions — map-side partial moments, a
-    single-row reduce, no Expand, no per-pair pass over the data;
-    the k^2 cell count is a driver-side constant, never a row
-    multiplier."""
-    pairs = [
-        (a, b) for i, a in enumerate(cols) for b in cols[i + 1 :]
-    ]
-    if not pairs:
-        raise ValueError("correlation_matrix needs at least two columns")
-    row = df.agg(
-        *[
-            F.round(F.corr(a, b), 6).alias(f"c_{i}")
-            for i, (a, b) in enumerate(pairs)
-        ]
-    ).first()
-    spark = df.sparkSession
-    return spark.createDataFrame(
-        [(a, b, row[f"c_{i}"]) for i, (a, b) in enumerate(pairs)],
-        "col_a string, col_b string, corr double",
-    )
-
-
 # ---------------------------------------------------------------------------
 # Declarative expectation suite (beyond-reference, round 8)
 # ---------------------------------------------------------------------------
@@ -281,9 +199,7 @@ def expectation_report(
     refs: list[dict] = []
     crosses: list[dict] = []
 
-    # row-expression flags come from the builder shared with
-    # observe_expectations, so inline and dedicated reports can never
-    # drift apart
+    # row-expression flags first; the loop below adds the rest
     _ROW_KINDS = ("not_null", "accepted_range", "accepted_values")
     _collect_row_flags(
         [e for e in spec if e["check"] in _ROW_KINDS], per_table_flags
@@ -463,232 +379,10 @@ def expectation_report(
     )
 
 
-def drift_report(
-    baseline: DataFrame,
-    current: DataFrame,
-    cols: list[str],
-    n_bins: int = 10,
-    threshold: float = 0.2,
-    eps: float = 1e-4,
-) -> DataFrame:
-    """Distribution-drift detection between two snapshots of a table:
-    Population Stability Index per numeric column, the standard
-    monitoring statistic (psi < 0.1 stable, > 0.2 action — the
-    conventional thresholds).
-
-    Bin edges come from the BASELINE's quantiles (one approxQuantile
-    driver call, O(cols x bins) scalars); then per-bin counts for
-    ALL columns compile into ONE aggregation pass per side —
-    n_cols x n_bins sum(CASE) expressions, built as SQL text — so a
-    20-column drift check on a 100 TB snapshot pair costs exactly
-    two scans. PSI itself is arithmetic over the two 1-row results,
-    computed driver-side on O(cols x bins) numbers.
-
-    Returns (column, psi, drifted) — drifted = psi > threshold."""
-    import math
-
-    edges_by_col: dict[str, list[float]] = {}
-    qs = [i / n_bins for i in range(1, n_bins)]
-    quantiles = baseline.approxQuantile(cols, qs, 0.001)
-    for c, es in zip(cols, quantiles):
-        uniq = sorted({float(e) for e in es if e is not None})
-        edges_by_col[c] = uniq
-
-    def bin_exprs(side: str) -> list[str]:
-        exprs = []
-        for c, edges in edges_by_col.items():
-            bounds = [None, *edges, None]
-            for b in range(len(edges) + 1):
-                lo, hi = bounds[b], bounds[b + 1]
-                conds = [f"{c} IS NOT NULL"]
-                if lo is not None:
-                    conds.append(f"{c} > {lo!r}")
-                if hi is not None:
-                    conds.append(f"{c} <= {hi!r}")
-                exprs.append(
-                    f"sum(CASE WHEN {' AND '.join(conds)} THEN 1 ELSE 0 END)"
-                    f" AS {side}_{c}_{b}"
-                )
-        exprs.append(f"count(*) AS {side}_total")
-        return exprs
-
-    b_row = baseline.agg(*[F.expr(e) for e in bin_exprs("b")]).first()
-    c_row = current.agg(*[F.expr(e) for e in bin_exprs("c")]).first()
-
-    out = []
-    for c, edges in edges_by_col.items():
-        nb = len(edges) + 1
-        b_tot = max(b_row["b_total"], 1)
-        c_tot = max(c_row["c_total"], 1)
-        psi = 0.0
-        for b in range(nb):
-            p = max((b_row[f"b_{c}_{b}"] or 0) / b_tot, eps)
-            q = max((c_row[f"c_{c}_{b}"] or 0) / c_tot, eps)
-            psi += (q - p) * math.log(q / p)
-        out.append((c, float(psi), bool(psi > threshold)))
-    spark = baseline.sparkSession
-    return spark.createDataFrame(out, "column string, psi double, drifted boolean")
-
-
-def corpus_card(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    source_col: str | None = "source",
-    out_path: str | None = None,
-    lexical: bool = False,
-) -> dict:
-    """The dataset card for a training corpus — the governance
-    artifact shipped next to the shards: size, token statistics,
-    exact-duplicate rate, predicted-language mix, source mix, and
-    quality-score distribution, all from this engine's own operators.
-
-    Cost: one fused scalar aggregation (counts, token sums, distinct
-    fingerprints via two-level agg), one approxQuantile pass over a
-    slim per-doc projection, and one broadcast-lexicon language
-    argmax — O(scans) bounded regardless of how many stats the card
-    carries. Writes JSON to ``out_path`` when given (use an
-    underscore-prefixed name next to parquet shards)."""
-    import json
-
-    from clinical_data_warehouse_bi_spark import text as T
-
-    toks = T.tokens(text_col)
-    per_doc = docs.select(
-        F.col(id_col).alias("__id"),
-        *([F.col(source_col)] if source_col else []),
-        F.size(toks).cast("bigint").alias("n_tokens"),
-        F.md5(F.col(text_col)).alias("__fp"),
-    )
-    per_fp = per_doc.groupBy("__fp").agg(
-        F.count("*").alias("c"), F.sum("n_tokens").alias("tks")
-    )
-    scal = per_fp.agg(
-        F.expr("CAST(sum(c) AS BIGINT) AS n_docs"),
-        F.expr("count(*) AS n_distinct_texts"),
-        F.expr("CAST(sum(tks) AS BIGINT) AS n_tokens"),
-    ).first()
-    qs = per_doc.approxQuantile("n_tokens", [0.5, 0.9, 0.99], 0.001)
-
-    from clinical_data_warehouse_bi_spark.queries.text_ops import _predicted_lang
-
-    lang_mix = {
-        r["lang"]: r["n"]
-        for r in _predicted_lang(docs.sparkSession, docs)
-        .groupBy("lang")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    src_mix = {}
-    if source_col:
-        src_mix = {
-            r[source_col]: r["n"]
-            for r in per_doc.groupBy(source_col).agg(F.count("*").alias("n")).collect()
-        }
-    lex = (
-        {"lexical": {k: v for k, v in zipf_profile(docs, text_col).items()
-                     if k in ("zipf_slope", "unigram_entropy_bits", "vocab_size")}}
-        if lexical
-        else {}
-    )
-    card = {
-        **lex,
-        "n_docs": scal["n_docs"],
-        "n_tokens": scal["n_tokens"],
-        "exact_dup_rate": round(
-            1.0 - scal["n_distinct_texts"] / max(scal["n_docs"], 1), 6
-        ),
-        "tokens_per_doc": {
-            "mean": round(scal["n_tokens"] / max(scal["n_docs"], 1), 2),
-            "p50": qs[0],
-            "p90": qs[1],
-            "p99": qs[2],
-        },
-        "lang_mix": lang_mix,
-        "source_mix": src_mix,
-    }
-    if out_path:
-        with open(out_path, "w") as f:
-            json.dump(card, f, indent=2, sort_keys=True)
-    return card
-
-
-def schema_drift(baseline: DataFrame, current: DataFrame) -> DataFrame:
-    """Schema-level drift between two snapshots of a table: one row
-    per changed column — added, removed, or type_changed — the check
-    that runs BEFORE drift_report's value-level PSI (a feed that
-    silently renamed or retyped a column should fail loudly, not
-    skew a histogram). Pure metadata comparison: zero jobs."""
-    b = dict(baseline.dtypes)
-    c = dict(current.dtypes)
-    rows = []
-    for col in sorted(set(b) | set(c)):
-        if col not in c:
-            rows.append((col, "removed", b[col], None))
-        elif col not in b:
-            rows.append((col, "added", None, c[col]))
-        elif b[col] != c[col]:
-            rows.append((col, "type_changed", b[col], c[col]))
-    spark = baseline.sparkSession
-    return spark.createDataFrame(
-        rows,
-        "column string, change string, baseline_type string, current_type string",
-    )
-
-
-def observe_expectations(
-    df: DataFrame, spec: list[dict], name: str = "expectations"
-):
-    """ZERO-extra-pass data-quality: attach the suite's
-    row-expression checks (not_null / accepted_range /
-    accepted_values) to a DataFrame as a Spark Observation — the
-    violation counters ride whatever action the pipeline runs next,
-    so a 100 TB transform gets its quality report for free instead
-    of paying expectation_report's dedicated scan. Aggregating,
-    join-key-dependent, or cross-table checks (unique, referential,
-    cross_sum) cannot ride a row stream; route those through
-    expectation_report.
-
-    Returns (df_with_observation, observation); after ANY action on
-    the returned frame, ``observation.get`` yields
-    {check_name: violations, "__total_rows": n}. The check
-    expressions are the SAME SQL-text flags the batch compiler
-    emits, so inline and dedicated reports can never disagree."""
-    from pyspark.sql import Observation
-
-    allowed = {"not_null", "accepted_range", "accepted_values"}
-    bad = [e["check"] for e in spec if e["check"] not in allowed]
-    if bad:
-        raise ValueError(
-            f"observe_expectations supports row-expression checks only"
-            f" ({sorted(allowed)}); got {bad} — use expectation_report"
-        )
-    tables = {e["table"] for e in spec}
-    if len(tables) != 1:
-        raise ValueError(
-            "observe_expectations rides ONE DataFrame; the spec names"
-            f" tables {sorted(tables)}"
-        )
-    flags: list = []
-    # reuse the compiler's flag-building by running the shared spec
-    # loop in flag-collection mode
-    t = next(iter(tables))
-    probe: dict[str, list] = {}
-    _collect_row_flags(spec, probe)
-    name_flags = probe[t]
-    obs = Observation(name)
-    exprs = [
-        F.expr(f"sum(CAST(({flag}) AS BIGINT))").alias(nm)
-        for nm, flag in name_flags
-    ] + [F.expr("count(*)").alias("__total_rows")]
-    return df.observe(obs, *exprs), obs
-
-
 def _collect_row_flags(spec: list[dict], per_table_flags: dict) -> None:
-    """The row-expression half of expectation_report's compiler,
-    shared so inline observation and the dedicated report build
-    IDENTICAL flag SQL."""
+    """The row-expression half of expectation_report's compiler:
+    appends (label, flag SQL) per not_null / accepted_range /
+    accepted_values check to its table's list."""
 
     def lit_sql(v) -> str:
         return _sq(v) if isinstance(v, str) else repr(v)
@@ -720,62 +414,6 @@ def _collect_row_flags(spec: list[dict], per_table_flags: dict) -> None:
                     f"{c} IS NOT NULL AND {c} NOT IN ({vals})",
                 )
             )
-
-
-def zipf_profile(docs: DataFrame, text_col: str = "text", top_n: int = 1000) -> dict:
-    """Corpus lexical-statistics profile: the Zipf exponent (slope of
-    log-rank vs log-frequency over the ``top_n`` words, least
-    squares) and unigram entropy in bits — the two scalars that
-    flag synthetic/templated corpora (natural language sits near
-    slope -1; a generator with a tiny vocabulary shows a flat slope
-    and low entropy). One distributed word histogram (bpe's
-    word_histogram job) + a bounded driver fit.
-
-    Returns {"zipf_slope", "unigram_entropy_bits", "vocab_size",
-    "n_tokens"}."""
-    import math
-
-    import numpy as np
-
-    from clinical_data_warehouse_bi_spark.bpe import word_histogram
-
-    hist = word_histogram(docs, text_col=text_col)
-    totals = hist.agg(
-        F.sum("n").alias("n_tokens"), F.count("*").alias("vocab")
-    ).first()
-    n_tokens = int(totals["n_tokens"] or 0)
-    if n_tokens == 0:
-        raise ValueError("zipf_profile: empty corpus")
-    top = (
-        hist.orderBy(F.col("n").desc(), F.col("word").asc())
-        .limit(int(top_n))
-        .collect()
-    )
-    freqs = np.array([r["n"] for r in top], dtype=np.float64)
-    ranks = np.arange(1, len(freqs) + 1, dtype=np.float64)
-    # closed-form least-squares slope (cov/var) — np.polyfit's SVD
-    # path can fail to converge on degenerate (constant-y) inputs
-    lx, ly = np.log(ranks), np.log(freqs)
-    vx = float(((lx - lx.mean()) ** 2).sum())
-    slope = (
-        0.0
-        if vx == 0.0
-        else float(((lx - lx.mean()) * (ly - ly.mean())).sum() / vx)
-    )
-    # exact unigram entropy from the FULL histogram via one more
-    # aggregate (sum p log p needs every word, not just the top)
-    ent_row = hist.agg(
-        F.sum(
-            F.expr(f"(n / {float(n_tokens)!r}) * log2(n / {float(n_tokens)!r})")
-        ).alias("neg_ent")
-    ).first()
-    entropy = -float(ent_row["neg_ent"])
-    return {
-        "zipf_slope": slope,
-        "unigram_entropy_bits": entropy,
-        "vocab_size": int(totals["vocab"]),
-        "n_tokens": n_tokens,
-    }
 
 
 def pivot_report(
@@ -821,29 +459,6 @@ def pivot_report(
                 getattr(F, how)(gated).alias(f"{v}_{how}_{col}")
             )
     return df.groupBy(*rows).agg(*agg_exprs)
-
-
-def unpivot_report(
-    df: DataFrame,
-    ids: list[str],
-    value_cols: list[str],
-    var_name: str = "metric",
-    value_name: str = "value",
-) -> DataFrame:
-    """Inverse of pivot_report: melt wide metric columns back to the
-    tall (id, metric, value) form the storage layer and q_rollup's
-    grouping sets want. Pure projection (Spark's native unpivot /
-    stack) — each input row expands to len(value_cols) rows map-side,
-    NO shuffle, no type surprises (values are cast to a common
-    type by Spark's unpivot contract)."""
-    if not value_cols:
-        raise ValueError("value_cols must be non-empty")
-    return df.unpivot(
-        [F.col(c) for c in ids],
-        [F.col(c) for c in value_cols],
-        var_name,
-        value_name,
-    )
 
 
 def benford_profile(
@@ -929,11 +544,10 @@ def outlier_report(
     df: DataFrame,
     value_col: str,
     group_cols: list[str] | None = None,
-    threshold: float = 3.5,
 ) -> DataFrame:
     """Robust outlier flags via the modified z-score
     (Iglewicz & Hoaglin 1993): 0.6745 * (x - median) / MAD, flagged
-    beyond ``threshold`` (their recommended 3.5). Mean/std outlier
+    beyond 3.5 (their recommended threshold). Mean/std outlier
     rules break exactly when needed most — the outliers inflate the
     std that is supposed to catch them; median/MAD have a 50%
     breakdown point.
@@ -960,7 +574,7 @@ def outlier_report(
         F.lit(0.6745) * (F.col(value_col) - F.col("__med")) / F.col("__mad"),
     )
     flag = F.when(
-        F.col("__mad") > 0, F.abs(F.col("modified_z")) > threshold
+        F.col("__mad") > 0, F.abs(F.col("modified_z")) > 3.5
     ).otherwise(F.col(value_col) != F.col("__med"))
 
     if not keys:
@@ -998,73 +612,6 @@ def outlier_report(
         .withColumn("is_outlier", flag)
         .drop("__med", "__mad")
     )
-
-
-def skew_report(
-    df: DataFrame,
-    key_cols: list[str],
-    top_n: int = 20,
-) -> dict:
-    """Join/aggregation skew diagnostic for a prospective shuffle
-    key: the numbers that decide between a plain hash join, a
-    broadcast, AQE skew-split, or explicit salting BEFORE a 100 TB
-    job discovers the hot key the slow way.
-
-    Returns a dict of scalars plus the top-N keys:
-    - n_rows, n_keys, avg_rows_per_key
-    - max_key_rows, max_key_share (the hot key's fraction)
-    - p99_key_rows (approx), hhi (Herfindahl concentration,
-      sum of squared key shares: 1/n_keys = uniform, 1 = one key;
-      EXACT and distributive — a decile/Gini approximation goes
-      blind precisely when one hot key hides among millions)
-    - suggested_salt: ceil(max_key_rows / avg_rows_per_key) capped
-      at 256 — the replication factor that would level the hot key
-      to roughly average, 1 = no salting needed
-    - top_keys: [(key..., n), ...] the N heaviest keys
-
-    Scale shape: ONE groupBy to the per-key histogram (map-side
-    partials), then scalar aggregates + a TakeOrdered top-N over
-    that histogram — the histogram relation (n_keys rows) is the
-    only thing beyond the scan, and only N rows + a dozen scalars
-    reach the driver."""
-    import math
-
-    if not key_cols:
-        raise ValueError("skew_report needs at least one key column")
-    hist = df.groupBy(*[F.col(c) for c in key_cols]).agg(
-        F.count(F.lit(1)).alias("__n")
-    )
-    hist = hist.persist()
-    try:
-        stats = hist.agg(
-            F.sum("__n").alias("rows"),
-            F.count(F.lit(1)).alias("keys"),
-            F.max("__n").alias("mx"),
-            F.expr("approx_percentile(__n, 0.99)").alias("p99"),
-            F.avg("__n").alias("avg"),
-            F.sum(F.col("__n").cast("double") * F.col("__n")).alias("sq"),
-        ).first()
-        top = [
-            (*[r[c] for c in key_cols], r["__n"])
-            for r in hist.orderBy(F.desc("__n")).limit(top_n).collect()
-        ]
-    finally:
-        hist.unpersist()
-    n_rows, n_keys = stats["rows"], stats["keys"]
-    avg = stats["avg"]
-    return {
-        "n_rows": n_rows,
-        "n_keys": n_keys,
-        "avg_rows_per_key": avg,
-        "max_key_rows": stats["mx"],
-        "max_key_share": (stats["mx"] / n_rows) if n_rows else None,
-        "p99_key_rows": stats["p99"],
-        "hhi": (stats["sq"] / (n_rows * n_rows)) if n_rows else None,
-        "suggested_salt": min(256, max(1, math.ceil(stats["mx"] / avg)))
-        if avg
-        else 1,
-        "top_keys": top,
-    }
 
 
 def freshness_report(

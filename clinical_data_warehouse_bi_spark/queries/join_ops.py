@@ -344,8 +344,8 @@ def q_scalar_lookup_default(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: registry retirement (slot went to the round-8 verdict's named
 #: candidates; witnesses: q_asof_next_order keeps the registered
 #: interval-join machinery under the hash gate, and
-#: joins.interval_overlap_join_binned keeps the binned-range family
-#: under hypothesis brute-force equality). The full cross-engine
+#: joins.range_join_binned itself stays under hypothesis brute-force
+#: equality in tests/test_properties.py). The full cross-engine
 #: value check stays live in tests/test_retired_parity.py.
 SQL_RANGE_JOIN = """
     SELECT l.l_orderkey, l.l_linenumber, o.o_orderkey AS window_order

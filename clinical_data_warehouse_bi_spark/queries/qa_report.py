@@ -512,20 +512,21 @@ def q_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join/aggregation skew screen as a relation: the top-{SKEW_TOP_N}
     heaviest join keys (orders per customer) with their row share and
     the per-key salt factor that would level them to average — the
-    DataFrame face of qa.skew_report (whose dict form drives the
-    plan choice: broadcast vs AQE skew-split vs explicit salting)
-    and the diagnostic a 100 TB join runs BEFORE discovering its hot
-    key the slow way. REGISTERED round 12 (round-11 verdict item 1);
-    slot freed by retiring q_stream_dedup_dual (witnesses in its
-    docstring). The full oracle comparison against SQL_SKEW_REPORT
-    also stays in tests/test_retired_parity.py.
+    input to the plan choice (broadcast vs AQE skew-split vs
+    explicit salting) and the diagnostic a 100 TB join runs BEFORE
+    discovering its hot key the slow way. REGISTERED round 12
+    (round-11 verdict item 1); slot freed by retiring
+    q_stream_dedup_dual (witnesses in its docstring). The full oracle
+    comparison against SQL_SKEW_REPORT also stays in
+    tests/test_retired_parity.py.
 
     Quantization: share is floor(n/total * 1e9 + 0.5) BIGINT — n and
     total are exact integers, the division is one IEEE op, and floor
     has one defined result in both engines (the q_outlier_report
     z_e9 convention; a decimal cast would consult each engine's tie
-    rule). suggested_salt = ceil(n/avg) capped to [1, 256], the
-    qa.skew_report formula per key.
+    rule). suggested_salt = least(256, greatest(1, ceil(n / avg_n))),
+    where avg_n is the mean rows per key: the number of salt shards
+    that would bring this key down to an average key's size.
 
     Scale shape: ONE groupBy to the per-key histogram (map-side
     partials), scalar totals as a 1-row broadcast over the
@@ -536,8 +537,8 @@ def q_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     not guaranteed across a broadcast-subtree boundary, and without
     the persist the orders scan + groupBy would run twice. A global
     window over the histogram would fuse the passes but serialize
-    n_keys rows through one partition — wrong at scale; persist of
-    the slim (key, n) relation is the qa.skew_report pattern."""
+    n_keys rows through one partition — wrong at scale; the slim
+    (key, n) relation is cheap to persist."""
 
     o = load_tables(spark, sf_dir, ("orders",))["orders"]
     hist = o.groupBy("o_custkey").agg(F.count(F.lit(1)).alias("n")).persist()

@@ -157,7 +157,7 @@ _CHECK_ORDER = [
     # identical slim keep-first window + rebuild over content-defined
     # boundaries — q_range_join — witnesses: q_asof_next_order's
     # registered interval machinery + the hypothesis brute-force
-    # equality tests on joins.interval_overlap_join_binned — and
+    # equality tests on joins.range_join_binned — and
     # q_approx_stats — rows-only, replaced by a STRONGER
     # accuracy-vs-exact pytest. The three SQL-expressible retirees
     # keep full oracle comparisons in tests/test_retired_parity.py.)
@@ -418,14 +418,14 @@ def _slice_wrap(seq: list, start: int, n: int) -> list:
     return [seq[(start + i) % len(seq)] for i in range(n)]
 
 
-def rotation_batch(round_: int | None = None) -> list[RotationSpec]:
+def rotation_batch() -> list[RotationSpec]:
     """The pool entries under the hard gate this round."""
-    r = rotation_round() if round_ is None else round_
+    r = rotation_round()
     off = ((r - _ROTATION_EPOCH) * ROTATION_SLOTS) % len(ROTATION_POOL)
     return _slice_wrap(ROTATION_POOL, off, ROTATION_SLOTS)
 
 
-def rotation_donors_out(round_: int | None = None) -> list[str]:
+def rotation_donors_out() -> list[str]:
     """The registered entries sitting this round out (still fully
     oracle-checked in pytest via ``benched_queries``). The donor
     count auto-absorbs registry growth past the driver cap: with R
@@ -435,7 +435,7 @@ def rotation_donors_out(round_: int | None = None) -> list[str]:
     gate exposure immediately without a same-round retirement, and
     every extra donor keeps its full pytest oracle check."""
     _load()
-    r = rotation_round() if round_ is None else round_
+    r = rotation_round()
     n = ROTATION_SLOTS + max(0, len(_REGISTRY) - DRIVER_CAP)
     if n > len(ROTATION_DONORS):
         raise ValueError(

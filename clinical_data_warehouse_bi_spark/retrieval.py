@@ -76,8 +76,6 @@ def bm25_topk(
     *,
     text_col: str = "text",
     id_col: str = "doc_id",
-    k1: float = DEFAULT_K1,
-    b: float = DEFAULT_B,
 ) -> DataFrame:
     """Top-k documents for one query, shuffle-free scoring.
 
@@ -125,7 +123,7 @@ def bm25_topk(
     avgdl = F.col("sum_dl").cast("double") / F.col("n_docs")
     contribs = [
         _idf(F.col(f"df_{i}"), F.col("n_docs"))
-        * _tf_norm(F.col(f"tf_{i}"), F.col("dl"), avgdl, k1, b)
+        * _tf_norm(F.col(f"tf_{i}"), F.col("dl"), avgdl, DEFAULT_K1, DEFAULT_B)
         for i in range(len(query_terms))
     ]
     total = contribs[0]
@@ -143,11 +141,8 @@ def bm25_topk_oracle_sql(
     query_terms: list[str],
     k: int,
     *,
-    table: str = "documents",
     text_col: str = "text",
     id_col: str = "doc_id",
-    k1: float = DEFAULT_K1,
-    b: float = DEFAULT_B,
 ) -> str:
     """DuckDB oracle mirroring bm25_topk expression-for-expression."""
     tf_exprs = ", ".join(
@@ -161,6 +156,7 @@ def bm25_topk_oracle_sql(
     )
     # parenthesization mirrors the Spark expression tree exactly
     # (idf * (saturated_tf)) so IEEE association matches
+    k1, b = DEFAULT_K1, DEFAULT_B
     contribs = " + ".join(
         f"(ln((n_docs - df_{i} + 0.5) / (df_{i} + 0.5) + 1.0)"
         f" * ((tf_{i} * {k1 + 1.0}) /"
@@ -172,7 +168,7 @@ def bm25_topk_oracle_sql(
       SELECT {id_col},
              len(regexp_extract_all(lower({text_col}), '[a-z0-9]+')) AS dl,
              {tf_exprs}
-      FROM {table}),
+      FROM documents),
     stats AS (
       SELECT count(*) AS n_docs, sum(dl) AS sum_dl, {df_exprs} FROM per_doc)
     SELECT {id_col}, score FROM (
@@ -420,9 +416,6 @@ def bm25_index_search(
     path: str,
     query_terms: list[str],
     k: int,
-    *,
-    k1: float = DEFAULT_K1,
-    b: float = DEFAULT_B,
 ) -> DataFrame:
     """Serve a query FROM the persisted index: bucket selection is
     driver-side (portable md5), the postings scan prunes to those
@@ -454,7 +447,7 @@ def bm25_index_search(
     scored = postings.join(F.broadcast(dfreq), "term")
     avgdl = F.lit(float(sum_dl)) / F.lit(float(n_docs))
     contrib = _idf(F.col("df_count"), F.lit(n_docs)) * _tf_norm(
-        F.col("tf").cast("double"), F.col("dl"), avgdl, k1, b
+        F.col("tf").cast("double"), F.col("dl"), avgdl, DEFAULT_K1, DEFAULT_B
     )
     # Per-doc total in FIXED query-term order, not F.sum(contrib) in
     # nondeterministic groupBy arrival order: each per-term sum folds
@@ -581,7 +574,6 @@ def hybrid_topk(
     k: int,
     *,
     pool: int = 50,
-    rrf_k: int = 60,
 ) -> DataFrame:
     """Hybrid lexical + dense retrieval: BM25 top-``pool`` (the
     shuffle-free single-query path) fused with brute-force cosine
@@ -627,7 +619,7 @@ def hybrid_topk(
         .limit(pool)
         .withColumn("rank", F.row_number().over(Window.orderBy(*dense_order)))
     )
-    return rrf_fuse([bm_ranked, dense], k, rrf_k=rrf_k)
+    return rrf_fuse([bm_ranked, dense], k)
 
 
 def hybrid_topk_served_graph(

@@ -1,8 +1,7 @@
 """Similarity-search engine pieces beyond the oracle-checked queries
 (queries/similarity.py): the Arrow-batched numpy path for brute-force
 top-k and pairwise cosine, sign-LSH bands, a sampled k-means IVF
-quantizer, IVF-PQ search with its persisted index, and the
-embedding covariance / Fréchet drift statistics.
+quantizer, and IVF-PQ search with its persisted index.
 
 Why a second implementation of cosine top-k: the SQL-expression form
 (F.aggregate fold over arrays) is portable and oracle-checkable, but
@@ -260,19 +259,16 @@ def sampled_kmeans_centroids(
     vectors: DataFrame,
     n_clusters: int,
     seed: int = 7,
-    sample_cap: int = 4096,
-    iters: int = 20,
-    n_init: int = 8,
 ) -> list[tuple[int, list[float]]]:
     """Learned IVF centroids the way a production quantizer is
     actually trained: Lloyd's k-means on a BOUNDED sample, fit on the
-    driver in numpy. The sample is the ``sample_cap`` hash-smallest
-    vec_ids — a per-partition top-M + k-row merge (TakeOrdered), no
-    full shuffle, deterministic and content-independent at any scale —
-    so the driver holds O(sample_cap x dims) regardless of table
-    size. k-means++ seeding + empty-cluster reseeding, fixed
-    iteration count, all driven by a seeded RNG: the same data gives
-    the same centroids run-to-run.
+    driver in numpy. The sample is the 4096 hash-smallest vec_ids —
+    a per-partition top-M + k-row merge (TakeOrdered), no full
+    shuffle, deterministic and content-independent at any scale — so
+    the driver holds O(4096 x dims) regardless of table size.
+    k-means++ seeding + empty-cluster reseeding, 8 restarts of a
+    fixed iteration count, all driven by a seeded RNG: the same data
+    gives the same centroids run-to-run.
 
     Compared to distributing the fit (MLlib): a quantizer needs only
     a representative sample (FAISS trains IVF
@@ -284,21 +280,19 @@ def sampled_kmeans_centroids(
     sample = (
         vectors.select("vec_id", "embedding")
         .orderBy(F.md5(F.col("vec_id").cast("string")))
-        .limit(sample_cap)
+        .limit(4096)
         .collect()
     )
     sample.sort(key=lambda r: r["vec_id"])  # RNG-independent order
     x = np.array([list(r["embedding"]) for r in sample], dtype=np.float64)
-    best = _lloyd(x, n_clusters, seed, iters, n_init)
+    best = _lloyd(x, n_clusters, seed, n_init=8)
     return [(j, [float(v) for v in best[j]]) for j in range(n_clusters)]
 
 
-def _lloyd(
-    x: np.ndarray, n_clusters: int, seed: int, iters: int, n_init: int
-) -> np.ndarray:
+def _lloyd(x: np.ndarray, n_clusters: int, seed: int, n_init: int) -> np.ndarray:
     """Seeded restarted Lloyd's k-means over a driver-side sample —
     the shared fit core of the learned-IVF quantizer and the PQ
-    sub-quantizers. k-means++ init, fixed iteration count, distinct
+    sub-quantizers. k-means++ init, 20 iterations, distinct
     farthest-point reseeding of empty clusters, lowest-inertia
     restart wins; byte-deterministic for a given (x, seed)."""
     xsq = np.einsum("ij,ij->i", x, x)
@@ -323,7 +317,7 @@ def _lloyd(
             )
             centers.append(x[rng.choice(len(x), p=probs)])
         c = np.array(centers)
-        for _ in range(iters):
+        for _ in range(20):
             d2 = dists(c)
             assign = d2.argmin(axis=1)
             far = None  # farthest-first order, computed on demand
@@ -407,8 +401,6 @@ def train_pq_codebooks(
     ksub: int = 256,
     seed: int = 7,
     sample_cap: int = 4096,
-    iters: int = 20,
-    n_init: int = 4,
 ) -> list[list[list[float]]]:
     """Product-quantization codebooks (Jegou et al., "Product
     Quantization for Nearest Neighbor Search"): split the D dims into
@@ -442,7 +434,7 @@ def train_pq_codebooks(
     books = []
     for sub in range(m):
         xs = x[:, sub * dsub : (sub + 1) * dsub]
-        c = _lloyd(xs, k, seed + 1000 * sub, iters, n_init)
+        c = _lloyd(xs, k, seed + 1000 * sub, n_init=4)
         books.append([[float(v) for v in row] for row in c])
     return books
 
@@ -788,89 +780,3 @@ def search_ivf_pq_index(
         .select("qid", "nid", "rank", F.round("cos", 4).alias("cosine"))
     )
 
-
-def covariance_stats(vectors: DataFrame, vec_col: str = "embedding") -> dict:
-    """Exact mean vector and covariance matrix of an embedding
-    column, distributed: every Arrow batch reduces to ONE partial row
-    (count n, sum vector d, Gram matrix d*d flattened), the driver
-    sums the per-batch partials and assembles cov = E[xx^T] - mm^T.
-    Driver traffic is O(batches x d^2) — for d=64 that is 32 KB per
-    batch regardless of how many billions of rows each batch covers;
-    the vector table itself never shuffles and never leaves the
-    executors.
-
-    Returns {"n": int, "mean": (d,) float64, "cov": (d, d) float64}."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            mat = np.array(pdf[vec_col].tolist(), dtype=np.float64)  # N x D
-            yield pd.DataFrame({
-                "n": [mat.shape[0]],
-                "s": [mat.sum(axis=0).tolist()],
-                "g": [(mat.T @ mat).ravel().tolist()],
-            })
-
-    parts = vectors.select(vec_col).mapInPandas(
-        op, "n long, s array<double>, g array<double>"
-    ).collect()
-    if not parts:
-        raise ValueError("covariance_stats: empty input")
-    n = sum(r.n for r in parts)
-    s = np.sum([np.asarray(r.s) for r in parts], axis=0)
-    g = np.sum([np.asarray(r.g) for r in parts], axis=0)
-    d = s.shape[0]
-    mean = s / n
-    cov = g.reshape(d, d) / n - np.outer(mean, mean)
-    return {"n": n, "mean": mean, "cov": cov}
-
-
-def frechet_distance(
-    a: DataFrame,
-    b: DataFrame,
-    vec_col: str = "embedding",
-    eps: float = 1e-9,
-) -> float:
-    """Fréchet distance between two embedding distributions under
-    the Gaussian approximation (Dowson & Landau 1982; the FID
-    construction, Heusel 2017): |m_a - m_b|^2 + Tr(C_a + C_b -
-    2 (C_a C_b)^{1/2}) — the drift scalar that tells an embedding
-    pipeline its serving distribution has moved off the one the ANN
-    index / classifier was fitted on (it flags upstream distribution
-    shift even when the quantizer still reconstructs well).
-
-    Distributed shape: one covariance_stats pass per side (each
-    Arrow batch reduces to a (n, sum, Gram) partial — vectors never
-    shuffle, never reach the driver); the d x d matrix square root
-    is a driver-side numpy eigendecomposition, O(d^3) on a matrix
-    that fits in a cache line budget, not a Spark job — pure numpy
-    via the symmetric sqrt(sqrt(Ca) Cb sqrt(Ca)) construction, no
-    scipy dependency. ``eps`` regularizes against tiny negative
-    eigenvalues from float roundoff (the standard FID guard)."""
-    sa = covariance_stats(a, vec_col)
-    sb = covariance_stats(b, vec_col)
-    return _frechet_from_stats(sa, sb, eps)
-
-
-def _frechet_from_stats(sa: dict, sb: dict, eps: float = 1e-9) -> float:
-    import numpy as np
-
-    mu_a, ca = np.asarray(sa["mean"]), np.asarray(sa["cov"])
-    mu_b, cb = np.asarray(sb["mean"]), np.asarray(sb["cov"])
-    d = len(mu_a)
-    # the standard FID guard: regularize the covariances themselves
-    # (a post-hoc sqrt(w + eps) correction biases the trace by
-    # O(d * sqrt(eps)) — measured at 5e-4 on identical inputs)
-    ca = ca + eps * np.eye(d)
-    cb = cb + eps * np.eye(d)
-    diff = float(((mu_a - mu_b) ** 2).sum())
-    # (C_a C_b)^{1/2} via the symmetric construction
-    # sqrt(sqrt(Ca) Cb sqrt(Ca)) — real for PSD inputs
-    wa, va = np.linalg.eigh(ca)
-    wa = np.clip(wa, 0.0, None)
-    sqrt_ca = (va * np.sqrt(wa)) @ va.T
-    inner = sqrt_ca @ cb @ sqrt_ca
-    wi = np.clip(np.linalg.eigvalsh(inner), 0.0, None)
-    tr_sqrt = float(np.sqrt(wi).sum())
-    return diff + float(np.trace(ca) + np.trace(cb)) - 2.0 * tr_sqrt

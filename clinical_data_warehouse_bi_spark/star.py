@@ -57,13 +57,14 @@ FACT_COLS = [
 ]
 
 
-def _calendar(src: DataFrame, ts: str = "event_datetime") -> DataFrame:
+def _calendar(src: DataFrame) -> DataFrame:
     """dim_date attribute derivation (Stage_area.sql:289-301 /
-    DWH.sql:124-135). MariaDB WEEKDAY+1 == Spark weekday()+1 (1=Mon);
-    DAYOFWEEK IN (1,7) == Spark dayofweek (1=Sun, 7=Sat)."""
-    c = F.col(ts)
+    DWH.sql:124-135) over ``src.event_datetime``. MariaDB WEEKDAY+1
+    == Spark weekday()+1 (1=Mon); DAYOFWEEK IN (1,7) == Spark
+    dayofweek (1=Sun, 7=Sat)."""
+    c = F.col("event_datetime")
     return src.select(
-        c.alias("event_datetime"),
+        c,
         F.month(c).alias("month"),
         F.year(c).alias("year"),
         (F.weekday(c) + F.lit(1)).alias("day_of_week"),
@@ -379,16 +380,14 @@ def build_staging(
     #    The pick-first window partitions by the join's own equi keys
     #    (+ the unique event id), so the second interval join and its
     #    window below reuse this exchange instead of adding their own.
-    #    Round 13 A/B (one process, alternating runs): the map-side
-    #    packed-broadcast form (joins.interval_pick_first_mapside)
-    #    measured SLOWER than this equi-join + shared-exchange window
-    #    form at BOTH probed scales (sf0.1: 8.5-9.4 vs 6.5-7.5 s;
-    #    256x: 32.3 vs 28.2 s whole-pipeline) — the probe/pack/
-    #    broadcast fixed costs exceed what skipping the fact exchange
-    #    saves while the exchange is one shared shuffle for both
-    #    UPDATEs. The map-side operator remains in joins.py (unit-
-    #    tested equivalent) for callers whose right side is small and
-    #    whose left is not re-exchanged anyway.
+    #    Round 13 A/B (one process, alternating runs): a map-side
+    #    packed-broadcast form (each key's intervals packed into one
+    #    sorted array, broadcast, resolved per row) measured SLOWER
+    #    than this equi-join + shared-exchange window form at BOTH
+    #    probed scales (sf0.1: 8.5-9.4 vs 6.5-7.5 s; 256x: 32.3 vs
+    #    28.2 s whole-pipeline) — the probe/pack/broadcast fixed costs
+    #    exceed what skipping the fact exchange saves while the
+    #    exchange is one shared shuffle for both UPDATEs.
     transfers = src["transfers"].select(
         F.col("subject_id").alias("t_subject"),
         F.col("hadm_id").alias("t_hadm"),
@@ -670,7 +669,6 @@ def build_dwh(
 def run_pipeline(
     src: dict[str, DataFrame],
     out_dir: str | None = None,
-    parity_keys: bool = False,
     zorder_fact: bool = False,
     zorder_opts: dict | None = None,
 ) -> dict[str, dict[str, DataFrame]]:
@@ -688,7 +686,7 @@ def run_pipeline(
     a low-cardinality column whose footer stats still serve equality
     slices. ``zorder_opts`` forwards to write_zordered (bits,
     partitions, parquet_block_bytes, normalize)."""
-    stage = build_staging(src, parity_keys=parity_keys)
+    stage = build_staging(src)
     if out_dir:
         from clinical_data_warehouse_bi_spark.io import write_layer
 
@@ -696,7 +694,7 @@ def run_pipeline(
         for name, df in stage.items():
             write_layer(df, f"{out_dir}/stage_area/{name}")
             stage[name] = spark.read.parquet(f"{out_dir}/stage_area/{name}")
-    dwh = build_dwh(stage, parity_keys=parity_keys)
+    dwh = build_dwh(stage)
     if out_dir:
         from clinical_data_warehouse_bi_spark.io import write_layer
 

@@ -30,13 +30,13 @@ EVENT_SCHEMA = StructType(
 )
 
 
-def read_event_stream(spark: SparkSession, path: str, schema=None) -> DataFrame:
+def read_event_stream(spark: SparkSession, path: str) -> DataFrame:
     """File-source stream: each new parquet file in `path` is a
     micro-batch. At scale the same operators run off Kafka — only
     this reader changes."""
     return (
         spark.readStream.format("parquet")
-        .schema(schema or EVENT_SCHEMA)
+        .schema(EVENT_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .load(path)
     )

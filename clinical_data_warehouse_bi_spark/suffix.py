@@ -477,8 +477,6 @@ def strip_duplicate_spans(
     winnow_w: int = 1,
     id_col: str = "doc_id",
     text_col: str = "text",
-    spans: DataFrame | None = None,
-    spans_broadcast_max_rows: int = 2_000_000,
     keep_first: bool = False,
 ) -> DataFrame:
     """(id_col, text): the corpus with duplicated spans' tokens
@@ -491,21 +489,19 @@ def strip_duplicate_spans(
     training pipeline feeds the tokenizer anyway; callers needing
     original bytes should treat the spans relation as a mask instead.
 
-    The spans side is size-gated-broadcast; past the budget the join
-    flips to a shuffle keyed on the UNIFORM doc id (the corpus-clean
-    convention: text shuffles once by doc_id, never by a content
-    key)."""
+    The spans side is size-gated-broadcast up to 2M rows; past that
+    the join flips to a shuffle keyed on the UNIFORM doc id (the
+    corpus-clean convention: text shuffles once by doc_id, never by
+    a content key)."""
     from clinical_data_warehouse_bi_spark.joins import size_gated_broadcast
 
-    if spans is None:
-        spans = duplicate_spans(
-            docs, min_tokens, winnow_w, id_col, text_col,
-            keep_first=keep_first,
-        )
+    spans = duplicate_spans(
+        docs, min_tokens, winnow_w, id_col, text_col, keep_first=keep_first
+    )
     per_doc = spans.groupBy("doc_id").agg(
         F.collect_list(F.struct("span_start", "span_end")).alias("__spans")
     )
-    side, _ = size_gated_broadcast(per_doc, spans_broadcast_max_rows)
+    side, _ = size_gated_broadcast(per_doc, 2_000_000)
     rel = _tok_rel(docs, id_col, text_col).join(side, "doc_id", "left")
     kept = F.expr(
         "array_join(transform(filter(transform("

@@ -111,13 +111,12 @@ def minhash_wide(
     )
 
 
-def lsh_band_signatures_wide(
-    wide: DataFrame, num_seeds: int = MINHASH_SEEDS, bands: int = MINHASH_BANDS
-) -> DataFrame:
+def lsh_band_signatures_wide(wide: DataFrame) -> DataFrame:
     """(doc_id, band_id, band_sig) from the wide signature matrix:
     band_sig = md5 of the band's minhashes joined in seed order —
     pure projection + unpivot, no shuffle."""
-    rows = num_seeds // bands
+    bands = MINHASH_BANDS
+    rows = MINHASH_SEEDS // bands
     exprs = []
     for b in range(bands):
         cols = ", ".join(f"mh{b * rows + r}" for r in range(rows))
@@ -716,40 +715,6 @@ def remove_boilerplate(
     )
 
 
-def dedup_lines(
-    docs: DataFrame, text_col: str = "text"
-) -> DataFrame:
-    """WITHIN-document duplicate-line removal (keep the first
-    occurrence, preserve order) — the third member of the line
-    hygiene family: remove_boilerplate handles cross-doc furniture,
-    chunk/cdc dedup handle cross-doc content, this handles the
-    page that repeats its own navigation or footer inline (a Gopher
-    cleaning rule). Pure per-row array expression: line i survives
-    iff it is the FIRST occurrence (array_position == own index).
-    Quadratic in a document's OWN line count — bounded by page
-    structure, never by corpus size; empty/whitespace lines are
-    dropped like remove_boilerplate does. Adds n_removed_lines."""
-    lines = F.expr(f"filter(split({text_col}, '\\n'), x -> length(trim(x)) > 0)")
-    out_cols = [c for c in docs.columns if c != text_col]
-    return (
-        docs.withColumn("__lines", lines)
-        .withColumn(
-            "__kept",
-            F.expr(
-                "filter(transform(__lines, (x, i) -> named_struct('t', x, 'i', i)),"
-                " s -> array_position(__lines, s.t) = s.i + 1)"
-            ),
-        )
-        .select(
-            *out_cols,
-            F.expr("array_join(transform(__kept, s -> s.t), '\\n')").alias(text_col),
-            (F.size("__lines") - F.size("__kept")).cast("bigint").alias(
-                "n_removed_lines"
-            ),
-        )
-    )
-
-
 def remove_repeated_spans(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -1205,24 +1170,18 @@ def vocabulary_divergence(
     corpus_b: DataFrame,
     text_col: str = "text",
     top_k: int = 50,
-    min_count: int = 1,
 ) -> DataFrame:
-    """Token-distribution divergence between two corpus snapshots —
-    the text twin of qa.drift_report's numeric PSI: before swapping a
-    refreshed crawl (or a re-filtered mix) into a training run, the
-    question is WHICH tokens moved and by how much. Computes the
-    per-token contribution to the Jensen-Shannon divergence between
-    the two corpora's unigram distributions (base-2 JS: symmetric,
-    bounded [0, 1], defined even where one side is zero — KL is not)
-    and returns the ``top_k`` largest contributors:
-    (token, p_a, p_b, js_contrib) ordered by (js_contrib DESC, token
-    ASC). Summing js_contrib over the FULL vocabulary (top_k = a
-    large bound) gives the total JS divergence.
-
-    Tokens below ``min_count`` occurrences in BOTH corpora are
-    dropped (hapax noise dominates otherwise); probabilities are
-    computed over the full pre-filter token mass so the report's
-    p_a/p_b are true corpus frequencies.
+    """Token-distribution divergence between two corpus snapshots:
+    before swapping a refreshed crawl (or a re-filtered mix) into a
+    training run, the question is WHICH tokens moved and by how much.
+    Computes the per-token contribution to the Jensen-Shannon
+    divergence between the two corpora's unigram distributions
+    (base-2 JS: symmetric, bounded [0, 1], defined even where one
+    side is zero — KL is not) and returns the ``top_k`` largest
+    contributors: (token, p_a, p_b, js_contrib) ordered by
+    (js_contrib DESC, token ASC), where p_a/p_b are true corpus
+    frequencies. Summing js_contrib over the FULL vocabulary
+    (top_k = a large bound) gives the total JS divergence.
 
     Scale shape: one count aggregation per corpus whose exchange
     carries (token, count) — single tokens are a bounded vocabulary,
@@ -1240,7 +1199,7 @@ def vocabulary_divergence(
         )
 
     return divergence_from_counts(
-        counts(corpus_a, "a"), counts(corpus_b, "b"), top_k, min_count
+        counts(corpus_a, "a"), counts(corpus_b, "b"), top_k
     )
 
 
@@ -1248,7 +1207,6 @@ def divergence_from_counts(
     ca: DataFrame,
     cb: DataFrame,
     top_k: int = 50,
-    min_count: int = 1,
 ) -> DataFrame:
     """vocabulary_divergence's counts-based core: takes the two
     (token, n_a) / (token, n_b) count relations directly — the shape
@@ -1262,7 +1220,6 @@ def divergence_from_counts(
     joined = (
         ca.join(cb, "token", "full_outer")
         .na.fill({"n_a": 0, "n_b": 0})
-        .where((F.col("n_a") >= min_count) | (F.col("n_b") >= min_count))
         .crossJoin(F.broadcast(tot_a))
         .crossJoin(F.broadcast(tot_b))
     )

@@ -28,12 +28,11 @@ def resample_fill(
     key_col: str = "user_id",
     ts_col: str = "ts",
     val_col: str = "value",
-    step: str = "1 day",
     how: str = "ffill",
     exact: bool = False,
 ) -> DataFrame:
     """(key, bucket timestamp, n_obs bigint, value double): one row
-    per ``step`` bucket from each key's first to last observation.
+    per day bucket from each key's first to last observation.
     ``value`` is the bucket's SUM of ``val_col``; empty buckets have
     n_obs = 0 and value by ``how``: 'ffill' carries the last
     observed bucket value forward, 'zero' fills 0.0, 'null' leaves
@@ -46,10 +45,7 @@ def resample_fill(
     for reporting."""
     if how not in ("ffill", "zero", "null"):
         raise ValueError(f"unknown fill policy: {how!r}")
-    bucket = F.date_trunc("day" if step == "1 day" else "hour", ts_col)
-    if step not in ("1 day", "1 hour"):
-        raise ValueError("step must be '1 day' or '1 hour'")
-    unit = "day" if step == "1 day" else "hour"
+    bucket = F.date_trunc("day", ts_col)
     if exact:
         vexpr = F.col(val_col).cast("decimal(18,6)")
     else:
@@ -82,7 +78,7 @@ def resample_fill(
     grid = spans.select(
         "__k",
         F.explode(
-            F.expr(f"sequence(__lo, __hi, interval 1 {unit})")
+            F.expr("sequence(__lo, __hi, interval 1 day)")
         ).alias("__b"),
     )
     dense = grid.join(per_bucket, ["__k", "__b"], "left").select(

@@ -1,11 +1,10 @@
 """AQE runtime re-planning evidence: the session factory turns on
-adaptive skew-join splitting (session.py), and joins.salted_join
-exists for the cases AQE cannot see. This test proves the AQE path
-actually engages on this build — a skewed sort-merge join's FINAL
-adaptive plan must mark the skewed side split (skew=true) — so the
-100 TB skew story is (a) AQE first, (b) salting where AQE can't
-reach (e.g. aggregations), with both halves verified rather than
-asserted."""
+adaptive skew-join splitting (session.py). This test proves the AQE
+path actually engages on this build — a skewed sort-merge join's
+FINAL adaptive plan must mark the skewed side split (skew=true) — so
+the 100 TB skew story for joins rests on a verified mechanism, not
+an asserted one. q_skew_report sizes the salt a caller would need
+where AQE cannot reach (e.g. aggregations)."""
 
 from __future__ import annotations
 

@@ -57,7 +57,7 @@ def test_distributed_matches_builtin(spark, sf_dir):
 
 
 def test_row_gated_native_path(spark, sf_dir):
-    """n_rows below native_rows_max routes to the single-job,
+    """n_rows below the 16M-entry gate routes to the single-job,
     single-phase native aggregate (no probe, no bucketed jobs) and
     returns the same values; native_distinct_max=0 still overrides
     the gate to the bucketed path."""

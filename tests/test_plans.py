@@ -167,24 +167,6 @@ def test_semi_join_for_integrity_cleanup(spark, sf_dir):
     assert "LeftSemi" in plan
 
 
-def test_salted_join_matches_plain_join(spark, sf_dir):
-    """Salting must be a pure physical rewrite: byte-identical result
-    multiset to the plain equi-join."""
-    from clinical_data_warehouse_bi_spark.joins import salted_join
-
-    orders = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    cust = read_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    plain = orders.join(cust, orders["o_custkey"] == cust["c_custkey"]).select(
-        "o_orderkey", "c_mktsegment"
-    )
-    salted = salted_join(orders, cust, "o_custkey", "c_custkey", buckets=8).select(
-        "o_orderkey", "c_mktsegment"
-    )
-    assert salted.count() == plain.count()
-    assert salted.exceptAll(plain).count() == 0
-    assert plain.exceptAll(salted).count() == 0
-
-
 def test_range_join_auto_bin_no_nested_loop(spark, sf_dir):
     """The no-equi-key range join must stay a hash join on bin ids
     with the self-tuned (median-interval) bin width — a regression to

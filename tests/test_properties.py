@@ -47,27 +47,6 @@ def test_orphan_cleanup_keeps_nulls_and_matches(spark, fact, dim):
 
 @settings(**SETTINGS)
 @given(
-    left=st.lists(st.tuples(keys, st.integers(0, 100)), min_size=0, max_size=15),
-    right=st.lists(st.tuples(keys, st.integers(0, 100)), min_size=0, max_size=15),
-)
-@pytest.mark.slow
-def test_salted_join_equals_plain_join(spark, left, right):
-    """Salting is a pure physical rewrite: same multiset as the plain
-    inner equi-join for any inputs, including duplicate keys."""
-    l_df = spark.createDataFrame([Row(k=k, a=a) for k, a in left] or [], "k int, a int")
-    r_df = spark.createDataFrame([Row(rk=k, b=b) for k, b in right] or [], "rk int, b int")
-    got = sorted(
-        (r.k, r.a, r.b)
-        for r in joins.salted_join(l_df, r_df, "k", "rk", buckets=4).collect()
-    )
-    want = sorted(
-        (lk, a, b) for lk, a in left for rk, b in right if lk == rk
-    )
-    assert got == want
-
-
-@settings(**SETTINGS)
-@given(
     rows=st.lists(
         st.tuples(keys, st.integers(0, 20), st.integers(0, 20)), min_size=0, max_size=15
     )
@@ -403,65 +382,6 @@ def test_random_hyperplane_recall_beats_axis_aligned(spark):
     assert r_rot > 0.6, r_rot
 
 
-def test_salt_buckets_self_tune_on_hot_key(spark):
-    """VERDICT r2 #5: salted_join(buckets=None) must size its shards
-    from the observed key skew so the hottest key's rows plan under
-    target_rows_per_task per task, without caller hints."""
-    from clinical_data_warehouse_bi_spark.joins import (
-        _salted_left,
-        estimate_salt_buckets,
-        salted_join,
-    )
-
-    # one hot key (5000 rows) among cold keys (20 rows each)
-    rows = [(0, i) for i in range(5000)] + [
-        (k, i) for k in range(1, 11) for i in range(20)
-    ]
-    left = spark.createDataFrame(rows, "k long, a long").repartition(8)
-    right = spark.createDataFrame([(k, k * 10) for k in range(11)], "rk long, b long")
-
-    target = 1000
-    buckets = estimate_salt_buckets(left, "k", target_rows_per_task=target)
-    assert buckets >= 5  # 5000-row hot key / 1000-per-task
-
-    # the salted relation really does bound rows per (key, salt) task
-    per_task = (
-        _salted_left(left, buckets)
-        .groupBy("k", "__salt")
-        .count()
-        .agg(F.max("count").alias("mx"))
-        .first()["mx"]
-    )
-    assert per_task <= 2 * target  # miid salt is uniform up to ~2x
-
-    # and the auto-tuned join is still a plain equi-join semantically
-    got = sorted(
-        (r["k"], r["a"], r["b"])
-        for r in salted_join(left, right, "k", "rk", target_rows_per_task=target)
-        .collect()
-    )
-    want = sorted((k, a, k * 10) for k, a in rows)
-    assert got == want
-
-
-def test_salted_join_streaming_requires_explicit_buckets(spark, tmp_path):
-    """buckets=None needs an eager probe of `left` — must raise a
-    clear error on a streaming frame instead of AnalysisException."""
-    import pytest
-
-    from clinical_data_warehouse_bi_spark.joins import salted_join
-
-    spark.createDataFrame([(1, 1)], "k long, a long").write.mode(
-        "overwrite"
-    ).parquet(str(tmp_path / "src"))
-    stream = spark.readStream.schema("k long, a long").parquet(
-        str(tmp_path / "src")
-    )
-    right = spark.createDataFrame([(1, 2)], "rk long, b long")
-    with pytest.raises(ValueError, match="explicit buckets"):
-        salted_join(stream, right, "k", "rk")
-
-
 def test_range_join_streaming_requires_explicit_bin_width(spark, tmp_path):
     """bin_width=None self-tunes via an eager scan of `right` — must
     raise a clear error on a streaming right side (ADVICE r2)."""
@@ -789,40 +709,6 @@ def test_fuzzy_blocked_pairs_match_brute_force(spark):
                     expected.add((ia, ib, d))
     assert got == expected
     assert (6, 7, 2) in expected  # the pure-insertion distance-2 pair survived
-
-
-def test_profile_table_matches_duckdb(spark, sf_dir, duck):
-    """qa.profile_table vs a hand-written DuckDB profile of the same
-    columns: counts exact; min/max computed on the NATIVE type in
-    both engines (numeric/date ordering — the round-7 advice catch:
-    a lexicographic min over string casts reports max '9.0' for a
-    quantity column reaching 50) and only rendered as strings."""
-    from clinical_data_warehouse_bi_spark.io import read_table
-    from clinical_data_warehouse_bi_spark.qa import profile_table
-
-    cols = ["l_orderkey", "l_quantity", "l_returnflag", "l_shipdate"]
-    li = read_table(spark, sf_dir, "lineitem")
-    got = {
-        r.column: (r.n_rows, r.n_nulls, r.n_distinct, r.min_value, r.max_value)
-        for r in profile_table(li, cols).collect()
-    }
-    # the numeric column's max must be numerically largest, not
-    # lexicographically largest
-    assert float(got["l_quantity"][4]) >= 10.0
-    for c in cols:
-        row = duck.execute(
-            f"SELECT count(*), sum(CASE WHEN {c} IS NULL THEN 1 ELSE 0 END),"
-            f" count(DISTINCT {c}),"
-            f" CAST(min({c}) AS VARCHAR), CAST(max({c}) AS VARCHAR)"
-            " FROM lineitem"
-        ).fetchone()
-        assert got[c] == (
-            row[0],
-            row[1] or 0,
-            row[2],
-            row[3],
-            row[4],
-        ), (c, got[c], row)
 
 
 def test_paragraph_dedup_matches_python_model(spark):
@@ -1236,31 +1122,6 @@ def test_quota_sample_idempotent_and_capped(spark, docs, n):
     assert {g for g in by_g} == groups or not docs
 
 
-def test_correlation_matrix_matches_duckdb(spark, sf_dir, duck):
-    """qa.correlation_matrix vs DuckDB corr() on lineitem numerics:
-    every unordered pair, rounded coefficients equal."""
-    from clinical_data_warehouse_bi_spark.io import read_table
-    from clinical_data_warehouse_bi_spark.qa import correlation_matrix
-
-    cols = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
-    li = read_table(spark, sf_dir, "lineitem")
-    got = {
-        (r.col_a, r.col_b): r.corr
-        for r in correlation_matrix(li, cols).collect()
-    }
-    assert len(got) == 6
-    for (a, b), g in got.items():
-        w = duck.execute(
-            f"SELECT round(corr({a}, {b}), 6) FROM lineitem"
-        ).fetchone()[0]
-        assert g is not None and abs(g - w) < 2e-6, (a, b, g, w)
-    # the driver's synthetic columns are mutually independent draws,
-    # so every coefficient is near zero — which is itself the
-    # regression signal a broken feed (duplicated column, join
-    # fan-out) would flip
-    assert all(abs(v) < 0.2 for v in got.values())
-
-
 # ------------------------- content-defined chunk dedup (CDC, r8) --
 
 from clinical_data_warehouse_bi_spark import text as T  # noqa: E402
@@ -1391,162 +1252,10 @@ def test_weighted_sample_deterministic_and_excludes_nonpositive(spark):
     assert len(a) == 3
 
 
-@settings(**SETTINGS)
-@given(
-    li=st.lists(st.tuples(st.integers(0, 40), st.integers(0, 12)), min_size=0, max_size=10),
-    ri=st.lists(st.tuples(st.integers(0, 40), st.integers(0, 12)), min_size=0, max_size=10),
-    width=st.sampled_from([1, 4, 9, 16]),
-)
-@pytest.mark.slow
-def test_interval_overlap_join_equals_brute_force(spark, li, ri, width):
-    """Binned interval-overlap join == the O(L x R) predicate, every
-    true pair exactly once, for any bin width."""
-    l_df = spark.createDataFrame(
-        [Row(lid=i, llo=lo, lhi=lo + ln) for i, (lo, ln) in enumerate(li)] or [],
-        "lid int, llo int, lhi int",
-    )
-    r_df = spark.createDataFrame(
-        [Row(rid=i, rlo=lo, rhi=lo + ln) for i, (lo, ln) in enumerate(ri)] or [],
-        "rid int, rlo int, rhi int",
-    )
-    got = sorted(
-        (r.lid, r.rid)
-        for r in joins.interval_overlap_join_binned(
-            l_df, r_df, "llo", "lhi", "rlo", "rhi", width
-        ).collect()
-    )
-    want = sorted(
-        (i, j)
-        for i, (llo, lln) in enumerate(li)
-        for j, (rlo, rln) in enumerate(ri)
-        if llo <= rlo + rln and rlo <= llo + lln
-    )
-    assert got == want
-
-
-def test_interval_overlap_join_is_not_nested_loop(spark, sf_dir):
-    ev = read_table(spark, sf_dir, "events").select(
-        F.col("event_id").alias("lid"),
-        F.col("user_id").alias("llo"),
-        (F.col("user_id") + 5).alias("lhi"),
-    )
-    rv = read_table(spark, sf_dir, "events").select(
-        F.col("event_id").alias("rid"),
-        F.col("user_id").alias("rlo"),
-        (F.col("user_id") + 3).alias("rhi"),
-    )
-    from test_plans import physical_plan
-
-    plan = physical_plan(
-        joins.interval_overlap_join_binned(ev, rv, "llo", "lhi", "rlo", "rhi", 8)
-    )
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
-
-
-def test_survivorship_rules(spark):
-    rows = [
-        # cluster 1: three partial records, order by rec_id
-        (1, 1, None, "Bob", 170, "b@x.io"),
-        (1, 2, "Robert", "B", 172, None),
-        (1, 3, "Rob", None, 168, "robert@corp.example"),
-        # cluster 2: single record
-        (2, 4, "Ada", "Ada L", 160, None),
-    ]
-    df = spark.createDataFrame(
-        rows, "cluster long, rec_id long, name string, nick string,"
-        " height long, email string"
-    )
-    got = {
-        r["cluster"]: r
-        for r in joins.survivorship(
-            df,
-            "cluster",
-            {
-                "name": "first_non_null",
-                "nick": "longest",
-                "height": "max",
-                "email": "first_non_null",
-            },
-            order_col="rec_id",
-        ).collect()
-    }
-    assert got[1]["name"] == "Robert"       # first record with a name
-    assert got[1]["nick"] == "Bob"          # longest string wins
-    assert got[1]["height"] == 172
-    assert got[1]["email"] == "b@x.io"      # earliest non-null
-    assert got[2]["name"] == "Ada"
-    # one row per cluster; unknown rule rejected
-    assert len(got) == 2
-    import pytest as _pt
-
-    with _pt.raises(ValueError):
-        joins.survivorship(df, "cluster", {"name": "median"})
-
-
-def test_survivorship_single_aggregation(spark, sf_dir):
-    from test_plans import _exchange_blocks
-
-    df = read_table(spark, sf_dir, "customer")
-    blocks = [
-        b
-        for b in _exchange_blocks(
-            joins.survivorship(
-                df.withColumn("cluster", F.col("c_custkey") % 100),
-                "cluster",
-                {"c_name": "longest", "c_acctbal": "max"},
-                order_col="c_custkey",
-            )
-        )
-        if "RoundRobinPartitioning" not in b
-    ]
-    assert len(blocks) == 1  # one shuffle, however many rules
-
-
-def test_interval_overlap_join_matches_duckdb_on_events(spark, sf_dir, duck):
-    """Overlap join on REAL event-derived intervals vs DuckDB's
-    brute-force theta join — the at-scale-shape result equals the
-    O(L x R) ground truth exactly."""
-    got = sorted(
-        (r.lid, r.rid)
-        for r in joins.interval_overlap_join_binned(
-            read_table(spark, sf_dir, "events")
-            .where(F.col("event_id") < 300)
-            .select(
-                F.col("event_id").alias("lid"),
-                (F.col("user_id") * 3).alias("llo"),
-                (F.col("user_id") * 3 + F.col("event_id") % 7).alias("lhi"),
-            ),
-            read_table(spark, sf_dir, "events")
-            .where((F.col("event_id") >= 300) & (F.col("event_id") < 600))
-            .select(
-                F.col("event_id").alias("rid"),
-                (F.col("user_id") * 3 + 2).alias("rlo"),
-                (F.col("user_id") * 3 + 2 + F.col("event_id") % 5).alias("rhi"),
-            ),
-            "llo", "lhi", "rlo", "rhi", 4,
-        ).collect()
-    )
-    want = sorted(
-        (r[0], r[1])
-        for r in duck.execute("""
-            WITH l AS (SELECT event_id AS lid, user_id*3 AS llo,
-                              user_id*3 + event_id % 7 AS lhi
-                       FROM events WHERE event_id < 300),
-                 r AS (SELECT event_id AS rid, user_id*3 + 2 AS rlo,
-                              user_id*3 + 2 + event_id % 5 AS rhi
-                       FROM events WHERE event_id >= 300 AND event_id < 600)
-            SELECT lid, rid FROM l, r
-            WHERE llo <= rhi AND rlo <= lhi
-        """).fetchall()
-    )
-    assert got == want and len(got) > 0
-
-
 def test_er_to_golden_record_composition(spark):
-    """The full MDM path: fuzzy pairs -> connected components ->
-    survivorship — three planted patient spellings collapse to ONE
-    golden record with the right field survivors."""
+    """The MDM path up to the golden record: fuzzy pairs -> connected
+    components — three planted patient spellings share ONE component
+    and the other records stay alone."""
     from clinical_data_warehouse_bi_spark import graph
 
     recs = [
@@ -1569,29 +1278,14 @@ def test_er_to_golden_record_composition(spark):
     edges = pairs.select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     )
-    comp = graph.connected_components(
-        edges, vertices=df.select(F.col("rec_id").alias("id"))
-    )
-    clustered = df.join(
-        comp.select(F.col("id").alias("rec_id"), "component"), "rec_id"
-    )
-    golden = {
-        r["component"]: r
-        for r in joins.survivorship(
-            clustered,
-            "component",
-            {"name": "first_non_null", "city": "longest",
-             "email": "first_non_null"},
-            order_col="rec_id",
+    comp = {
+        r["id"]: r["component"]
+        for r in graph.connected_components(
+            edges, vertices=df.select(F.col("rec_id").alias("id"))
         ).collect()
     }
-    assert len(golden) == 3  # {1,2,3} merged; 4 and 5 alone
-    merged = golden[1]
-    assert merged["name"] == "jon smith"      # first record's spelling
-    assert merged["city"] == "Boston MA"      # longest city string
-    assert merged["email"] == "j@x.io"
-    assert golden[4]["name"] == "mary smith"
-    assert golden[5]["name"] == "li wei"
+    assert comp[1] == comp[2] == comp[3]  # {1,2,3} merged
+    assert len({comp[1], comp[4], comp[5]}) == 3  # 4 and 5 alone
 
 
 def test_remove_boilerplate_strips_furniture_only(spark):
@@ -1706,41 +1400,12 @@ def test_pivot_unpivot_roundtrip_and_guards(spark):
     )
     wide = qa.pivot_report(df, ["k"], "p", ["x", "y"], {"v": "sum"})
     assert set(wide.columns) == {"k", "x_sum_v", "y_sum_v"}
-    tall = qa.unpivot_report(wide, ["k"], ["x_sum_v", "y_sum_v"])
-    got = {(r["k"], r["metric"]): r["value"] for r in tall.collect()}
-    assert got[("a", "x_sum_v")] == 1.0 and got[("a", "y_sum_v")] == 2.0
-    assert got[("b", "x_sum_v")] == 3.0 and got[("b", "y_sum_v")] is None
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
+    got = {r["k"]: (r["x_sum_v"], r["y_sum_v"]) for r in wide.collect()}
+    assert got == {"a": (1.0, 2.0), "b": (3.0, None)}
+    with pytest.raises(ValueError):
         qa.pivot_report(df, ["k"], "p", [], {"v": "sum"})
-    with _pytest.raises(ValueError):
+    with pytest.raises(ValueError):
         qa.pivot_report(df, ["k"], "p", ["x"], {"v": "median"})
-    with _pytest.raises(ValueError):
-        qa.unpivot_report(wide, ["k"], [])
-
-
-def test_dedup_lines_keeps_first_occurrence_in_order(spark):
-    docs = spark.createDataFrame(
-        [
-            (0, "alpha\nbeta\nalpha\ngamma\nbeta"),
-            (1, "one\ntwo\nthree"),
-            (2, "same\nsame\nsame"),
-            (3, ""),
-        ],
-        ["doc_id", "text"],
-    )
-    got = {r["doc_id"]: r for r in T.dedup_lines(docs).collect()}
-    assert got[0]["text"] == "alpha\nbeta\ngamma"
-    assert got[0]["n_removed_lines"] == 2
-    assert got[1]["text"] == "one\ntwo\nthree"
-    assert got[1]["n_removed_lines"] == 0
-    assert got[2]["text"] == "same" and got[2]["n_removed_lines"] == 2
-    assert got[3]["text"] == "" and got[3]["n_removed_lines"] == 0
-    # pure map: no exchange at all
-    from test_plans import _exchange_blocks
-
-    assert not _exchange_blocks(T.dedup_lines(docs))
 
 
 def test_top_ngrams_matches_duckdb_and_never_shuffles_text(spark, sf_dir, duck):
@@ -2237,46 +1902,6 @@ def test_outlier_oracle_join_keeps_null_groups():
     nulls = {x: o for g, x, o in rows if g is None}
     assert len(nulls) == 4
     assert nulls[100.0] is True and nulls[2.0] is False
-
-
-# --------------------------------------------------- skew_report
-
-
-def test_skew_report_exact_scalars(spark):
-    from clinical_data_warehouse_bi_spark import qa
-
-    rows = [("hot", i) for i in range(80)] + [
-        (f"k{j}", j) for j in range(20)
-    ]
-    df = spark.createDataFrame(rows, "k string, x int")
-    rep = qa.skew_report(df, ["k"], top_n=3)
-    assert rep["n_rows"] == 100 and rep["n_keys"] == 21
-    assert rep["max_key_rows"] == 80
-    assert abs(rep["max_key_share"] - 0.8) < 1e-12
-    assert rep["top_keys"][0] == ("hot", 80)
-    assert len(rep["top_keys"]) == 3
-    # hot key is ~17x the mean (100/21): salting suggested
-    import math
-
-    assert rep["suggested_salt"] == min(256, math.ceil(80 / (100 / 21)))
-    # HHI: (80^2 + 20*1)/100^2 = 0.642, exact
-    assert abs(rep["hhi"] - 0.642) < 1e-12
-
-
-def test_skew_report_uniform_keys_need_no_salt(spark, sf_dir):
-    from clinical_data_warehouse_bi_spark import qa
-
-    ev = read_table(spark, sf_dir, "events")
-    rep = qa.skew_report(ev, ["user_id"])
-    assert rep["suggested_salt"] <= 4  # organic per-user counts
-    # zipf-ish organic activity: effective keys 1/hhi >> 1, no
-    # single dominating user
-    assert rep["hhi"] < 0.2 and rep["max_key_share"] < 0.2
-    assert rep["n_rows"] == ev.count()
-    import pytest
-
-    with pytest.raises(ValueError):
-        qa.skew_report(ev, [])
 
 
 # ----------------------------------------------- freshness_report
@@ -2825,135 +2450,6 @@ def test_snapshot_diff_plan_is_slim(spark, sf_dir):
             for payload in ("o_orderstatus", "o_totalprice", "o_orderdate",
                             "o_orderpriority", "o_custkey"):
                 assert payload not in line, line
-
-
-def test_interval_pick_first_mapside_matches_window_form(spark):
-    """joins.interval_pick_first_mapside == the classic equi-join +
-    window pick-first on a fixture with every edge the operator
-    handles: multi-match ties (identical payload), NULL lo/hi rows
-    (can never match), NULL join keys on the left (no match, payload
-    NULL), NULL payload among survivors (null-last ordering), and
-    no-match rows. Both the broadcast path and (via a zero budget)
-    the shuffle fallback are exercised."""
-    from pyspark.sql import functions as F
-
-    from clinical_data_warehouse_bi_spark.joins import (
-        interval_join_pick_first,
-        interval_pick_first_mapside,
-    )
-
-    left = spark.createDataFrame(
-        [
-            (1, 10, 5),    # two matching intervals -> earliest lo wins
-            (1, 10, 25),   # matches only the second interval
-            (2, 20, 5),    # right rows exist but none covers ts
-            (3, 30, 5),    # no right rows at all
-            (None, 10, 5), # NULL key: never matches
-            (4, 40, 5),    # NULL-payload vs payload tie on lo
-        ],
-        "k bigint, sub bigint, ts bigint",
-    )
-    right = spark.createDataFrame(
-        [
-            (1, 10, 0, 9, "a"),
-            (1, 10, 3, 9, "b"),    # same coverage, later lo
-            (1, 10, 20, 30, "c"),
-            (2, 20, 50, 60, "d"),
-            (2, 20, None, 9, "x"), # NULL lo can never match
-            (4, 40, 0, 9, None),   # NULL payload sorts after 'e'
-            (4, 40, 0, 9, "e"),
-        ],
-        "rk bigint, rsub bigint, lo bigint, hi bigint, pay string",
-    )
-
-    def normalize(df):
-        rows = [
-            (r["k"], r["sub"], r["ts"], r["pay"])
-            for r in df.select("k", "sub", "ts", "pay").collect()
-        ]
-        return sorted(
-            rows,
-            key=lambda t: tuple(
-                (v is not None, v) for v in t
-            ),
-        )
-
-    window_form = interval_join_pick_first(
-        left,
-        right,
-        equi=(F.col("k") == F.col("rk")) & (F.col("sub") == F.col("rsub")),
-        ts_col=F.col("ts"),
-        lo_col=F.col("lo"),
-        hi_col=F.col("hi"),
-        left_key=["k", "sub", "ts"],
-        order=[F.col("lo").asc_nulls_last(), F.col("pay").asc_nulls_last()],
-    )
-    expected = normalize(window_form)
-    assert expected == [
-        (None, 10, 5, None),
-        (1, 10, 5, "a"),
-        (1, 10, 25, "c"),
-        (2, 20, 5, None),
-        (3, 30, 5, None),
-        (4, 40, 5, "e"),
-    ]
-    for budget in (2_000_000, 0):  # broadcast path, then fallback
-        got = interval_pick_first_mapside(
-            left,
-            right,
-            on=[("k", "rk"), ("sub", "rsub")],
-            ts_col=F.col("ts"),
-            lo="lo",
-            hi="hi",
-            order_cols=["lo", "pay"],
-            payload=["pay"],
-            left_row_key=["k", "sub", "ts"],
-            max_broadcast_rows=budget,
-        )
-        assert normalize(got) == expected, budget
-
-
-def test_mapside_interval_pin_registry_bounded(spark):
-    """Round-14 advice item 4: the broadcast path's persisted packed
-    relation is handed to a bounded FIFO registry — many calls in one
-    session leave at most _PINNED_PACKED_MAX relations cached (the
-    evicted ones are unpersisted), instead of pinning one per call
-    until a session-wide clearCache."""
-    from pyspark import StorageLevel
-    from pyspark.sql import functions as F
-
-    from clinical_data_warehouse_bi_spark import joins
-
-    joins._PINNED_PACKED.clear()
-    ev0 = joins.PINNED_PACKED_EVICTIONS
-    left = spark.createDataFrame([(1, 5)], "k bigint, ts bigint")
-    evicted = []
-    for i in range(joins._PINNED_PACKED_MAX + 3):
-        right = spark.createDataFrame(
-            [(1, 0, 9, f"p{i}")], "rk bigint, lo bigint, hi bigint, pay string"
-        )
-        got = joins.interval_pick_first_mapside(
-            left, right,
-            on=[("k", "rk")], ts_col=F.col("ts"), lo="lo", hi="hi",
-            order_cols=["lo"], payload=["pay"], left_row_key=["k", "ts"],
-        )
-        assert got.collect()[0]["pay"] == f"p{i}"
-        if len(joins._PINNED_PACKED) == joins._PINNED_PACKED_MAX:
-            evicted = [joins._PINNED_PACKED[0]]
-    assert len(joins._PINNED_PACKED) == joins._PINNED_PACKED_MAX
-    # an evicted relation is no longer cached
-    for df in evicted:
-        if df not in joins._PINNED_PACKED:
-            assert df.storageLevel == StorageLevel.NONE
-    # round-16 advice: evictions are counted (observability for
-    # workloads whose concurrency outruns the cap)
-    assert joins.PINNED_PACKED_EVICTIONS - ev0 == 3
-    # and the cap is resizable at runtime
-    joins.set_pinned_packed_max(joins._PINNED_PACKED_MAX + 2)
-    try:
-        assert joins._PINNED_PACKED_MAX == 6
-    finally:
-        joins.set_pinned_packed_max(4)
 
 
 @pytest.mark.slow

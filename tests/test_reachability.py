@@ -17,7 +17,9 @@ with its tests, or add it to TEST_REFERENCES if a test of a surviving
 function uses it as its reference implementation. TESTED_ONLY lists
 the tested-only defs still waiting for their cut. A module-level
 import that its library module never names fails too: a cut must
-take the imports it orphans. No Spark work.
+take the imports it orphans. A defaulted parameter that no call in
+the repo passes fails too: an option nobody sets is a fixed value,
+so write the value in. No Spark work.
 """
 
 from __future__ import annotations
@@ -34,9 +36,6 @@ QUERIES = os.path.join(LIB, "queries")
 #: test of a surviving function checks against; each also roots
 #: whatever it calls
 TEST_REFERENCES = {
-    ("classifier.py", "train_logreg_reference"):
-        "test_classifier: numpy twin the distributed train_logreg "
-        "weights are checked against",
     ("layout.py", "morton_interleave_py"):
         "test_layout: pure-Python cross-check of layout.zorder_key",
     ("layout.py", "zorder_effectiveness"):
@@ -62,30 +61,14 @@ TEST_REFERENCES = {
 #: that is deleted or becomes reached must leave it.
 TESTED_ONLY = {
     "bpe.py": ("train_bpe", "word_histogram"),
-    "classifier.py": (
-        "_dot_expr", "calibration_table", "group_split", "predict_proba",
-        "threshold_for_keep_rate", "train_logreg", "train_test_split",
-    ),
     "io.py": (
         "compact_parquet_dir", "global_shuffle", "maintenance_lock",
         "mix_sources", "raw_to_documents", "read_evolved", "read_raw_files",
         "read_source", "temperature_mix", "write_sink", "write_sized",
         "write_training_shards",
     ),
-    "joins.py": (
-        "PINNED_PACKED_EVICTIONS", "_PINNED_PACKED", "_PINNED_PACKED_LOCK",
-        "_PINNED_PACKED_MAX", "_pin_packed", "_salted_left",
-        "estimate_salt_buckets", "interval_overlap_join_binned",
-        "interval_pick_first_mapside", "salted_join",
-        "set_pinned_packed_max", "survivorship",
-    ),
     "kpi.py": ("length_of_stay", "los_summary", "mortality_rate"),
     "percentiles.py": ("winsorize",),
-    "qa.py": (
-        "corpus_card", "correlation_matrix", "drift_report",
-        "observe_expectations", "profile_table", "schema_drift",
-        "skew_report", "unpivot_report", "zipf_profile",
-    ),
     "queries/core.py": ("exact_percentiles_bucketed",),
     "queries/dedup.py": ("q_dedup_exact",),
     "retrieval.py": (
@@ -97,10 +80,6 @@ TESTED_ONLY = {
         "k_anonymity_summary", "pii_report", "pseudonymize",
         "repetition_filter", "scrub_pii", "suppress_to_k",
     ),
-    "similarity.py": (
-        "_frechet_from_stats", "covariance_stats", "frechet_distance",
-    ),
-    "text.py": ("dedup_lines",),
 }
 TESTED_ONLY_DEFS = {
     f"{module}::{name}" for module, names in TESTED_ONLY.items()
@@ -138,13 +117,17 @@ def _unit_names(stmt: ast.stmt) -> list[str]:
     return []
 
 
-def unreached_defs() -> list[str]:
-    roots = [
+def _root_files() -> list[str]:
+    return [
         os.path.join(REPO_ROOT, "__spark_entry__.py"),
         os.path.join(REPO_ROOT, "bench.py"),
         *_py_files(os.path.join(REPO_ROOT, "perfbench")),
         *_py_files(os.path.join(REPO_ROOT, "scripts")),
     ]
+
+
+def unreached_defs() -> list[str]:
+    roots = _root_files()
     seed: set[str] = set()
     units: list[tuple[str, str, set[str]]] = []  # (file, name, uses)
     by_name: dict[str, list[int]] = defaultdict(list)
@@ -226,4 +209,66 @@ def test_library_imports_are_used():
     assert not unused, (
         "module-level imports never named in their module (drop them "
         "with the code that used them):\n  " + "\n  ".join(unused)
+    )
+
+
+def unset_options() -> list[str]:
+    """Defaulted parameters of top-level library defs that no call in
+    the roots, the library or tests/ passes, by keyword or by position.
+    Calls match by callee name alone, like the reachability pass.
+    Skipped: ``*_col``/``*_cols`` parameters (column-name plumbing),
+    TESTED_ONLY defs, defs never called by name, and defs some call
+    reaches through ``*args``/``**kwargs``."""
+    files = _root_files() + _py_files(os.path.join(REPO_ROOT, "tests"))
+    defs = []
+    passed: dict[str, set] = defaultdict(set)  # keywords and arg counts
+    splatted: set[str] = set()
+    for path in files + _py_files(LIB):
+        tree = ast.parse(open(path).read(), path)
+        if path.startswith(LIB + os.sep):
+            rel = os.path.relpath(path, LIB)
+            defs += [
+                (rel, s) for s in tree.body
+                if isinstance(s, (ast.FunctionDef, ast.AsyncFunctionDef))
+            ]
+        for n in ast.walk(tree):
+            if not isinstance(n, ast.Call):
+                continue
+            if isinstance(n.func, ast.Name):
+                name = n.func.id
+            elif isinstance(n.func, ast.Attribute):
+                name = n.func.attr
+            else:
+                continue
+            if any(isinstance(a, ast.Starred) for a in n.args) or any(
+                k.arg is None for k in n.keywords
+            ):
+                splatted.add(name)
+            passed[name] |= {k.arg for k in n.keywords} | {len(n.args)}
+    out = []
+    for rel, d in defs:
+        if (d.name not in passed or d.name in splatted
+                or d.name in TESTED_ONLY.get(rel, ())):
+            continue
+        n_pos = max(i for i in passed[d.name] if isinstance(i, int))
+        args = d.args.posonlyargs + d.args.args
+        # defaulted positional params past the longest positional call
+        unset = args[max(n_pos, len(args) - len(d.args.defaults)):]
+        unset += [
+            a for a, v in zip(d.args.kwonlyargs, d.args.kw_defaults)
+            if v is not None
+        ]
+        out += [
+            f"{rel}::{d.name}({a.arg})" for a in unset
+            if a.arg not in passed[d.name]
+            and not a.arg.endswith(("_col", "_cols"))
+        ]
+    return sorted(out)
+
+
+def test_library_options_are_set():
+    unset = unset_options()
+    assert not unset, (
+        f"{len(unset)} defaulted parameters that no call passes (remove "
+        "the option and write its value in):\n  " + "\n  ".join(unset)
     )

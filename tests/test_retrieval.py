@@ -328,103 +328,7 @@ def test_expectation_unique_absorbs_row_checks_one_scan(spark, sf_dir):
 
 # ------------------------------------------------- drift report
 
-def test_drift_report_stable_vs_shifted(spark, sf_dir):
-    """Identical snapshots score ~0 PSI; a shifted copy crosses the
-    action threshold; PSI matches a numpy model bin-for-bin."""
-    import math
-
-    import numpy as np
-
-    li = load_tables(spark, sf_dir, ("lineitem",))["lineitem"]
-    base = li.select("l_quantity", "l_extendedprice")
-    same = {
-        r["column"]: r
-        for r in qa.drift_report(base, base, ["l_quantity", "l_extendedprice"]).collect()
-    }
-    for c in same.values():
-        assert c["psi"] < 0.01 and not c["drifted"]
-
-    shifted = base.withColumn("l_quantity", F.col("l_quantity") * 2 + 10)
-    rep = {
-        r["column"]: r
-        for r in qa.drift_report(
-            base, shifted, ["l_quantity", "l_extendedprice"]
-        ).collect()
-    }
-    assert rep["l_quantity"]["drifted"] and rep["l_quantity"]["psi"] > 0.2
-    assert not rep["l_extendedprice"]["drifted"]
-
-    # numpy model: same deciles, same epsilon floor, same formula
-    qvals = base.approxQuantile("l_quantity", [i / 10 for i in range(1, 10)], 0.001)
-    edges = sorted(set(qvals))
-    bvals = np.array([r["l_quantity"] for r in base.select("l_quantity").collect()])
-    cvals = bvals * 2 + 10
-    def frac(v):
-        bins = [None, *edges, None]
-        out = []
-        for b in range(len(edges) + 1):
-            lo, hi = bins[b], bins[b + 1]
-            m = np.ones(len(v), bool)
-            if lo is not None:
-                m &= v > lo
-            if hi is not None:
-                m &= v <= hi
-            out.append(m.sum() / len(v))
-        return out
-    psi = sum(
-        (max(q, 1e-4) - max(p, 1e-4)) * math.log(max(q, 1e-4) / max(p, 1e-4))
-        for p, q in zip(frac(bvals), frac(cvals))
-    )
-    assert abs(rep["l_quantity"]["psi"] - psi) < 1e-9
-
-
-def test_drift_report_one_scan_per_side(spark, sf_dir):
-    """All columns' bin counts compile into one aggregation per
-    snapshot: exactly two scans for any number of columns."""
-    li = load_tables(spark, sf_dir, ("lineitem",))["lineitem"]
-    import clinical_data_warehouse_bi_spark.qa as qa_mod
-
-    seen = []
-    orig = type(li).agg
-
-    def spy(self, *a, **k):
-        out = orig(self, *a, **k)
-        seen.append(physical_plan(out).count("Scan parquet"))
-        return out
-
-    type(li).agg = spy
-    try:
-        qa_mod.drift_report(li, li, ["l_quantity", "l_discount", "l_tax"]).collect()
-    finally:
-        type(li).agg = orig
-    assert seen and all(s == 1 for s in seen) and len(seen) == 2
-
-
 # ------------------------------------------------- corpus card
-
-def test_corpus_card_matches_duckdb_ground_truth(spark, sf_dir, duck, tmp_path):
-    import json
-    import os
-
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    out = str(tmp_path / "_card.json")
-    card = qa.corpus_card(docs, out_path=out)
-
-    n_docs, n_distinct, n_tokens = duck.execute(
-        """SELECT count(*), count(DISTINCT text),
-                  CAST(sum(len(regexp_extract_all(lower(text), '[a-z0-9]+'))) AS BIGINT)
-           FROM documents"""
-    ).fetchone()
-    assert card["n_docs"] == n_docs
-    assert card["n_tokens"] == n_tokens
-    assert abs(card["exact_dup_rate"] - (1 - n_distinct / n_docs)) < 1e-6
-    assert card["tokens_per_doc"]["p50"] <= card["tokens_per_doc"]["p90"]
-    assert sum(card["lang_mix"].values()) <= n_docs
-    assert sum(card["source_mix"].values()) == n_docs
-    with open(out) as f:
-        assert json.load(f) == card
-    assert os.path.basename(out).startswith("_")
-
 
 def test_bm25_index_compaction_round_trip(spark, sf_dir, tmp_path):
     """Compaction rolls every batch into one base dir with summed
@@ -467,43 +371,6 @@ def test_bm25_index_compaction_round_trip(spark, sf_dir, tmp_path):
         for r in retrieval.bm25_index_search(spark, path, terms, 100_000).collect()
     }
     assert 90_000 in served
-
-
-def test_observe_expectations_rides_an_action_for_free(spark, sf_dir):
-    """Inline observation: the violation counters equal the dedicated
-    expectation_report's, collected from the SAME action the
-    pipeline was running anyway (no extra scan)."""
-    t = load_tables(spark, sf_dir, ("lineitem",))
-    spec = [
-        {"check": "not_null", "table": "lineitem", "column": "l_quantity"},
-        {"check": "accepted_range", "table": "lineitem",
-         "column": "l_quantity", "lo": 1.0, "hi": 50.0},
-        {"check": "accepted_values", "table": "lineitem",
-         "column": "l_returnflag", "values": ["A", "N", "R"]},
-    ]
-    observed, obs = qa.observe_expectations(t["lineitem"], spec)
-    n = observed.count()  # the pipeline's own action
-    got = obs.get
-    want = {
-        r["check_name"]: r["violations"]
-        for r in qa.expectation_report(t, spec).collect()
-    }
-    assert got["__total_rows"] == n
-    for nm, v in want.items():
-        assert got[nm] == v, nm
-
-    import pytest as _pt
-
-    with _pt.raises(ValueError):
-        qa.observe_expectations(
-            t["lineitem"],
-            [{"check": "unique", "table": "lineitem", "columns": ["l_orderkey"]}],
-        )
-    with _pt.raises(ValueError):
-        qa.observe_expectations(
-            t["lineitem"],
-            spec + [{"check": "not_null", "table": "orders", "column": "o_custkey"}],
-        )
 
 
 # ------------------------------------------------- hybrid fusion
@@ -551,36 +418,6 @@ def test_hybrid_topk_combines_both_signals(spark, sf_dir):
     assert 7 in ids
     # at least one fused doc came from the lexical leg
     assert any(i in bm_ids for i in ids)
-
-
-def test_zipf_profile_discriminates_natural_vs_degenerate(spark, sf_dir):
-    import math
-
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    nat = qa.zipf_profile(docs)
-    assert nat["n_tokens"] > 0 and nat["vocab_size"] > 10
-    assert nat["zipf_slope"] < 0  # frequency falls with rank
-    # uniform-ish synthetic corpus: near-flat slope, entropy ~ log2(V)
-    flat_docs = spark.createDataFrame(
-        [(i, " ".join(f"w{j}" for j in range(50))) for i in range(40)],
-        ["doc_id", "text"],
-    )
-    flat = qa.zipf_profile(flat_docs)
-    assert abs(flat["zipf_slope"]) < 0.05
-    assert abs(flat["unigram_entropy_bits"] - math.log2(50)) < 1e-6
-    # degenerate one-word corpus: zero entropy
-    one = qa.zipf_profile(
-        spark.createDataFrame([(0, "spam spam spam spam")], ["doc_id", "text"])
-    )
-    assert one["unigram_entropy_bits"] == 0.0 and one["vocab_size"] == 1
-
-
-def test_corpus_card_lexical_section(spark, sf_dir, tmp_path):
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    card = qa.corpus_card(docs, lexical=True)
-    assert card["lexical"]["zipf_slope"] < 0
-    assert card["lexical"]["unigram_entropy_bits"] > 0
-    assert card["lexical"]["vocab_size"] == qa.zipf_profile(docs)["vocab_size"]
 
 
 def test_bm25_served_repairs_corrupt_cache_dir(spark):

@@ -263,23 +263,6 @@ def test_date_shift_preserves_intervals_and_is_keyed(spark):
         scrub.date_shift(df, "pid", ["admit"], "")
 
 
-def test_schema_drift_reports_changes(spark):
-    from clinical_data_warehouse_bi_spark import qa
-
-    old = spark.createDataFrame([(1, "a", 1.0)], "id long, name string, v double")
-    new = spark.createDataFrame([(1, 2, "x")], "id long, v int, extra string")
-    rows = {
-        r["column"]: (r["change"], r["baseline_type"], r["current_type"])
-        for r in qa.schema_drift(old, new).collect()
-    }
-    assert rows == {
-        "name": ("removed", "string", None),
-        "extra": ("added", None, "string"),
-        "v": ("type_changed", "double", "int"),
-    }
-    assert qa.schema_drift(old, old).count() == 0
-
-
 def test_k_anonymity_exact_values(spark):
     # two quasi columns; classes: (30,'F')x3 / (30,'M')x1 / (40,'F')x2;
     # diagnosis inside (30,'F') has 2 distinct values, (40,'F') only 1

@@ -425,19 +425,3 @@ def test_served_index_repairs_corrupt_cache_dir(spark):
     shutil.rmtree(path)
     assert q_ann_ivf_pq_served(spark, sf).count() == n0
 
-
-def test_covariance_stats_matches_numpy(spark):
-    """Distributed batch-partial covariance == direct numpy on the
-    collected matrix, any partitioning."""
-    from clinical_data_warehouse_bi_spark.similarity import covariance_stats
-
-    rng = np.random.RandomState(5)
-    mat = rng.normal(size=(400, 8)) * rng.uniform(0.5, 3.0, size=8)
-    df = spark.createDataFrame(
-        [(i, r.tolist()) for i, r in enumerate(mat)],
-        "vec_id long, embedding array<double>",
-    ).repartition(7)
-    st = covariance_stats(df)
-    assert st["n"] == 400
-    assert np.allclose(st["mean"], mat.mean(axis=0), atol=1e-10)
-    assert np.allclose(st["cov"], np.cov(mat.T, bias=True), atol=1e-9)

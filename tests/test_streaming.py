@@ -76,24 +76,3 @@ def test_stratified_sample_filter_is_stream_compatible(spark, stream_dir, batch_
     }
     assert got == want and len(got) > 0
 
-
-def test_salted_join_works_on_streams(spark, stream_dir):
-    """salted_join's streaming fallback salt must not use
-    monotonically_increasing_id (unsupported on streams) and must
-    preserve join results."""
-    from clinical_data_warehouse_bi_spark.joins import salted_join
-
-    dim = spark.createDataFrame(
-        [("click", "web"), ("purchase", "commerce")], ["etype", "category"]
-    )
-    stream = streaming.read_event_stream(spark, stream_dir)
-    joined = salted_join(stream, dim, "event_type", "etype", buckets=4)
-    q = streaming.run_to_memory(joined.select("event_id", "category"), "salted_out")
-    _drain(q)
-    got = spark.sql("SELECT count(*) AS n FROM salted_out").first()["n"]
-    want = (
-        spark.read.parquet(stream_dir)
-        .filter(F.col("event_type").isin("click", "purchase"))
-        .count()
-    )
-    assert got == want
