@@ -10,6 +10,8 @@ from datetime import datetime, timedelta
 
 from pyspark.sql import functions as F
 
+from clinical_data_warehouse_bi_spark.io import local_frame
+
 LAB_LABELS = [
     "Sodium", "Potassium", "Bicarbonate", "Chloride", "pH",
     "Base Excess", "Anion Gap", "Sodium, Whole Blood", "Potassium, Urine",
@@ -100,7 +102,7 @@ def make_sources(spark, n_patients: int = 120, seed: int = 1234):
             ))
 
     def df(rows, schema):
-        return spark.createDataFrame(rows, schema)
+        return local_frame(spark, rows, schema)
 
     return {
         "patients": df(patients, "subject_id int, gender string, dod string").withColumn(

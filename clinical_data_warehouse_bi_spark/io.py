@@ -11,9 +11,11 @@ from __future__ import annotations
 
 import contextlib
 import os
+from datetime import timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, StructType, TimestampType
 
 #: every table the driver materializes per scale factor (TESTDATA.md)
 DRIVER_TABLES = (
@@ -86,6 +88,39 @@ def load_tables(
     spark: SparkSession, sf_dir: str, names: tuple[str, ...] = DRIVER_TABLES
 ) -> dict[str, DataFrame]:
     return {name: read_table(spark, sf_dir, name) for name in names}
+
+
+def local_frame(
+    spark: SparkSession, rows: list[tuple], schema: StructType | str
+) -> DataFrame:
+    """Driver-side rows as a JVM ``LocalRelation``: every plan scans
+    them in the JVM, with no job.
+
+    ``spark.createDataFrame(<python list>)`` is a ``LogicalRDD`` over a
+    pickled Python RDD instead, so EVERY plan that scans it (and every
+    broadcast built from it) re-runs a Python-worker stage. Going
+    through a ``pyarrow.Table`` ships the rows to the JVM once; that
+    path does not read the Arrow conf, so it works in a plain session
+    too. ``schema`` is a StructType or a DDL string; the result has
+    the same schema and rows as ``createDataFrame(rows, schema)``
+    (naive datetimes are read as local time, as that path does)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = DataType.fromDDL(schema) if isinstance(schema, str) else schema
+    arrow_schema = to_arrow_schema(struct)
+    columns = list(zip(*rows)) if rows else [()] * len(struct.fields)
+    arrays = []
+    for values, field, arrow_field in zip(columns, struct.fields, arrow_schema):
+        if isinstance(field.dataType, TimestampType):
+            # pyarrow keeps a datetime's wall-clock fields and drops
+            # its offset: hand it UTC
+            values = [
+                None if v is None else v.astimezone(timezone.utc) for v in values
+            ]
+        arrays.append(pa.array(values, type=arrow_field.type))
+    table = pa.Table.from_arrays(arrays, schema=arrow_schema)
+    return spark.createDataFrame(table, schema=struct)
 
 
 def parquet_num_rows(path: str) -> int | None:

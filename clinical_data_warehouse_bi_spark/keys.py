@@ -8,14 +8,18 @@ has no auto-increment; two strategies:
   ORDER BY — but a global window collapses to ONE partition. Fine for
   dimension tables (thousands of rows); never for the fact table.
 - ``zip_index_key``: contiguous AND distributed: per-partition counts
-  + offset cumsum, one extra tiny job. Use when downstream genuinely
-  needs dense keys at scale.
+  + offset cumsum, one extra tiny job. The offsets come back as a JVM
+  local relation (``io.local_frame``), so plans that scan the keyed
+  relation run no job for them. Use when downstream genuinely needs
+  dense keys at scale.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from clinical_data_warehouse_bi_spark.io import local_frame
 
 
 def row_number_key(order_by: list[str | Column]) -> Column:
@@ -32,6 +36,12 @@ def zip_index_key(df: DataFrame, name: str = "surrogate_id") -> DataFrame:
     collects per-partition (count, min(miid)); a cumulative offset per
     partition is then broadcast-joined back and the dense key is pure
     per-row arithmetic — no window, no exchange of the data itself.
+    The offsets are a local relation built on the driver
+    (``io.local_frame``): the broadcast's build side is a
+    ``LocalTableScan`` with no job, so every later plan over the keyed
+    relation scans only its checkpoint. (A ``createDataFrame`` list
+    would be a Python RDD, re-run in Python workers by each such
+    plan.)
 
     The input is materialized first (localCheckpoint) so the stats job
     and the key job see identical partition contents: recomputed
@@ -56,7 +66,7 @@ def zip_index_key(df: DataFrame, name: str = "surrogate_id") -> DataFrame:
     for pid, cnt, lo in stats:
         rows.append((pid, lo, acc))
         acc += cnt
-    off = spark.createDataFrame(rows, "__pid int, __lo long, __offset long")
+    off = local_frame(spark, rows, "__pid int, __lo long, __offset long")
     return (
         with_idx.join(F.broadcast(off), "__pid", "left")
         .withColumn(

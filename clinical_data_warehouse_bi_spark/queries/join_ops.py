@@ -7,7 +7,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from clinical_data_warehouse_bi_spark import joins
-from clinical_data_warehouse_bi_spark.io import fan_out, load_tables
+from clinical_data_warehouse_bi_spark.io import fan_out, load_tables, local_frame
 from clinical_data_warehouse_bi_spark.registry import register
 
 
@@ -292,8 +292,8 @@ def q_insert_if_absent(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = region.select("r_regionkey", "r_name")
     if not missing:
         return base
-    unknown = spark.createDataFrame(
-        [(-1, "UNKNOWN")], schema=base.select(F.col("r_regionkey").cast("int"), "r_name").schema
+    unknown = local_frame(
+        spark, [(-1, "UNKNOWN")], base.select(F.col("r_regionkey").cast("int"), "r_name").schema
     )
     return base.select(F.col("r_regionkey").cast("int"), "r_name").unionByName(unknown)
 

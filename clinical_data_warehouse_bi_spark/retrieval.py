@@ -47,8 +47,10 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from clinical_data_warehouse_bi_spark import text as T
+from clinical_data_warehouse_bi_spark.io import local_frame
 
 #: BM25 free parameters (the standard Lucene defaults)
 DEFAULT_K1 = 1.2
@@ -201,10 +203,11 @@ def bm25_batch_topk(
     Returns (query_id, id_col, score, rank) with rank 1..k per
     query, deterministic via (score DESC, id ASC).
     """
-    qrows = queries.select(
+    qsel = queries.select(
         F.col(query_id_col).alias("query_id"),
         T.tokens(query_text_col).alias("q_terms"),
-    ).collect()
+    )
+    qrows = qsel.collect()
     if not qrows:
         raise ValueError("queries must be non-empty")
     # (query_id, term) pairs, deduped per query (standard BM25
@@ -234,7 +237,11 @@ def bm25_batch_topk(
         .agg(F.count("*").alias("tf"), F.first("dl").alias("dl"))
     )
     dfreq = tf.groupBy("term").agg(F.count("*").alias("df_count"))
-    qt = spark.createDataFrame(qt_pairs, ["query_id", "term"])
+    qt = local_frame(
+        spark,
+        qt_pairs,
+        StructType([qsel.schema["query_id"], StructField("term", StringType())]),
+    )
 
     scored = (
         tf.join(F.broadcast(dfreq), "term")

@@ -49,6 +49,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
+from clinical_data_warehouse_bi_spark.io import local_frame
+
 #: tokenizer shared by repetition metrics and contamination — the
 #: Python mirror of split(lower(text), "[^a-z0-9']+") with empties
 #: dropped (ASCII classes: identical across Python re / Java regex /
@@ -621,7 +623,8 @@ def suppress_to_k(
     n_in = df.count()
     n_out = released.count()
     n_classes_dropped = classes.filter(F.col("class_size") < int(k)).count()
-    report = df.sparkSession.createDataFrame(
+    report = local_frame(
+        df.sparkSession,
         [(n_in, n_out, n_in - n_out, n_classes_dropped)],
         "rows_in long, rows_released long, rows_suppressed long, "
         "classes_suppressed long",

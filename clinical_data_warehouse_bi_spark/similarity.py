@@ -23,6 +23,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from clinical_data_warehouse_bi_spark.io import local_frame
+
 TOPK_SCHEMA = "qid long, nid long, cos double"
 
 
@@ -726,7 +728,7 @@ def search_ivf_pq_index(
         )
 
     buckets = sorted({b for _, b in probe_rows})
-    probes = spark.createDataFrame(probe_rows, "qid long, bucket int")
+    probes = local_frame(spark, probe_rows, "qid long, bucket int")
     postings = spark.read.parquet(path).filter(F.col("bucket").isin(buckets))
     cand = (
         postings.join(F.broadcast(probes), "bucket")

@@ -13,9 +13,14 @@ MariaDB's mutable-state idioms become pure recomputes:
                                  (dims) / monotonically_increasing_id
                                  (facts at scale)
 
-Every transform chains lazily inside one Catalyst plan per layer; the
-only materialization barriers are the optional parquet writes between
-layers — exactly the staging/dwh boundaries the reference has.
+Every transform chains lazily inside one Catalyst plan per layer. The
+materialization barriers are the optional parquet writes between
+layers — exactly the staging/dwh boundaries the reference has — plus
+the lazy ``localCheckpoint``s at the two consumer-shared event-scale
+relations: the enriched staging fact and the cleaned DWH fact. In the
+scale path (``parity_keys=False``) those are the checkpoints
+``keys.zip_index_key`` takes of its input, and the two key-built dims
+pass through the same barrier.
 
 Scale notes: concept/junk/date dims are broadcast in every fact
 lookup. The interval joins key on (patient_id, admission_id) — the
@@ -34,6 +39,7 @@ from clinical_data_warehouse_bi_spark.cleanse import (
     normalized_key,
     sentinel_timestamp,
 )
+from clinical_data_warehouse_bi_spark.io import local_frame
 from clinical_data_warehouse_bi_spark.joins import (
     interval_join_pick_first,
     orphan_cleanup,
@@ -182,9 +188,11 @@ def build_staging(
         )
     )
     spark = src["patients"].sparkSession
-    unknown = spark.createDataFrame(
+    unknown = local_frame(
+        spark,
         [(3, "Unknown", "Unknown concept", "UNKNOWN", "No matching concept found")],
-        ["__batch", "concept_type", "concept_name", "code", "description"],
+        "__batch bigint, concept_type string, concept_name string, code string, "
+        "description string",
     )
     concept_base = labs.unionByName(diags).unionByName(unknown)
     if parity_keys:
@@ -210,20 +218,21 @@ def build_staging(
 
         from pyspark.util import inheritable_thread_target
 
-        # inheritable_thread_target copies this thread's JVM-local
-        # properties (job group/description, scheduler pool) into the
-        # worker threads — under pinned-thread mode a plain pool
-        # thread would not inherit them, so caller-side job
-        # cancellation or pool tagging would miss these two jobs
-        # (round-16 advice)
+        # inheritable_thread_target(spark) copies this thread's
+        # JVM-local properties (job group/description, scheduler pool)
+        # and the session's spark.addTag tags into the worker threads —
+        # under pinned-thread mode a plain pool thread would not inherit
+        # them, so caller-side job cancellation or tagging would miss
+        # these two jobs. Given no session it copies the properties
+        # only, drops the tags and warns on every call. Without pinned
+        # threads (PYSPARK_PIN_THREAD=false) there is nothing to copy
+        # and it hands the session itself back.
+        wrap = inheritable_thread_target(spark)
+        key_build = zip_index_key if wrap is spark else wrap(zip_index_key)
         with ThreadPoolExecutor(max_workers=2) as _pool:
-            _f_prov = _pool.submit(
-                inheritable_thread_target(zip_index_key),
-                prov_base, "provider_id",
-            )
+            _f_prov = _pool.submit(key_build, prov_base, "provider_id")
             _f_conc = _pool.submit(
-                inheritable_thread_target(zip_index_key),
-                concept_base, "clinical_concept_id",
+                key_build, concept_base, "clinical_concept_id"
             )
             dim_provider = _f_prov.result().select(
                 "provider_id", "patient_id", "admission_id",

@@ -21,6 +21,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
+from clinical_data_warehouse_bi_spark.io import local_frame
+
 #: default MinHash configuration: 16 hashes in 4 bands of 4 rows
 MINHASH_SEEDS = 16
 MINHASH_BANDS = 4
@@ -904,7 +906,7 @@ def top_ngrams(
             .collect()
         )
         if not top:
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, [], schema)
         kth = int(top[min(k, len(top)) - 1]["n_occ"])
         cand = counts.where(F.col("n_occ") >= kth)
         if len(top) <= NGRAM_CAND_CAP or top[-1]["n_occ"] < kth:
@@ -936,7 +938,7 @@ def top_ngrams(
         )
     finally:
         counts.unpersist()
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 #: candidate rows collected by top_ngrams' single control job — far

@@ -1,8 +1,8 @@
 """Physical-plan audit for registered queries: the facts a human
 checks by eye before shipping a plan to a 1000-executor cluster —
 exchange count and keys, join strategies, top-k form, pushdown,
-codegen span count. Prints one summary row per query plus the
-formatted plan when --full is given.
+codegen span count, Python-RDD scans. Prints one summary row per
+query plus the formatted plan when --full is given.
 
 Usage: python scripts/plan_audit.py [sf_dir] q_name [q_name ...] [--full]
 """
@@ -19,6 +19,19 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from clinical_data_warehouse_bi_spark.registry import auditable_queries
 from clinical_data_warehouse_bi_spark.session import get_spark
+
+
+def python_scans(df) -> int:
+    """Optimized-plan leaves whose RDD lineage holds a PythonRDD: a
+    frame built by createDataFrame(<python list>), which every plan
+    scanning it re-runs in Python workers. A localCheckpoint prints as
+    the same `Scan ExistingRDD`, so only the lineage tells them apart."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    return sum(
+        "PythonRDD" in leaf.rdd().toDebugString()
+        for leaf in (leaves.apply(i) for i in range(leaves.size()))
+        if leaf.nodeName() == "LogicalRDD"
+    )
 
 
 def audit(df) -> dict:
@@ -46,6 +59,7 @@ def audit(df) -> dict:
         "pushed_filters": "PushedFilters: [" in plan
         and "PushedFilters: []" not in plan,
         "codegen_spans": len(set(re.findall(r"\*\((\d+)\)", plan))),
+        "python_scans": python_scans(df),
         "formatted": formatted,
     }
 
@@ -65,6 +79,7 @@ def main() -> None:
             f" bhj={a['broadcast_joins']} smj={a['sortmerge_joins']}"
             f" nlj={a['nested_loop']} takeOrdered={a['take_ordered']}"
             f" pushdown={a['pushed_filters']} codegen={a['codegen_spans']}"
+            f" python_scans={a['python_scans']}"
         )
         if full:
             print(a["formatted"])

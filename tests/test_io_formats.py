@@ -7,7 +7,12 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from clinical_data_warehouse_bi_spark.io import read_source, read_table, write_sink
+from clinical_data_warehouse_bi_spark.io import (
+    local_frame,
+    read_source,
+    read_table,
+    write_sink,
+)
 
 
 @pytest.mark.parametrize("fmt", ["parquet", "csv", "json"])
@@ -577,3 +582,38 @@ def test_mix_keeps_sources_with_tiny_rates(spark):
     assert sum(1 for _, s in rows if s == 2) == 200
     again = mix_sources([(df, 1e-7), (df, 0.0), (df, 1.0)], "doc_id", seed=3)
     assert {(r["doc_id"], r["__source"]) for r in again.collect()} == rows
+
+
+
+def test_local_frame_matches_create_dataframe(spark, monkeypatch):
+    """io.local_frame gives the schema and rows createDataFrame(list)
+    gives, NULLs and empty input included, as a JVM LocalRelation —
+    with the Arrow conf off, as in a plain session, and with naive
+    datetimes read as host-local time on a non-UTC host too."""
+    import datetime as dt
+    import time
+
+    schema = "i int, b bigint, d double, s string, day date, ts timestamp"
+    rows = [
+        (1, 2**40, 1.5, "a", dt.date(2020, 2, 29), dt.datetime(2020, 7, 1, 23, 59, 59, 1)),
+        (None, None, None, None, None, None),
+        (-7, -1, -0.25, "", dt.date(1900, 1, 1), dt.datetime(2999, 12, 31, 23, 59, 59)),
+    ]
+    conf = "spark.sql.execution.arrow.pyspark.enabled"
+    prior = spark.conf.get(conf)
+    spark.conf.set(conf, "false")
+    try:
+        for tz in ("UTC", "America/New_York"):
+            monkeypatch.setenv("TZ", tz)
+            time.tzset()
+            for case in (rows, []):
+                got = local_frame(spark, case, schema)
+                want = spark.createDataFrame(case, schema)
+                assert got.schema == want.schema
+                assert got.collect() == want.collect(), tz
+                plan = got._jdf.queryExecution().optimizedPlan()
+                assert plan.nodeName() == "LocalRelation", plan.toString()
+    finally:
+        spark.conf.set(conf, prior)
+        monkeypatch.undo()
+        time.tzset()

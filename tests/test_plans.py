@@ -244,7 +244,10 @@ def test_interval_join_windows_reuse_join_exchange(spark):
     joins (the star pipeline's careunit + provider enrichment shape)
     share ONE fact-side exchange — and Spark plans the rank<=1 filter
     as a map-side WindowGroupLimit. (Asserted on a standalone chain:
-    the staging fact plan itself is checkpoint-truncated.)"""
+    the staging fact plan itself is checkpoint-truncated.) Broadcast
+    joins are off: the fixture sources are local relations whose
+    exact size would broadcast the transfers side, which at event
+    scale is a shuffle join."""
     import re
 
     from clinical_data_warehouse_bi_spark.joins import interval_join_pick_first
@@ -282,7 +285,12 @@ def test_interval_join_windows_reuse_join_exchange(spark):
         left_key=["patient_id", "admission_id", "rid"],
         order=[F.col("p_intime").asc_nulls_last()],
     )
-    plan = physical_plan(step2)
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        plan = physical_plan(step2)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
     n_fact_exchanges = len(re.findall(r"Exchange hashpartitioning\(patient_id", plan))
     n_windows = plan.count("WindowGroupLimit [patient_id")
     assert n_windows == 2
@@ -625,3 +633,21 @@ def test_epoch_shuffle_has_no_single_partition_exchange(spark, sf_dir):
 
     exchanges = re.findall(r"\w*Exchange\w*", plan)
     assert all(e == "BroadcastExchange" for e in exchanges), exchanges
+
+
+def test_zip_index_key_offsets_are_a_local_relation(spark):
+    """zip_index_key's only RDD scan is its own localCheckpoint: the
+    per-partition offsets it broadcast-joins are a LocalRelation, not
+    a Python RDD every plan over the keyed relation would re-run in
+    Python workers."""
+    from clinical_data_warehouse_bi_spark.keys import zip_index_key
+
+    keyed = zip_index_key(spark.range(100).repartition(3), "k")
+    plan = keyed._jdf.queryExecution().optimizedPlan()
+    leaves = plan.collectLeaves()
+    leaves = [leaves.apply(i) for i in range(leaves.size())]
+    rdd_leaves = [lf for lf in leaves if lf.nodeName() == "LogicalRDD"]
+    assert len(rdd_leaves) == 1, plan.toString()
+    lineage = rdd_leaves[0].rdd().toDebugString()
+    assert "LocalCheckpointRDD" in lineage and "PythonRDD" not in lineage, lineage
+    assert any(lf.nodeName() == "LocalRelation" for lf in leaves), plan.toString()

@@ -272,3 +272,33 @@ def test_library_options_are_set():
         f"{len(unset)} defaulted parameters that no call passes (remove "
         "the option and write its value in):\n  " + "\n  ".join(unset)
     )
+
+
+def create_dataframe_calls() -> list[str]:
+    """``.createDataFrame(`` calls in library modules, outside
+    ``io.local_frame``."""
+    out = []
+    for path in _py_files(LIB):
+        rel = os.path.relpath(path, LIB)
+        tree = ast.parse(open(path).read(), path)
+        allowed = set()
+        if rel == "io.py":
+            for s in tree.body:
+                if isinstance(s, ast.FunctionDef) and s.name == "local_frame":
+                    allowed = {id(n) for n in ast.walk(s)}
+        out += [
+            f"{rel}:{n.lineno}" for n in ast.walk(tree)
+            if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+            and n.func.attr == "createDataFrame" and id(n) not in allowed
+        ]
+    return sorted(out)
+
+
+def test_library_builds_frames_with_local_frame():
+    calls = create_dataframe_calls()
+    assert not calls, (
+        f"{len(calls)} createDataFrame calls outside io.local_frame (a "
+        "Python-list frame is a Python RDD that every plan scanning it "
+        "re-runs in Python workers; use io.local_frame):\n  "
+        + "\n  ".join(calls)
+    )

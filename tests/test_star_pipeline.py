@@ -22,6 +22,21 @@ def pipeline(spark):
     return src, out["stage"], out["dwh"]
 
 
+def test_build_staging_emits_no_user_warning(spark):
+    """The scale path's key-build pool hands inheritable_thread_target
+    the session: given none, pinned-thread mode warns on every run
+    that spark.addTag tags are not inherited by the two key jobs."""
+    import warnings
+
+    src = make_sources(spark, n_patients=10, seed=3)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        star.build_staging(src)
+    assert not [w for w in caught if issubclass(w.category, UserWarning)], [
+        str(w.message) for w in caught
+    ]
+
+
 @pytest.mark.slow
 def test_stage_fact_shape(pipeline):
     src, stage, dwh = pipeline
