@@ -13,11 +13,10 @@ keeps it that way.
 
 Layout:
   session.py     SparkSession factory (AQE, UTC, sane shuffle partitions)
-  io.py          scale-factor table reads, footer stats, fan_out, layer and
-                 bucketed-table writes, index publish, temperature
-                 mixing, dataset manifests; tested-only: format
-                 sources/sinks, raw-file reads, sized writes, shuffles,
-                 compaction under a maintenance lock
+  io.py          scale-factor table reads, footer stats, fan_out, index
+                 publish, temperature mixing, dataset manifests;
+                 tested-only: format sources/sinks, raw-file reads, sized
+                 writes, shuffles, compaction under a maintenance lock
   cleanse.py     cleansing expressions (sentinel timestamps, keyword
                  filters, regex-guarded numeric parse, calendar attrs)
   keys.py        surrogate keys (row_number, zip_index_key)
@@ -27,10 +26,8 @@ Layout:
   star.py        the 3-stage clinical pipeline (staging -> dwh -> agg)
   qa.py          the reference's QA suite plus expectation, pivot,
                  Benford, outlier, freshness and snapshot reports
-  kpi.py         readmission and daily-census KPIs; tested-only: length
-                 of stay and mortality
-  layout.py      Z-order (Morton) clustered writes
-  percentiles.py distributed exact percentiles (tested-only: winsorize)
+  kpi.py         readmission and daily-census KPIs
+  percentiles.py distributed exact percentiles
   timeseries.py  resample/fill, rolling aggregates, attribution
   funnel.py      ordered-sequence funnels
   text.py        tokenize / shingle / MinHash / LSH, chunk and

@@ -39,6 +39,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: label-propagation rounds before the star fallback takes over; the
+#: plateau check usually hands off long before this
+MAX_LABEL_PROP_ROUNDS = 25
+
 
 def connected_components(
     edges: DataFrame,
@@ -46,8 +50,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     vertex_col: str = "id",
-    max_iter: int = 25,
-    algorithm: str = "auto",
     stats: dict | None = None,
 ) -> DataFrame:
     """(id, component): each vertex labeled with the smallest vertex
@@ -57,24 +59,19 @@ def connected_components(
     appears in the output even with no incident edge (its own
     singleton component).
 
-    ``algorithm``:
-      - ``"auto"`` (default): min-label propagation — optimal for the
-        shallow dedup-cluster shape (O(diameter) rounds, one shuffle
-        pair and ONE action per round) — falling back to alternating
-        large-star/small-star as soon as progress plateaus (changed
-        count not halved over 3 rounds: the deep-chain signature) or
-        ``max_iter`` rounds pass without a fixpoint (deep chains
-        converge there in O(log^2 n) rounds).
-      - ``"label_prop"``: propagation only; raises past ``max_iter``.
-      - ``"star"``: large-star/small-star from the start.
+    Min-label propagation — optimal for the shallow dedup-cluster
+    shape (O(diameter) rounds, one shuffle pair and ONE action per
+    round) — falling back to alternating large-star/small-star as
+    soon as progress plateaus (changed count not halved over 3
+    rounds: the deep-chain signature) or ``MAX_LABEL_PROP_ROUNDS``
+    rounds pass without a fixpoint (deep chains converge there in
+    O(log^2 n) rounds).
 
     ``stats`` (optional dict): filled with ``label_prop_rounds`` (how
     many propagation actions ran) and ``fell_back`` (whether the star
     algorithm finished the job) — operational visibility into the
     plateau heuristic, and what the tests assert on.
     """
-    if algorithm not in ("auto", "label_prop", "star"):
-        raise ValueError(f"unknown algorithm: {algorithm!r}")
     sym = (
         edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
         .unionByName(edges.select(F.col(dst).alias("s"), F.col(src).alias("d")))
@@ -94,16 +91,12 @@ def connected_components(
     base = base.distinct()
     if stats is not None:
         stats.update(label_prop_rounds=0, fell_back=False)
-    if algorithm == "star":
-        if stats is not None:
-            stats["fell_back"] = True
-        return _star_components(edges, base, src, dst)
 
     labels = base.select("id", F.col("id").alias("component"))
     labels = labels.localCheckpoint(eager=True)
 
     history: list[int] = []
-    for _ in range(max_iter):
+    for _ in range(MAX_LABEL_PROP_ROUNDS):
         neigh = (
             sym.join(labels, sym["d"] == labels["id"])
             .groupBy("s")
@@ -133,25 +126,15 @@ def connected_components(
                 stats["label_prop_rounds"] = len(history) + 1
             return labels
         history.append(changed)
-        if (
-            algorithm == "auto"
-            and len(history) >= 4
-            and history[-1] * 2 > history[-4]
-        ):
+        if len(history) >= 4 and history[-1] * 2 > history[-4]:
             # Plateau: the changed-count has not halved over the last
             # 3 rounds — the deep-chain shape where propagation needs
             # O(diameter) rounds. Bail to the diameter-independent
             # algorithm NOW instead of burning the remaining actions
-            # up to max_iter (each round is a full job barrier).
-            # Shallow dedup graphs converge to 0 in 2-4 rounds and
-            # never trip this.
+            # up to MAX_LABEL_PROP_ROUNDS (each round is a full job
+            # barrier). Shallow dedup graphs converge to 0 in 2-4
+            # rounds and never trip this.
             break
-    if algorithm == "label_prop":
-        raise RuntimeError(
-            f"connected_components did not converge within {max_iter} iterations —"
-            " component diameter exceeds the shallow dedup-cluster shape; use"
-            " algorithm='star' (alternating large-star/small-star) instead"
-        )
     if stats is not None:
         stats.update(label_prop_rounds=len(history), fell_back=True)
     return _star_components(edges, base, src, dst)

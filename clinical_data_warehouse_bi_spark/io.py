@@ -324,20 +324,6 @@ def write_sink(
     w.save(path)
 
 
-def write_layer(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
-    """S2/S3 sink: materialize a pipeline layer (the reference's CTAS /
-    INSERT...SELECT barrier, Stage_area.sql:25-30 etc.).
-
-    ``partition_by`` is the Spark replacement for the reference's six
-    B-tree indexes (DWH.sql:193-198): partition pruning + parquet
-    min/max stats serve point/range lookups at scale.
-    """
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
-
-
 def write_training_shards(
     df: DataFrame,
     path: str,
@@ -435,26 +421,6 @@ def mix_sources(
     if out is None:
         raise ValueError("mix_sources needs at least one source")
     return out
-
-
-def write_bucketed_table(
-    df: DataFrame,
-    name: str,
-    bucket_by: list[str],
-    num_buckets: int = 32,
-    sort_by: list[str] | None = None,
-) -> None:
-    """M8 replacement for the reference's six fact B-tree indexes
-    (DWH.sql:193-198), Spark-style: bucketed (and optionally
-    sorted) table layout. Two tables bucketed on the same join key
-    with the same bucket count join WITHOUT any exchange — the
-    shuffle is paid once at write time, then every downstream join /
-    aggregation on that key is co-located (the 100 TB answer to 'we
-    join fact to admissions constantly')."""
-    w = df.write.mode("overwrite").bucketBy(num_buckets, *bucket_by)
-    if sort_by:
-        w = w.sortBy(*sort_by)
-    w.saveAsTable(name)
 
 
 def snapshot_persistent_rdds(spark: SparkSession) -> set:

@@ -1,14 +1,12 @@
-"""Clinical BI KPIs over the star-schema DWH: length of stay,
-30-day readmission, and daily unit census.
+"""Clinical BI KPIs over the star-schema DWH: 30-day readmission
+and daily unit census.
 
 These are the headline reports a clinical-DWH user runs on the
 reference's schema (Leemc7/Clinical-Data-Warehouse-BI DWH.sql's
 dim_admissions / dim_provider surface; the reference ships the
 warehouse, these are the queries its README positions it for).
-All three are single-exchange DataFrame plans:
+Both are single-exchange DataFrame plans:
 
-- length of stay: per-row timestamp arithmetic, NO exchange;
-  the summary adds one groupBy.
 - readmission: ONE patient-keyed exchange (window lead), bounded
   per-patient state — the classic 30-day all-cause readmission
   measure (CMS/NEJM definition: next index admission within N days
@@ -24,7 +22,7 @@ Sentinel semantics: the staging layer encodes unknown timestamps as
 1900-01-01 / 2999-12-31 (star.build_staging, Stage_area.sql:36-50).
 Every KPI here treats a sentinel endpoint as NULL — an unknown
 admit time cannot order a readmission chain, and an open discharge
-has no LOS yet.
+has no census interval yet.
 """
 
 from __future__ import annotations
@@ -49,53 +47,6 @@ def _desentinel(col: str) -> Column:
                F.lit(SENTINEL_HIGH).cast("timestamp")),
         F.lit(None).cast("timestamp"),
     ).otherwise(c)
-
-
-def length_of_stay(
-    adm: DataFrame,
-    admit_col: str = "admittime",
-    disch_col: str = "dischtime",
-) -> DataFrame:
-    """Adds ``los_hours`` (double): discharge minus admit in hours.
-
-    NULL when either endpoint is NULL/sentinel (stay unknown or
-    still open) or when the interval is negative (entry error — a
-    negative LOS must never average into a report silently).
-    Pure per-row JVM arithmetic: zero exchanges, zero UDFs."""
-    admit = _desentinel(admit_col)
-    disch = _desentinel(disch_col)
-    hours = (
-        (F.unix_timestamp(disch) - F.unix_timestamp(admit))
-        / F.lit(_SECONDS_PER_HOUR)
-    )
-    return adm.withColumn(
-        "los_hours", F.when(hours >= 0, hours)
-    )
-
-
-def los_summary(
-    adm: DataFrame,
-    group_cols: list[str],
-    quantiles: tuple[float, ...] = (0.5, 0.9),
-    admit_col: str = "admittime",
-    disch_col: str = "dischtime",
-) -> DataFrame:
-    """Average/median/p90 length of stay per group (admission type,
-    insurance, ...): ONE exchange keyed on the group columns; exact
-    JVM `percentile` per group (groups are plentiful and bounded —
-    the grouped_percentiles design note applies)."""
-    with_los = length_of_stay(adm, admit_col, disch_col)
-    aggs = [
-        F.count(F.col("los_hours")).alias("n_stays"),
-        F.avg("los_hours").alias("avg_los_hours"),
-    ]
-    for q in quantiles:
-        aggs.append(
-            F.expr(f"percentile(los_hours, {q!r})").alias(
-                f"p{int(round(q * 100))}_los_hours"
-            )
-        )
-    return with_los.groupBy(*group_cols).agg(*aggs)
 
 
 def readmission_flags(
@@ -235,57 +186,5 @@ def daily_census(
         .agg(
             F.countDistinct("__pat").alias("census"),
             F.count(F.lit(1)).alias("stay_rows"),
-        )
-    )
-
-
-def mortality_rate(
-    adm: DataFrame,
-    patients: DataFrame,
-    group_cols: list[str],
-    patient_col: str = "patient_id",
-    admit_col: str = "admittime",
-    disch_col: str = "dischtime",
-    dod_col: str = "dod",
-) -> DataFrame:
-    """In-hospital mortality rate per group — with LOS, readmission
-    and census, the fourth KPI on every clinical BI dashboard: an
-    admission counts as an in-hospital death when the patient's
-    date of death falls inside [admit, discharge] (date grain —
-    dod is a date; both endpoints are truncated to dates so a
-    death on the discharge DAY counts, the standard convention).
-
-    Eligible = admissions with known admit AND discharge (an open
-    or unknown stay has no outcome yet — the readmission_rate
-    eligibility discipline). Sentinel timestamps are NULLed first.
-
-    Scale shape: ONE keyed join (patients is the smaller relation
-    and carries only (patient_id, dod) into it — AQE broadcasts it
-    when it fits) + ONE group exchange for the conditional
-    aggregate. No window needed: death-in-interval is a per-row
-    predicate."""
-    admit = F.to_date(_desentinel(admit_col))
-    disch = F.to_date(_desentinel(disch_col))
-    dod = F.to_date(F.col("__dod"))
-    slim = patients.select(
-        F.col(patient_col).alias("__pid"), F.col(dod_col).alias("__dod")
-    )
-    joined = adm.join(slim, F.col(patient_col) == F.col("__pid"), "left")
-    eligible = (admit.isNotNull() & disch.isNotNull()).cast("int")
-    died = (
-        dod.isNotNull() & admit.isNotNull() & disch.isNotNull()
-        & (dod >= admit) & (dod <= disch)
-    ).cast("int")
-    return (
-        joined.groupBy(*group_cols)
-        .agg(
-            F.sum(eligible).alias("n_eligible"),
-            F.sum(died * eligible).alias("n_deaths"),
-        )
-        .withColumn(
-            "mortality_rate",
-            F.when(
-                F.col("n_eligible") > 0, F.col("n_deaths") / F.col("n_eligible")
-            ),
         )
     )

@@ -89,14 +89,12 @@ def perplexity(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    model: tuple[DataFrame, DataFrame, DataFrame] | None = None,
     *,
     model_broadcast_max_rows: int | None = None,
 ) -> DataFrame:
     """(id, n_tokens, ppl): per-document bigram perplexity under the
-    corpus LM (or a supplied ``model`` trained elsewhere — the
-    production form, where the reference corpus and the scored corpus
-    differ). Documents with fewer than two tokens score NULL.
+    LM trained on ``docs`` itself. Documents with fewer than two
+    tokens score NULL.
 
     ppl is rounded to 4 decimals: the per-document mean sums doubles
     in partition order, so the last bits are engine/partitioning
@@ -111,20 +109,15 @@ def perplexity(
     is text.VOCAB_BROADCAST_MAX_ROWS. The gate's verdict is memoized
     per plan, so the scored source must not grow under an identical
     plan (an appended-to directory re-read in one session)."""
-    if model is not None:
-        bc, c1, v = model
-    else:
-        bc, c1, v = bigram_counts(docs, id_col, text_col)
-        # the model is vocabulary-sized — cache it so the context
-        # totals and the scoring broadcast reuse ONE bigram count
-        # shuffle instead of re-deriving the corpus-wide stream per
-        # consumer, and so the scalar V fetch below stops re-running
-        # the corpus vocabulary job on every invocation (measured at
-        # sf0.1; the cached relations ARE the trained LM — the
-        # io.read_table memoization rationale). An externally
-        # supplied model is the caller's to persist.
-        bc = bc.cache()
-        v = v.cache()
+    bc, c1, v = bigram_counts(docs, id_col, text_col)
+    # the model is vocabulary-sized — cache it so the context totals
+    # and the scoring broadcast reuse ONE bigram count shuffle instead
+    # of re-deriving the corpus-wide stream per consumer, and so the
+    # scalar V fetch below stops re-running the corpus vocabulary job
+    # on every invocation (measured at sf0.1; the cached relations ARE
+    # the trained LM — the io.read_table memoization rationale).
+    bc = bc.cache()
+    v = v.cache()
     # V is a scalar: fetch it driver-side once and fold it into the
     # smoothing literal (the q_scalar_lookup_default pattern) rather
     # than paying a broadcast crossJoin for one number
@@ -157,8 +150,7 @@ def perplexity(
     if model_broadcast_max_rows is None:
         model_broadcast_max_rows = VOCAB_BROADCAST_MAX_ROWS
     # ONE probe decides both model joins: c1 aggregates from bc, so
-    # |c1| <= |bc| and bc's count bounds them together (bc is cached
-    # on the self-trained path; an external model pays one slim job)
+    # |c1| <= |bc| and bc's count bounds them together (bc is cached)
     bc_side, fits = size_gated_broadcast(bc, model_broadcast_max_rows)
     c1_side = F.broadcast(c1) if fits else c1.hint("shuffle_hash")
     return (

@@ -3,19 +3,15 @@ columns with typed metadata, processed by Arrow-batched mapInPandas
 operators (the only part of the engine where Python touches row data
 — decode/feature-extract is genuinely inexpressible in SQL).
 
-Codecs (round 6 — the NotImplementedError stub is gone): the
-`real_decode=True` path decodes PNG (pure zlib + the five standard
-scanline filters, 8-bit gray/GA/RGB/RGBA) and WAV (stdlib `wave`,
-8/16-bit PCM) with no third-party media library. Formats beyond
-those raise ValueError naming the media_type — a real deployment
-adds PIL/ffmpeg inside `decode_media` and nothing else moves. The
-default fake path (raw bytes as uint8) stays the deterministic
-fixture-independent route the registered queries use.
+Decode is the raw-byte path: ``decode_media`` returns a blob's bytes
+as uint8, the deterministic, media-library-free route the registered
+queries use. A real codec (PIL/ffmpeg) would go there and nothing
+else moves.
 
-On top of the codecs: byte-level feature extraction
-(extract_features), the per-frame sampling plan for video
-(frame_sample_plan), and perceptual-hash image near-dup (image_phash,
-phash_near_dup_pairs, image_near_dup).
+On top of it: byte-level feature extraction (extract_features), the
+per-frame sampling plan for video (frame_sample_plan), and
+perceptual-hash image near-dup (image_phash, phash_near_dup_pairs,
+image_near_dup).
 
 Scale notes: binaries ride in parquet as BYTE_ARRAY; mapInPandas
 processes Arrow record batches per partition (no per-row pickling).
@@ -25,10 +21,6 @@ when binaries are large.
 
 from __future__ import annotations
 
-import io
-import struct
-import wave
-import zlib
 from typing import Iterator
 
 import numpy as np
@@ -60,171 +52,21 @@ def attach_fake_media(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def decode_media(blob: bytes, media_type: str, real_decode: bool = False) -> np.ndarray:
-    """Codec dispatch. Default (fake) path: raw bytes as a uint8 array
-    — deterministic, media-library-free, what the registered queries
-    exercise. ``real_decode=True``: an actual decode by media_type —
-    PNG via the pure zlib/stdlib decoder below, WAV via the stdlib
-    ``wave`` reader. Anything else raises ValueError naming the type;
-    a production deployment adds its PIL/ffmpeg branch HERE and every
-    downstream operator (features, resize, frame sampling) picks it
-    up unchanged."""
-    if real_decode:
-        if media_type == "image/png":
-            return _decode_png(blob)
-        if media_type in ("audio/wav", "audio/x-wav"):
-            return _decode_wav(blob)
-        raise ValueError(
-            f"no codec for media_type {media_type!r}: built-ins cover"
-            " image/png and audio/wav; add the PIL/ffmpeg branch in"
-            " decode_media for other formats"
-        )
+def decode_media(blob: bytes) -> np.ndarray:
+    """A blob's raw bytes as a uint8 array."""
     return np.frombuffer(blob, dtype=np.uint8)
 
 
-#: PNG color type -> channel count (8-bit depth only)
-_PNG_CHANNELS = {0: 1, 2: 3, 4: 2, 6: 4}
-
-#: fence for the pure-python decoder: reconstructed image bytes
-#: (height x width x channels) beyond this raise instead of entering
-#: the serial Average/Paeth per-pixel loops (~seconds per MB in
-#: CPython). 16 MiB ~= 2048x2048 RGBA — generous for thumbnails and
-#: fixtures, far below where a real pipeline needs the PIL branch.
-_MAX_DECODE_BYTES = 16 * 1024 * 1024
-
-
-def _decode_png(blob: bytes) -> np.ndarray:
-    """Pure zlib/numpy PNG decode: chunk walk -> IDAT inflate -> undo
-    the five standard scanline filters (None/Sub/Up/Average/Paeth,
-    RFC 2083 §6). 8-bit depth, non-interlaced, gray/GA/RGB/RGBA.
-    Returns (h, w) for grayscale else (h, w, channels) uint8.
-
-    Filter reconstruction cost: Up vectorizes trivially; Sub is a
-    per-channel-lane running sum, vectorized below as a cumsum (mod
-    256 falls out of uint8 overflow). Average/Paeth are inherently
-    serial within a row (each pixel depends on the RECONSTRUCTED left
-    neighbor — a data dependence no numpy expression removes), so
-    they stay per-pixel loops behind _MAX_DECODE_BYTES: past that, a
-    clear error says to add the PIL branch in decode_media rather
-    than silently burning minutes of interpreter time per image.
-    Parallelism comes from partitions, not pixels."""
-    if blob[:8] != b"\x89PNG\r\n\x1a\n":
-        raise ValueError("not a PNG: bad signature")
-    pos, width, height, channels = 8, None, None, None
-    idat = bytearray()
-    while pos + 8 <= len(blob):
-        (length,) = struct.unpack(">I", blob[pos : pos + 4])
-        ctype = blob[pos + 4 : pos + 8]
-        data = blob[pos + 8 : pos + 8 + length]
-        pos += 12 + length  # length + type + data + crc
-        if ctype == b"IHDR":
-            width, height, depth, color, _comp, _filt, interlace = struct.unpack(
-                ">IIBBBBB", data
-            )
-            if depth != 8:
-                raise ValueError(f"only 8-bit PNG supported, got depth {depth}")
-            if interlace:
-                raise ValueError("interlaced PNG not supported")
-            channels = _PNG_CHANNELS.get(color)
-            if channels is None:
-                raise ValueError(f"unsupported PNG color type {color}")
-        elif ctype == b"IDAT":
-            idat += data
-        elif ctype == b"IEND":
-            break
-    if width is None or not idat:
-        raise ValueError("truncated PNG: missing IHDR or IDAT")
-    raw = zlib.decompress(bytes(idat))
-    stride = width * channels
-    if len(raw) != height * (stride + 1):
-        raise ValueError("corrupt PNG: wrong decompressed size")
-    if height * stride > _MAX_DECODE_BYTES:
-        raise ValueError(
-            f"PNG of {height * stride} reconstructed bytes exceeds the"
-            f" pure-python decoder's {_MAX_DECODE_BYTES}-byte fence"
-            " (Average/Paeth rows are per-pixel loops); add the PIL"
-            " branch in decode_media for images this large"
-        )
-    out = np.zeros((height, stride), dtype=np.uint8)
-    prev = np.zeros(stride, dtype=np.uint8)
-    at = 0
-    for y in range(height):
-        ftype = raw[at]
-        cur = np.frombuffer(raw, dtype=np.uint8, count=stride, offset=at + 1).copy()
-        at += stride + 1
-        if ftype == 1:  # Sub: + reconstructed left == per-lane running
-            # sum; uint8 cumsum overflow IS the required mod-256
-            np.cumsum(
-                cur.reshape(width, channels), axis=0, dtype=np.uint8, out=cur.reshape(width, channels)
-            )
-        elif ftype == 2:  # Up: + reconstructed above (vectorizes)
-            cur += prev
-        elif ftype == 3:  # Average: + floor((left + above) / 2)
-            for i in range(stride):
-                left = int(cur[i - channels]) if i >= channels else 0
-                cur[i] = (int(cur[i]) + ((left + int(prev[i])) >> 1)) & 0xFF
-        elif ftype == 4:  # Paeth predictor
-            for i in range(stride):
-                a = int(cur[i - channels]) if i >= channels else 0
-                b = int(prev[i])
-                c = int(prev[i - channels]) if i >= channels else 0
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                cur[i] = (int(cur[i]) + pred) & 0xFF
-        elif ftype != 0:  # None needs nothing
-            raise ValueError(f"bad PNG filter type {ftype}")
-        out[y] = cur
-        prev = out[y]
-    return out.reshape(height, width, channels) if channels > 1 else out.reshape(
-        height, width
-    )
-
-
-def _decode_wav(blob: bytes) -> np.ndarray:
-    """stdlib ``wave`` PCM decode: 8-bit unsigned or 16-bit signed
-    little-endian samples. Returns (n,) for mono else (n, channels)."""
-    with wave.open(io.BytesIO(blob), "rb") as w:
-        raw = w.readframes(w.getnframes())
-        sampwidth, channels = w.getsampwidth(), w.getnchannels()
-    if sampwidth == 1:
-        arr = np.frombuffer(raw, dtype=np.uint8)
-    elif sampwidth == 2:
-        arr = np.frombuffer(raw, dtype="<i2")
-    else:
-        raise ValueError(f"unsupported WAV sample width {sampwidth}")
-    return arr.reshape(-1, channels) if channels > 1 else arr
-
-
-def _as_feature_bytes(arr: np.ndarray) -> np.ndarray:
-    """Flatten a decoded array into the uint8 domain the byte-feature
-    operators consume: uint8 passes through, int16 PCM maps linearly
-    onto [0, 255] (the top byte of the shifted-unsigned sample)."""
-    a = arr.ravel()
-    if a.dtype == np.uint8:
-        return a
-    if a.dtype == np.int16:
-        return ((a.astype(np.int32) + 32768) >> 8).astype(np.uint8)
-    raise ValueError(f"no uint8 feature mapping for dtype {a.dtype}")
-
-
-def extract_features(media: DataFrame, real_decode: bool = False) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over the binary column:
     byte count, mean, entropy, and a 16-bucket byte histogram.
-    One mapInPandas pass; partition-parallel; no shuffle.
-    ``real_decode=True`` routes blobs through the actual codecs
-    (PNG/WAV) and maps decoded samples into the uint8 feature domain;
-    the default hashes the raw bytes (codec-free, deterministic)."""
+    One mapInPandas pass; partition-parallel; no shuffle."""
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for doc_id, blob, meta in zip(
-                pdf["doc_id"], pdf["content"], pdf["media_meta"]
-            ):
-                arr = _as_feature_bytes(
-                    decode_media(bytes(blob), meta["media_type"], real_decode)
-                )
+            for doc_id, blob in zip(pdf["doc_id"], pdf["content"]):
+                arr = decode_media(bytes(blob))
                 hist = np.bincount(arr // 16, minlength=16)[:16]
                 p = hist / max(arr.size, 1)
                 nz = p[p > 0]
@@ -267,7 +109,7 @@ def frame_sample_plan(media: DataFrame, fps: float = 1.0) -> DataFrame:
 # Perceptual image hashing + near-dup (round-16 verdict item 3): the
 # multimodal dedup tier that works WITHOUT an embedding model — a
 # 100 TB crawl dedups images before any encoder runs. Composes the
-# codecs above with the engine's banded-Hamming candidate machinery
+# decode above with the engine's banded-Hamming candidate machinery
 # (the q_simhash_pairs construction, queries/dedup.py).
 # ---------------------------------------------------------------------------
 
@@ -356,21 +198,16 @@ def phash_py(arr: np.ndarray) -> int:
     return int(h.astype(np.int64))
 
 
-def image_phash(media: DataFrame, real_decode: bool = False) -> DataFrame:
-    """(doc_id, phash): 64-bit perceptual hash per blob, one
-    Arrow-batched mapInPandas pass (partition-parallel, no shuffle —
-    the hash is ~300 doubles of numpy per image, the decode
-    dominates). ``real_decode=True`` routes through the PNG/WAV
-    codecs; the default hashes the raw-byte grid (deterministic,
-    media-library-free — the registered-query path)."""
+def image_phash(media: DataFrame) -> DataFrame:
+    """(doc_id, phash): 64-bit perceptual hash per blob's raw-byte
+    grid, one Arrow-batched mapInPandas pass (partition-parallel, no
+    shuffle — the hash is ~300 doubles of numpy per image)."""
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for doc_id, blob, meta in zip(
-                pdf["doc_id"], pdf["content"], pdf["media_meta"]
-            ):
-                arr = decode_media(bytes(blob), meta["media_type"], real_decode)
+            for doc_id, blob in zip(pdf["doc_id"], pdf["content"]):
+                arr = decode_media(bytes(blob))
                 rows.append({"doc_id": doc_id, "phash": phash_py(arr)})
             yield pd.DataFrame(rows, columns=["doc_id", "phash"])
 
@@ -443,12 +280,12 @@ def phash_near_dup_pairs(
     )
 
 
-def image_near_dup(media: DataFrame, real_decode: bool = False) -> DataFrame:
+def image_near_dup(media: DataFrame) -> DataFrame:
     """Perceptual image near-duplicate pairs over a media relation
     (doc_id, content, media_meta): pHash each blob (one mapInPandas
     pass), then the exact banded-Hamming candidate join. The hash
     relation (doc_id, phash — two scalars) is what crosses the
     exchange; image bytes never do. Persisted once: both self-join
     sides and the verification read the materialized form."""
-    hashes = image_phash(media, real_decode=real_decode).persist()
+    hashes = image_phash(media).persist()
     return phash_near_dup_pairs(hashes)

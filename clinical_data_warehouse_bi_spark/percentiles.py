@@ -1,15 +1,14 @@
 """Distributed EXACT interpolated percentiles with bounded state on
 BOTH sides of the driver/executor split.
 
-The round-3 form of ``queries.core.exact_percentiles_bucketed``
-bounded the executor aggregation state at O(4096) but still merged
-per-group histograms on the driver — O(groups x columns x occupied
-buckets) counters plus a Python loop per rank item, which becomes the
-bottleneck exactly when the group key is high-cardinality (percentiles
-per admission: millions of groups). This module is the round-5 fix
-(and since round 6 the ONLY implementation — the driver-merge path is
-deleted; the core helper is a thin list-of-dicts adapter over this):
-rank resolution itself is a DataFrame plan — cumulative windows over
+The round-3 bucketed exact-percentile form bounded the executor
+aggregation state at O(4096) but still merged per-group histograms on
+the driver — O(groups x columns x occupied buckets) counters plus a
+Python loop per rank item, which becomes the bottleneck exactly when
+the group key is high-cardinality (percentiles per admission:
+millions of groups). This module is the round-5 fix (and since round
+6 the ONLY implementation — the driver-merge path is deleted): rank
+resolution itself is a DataFrame plan — cumulative windows over
 the histogram relation, rank-target location as a broadcast join, and
 value lookup only inside rank-holding buckets — so the driver never
 materializes a histogram. Driver-visible data is O(1): optional probe
@@ -614,33 +613,3 @@ def grouped_percentiles(
         for q in quantiles
     ]
     return df.groupBy(*group_cols).agg(*aggs)
-
-
-def winsorize(
-    df: DataFrame,
-    cols: list[str],
-    lo_q: float = 0.01,
-    hi_q: float = 0.99,
-) -> DataFrame:
-    """Clamp numeric columns to their [lo_q, hi_q] quantile bounds —
-    the outlier-capping step a feature pipeline runs before training
-    statistics (a single fat-finger lab value must not own the
-    scaler). ONE approxQuantile pass computes every column's bounds
-    (O(cols) driver scalars); the clamp is per-row
-    greatest/least — no shuffle, schema preserved, nulls pass
-    through."""
-    if not (0.0 <= lo_q < hi_q <= 1.0):
-        raise ValueError("need 0 <= lo_q < hi_q <= 1")
-    bounds = df.approxQuantile(cols, [lo_q, hi_q], 0.001)
-    out = df
-    for c, (lo, hi) in zip(cols, bounds):
-        # greatest/least IGNORE nulls (they would clamp a null to the
-        # bound) — keep nulls null explicitly
-        out = out.withColumn(
-            c,
-            F.when(
-                F.col(c).isNotNull(),
-                F.least(F.greatest(F.col(c), F.lit(lo)), F.lit(hi)),
-            ),
-        )
-    return out

@@ -206,153 +206,6 @@ def q_pricing_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: hi/lo accumulator split for pricing_summary_bucketed's level-2
-#: bigint sums: per-order fixed-point values v (<= ~4e15 at e10
-#: scale) are summed as (sum(v div S), sum(v mod S)) with S = 1e8 so
-#: NEITHER leg can overflow a bigint until ~9e10 orders per
-#: (flag, status) group — TPC-H SF 100k (~100 TB) has ~2.5e10 per
-#: group, a 3.7x margin. The split is exact for any sign (Spark's
-#: div/% satisfy v == (v div S)*S + (v mod S)).
-PRICING_E_SPLIT = 100_000_000
-
-
-def write_pricing_layout(
-    li: DataFrame, table: str = "lineitem_by_order", num_buckets: int = 32
-) -> None:
-    """One-time M8 layout for the pricing workload: lineitem bucketed
-    (and bucket-sorted) by l_orderkey — the Spark analog of the
-    reference's fact B-tree indexes (DWH.sql:193-198) applied to its
-    headline aggregate (DWH.sql:203-210). Paid once at write time;
-    every COUNT(DISTINCT l_orderkey)-shaped aggregation then runs
-    WITHOUT a row-scale exchange (see pricing_summary_bucketed)."""
-    from clinical_data_warehouse_bi_spark.io import write_bucketed_table
-
-    spark = li.sparkSession
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    # a crashed prior write can leave the managed location behind with
-    # no catalog entry — saveAsTable then refuses the name; clear it
-    loc = (
-        spark.conf.get("spark.sql.warehouse.dir")
-        .removeprefix("file:")
-        .rstrip("/")
-    )
-    import shutil
-
-    shutil.rmtree(f"{loc}/{table}", ignore_errors=True)
-    write_bucketed_table(
-        li, table, ["l_orderkey"], num_buckets=num_buckets,
-        sort_by=["l_orderkey"],
-    )
-
-
-def pricing_summary_bucketed(
-    spark: SparkSession, table: str = "lineitem_by_order"
-) -> DataFrame:
-    """q_pricing_summary's EXACT at-scale form over the bucketed
-    layout (round-16 verdict item 1): value-identical output (pinned
-    by tests/test_pricing_approx.py) with ZERO row-scale exchange.
-
-    Why the parquet form is terminal: the exact
-    COUNT(DISTINCT l_orderkey) must materialize the distinct
-    (flag, status, orderkey) set across partitions — a ~n_orders-row
-    exchange that measured 13.7 of 19.8 s at 256x (BASELINE.md). The
-    bucketed table is hash-partitioned by l_orderkey, so a two-level
-    aggregation needs no exchange at all at the order grain:
-
-    - level 1 groups by (flag, status, orderkey): HashPartitioning
-      (l_orderkey) satisfies the clustering requirement (orderkey is
-      a subset of the grouping keys), so Catalyst plans the aggregate
-      directly on the scan — each order's lines are co-located by
-      construction.
-    - level 2 groups the ~n_orders level-1 rows by (flag, status):
-      partial aggregation collapses each task to <= 6 rows before the
-      only exchange (partitions x 6 rows).
-
-    Exactness without decimal accumulation: measures are quantized to
-    fixed-point BIGINTs at the same decimal casts the exact form uses
-    (qty/price e2, discounted e6, charge e10 — products of the e-int
-    forms are exactly the decimal products scaled), level-1 per-order
-    sums are bounded (<= ~7 lines/order), and level-2 sums split
-    hi/lo at PRICING_E_SPLIT so bigint never overflows (bounds on the
-    constant). The final 6 rows reconstruct the decimal value and
-    convert decimal->string->double exactly like the exact form, so
-    the doubles are bit-identical. Bigint sum towers stay inside
-    whole-stage codegen; the decimal ops run on 6 rows."""
-    S = PRICING_E_SPLIT
-    li = spark.table(table).filter(
-        F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp")
-    )
-    lvl1 = (
-        li.selectExpr(
-            "l_returnflag",
-            "l_linestatus",
-            "l_orderkey",
-            "cast(cast(l_quantity as decimal(12,2)) * 100 as bigint)"
-            " AS qty_e2",
-            "cast(cast(l_extendedprice as decimal(12,2)) * 100 as bigint)"
-            " AS price_e2",
-            "cast(cast(l_discount as decimal(6,4)) * 10000 as bigint)"
-            " AS disc_e4",
-            "cast(cast(l_tax as decimal(6,4)) * 10000 as bigint) AS tax_e4",
-        )
-        .selectExpr(
-            "l_returnflag",
-            "l_linestatus",
-            "l_orderkey",
-            "qty_e2",
-            "price_e2",
-            "price_e2 * (10000 - disc_e4) AS disc_e6",
-            "price_e2 * (10000 - disc_e4) * (10000 + tax_e4) AS charge_e10",
-        )
-        .groupBy("l_returnflag", "l_linestatus", "l_orderkey")
-        .agg(
-            F.expr("sum(qty_e2)").alias("o_qty"),
-            F.expr("sum(price_e2)").alias("o_price"),
-            F.expr("sum(disc_e6)").alias("o_disc"),
-            F.expr("sum(charge_e10)").alias("o_charge"),
-            F.expr("count(*)").alias("o_lines"),
-        )
-    )
-    hilo = [
-        F.expr(f"sum({expr})").alias(f"{c}_{tag}")
-        for c in ("o_qty", "o_price", "o_disc", "o_charge")
-        for expr, tag in (
-            (f"{c} div {S}", "hi"),
-            (f"{c} % {S}", "lo"),
-        )
-    ]
-    lvl2 = lvl1.groupBy("l_returnflag", "l_linestatus").agg(
-        *hilo,
-        F.expr("sum(o_lines)").alias("count_order"),
-        F.expr("count(*)").alias("n_orders"),
-    )
-
-    def rebuild(c: str, divisor: str) -> str:
-        # exact decimal reconstruction on 6 rows, then the shared
-        # decimal->string->double conversion (correctly-rounded parse
-        # in both engines — the q_pricing_summary convention). The
-        # reconstructed integer re-casts to decimal(26,0) (bound 1e26
-        # >> any total, ~1e19 at 100 TB) BEFORE the division: a
-        # decimal(38,0) dividend trips Spark's precision-loss rule
-        # (result precision 50 -> scale clipped to 6 < the e10 scale),
-        # while 26+12 = 38 keeps the full scale — exact.
-        return (
-            f"cast(cast(cast(cast({c}_hi as decimal(38,0)) * {S} + {c}_lo"
-            f" as decimal(26,0)) / {divisor} as string) as double)"
-        )
-
-    return lvl2.selectExpr(
-        "l_returnflag",
-        "l_linestatus",
-        f"{rebuild('o_qty', '100')} AS sum_qty",
-        f"{rebuild('o_price', '100')} AS sum_base_price",
-        f"{rebuild('o_disc', '1000000')} AS sum_disc_price",
-        f"{rebuild('o_charge', '10000000000')} AS sum_charge",
-        "count_order",
-        "n_orders",
-    )
-
-
 # ---------------------------------------------------------------------------
 # Projection / filter / cleansing
 # ---------------------------------------------------------------------------
@@ -693,40 +546,6 @@ def q_approx_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("approx_percentile(l_quantity, 0.95, 10000)").alias("p95_qty"),
         F.expr("approx_percentile(l_extendedprice, 0.5, 10000)").alias("median_price"),
     )
-
-
-def exact_percentiles_bucketed(
-    df: DataFrame,
-    key: str,
-    specs: dict[str, list[tuple[float, str]]],
-    native_distinct_max: int = 65536,
-) -> list[dict]:
-    """EXACT interpolated percentiles per group, list-of-dicts API
-    (DuckDB quantile_cont definition). Round-6: the round-3
-    driver-merged implementation that lived here (per-group histogram
-    counters merged in a Python loop — a known scale hazard at high
-    group cardinality) is GONE; this is now a thin adapter over
-    percentiles.exact_percentiles_distributed, which keeps state
-    bounded on BOTH sides of the driver/executor split. The collect
-    here is the caller's choice of materialization, not part of the
-    algorithm — use the DataFrame form directly for anything large.
-
-    Reference analogue: the BI summary surface (DWH.sql:203-210)."""
-    from clinical_data_warehouse_bi_spark.percentiles import (
-        exact_percentiles_distributed,
-        release,
-    )
-
-    out_df = exact_percentiles_distributed(
-        df, key, specs, native_distinct_max=native_distinct_max
-    )
-    names = [name for c in specs for _, name in specs[c]]
-    try:
-        return [
-            {key: r[key], **{n: r[n] for n in names}} for r in out_df.collect()
-        ]
-    finally:
-        release(out_df)
 
 
 @register("q_percentiles", oracle="""

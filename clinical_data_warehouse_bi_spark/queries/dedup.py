@@ -43,26 +43,6 @@ _SQL_LSH_PAIRS = f"""
 """
 
 
-def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup via content-hash groupBy: one shuffle on md5(text)
-    (uniform — no skew by construction), keep the minimum doc_id as
-    the group representative. `n_copies > 1` rows are the duplicate
-    clusters. At 100 TB this is THE cheap first pass before any
-    near-dup machinery.
-
-    Round-5 registry retirement (cap is 50; slot went to q_scd2_dim):
-    q_corpus_clean runs this exact shape hash-checked — one shuffle on
-    a uniform content hash, n_copies count, keep-min-doc_id canonical —
-    as the dedup stage of its pipeline (over the normalized
-    fingerprint, a strict superset of raw-hash grouping work). Kept
-    unregistered as the narrow-API form."""
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    return (
-        docs.groupBy(F.md5("text").alias("text_hash"))
-        .agg(F.count("*").alias("n_copies"), F.min("doc_id").alias("keep_doc_id"))
-    )
-
-
 #: q_minhash_lsh_pairs' DuckDB oracle, preserved after its round-9
 #: registry retirement (slot went to q_grouped_percentiles) — the
 #: cross-engine value check survives in tests/test_retired_parity.py.

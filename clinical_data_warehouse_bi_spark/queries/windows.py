@@ -234,15 +234,15 @@ def q_image_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Rows-only check BY DESIGN: the DCT hash runs in the decode path
     (mapInPandas), not SQL. Value evidence: numpy-exact reference
-    equality, planted near-copy recall on real PNGs (noise within the
-    radius found, distinct images rejected), and invariance/
-    determinism properties in tests/test_multimodal.py.
+    equality, planted near-copy recall on raw-byte images (noise
+    within the radius found, distinct images rejected), and
+    invariance/determinism properties in tests/test_multimodal.py.
 
     The registered path hashes the fake-media byte grid (codec-free,
-    deterministic); real deployments flip real_decode=True and attach
-    their PIL/ffmpeg branch in decode_media — nothing else moves. The
-    driver's documents table carries exact text duplicates, so the
-    fake blobs yield hamming-0 pairs and the gate row is non-empty."""
+    deterministic); a real deployment puts its PIL/ffmpeg codec in
+    decode_media — nothing else moves. The driver's documents table
+    carries exact text duplicates, so the fake blobs yield hamming-0
+    pairs and the gate row is non-empty."""
     from clinical_data_warehouse_bi_spark.multimodal import (
         attach_fake_media,
         image_near_dup,
@@ -528,7 +528,7 @@ def q_resample_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     from clinical_data_warehouse_bi_spark.timeseries import resample_fill
 
     ev = load_tables(spark, sf_dir, ("events",))["events"]
-    return resample_fill(ev, exact=True)
+    return resample_fill(ev)
 
 
 SQL_READMISSION_GAP = """

@@ -61,11 +61,7 @@ _CHECK_ORDER = [
     # round-2 silently-skipped six (VERDICT r2 finding #1) lead
     # (round 5 retired two of them: q_doc_fingerprint and
     # q_dedup_exact — both witnessed by q_corpus_clean's hash-checked
-    # fingerprint + keep-min-doc_id dedup stage. Precision note: the
-    # witness hashes NORMALIZED text where q_dedup_exact hashed RAW
-    # text — the witness covers the dedup STRUCTURE, so the raw-hash
-    # expression form keeps its own cross-engine value check in
-    # tests/test_properties.py::test_raw_md5_dedup_matches_duckdb.
+    # fingerprint + keep-min-doc_id dedup stage.
     # q_stream_dedup_dual retired round 12 — slot went to
     # q_skew_report; witnesses: streaming.dedup_events' redelivery
     # test in tests/test_streaming and q_corpus_clean's registered

@@ -48,10 +48,9 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # Spark still defaults timestamp writes to legacy INT96, which
         # carries NO parquet min/max statistics — every timestamp
-        # range probe on a written layer would read every row group
-        # (measured: the zorder_effectiveness harness found stats=None
-        # on the fact's event_datetime). INT64 micros restores footer
-        # pruning and is the modern interoperable encoding.
+        # range probe on written parquet would read every row group.
+        # INT64 micros restores footer pruning and is the modern
+        # interoperable encoding.
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     )
     for k, v in (extra_conf or {}).items():

@@ -676,7 +676,6 @@ def search_ivf_pq_index(
     nprobe: int,
     shortlist: int = 50,
     topk: int = 5,
-    allowed: DataFrame | None = None,
 ) -> DataFrame:
     """Serve ANN queries FROM the persisted index: probe selection is
     driver-side numpy against the loaded centroids (queries are
@@ -686,17 +685,7 @@ def search_ivf_pq_index(
     regardless of corpus size; ADC LUT-sums score the packed codes
     per Arrow batch; only the per-query shortlist pays exact cosine
     against the float vector table (semi-joined by id). No training,
-    no full-index pass, no shuffle of anything corpus-sized.
-
-    FILTERED search (the vector-store combine-with-metadata shape):
-    pass ``allowed`` — a DataFrame whose ``vec_id`` column is the
-    metadata-predicate-qualified id set — and candidates are
-    semi-joined against it BEFORE ADC scoring, so the shortlist is
-    built from qualifying vectors only (pre-filtering, not
-    post-filter truncation: a selective predicate cannot starve the
-    top-k, and no oversampling factor is needed). At 100 TB the
-    semi-join keys on the already-pruned candidate relation, never
-    the full postings set."""
+    no full-index pass, no shuffle of anything corpus-sized."""
     meta = load_ivf_pq_index(path)
     cents = meta["centroids"]
     cmat = np.array([v for _, v in cents], dtype=np.float64)
@@ -735,10 +724,6 @@ def search_ivf_pq_index(
         .filter(F.col("vec_id") != F.col("qid"))
         .select("qid", F.col("vec_id").alias("nid"), "codes")
     )
-    if allowed is not None:
-        cand = cand.join(
-            allowed.select(F.col("vec_id").alias("nid")), "nid", "left_semi"
-        )
 
     def adc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         sub_idx = np.arange(m)

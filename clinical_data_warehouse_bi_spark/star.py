@@ -14,13 +14,11 @@ MariaDB's mutable-state idioms become pure recomputes:
                                  (facts at scale)
 
 Every transform chains lazily inside one Catalyst plan per layer. The
-materialization barriers are the optional parquet writes between
-layers — exactly the staging/dwh boundaries the reference has — plus
-the lazy ``localCheckpoint``s at the two consumer-shared event-scale
-relations: the enriched staging fact and the cleaned DWH fact. In the
-scale path (``parity_keys=False``) those are the checkpoints
-``keys.zip_index_key`` takes of its input, and the two key-built dims
-pass through the same barrier.
+materialization barriers are the lazy ``localCheckpoint``s at the two
+consumer-shared event-scale relations: the enriched staging fact and
+the cleaned DWH fact. In the scale path (``parity_keys=False``) those
+are the checkpoints ``keys.zip_index_key`` takes of its input, and the
+two key-built dims pass through the same barrier.
 
 Scale notes: concept/junk/date dims are broadcast in every fact
 lookup. The interval joins key on (patient_id, admission_id) — the
@@ -604,9 +602,7 @@ def build_dwh(
         # recomputes the whole promote + cleanup chain. Lazy
         # checkpoint: materialized by whichever consumer acts first,
         # reused by the other — the same role the reference's
-        # physical DWH fact table plays (DWH.sql:111-118). When
-        # run_pipeline writes parquet layers the write itself is the
-        # barrier and this is a no-op cost.
+        # physical DWH fact table plays (DWH.sql:111-118).
         fact = fact.localCheckpoint(eager=False)
     else:
         # scale path (round-14 rewrite; the DWH build was the
@@ -675,58 +671,7 @@ def build_dwh(
     }
 
 
-def run_pipeline(
-    src: dict[str, DataFrame],
-    out_dir: str | None = None,
-    zorder_fact: bool = False,
-    zorder_opts: dict | None = None,
-) -> dict[str, dict[str, DataFrame]]:
-    """staging -> dwh (-> parquet layers when out_dir given — the
-    reference's database-per-layer materialization barriers).
-
-    ``zorder_fact`` switches the DWH fact's physical layout from
-    hive-partitioning on event_source_type to Z-order clustering on
-    (admission_id, event_datetime) via layout.write_zordered — the
-    M8 'fact index' answer as the pipeline's OWN physical design
-    (DWH.sql:193-198 indexes exactly these probe columns): the BI
-    point/range probes ("this admission", "this admission this
-    week") prune by parquet footer min/max on BOTH columns at once
-    instead of reading a whole source-type slice. Source-type stays
-    a low-cardinality column whose footer stats still serve equality
-    slices. ``zorder_opts`` forwards to write_zordered (bits,
-    partitions, parquet_block_bytes, normalize)."""
+def run_pipeline(src: dict[str, DataFrame]) -> dict[str, dict[str, DataFrame]]:
+    """staging -> dwh, both lazy: ``{"stage": ..., "dwh": ...}``."""
     stage = build_staging(src)
-    if out_dir:
-        from clinical_data_warehouse_bi_spark.io import write_layer
-
-        spark = next(iter(src.values())).sparkSession
-        for name, df in stage.items():
-            write_layer(df, f"{out_dir}/stage_area/{name}")
-            stage[name] = spark.read.parquet(f"{out_dir}/stage_area/{name}")
-    dwh = build_dwh(stage)
-    if out_dir:
-        from clinical_data_warehouse_bi_spark.io import write_layer
-
-        spark = next(iter(src.values())).sparkSession
-        for name, df in dwh.items():
-            # the fact layer is partitioned by source type — the Spark
-            # replacement for the reference's fact indexes
-            # (DWH.sql:193-198): partition pruning serves the
-            # per-source BI slices, parquet min/max stats serve the
-            # key/range probes
-            if name == "fact_disorder_events" and zorder_fact:
-                from clinical_data_warehouse_bi_spark.layout import write_zordered
-
-                write_zordered(
-                    df,
-                    f"{out_dir}/dwh/{name}",
-                    ["admission_id", "event_datetime"],
-                    **(zorder_opts or {}),
-                )
-            else:
-                partition_by = (
-                    ["event_source_type"] if name == "fact_disorder_events" else None
-                )
-                write_layer(df, f"{out_dir}/dwh/{name}", partition_by=partition_by)
-            dwh[name] = spark.read.parquet(f"{out_dir}/dwh/{name}")
-    return {"stage": stage, "dwh": dwh}
+    return {"stage": stage, "dwh": build_dwh(stage)}

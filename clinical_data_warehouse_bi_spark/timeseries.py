@@ -5,8 +5,8 @@ gap filling (resample_fill), trailing-window rolling aggregates
 The BI question the reference's calendar dimension exists to serve
 (Stage_area.sql builds date rows precisely so sparse facts can be
 reported on a dense axis): observed events are irregular, reports
-want one row per key per bucket, missing buckets filled by policy
-(NULL, zero, or forward-fill of the last observation).
+want one row per key per bucket, missing buckets forward-filled
+from the last observation.
 
 Scale shape of resample_fill: the per-key grid is generated MAP-SIDE
 from each key's own (min, max) span via sequence() — no calendar
@@ -28,33 +28,23 @@ def resample_fill(
     key_col: str = "user_id",
     ts_col: str = "ts",
     val_col: str = "value",
-    how: str = "ffill",
-    exact: bool = False,
 ) -> DataFrame:
     """(key, bucket timestamp, n_obs bigint, value double): one row
     per day bucket from each key's first to last observation.
     ``value`` is the bucket's SUM of ``val_col``; empty buckets have
-    n_obs = 0 and value by ``how``: 'ffill' carries the last
-    observed bucket value forward, 'zero' fills 0.0, 'null' leaves
-    NULL. The grid is delimited per key (own min..max span), so a
-    short-lived key costs its own lifetime, not the corpus's.
+    n_obs = 0 and carry the last observed bucket value forward. The
+    grid is delimited per key (own min..max span), so a short-lived
+    key costs its own lifetime, not the corpus's.
 
-    ``exact=True`` sums in decimal(18,6) and converts via string —
-    bit-identical under any partitioning and engine (the cross-engine
-    hash-gate convention); default double sums are faster and fine
-    for reporting."""
-    if how not in ("ffill", "zero", "null"):
-        raise ValueError(f"unknown fill policy: {how!r}")
+    Sums run in decimal(18,6) and convert via string — bit-identical
+    under any partitioning and engine (the cross-engine hash-gate
+    convention)."""
     bucket = F.date_trunc("day", ts_col)
-    if exact:
-        vexpr = F.col(val_col).cast("decimal(18,6)")
-    else:
-        vexpr = F.col(val_col).cast("double")
     per_bucket = (
         obs.select(
             F.col(key_col).alias("__k"),
             bucket.alias("__b"),
-            vexpr.alias("__v"),
+            F.col(val_col).cast("decimal(18,6)").alias("__v"),
         )
         .groupBy("__k", "__b")
         .agg(
@@ -65,11 +55,7 @@ def resample_fill(
             "__k",
             "__b",
             "n_obs",
-            (
-                F.col("__raw_sum").cast("string").cast("double")
-                if exact
-                else F.col("__raw_sum")
-            ).alias("__obs_val"),
+            F.col("__raw_sum").cast("string").cast("double").alias("__obs_val"),
         )
     )
     spans = per_bucket.groupBy("__k").agg(
@@ -87,22 +73,16 @@ def resample_fill(
         F.coalesce("n_obs", F.lit(0).cast("bigint")).alias("n_obs"),
         "__obs_val",
     )
-    if how == "ffill":
-        w = (
-            Window.partitionBy("__k")
-            .orderBy("__b")
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        filled = F.last("__obs_val", ignorenulls=True).over(w)
-    elif how == "zero":
-        filled = F.coalesce("__obs_val", F.lit(0.0))
-    else:
-        filled = F.col("__obs_val")
+    w = (
+        Window.partitionBy("__k")
+        .orderBy("__b")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
     return dense.select(
         F.col("__k").alias(key_col),
         F.col("__b").alias("bucket"),
         "n_obs",
-        filled.alias("value"),
+        F.last("__obs_val", ignorenulls=True).over(w).alias("value"),
     )
 
 

@@ -306,21 +306,3 @@ def test_grouped_percentiles_rejects_bad_quantiles(spark, sf_dir):
         grouped_percentiles(li, ["l_returnflag"], "l_quantity", [1.5])
     with _pt.raises(ValueError):
         grouped_percentiles(li, ["l_returnflag"], "l_quantity", [])
-
-
-def test_winsorize_clamps_to_quantile_bounds(spark):
-    from clinical_data_warehouse_bi_spark.percentiles import winsorize
-
-    rows = [(float(i),) for i in range(100)] + [(10_000.0,), (-10_000.0,), (None,)]
-    df = spark.createDataFrame(rows, "v double")
-    out = [r["v"] for r in winsorize(df, ["v"], 0.05, 0.95).collect()]
-    finite = [v for v in out if v is not None]
-    lo, hi = min(finite), max(finite)
-    # outliers clamped to the empirical 5/95 band, interior untouched
-    assert 0.0 <= lo <= 10.0 and 90.0 <= hi <= 99.0
-    assert 50.0 in finite
-    assert None in out  # nulls pass through
-    import pytest as _pt
-
-    with _pt.raises(ValueError):
-        winsorize(df, ["v"], 0.9, 0.1)

@@ -298,30 +298,6 @@ def test_interval_join_windows_reuse_join_exchange(spark):
     assert n_fact_exchanges == 1
 
 
-def test_bucketed_join_has_no_exchange(spark, sf_dir):
-    """M8: two tables bucketed on the join key must sort-merge join
-    with ZERO exchanges — the write-time shuffle replaces the
-    reference's B-tree indexes for join locality."""
-    from clinical_data_warehouse_bi_spark.io import write_bucketed_table
-
-    spark.sql("DROP DATABASE IF EXISTS bucket_test CASCADE")
-    spark.sql("CREATE DATABASE bucket_test")
-    spark.sql("USE bucket_test")
-    orders = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    lineitem = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
-    write_bucketed_table(orders, "orders_b", ["o_orderkey"], 8)
-    write_bucketed_table(lineitem, "lineitem_b", ["l_orderkey"], 8)
-    joined = spark.table("lineitem_b").join(
-        spark.table("orders_b").hint("merge"),
-        F.col("l_orderkey") == F.col("o_orderkey"),
-    )
-    plan = physical_plan(joined)
-    assert "Exchange" not in plan
-    assert joined.count() > 0
-    spark.sql("DROP DATABASE bucket_test CASCADE")
-    spark.sql("USE default")
-
-
 def test_cosine_topk_never_joins_the_vector_table(spark, sf_dir):
     """The GEMM top-k path must not plan a cross/nested-loop join of
     the vector table — queries ride inside the mapInPandas closure,

@@ -54,38 +54,3 @@ def test_pricing_approx_plan_is_one_aggregation(spark, sf_dir):
     assert "Expand" not in plan
     assert "Join" not in plan
     assert plan.count("Exchange") == 1, plan
-
-
-def test_pricing_bucketed_matches_exact_and_plan(spark, sf_dir):
-    """Round-16 verdict item 1: pricing_summary_bucketed over the
-    l_orderkey-bucketed layout is (a) value-IDENTICAL to the exact
-    parquet form — the hi/lo bigint accumulators and the decimal(26)
-    reconstruction reproduce the decimal-sum doubles bit for bit —
-    and (b) plan-locked to ZERO row-scale exchange: the level-1
-    (flag, status, orderkey) aggregate rides the bucketed scan
-    (HashPartitioning(l_orderkey) satisfies the clustering
-    requirement), so the only Exchange in the plan is the 6-rows-per-
-    task (flag, status) merge — no exchange mentions l_orderkey."""
-    from clinical_data_warehouse_bi_spark.io import read_table
-    from clinical_data_warehouse_bi_spark.queries.core import (
-        pricing_summary_bucketed,
-        q_pricing_summary,
-        write_pricing_layout,
-    )
-
-    table = "lineitem_by_order_test"
-    li = read_table(spark, sf_dir, "lineitem")
-    write_pricing_layout(li, table, num_buckets=8)
-    try:
-        bkt_df = pricing_summary_bucketed(spark, table)
-        exact = {tuple(r) for r in q_pricing_summary(spark, sf_dir).collect()}
-        bkt = {tuple(r) for r in bkt_df.collect()}
-        assert bkt == exact
-        plan = bkt_df._jdf.queryExecution().executedPlan().toString()
-        for line in plan.splitlines():
-            if "Exchange" in line:
-                assert "l_orderkey" not in line, line
-        # the bucketed scan is actually bucketed (not a plain scan)
-        assert "Bucketed: true" in plan or "SelectedBucketsCount" in plan, plan
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")

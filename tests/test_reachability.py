@@ -19,7 +19,9 @@ the tested-only defs still waiting for their cut. A module-level
 import that its library module never names fails too: a cut must
 take the imports it orphans. A defaulted parameter that no call in
 the repo passes fails too: an option nobody sets is a fixed value,
-so write the value in. No Spark work.
+so write the value in. So does one that only tests pass, unless
+TEST_SEAMS lists it: an option only a test selects is a code path
+the contract never runs. No Spark work.
 """
 
 from __future__ import annotations
@@ -36,11 +38,6 @@ QUERIES = os.path.join(LIB, "queries")
 #: test of a surviving function checks against; each also roots
 #: whatever it calls
 TEST_REFERENCES = {
-    ("layout.py", "morton_interleave_py"):
-        "test_layout: pure-Python cross-check of layout.zorder_key",
-    ("layout.py", "zorder_effectiveness"):
-        "test_layout, test_star_pipeline: measures the row-group "
-        "pruning layout.write_zordered promises",
     ("registry.py", "benched_queries"):
         "test_registry, test_retired_parity: this round's donors for "
         "their pytest oracle check",
@@ -67,10 +64,6 @@ TESTED_ONLY = {
         "read_source", "temperature_mix", "write_sink", "write_sized",
         "write_training_shards",
     ),
-    "kpi.py": ("length_of_stay", "los_summary", "mortality_rate"),
-    "percentiles.py": ("winsorize",),
-    "queries/core.py": ("exact_percentiles_bucketed",),
-    "queries/dedup.py": ("q_dedup_exact",),
     "retrieval.py": (
         "bm25_batch_topk", "bm25_index_append", "bm25_index_compact",
         "hybrid_topk_served_graph",
@@ -81,6 +74,49 @@ TESTED_ONLY = {
         "repetition_filter", "scrub_pii", "suppress_to_k",
     ),
 }
+
+#: defaulted library parameters that only tests pass: reference
+#: paths a test compares the contract path against, volume-gate and
+#: geometry seams a test forces to reach the other side of a gate at
+#: fixture scale, and the corpus release's policy knobs. Like
+#: TESTED_ONLY it only shrinks: an option no production call passes
+#: selects a path the contract never runs.
+TEST_SEAMS = (
+    # reference paths
+    "corpus.py::build_corpus_release(materialize)",
+    "star.py::build_dwh(parity_keys)",
+    "star.py::build_staging(parity_keys)",
+    # volume gates and geometry
+    "hnsw.py::build_graph(upper_every)",
+    "hnsw.py::build_routed_hnsw_index(sub_shards)",
+    "joins.py::range_join_binned(bin_width)",
+    "lm.py::perplexity(model_broadcast_max_rows)",
+    "multimodal.py::phash_near_dup_pairs(max_hamming)",
+    "multimodal.py::phash_near_dup_pairs(n_bands)",
+    "percentiles.py::exact_percentiles_distributed(native_distinct_max)",
+    "percentiles.py::exact_percentiles_distributed(refine_cap)",
+    "similarity.py::train_pq_codebooks(ksub)",
+    "similarity.py::train_pq_codebooks(sample_cap)",
+    "text.py::epoch_shuffle(n_ranges)",
+    "text.py::tfidf_keywords(vocab_broadcast_max_rows)",
+    # corpus release policy
+    "corpus.py::build_corpus_release(budget_frac)",
+    "corpus.py::build_corpus_release(chunk_tokens)",
+    "corpus.py::build_corpus_release(min_quality)",
+    "corpus.py::build_corpus_release(min_tokens)",
+    "corpus.py::build_corpus_release(overlap_tokens)",
+    "corpus.py::build_corpus_release(substring_min_tokens)",
+    # operator parameters a test varies
+    "graph.py::connected_components(stats)",
+    "io.py::publish_index_dir(attempts)",
+    "scrub.py::dp_release(value_high)",
+    "scrub.py::dp_release(value_low)",
+    "scrub.py::repetition_metrics(ngram)",
+    "session.py::get_spark(shuffle_partitions)",
+    "streaming.py::dedup_events(watermark)",
+    "text.py::weighted_sample(seed)",
+)
+
 TESTED_ONLY_DEFS = {
     f"{module}::{name}" for module, names in TESTED_ONLY.items()
     for name in names
@@ -212,18 +248,17 @@ def test_library_imports_are_used():
     )
 
 
-def unset_options() -> list[str]:
+def unset_options(callers: list[str]) -> list[str]:
     """Defaulted parameters of top-level library defs that no call in
-    the roots, the library or tests/ passes, by keyword or by position.
+    ``callers`` or the library passes, by keyword or by position.
     Calls match by callee name alone, like the reachability pass.
     Skipped: ``*_col``/``*_cols`` parameters (column-name plumbing),
     TESTED_ONLY defs, defs never called by name, and defs some call
     reaches through ``*args``/``**kwargs``."""
-    files = _root_files() + _py_files(os.path.join(REPO_ROOT, "tests"))
     defs = []
     passed: dict[str, set] = defaultdict(set)  # keywords and arg counts
     splatted: set[str] = set()
-    for path in files + _py_files(LIB):
+    for path in callers + _py_files(LIB):
         tree = ast.parse(open(path).read(), path)
         if path.startswith(LIB + os.sep):
             rel = os.path.relpath(path, LIB)
@@ -267,10 +302,27 @@ def unset_options() -> list[str]:
 
 
 def test_library_options_are_set():
-    unset = unset_options()
+    unset = unset_options(
+        _root_files() + _py_files(os.path.join(REPO_ROOT, "tests"))
+    )
     assert not unset, (
         f"{len(unset)} defaulted parameters that no call passes (remove "
         "the option and write its value in):\n  " + "\n  ".join(unset)
+    )
+
+
+def test_library_options_have_a_production_caller():
+    test_only = set(unset_options(_root_files()))
+    new = sorted(test_only - set(TEST_SEAMS))
+    assert not new, (
+        f"{len(new)} defaulted parameters that only tests pass (delete "
+        "the path the option selects, with its tests, or pass it from "
+        "the contract):\n  " + "\n  ".join(new)
+    )
+    stale = sorted(set(TEST_SEAMS) - test_only)
+    assert not stale, (
+        "TEST_SEAMS entries that are deleted or now passed outside "
+        "tests/; take them off the list:\n  " + "\n  ".join(stale)
     )
 
 

@@ -350,51 +350,6 @@ def test_persisted_ivf_pq_index_serves_searches(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_filtered_ivf_pq_search_respects_predicate(spark, tmp_path):
-    """Filtered search: with an allowed-id set (the metadata
-    predicate's output), every result id qualifies, the top-k is as
-    deep as the allowed candidates permit (pre-filtering, no
-    starvation), and recall holds against brute force restricted to
-    the allowed subset."""
-    rng = np.random.RandomState(31)
-    k, dims, per = 4, 16, 100
-    centers = rng.normal(0, 10.0, size=(k, dims))
-    rows = [
-        (i, [float(x) for x in centers[i % k] + rng.normal(0, 1.0, dims)])
-        for i in range(k * per)
-    ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    path = str(tmp_path / "ivfpq_f")
-    similarity.build_ivf_pq_index(emb, path, n_clusters=k, m=4, seed=7)
-
-    allowed = emb.filter(F.col("vec_id") % 2 == 0).select("vec_id")
-    n_queries, topk = 6, 5
-    got = similarity.search_ivf_pq_index(
-        spark, path, emb, n_queries=n_queries, nprobe=2,
-        shortlist=80, topk=topk, allowed=allowed,
-    ).collect()
-    assert len(got) == n_queries * topk
-    assert all(r.nid % 2 == 0 for r in got)
-
-    # recall vs brute-force cosine over the ALLOWED subset only
-    import numpy as np_
-
-    mat = np_.array([v for _, v in rows], dtype=np_.float64)
-    norms = mat / np_.linalg.norm(mat, axis=1, keepdims=True)
-    hits = 0
-    for q in range(n_queries):
-        sims = norms @ norms[q]
-        order = [
-            i for i in np_.argsort(-sims, kind="stable")
-            if i != q and i % 2 == 0
-        ][:topk]
-        want = set(int(i) for i in order)
-        have = {r.nid for r in got if r.qid == q}
-        hits += len(want & have)
-    assert hits / (n_queries * topk) >= 0.6  # clustered data: high recall
-
-
-@pytest.mark.slow
 def test_served_index_repairs_corrupt_cache_dir(spark):
     """q_ann_ivf_pq_served self-heals a cache directory that exists
     but lost its INDEX_META (external deletion/crash mid-publish):
@@ -424,4 +379,3 @@ def test_served_index_repairs_corrupt_cache_dir(spark):
     # full wipe also recovers (fresh-build path regression anchor)
     shutil.rmtree(path)
     assert q_ann_ivf_pq_served(spark, sf).count() == n0
-

@@ -151,33 +151,6 @@ def test_agg_matches_manual(pipeline):
 
 
 @pytest.mark.slow
-def test_materialized_layers_partition_fact(spark, tmp_path_factory):
-    """out_dir writes each layer to parquet; the DWH fact is
-    partitioned by event_source_type (the reference's fact-index
-    replacement) and reads back identically."""
-    import os
-
-    out_dir = str(tmp_path_factory.mktemp("dwh_layers"))
-    src = make_sources(spark)
-    out = star.run_pipeline(src, out_dir=out_dir)
-    fact_dir = os.path.join(out_dir, "dwh", "fact_disorder_events")
-    parts = [d for d in os.listdir(fact_dir) if d.startswith("event_source_type=")]
-    assert len(parts) >= 2
-    # partition pruning reaches the scan for a per-source slice
-    sliced = out["dwh"]["fact_disorder_events"].filter(
-        F.col("event_source_type") == "Lab"
-    )
-    plan = sliced._jdf.queryExecution().executedPlan().toString()
-    assert "event_source_type" in plan
-    # in-memory rebuild agrees with the materialized round-trip
-    rebuilt = star.run_pipeline(make_sources(spark))
-    assert (
-        out["dwh"]["fact_disorder_events"].count()
-        == rebuilt["dwh"]["fact_disorder_events"].count()
-    )
-
-
-@pytest.mark.slow
 def test_release_frees_pipeline_checkpoints(spark):
     """A pipeline run pins localCheckpoint RDD blocks that
     catalog.clearCache cannot release (not CacheManager-registered);
@@ -204,96 +177,6 @@ def test_release_frees_pipeline_checkpoints(spark):
     # rather than equate; the invariant is NO new RDD survives
     assert released <= len(created)
     assert snapshot_persistent_rdds(spark) - baseline == set()
-
-
-@pytest.mark.slow
-def test_zordered_fact_layout_prunes_point_probes(spark, tmp_path_factory):
-    """M8 end-to-end: run_pipeline(zorder_fact=True) writes the DWH
-    fact Z-ordered on (admission_id, event_datetime); a point/range
-    probe box must skip MORE row groups than the same data in an
-    arrival-order layout, with identical content."""
-    import os
-
-    from clinical_data_warehouse_bi_spark.layout import zorder_effectiveness
-
-    out_dir = str(tmp_path_factory.mktemp("dwh_z"))
-    src = make_sources(spark, n_patients=400)
-    out = star.run_pipeline(
-        src,
-        out_dir=out_dir,
-        zorder_fact=True,
-        # small row groups force many footer entries from small data;
-        # production uses the 128 MB default
-        zorder_opts={"partitions": 8, "parquet_block_bytes": 16 * 1024},
-    )
-    fact = out["dwh"]["fact_disorder_events"]
-    z_dir = os.path.join(out_dir, "dwh", "fact_disorder_events")
-    assert any(f.endswith(".parquet") for f in os.listdir(z_dir))
-
-    # arrival-order baseline of the SAME rows, same file/group
-    # geometry. Deterministic layout: hash-repartition on the
-    # surrogate key + sort within partitions by it, so every run
-    # writes identical files (round-robin repartition() is
-    # scheduling-dependent and made this test flaky). Keying on
-    # disorder_event_id — NOT the z-order box columns — keeps the
-    # baseline genuinely "arrival-order" w.r.t. the probe box.
-    plain_dir = str(tmp_path_factory.mktemp("fact_plain"))
-    (
-        fact.repartition(8, F.col("disorder_event_id"))
-        .sortWithinPartitions("disorder_event_id")
-        .write.mode("overwrite")
-        .option("parquet.block.size", str(16 * 1024))
-        .parquet(plain_dir)
-    )
-
-    # box: one mid-range admission band x one narrow time window
-    r = fact.agg(
-        F.min("admission_id").alias("a0"),
-        F.max("admission_id").alias("a1"),
-        F.min("event_datetime").alias("t0"),
-        F.max("event_datetime").alias("t1"),
-    ).first()
-    a_mid = (r.a0 + r.a1) // 2
-    a_w = max((r.a1 - r.a0) // 20, 1)
-    t_mid = r.t0 + (r.t1 - r.t0) / 2
-    t_w = (r.t1 - r.t0) / 20
-    box = {
-        "admission_id": (a_mid, a_mid + a_w),
-        "event_datetime": (t_mid, t_mid + t_w),
-    }
-    eff = zorder_effectiveness(plain_dir, z_dir, box)
-    assert eff["zordered"]["total"] >= 4, eff  # geometry sanity
-    assert eff["skip_improvement"] > 1.0, eff
-
-    # content identical to the default-layout pipeline. The surrogate
-    # key is excluded from the content hash: scale-mode keys are
-    # arbitrary-but-dense BY CONTRACT (build_staging docstring — the
-    # zip assignment follows physical order, which legitimately
-    # differs between a parquet-round-tripped staging layer and an
-    # in-memory lineage; round 13 verified every OTHER column
-    # hash-equal across layouts and the key's own contract is
-    # asserted below instead).
-    rebuilt = star.run_pipeline(make_sources(spark, n_patients=400))
-    other = rebuilt["dwh"]["fact_disorder_events"]
-    cols = sorted(c for c in fact.columns if c != "disorder_event_id")
-    h = lambda d: d.select(  # noqa: E731
-        F.xxhash64(*[F.col(c).cast("string") for c in cols]).alias("rh")
-    ).agg(
-        F.expr("bit_xor(rh)").alias("h"), F.count("*").alias("n")
-    ).first()
-    hz, hp = h(fact), h(other)
-    assert (hz.h, hz.n) == (hp.h, hp.n)
-    # key contract in BOTH layouts: unique, assigned dense 1..M over
-    # the pre-cleanup promote (M >= surviving N: orphan DELETEs leave
-    # gaps, the reference's assign-then-delete structure)
-    for d in (fact, other):
-        r = d.agg(
-            F.count("*").alias("n"),
-            F.count_distinct("disorder_event_id").alias("nd"),
-            F.min("disorder_event_id").alias("lo"),
-            F.max("disorder_event_id").alias("hi"),
-        ).first()
-        assert r.nd == r.n and r.lo >= 1 and r.hi >= r.n
 
 
 def test_deidentified_release_preserves_analytics(pipeline):
