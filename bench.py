@@ -254,15 +254,13 @@ def bench_corpus_full(spark, sf_dir: str) -> float:
     end-to-end (round-14 verdict item 4). The reference digest index
     builds ONCE per corpus outside the timed loop (a training org
     maintains it across releases; per-release cost is the probe,
-    which is what this times), cached under /tmp keyed by
-    (format version, sf_dir) — the q_bm25_served convention."""
-    import hashlib
-    import os as _os
+    which is what this times), cached through io.cached_index."""
     import shutil
     import tempfile
 
     from clinical_data_warehouse_bi_spark.corpus import build_corpus_release
     from clinical_data_warehouse_bi_spark.io import (
+        cached_index,
         read_table,
         release_new_persistent_rdds,
         snapshot_persistent_rdds,
@@ -279,32 +277,13 @@ def bench_corpus_full(spark, sf_dir: str) -> float:
     # held-out "eval" slice as the reference corpus: 2% of docs
     ref = docs.filter("doc_id % 50 = 0")
     corpus_docs = docs.filter("doc_id % 50 != 0")
-    # cache tag includes a CONTENT key (file sizes + mtimes of the
-    # documents parquet), not just the sf_dir path — regenerated test
-    # data at the same path must rebuild the index, not silently
-    # reuse a stale one (round-16 advice)
-    doc_path = _os.path.join(sf_dir, "documents.parquet")
-    sig = hashlib.md5(sf_dir.encode())
-    paths = (
-        sorted(
-            _os.path.join(r, f)
-            for r, _, fs in _os.walk(doc_path)
-            for f in fs
-        )
-        if _os.path.isdir(doc_path)
-        else [doc_path]
+    idx = cached_index(
+        sf_dir,
+        "documents",
+        f"suffix_v{SUFFIX_INDEX_FORMAT_VERSION}_L12_b64_ref50",
+        SUFFIX_INDEX_META,
+        lambda d: build_suffix_index(ref, d, min_tokens=12, n_buckets=64),
     )
-    for p in paths:
-        st = _os.stat(p)
-        sig.update(f"{p}|{st.st_size}|{st.st_mtime_ns}".encode())
-    tag = sig.hexdigest()[:10]
-    idx = (
-        f"{tempfile.gettempdir()}/spark_graft_corpusfull_idx_"
-        f"v{SUFFIX_INDEX_FORMAT_VERSION}_{tag}"
-    )
-    if not _os.path.exists(_os.path.join(idx, SUFFIX_INDEX_META)):
-        shutil.rmtree(idx, ignore_errors=True)
-        build_suffix_index(ref, idx, min_tokens=12, n_buckets=64)
     rdd_baseline = snapshot_persistent_rdds(spark)
 
     def run() -> dict:

@@ -13,10 +13,11 @@ keeps it that way.
 
 Layout:
   session.py     SparkSession factory (AQE, UTC, sane shuffle partitions)
-  io.py          scale-factor table reads, footer stats, fan_out, index
-                 publish, temperature mixing, dataset manifests;
+  io.py          scale-factor table reads, footer stats, fan_out, the
+                 build-once index cache (cached_index), temperature
+                 mixing, dataset manifests;
                  tested-only: format sources/sinks, raw-file reads, sized
-                 writes, shuffles, compaction under a maintenance lock
+                 writes, shuffles
   cleanse.py     cleansing expressions (sentinel timestamps, keyword
                  filters, regex-guarded numeric parse, calendar attrs)
   keys.py        surrogate keys (row_number, zip_index_key)

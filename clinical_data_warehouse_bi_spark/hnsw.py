@@ -34,9 +34,10 @@ Distributed design — the part that must survive 100 TB:
   are honest to name "HNSW-class".
 - **Persisted, atomically published.** The graph is parquet
   partitioned by shard (vec_id, embedding, neighbors, layer) plus a
-  meta JSON written last (complete-iff-present marker), published
-  via io.publish_index_dir — the exact contract of the BM25 and
-  IVF-PQ indexes (lost race discarded, corrupt leftover healed).
+  meta JSON written last (complete-iff-present marker), built once
+  and published through io.cached_index — the exact contract of the
+  BM25 and IVF-PQ indexes (lost race discarded, corrupt leftover
+  healed).
 - **Budget accounting.** Every search reports distance evaluations
   (``n_evals``), the currency recall-vs-cost comparisons use; the
   property tests pin recall at EQUAL probe budget against IVF-PQ's
@@ -239,11 +240,9 @@ def build_hnsw_index(
     id_col: str = "vec_id",
 ) -> dict:
     """Persist the graph as parquet PARTITIONED BY shard plus a meta
-    JSON written last (complete-iff-present marker). Build into a
-    scratch dir and publish atomically from the caller via
-    io.publish_index_dir when contention is possible; the direct
-    form here writes in place for single-writer callers (the
-    registered query wraps it with the publish contract)."""
+    JSON written last (complete-iff-present marker). Writes in place;
+    the registered query builds it through io.cached_index, which
+    publishes the directory atomically."""
     g = build_graph(
         vectors, n_shards=n_shards, m=m, vec_col=vec_col, id_col=id_col
     )

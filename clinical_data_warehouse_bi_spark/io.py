@@ -9,7 +9,6 @@ parquet writes as the layer-materialization barriers.
 
 from __future__ import annotations
 
-import contextlib
 import os
 from datetime import timezone
 
@@ -449,77 +448,11 @@ def release_new_persistent_rdds(spark: SparkSession, baseline: set) -> int:
     return released
 
 
-class MaintenanceInProgressError(RuntimeError):
-    """A compaction/maintenance rewrite currently holds ``path``'s
-    maintenance lock: reads and appends must wait for the
-    single-writer window to close (round-8 verdict item: the caveat
-    is now an enforced contract, not a docstring)."""
+#: publish attempts before a contended index publish gives up
+PUBLISH_ATTEMPTS = 5
 
 
-def _maintenance_lock_path(path: str) -> str:
-    return f"{path.rstrip('/')}.maintenance-lock"
-
-
-def clear_stale_maintenance_lock(path: str) -> None:
-    """Self-heal after a compactor crash: the lock file records the
-    holder's pid; if that process is gone, the lock is stale and the
-    next recover_compacted_dir pass (which handles every crash point
-    of the swap itself) makes the directory safe again. Same-machine
-    semantics — on a shared filesystem with multiple hosts a lease
-    TTL would replace the pid probe."""
-    lp = _maintenance_lock_path(path)
-    try:
-        with open(lp) as f:
-            pid = int(f.read().strip() or "0")
-    except FileNotFoundError:
-        return
-    except ValueError:
-        pid = 0  # crashed between create and pid write: stale
-    if pid:
-        try:
-            os.kill(pid, 0)
-            return  # holder alive: lock stands
-        except ProcessLookupError:
-            pass
-        except PermissionError:
-            return  # alive under another uid
-    try:
-        os.remove(lp)
-    except FileNotFoundError:
-        pass
-
-
-@contextlib.contextmanager
-def maintenance_lock(path: str):
-    """Single-writer guard for every maintenance rewrite of an
-    append sink (compact_parquet_dir and the bespoke compactors that
-    share its rename protocol). O_EXCL-creates ``path``'s lock file
-    with the holder's pid; a second concurrent maintenance attempt
-    raises MaintenanceInProgressError instead of interleaving two
-    rename swaps (which can drop the only live copy). Released on
-    exit, success or raise; a crashed holder's lock self-heals via
-    clear_stale_maintenance_lock."""
-    clear_stale_maintenance_lock(path)
-    lp = _maintenance_lock_path(path)
-    try:
-        fd = os.open(lp, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError:
-        raise MaintenanceInProgressError(
-            f"maintenance already in progress on {path} (lock: {lp})"
-        ) from None
-    try:
-        with os.fdopen(fd, "w") as f:
-            f.write(str(os.getpid()))
-        yield
-    finally:
-        try:
-            os.remove(lp)
-        except FileNotFoundError:
-            pass
-
-
-def publish_index_dir(build_dir: str, path: str, meta_name: str,
-                      attempts: int = 5) -> None:
+def publish_index_dir(build_dir: str, path: str, meta_name: str) -> None:
     """Publish a freshly built index directory at ``path`` via atomic
     rename, surviving BOTH failure modes of a contended publish:
 
@@ -533,14 +466,14 @@ def publish_index_dir(build_dir: str, path: str, meta_name: str,
     The retry itself runs INSIDE the loop: if a concurrent builder
     publishes between our rmtree(path) and our rename, that rename's
     OSError re-enters the meta re-check instead of propagating (the
-    unguarded-retry hole this helper exists to close). ``attempts``
-    bounds pathological churn; on exhaustion the build is discarded
-    and the last OSError raised rather than ever serving a meta-less
-    directory."""
+    unguarded-retry hole this helper exists to close).
+    PUBLISH_ATTEMPTS bounds pathological churn; on exhaustion the
+    build is discarded and the last OSError raised rather than ever
+    serving a meta-less directory."""
     import shutil
 
     last_err: OSError | None = None
-    for _ in range(attempts):
+    for _ in range(PUBLISH_ATTEMPTS):
         try:
             os.rename(build_dir, path)
             return
@@ -557,89 +490,44 @@ def publish_index_dir(build_dir: str, path: str, meta_name: str,
     raise last_err
 
 
-def recover_compacted_dir(path: str) -> None:
-    """Crash recovery for compact_parquet_dir's rename protocol, run
-    before every read of an append sink that gets compacted. Cases,
-    by where a crash hit (write tmp -> rename path to old -> rename
-    tmp to path -> rm old):
+def cached_index(
+    sf_dir: str, table: str, tag: str, meta_name: str, build
+) -> str:
+    """The one way a persisted index is written: built once into a
+    cache directory under the temp dir, then served from there by
+    every later call (the reference declares its indexes once, after
+    the load — DWH.sql:193-198).
 
-    - during the tmp write: ``path`` intact; the incomplete tmp is
-      swept.
-    - between the two renames: ``path`` missing; the retired
-      ``.old-compact`` is complete (it WAS the live directory) —
-      restore it. The completed tmp is swept with it; the next
-      compaction simply redoes the (idempotent) rewrite.
-    - after the second rename: ``path`` is the compacted directory;
-      stale siblings are swept.
-
-    Raises MaintenanceInProgressError while a LIVE maintenance holder
-    owns ``path``'s lock — this is what turns the "run between
-    micro-batches" caveat into an enforced contract: every appender
-    and reader in the repo recovers-before-touching, so an append
-    issued inside an active compaction window fails fast instead of
-    racing the rename swap. A crashed holder's lock self-heals
-    (pid probe) before the check."""
+    The cache key is ``tag`` (format version plus any geometry) and
+    the path, size and mtime of every file of
+    ``sf_dir/<table>.parquet``, so regenerated input at the same path
+    rebuilds instead of serving a stale index. When the directory
+    lacks ``meta_name`` (the marker an index builder writes last),
+    ``build(dir)`` runs into a per-process scratch directory that
+    publish_index_dir renames into place. Returns the index path."""
+    import hashlib
     import shutil
+    import tempfile
 
-    clear_stale_maintenance_lock(path)
-    if os.path.exists(_maintenance_lock_path(path)):
-        raise MaintenanceInProgressError(
-            f"maintenance in progress on {path}; appends/reads must wait"
-        )
-    tmp = f"{path}.tmp-compact"
-    old = f"{path}.old-compact"
-    if not os.path.isdir(path):
-        # the old sibling is created ONLY by an atomic rename of the
-        # live directory, so its existence alone proves completeness
-        # (no _SUCCESS requirement: dynamic-partition-overwrite sinks
-        # like the pre-agg synopsis write no top-level marker)
-        if os.path.isdir(old):
-            os.rename(old, path)
-        elif os.path.isdir(tmp) and os.path.exists(
-            os.path.join(tmp, "_SUCCESS")
-        ):
-            # old already swept means the swap completed and something
-            # external removed path; the committed tmp is the only
-            # surviving complete copy — promote it rather than lose it
-            os.rename(tmp, path)
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(old, ignore_errors=True)
-
-
-def compact_parquet_dir(
-    spark: SparkSession, path: str, target_files: int
-) -> dict:
-    """Small-file compaction for append-style parquet sinks (the
-    operational complement of any foreachBatch append, which writes
-    >=1 file per micro-batch): read
-    the directory, localCheckpoint it (the rewrite must never stream
-    from the files it is about to replace), coalesce to
-    ``target_files``, and publish with a write-to-tmp + rename swap —
-    at no point is the only copy deleted before its replacement
-    committed; a crash leaves either the old or the new directory,
-    both complete, and recover_compacted_dir (invoked here first, and
-    by every reader of a compacted sink) restores ``path`` from a
-    _SUCCESS-complete sibling before anything reads it.
-    coalesce, not repartition: compaction must not pay a shuffle —
-    it only narrows the file count.
-
-    Returns {"files_before": n, "files_after": m, "rows": r}."""
-    import glob
-    import shutil
-
-    recover_compacted_dir(path)
-    with maintenance_lock(path):
-        files_before = len(glob.glob(os.path.join(path, "*.parquet")))
-        df = spark.read.parquet(path).localCheckpoint()
-        rows = df.count()
-        tmp = f"{path}.tmp-compact"
-        old = f"{path}.old-compact"
-        df.coalesce(max(int(target_files), 1)).write.mode("overwrite").parquet(tmp)
-        os.rename(path, old)
-        os.rename(tmp, path)
-        shutil.rmtree(old, ignore_errors=True)
-        files_after = len(glob.glob(os.path.join(path, "*.parquet")))
-    return {"files_before": files_before, "files_after": files_after, "rows": rows}
+    src = os.path.abspath(os.path.join(sf_dir, f"{table}.parquet"))
+    files = (
+        sorted(os.path.join(r, f) for r, _, fs in os.walk(src) for f in fs)
+        if os.path.isdir(src)
+        else [src]
+    )
+    key = hashlib.md5()
+    for f in files:
+        st = os.stat(f)
+        key.update(f"{f}|{st.st_size}|{st.st_mtime_ns}\n".encode())
+    path = os.path.join(
+        tempfile.gettempdir(), f"cdwbi_idx_{tag}_{key.hexdigest()[:12]}"
+    )
+    if not os.path.exists(os.path.join(path, meta_name)):
+        build_dir = f"{path}.build-{os.getpid()}"
+        shutil.rmtree(build_dir, ignore_errors=True)
+        build(build_dir)
+        publish_index_dir(build_dir, path, meta_name)
+    return path
 
 
 def write_sized(
@@ -650,11 +538,11 @@ def write_sized(
     partition_by: list[str] | None = None,
 ) -> dict:
     """Write parquet with files sized toward ``target_mb`` — the
-    third file-size lever next to compact_parquet_dir (after the
-    fact) and coalesce (fixed count): measure the ACTUAL on-disk
-    bytes/row by writing a bounded sample to a dot-prefixed scratch
-    dir (in-memory plan statistics over-estimate parquet by the
-    whole compression factor, so they cannot target disk size), then
+    file-size lever next to coalesce (fixed count): measure the
+    ACTUAL on-disk bytes/row by writing a bounded sample to a
+    dot-prefixed scratch dir (in-memory plan statistics
+    over-estimate parquet by the whole compression factor, so they
+    cannot target disk size), then
     let the writer split files by ``maxRecordsPerFile`` (every task
     splits its own output at the right row count, no shuffle).
     maxRecordsPerFile can only SPLIT — when the input has more

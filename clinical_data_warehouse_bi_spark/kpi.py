@@ -30,8 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-SENTINEL_LOW = "1900-01-01 00:00:00"
-SENTINEL_HIGH = "2999-12-31 23:59:59"
+from clinical_data_warehouse_bi_spark.cleanse import SENTINEL_HIGH, SENTINEL_LOW
 
 #: seconds per hour / hours per day as doubles, for exact ratios
 _SECONDS_PER_HOUR = 3600.0

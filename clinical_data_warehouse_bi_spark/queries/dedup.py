@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from clinical_data_warehouse_bi_spark import io
 from clinical_data_warehouse_bi_spark import text as T
 from clinical_data_warehouse_bi_spark.io import fan_out, load_tables
 from clinical_data_warehouse_bi_spark.registry import register
@@ -788,24 +789,6 @@ def q_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _suffix_index_path(sf_dir: str) -> str:
-    """Deterministic per-corpus cache for the decontamination index
-    (the q_bm25_served convention): format version in the key so a
-    layout change can never serve a stale directory."""
-    import hashlib as _hashlib
-    import tempfile
-
-    from clinical_data_warehouse_bi_spark.suffix import (
-        SUFFIX_INDEX_FORMAT_VERSION,
-    )
-
-    tag = _hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    return (
-        f"{tempfile.gettempdir()}/spark_graft_suffix_idx_"
-        f"v{SUFFIX_INDEX_FORMAT_VERSION}_L{SUBSTRING_MIN_TOKENS}_{tag}"
-    )
-
-
 @register("q_decontaminate_exact", oracle=f"""
     WITH t AS (SELECT doc_id, {_SQL_TOKENS} AS toks FROM documents),
     w AS (SELECT doc_id, i,
@@ -850,30 +833,27 @@ def q_decontaminate_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Serving shape (the 100 TB story): the reference's DISTINCT window
     digests persist ONCE, parquet-partitioned by digest bucket with a
-    meta-last commit marker (built here into a cached dir via the
-    q_bm25_served atomic-publish convention); each probe batch
-    computes its own digests map-side, prunes the index scan to its
-    bucket set, and semi-joins on (bucket, digest) — batch-
-    proportional work, no reference rescan, token content never in a
-    keyed exchange."""
-    import os
-    import shutil
-
+    meta-last commit marker (built here through io.cached_index);
+    each probe batch computes its own digests map-side, prunes the
+    index scan to its bucket set, and semi-joins on (bucket, digest)
+    — batch-proportional work, no reference rescan, token content
+    never in a keyed exchange."""
     from clinical_data_warehouse_bi_spark import suffix
-    from clinical_data_warehouse_bi_spark.io import publish_index_dir
 
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    path = _suffix_index_path(sf_dir)
-    if not os.path.exists(os.path.join(path, suffix.SUFFIX_INDEX_META)):
-        build_dir = f"{path}.build-{os.getpid()}"
-        shutil.rmtree(build_dir, ignore_errors=True)
-        suffix.build_suffix_index(
+    path = io.cached_index(
+        sf_dir,
+        "documents",
+        f"suffix_v{suffix.SUFFIX_INDEX_FORMAT_VERSION}"
+        f"_L{SUBSTRING_MIN_TOKENS}_b32_ref4",
+        suffix.SUFFIX_INDEX_META,
+        lambda d: suffix.build_suffix_index(
             docs.where(F.col("doc_id") % 4 == 0),
-            build_dir,
+            d,
             min_tokens=SUBSTRING_MIN_TOKENS,
             n_buckets=32,
-        )
-        publish_index_dir(build_dir, path, suffix.SUFFIX_INDEX_META)
+        ),
+    )
     return suffix.probe_suffix_index(
         spark, docs.where(F.col("doc_id") % 4 != 0), path
     )

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from clinical_data_warehouse_bi_spark import retrieval
+from clinical_data_warehouse_bi_spark import io, retrieval
 from clinical_data_warehouse_bi_spark.io import load_tables
 from clinical_data_warehouse_bi_spark.registry import register
 
@@ -106,36 +106,17 @@ def q_hybrid_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _served_index_path(sf_dir: str) -> str:
-    """Deterministic per-corpus cache location for the registered
-    serving demo. retrieval.BM25_FORMAT_VERSION participates in the
-    cache key, so a postings-layout change can never serve a
-    stale-format directory; the corpus dirs are read-only test
-    fixtures, so content never goes stale."""
-    import hashlib
-    import os
-    import tempfile
-
-    from clinical_data_warehouse_bi_spark.retrieval import BM25_FORMAT_VERSION
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    return os.path.join(
-        tempfile.gettempdir(), f"cdwbi_bm25_idx_{BM25_FORMAT_VERSION}_{key}"
-    )
-
-
 @register("q_bm25_served", oracle=SQL_BM25_TOPK)
 def q_bm25_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 served FROM the persisted inverted index
     (retrieval.bm25_index_build + bm25_index_search) — the
     operational half of q_bm25_topk, registered per the round-8
     verdict so the on-disk index contract (md5 term-bucket partition
-    pruning, stats JSON published atomically with the postings) sits
-    under the driver's gate. The index is built once per corpus into
-    a cache dir and published with an atomic rename (a concurrent
-    builder loses the race harmlessly); every later invocation is a
-    pure pruned read — the 100 TB serving shape, where indexing cost
-    is paid at ingest, not per query.
+    pruning, corpus stats in the meta file written last) sits under
+    the driver's gate. The index is built once per corpus through
+    io.cached_index; every later invocation is a pure pruned read —
+    the 100 TB serving shape, where indexing cost is paid at ingest,
+    not per query.
 
     Full oracle since round 13 (round-12 verdict item 2): the served
     per-doc total now folds per-term contributions in FIXED query
@@ -143,21 +124,13 @@ def q_bm25_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     to bm25_topk's inline expression tree — so q_bm25_topk's DuckDB
     oracle applies verbatim; tests/test_retrieval.py pins
     served==inline exactly."""
-    import os
-    import shutil
 
-    from clinical_data_warehouse_bi_spark.io import publish_index_dir
-    from clinical_data_warehouse_bi_spark.retrieval import BM25_INDEX_META
-
-    path = _served_index_path(sf_dir)
-    if not os.path.exists(os.path.join(path, BM25_INDEX_META)):
-        build_dir = f"{path}.build-{os.getpid()}"
-        shutil.rmtree(build_dir, ignore_errors=True)
+    def build(path: str) -> None:
         docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-        retrieval.bm25_index_build(docs, build_dir, n_buckets=32)
-        # Lost race (complete index won) -> discard build; corrupt
-        # meta-less leftover -> clear + retry, the retry's own
-        # OSError re-entering the check (bounded) — the
-        # q_ann_ivf_pq_served repair contract, shared helper.
-        publish_index_dir(build_dir, path, BM25_INDEX_META)
+        retrieval.bm25_index_build(docs, path, n_buckets=32)
+
+    path = io.cached_index(
+        sf_dir, "documents", f"bm25_{retrieval.BM25_FORMAT_VERSION}_b32",
+        retrieval.BM25_INDEX_META, build,
+    )
     return retrieval.bm25_index_search(spark, path, BM25_TERMS, BM25_K)

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from clinical_data_warehouse_bi_spark import io
 from clinical_data_warehouse_bi_spark.io import load_tables
 from clinical_data_warehouse_bi_spark.registry import register
 
@@ -517,28 +518,6 @@ def q_embed_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _ivf_pq_index_path(sf_dir: str) -> str:
-    """Deterministic per-corpus cache location for the registered
-    serving demo (the q_bm25_served convention):
-    similarity.IVF_PQ_FORMAT_VERSION participates in the cache key,
-    so a layout change can never serve a stale-format directory; the
-    corpus dirs are read-only test fixtures, so content never goes
-    stale."""
-    import hashlib
-    import os
-    import tempfile
-
-    from clinical_data_warehouse_bi_spark.similarity import (
-        IVF_PQ_FORMAT_VERSION,
-    )
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    return os.path.join(
-        tempfile.gettempdir(),
-        f"cdwbi_ivfpq_idx_{IVF_PQ_FORMAT_VERSION}_{key}",
-    )
-
-
 @register("q_ann_ivf_pq_served", oracle=None)
 def q_ann_ivf_pq_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN served FROM the persisted IVF-PQ index
@@ -552,8 +531,7 @@ def q_ann_ivf_pq_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     directories (plan-asserted in tests/test_similarity_engine.py),
     ADC LUT-sum scoring per Arrow batch, and exact re-rank only on
     the per-query shortlist. The index is built once per corpus into
-    a cache dir and published with an atomic rename (a losing
-    concurrent builder discards harmlessly); every later invocation
+    a cache dir through io.cached_index; every later invocation
     is a pure pruned read — the 100 TB serving shape, where indexing
     cost is paid at ingest, not per query.
 
@@ -564,29 +542,23 @@ def q_ann_ivf_pq_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline on the same seeded quantizers, recall >= 0.8 vs brute
     force on planted clusters, and filtered-search pre-join
     semantics."""
-    import os
-    import shutil
-
-    from clinical_data_warehouse_bi_spark.io import publish_index_dir
     from clinical_data_warehouse_bi_spark.similarity import (
         INDEX_META,
+        IVF_PQ_FORMAT_VERSION,
         build_ivf_pq_index,
         search_ivf_pq_index,
     )
 
-    path = _ivf_pq_index_path(sf_dir)
     emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    if not os.path.exists(os.path.join(path, INDEX_META)):
-        build_dir = f"{path}.build-{os.getpid()}"
-        shutil.rmtree(build_dir, ignore_errors=True)
-        build_ivf_pq_index(
-            emb, build_dir, n_clusters=LEARNED_K, m=PQ_M, seed=LEARNED_SEED
-        )
-        # Lost race (complete index won) -> discard build; corrupt
-        # meta-less leftover -> clear + retry, with the retry's own
-        # OSError re-entering the check (bounded) so a builder that
-        # publishes between our rmtree and rename never crashes us.
-        publish_index_dir(build_dir, path, INDEX_META)
+    path = io.cached_index(
+        sf_dir,
+        "embeddings",
+        f"ivfpq_v{IVF_PQ_FORMAT_VERSION}_k{LEARNED_K}_m{PQ_M}_s{LEARNED_SEED}",
+        INDEX_META,
+        lambda d: build_ivf_pq_index(
+            emb, d, n_clusters=LEARNED_K, m=PQ_M, seed=LEARNED_SEED
+        ),
+    )
     return search_ivf_pq_index(
         spark,
         path,
@@ -595,25 +567,6 @@ def q_ann_ivf_pq_served(spark: SparkSession, sf_dir: str) -> DataFrame:
         nprobe=NPROBE,
         shortlist=PQ_SHORTLIST,
         topk=5,
-    )
-
-
-def _hnsw_index_path(sf_dir: str) -> str:
-    """Deterministic per-corpus cache location for the graph-ANN
-    serving demo (the q_bm25_served convention):
-    hnsw.HNSW_FORMAT_VERSION participates in the cache key, so a
-    layout change can never serve a stale-format directory; the
-    corpus dirs are read-only test fixtures, so content never goes
-    stale."""
-    import hashlib
-    import os
-    import tempfile
-
-    from clinical_data_warehouse_bi_spark.hnsw import HNSW_FORMAT_VERSION
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    return os.path.join(
-        tempfile.gettempdir(), f"cdwbi_hnsw_idx_{HNSW_FORMAT_VERSION}_{key}"
     )
 
 
@@ -646,23 +599,21 @@ def q_ann_hnsw(spark: SparkSession, sf_dir: str) -> DataFrame:
     at EQUAL distance-eval budget >= a random-scan baseline,
     served == inline equality, graph structural invariants, and the
     format-version guard."""
-    import os
-    import shutil
-
     from clinical_data_warehouse_bi_spark.hnsw import (
+        HNSW_FORMAT_VERSION,
         HNSW_INDEX_META,
         build_hnsw_index,
         hnsw_index_search,
     )
-    from clinical_data_warehouse_bi_spark.io import publish_index_dir
 
-    path = _hnsw_index_path(sf_dir)
     emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    if not os.path.exists(os.path.join(path, HNSW_INDEX_META)):
-        build_dir = f"{path}.build-{os.getpid()}"
-        shutil.rmtree(build_dir, ignore_errors=True)
-        build_hnsw_index(emb, build_dir, n_shards=HNSW_SHARDS, m=HNSW_M)
-        publish_index_dir(build_dir, path, HNSW_INDEX_META)
+    path = io.cached_index(
+        sf_dir,
+        "embeddings",
+        f"hnsw_v{HNSW_FORMAT_VERSION}_s{HNSW_SHARDS}_m{HNSW_M}",
+        HNSW_INDEX_META,
+        lambda d: build_hnsw_index(emb, d, n_shards=HNSW_SHARDS, m=HNSW_M),
+    )
     queries = [
         (r["vec_id"], list(r["embedding"]))
         for r in emb.filter(F.col("vec_id") < N_QUERIES).collect()
@@ -687,25 +638,23 @@ def q_ann_hnsw_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_hnsw.py (recall >= 0.85 at the 25% probe fraction,
     strictly fewer distance evals than fan-out); this entry records
     the serving-latency number next to q_ann_hnsw's."""
-    import os
-    import shutil
-
     from clinical_data_warehouse_bi_spark.hnsw import (
+        HNSW_FORMAT_VERSION,
         HNSW_INDEX_META,
         build_routed_hnsw_index,
         hnsw_routed_search,
     )
-    from clinical_data_warehouse_bi_spark.io import publish_index_dir
 
-    path = _hnsw_index_path(sf_dir) + "_routed"
     emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    if not os.path.exists(os.path.join(path, HNSW_INDEX_META)):
-        build_dir = f"{path}.build-{os.getpid()}"
-        shutil.rmtree(build_dir, ignore_errors=True)
-        build_routed_hnsw_index(
-            emb, build_dir, n_clusters=HNSW_ROUTED_CLUSTERS, m=HNSW_M
-        )
-        publish_index_dir(build_dir, path, HNSW_INDEX_META)
+    path = io.cached_index(
+        sf_dir,
+        "embeddings",
+        f"hnsw_routed_v{HNSW_FORMAT_VERSION}_c{HNSW_ROUTED_CLUSTERS}_m{HNSW_M}",
+        HNSW_INDEX_META,
+        lambda d: build_routed_hnsw_index(
+            emb, d, n_clusters=HNSW_ROUTED_CLUSTERS, m=HNSW_M
+        ),
+    )
     queries = [
         (r["vec_id"], list(r["embedding"]))
         for r in emb.filter(F.col("vec_id") < N_QUERIES).collect()

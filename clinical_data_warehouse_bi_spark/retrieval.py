@@ -24,14 +24,9 @@ Scale design (the part that must survive 100 TB):
   driver merges k rows per partition). Two corpus scans total, zero
   exchanges of document data.
 
-* ``bm25_batch_topk`` — MANY queries at once. Tokens are pruned
-  against the (small, broadcast-literal) union of query terms
-  BEFORE the explode, so the posting relation is bounded by
-  matching terms only; one (doc_id, term) aggregation builds the
-  tf relation, document frequencies reduce off the same relation,
-  and queries join in by broadcast. Per-query top-k is a
-  row_number window over (query_id) — partitioned by query, never
-  a global sort.
+* ``bm25_index_build`` / ``bm25_index_search`` — the same scores
+  served from a persisted inverted index, built once (through
+  io.cached_index) and read pruned to the query terms' buckets.
 
 Cross-engine determinism: tokenization matches the DuckDB oracle's
 ``regexp_extract_all(lower(text), '[a-z0-9]+')``; N / df / dl /
@@ -47,14 +42,14 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
 
 from clinical_data_warehouse_bi_spark import text as T
-from clinical_data_warehouse_bi_spark.io import local_frame
 
 #: BM25 free parameters (the standard Lucene defaults)
 DEFAULT_K1 = 1.2
 DEFAULT_B = 0.75
+#: reciprocal-rank-fusion damping constant (Cormack et al. 2009)
+RRF_K = 60
 
 
 def _idf(df_count: Column, n_docs: Column) -> Column:
@@ -182,91 +177,6 @@ def bm25_topk_oracle_sql(
     """
 
 
-def bm25_batch_topk(
-    docs: DataFrame,
-    queries: DataFrame,
-    k: int,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    query_id_col: str = "query_id",
-    query_text_col: str = "q_text",
-    k1: float = DEFAULT_K1,
-    b: float = DEFAULT_B,
-) -> DataFrame:
-    """Top-k per query for a DataFrame of queries.
-
-    The query set is collected to the driver (queries are small by
-    nature — this is the same bounded-collect contract as the
-    N_QUERIES vectors in similarity.q_cosine_topk) so the union of
-    query terms can prune document tokens BEFORE the explode.
-    Returns (query_id, id_col, score, rank) with rank 1..k per
-    query, deterministic via (score DESC, id ASC).
-    """
-    qsel = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        T.tokens(query_text_col).alias("q_terms"),
-    )
-    qrows = qsel.collect()
-    if not qrows:
-        raise ValueError("queries must be non-empty")
-    # (query_id, term) pairs, deduped per query (standard BM25
-    # ignores query-side term frequency for short queries)
-    qt_pairs = sorted(
-        {(r["query_id"], t) for r in qrows for t in r["q_terms"]}
-    )
-    all_terms = sorted({t for _, t in qt_pairs})
-    term_lits = F.array(*[F.lit(t) for t in all_terms])
-
-    toks = T.tokens(text_col)
-    per_doc = docs.select(
-        F.col(id_col),
-        F.size(toks).alias("dl"),
-        # prune to query terms BEFORE exploding: posting rows are
-        # bounded by matches, the full token stream never shuffles
-        F.filter(toks, lambda x: F.array_contains(term_lits, x)).alias("hits"),
-    )
-    spark = docs.sparkSession
-    stats = per_doc.agg(
-        F.count("*").alias("n_docs"), F.sum("dl").alias("sum_dl")
-    )
-
-    tf = (
-        per_doc.select(id_col, "dl", F.explode("hits").alias("term"))
-        .groupBy(id_col, "term")
-        .agg(F.count("*").alias("tf"), F.first("dl").alias("dl"))
-    )
-    dfreq = tf.groupBy("term").agg(F.count("*").alias("df_count"))
-    qt = local_frame(
-        spark,
-        qt_pairs,
-        StructType([qsel.schema["query_id"], StructField("term", StringType())]),
-    )
-
-    scored = (
-        tf.join(F.broadcast(dfreq), "term")
-        .join(F.broadcast(qt), "term")
-        .crossJoin(F.broadcast(stats))
-    )
-    avgdl = F.col("sum_dl").cast("double") / F.col("n_docs")
-    contrib = _idf(F.col("df_count"), F.col("n_docs")) * _tf_norm(
-        F.col("tf").cast("double"), F.col("dl"), avgdl, k1, b
-    )
-    per_query_doc = scored.groupBy("query_id", id_col).agg(
-        F.round(F.sum(contrib), 4).alias("score")
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
-    )
-    return (
-        per_query_doc.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", id_col, "score", "rank")
-    )
-
-
 # ---------------------------------------------------------------------------
 # Persisted BM25 inverted index (the operational half of q_bm25_topk,
 # same family as similarity.build_ivf_pq_index: a production search
@@ -275,9 +185,8 @@ def bm25_batch_topk(
 #
 # On-disk layout:
 #
-#   path/_index_meta.json            config (n_buckets) — written at build
-#   path/postings/batch=<id>/tb=<b>/part-*.parquet
-#   path/postings/batch=<id>/_batch_stats.json   {"n_docs", "sum_dl"}
+#   path/postings/tb=<b>/part-*.parquet
+#   path/_index_meta.json   {"n_buckets", "n_docs", "sum_dl"}, written last
 #
 # * Postings rows are (term, doc_id, tf, dl) — dl denormalized so a
 #   search never joins a doc-length table.
@@ -287,21 +196,15 @@ def bm25_batch_topk(
 #   partition pruning on the tb= directories, then pushes `term IN`
 #   down to the parquet scan inside them. The scan touches
 #   ~|query terms|/n_buckets of the index regardless of corpus size.
-# * Appends are exactly-once by construction: each batch stages into
-#   a dot-prefixed tmp dir (invisible to readers) and publishes with
-#   ONE atomic rename to batch=<id>; a replayed append sees the
-#   committed dir and no-ops. The per-batch stats JSON is written
-#   INSIDE the staged dir, so the rename publishes data and stats
-#   together — corpus statistics (N, sum dl) are the sum of the
-#   committed batches' stats files, O(batches) driver work, and can
-#   never disagree with the postings they describe.
+# * The index is built once and never modified: the meta file is
+#   written after the postings, so a directory is complete iff it has
+#   one, and io.cached_index publishes it with one atomic rename.
 
 BM25_INDEX_META = "_index_meta.json"
-BM25_BATCH_STATS = "_batch_stats.json"
-#: bump when the postings layout/schema changes — cache locations
-#: (q_bm25_served) key on it so a new build can never serve an
+#: bump when the postings layout/schema changes — the index cache key
+#: (io.cached_index) carries it, so a new build can never serve an
 #: old-format directory
-BM25_FORMAT_VERSION = "v1"
+BM25_FORMAT_VERSION = "v2"
 
 
 def _term_bucket_py(term: str, n_buckets: int) -> int:
@@ -314,32 +217,21 @@ def _term_bucket_col(col: Column, n_buckets: int) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("bigint") % n_buckets
 
 
-def _write_postings_batch(
+def bm25_index_build(
     docs: DataFrame,
     path: str,
-    batch_id: str,
-    n_buckets: int,
-    text_col: str,
-    id_col: str,
-) -> bool:
-    """Stage-and-rename publish of one postings batch. Returns False
-    (no-op) if the batch is already committed — replay safety."""
+    *,
+    n_buckets: int = 32,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+) -> None:
+    """Create a persisted BM25 index over ``docs``. The inverted-index
+    build is the one place the token stream legitimately shuffles:
+    one (doc_id, term) aggregation, paid once at indexing time so
+    every later search is pruned. Corpus statistics (N, sum dl) go
+    into the meta file, written last."""
     import json
     import os
-    import shutil
-
-    from clinical_data_warehouse_bi_spark.io import recover_compacted_dir
-
-    postings_root = os.path.join(path, "postings")
-    # the postings root is bm25_index_compact's rename-swap target
-    recover_compacted_dir(postings_root)
-    target = os.path.join(postings_root, f"batch={batch_id}")
-    tmp = os.path.join(postings_root, f".tmp-batch-{batch_id}")
-    if os.path.isdir(target):
-        return False
-    if os.path.isdir(tmp):  # stale crash leftover: incomplete, redo
-        shutil.rmtree(tmp)
-    os.makedirs(postings_root, exist_ok=True)
 
     toks = T.tokens(text_col)
     per_doc = docs.select(
@@ -351,71 +243,21 @@ def _write_postings_batch(
         .agg(F.count("*").alias("tf"), F.first("dl").alias("dl"))
         .withColumn("tb", _term_bucket_col(F.col("term"), n_buckets))
     )
-    postings.write.mode("overwrite").partitionBy("tb").parquet(tmp)
+    postings.write.mode("overwrite").partitionBy("tb").parquet(
+        os.path.join(path, "postings")
+    )
     stats = per_doc.agg(
         F.count("*").alias("n_docs"), F.sum("dl").alias("sum_dl")
     ).first()
-    with open(os.path.join(tmp, BM25_BATCH_STATS), "w") as f:
-        json.dump({"n_docs": stats["n_docs"], "sum_dl": stats["sum_dl"]}, f)
-    os.rename(tmp, target)
-    return True
-
-
-def bm25_index_build(
-    docs: DataFrame,
-    path: str,
-    *,
-    n_buckets: int = 32,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> None:
-    """Create a persisted BM25 index from an initial corpus (batch
-    id 'base'). The inverted-index build is the one place the token
-    stream legitimately shuffles: one (doc_id, term) aggregation,
-    paid once at indexing time so every later search is pruned."""
-    import json
-    import os
-
-    os.makedirs(path, exist_ok=True)
     with open(os.path.join(path, BM25_INDEX_META), "w") as f:
-        json.dump({"n_buckets": n_buckets}, f)
-    _write_postings_batch(docs, path, "base", n_buckets, text_col, id_col)
-
-
-def bm25_index_append(
-    docs: DataFrame,
-    path: str,
-    batch_id: str,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> bool:
-    """Append a disjoint document batch; replay-idempotent (returns
-    False without touching the index if batch_id is committed)."""
-    import json
-    import os
-
-    if "=" in batch_id or "/" in batch_id or batch_id.startswith("."):
-        raise ValueError(f"invalid batch_id: {batch_id!r}")
-    with open(os.path.join(path, BM25_INDEX_META)) as f:
-        n_buckets = json.load(f)["n_buckets"]
-    return _write_postings_batch(docs, path, batch_id, n_buckets, text_col, id_col)
-
-
-def _index_stats(path: str) -> tuple[int, int]:
-    import glob
-    import json
-    import os
-
-    n_docs = sum_dl = 0
-    for p in glob.glob(os.path.join(path, "postings", "batch=*", BM25_BATCH_STATS)):
-        with open(p) as f:
-            s = json.load(f)
-        n_docs += s["n_docs"]
-        sum_dl += s["sum_dl"]
-    if n_docs == 0:
-        raise ValueError(f"empty or unbuilt BM25 index at {path}")
-    return n_docs, sum_dl
+        json.dump(
+            {
+                "n_buckets": n_buckets,
+                "n_docs": stats["n_docs"],
+                "sum_dl": stats["sum_dl"],
+            },
+            f,
+        )
 
 
 def bm25_index_search(
@@ -433,14 +275,13 @@ def bm25_index_search(
     import json
     import os
 
-    from clinical_data_warehouse_bi_spark.io import recover_compacted_dir
-
     if not query_terms:
         raise ValueError("query_terms must be non-empty")
-    recover_compacted_dir(os.path.join(path, "postings"))
     with open(os.path.join(path, BM25_INDEX_META)) as f:
-        n_buckets = json.load(f)["n_buckets"]
-    n_docs, sum_dl = _index_stats(path)
+        meta = json.load(f)
+    n_buckets, n_docs, sum_dl = meta["n_buckets"], meta["n_docs"], meta["sum_dl"]
+    if n_docs == 0:
+        raise ValueError(f"empty or unbuilt BM25 index at {path}")
     buckets = sorted({_term_bucket_py(t, n_buckets) for t in query_terms})
 
     postings = (
@@ -483,67 +324,17 @@ def bm25_index_search(
     )
 
 
-def bm25_index_compact(spark, path: str) -> dict:
-    """Roll every committed postings batch into ONE base batch (the
-    maintenance op that bounds a long-running ingest's directory
-    count and merges small per-batch files): union the postings,
-    rewrite partitioned by tb under a staged root, carry the SUMMED
-    batch stats into the staged base batch, and publish with the
-    shared crash-safe swap (io.recover_compacted_dir sibling names —
-    search/append recover an interrupted swap before touching the
-    index). Run in the single-writer window between micro-batches,
-    after their offsets commit: a batch replayed AFTER compaction
-    removed its directory would re-append (stated, not hidden)."""
-    import glob
-    import json
-    import os
-    import shutil
-
-    from clinical_data_warehouse_bi_spark.io import (
-        maintenance_lock,
-        recover_compacted_dir,
-    )
-
-    postings_root = os.path.join(path, "postings")
-    recover_compacted_dir(postings_root)
-    with maintenance_lock(postings_root):
-        n_docs, sum_dl = _index_stats(path)
-        before = len(glob.glob(os.path.join(postings_root, "batch=*")))
-        rows = (
-            spark.read.parquet(postings_root)
-            .select("term", "doc_id", "tf", "dl", "tb")
-            .localCheckpoint()
-        )
-        n_rows = rows.count()
-        tmp = f"{postings_root}.tmp-compact"
-        old = f"{postings_root}.old-compact"
-        shutil.rmtree(tmp, ignore_errors=True)
-        base = os.path.join(tmp, "batch=base")
-        rows.write.mode("overwrite").partitionBy("tb").parquet(base)
-        with open(os.path.join(base, BM25_BATCH_STATS), "w") as f:
-            json.dump({"n_docs": n_docs, "sum_dl": sum_dl}, f)
-        os.rename(postings_root, old)
-        os.rename(tmp, postings_root)
-        shutil.rmtree(old, ignore_errors=True)
-    return {
-        "rows": n_rows,
-        "batches_before": before,
-        "batches_after": len(glob.glob(os.path.join(postings_root, "batch=*"))),
-    }
-
-
 def rrf_fuse(
     rankings: list[DataFrame],
     k: int,
     *,
     id_col: str = "doc_id",
     rank_col: str = "rank",
-    rrf_k: int = 60,
 ) -> DataFrame:
     """Reciprocal-rank fusion (Cormack et al. 2009 — the standard
     hybrid-retrieval combiner): given ranked lists from different
     retrievers (BM25 lexical, ANN dense, ...), score each doc
-    sum(1 / (rrf_k + rank_i)) over the lists that ranked it and
+    sum(1 / (RRF_K + rank_i)) over the lists that ranked it and
     return the fused top-k. Rank-based, so wildly different score
     scales (BM25 vs cosine) need no calibration — the reason RRF is
     the default fusion in production hybrid search.
@@ -556,7 +347,7 @@ def rrf_fuse(
     slim = [
         r.select(
             F.col(id_col),
-            (F.lit(1.0) / (F.lit(float(rrf_k)) + F.col(rank_col).cast("double"))).alias(
+            (F.lit(1.0) / (F.lit(float(RRF_K)) + F.col(rank_col).cast("double"))).alias(
                 "__c"
             ),
         )
@@ -627,49 +418,3 @@ def hybrid_topk(
         .withColumn("rank", F.row_number().over(Window.orderBy(*dense_order)))
     )
     return rrf_fuse([bm_ranked, dense], k)
-
-
-def hybrid_topk_served_graph(
-    spark,
-    bm25_path: str,
-    hnsw_path: str,
-    query_vec: list[float],
-    query_terms: list[str],
-    k: int,
-    *,
-    pool: int = 50,
-    rrf_k: int = 60,
-    beam: int = 32,
-) -> DataFrame:
-    """Hybrid retrieval with the GRAPH-ANN dense leg (round 13): the
-    lexical leg is the term-bucket pruned BM25 index, the dense leg
-    is a beam search over the persisted sharded small-world graph
-    (hnsw.hnsw_index_search) — the high-recall serving-side
-    alternative to an IVF-PQ dense leg (hybrid_topk), composed
-    through the SAME rrf_fuse arithmetic so the fusion stays
-    rank-calibration-free. Every leg touches index-shaped data only
-    (pruned postings / per-shard graphs); the fused relation is the
-    two bounded top-``pool`` lists."""
-    from pyspark.sql import Window
-
-    from clinical_data_warehouse_bi_spark.hnsw import hnsw_index_search
-
-    bm = bm25_index_search(spark, bm25_path, query_terms, pool)
-    bm_ranked = bm.withColumn(
-        "rank",
-        F.row_number().over(
-            Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        ),
-    )
-    dense = (
-        hnsw_index_search(spark, hnsw_path, [(0, query_vec)], pool, beam=beam)
-        .select(
-            F.col("vec_id").alias("doc_id"),
-            F.row_number()
-            .over(
-                Window.orderBy(F.col("score").desc(), F.col("vec_id").asc())
-            )
-            .alias("rank"),
-        )
-    )
-    return rrf_fuse([bm_ranked, dense], k, rrf_k=rrf_k)

@@ -1,87 +1,14 @@
-"""Single-writer maintenance lock (round-8 verdict item 8): the
-"run compactions between micro-batches" caveat is now an enforced
-contract — an append or read issued while a LIVE maintenance holder
-owns a sink's lock fails fast with MaintenanceInProgressError instead
-of racing the rename swap, and a crashed holder's lock self-heals."""
+"""The build-once index cache (io.cached_index) and its atomic
+publish (io.publish_index_dir): a published index directory is
+complete iff its meta marker exists, a contended publish survives a
+lost race and a corrupt leftover, and the cache follows the content
+of the input table, not just its path. No Spark work."""
 
 from __future__ import annotations
 
 import os
-import subprocess
 
 import pytest
-from pyspark.sql import functions as F
-
-from clinical_data_warehouse_bi_spark import retrieval
-from clinical_data_warehouse_bi_spark.io import (
-    MaintenanceInProgressError,
-    compact_parquet_dir,
-    maintenance_lock,
-    recover_compacted_dir,
-)
-
-
-def _docs(spark, lo, hi):
-    return spark.range(lo, hi).select(
-        F.col("id").alias("doc_id"),
-        F.concat(F.lit("spark join hash "), F.col("id").cast("string")).alias("text"),
-    )
-
-
-def test_append_rejected_while_maintenance_live(spark, tmp_path):
-    """The failure mode the round-8 docstrings only warned about:
-    an append landing inside an active compaction window. With the
-    lock held by a live process (this one), the appender's
-    recover-before-touch raises instead of interleaving."""
-    idx = str(tmp_path / "bm25_idx")
-    postings = os.path.join(idx, "postings")
-    retrieval.bm25_index_build(_docs(spark, 0, 10), idx, n_buckets=4)
-    with maintenance_lock(postings):
-        with pytest.raises(MaintenanceInProgressError):
-            retrieval.bm25_index_append(_docs(spark, 10, 20), idx, "b1")
-        with pytest.raises(MaintenanceInProgressError):
-            recover_compacted_dir(postings)
-    # window closed: the same append now succeeds
-    assert retrieval.bm25_index_append(_docs(spark, 10, 20), idx, "b1") is True
-    assert retrieval.bm25_index_search(spark, idx, ["hash"], 100).count() == 20
-
-
-def test_second_maintenance_attempt_rejected(spark, tmp_path):
-    p = str(tmp_path / "sink")
-    spark.range(10).write.parquet(p)
-    with maintenance_lock(p):
-        with pytest.raises(MaintenanceInProgressError):
-            with maintenance_lock(p):
-                pass
-
-
-def test_stale_lock_self_heals(spark, tmp_path):
-    """A compactor that died mid-window must not brick the sink: the
-    lock records the holder pid; a genuinely dead holder's lock is
-    cleared on the next recover pass."""
-    p = str(tmp_path / "sink")
-    spark.range(10).write.parquet(p)
-    proc = subprocess.run(["sh", "-c", "echo $$"], capture_output=True, text=True)
-    dead_pid = int(proc.stdout.strip())  # this shell has exited
-    with open(f"{p}.maintenance-lock", "w") as f:
-        f.write(str(dead_pid))
-    recover_compacted_dir(p)  # no raise: stale lock swept
-    assert not os.path.exists(f"{p}.maintenance-lock")
-
-
-def test_compaction_takes_and_releases_lock(spark, tmp_path):
-    p = str(tmp_path / "sink")
-    spark.range(10).coalesce(1).write.parquet(p)
-    spark.range(10, 20).coalesce(1).write.mode("append").parquet(p)
-    stats = compact_parquet_dir(spark, p, target_files=1)
-    assert stats["rows"] == 20
-    assert not os.path.exists(f"{p}.maintenance-lock")
-    # the raise path releases too (unreadable dir -> read fails)
-    bad = str(tmp_path / "missing")
-    with pytest.raises(Exception):
-        compact_parquet_dir(spark, bad, target_files=1)
-    assert not os.path.exists(f"{bad}.maintenance-lock")
-
 
 # ------------------------------------------- publish_index_dir races
 
@@ -176,5 +103,42 @@ def test_publish_index_dir_exhaustion_raises(tmp_path, monkeypatch):
 
     monkeypatch.setattr(io_mod.os, "rename", always_fail)
     with pytest.raises(OSError):
-        publish_index_dir(b, p, meta, attempts=3)
+        publish_index_dir(b, p, meta)
     assert not os.path.exists(b)  # never leaks half-built dirs
+
+
+# ------------------------------------------------- cached_index key
+
+
+def test_cached_index_follows_input_content(tmp_path, monkeypatch):
+    """Rewriting the input table in place rebuilds into a new cache
+    directory and leaves the old index untouched; an unchanged input
+    is served from the cache without a build."""
+    import tempfile
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from clinical_data_warehouse_bi_spark.io import cached_index
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    sf = tmp_path / "sf"
+    os.makedirs(sf)
+    src = str(sf / "documents.parquet")
+    meta = "_meta.json"
+    builds = []
+
+    def build(d):
+        builds.append(d)
+        _mk_index(d, meta, str(len(builds)))
+
+    pq.write_table(pa.table({"doc_id": [1, 2], "text": ["a", "b"]}), src)
+    first = cached_index(str(sf), "documents", "t1", meta, build)
+    pq.write_table(pa.table({"doc_id": [1, 2, 3], "text": ["a", "b", "c"]}), src)
+    second = cached_index(str(sf), "documents", "t1", meta, build)
+    assert len(builds) == 2
+    assert first != second
+    assert open(os.path.join(first, meta)).read() == "1"
+    assert open(os.path.join(second, meta)).read() == "2"
+    assert cached_index(str(sf), "documents", "t1", meta, build) == second
+    assert len(builds) == 2

@@ -133,92 +133,6 @@ def test_mix_sources_rates_and_determinism(spark, sf_dir):
         mix_sources([(half, 1.5)], "doc_id")
 
 
-@pytest.mark.slow
-def test_compact_parquet_dir_preserves_content(spark, tmp_path):
-    """Many small appended files -> few files, identical content, and
-    the RDD blocks pinned by the rewrite's checkpoint are released
-    by the follow-up helper."""
-    from clinical_data_warehouse_bi_spark.io import (
-        compact_parquet_dir,
-        release_new_persistent_rdds,
-        snapshot_persistent_rdds,
-    )
-
-    path = str(tmp_path / "appended")
-    for i in range(6):
-        spark.createDataFrame(
-            [(i * 10 + j, f"v{i}-{j}") for j in range(10)], "id long, v string"
-        ).coalesce(1).write.mode("append").parquet(path)
-    before = sorted((r.id, r.v) for r in spark.read.parquet(path).collect())
-    baseline = snapshot_persistent_rdds(spark)
-    stats = compact_parquet_dir(spark, path, target_files=2)
-    release_new_persistent_rdds(spark, baseline)
-    assert stats["files_before"] >= 6
-    assert stats["files_after"] <= 2
-    assert stats["rows"] == 60
-    after = sorted((r.id, r.v) for r in spark.read.parquet(path).collect())
-    assert after == before
-
-
-@pytest.mark.slow
-def test_compact_parquet_dir_crash_recovery(spark, tmp_path):
-    """Every crash point in the compaction rename protocol leaves a
-    state the next compaction recovers from without manual repair
-    (the round-7 advice finding: a crash between the two renames left
-    no directory at `path` and the next call raised)."""
-    import os
-    import shutil
-
-    from clinical_data_warehouse_bi_spark.io import (
-        compact_parquet_dir,
-        recover_compacted_dir,
-    )
-
-    def fresh(path):
-        shutil.rmtree(path, ignore_errors=True)
-        for sib in (f"{path}.tmp-compact", f"{path}.old-compact"):
-            shutil.rmtree(sib, ignore_errors=True)
-        for i in range(4):
-            spark.createDataFrame(
-                [(i, f"v{i}")], "id long, v string"
-            ).coalesce(1).write.mode("append").parquet(path)
-
-    path = str(tmp_path / "sink")
-    expect = [(i, f"v{i}") for i in range(4)]
-
-    # crash during the tmp write: path intact, incomplete tmp present
-    fresh(path)
-    os.makedirs(f"{path}.tmp-compact")  # no _SUCCESS: uncommitted
-    stats = compact_parquet_dir(spark, path, target_files=1)
-    assert stats["rows"] == 4
-    assert not os.path.exists(f"{path}.tmp-compact.old-compact")
-
-    # crash between the renames: path missing, complete old + tmp
-    fresh(path)
-    df = spark.read.parquet(path).localCheckpoint()
-    df.coalesce(1).write.mode("overwrite").parquet(f"{path}.tmp-compact")
-    os.rename(path, f"{path}.old-compact")
-    stats = compact_parquet_dir(spark, path, target_files=1)
-    assert stats["rows"] == 4
-    got = sorted((r.id, r.v) for r in spark.read.parquet(path).collect())
-    assert got == expect
-
-    # crash after the second rename: path is new, stale old remains
-    fresh(path)
-    shutil.copytree(path, f"{path}.old-compact")
-    stats = compact_parquet_dir(spark, path, target_files=1)
-    assert stats["rows"] == 4
-    assert not os.path.exists(f"{path}.old-compact")
-    assert not os.path.exists(f"{path}.tmp-compact")
-
-    # recover alone is enough for a reader (no compaction call needed)
-    fresh(path)
-    os.rename(path, f"{path}.old-compact")
-    recover_compacted_dir(path)
-    got = sorted((r.id, r.v) for r in spark.read.parquet(path).collect())
-    assert got == expect
-
-
 def test_write_sized_targets_file_size(spark, tmp_path):
     """Files land near the byte target: a small target splits the
     write into many bounded files, a large one collapses it; content

@@ -59,14 +59,9 @@ TEST_REFERENCES = {
 TESTED_ONLY = {
     "bpe.py": ("train_bpe", "word_histogram"),
     "io.py": (
-        "compact_parquet_dir", "global_shuffle", "maintenance_lock",
-        "mix_sources", "raw_to_documents", "read_evolved", "read_raw_files",
-        "read_source", "temperature_mix", "write_sink", "write_sized",
-        "write_training_shards",
-    ),
-    "retrieval.py": (
-        "bm25_batch_topk", "bm25_index_append", "bm25_index_compact",
-        "hybrid_topk_served_graph",
+        "global_shuffle", "mix_sources", "raw_to_documents", "read_evolved",
+        "read_raw_files", "read_source", "temperature_mix", "write_sink",
+        "write_sized", "write_training_shards",
     ),
     "scrub.py": (
         "PII_PATTERNS", "date_shift", "k_anonymity_classes",
@@ -108,7 +103,6 @@ TEST_SEAMS = (
     "corpus.py::build_corpus_release(substring_min_tokens)",
     # operator parameters a test varies
     "graph.py::connected_components(stats)",
-    "io.py::publish_index_dir(attempts)",
     "scrub.py::dp_release(value_high)",
     "scrub.py::dp_release(value_low)",
     "scrub.py::repetition_metrics(ngram)",

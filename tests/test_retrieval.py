@@ -1,5 +1,5 @@
 """BM25 retrieval (retrieval.py) and the declarative expectation
-suite (qa.expectation_report): semantics, batch==single equivalence,
+suite (qa.expectation_report): semantics, served==inline equality,
 and the plan shapes that carry them to 100 TB."""
 
 from __future__ import annotations
@@ -13,32 +13,6 @@ from test_plans import physical_plan
 
 
 # ---------------------------------------------------------------- BM25
-
-def test_bm25_batch_matches_single(spark, sf_dir):
-    """The many-query posting-list path must agree with the
-    shuffle-free single-query path: same matching-doc set, same
-    scores (to rounding) for every query. k exceeds the corpus so
-    rank-boundary ulp noise cannot perturb the compared sets."""
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    queries = spark.createDataFrame(
-        [(1, "hash join"), (2, "spark merge sort"), (3, "vector")],
-        ["query_id", "q_text"],
-    )
-    batch = retrieval.bm25_batch_topk(docs, queries, k=100_000).collect()
-    by_query: dict[int, dict[int, float]] = {}
-    for r in batch:
-        by_query.setdefault(r["query_id"], {})[r["doc_id"]] = r["score"]
-
-    for qid, terms in [(1, ["hash", "join"]), (2, ["spark", "merge", "sort"]), (3, ["vector"])]:
-        single = {
-            r["doc_id"]: r["score"]
-            for r in retrieval.bm25_topk(docs, terms, k=100_000).collect()
-        }
-        got = by_query[qid]
-        assert set(got) == set(single)
-        for d, s in single.items():
-            assert abs(got[d] - s) < 1e-3, (qid, d, got[d], s)
-
 
 def test_bm25_single_query_never_shuffles_docs(spark, sf_dir):
     """Scale contract: per-term tf is a per-row array expression —
@@ -218,24 +192,16 @@ def test_expectation_all_green_on_driver_data(spark, sf_dir, duck):
 
 # ------------------------------------------- persisted BM25 index
 
-def _index_corpus(spark, sf_dir):
+def test_bm25_index_build_matches_inline(spark, sf_dir, tmp_path):
+    """The persisted index must serve EXACTLY the relation the
+    shuffle-free inline path computes over the same corpus: the
+    served total folds per-term contributions in fixed query order,
+    so scores are bit-identical to the inline expression tree (this
+    is what lets q_bm25_served carry q_bm25_topk's DuckDB oracle
+    verbatim)."""
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    first = docs.where(F.col("doc_id") < 400)
-    second = docs.where(F.col("doc_id") >= 400)
-    return docs, first, second
-
-
-def test_bm25_index_build_append_matches_inline(spark, sf_dir, tmp_path):
-    """base-build + one append must serve EXACTLY the relation the
-    shuffle-free inline path computes over the union corpus: since
-    round 13 the served total folds per-term contributions in fixed
-    query order, so scores are bit-identical to the inline
-    expression tree (this is what lets q_bm25_served carry
-    q_bm25_topk's DuckDB oracle verbatim)."""
-    docs, first, second = _index_corpus(spark, sf_dir)
     path = str(tmp_path / "bm25_idx")
-    retrieval.bm25_index_build(first, path, n_buckets=8)
-    assert retrieval.bm25_index_append(second, path, "b1") is True
+    retrieval.bm25_index_build(docs, path, n_buckets=8)
 
     terms = ["hash", "join", "spark"]
     served = {
@@ -249,63 +215,16 @@ def test_bm25_index_build_append_matches_inline(spark, sf_dir, tmp_path):
     assert served == inline
 
 
-def test_bm25_index_append_replay_is_noop(spark, sf_dir, tmp_path):
-    docs, first, second = _index_corpus(spark, sf_dir)
-    path = str(tmp_path / "bm25_idx")
-    retrieval.bm25_index_build(first, path, n_buckets=8)
-    retrieval.bm25_index_append(second, path, "b1")
-    before = sorted(
-        (r["doc_id"], r["score"])
-        for r in retrieval.bm25_index_search(spark, path, ["hash"], 10_000).collect()
-    )
-    # replayed delivery of the same batch: committed dir wins, no-op
-    assert retrieval.bm25_index_append(second, path, "b1") is False
-    after = sorted(
-        (r["doc_id"], r["score"])
-        for r in retrieval.bm25_index_search(spark, path, ["hash"], 10_000).collect()
-    )
-    assert before == after
-
-
-def test_bm25_index_crash_leftover_is_recovered(spark, sf_dir, tmp_path):
-    """A stale .tmp-batch dir (crash before the publish rename) is
-    invisible to searches and swept by the retried append."""
-    import os
-
-    docs, first, second = _index_corpus(spark, sf_dir)
-    path = str(tmp_path / "bm25_idx")
-    retrieval.bm25_index_build(first, path, n_buckets=8)
-    stale = os.path.join(path, "postings", ".tmp-batch-b1")
-    os.makedirs(os.path.join(stale, "tb=0"))
-    with open(os.path.join(stale, "tb=0", "part-junk.parquet"), "w") as f:
-        f.write("garbage")
-    # search ignores the dot-dir
-    retrieval.bm25_index_search(spark, path, ["hash"], 5).collect()
-    # retried append sweeps it and commits
-    assert retrieval.bm25_index_append(second, path, "b1") is True
-    assert not os.path.isdir(stale)
-    assert os.path.isdir(os.path.join(path, "postings", "batch=b1"))
-
-
 def test_bm25_index_search_prunes_partitions(spark, sf_dir, tmp_path):
     """Scale contract: the postings scan partition-prunes to the
     query terms' tb= buckets and pushes term IN down to parquet."""
-    docs, first, _ = _index_corpus(spark, sf_dir)
+    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
     path = str(tmp_path / "bm25_idx")
-    retrieval.bm25_index_build(first, path, n_buckets=8)
+    retrieval.bm25_index_build(docs, path, n_buckets=8)
     plan = physical_plan(retrieval.bm25_index_search(spark, path, ["hash"], 10))
     assert "PartitionFilters" in plan and "tb" in plan
     assert "PushedFilters" in plan
     assert "TakeOrderedAndProject" in plan
-
-
-def test_bm25_index_rejects_bad_batch_ids(spark, sf_dir, tmp_path):
-    docs, first, _ = _index_corpus(spark, sf_dir)
-    path = str(tmp_path / "bm25_idx")
-    retrieval.bm25_index_build(first, path, n_buckets=8)
-    for bad in ["a=b", "a/b", ".hidden"]:
-        with pytest.raises(ValueError):
-            retrieval.bm25_index_append(first, path, bad)
 
 
 def test_expectation_unique_absorbs_row_checks_one_scan(spark, sf_dir):
@@ -330,49 +249,6 @@ def test_expectation_unique_absorbs_row_checks_one_scan(spark, sf_dir):
 
 # ------------------------------------------------- corpus card
 
-def test_bm25_index_compaction_round_trip(spark, sf_dir, tmp_path):
-    """Compaction rolls every batch into one base dir with summed
-    stats; the served relation is unchanged, a mid-swap crash is
-    recovered by the next search, and ingest continues cleanly."""
-    import os
-
-    docs, first, second = _index_corpus(spark, sf_dir)
-    path = str(tmp_path / "bm25_idx")
-    retrieval.bm25_index_build(first, path, n_buckets=8)
-    retrieval.bm25_index_append(second, path, "b1")
-    terms = ["hash", "join"]
-    before = sorted(
-        (r["doc_id"], r["score"])
-        for r in retrieval.bm25_index_search(spark, path, terms, 100_000).collect()
-    )
-    res = retrieval.bm25_index_compact(spark, path)
-    assert res["batches_before"] == 2 and res["batches_after"] == 1
-    after = sorted(
-        (r["doc_id"], r["score"])
-        for r in retrieval.bm25_index_search(spark, path, terms, 100_000).collect()
-    )
-    assert after == before
-    # mid-swap crash: live postings renamed away, recovery restores
-    roots = os.path.join(path, "postings")
-    os.rename(roots, f"{roots}.old-compact")
-    again = sorted(
-        (r["doc_id"], r["score"])
-        for r in retrieval.bm25_index_search(spark, path, terms, 100_000).collect()
-    )
-    assert again == before
-    # post-compaction ingest still works and serves
-    extra = spark.createDataFrame(
-        [(90_000, "hash join hash join fresh appended doc")],
-        ["doc_id", "text"],
-    )
-    assert retrieval.bm25_index_append(extra, path, "b2") is True
-    served = {
-        r["doc_id"]
-        for r in retrieval.bm25_index_search(spark, path, terms, 100_000).collect()
-    }
-    assert 90_000 in served
-
-
 # ------------------------------------------------- hybrid fusion
 
 def test_rrf_fuse_hand_computed(spark):
@@ -380,7 +256,7 @@ def test_rrf_fuse_hand_computed(spark):
     b = spark.createDataFrame([(11, 1), (13, 2), (10, 3)], ["doc_id", "rank"])
     got = {
         r["doc_id"]: r["rrf_score"]
-        for r in retrieval.rrf_fuse([a, b], k=10, rrf_k=60).collect()
+        for r in retrieval.rrf_fuse([a, b], k=10).collect()
     }
     import pytest as _pt
 
@@ -420,7 +296,7 @@ def test_hybrid_topk_combines_both_signals(spark, sf_dir):
     assert any(i in bm_ids for i in ids)
 
 
-def test_bm25_served_repairs_corrupt_cache_dir(spark):
+def test_bm25_served_repairs_corrupt_cache_dir(spark, monkeypatch):
     """q_bm25_served self-heals a cache directory that exists but
     lost BM25_INDEX_META: the rebuild's publish rename must REPLACE
     the broken directory, never discard the build as a lost race and
@@ -429,15 +305,23 @@ def test_bm25_served_repairs_corrupt_cache_dir(spark):
     import os
     import shutil
 
+    from clinical_data_warehouse_bi_spark import io
     from clinical_data_warehouse_bi_spark.queries.retrieval_ops import (
-        _served_index_path,
         q_bm25_served,
     )
     from clinical_data_warehouse_bi_spark.retrieval import BM25_INDEX_META
 
+    served = []
+    real = io.cached_index
+
+    def spy(*a, **kw):
+        served.append(real(*a, **kw))
+        return served[-1]
+
+    monkeypatch.setattr(io, "cached_index", spy)
     sf = "/root/testdata/sf0.001"
-    path = _served_index_path(sf)
     n0 = q_bm25_served(spark, sf).count()  # builds + serves
+    path = served[-1]
     assert os.path.exists(os.path.join(path, BM25_INDEX_META))
 
     os.remove(os.path.join(path, BM25_INDEX_META))
@@ -447,58 +331,3 @@ def test_bm25_served_repairs_corrupt_cache_dir(spark):
 
     shutil.rmtree(path)
     assert q_bm25_served(spark, sf).count() == n0
-
-
-def test_hybrid_served_graph_leg(spark, sf_dir, tmp_path):
-    """hybrid_topk_served_graph: BM25 index leg + persisted graph-ANN
-    dense leg, fused by RRF — the fusion must equal a hand-recompute
-    from the two served legs."""
-    from clinical_data_warehouse_bi_spark import retrieval
-    from clinical_data_warehouse_bi_spark.hnsw import (
-        build_hnsw_index,
-        hnsw_index_search,
-    )
-    from clinical_data_warehouse_bi_spark.io import load_tables
-
-    t = load_tables(spark, sf_dir, ("documents", "embeddings"))
-    bm_path = str(tmp_path / "bm")
-    g_path = str(tmp_path / "g")
-    retrieval.bm25_index_build(t["documents"], bm_path, n_buckets=8)
-    build_hnsw_index(t["embeddings"], g_path, n_shards=4, m=12)
-    qvec = [
-        float(x)
-        for x in t["embeddings"].where(F.col("vec_id") == 0).first()["embedding"]
-    ]
-    terms = ["hash", "join", "spark"]
-    pool, k = 30, 10
-    fused = {
-        r["doc_id"]: r["rrf_score"]
-        for r in retrieval.hybrid_topk_served_graph(
-            spark, bm_path, g_path, qvec, terms, k, pool=pool
-        ).collect()
-    }
-    assert len(fused) == k
-    # hand-recompute the fusion from the two served legs
-    bm = retrieval.bm25_index_search(spark, bm_path, terms, pool).collect()
-    bm_rank = {
-        r["doc_id"]: i + 1
-        for i, r in enumerate(
-            sorted(bm, key=lambda r: (-r["score"], r["doc_id"]))
-        )
-    }
-    dn = hnsw_index_search(spark, g_path, [(0, qvec)], pool).collect()
-    dn_rank = {
-        r["vec_id"]: i + 1
-        for i, r in enumerate(
-            sorted(dn, key=lambda r: (-r["score"], r["vec_id"]))
-        )
-    }
-    scores = {}
-    for d, rk in list(bm_rank.items()) + list(dn_rank.items()):
-        scores[d] = scores.get(d, 0.0) + 1.0 / (60.0 + rk)
-    want = sorted(scores.items(), key=lambda t2: (-t2[1], t2[0]))[:k]
-    assert set(fused) == {d for d, _ in want}
-    for d, s in want:
-        assert abs(fused[d] - round(s, 8)) < 1e-9
-    # the dense query vector's own doc is a fused hit (vec 0 == doc 0)
-    assert 0 in fused

@@ -350,7 +350,7 @@ def test_persisted_ivf_pq_index_serves_searches(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_served_index_repairs_corrupt_cache_dir(spark):
+def test_served_index_repairs_corrupt_cache_dir(spark, monkeypatch):
     """q_ann_ivf_pq_served self-heals a cache directory that exists
     but lost its INDEX_META (external deletion/crash mid-publish):
     the rebuild's publish rename must REPLACE the broken directory —
@@ -359,15 +359,23 @@ def test_served_index_repairs_corrupt_cache_dir(spark):
     import os
     import shutil
 
+    from clinical_data_warehouse_bi_spark import io
     from clinical_data_warehouse_bi_spark.queries.similarity import (
-        _ivf_pq_index_path,
         q_ann_ivf_pq_served,
     )
     from clinical_data_warehouse_bi_spark.similarity import INDEX_META
 
+    served = []
+    real = io.cached_index
+
+    def spy(*a, **kw):
+        served.append(real(*a, **kw))
+        return served[-1]
+
+    monkeypatch.setattr(io, "cached_index", spy)
     sf = "/root/testdata/sf0.001"
-    path = _ivf_pq_index_path(sf)
     n0 = q_ann_ivf_pq_served(spark, sf).count()  # builds + serves
+    path = served[-1]
     assert os.path.exists(os.path.join(path, INDEX_META))
 
     # corrupt: the directory survives, the meta marker does not
