@@ -18,6 +18,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+#: the scale BENCH_LOCAL.json records; runs at any other scale leave it
+#: alone
+BASELINE_SF = 0.1
+
 #: headline set: every operator family, weighted toward the ones that
 #: matter at scale (joins, aggs, dedup, similarity). The bounded
 #: all-pairs ground-truth query (q_ngram_jaccard) is excluded: its
@@ -429,14 +433,18 @@ def main() -> None:
             "host_load_1m_end": round(load_end[0], 2),
         },
     }
-    # Full record (noise block included) also goes to a repo file and
-    # to stderr for the archived artifact.
-    with open(
-        os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                     "BENCH_LOCAL.json"),
-        "w",
-    ) as f:
-        json.dump(record, f, indent=1)
+    # Full record (noise block included) goes to stderr for the
+    # archived artifact, and to the tracked BENCH_LOCAL.json only at
+    # the scale that file records: a check at another scale must not
+    # overwrite the baseline or dirty the checkout.
+    at_baseline = record["sf"] == BASELINE_SF
+    if at_baseline:
+        with open(
+            os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                         "BENCH_LOCAL.json"),
+            "w",
+        ) as f:
+            json.dump(record, f, indent=1)
     print(json.dumps(record), file=sys.stderr)
     # The ONE stdout JSON line carries the COMPLETE per-query timings
     # map plus per-entry spreads (round-16 verdict item 1: the prior
@@ -453,7 +461,10 @@ def main() -> None:
     by_time = dict(sorted(timings.items(), key=lambda kv: kv[1]))
     print(json.dumps(
         {
-            "full_record": "BENCH_LOCAL.json (repo) + stderr",
+            "full_record": (
+                "BENCH_LOCAL.json (repo) + stderr" if at_baseline
+                else f"stderr only (BENCH_LOCAL.json records sf{BASELINE_SF})"
+            ),
             "protocol": "warm-sequence smoke; per-query spreads in "
             "noise.per_query_spread_sec band each entry",
             "n_queries": len(timings),

@@ -504,7 +504,16 @@ def cached_index(
     rebuilds instead of serving a stale index. When the directory
     lacks ``meta_name`` (the marker an index builder writes last),
     ``build(dir)`` runs into a per-process scratch directory that
-    publish_index_dir renames into place. Returns the index path."""
+    publish_index_dir renames into place. Returns the index path.
+
+    Directories are named ``cdwbi_idx_{tag}_{source}_{content}``, with
+    ``source`` a digest of the input path. Once a new generation is
+    published, the older generations of the same tag and source are
+    removed, so rewriting a table in place keeps one index of it on
+    disk; a concurrent builder's ``.build-<pid>`` scratch directory is
+    never touched. A format bump changes ``tag``, so the directories
+    of an old format are not removed here."""
+    import glob
     import hashlib
     import shutil
     import tempfile
@@ -519,14 +528,19 @@ def cached_index(
     for f in files:
         st = os.stat(f)
         key.update(f"{f}|{st.st_size}|{st.st_mtime_ns}\n".encode())
-    path = os.path.join(
-        tempfile.gettempdir(), f"cdwbi_idx_{tag}_{key.hexdigest()[:12]}"
+    prefix = os.path.join(
+        tempfile.gettempdir(),
+        f"cdwbi_idx_{tag}_{hashlib.md5(src.encode()).hexdigest()[:8]}_",
     )
+    path = prefix + key.hexdigest()[:12]
     if not os.path.exists(os.path.join(path, meta_name)):
         build_dir = f"{path}.build-{os.getpid()}"
         shutil.rmtree(build_dir, ignore_errors=True)
         build(build_dir)
         publish_index_dir(build_dir, path, meta_name)
+        for old in glob.glob(glob.escape(prefix) + "*"):
+            if old != path and ".build-" not in old:
+                shutil.rmtree(old, ignore_errors=True)
     return path
 
 

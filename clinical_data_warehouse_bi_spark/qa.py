@@ -1,105 +1,104 @@
-"""QA.sql as reusable DataFrame checks (SURVEY.md section 5): the
-reference's production-data reconciliation suite, faithful to its
-quirks (e.g. 'Orphan admissions' counts NULL FKs as orphans because
-`LEFT JOIN ... USING` never matches NULL — QA.sql:88-92 — while the
-DWH cleanup deliberately keeps NULL-FK rows, DWH.sql:155-157)."""
+"""QA.sql as reusable DataFrame checks (SURVEY.md section 5). run_all
+computes its four reports in ONE Spark action: an aggregate by (table
+``g``, key), then by ``g``, over a union of slim ``(g, key, side, v)``
+branches, one per stage table, DWH table, fact FK and pre-agg; no dim
+is broadcast. QA.sql's NULL semantics hold: a NULL dim key is one GROUP
+BY group, a NULL FK is an orphan (``LEFT JOIN ... USING`` never matches
+NULL, QA.sql:88-92) and an empty pre-agg totals NULL."""
 
 from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
+
+from clinical_data_warehouse_bi_spark.io import local_frame
+
+#: QA.sql's tables in report order; keyed dims: key, orphan/dup labels
+_TABLES = [
+    ("dim_patients", "patient_id", "Orphan patients", "Duplicate patients"),
+    ("dim_admissions", "admission_id", "Orphan admissions", "Duplicate admissions"),
+    ("dim_provider", None, None, None),
+    ("dim_concepts", "clinical_concept_id", "Orphan concepts", "Duplicate concepts"),
+    ("dim_date", "event_datetime", "Orphan dates", "Duplicate dates"),
+    ("dim_junk_disorder_event", "junk_id", "Orphan junk_id", "Duplicate junk"),
+    ("fact_disorder_events", None, None, None),
+]
 
 
-def _count_row(name: str, label: str, df: DataFrame, value_col: str) -> DataFrame:
-    return df.agg(F.count("*").alias(value_col)).select(
-        F.lit(name).alias(label), value_col
+def _collect_counts(stage: dict[str, DataFrame], dwh: dict[str, DataFrame]) -> dict:
+    """The shared aggregate, collected as counts per table; map-side
+    partials cut each fact partition to its distinct FKs pre-exchange."""
+    keys = {}  # g -> (key, lane type); the fact FK is cast to its dim's lane
+    for g, (t, k, _, _) in enumerate(_TABLES):
+        if k:
+            dt = dwh[t].schema[k].dataType
+            keys[g] = (k, "bigint" if isinstance(dt, IntegralType) else dt.simpleString())
+    lanes = list(dict.fromkeys(ln for _, ln in keys.values()))
+
+    def branch(df: DataFrame, g: int, side: int, keyed=False, v="NULL") -> DataFrame:
+        key, lane = keys[g] if keyed else (None, None)
+        ks = [f"CAST({key if ln == lane else 'NULL'} AS {ln}) AS k{i}"
+              for i, ln in enumerate(lanes)]
+        return df.selectExpr(f"{g} AS g", *ks, f"{side} AS side", f"CAST({v} AS BIGINT) AS v")
+
+    branches = [branch(dwh["agg_disorders_per_admission"], len(_TABLES) - 1, 3, v="total_events")]
+    for g, (t, _, _, _) in enumerate(_TABLES):
+        branches += [branch(stage[t], g, 0), branch(dwh[t], g, 1, g in keys)]
+        branches += [branch(dwh["fact_disorder_events"], g, 2, True)] if g in keys else []
+    ks = [f"k{i}" for i in range(len(lanes))]
+    per_key = reduce(DataFrame.union, branches).groupBy("g", *ks).agg(
+        *[F.expr(f"count_if(side = {s}) AS n{s}") for s in range(3)], F.expr("sum(v) AS v")
     )
+    null_key = " AND ".join(f"{k} IS NULL" for k in ks)
+    totals = per_key.groupBy("g").agg(*[F.expr(e) for e in (
+        "sum(n0) AS stage_rows", "sum(n1) AS dwh_rows", "count_if(n1 > 1) AS num_dupes",
+        f"sum(IF(n1 = 0 OR ({null_key}), n2, 0)) AS orphans", "sum(v) AS agg_total",
+    )])
+    got = {r["g"]: r.asDict() for r in totals.collect()}
+    zero = dict(stage_rows=0, dwh_rows=0, num_dupes=0, orphans=0, agg_total=None)
+    return {t: got.get(g, zero) for g, (t, _, _, _) in enumerate(_TABLES)}
 
 
-def rowcount_reconciliation(
-    stage: dict[str, DataFrame], dwh: dict[str, DataFrame]
-) -> DataFrame:
-    """QA.sql:13-59 — stage vs DWH row counts with diff column for the
-    6 dims + fact."""
-    tables = [
-        "dim_patients", "dim_admissions", "dim_provider", "dim_concepts",
-        "dim_date", "dim_junk_disorder_event", "fact_disorder_events",
-    ]
-    rows = []
-    for t in tables:
-        s = stage[t].agg(F.count("*").alias("stage_rows"))
-        d = dwh[t].agg(F.count("*").alias("dwh_rows"))
-        rows.append(
-            s.crossJoin(d).select(
-                F.lit(t).alias("table_name"),
-                "stage_rows",
-                "dwh_rows",
-                (F.col("stage_rows") - F.col("dwh_rows")).alias("diff_rows"),
-            )
-        )
-    return reduce(lambda a, b: a.unionByName(b), rows)
+def rowcount_reconciliation(spark: SparkSession, counts: dict) -> DataFrame:
+    """QA.sql:13-59 — stage vs DWH row counts of the 6 dims + fact."""
+    rows = [(t, c["stage_rows"], c["dwh_rows"], c["stage_rows"] - c["dwh_rows"])
+            for t, c in counts.items()]
+    return local_frame(spark, rows, "table_name string NOT NULL, stage_rows bigint NOT NULL,"
+                       " dwh_rows bigint NOT NULL, diff_rows bigint NOT NULL")
 
 
-def fact_vs_agg(dwh: dict[str, DataFrame]) -> DataFrame:
+def fact_vs_agg(spark: SparkSession, counts: dict) -> DataFrame:
     """QA.sql:67-71 — COUNT(*) fact == SUM(total_events) agg."""
-    f = dwh["fact_disorder_events"].agg(F.count("*").alias("fact_total_events"))
-    a = dwh["agg_disorders_per_admission"].agg(
-        F.sum("total_events").cast("bigint").alias("agg_total_events")
-    )
-    return f.crossJoin(a).select(
-        F.lit("Fact vs Agg Total").alias("check_name"),
-        "fact_total_events",
-        "agg_total_events",
-        (F.col("fact_total_events") - F.col("agg_total_events")).alias("diff_events"),
-    )
+    n, total = (counts["fact_disorder_events"][c] for c in ("dwh_rows", "agg_total"))
+    row = ("Fact vs Agg Total", n, total, None if total is None else n - total)
+    return local_frame(spark, [row], "check_name string NOT NULL, fact_total_events bigint"
+                       " NOT NULL, agg_total_events bigint, diff_events bigint")
 
 
-def orphan_checks(dwh: dict[str, DataFrame]) -> DataFrame:
-    """QA.sql:79-116 — five LEFT JOIN USING(...) IS NULL probes.
-    USING-join semantics: a NULL FK never matches, so it counts as an
-    orphan (the reference's deliberate quirk for admissions)."""
-    fact = dwh["fact_disorder_events"]
-    probes = [
-        ("Orphan patients", "patient_id", dwh["dim_patients"]),
-        ("Orphan admissions", "admission_id", dwh["dim_admissions"]),
-        ("Orphan concepts", "clinical_concept_id", dwh["dim_concepts"]),
-        ("Orphan dates", "event_datetime", dwh["dim_date"]),
-        ("Orphan junk_id", "junk_id", dwh["dim_junk_disorder_event"]),
-    ]
-    rows = []
-    for name, key, dim in probes:
-        orphans = fact.join(
-            F.broadcast(dim.select(key).distinct()), on=key, how="left_anti"
-        )
-        rows.append(_count_row(name, "issue", orphans, "num_records"))
-    return reduce(lambda a, b: a.unionByName(b), rows)
+def orphan_checks(spark: SparkSession, counts: dict) -> DataFrame:
+    """QA.sql:79-116 — fact rows whose FK is NULL or matches no dim key."""
+    rows = [(o, counts[t]["orphans"]) for t, _, o, _ in _TABLES if o]
+    return local_frame(spark, rows, "issue string NOT NULL, num_records bigint NOT NULL")
 
 
-def duplicate_checks(dwh: dict[str, DataFrame]) -> DataFrame:
-    """QA.sql:124-176 — five GROUP BY ... HAVING count(*)>1 probes on
-    dimension primary keys."""
-    probes = [
-        ("Duplicate patients", dwh["dim_patients"], "patient_id"),
-        ("Duplicate admissions", dwh["dim_admissions"], "admission_id"),
-        ("Duplicate concepts", dwh["dim_concepts"], "clinical_concept_id"),
-        ("Duplicate dates", dwh["dim_date"], "event_datetime"),
-        ("Duplicate junk", dwh["dim_junk_disorder_event"], "junk_id"),
-    ]
-    rows = []
-    for name, dim, key in probes:
-        dupes = dim.groupBy(key).count().filter(F.col("count") > 1)
-        rows.append(_count_row(name, "issue", dupes, "num_dupes"))
-    return reduce(lambda a, b: a.unionByName(b), rows)
+def duplicate_checks(spark: SparkSession, counts: dict) -> DataFrame:
+    """QA.sql:124-176 — the number of duplicated dim primary keys."""
+    rows = [(d, counts[t]["num_dupes"]) for t, _, _, d in _TABLES if d]
+    return local_frame(spark, rows, "issue string NOT NULL, num_dupes bigint NOT NULL")
 
 
 def run_all(stage: dict[str, DataFrame], dwh: dict[str, DataFrame]) -> dict[str, DataFrame]:
+    """QA.sql's four reports from ONE Spark action (module docstring):
+    each is a local relation over the counts, so collecting it runs no job."""
+    counts, spark = _collect_counts(stage, dwh), dwh["fact_disorder_events"].sparkSession
     return {
-        "rowcounts": rowcount_reconciliation(stage, dwh),
-        "fact_vs_agg": fact_vs_agg(dwh),
-        "orphans": orphan_checks(dwh),
-        "duplicates": duplicate_checks(dwh),
+        "rowcounts": rowcount_reconciliation(spark, counts),
+        "fact_vs_agg": fact_vs_agg(spark, counts),
+        "orphans": orphan_checks(spark, counts),
+        "duplicates": duplicate_checks(spark, counts),
     }
 
 

@@ -112,8 +112,10 @@ def test_publish_index_dir_exhaustion_raises(tmp_path, monkeypatch):
 
 def test_cached_index_follows_input_content(tmp_path, monkeypatch):
     """Rewriting the input table in place rebuilds into a new cache
-    directory and leaves the old index untouched; an unchanged input
-    is served from the cache without a build."""
+    directory and removes the old generation, leaving a concurrent
+    build's scratch directory and the index of another source with the
+    same tag alone; an unchanged input is served from the cache
+    without a build."""
     import tempfile
 
     import pyarrow as pa
@@ -133,12 +135,21 @@ def test_cached_index_follows_input_content(tmp_path, monkeypatch):
         _mk_index(d, meta, str(len(builds)))
 
     pq.write_table(pa.table({"doc_id": [1, 2], "text": ["a", "b"]}), src)
+    pq.write_table(pa.table({"doc_id": [4], "text": ["d"]}), str(sf / "other.parquet"))
+    other = cached_index(str(sf), "other", "t1", meta, build)
     first = cached_index(str(sf), "documents", "t1", meta, build)
+    scratch = f"{first}.build-0"  # a concurrent builder's, mid-build
+    os.makedirs(scratch)
     pq.write_table(pa.table({"doc_id": [1, 2, 3], "text": ["a", "b", "c"]}), src)
     second = cached_index(str(sf), "documents", "t1", meta, build)
-    assert len(builds) == 2
+    assert len(builds) == 3
     assert first != second
-    assert open(os.path.join(first, meta)).read() == "1"
-    assert open(os.path.join(second, meta)).read() == "2"
+    assert open(os.path.join(second, meta)).read() == "3"
     assert cached_index(str(sf), "documents", "t1", meta, build) == second
-    assert len(builds) == 2
+    assert len(builds) == 3
+    # one generation of the rewritten source remains: the new one
+    left = sorted(os.listdir(tmp_path))
+    assert left == sorted(
+        os.path.basename(p) for p in (other, second, scratch, str(sf))
+    )
+    assert open(os.path.join(other, meta)).read() == "1"

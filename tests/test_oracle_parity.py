@@ -6,37 +6,10 @@ use scripts/check_parity.py)."""
 
 from __future__ import annotations
 
-import pandas as pd
 import pytest
 
 from clinical_data_warehouse_bi_spark.registry import all_oracles, all_queries
-
-
-def _normalize(df: pd.DataFrame):
-    df = df.reindex(sorted(df.columns), axis=1)
-    cells = []
-    for col in df.columns:
-        s = df[col]
-        if pd.api.types.is_datetime64_any_dtype(s):
-            s = s.dt.strftime("%Y-%m-%d %H:%M:%S.%f")
-        elif pd.api.types.is_float_dtype(s):
-            s = s.map(lambda v: None if pd.isna(v) else repr(float(v)))
-        elif pd.api.types.is_bool_dtype(s):
-            s = s.map(lambda v: None if pd.isna(v) else str(bool(v)))
-        else:
-            s = s.map(
-                lambda v: None
-                if v is None or (isinstance(v, float) and pd.isna(v))
-                else str(v)
-            )
-        # NaT -> NaN after strftime, etc.: anything non-str is a null
-        cells.append([c if isinstance(c, str) else None for c in s.tolist()])
-    rows = (
-        sorted(tuple("<NULL>" if c is None else c for c in row) for row in zip(*cells))
-        if cells
-        else []
-    )
-    return list(df.columns), rows
+from scripts.check_parity import normalize
 
 
 def _names():
@@ -53,8 +26,8 @@ def test_query_matches_oracle(name, spark, duck, sf_dir):
         assert len(spark_df) >= 0  # rows-only check (non-SQL-expressible op)
         return
     duck_df = duck.execute(oracles[name]).df()
-    s_cols, s_rows = _normalize(spark_df)
-    d_cols, d_rows = _normalize(duck_df)
+    s_cols, s_rows = normalize(spark_df)
+    d_cols, d_rows = normalize(duck_df)
     assert s_cols == d_cols
     assert len(s_rows) == len(d_rows)
     mismatches = [

@@ -78,7 +78,7 @@ from clinical_data_warehouse_bi_spark.queries.text_ops import (
     q_quota_sample,
     q_text_stats,
 )
-from test_oracle_parity import _normalize
+from scripts.check_parity import normalize
 
 RETIRED = {
     "q_insert_if_absent": (q_insert_if_absent, SQL_INSERT_IF_ABSENT),
@@ -264,8 +264,8 @@ _BENCHED = benched_queries()
 @pytest.mark.parametrize("name", sorted(_BENCHED))
 def test_benched_donor_matches_oracle(name, spark, duck, sf_dir):
     fn, oracle = _BENCHED[name]
-    s_cols, s_rows = _normalize(fn(spark, sf_dir).toPandas())
-    d_cols, d_rows = _normalize(duck.execute(oracle).df())
+    s_cols, s_rows = normalize(fn(spark, sf_dir).toPandas())
+    d_cols, d_rows = normalize(duck.execute(oracle).df())
     assert s_cols == d_cols
     assert len(s_rows) == len(d_rows)
     mismatches = [
@@ -278,8 +278,8 @@ def test_benched_donor_matches_oracle(name, spark, duck, sf_dir):
 @pytest.mark.parametrize("name", sorted(RETIRED))
 def test_retired_query_matches_oracle(name, spark, duck, sf_dir):
     fn, oracle = RETIRED[name]
-    s_cols, s_rows = _normalize(fn(spark, sf_dir).toPandas())
-    d_cols, d_rows = _normalize(duck.execute(oracle).df())
+    s_cols, s_rows = normalize(fn(spark, sf_dir).toPandas())
+    d_cols, d_rows = normalize(duck.execute(oracle).df())
     assert s_cols == d_cols
     assert len(s_rows) == len(d_rows)
     mismatches = [

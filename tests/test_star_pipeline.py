@@ -5,6 +5,8 @@ own documented quirks)."""
 
 from __future__ import annotations
 
+from datetime import datetime
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -16,10 +18,17 @@ from tests.clinical_fixtures import make_sources
 def pipeline(spark):
     src = make_sources(spark)
     out = star.run_pipeline(src)
-    # cache the two facts: every QA probe re-reads them
+    # cache the two facts: most tests here re-read them
     out["stage"]["fact_disorder_events"].cache()
     out["dwh"]["fact_disorder_events"].cache()
     return src, out["stage"], out["dwh"]
+
+
+@pytest.fixture(scope="module")
+def qa_reports(pipeline):
+    """The four QA.sql reports of the pipeline, collected."""
+    _, stage, dwh = pipeline
+    return {k: v.collect() for k, v in qa.run_all(stage, dwh).items()}
 
 
 def test_build_staging_emits_no_user_warning(spark):
@@ -98,15 +107,14 @@ def test_junk_dim_linkage(pipeline):
     assert junk.count() == n_combos
 
 
-def test_qa_duplicates_zero(pipeline):
-    src, stage, dwh = pipeline
-    dup = qa.duplicate_checks(dwh).collect()
+def test_qa_duplicates_zero(qa_reports):
+    dup = qa_reports["duplicates"]
     assert all(r["num_dupes"] == 0 for r in dup), dup
 
 
-def test_qa_orphans(pipeline):
+def test_qa_orphans(pipeline, qa_reports):
     src, stage, dwh = pipeline
-    rows = {r["issue"]: r["num_records"] for r in qa.orphan_checks(dwh).collect()}
+    rows = {r["issue"]: r["num_records"] for r in qa_reports["orphans"]}
     assert rows["Orphan patients"] == 0
     assert rows["Orphan concepts"] == 0
     assert rows["Orphan dates"] == 0
@@ -119,15 +127,13 @@ def test_qa_orphans(pipeline):
     assert rows["Orphan admissions"] == null_adm
 
 
-def test_qa_fact_vs_agg_zero(pipeline):
-    src, stage, dwh = pipeline
-    row = qa.fact_vs_agg(dwh).collect()[0]
+def test_qa_fact_vs_agg_zero(qa_reports):
+    row = qa_reports["fact_vs_agg"][0]
     assert row["diff_events"] == 0
 
 
-def test_qa_rowcount_reconciliation(pipeline):
-    src, stage, dwh = pipeline
-    rows = {r["table_name"]: r for r in qa.rowcount_reconciliation(stage, dwh).collect()}
+def test_qa_rowcount_reconciliation(qa_reports):
+    rows = {r["table_name"]: r for r in qa_reports["rowcounts"]}
     # dims with unique natural keys promote 1:1
     assert rows["dim_patients"]["diff_rows"] == 0
     assert rows["dim_concepts"]["diff_rows"] == 0
@@ -136,6 +142,133 @@ def test_qa_rowcount_reconciliation(pipeline):
     assert rows["fact_disorder_events"]["diff_rows"] >= 0
     for r in rows.values():
         assert r["dwh_rows"] > 0
+
+
+def test_qa_runs_as_one_action(spark):
+    """QA.sql compiles to one shared aggregate, collected once by
+    run_all: the four reports together cost a bounded number of jobs
+    (the per-probe form took 80), and collecting the 2nd to 4th
+    report runs none."""
+    out = star.run_pipeline(make_sources(spark, n_patients=20, seed=7))
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "qa-action-count"
+    sc.setJobGroup(group, "qa.run_all")
+    try:
+        reports = list(qa.run_all(out["stage"], out["dwh"]).values())
+        reports[0].collect()
+        first = len(tracker.getJobIdsForGroup(group))
+        for df in reports[1:]:
+            df.collect()
+        total = len(tracker.getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert total <= 25, total
+    assert total == first
+
+
+_T1, _T2, _T3 = (
+    datetime(2024, 1, 1, 8), datetime(2024, 1, 2, 9), datetime(2024, 1, 3, 10)
+)
+#: planted defects, (DDL, rows) per table: duplicated and twice-NULL
+#: dim keys, NULL and dangling FKs (a NULL FK also where the dim holds
+#: a NULL key), stage != DWH counts, an empty dim, an empty pre-agg
+_QA_STAGE = {
+    "dim_patients": ("patient_id int", [(1,), (2,), (3,), (4,)]),
+    "dim_admissions": ("admission_id int", [(10,), (11,), (12,)]),
+    "dim_provider": ("provider_id bigint", [(100,), (101,), (102,)]),
+    "dim_concepts": ("clinical_concept_id bigint", [(500,)]),
+    "dim_date": ("event_datetime timestamp", [(_T1,), (_T2,)]),
+    "dim_junk_disorder_event": ("junk_id int", [(1,), (2,)]),
+    "fact_disorder_events": ("patient_id int", [(1,)] * 7),
+}
+_QA_FACT_DDL = (
+    "patient_id int, admission_id int, clinical_concept_id bigint,"
+    " event_datetime timestamp, junk_id int"
+)
+_QA_DWH = {
+    "dim_patients": ("patient_id int", [(1,), (2,), (2,), (3,), (None,), (None,)]),
+    "dim_admissions": ("admission_id int", [(10,), (11,), (12,)]),
+    "dim_provider": ("provider_id bigint", [(100,), (101,)]),
+    "dim_concepts": ("clinical_concept_id bigint", []),
+    "dim_date": ("event_datetime timestamp", [(_T1,), (_T2,), (_T2,)]),
+    "dim_junk_disorder_event": ("junk_id int", [(1,), (2,), (None,)]),
+    "fact_disorder_events": (_QA_FACT_DDL, [
+        (1, 10, 500, _T1, 1),
+        (None, 10, None, _T2, None),
+        (9, 99, 501, _T3, 7),
+        (2, None, 500, None, 2),
+        (3, 11, 502, _T1, 1),
+    ]),
+    "agg_disorders_per_admission": ("admission_id int, total_events bigint", []),
+}
+
+
+def test_qa_planted_defects_match_duckdb(spark):
+    """Every QA.sql report over hand-planted defects equals DuckDB
+    running QA.sql's own SQL shapes on the same rows: scalar
+    COUNT(*), LEFT JOIN ... USING ... IS NULL, GROUP BY ... HAVING
+    COUNT(*) > 1 and SUM (NULL over the empty pre-agg)."""
+    import duckdb
+
+    from clinical_data_warehouse_bi_spark.io import local_frame
+
+    con = duckdb.connect()
+    frames = {}
+    for layer, tables in (("stage", _QA_STAGE), ("dwh", _QA_DWH)):
+        frames[layer] = {}
+        for t, (ddl, rows) in tables.items():
+            frames[layer][t] = local_frame(spark, rows, ddl)
+            con.execute(f"CREATE TABLE {layer}_{t} ({ddl})")
+            if rows:
+                marks = ", ".join("?" * len(rows[0]))
+                con.executemany(f"INSERT INTO {layer}_{t} VALUES ({marks})", rows)
+
+    def duck(parts: list[str]) -> list[tuple]:
+        union = " UNION ALL ".join(
+            f"SELECT {i} AS i, * FROM ({p})" for i, p in enumerate(parts)
+        )
+        return [r[1:] for r in con.execute(f"{union} ORDER BY i").fetchall()]
+
+    keyed = [
+        ("patients", "dim_patients", "patient_id", "patients"),
+        ("admissions", "dim_admissions", "admission_id", "admissions"),
+        ("concepts", "dim_concepts", "clinical_concept_id", "concepts"),
+        ("dates", "dim_date", "event_datetime", "dates"),
+        ("junk_id", "dim_junk_disorder_event", "junk_id", "junk"),
+    ]
+    expected = {
+        "rowcounts": duck([
+            f"SELECT '{t}', (SELECT COUNT(*) FROM stage_{t}) AS s,"
+            f" (SELECT COUNT(*) FROM dwh_{t}) AS d,"
+            f" (SELECT COUNT(*) FROM stage_{t}) - (SELECT COUNT(*) FROM dwh_{t})"
+            for t in _QA_STAGE
+        ]),
+        "fact_vs_agg": duck([
+            "SELECT 'Fact vs Agg Total', f, a, f - a FROM"
+            " (SELECT COUNT(*) AS f FROM dwh_fact_disorder_events),"
+            " (SELECT SUM(total_events) AS a FROM dwh_agg_disorders_per_admission)"
+        ]),
+        "orphans": duck([
+            f"SELECT 'Orphan {o}', COUNT(*) FROM dwh_fact_disorder_events f"
+            f" LEFT JOIN dwh_{t} d USING ({k}) WHERE d.{k} IS NULL"
+            for o, t, k, _ in keyed
+        ]),
+        "duplicates": duck([
+            f"SELECT 'Duplicate {dl}', COUNT(*) FROM"
+            f" (SELECT {k} FROM dwh_{t} GROUP BY {k} HAVING COUNT(*) > 1)"
+            for _, t, k, dl in keyed
+        ]),
+    }
+    got = {
+        k: [tuple(r) for r in v.collect()]
+        for k, v in qa.run_all(frames["stage"], frames["dwh"]).items()
+    }
+    assert got == expected
+    # the planted defects are visible, not vacuously zero
+    assert got["fact_vs_agg"] == [("Fact vs Agg Total", 5, None, None)]
+    assert [n for _, n in got["orphans"]] == [2, 2, 5, 2, 2]
+    assert [n for _, n in got["duplicates"]] == [2, 0, 0, 1, 0]
 
 
 def test_agg_matches_manual(pipeline):
