@@ -6,18 +6,14 @@ operators (dedup, similarity search, text analysis, multimodal
 plumbing).
 
 Every top-level def is reached from the entry points
-(``__spark_entry__.py``, ``bench.py``, ``queries/``), except the
-tested-only defs that tests/test_reachability.py lists in TESTED_ONLY
-(reached only from their own tests, awaiting their cut); that test
-keeps it that way.
+(``__spark_entry__.py``, ``bench.py``, ``queries/``);
+tests/test_reachability.py keeps it that way.
 
 Layout:
   session.py     SparkSession factory (AQE, UTC, sane shuffle partitions)
   io.py          scale-factor table reads, footer stats, fan_out, the
                  build-once index cache (cached_index), temperature
-                 mixing, dataset manifests;
-                 tested-only: format sources/sinks, raw-file reads, sized
-                 writes, shuffles
+                 mixing, dataset manifests
   cleanse.py     cleansing expressions (sentinel timestamps, keyword
                  filters, regex-guarded numeric parse, calendar attrs)
   keys.py        surrogate keys (row_number, zip_index_key)
@@ -35,9 +31,8 @@ Layout:
                  boilerplate dedup, sampling, top n-grams, TF-IDF
   suffix.py      exact-substring dedup and the persisted digest index
   corpus.py      the corpus release pipeline (build_corpus_release)
-  scrub.py       repetition metrics, contamination, DP release;
-                 tested-only: PII scrub, pseudonyms, k-anonymity
-  bpe.py         BPE encoding under a merge table (tested-only: training)
+  scrub.py       repetition metrics, contamination, DP release
+  bpe.py         BPE encoding under a merge table
   lm.py          n-gram language-model perplexity
   graph.py       connected components for dedup clusters
   similarity.py  Arrow-batched numpy top-k, sign-LSH, IVF and IVF-PQ
@@ -45,7 +40,6 @@ Layout:
   retrieval.py   BM25 top-k and its persisted index
   multimodal.py  binary-column (image/audio) plumbing via mapInPandas,
                  pHash image near-dup
-  streaming.py   streaming event dedup (dedup_events)
   registry.py    query registry and gate-slot rotation
   queries/       registered (query, oracle-SQL) pairs
 """

@@ -1,118 +1,21 @@
-"""Byte-pair-encoding tokenizer training and encoding at corpus
-scale (Sennrich et al. 2016; the GPT-2 encoder's merge-rank greedy
+"""Byte-pair-encoding at corpus scale under a fixed merge table
+(Sennrich et al. 2016; the GPT-2 encoder's merge-rank greedy
 application).
 
-The scalable construction is the one public BPE trainers actually
-use: merges depend ONLY on the word-frequency histogram, not on the
-corpus layout — so 100 TB of text reduces to ONE distributed
-histogram job (explode -> count, a few 10^6 distinct words), and the
-merge loop itself runs driver-side over that small histogram in pure
-Python, exactly like a single-node trainer. Distributing the merge
-loop would add a job barrier per merge (thousands of barriers) to
-iterate over data that fits in memory — the same measured reasoning
-as the sampled k-means quantizer fit (SURVEY §9 item 11).
-
-Encoding then scales out: an Arrow-batched pandas UDF applies the
-merge table greedily by rank, with a per-batch word cache (natural
-corpora repeat words heavily, so each distinct word is encoded once
-per batch, not once per occurrence).
+An Arrow-batched pandas UDF applies the merge table greedily by
+rank, with a per-batch word cache (natural corpora repeat words
+heavily, so each distinct word is encoded once per batch, not once
+per occurrence). The merge table is a frozen constant
+(queries.text_ops.BPE_GATE_MERGES).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 #: end-of-word marker (the classic BPE construction: distinguishes
 #: "est" in "highest</w>" from "est" in "estimate")
 EOW = "</w>"
-
-
-def word_histogram(
-    docs: DataFrame,
-    text_col: str = "text",
-    min_count: int = 1,
-    max_words: int | None = None,
-) -> DataFrame:
-    """(word, n) frequency histogram over the tokenized corpus — the
-    ONE distributed pass BPE training needs. ``min_count`` prunes the
-    long tail (hapaxes cannot win a merge against real mass);
-    ``max_words`` bounds the driver collect for adversarial corpora."""
-    from clinical_data_warehouse_bi_spark.text import tokens
-
-    hist = (
-        docs.select(F.explode(tokens(text_col)).alias("word"))
-        .groupBy("word")
-        .agg(F.count("*").alias("n"))
-    )
-    if min_count > 1:
-        hist = hist.filter(F.col("n") >= min_count)
-    if max_words:
-        hist = hist.orderBy(F.col("n").desc(), F.col("word").asc()).limit(max_words)
-    return hist
-
-
-def train_bpe(
-    histogram: list[tuple[str, int]], n_merges: int
-) -> list[tuple[str, str]]:
-    """Classic BPE merge learning over a (word, count) histogram:
-    start from characters (+ end-of-word marker), repeatedly merge
-    the most frequent adjacent symbol pair. Deterministic: ties break
-    lexicographically. Pure Python by design — see module docstring.
-
-    Incremental pair-count maintenance: each merge only touches the
-    words that contain the merged pair, so training is
-    O(n_merges x affected words), not O(n_merges x vocabulary)."""
-    words: list[list[str]] = []
-    counts: list[int] = []
-    for w, c in histogram:
-        if not w:
-            continue
-        words.append(list(w) + [EOW])
-        counts.append(int(c))
-
-    from collections import defaultdict
-
-    pair_counts: dict[tuple[str, str], int] = defaultdict(int)
-    pair_words: dict[tuple[str, str], set[int]] = defaultdict(set)
-    for i, syms in enumerate(words):
-        c = counts[i]
-        for a, b in zip(syms, syms[1:]):
-            pair_counts[(a, b)] += c
-            pair_words[(a, b)].add(i)
-
-    merges: list[tuple[str, str]] = []
-    for _ in range(n_merges):
-        live = {p: n for p, n in pair_counts.items() if n > 0}
-        if not live:
-            break
-        best = min(live.items(), key=lambda kv: (-kv[1], kv[0]))[0]
-        merges.append(best)
-        merged = best[0] + best[1]
-        for i in list(pair_words[best]):
-            syms, c = words[i], counts[i]
-            # remove this word's contribution, rewrite, re-add
-            for a, b in zip(syms, syms[1:]):
-                pair_counts[(a, b)] -= c
-                pair_words[(a, b)].discard(i)
-            out = []
-            j = 0
-            while j < len(syms):
-                if (
-                    j + 1 < len(syms)
-                    and syms[j] == best[0]
-                    and syms[j + 1] == best[1]
-                ):
-                    out.append(merged)
-                    j += 2
-                else:
-                    out.append(syms[j])
-                    j += 1
-            words[i] = out
-            for a, b in zip(out, out[1:]):
-                pair_counts[(a, b)] += c
-                pair_words[(a, b)].add(i)
-    return merges
 
 
 def encode_word(word: str, ranks: dict[tuple[str, str], int]) -> list[str]:

@@ -220,152 +220,6 @@ def fan_out(df: DataFrame, *keys: str) -> DataFrame:
     return df.repartition(target, *keys) if keys else df.repartition(target)
 
 
-def read_source(
-    spark: SparkSession,
-    path: str,
-    fmt: str = "parquet",
-    schema=None,
-    **options: str,
-) -> DataFrame:
-    """S1 generalized beyond parquet: csv / json / orc / text sources
-    (the reference's MariaDB tables are opaque storage — any columnar
-    or row format the lake holds maps to the same DataFrame surface).
-
-    CSV/JSON default to an explicit ``schema`` when given — at 100 TB
-    schema inference is a full extra pass over the data; never rely on
-    it in production paths.
-    """
-    reader = spark.read.format(fmt)
-    if schema is not None:
-        reader = reader.schema(schema)
-    elif fmt in ("csv", "json"):
-        reader = reader.option("inferSchema", "true")
-    if fmt == "csv":
-        reader = reader.option("header", "true")
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader.load(path)
-
-
-def read_raw_files(
-    spark: SparkSession,
-    path: str,
-    mode: str = "binary",
-    glob: str | None = None,
-    recursive: bool = True,
-    max_bytes: int | None = None,
-) -> DataFrame:
-    """Raw-FILE corpus ingest — the missing first mile between a
-    bucket of scraped/exported files and the engine's `documents`
-    shape (every tabular source goes through read_source; this is
-    for the files that aren't a table yet):
-
-    - ``mode="binary"``: Spark's binaryFile source, one row per file
-      with (path, modificationTime, length, content BINARY) — the
-      multimodal ingest shape (multimodal.py's decoders consume the
-      opaque content column behind their fences). The source pushes
-      filters on path/modificationTime/length down to the FILE
-      LISTING, so ``max_bytes`` (compiled to a length predicate)
-      skips oversized blobs without ever reading their bytes —
-      plan-asserted in tests.
-    - ``mode="text"``: one row per file with the WHOLE file as a
-      string (path, text) — document-per-file corpora. Not
-      splittable (a file is one task): right for many small docs,
-      wrong for a few huge ones — use "lines" there.
-    - ``mode="lines"``: spark.read.text + input_file_name(), one row
-      per line (path, text) — splittable, the scale path for large
-      line-oriented files.
-
-    ``glob`` maps to pathGlobFilter (listing-time pruning, e.g.
-    '*.txt'); ``recursive`` to recursiveFileLookup. Use
-    attach-style helpers downstream to derive stable ids (e.g.
-    xxhash64(path)) — paths, not positions, are the stable identity
-    of file-born rows."""
-    if mode not in ("binary", "text", "lines"):
-        raise ValueError(f"unknown mode: {mode!r}")
-    if mode == "binary":
-        reader = spark.read.format("binaryFile")
-    elif mode == "text":
-        reader = spark.read.format("text").option("wholetext", "true")
-    else:
-        reader = spark.read.format("text")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    if recursive:
-        reader = reader.option("recursiveFileLookup", "true")
-    df = reader.load(path)
-    if mode == "binary":
-        if max_bytes is not None:
-            df = df.where(F.col("length") <= int(max_bytes))
-        return df
-    out = df.select(
-        F.input_file_name().alias("path"), F.col("value").alias("text")
-    )
-    return out
-
-
-def write_sink(
-    df: DataFrame,
-    path: str,
-    fmt: str = "parquet",
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-    **options: str,
-) -> None:
-    """S2/S3 generalized sink: parquet (default) / csv / json / orc."""
-    w = df.write.format(fmt).mode(mode)
-    if fmt == "csv":
-        w = w.option("header", "true")
-    for k, v in options.items():
-        w = w.option(k, v)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.save(path)
-
-
-def write_training_shards(
-    df: DataFrame,
-    path: str,
-    num_shards: int,
-    shard_key: str,
-    max_records_per_file: int | None = None,
-    fmt: str = "parquet",
-) -> None:
-    """Training-shard sink: hash-partition rows into ``num_shards``
-    deterministic shards on ``shard_key`` (same key -> same shard,
-    so re-runs and incremental appends are stable), optionally
-    bounding rows per file via spark.sql.files.maxRecordsPerFile so
-    downstream loaders get uniformly-sized files. One shuffle, then
-    embarrassingly-parallel writes — the standard corpus-shard layout
-    for a 100 TB training run."""
-    w = df.repartition(num_shards, shard_key).write.mode("overwrite").format(fmt)
-    if max_records_per_file:
-        w = w.option("maxRecordsPerFile", str(max_records_per_file))
-    w.save(path)
-
-
-def global_shuffle(
-    df: DataFrame, id_col: str, seed: int = 0, partitions: int | None = None
-) -> DataFrame:
-    """Deterministic global shuffle for training-example order: sort
-    by xxhash64(id, seed) via a RANGE repartition — different seeds
-    give independent permutations, the same seed replays the same
-    order (task retries and re-runs included, which rand() cannot
-    promise). One range-exchange + per-partition sort; downstream
-    writes preserve the order file-by-file, so a sequential reader of
-    the shard listing sees the permutation. The epoch-reshuffle op of
-    a training pipeline: pair with write_training_shards per epoch
-    seed."""
-    h = F.xxhash64(F.col(id_col), F.lit(seed))
-    n = partitions or df.sparkSession.sparkContext.defaultParallelism
-    return (
-        df.withColumn("__shuffle_key", h)
-        .repartitionByRange(n, "__shuffle_key")
-        .sortWithinPartitions("__shuffle_key")
-        .drop("__shuffle_key")
-    )
-
-
 #: hash space for the deterministic keep-rate thresholds below. 1e12
 #: (not the former 1e6): a 100 TB mixture can legitimately water-fill
 #: a huge source down to a rate below 1e-6, and int(rate * 1e6)
@@ -384,42 +238,6 @@ def _mix_keep_threshold(rate: float) -> int:
     if rate <= 0.0:
         return 0
     return max(1, round(rate * _MIX_HASH_SPACE))
-
-
-def mix_sources(
-    sources: list[tuple[DataFrame, float]], id_col: str, seed: int = 0
-) -> DataFrame:
-    """Training-mixture shaping across corpora: union ``sources`` with
-    a per-source keep ``rate`` in [0, 1], sampled by deterministic
-    hash threshold (replay-stable, engine-portable — the
-    q_stratified_sample rule applied across FRAMES instead of within
-    one). A `__source` index column tags provenance. Rates > 1 are
-    rejected — upsampling is a reader-side repeat (epoch seeds via
-    global_shuffle), not a row-duplication job."""
-    out = None
-    for i, (df, rate) in enumerate(sources):
-        if not (0.0 <= rate <= 1.0):
-            raise ValueError(
-                f"source {i}: rate {rate} outside [0, 1] — upsample by"
-                " repeating epochs (global_shuffle seeds), not by"
-                " duplicating rows"
-            )
-        # pmod, not abs+%: abs(Long.MIN_VALUE) overflows and stays
-        # negative, and % keeps the dividend's sign — either way a
-        # negative threshold test that breaks the keep rule for ~1 in
-        # 2^63 rows (and deterministically for whichever ids hash
-        # there). pmod is non-negative by construction.
-        h = F.pmod(
-            F.xxhash64(F.col(id_col), F.lit(seed), F.lit(i)),
-            F.lit(_MIX_HASH_SPACE),
-        )
-        kept = df.filter(h < _mix_keep_threshold(rate)).withColumn(
-            "__source", F.lit(i)
-        )
-        out = kept if out is None else out.unionByName(kept)
-    if out is None:
-        raise ValueError("mix_sources needs at least one source")
-    return out
 
 
 def snapshot_persistent_rdds(spark: SparkSession) -> set:
@@ -544,96 +362,6 @@ def cached_index(
     return path
 
 
-def write_sized(
-    df,
-    path: str,
-    target_mb: int = 256,
-    sample_rows: int = 10_000,
-    partition_by: list[str] | None = None,
-) -> dict:
-    """Write parquet with files sized toward ``target_mb`` — the
-    file-size lever next to coalesce (fixed count): measure the
-    ACTUAL on-disk bytes/row by writing a bounded sample to a
-    dot-prefixed scratch dir (in-memory plan statistics
-    over-estimate parquet by the whole compression factor, so they
-    cannot target disk size), then
-    let the writer split files by ``maxRecordsPerFile`` (every task
-    splits its own output at the right row count, no shuffle).
-    maxRecordsPerFile can only SPLIT — when the input has more
-    partitions than the target file count, a shuffle-free coalesce
-    merges down first (row count via one count job, the price of
-    merging; skipped under partitionBy, where per-partition-value
-    file counts are data-dependent).
-
-    The sample's compression ratio stands in for the full data's
-    (documented approximation — a skewed tail column can still
-    deviate); the scratch dir is removed in all paths. Returns
-    {"bytes_per_row", "records_per_file", "n_files"}."""
-    import glob
-    import math
-    import shutil
-
-    scratch = os.path.join(os.path.dirname(path) or ".", ".write-sized-sample")
-    shutil.rmtree(scratch, ignore_errors=True)
-    try:
-        sample = df.limit(int(sample_rows))
-        sample.write.mode("overwrite").parquet(scratch)
-        files = glob.glob(os.path.join(scratch, "*.parquet"))
-        nbytes = sum(os.path.getsize(f) for f in files)
-        nrows = sample.sparkSession.read.parquet(scratch).count()
-        if nrows == 0:
-            raise ValueError("write_sized: empty input")
-        bpr = max(nbytes / nrows, 1e-6)
-        rpf = max(1, int(math.floor(target_mb * 1024 * 1024 / bpr)))
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
-
-    out = df
-    if not partition_by:
-        total = df.count()
-        want_files = max(1, math.ceil(total / rpf))
-        if want_files < out.rdd.getNumPartitions():
-            out = out.coalesce(want_files)
-    writer = out.write.mode("overwrite").option("maxRecordsPerFile", rpf)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-    n_files = len(glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
-    return {"bytes_per_row": bpr, "records_per_file": rpf, "n_files": n_files}
-
-
-def read_evolved(spark, path: str, format: str = "parquet"):
-    """Read an append sink whose batches were written under EVOLVING
-    schemas (a column added mid-stream — the normal life of a
-    long-lived ingest directory): parquet/orc footer schemas are
-    merged across files (``mergeSchema``), so early files surface
-    the late-added columns as NULL instead of the default
-    first-file-wins read silently DROPPING them. Use for schema-
-    drifting sinks only — schema merging reads every file footer, a
-    real cost on millions of files, which is why Spark defaults it
-    off and why the fixed-schema readers here (read_table) never pay
-    it."""
-    return spark.read.option("mergeSchema", "true").format(format).load(path)
-
-
-def raw_to_documents(
-    raw: DataFrame, path_col: str = "path", text_col: str = "text"
-) -> DataFrame:
-    """Adapt read_raw_files output to the
-    engine's `documents` shape: doc_id = xxhash64(path) (stable,
-    layout-independent — file identity, not row position), source =
-    the parent directory name (the per-source knob quota_sample /
-    remove_boilerplate key on), n_chars. Pure projection; every text
-    operator downstream (dedup, quality, BM25, ...) runs unchanged."""
-    return raw.select(
-        F.xxhash64(F.col(path_col)).alias("doc_id"),
-        F.col(text_col).alias("text"),
-        F.element_at(F.split(F.col(path_col), "/"), -2).alias("source"),
-        F.length(F.col(text_col)).cast("bigint").alias("n_chars"),
-        F.col(path_col).alias("path"),
-    )
-
-
 def temperature_mix_rates(
     sizes: list[float], alpha: float, budget: float
 ) -> list[float]:
@@ -647,8 +375,8 @@ def temperature_mix_rates(
     until the budget is exactly allocated (or everything caps).
 
     Driver-side pure arithmetic over O(sources) scalars — sizes come
-    from the caller (one count per source, or the catalog). Feed the
-    result straight into mix_sources."""
+    from the caller (one count per source, or the catalog);
+    temperature_mix_keyed samples at these rates."""
     if alpha < 0:
         raise ValueError("alpha must be >= 0")
     if budget <= 0:
@@ -674,44 +402,6 @@ def temperature_mix_rates(
     return rates
 
 
-def temperature_mix(
-    sources: list[DataFrame],
-    id_col: str,
-    alpha: float,
-    budget: float,
-    seed: int = 0,
-    weight_col: str | None = None,
-) -> DataFrame:
-    """Temperature-weighted mixture of corpora: sizes each source
-    (O(sources) scalar aggregations — metadata-cheap next to the
-    training read itself), derives water-filled keep-rates via
-    temperature_mix_rates, and samples with mix_sources'
-    deterministic hash threshold (replay-stable, engine-portable).
-
-    ``weight_col``: measure sources and the budget in the SUM of a
-    column (e.g. a token count) instead of rows — the unit LLM
-    mixture specs are actually written in. Sampling stays row-level
-    by document hash, so the kept TOKEN mass matches the budget in
-    expectation (exactly proportional when doc lengths are
-    independent of the hash, which a content-independent id hash
-    guarantees); the alternative — packing documents to an exact
-    token budget — is a sequential knapsack, not a per-row filter,
-    and belongs to pack_sequences downstream."""
-    if weight_col is None:
-        sizes = [float(df.count()) for df in sources]
-    else:
-        sizes = [
-            float(
-                df.agg(
-                    F.coalesce(F.sum(weight_col), F.lit(0)).alias("s")
-                ).first()["s"]
-            )
-            for df in sources
-        ]
-    rates = temperature_mix_rates(sizes, alpha, budget)
-    return mix_sources(list(zip(sources, rates)), id_col, seed=seed)
-
-
 def temperature_mix_keyed(
     df: DataFrame,
     key_col: str,
@@ -720,17 +410,13 @@ def temperature_mix_keyed(
     budget: float,
     weight_col: str | None = None,
 ) -> DataFrame:
-    """``temperature_mix`` for the one-table-many-sources layout (a
-    ``source`` column instead of N separate frames): sizes every
-    source in ONE scan (a slim groupBy on the key), derives the same
-    water-filled keep-rates via temperature_mix_rates, and samples
-    with the same deterministic hash threshold — the per-key rates
-    ride a broadcast literal map, so the whole mixture costs one
-    aggregation plus one per-row filter. The list form would pay
-    len(sources) full scans when the sources live in one table
-    (each filter re-reads every row group unless the table is
-    partitioned by source) — the difference between O(1) and O(20)
-    passes over a 100 TB corpus.
+    """Temperature-weighted training mixture over one table of many
+    sources (a ``source`` column): sizes every source in ONE scan (a
+    slim groupBy on the key), derives the water-filled keep-rates via
+    temperature_mix_rates, and samples by a deterministic hash
+    threshold — the per-key rates ride a broadcast literal map, so
+    the whole mixture costs one aggregation plus one per-row filter,
+    not one full scan per source.
 
     The per-row hash salts with the KEY VALUE rather than a list
     index, so a source's sample is stable under source addition/
@@ -761,8 +447,8 @@ def temperature_mix_keyed(
             for lit in (F.lit(key), F.lit(_mix_keep_threshold(rate)))
         ]
     )
-    # same pmod-not-abs discipline as mix_sources (abs(MIN_VALUE)
-    # overflow; % keeps the dividend's sign)
+    # pmod, not abs + %: abs(Long.MIN_VALUE) overflows and stays
+    # negative, and % keeps the dividend's sign
     h = F.pmod(F.xxhash64(F.col(id_col), F.lit(0), k), F.lit(_MIX_HASH_SPACE))
     return df.filter(h < rate_map[k])
 

@@ -125,23 +125,12 @@ PHASH_HIGHFREQ = 4
 PHASH_BANDS = 8
 PHASH_MAX_HAMMING = 6
 
-#: luma weights (ITU-R BT.601) for RGB(A) -> grayscale
-_LUMA = np.array([0.299, 0.587, 0.114])
-
-
 def _to_gray(arr: np.ndarray) -> np.ndarray:
-    """Decoded array -> 2-D float grayscale. 3/4-channel images take
-    the BT.601 luma of the first three channels (alpha ignored),
-    gray+alpha takes the gray channel, 1-D byte streams (the fake
-    path and audio features) fold into the squarest (h, w) grid that
+    """A decoded 1-D byte stream (decode_media's output) -> 2-D float
+    grayscale: the bytes fold into the squarest (h, w) grid that
     consumes every byte row-major — deterministic, so near-identical
-    payloads land on near-identical grids."""
-    if arr.ndim == 3:
-        if arr.shape[2] >= 3:
-            return arr[:, :, :3].astype(np.float64) @ _LUMA
-        return arr[:, :, 0].astype(np.float64)
-    if arr.ndim == 2:
-        return arr.astype(np.float64)
+    payloads land on near-identical grids, and the row-major bytes
+    of a square image restore its grid."""
     flat = arr.ravel()
     n = max(flat.size, 1)
     h = max(int(np.sqrt(n)), 1)

@@ -17,7 +17,9 @@ from clinical_data_warehouse_bi_spark import scrub
 from clinical_data_warehouse_bi_spark.io import fan_out, load_tables
 from clinical_data_warehouse_bi_spark.registry import register
 
-#: Gopher-rule thresholds (scrub.repetition_filter defaults)
+#: Gopher-rule thresholds: the one copy of the repetition-quality
+#: cut (a document passes when every fraction is at or under its
+#: threshold)
 MAX_DUP_LINE_FRAC = 0.30
 MAX_DUP_NGRAM_FRAC = 0.50
 MAX_TOP_WORD_FRAC = 0.20
@@ -78,8 +80,8 @@ _SQL_WORDS = (
     FROM metrics
     """)
 def q_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher/FineWeb repetition quality gate (scrub.repetition_metrics
-    / repetition_filter): per-document duplicate-line fraction,
+    """Gopher/FineWeb repetition quality gate
+    (scrub.repetition_metrics): per-document duplicate-line fraction,
     duplicate-3-gram fraction, and top-token share, plus the boolean
     ``keep`` verdict under the standard thresholds. Emitting every row
     with its flag (instead of the filtered subset) puts the REJECTED

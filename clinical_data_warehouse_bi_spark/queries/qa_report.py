@@ -516,7 +516,7 @@ def q_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     explicit salting) and the diagnostic a 100 TB join runs BEFORE
     discovering its hot key the slow way. REGISTERED round 12
     (round-11 verdict item 1); slot freed by retiring
-    q_stream_dedup_dual (witnesses in its docstring). The full oracle
+    q_stream_dedup_dual (witness in its docstring). The full oracle
     comparison against SQL_SKEW_REPORT also stays in
     tests/test_retired_parity.py.
 

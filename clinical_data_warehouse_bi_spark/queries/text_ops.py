@@ -405,10 +405,10 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: value-checked requires the oracle to know the merges, and
 #: oracle_sql() strings are fixed at registration — so the gate
 #: encodes under this committed constant instead of refitting per
-#: corpus). Provenance: bpe.train_bpe over the sf0.001 documents
-#: histogram at n_merges=64, deterministic (lexicographic
-#: tie-break). Corpus-fitted training stays exercised by
-#: tests/test_bpe.py.
+#: corpus). A frozen constant: it was produced once by a
+#: driver-side BPE trainer (since deleted) over the sf0.001
+#: documents histogram at n_merges=64, ties broken
+#: lexicographically.
 BPE_GATE_MERGES: list[tuple[str, str]] = [
     ('e', 'r'), ('e', '</w>'), ('n', '</w>'), ('o', 'r'), ('t', '</w>'),
     ('er', '</w>'), ('o', 'w'), ('ow', '</w>'), ('l', 'u'), ('i', 'n'),

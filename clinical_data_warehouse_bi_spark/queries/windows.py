@@ -167,30 +167,25 @@ SQL_STREAM_DEDUP_DUAL = """
 
 
 def q_stream_dedup_dual(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch dual of streaming.dedup_events, value-checked: simulate
-    an at-least-once source by replaying every 10th event, then run
-    THE SAME operator (withWatermark + dropDuplicatesWithinWatermark,
-    Spark's unified API executes it as plain key-dedup in batch) and
-    keep one row per event_id. The replayed rows are exact copies, so
-    the arbitrary-representative semantics of streaming first-arrival
-    dedup are deterministic here and the DuckDB oracle is a full-row
-    DISTINCT. Streaming mode is exercised by tests/test_streaming.py
-    on the same function.
+    """At-least-once event dedup, value-checked: simulate a
+    redelivering source by replaying every 10th event, then keep one
+    row per event_id (``dropDuplicates``). The replayed rows are exact
+    copies, so the arbitrary-representative semantics of key dedup
+    are deterministic here and the DuckDB oracle is a full-row
+    DISTINCT.
 
     Round-12 registry retirement (cap is 50; the slot went to
     q_skew_report): hash-checked for eleven straight rounds on a
-    frozen implementation. Witnesses: streaming.dedup_events stays under
-    the redelivery test in tests/test_streaming.py (the streaming-mode
-    semantics this dual exists to anchor), q_corpus_clean keeps the
-    registered exact-dedup family under the hash gate, and the full-row
-    DISTINCT oracle comparison survives here via SQL_STREAM_DEDUP_DUAL in
+    frozen implementation. Witnesses: the redelivery test in
+    tests/test_streaming.py runs it over a table holding every event
+    twice, q_corpus_clean keeps the registered exact-dedup family
+    under the hash gate, and the full-row DISTINCT oracle comparison
+    survives here via SQL_STREAM_DEDUP_DUAL in
     tests/test_retired_parity.py."""
-    from clinical_data_warehouse_bi_spark.streaming import dedup_events
-
     ev = load_tables(spark, sf_dir, ("events",))["events"]
     ev = ev.select("event_id", "ts", "user_id", "event_type", "value")
     replayed = ev.unionByName(ev.filter(F.col("event_id") % 10 == 0))
-    return dedup_events(replayed, keys=["event_id"])
+    return replayed.dropDuplicates(["event_id"])
 
 
 @register("q_multimodal_features", oracle=None)
@@ -423,12 +418,10 @@ def q_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Round-10 registry retirement (cap is 50; the slot went to
     q_daily_census): hash-checked since round 3 on a frozen
-    implementation. Witnesses: the streaming funnel keeps the same
-    fold value-checked batch==stream in tests/test_streaming.py, and
-    q_sessionize carries the registered per-user ordered-timeline
-    machinery (sort + linear fold over one user-keyed exchange). The
-    full oracle comparison stays live in tests/test_retired_parity.py
-    against SQL_FUNNEL_STEPS.
+    implementation. Witness: q_sessionize carries the registered
+    per-user ordered-timeline machinery (sort + linear fold over one
+    user-keyed exchange). The full oracle comparison stays live in
+    tests/test_retired_parity.py against SQL_FUNNEL_STEPS.
 
     Scale shape: step-type filter is pushed to the scan, ONE shuffle
     on user_id, per-user sort + linear aggregate() fold — no

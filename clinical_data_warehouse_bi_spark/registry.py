@@ -63,8 +63,7 @@ _CHECK_ORDER = [
     # q_dedup_exact — both witnessed by q_corpus_clean's hash-checked
     # fingerprint + keep-min-doc_id dedup stage.
     # q_stream_dedup_dual retired round 12 — slot went to
-    # q_skew_report; witnesses: streaming.dedup_events' redelivery
-    # test in tests/test_streaming and q_corpus_clean's registered
+    # q_skew_report; witness: q_corpus_clean's registered
     # exact-dedup; full oracle comparison in
     # tests/test_retired_parity.py.)
     "q_multimodal_features",

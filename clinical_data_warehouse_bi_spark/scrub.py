@@ -1,15 +1,15 @@
-"""Corpus-hygiene operators for LLM training-data pipelines: PII
-scrubbing, repetition-based quality filtering, and benchmark
-contamination checks. PII scrubbing is a fused JVM regexp_replace
-chain; the tokenize-heavy operators (repetition metrics, n-gram
-relations) are Arrow-batched mapInPandas stages — measured choice,
-not convenience: Spark's higher-order array functions
-(transform/zip_with/aggregate) never enter whole-stage codegen and
-evaluate their lambdas expression-interpreted per element, which put
-the all-builtin form ~20-50x behind C-backed Python string ops for
-the same n-gram work (and an index-lambda slicing form is
-accidentally O(tokens x text) per row — HOF lambda bodies get no
-common-subexpression elimination). Per-row, no shuffle, and
+"""Corpus-hygiene operators for LLM training-data pipelines:
+repetition-based quality metrics, benchmark contamination checks and
+the differentially private aggregate release. The tokenize-heavy
+operators (repetition metrics, n-gram relations) are Arrow-batched
+mapInPandas stages — measured choice, not convenience: Spark's
+higher-order array functions (transform/zip_with/aggregate) never
+enter whole-stage codegen and evaluate their lambdas
+expression-interpreted per element, which put the all-builtin form
+~20-50x behind C-backed Python string ops for the same n-gram work
+(and an index-lambda slicing form is accidentally O(tokens x text)
+per row — HOF lambda bodies get no common-subexpression
+elimination). Per-row, no shuffle, and
 embarrassingly parallel either way; the cross-engine DuckDB oracles
 (queries/hygiene.py) pin the semantics regardless of which side of
 the Arrow boundary computes them.
@@ -21,12 +21,6 @@ promoted). These are the operators a 100 TB pretraining corpus needs
 between raw scrape and tokenizer.
 
 Scale notes:
-- PII scrubbing is a per-row regexp_replace chain — embarrassingly
-  parallel, no shuffle, pushes nothing, needs nothing. Like every
-  compute-heavy per-row stage, it runs at the SCAN's parallelism:
-  pre-partition few-split local inputs with io.fan_out (no-op on a
-  real many-split scan), and persist the gate's output when several
-  downstream stages consume it.
 - Repetition metrics are one vectorized pass per Arrow batch — no
   shuffle; thresholds filter before anything downstream shuffles
   (the cheap-reject-first rule).
@@ -49,8 +43,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
-from clinical_data_warehouse_bi_spark.io import local_frame
-
 #: tokenizer shared by repetition metrics and contamination — the
 #: Python mirror of split(lower(text), "[^a-z0-9']+") with empties
 #: dropped (ASCII classes: identical across Python re / Java regex /
@@ -60,37 +52,6 @@ _TOKEN_RE = re.compile(r"[^a-z0-9']+")
 
 def _tokens_py(text: str | None) -> list[str]:
     return [w for w in _TOKEN_RE.split((text or "").lower()) if w]
-
-#: PII patterns applied in order (order matters: emails before bare
-#: domains would, e.g., double-redact). Each is (regex, replacement).
-#: Deliberately conservative/high-precision: an over-eager scrubber
-#: destroys training text, and recall tuning belongs to deployment.
-PII_PATTERNS: list[tuple[str, str]] = [
-    # email addresses
-    (r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}", "<EMAIL>"),
-    # US SSN (###-##-####, strict dashes to stay high-precision)
-    (r"\b\d{3}-\d{2}-\d{4}\b", "<SSN>"),
-    # international-ish phone numbers: optional +CC, separators, 7-15
-    # digits total (grouped to avoid eating plain large numbers)
-    (r"(?<![\d.])(?:\+?\d{1,3}[ .-])?(?:\(\d{2,4}\)[ .-]?)?\d{3}[ .-]\d{3,4}(?:[ .-]\d{2,4})?(?![\d.])", "<PHONE>"),
-    # IPv4 addresses
-    (r"\b(?:\d{1,3}\.){3}\d{1,3}\b", "<IP>"),
-    # 13-19 digit card-like numbers; separators only BETWEEN digits
-    # (a trailing [ -]? would swallow the space after the number)
-    (r"\b\d(?:[ -]?\d){12,18}\b", "<CARD>"),
-]
-
-
-def scrub_pii(col: Column | str, patterns: list[tuple[str, str]] | None = None) -> Column:
-    """Chained regexp_replace over ``PII_PATTERNS`` (or a caller
-    list). Pure JVM expression: the chain fuses into one generated
-    projection — a single pass over the string per row regardless of
-    pattern count."""
-    c = F.col(col) if isinstance(col, str) else col
-    for pat, repl in patterns or PII_PATTERNS:
-        c = F.regexp_replace(c, pat, repl)
-    return c
-
 
 def repetition_metrics(
     docs: DataFrame, text_col: str = "text", ngram: int = 3
@@ -145,25 +106,6 @@ def repetition_metrics(
             )
 
     return docs.mapInPandas(op, out_schema)
-
-
-def repetition_filter(
-    docs: DataFrame,
-    text_col: str = "text",
-    max_dup_line_frac: float = 0.30,
-    max_dup_ngram_frac: float = 0.50,
-    max_top_word_frac: float = 0.20,
-) -> DataFrame:
-    """Keep documents under all three repetition thresholds (defaults
-    in the Gopher-rule neighborhood). Filter runs in the same
-    projection pass as the metrics — reject cheap, before anything
-    shuffles."""
-    m = repetition_metrics(docs, text_col)
-    return m.filter(
-        (F.col("dup_line_frac") <= max_dup_line_frac)
-        & (F.col("dup_ngram_frac") <= max_dup_ngram_frac)
-        & (F.col("top_word_frac") <= max_top_word_frac)
-    )
 
 
 def _ngram_hashes(
@@ -256,198 +198,6 @@ def contamination_report(
             "bench_grams",
             "hit_grams",
             "overlap_frac",
-        )
-    )
-
-
-def pseudonymize(
-    df: DataFrame,
-    cols: list[str],
-    secret: str,
-    *,
-    length: int = 16,
-) -> DataFrame:
-    """Keyed pseudonymization of identifier columns — the clinical
-    de-identification step the reference's domain demands beyond
-    redaction (scrub_pii destroys the value; research workflows need
-    a STABLE surrogate that preserves joinability across tables
-    without exposing the identifier): each value v becomes the first
-    ``length`` hex chars of sha2(secret || ':' || v, 256).
-
-    Properties the tests pin: deterministic under one secret (joins
-    on the pseudonym line up exactly like joins on the raw id),
-    different secrets give disjoint token spaces (a leaked table
-    cannot be joined back without the secret), nulls stay null, and
-    the original column is REPLACED (same schema out). Per-row JVM
-    expression — no shuffle, no UDF.
-
-    Secret handling: pass a high-entropy secret from your KMS; the
-    hash is keyed but unsalted per-row (same value -> same token by
-    design), so low-entropy identifier spaces remain enumerable by
-    anyone holding the secret — that is the standard
-    pseudonymization trade (GDPR art.4(5)), not an implementation
-    gap."""
-    if not secret:
-        raise ValueError("pseudonymize requires a non-empty secret")
-    out = df
-    for c in cols:
-        tok = F.substring(
-            F.sha2(
-                F.concat(F.lit(secret), F.lit(":"), F.col(c).cast("string")),
-                256,
-            ),
-            1,
-            length,
-        )
-        out = out.withColumn(c, F.when(F.col(c).isNotNull(), tok))
-    return out
-
-
-def date_shift(
-    df: DataFrame,
-    entity_col: str,
-    date_cols: list[str],
-    secret: str,
-    max_days: int = 30,
-) -> DataFrame:
-    """Per-entity date shifting — the OTHER standard clinical
-    de-identification transform next to pseudonymize (HIPAA
-    safe-harbor practice): every date/timestamp column moves by a
-    STABLE per-entity offset in [-max_days, +max_days], derived from
-    md5(secret || ':' || entity). One entity, one offset — so
-    intervals BETWEEN a patient's events are preserved exactly
-    (length-of-stay, time-to-readmission stay analyzable), while
-    calendar linkage to external records is broken; the same secret
-    reproduces the same shift across every table an entity appears
-    in, so cross-table date arithmetic still lines up.
-
-    Per-row JVM expression (md5 + conv + date/timestamp add): no
-    shuffle, no UDF, schema preserved. Null entities shift by the
-    offset of the literal string 'None' (deterministic, documented)
-    rather than erroring a full-corpus pass."""
-    if not secret:
-        raise ValueError("date_shift requires a non-empty secret")
-    if max_days <= 0:
-        raise ValueError("max_days must be positive")
-    span = 2 * max_days + 1
-    offset = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit(secret),
-                        F.lit(":"),
-                        F.coalesce(F.col(entity_col).cast("string"), F.lit("None")),
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % span
-        - max_days
-    )
-    out = df
-    for c in date_cols:
-        dt = dict(out.dtypes)[c]
-        if dt.startswith("timestamp"):
-            shifted = F.col(c) + F.make_dt_interval(days=offset)
-        else:
-            shifted = F.date_add(F.col(c), offset.cast("int"))
-        out = out.withColumn(c, shifted)
-    return out
-
-
-def k_anonymity_classes(
-    df: DataFrame,
-    quasi_cols: list[str],
-    sensitive_col: str | None = None,
-) -> DataFrame:
-    """Equivalence-class profile for re-identification risk — the
-    quantitative face of the de-identification family (pseudonymize /
-    date_shift transform; THIS measures whether the result is safe to
-    release): group the table by its quasi-identifier columns and
-    report each class's size plus, when a sensitive column is given,
-    its l-diversity (distinct sensitive values inside the class —
-    Sweeney 2002 k-anonymity, Machanavajjhala 2007 l-diversity, both
-    public).
-
-    Returns (quasi_cols..., class_size, l_diversity?) — one row per
-    equivalence class. Scale shape: ONE groupBy on the quasi columns
-    (map-side partial counts; the class relation is orders of
-    magnitude smaller than the input), count-distinct of a single
-    sensitive column inside the same aggregation."""
-    if not quasi_cols:
-        raise ValueError("k_anonymity_classes needs at least one quasi column")
-    aggs = [F.count("*").cast("bigint").alias("class_size")]
-    if sensitive_col is not None:
-        aggs.append(
-            F.countDistinct(F.col(sensitive_col)).cast("bigint").alias("l_diversity")
-        )
-    return df.groupBy(*[F.col(c) for c in quasi_cols]).agg(*aggs)
-
-
-def k_anonymity_summary(
-    df: DataFrame,
-    quasi_cols: list[str],
-    sensitive_col: str | None = None,
-    k: int = 5,
-) -> DataFrame:
-    """One-row release-gate verdict over k_anonymity_classes: the
-    dataset's k-anonymity (min class size), class count, total rows,
-    rows in classes smaller than ``k`` (the re-identifiable
-    population a release at threshold k would expose), and — with a
-    sensitive column — the worst-class l-diversity (1 means some
-    class is attribute-disclosure trivial: every member shares the
-    sensitive value).
-
-    Two aggregations total (classes, then O(#classes) scalars); the
-    driver sees one row. The release rule a pipeline enforces:
-    require k_anonymity >= k AND min_l_diversity >= 2 before a
-    dataset leaves the clinical zone."""
-    classes = k_anonymity_classes(df, quasi_cols, sensitive_col)
-    aggs = [
-        F.min("class_size").cast("bigint").alias("k_anonymity"),
-        F.count("*").cast("bigint").alias("n_classes"),
-        F.sum("class_size").cast("bigint").alias("n_rows"),
-        F.sum(F.when(F.col("class_size") < int(k), F.col("class_size")).otherwise(0))
-        .cast("bigint")
-        .alias("rows_below_k"),
-    ]
-    if sensitive_col is not None:
-        aggs.append(F.min("l_diversity").cast("bigint").alias("min_l_diversity"))
-    return classes.agg(*aggs)
-
-
-def pii_report(
-    docs: DataFrame,
-    text_col: str = "text",
-    patterns: list[tuple[str, str]] | None = None,
-) -> DataFrame:
-    """Corpus-level PII exposure report: ONE scalar-aggregate scan
-    counting, per pattern type, total matches and documents touched —
-    the audit a de-identified-release pipeline runs BEFORE and AFTER
-    scrub_pii (before: what's in there; after: all zeros, asserted).
-    Counting is per-row regexp_count / regexp_like fused into a
-    single projection; the aggregate emits 2 x |patterns| scalars.
-    Returns (pii_type, n_matches, n_docs) via a stack unpivot —
-    rows = patterns, not corpus-sized."""
-    pats = patterns or PII_PATTERNS
-    aggs = []
-    for i, (pat, repl) in enumerate(pats):
-        c = F.regexp_count(F.col(text_col), F.lit(pat))
-        aggs.append(F.sum(c).cast("bigint").alias(f"m_{i}"))
-        aggs.append(F.sum((c > 0).cast("bigint")).cast("bigint").alias(f"d_{i}"))
-    wide = docs.agg(*aggs)
-    labels = [repl.strip("<>").lower() for _, repl in pats]
-    stack = ", ".join(
-        f"'{labels[i]}', m_{i}, d_{i}" for i in range(len(pats))
-    )
-    return wide.select(
-        F.expr(
-            f"stack({len(pats)}, {stack}) AS (pii_type, n_matches, n_docs)"
         )
     )
 
@@ -574,59 +324,3 @@ def dp_release(
         + ([F.col(f"sum_{value_col}")] if value_col is not None else [])
     )
     return kept.select(*out_cols)
-
-
-def suppress_to_k(
-    df: DataFrame,
-    quasi_cols: list[str],
-    k: int,
-) -> tuple[DataFrame, DataFrame]:
-    """Enforce k-anonymity by suppression: drop every row whose
-    quasi-identifier equivalence class has fewer than ``k`` members
-    — the enforcement half of the measurement the k_anonymity family
-    provides (measure -> suppress -> re-measure green is the release
-    loop; Sweeney 2002's suppression baseline, the fallback when
-    generalization hierarchies aren't defined for the columns).
-
-    Returns (released, report): the surviving rows unchanged, and a
-    one-row report (rows_in, rows_released, rows_suppressed,
-    classes_suppressed). The released frame satisfies
-    k_anonymity_summary(released, quasi_cols).k_anonymity >= k by
-    construction (asserted in tests).
-
-    Scale shape: one groupBy on the quasi columns (the class
-    relation is orders of magnitude smaller than the input) and one
-    keyed join back — the class side is the small side and AQE
-    broadcasts it when it fits; no window over the full table (a
-    count-over-partition window would sort-shuffle every row's full
-    width instead of joining slim class keys). The join back is
-    NULL-SAFE (<=>): k_anonymity_classes counts the all-NULL (and
-    partly-NULL) quasi combinations as classes, so enforcement must
-    apply the same >= k rule to them — a plain equality join would
-    silently suppress every NULL-valued class regardless of size,
-    making rows_suppressed disagree with classes_suppressed."""
-    if k < 2:
-        raise ValueError("k must be at least 2 to mean anything")
-    from functools import reduce as _reduce
-
-    classes = k_anonymity_classes(df, quasi_cols)
-    keep = classes.filter(F.col("class_size") >= int(k)).select(
-        *[F.col(c).alias(f"__keep_{c}") for c in quasi_cols]
-    )
-    cond = _reduce(
-        lambda a, b: a & b,
-        [df[c].eqNullSafe(keep[f"__keep_{c}"]) for c in quasi_cols],
-    )
-    released = df.join(keep, cond, "inner").drop(
-        *[f"__keep_{c}" for c in quasi_cols]
-    )
-    n_in = df.count()
-    n_out = released.count()
-    n_classes_dropped = classes.filter(F.col("class_size") < int(k)).count()
-    report = local_frame(
-        df.sparkSession,
-        [(n_in, n_out, n_in - n_out, n_classes_dropped)],
-        "rows_in long, rows_released long, rows_suppressed long, "
-        "classes_suppressed long",
-    )
-    return released, report

@@ -487,8 +487,7 @@ def pq_pack_codes(codes: DataFrame, codes_col: str = "codes") -> DataFrame:
     which also asserts the packed column's on-disk width. Vectorized
     per Arrow batch; codes must fit a byte (PQ's ksub <= 256
     invariant — bytes() raises on violation rather than silently
-    truncating). Write the result with any sink
-    (io.write_training_shards composes)."""
+    truncating). Write the result with any parquet sink."""
 
     @F.pandas_udf("binary")
     def pack(s: pd.Series) -> pd.Series:

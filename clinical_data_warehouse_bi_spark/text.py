@@ -307,8 +307,8 @@ def quota_sample(
     per ``group_col`` value — the domain-capping step a corpus mix
     runs so no single source (one crawl domain, one dump) dominates
     the training distribution (the per-domain caps in C4/RefinedWeb;
-    the COMPLEMENT of io.mix_sources, which reweights between whole
-    sources after each is capped).
+    the COMPLEMENT of io.temperature_mix_keyed, which reweights
+    between whole sources after each is capped).
 
     Selection is deterministic and unbiased WITHIN a group: priority
     is the md5 of the document id (a uniform content-independent
@@ -629,8 +629,8 @@ def remove_boilerplate(
     min_docs: int = 3,
 ) -> DataFrame:
     """Per-source boilerplate LINE removal (the CCNet/web-corpus
-    cleaning step this module lacked between repetition_filter's
-    whole-doc drop and chunk_dedup's cross-doc dedup): a line that
+    cleaning step between a whole-document quality drop and
+    chunk_dedup's cross-doc dedup): a line that
     appears in more than ``min_frac`` of a source's documents is
     navigation/header/footer furniture, not content — strip it from
     every document of that source, preserving the order of the

@@ -8,12 +8,9 @@ where AQE cannot reach (e.g. aggregations)."""
 
 from __future__ import annotations
 
-import pytest
-
 from pyspark.sql import functions as F
 
 
-@pytest.mark.slow
 def test_aqe_splits_skewed_join(spark):
     """One key owning ~90% of a large fact side must be split by
     AQE's OptimizeSkewedJoin in the final adaptive plan."""
@@ -64,7 +61,6 @@ def test_aqe_splits_skewed_join(spark):
         )
 
 
-@pytest.mark.slow
 def test_runtime_bloom_filter_join_engages(spark, tmp_path):
     """Second half of the runtime-filtering story: Spark's runtime
     BLOOM FILTER injection (on by default in this build — verified,

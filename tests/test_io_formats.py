@@ -1,288 +1,11 @@
-"""Source/sink format coverage (SURVEY.md section 2.1 S1/S2
-generalized): round-trip parquet / csv / json through read_source /
-write_sink and through a partitioned layer write."""
+"""io.py helpers: temperature-mixing rates and the keyed one-scan
+mix, dataset manifests, and local_frame's driver-row relations."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
-from clinical_data_warehouse_bi_spark.io import (
-    local_frame,
-    read_source,
-    read_table,
-    write_sink,
-)
-
-
-@pytest.mark.parametrize("fmt", ["parquet", "csv", "json"])
-def test_roundtrip(spark, sf_dir, tmp_path, fmt):
-    src = read_table(spark, sf_dir, "nation")
-    path = str(tmp_path / f"nation_{fmt}")
-    write_sink(src, path, fmt=fmt)
-    back = read_source(spark, path, fmt=fmt, schema=src.schema)
-    assert back.count() == src.count()
-    assert {f.name for f in back.schema.fields} == {f.name for f in src.schema.fields}
-    # value-level spot check, order-insensitive
-    a = {tuple(r) for r in src.select("n_nationkey", "n_name").collect()}
-    b = {tuple(r) for r in back.select("n_nationkey", "n_name").collect()}
-    assert a == b
-
-
-def test_partitioned_sink_prunes(spark, sf_dir, tmp_path):
-    src = read_table(spark, sf_dir, "nation")
-    path = str(tmp_path / "nation_part")
-    write_sink(src, path, partition_by=["n_regionkey"])
-    back = read_source(spark, path)
-    one = back.filter(F.col("n_regionkey") == 0)
-    # partition pruning: the filtered scan must read only the matching
-    # directory (PartitionFilters in the physical plan)
-    plan = one._jdf.queryExecution().executedPlan().toString()
-    assert "n_regionkey" in plan
-    assert one.count() == src.filter(F.col("n_regionkey") == 0).count()
-
-
-def test_write_training_shards(spark, sf_dir, tmp_path):
-    """Sharded corpus sink: deterministic shard count, bounded file
-    sizes, lossless round-trip."""
-    import os
-
-    from clinical_data_warehouse_bi_spark.io import read_table, write_training_shards
-
-    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
-    out = str(tmp_path / "shards")
-    write_training_shards(docs, out, num_shards=4, shard_key="doc_id",
-                          max_records_per_file=100)
-    files = [f for f in os.listdir(out) if f.endswith(".parquet")]
-    # 4 shards, each further split so no file exceeds 100 rows
-    assert len(files) >= 4
-    back = spark.read.parquet(out)
-    assert back.count() == docs.count()
-    assert back.select("doc_id").distinct().count() == docs.count()
-    for f in files:
-        n = spark.read.parquet(os.path.join(out, f)).count()
-        assert n <= 100
-    # determinism: same key -> same shard across runs. Compare the
-    # PER-SHARD KEY SETS, not row-count multisets — counts can match
-    # while keys landed in different shards. Files of one shard share
-    # a part number prefix (part-SSSSS-*); group by it.
-    def shard_key_sets(path: str) -> list[frozenset]:
-        by_shard: dict[str, set] = {}
-        for f in os.listdir(path):
-            if not f.endswith(".parquet"):
-                continue
-            shard = f.split("-")[1]
-            ids = {
-                r["doc_id"]
-                for r in spark.read.parquet(os.path.join(path, f)).collect()
-            }
-            by_shard.setdefault(shard, set()).update(ids)
-        return sorted(
-            (frozenset(s) for s in by_shard.values()), key=lambda s: min(s)
-        )
-
-    out2 = str(tmp_path / "shards2")
-    write_training_shards(docs, out2, num_shards=4, shard_key="doc_id",
-                          max_records_per_file=100)
-    assert shard_key_sets(out) == shard_key_sets(out2)
-
-
-def test_global_shuffle_deterministic_permutation(spark, sf_dir):
-    from clinical_data_warehouse_bi_spark.io import global_shuffle, read_table
-
-    docs = read_table(spark, sf_dir, "documents").select("doc_id")
-    a = [r["doc_id"] for r in global_shuffle(docs, "doc_id", seed=1).collect()]
-    b = [r["doc_id"] for r in global_shuffle(docs, "doc_id", seed=1).collect()]
-    c = [r["doc_id"] for r in global_shuffle(docs, "doc_id", seed=2).collect()]
-    assert a == b  # same seed replays the same global order
-    assert a != c  # different seed is a different permutation
-    assert sorted(a) == sorted(c)  # ... of the same rows
-    assert a != sorted(a)  # and it actually shuffled
-
-
-def test_global_shuffle_no_single_partition(spark, sf_dir):
-    """The permutation must come from a RANGE exchange + local sorts,
-    never a global single-partition sort."""
-    from clinical_data_warehouse_bi_spark.io import global_shuffle, read_table
-
-    docs = read_table(spark, sf_dir, "documents").select("doc_id")
-    df = global_shuffle(docs, "doc_id", seed=1, partitions=8)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "rangepartitioning" in plan.lower()
-    assert df.rdd.getNumPartitions() > 1
-
-
-def test_mix_sources_rates_and_determinism(spark, sf_dir):
-    from clinical_data_warehouse_bi_spark.io import mix_sources, read_table
-
-    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
-    half = docs.filter("doc_id % 2 = 0")
-    rest = docs.filter("doc_id % 2 = 1")
-    mixed = mix_sources([(half, 1.0), (rest, 0.3)], "doc_id", seed=5)
-    n_half, n_rest = half.count(), rest.count()
-    got = mixed.groupBy("__source").count().collect()
-    counts = {r["__source"]: r["count"] for r in got}
-    assert counts[0] == n_half  # rate 1.0 keeps everything
-    assert 0.15 * n_rest < counts[1] < 0.45 * n_rest  # ~30% kept
-    again = mix_sources([(half, 1.0), (rest, 0.3)], "doc_id", seed=5)
-    assert mixed.exceptAll(again).count() == 0  # replay-stable
-
-    import pytest
-
-    with pytest.raises(ValueError, match="outside"):
-        mix_sources([(half, 1.5)], "doc_id")
-
-
-def test_write_sized_targets_file_size(spark, tmp_path):
-    """Files land near the byte target: a small target splits the
-    write into many bounded files, a large one collapses it; content
-    identical either way."""
-    import glob
-    import os
-
-    from clinical_data_warehouse_bi_spark.io import write_sized
-
-    df = spark.range(0, 60_000).select(
-        F.col("id"),
-        F.sha2(F.col("id").cast("string"), 256).alias("pad1"),
-        F.sha2((F.col("id") + 1).cast("string"), 256).alias("pad2"),
-    )
-    small = str(tmp_path / "small")
-    res = write_sized(df, small, target_mb=1)
-    files = glob.glob(os.path.join(small, "*.parquet"))
-    assert res["n_files"] == len(files) >= 3
-    # every file within ~2x of target (sample-ratio approximation)
-    for f in files:
-        assert os.path.getsize(f) <= 2 * 1024 * 1024
-    assert spark.read.parquet(small).count() == 60_000
-
-    big = str(tmp_path / "big")
-    res2 = write_sized(df, big, target_mb=512)
-    assert res2["n_files"] < res["n_files"]
-    assert spark.read.parquet(big).count() == 60_000
-    # scratch dir cleaned up
-    assert not glob.glob(str(tmp_path / ".write-sized-sample*"))
-
-
-def test_read_evolved_surfaces_late_columns(spark, tmp_path):
-    """Two appended batches with an added column: the default read
-    binds to one file's schema and can silently drop the new column;
-    read_evolved merges footers — every column visible, early rows
-    NULL-filled."""
-    from clinical_data_warehouse_bi_spark.io import read_evolved
-
-    path = str(tmp_path / "evolving")
-    spark.createDataFrame([(1, "a")], "id long, v string").write.mode(
-        "append"
-    ).parquet(path)
-    spark.createDataFrame(
-        [(2, "b", 9.5)], "id long, v string, score double"
-    ).write.mode("append").parquet(path)
-
-    merged = read_evolved(spark, path)
-    assert set(merged.columns) == {"id", "v", "score"}
-    rows = {r["id"]: r for r in merged.collect()}
-    assert rows[1]["score"] is None and rows[2]["score"] == 9.5
-    assert rows[1]["v"] == "a" and rows[2]["v"] == "b"
-
-
-def test_write_sized_under_partition_by(spark, tmp_path):
-    """partitionBy path: files split inside each partition dir, rows
-    preserved, no merge-count job attempted."""
-    import glob
-    import os
-
-    from clinical_data_warehouse_bi_spark.io import write_sized
-
-    df = spark.range(0, 20_000).select(
-        F.col("id"),
-        (F.col("id") % 3).alias("grp"),
-        F.sha2(F.col("id").cast("string"), 256).alias("pad"),
-    )
-    out = str(tmp_path / "parts")
-    res = write_sized(df, out, target_mb=1, partition_by=["grp"])
-    dirs = glob.glob(os.path.join(out, "grp=*"))
-    assert len(dirs) == 3
-    back = spark.read.parquet(out)
-    assert back.count() == 20_000
-    assert back.select("grp").distinct().count() == 3
-    assert res["n_files"] >= 3
-
-
-def test_read_raw_files_modes(spark, tmp_path):
-    """io.read_raw_files: the raw-file first mile. One row per file
-    (binary/text), one row per line (lines); glob + recursion prune
-    at listing time."""
-    from clinical_data_warehouse_bi_spark.io import read_raw_files
-
-    root = tmp_path / "corpus"
-    (root / "sub").mkdir(parents=True)
-    (root / "a.txt").write_text("alpha one\nalpha two")
-    (root / "sub" / "b.txt").write_text("bravo")
-    (root / "c.bin").write_bytes(b"\x00\x01\x02\x03")
-
-    txt = read_raw_files(spark, str(root), mode="text", glob="*.txt")
-    rows = {r["path"].rsplit("/", 1)[-1]: r["text"] for r in txt.collect()}
-    assert rows == {"a.txt": "alpha one\nalpha two", "b.txt": "bravo"}
-
-    lines = read_raw_files(spark, str(root), mode="lines", glob="*.txt")
-    assert sorted(r["text"] for r in lines.collect()) == [
-        "alpha one", "alpha two", "bravo",
-    ]
-
-    flat = read_raw_files(spark, str(root), mode="text", glob="*.txt",
-                          recursive=False)
-    assert {r["path"].rsplit("/", 1)[-1] for r in flat.collect()} == {"a.txt"}
-
-    binary = read_raw_files(spark, str(root), mode="binary", glob="*.bin")
-    b = binary.collect()
-    assert len(b) == 1 and bytes(b[0]["content"]) == b"\x00\x01\x02\x03"
-    assert b[0]["length"] == 4
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        read_raw_files(spark, str(root), mode="warc")
-
-
-def test_read_raw_files_binary_length_pushdown(spark, tmp_path):
-    """max_bytes compiles to a length predicate the binaryFile source
-    pushes to the file listing — oversized blobs are skipped without
-    reading a byte (the 100 TB guard for poison files)."""
-    from clinical_data_warehouse_bi_spark.io import read_raw_files
-
-    root = tmp_path / "blobs"
-    root.mkdir()
-    (root / "small.bin").write_bytes(b"x" * 10)
-    (root / "big.bin").write_bytes(b"y" * 1000)
-    df = read_raw_files(spark, str(root), mode="binary", max_bytes=100)
-    assert [r["length"] for r in df.collect()] == [10]
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters" in plan and "length" in plan.split("PushedFilters")[1][:200], plan[:1500]
-
-
-def test_raw_to_documents_adapter(spark, tmp_path):
-    from clinical_data_warehouse_bi_spark.io import raw_to_documents, read_raw_files
-
-    root = tmp_path / "corpus"
-    (root / "wiki").mkdir(parents=True)
-    (root / "web").mkdir()
-    (root / "wiki" / "a.txt").write_text("alpha body")
-    (root / "web" / "b.txt").write_text("bravo body text")
-    docs = raw_to_documents(read_raw_files(spark, str(root), mode="text", glob="*.txt"))
-    rows = {r["source"]: r for r in docs.collect()}
-    assert set(rows) == {"wiki", "web"}
-    assert rows["wiki"]["text"] == "alpha body"
-    assert rows["wiki"]["n_chars"] == 10
-    assert rows["web"]["n_chars"] == 15
-    assert len({r["doc_id"] for r in rows.values()}) == 2
-    # identity is stable across re-reads
-    again = raw_to_documents(
-        read_raw_files(spark, str(root), mode="text", glob="*.txt")
-    )
-    assert {r["doc_id"] for r in again.collect()} == {
-        r["doc_id"] for r in rows.values()
-    }
+from clinical_data_warehouse_bi_spark.io import local_frame
 
 
 def test_temperature_mix_rates_exact():
@@ -315,37 +38,100 @@ def test_temperature_mix_rates_rejections():
         temperature_mix_rates([], 0.5, 5)
 
 
-def test_temperature_mix_end_to_end(spark, sf_dir):
-    from clinical_data_warehouse_bi_spark.io import read_table, temperature_mix
+def _two_sources(spark, sf_dir):
+    """documents split by doc_id into a ~90% 'big' and a ~10% 'small'
+    source, as one table with a ``source`` key."""
+    from clinical_data_warehouse_bi_spark.io import read_table
 
     docs = read_table(spark, sf_dir, "documents")
-    big = docs.filter(F.col("doc_id") % 10 != 0)    # ~90%
-    small = docs.filter(F.col("doc_id") % 10 == 0)  # ~10%
-    n_big, n_small = big.count(), small.count()
-    budget = (n_big + n_small) * 0.3
-    mixed = temperature_mix([big, small], "doc_id", alpha=0.5, budget=budget)
-    by_src = {
-        r["__source"]: r["n"]
-        for r in mixed.groupBy("__source").agg(F.count("*").alias("n")).collect()
+    return docs.withColumn(
+        "source", F.when(F.col("doc_id") % 10 == 0, "small").otherwise("big")
+    )
+
+
+def _counts_by_source(df):
+    return {
+        r["source"]: r["n"]
+        for r in df.groupBy("source").agg(F.count("*").alias("n")).collect()
     }
+
+
+def test_mix_sources_rates_and_determinism(spark, sf_dir):
+    """Water-filled rates applied: under a uniform temperature the
+    small source's share exceeds its size, so it caps at rate 1 and
+    keeps every row, while the big source gets the rest of the
+    budget (~30%); the sample replays identically."""
+    import pytest
+
+    from clinical_data_warehouse_bi_spark.io import temperature_mix_keyed
+
+    docs = _two_sources(spark, sf_dir).select("doc_id", "text", "source")
+    sizes = _counts_by_source(docs)
+    n_small, n_big = sizes["small"], sizes["big"]
+    budget = n_small + 0.3 * n_big
+    mixed = temperature_mix_keyed(docs, "source", "doc_id", 0.0, budget)
+    counts = _counts_by_source(mixed)
+    assert counts["small"] == n_small  # rate 1.0 keeps everything
+    assert 0.15 * n_big < counts["big"] < 0.45 * n_big  # ~30% kept
+    again = temperature_mix_keyed(docs, "source", "doc_id", 0.0, budget)
+    assert mixed.exceptAll(again).count() == 0  # replay-stable
+    assert again.exceptAll(mixed).count() == 0
+
+    with pytest.raises(ValueError, match="alpha"):
+        temperature_mix_keyed(docs, "source", "doc_id", -0.5, budget)
+
+
+def test_temperature_mix_end_to_end(spark, sf_dir):
+    """alpha=0.5: kept counts per source track budget * sqrt(n_i) /
+    sum(sqrt(n_j)), computed here from the source sizes alone, and
+    the mixture is deterministic on replay."""
     import math
 
-    w = [math.sqrt(n_big), math.sqrt(n_small)]
-    want = [budget * wi / sum(w) for wi in w]
-    # hash-threshold sampling: binomial-ish tolerance around target
-    for i in (0, 1):
-        assert abs(by_src[i] - want[i]) < 4 * math.sqrt(want[i]) + 5, (
-            i, by_src[i], want[i],
-        )
+    from clinical_data_warehouse_bi_spark.io import temperature_mix_keyed
+
+    docs = _two_sources(spark, sf_dir)
+    sizes = _counts_by_source(docs)
+    budget = sum(sizes.values()) * 0.3
+    mixed = temperature_mix_keyed(docs, "source", "doc_id", 0.5, budget)
+    got = _counts_by_source(mixed)
+    w = {k: math.sqrt(n) for k, n in sizes.items()}
+    for k in ("big", "small"):
+        want = budget * w[k] / sum(w.values())
+        # hash-threshold sampling: binomial-ish tolerance around target
+        assert abs(got[k] - want) < 4 * math.sqrt(want) + 5, (k, got[k], want)
     # deterministic replay
-    again = temperature_mix([big, small], "doc_id", alpha=0.5, budget=budget)
+    again = temperature_mix_keyed(docs, "source", "doc_id", 0.5, budget)
     assert sorted(r["doc_id"] for r in mixed.select("doc_id").collect()) == \
         sorted(r["doc_id"] for r in again.select("doc_id").collect())
 
 
+def test_temperature_mix_token_budget(spark, sf_dir):
+    """``weight_col`` measures sources and budget in tokens: at
+    alpha=1 the kept token mass lands near the budget, and both
+    sources contribute."""
+    from clinical_data_warehouse_bi_spark.io import temperature_mix_keyed
+
+    docs = _two_sources(spark, sf_dir).withColumn(
+        "n_tok", F.size(F.split("text", "\\s+"))
+    )
+    tok_total = docs.agg(F.sum("n_tok")).first()[0]
+    budget = tok_total * 0.3
+    mixed = temperature_mix_keyed(
+        docs, "source", "doc_id", 1.0, budget, weight_col="n_tok"
+    )
+    kept_tok = mixed.agg(F.sum("n_tok")).first()[0]
+    # alpha=1, token-measured: kept token mass ~ budget. The draw is
+    # a FIXED function of the id hash; at 500 docs (mean 56 tokens,
+    # sd 26) one relative sigma is ~7.5%, so bound at ~3-4 sigma —
+    # the estimator concentrates as 1/sqrt(docs) at corpus scale.
+    assert abs(kept_tok - budget) / budget < 0.25
+    assert mixed.filter("source = 'big'").count() > 0
+    assert mixed.filter("source = 'small'").count() > 0
+
+
 def test_temperature_mix_keyed_matches_rates(spark, sf_dir):
-    """One-scan keyed form: per-source kept counts track the same
-    water-filled rates the list form derives, the sample is
+    """One-scan keyed form: per-source kept counts track the
+    water-filled rates temperature_mix_rates derives, the sample is
     deterministic on replay, and the plan pays ONE aggregation —
     not one full scan per source."""
     import math
@@ -383,8 +169,7 @@ def test_temperature_mix_keyed_matches_rates(spark, sf_dir):
 def test_temperature_mix_keyed_null_key_and_stability(spark):
     """NULL keys form their own source (chr(0) sentinel), and a
     source's sample is key-salted: adding a NEW source never changes
-    which rows of an existing source are kept (the index-salted list
-    form reshuffles every later source)."""
+    which rows of an existing source are kept."""
     from clinical_data_warehouse_bi_spark.io import temperature_mix_keyed
 
     base = [(i, "a") for i in range(200)] + [(1000 + i, None) for i in range(200)]
@@ -446,57 +231,19 @@ def test_dataset_manifest_roundtrip_and_tamper(spark, sf_dir, tmp_path):
     assert any(m["problem"] == "missing" for m in v["mismatches"])
 
 
-def test_temperature_mix_token_budget(spark, sf_dir):
-    from clinical_data_warehouse_bi_spark.io import read_table, temperature_mix
-
-    docs = read_table(spark, sf_dir, "documents").withColumn(
-        "n_tok", F.size(F.split("text", "\\s+"))
-    )
-    big = docs.filter(F.col("doc_id") % 10 != 0)
-    small = docs.filter(F.col("doc_id") % 10 == 0)
-    tok_total = docs.agg(F.sum("n_tok")).first()[0]
-    budget = tok_total * 0.3
-    mixed = temperature_mix(
-        [big, small], "doc_id", alpha=1.0, budget=budget, weight_col="n_tok"
-    )
-    kept_tok = mixed.agg(F.sum("n_tok")).first()[0]
-    # alpha=1, token-measured: kept token mass ~ budget. The draw is
-    # a FIXED function of the id hash; at 500 docs (mean 56 tokens,
-    # sd 26) one relative sigma is ~7.5%, so bound at ~3-4 sigma —
-    # the estimator concentrates as 1/sqrt(docs) at corpus scale.
-    assert abs(kept_tok - budget) / budget < 0.25
-    assert mixed.filter("__source = 0").count() > 0
-    assert mixed.filter("__source = 1").count() > 0
-
-
-def test_mix_keeps_sources_with_tiny_rates(spark):
+def test_mix_keeps_sources_with_tiny_rates():
     """Round-12 review finding: int(rate * 1e6) TRUNCATED a
     water-filled rate below 1e-6 to threshold 0 and silently dropped
     the whole source. The 1e12 hash space + positive-rate floor must
     keep every allocated source represented in the threshold map
-    (and mix_sources must not drop a tiny-rate frame outright)."""
-    from clinical_data_warehouse_bi_spark.io import (
-        _mix_keep_threshold,
-        mix_sources,
-    )
+    temperature_mix_keyed builds."""
+    from clinical_data_warehouse_bi_spark.io import _mix_keep_threshold
 
     # threshold math: positive rates never round to zero
     assert _mix_keep_threshold(0.0) == 0
     assert _mix_keep_threshold(1e-7) == 100_000
     assert _mix_keep_threshold(1e-13) == 1  # the floor
     assert _mix_keep_threshold(1.0) == 1_000_000_000_000
-    # end-to-end: a 1e-7 rate keeps SOME probability mass — with only
-    # 200 ids the expected sample is ~0 rows, so assert the threshold
-    # path executes and the replay is deterministic rather than a
-    # row-count (that would be flaky); the rate-0 source must drop.
-    df = spark.range(200).withColumnRenamed("id", "doc_id")
-    out = mix_sources([(df, 1e-7), (df, 0.0), (df, 1.0)], "doc_id", seed=3)
-    rows = {(r["doc_id"], r["__source"]) for r in out.collect()}
-    assert {s for _, s in rows} <= {0, 2}
-    assert sum(1 for _, s in rows if s == 2) == 200
-    again = mix_sources([(df, 1e-7), (df, 0.0), (df, 1.0)], "doc_id", seed=3)
-    assert {(r["doc_id"], r["__source"]) for r in again.collect()} == rows
-
 
 
 def test_local_frame_matches_create_dataframe(spark, monkeypatch):

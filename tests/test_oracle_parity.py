@@ -16,7 +16,6 @@ def _names():
     return sorted(all_queries())
 
 
-@pytest.mark.slow
 @pytest.mark.parametrize("name", _names())
 def test_query_matches_oracle(name, spark, duck, sf_dir):
     fn = all_queries()[name]

@@ -9,7 +9,6 @@ would check by eye before shipping a plan to a 1000-executor cluster.
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from clinical_data_warehouse_bi_spark.io import fan_out, read_table
@@ -203,7 +202,6 @@ def test_range_join_auto_bin_matches_explicit(spark, sf_dir):
     assert explicit.exceptAll(auto).count() == 0
 
 
-@pytest.mark.slow
 def test_star_fact_scale_keys_avoid_single_partition(spark):
     """W2 at scale: the default (scale) surrogate-key path must not
     funnel the fact or dim_provider through a single-partition window;

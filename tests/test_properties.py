@@ -32,7 +32,6 @@ opt_keys = st.one_of(st.none(), keys)
     fact=st.lists(opt_keys, min_size=0, max_size=12),
     dim=st.lists(keys, min_size=0, max_size=6),
 )
-@pytest.mark.slow
 def test_orphan_cleanup_keeps_nulls_and_matches(spark, fact, dim):
     """DWH.sql:150-177 semantics: keep fact rows whose FK is NULL or
     present in dim; drop dangling non-null FKs."""
@@ -51,7 +50,6 @@ def test_orphan_cleanup_keeps_nulls_and_matches(spark, fact, dim):
         st.tuples(keys, st.integers(0, 20), st.integers(0, 20)), min_size=0, max_size=15
     )
 )
-@pytest.mark.slow
 def test_interval_pick_first_is_deterministic_min(spark, rows):
     """J5/J6: for each left row, the surviving match is exactly the
     ORDER-minimal right row within the interval — never an arbitrary
@@ -89,7 +87,6 @@ def test_interval_pick_first_is_deterministic_min(spark, rows):
     assert out.count() == len(rows)
 
 
-@pytest.mark.slow
 @settings(**SETTINGS)
 @given(s=st.text(alphabet=" aAbB\t.", max_size=12))
 def test_normalized_key_idempotent(spark, s):
@@ -140,7 +137,6 @@ def test_range_join_binned_equals_brute_force(spark, points, intervals, width):
     rows=st.lists(st.integers(min_value=-100, max_value=100), min_size=0, max_size=40),
     nparts=st.integers(min_value=1, max_value=7),
 )
-@pytest.mark.slow
 def test_zip_index_key_dense_unique(spark, rows, nparts):
     """zip_index_key must assign exactly the keys 1..N (dense, unique)
     for any input size and partitioning, and preserve the row
@@ -161,7 +157,6 @@ def test_zip_index_key_dense_unique(spark, rows, nparts):
         st.integers(min_value=0, max_value=(1 << 32) - 1), min_size=2, max_size=24
     ),
 )
-@pytest.mark.slow
 def test_simhash_band_join_exact_for_k3(spark, fps):
     """4x8-bit banding over a 32-bit fingerprint is EXACT for Hamming
     radius <= 3 (pigeonhole): the banded candidate join must find
@@ -326,7 +321,6 @@ def test_range_join_streaming_requires_explicit_bin_width(spark, tmp_path):
     ),
     isolated=st.lists(st.integers(0, 15), min_size=0, max_size=5),
 )
-@pytest.mark.slow
 def test_connected_components_match_union_find(spark, edges, isolated):
     """Min-label propagation must agree with a brute-force union-find
     for any graph, including self-loops, duplicate edges, and
@@ -369,7 +363,6 @@ def test_connected_components_match_union_find(spark, edges, isolated):
     ),
     isolated=st.lists(st.integers(0, 15), min_size=0, max_size=5),
 )
-@pytest.mark.slow
 def test_star_components_match_union_find(spark, edges, isolated):
     """The large-star/small-star fallback must agree with brute-force
     union-find on arbitrary graphs — same contract as label
@@ -405,7 +398,6 @@ def test_star_components_match_union_find(spark, edges, isolated):
     assert got == want
 
 
-@pytest.mark.slow
 def test_deep_chain_converges_via_star_fallback(spark):
     """A path graph far deeper than the propagation round budget must
     still return correct components: propagation PLATEAU-bails to
@@ -899,7 +891,6 @@ def test_resample_fill_matches_duckdb(spark, sf_dir, duck):
         max_size=25,
     ),
 )
-@pytest.mark.slow
 def test_resample_fill_matches_python_model(spark, obs):
     """resample_fill vs a direct Python model on random sparse
     series: dense per-key grid over the key's own span, bucket sums,
@@ -959,7 +950,6 @@ def test_resample_fill_matches_python_model(spark, obs):
     ),
     n=st.integers(1, 5),
 )
-@pytest.mark.slow
 def test_quota_sample_idempotent_and_capped(spark, docs, n):
     """quota_sample is deterministic, idempotent (re-capping the
     capped output changes nothing), and never exceeds n per group or
@@ -1088,7 +1078,6 @@ def test_weighted_sample_matches_duckdb_twin(spark, sf_dir, duck):
     assert got == want
 
 
-@pytest.mark.slow
 def test_weighted_sample_favors_heavy_weights(spark):
     """Inclusion frequency tracks weight: across many disjoint seeds,
     a weight-9 row appears far more often than a weight-1 row."""
@@ -2315,7 +2304,6 @@ def test_snapshot_diff_plan_is_slim(spark, sf_dir):
                 assert payload not in line, line
 
 
-@pytest.mark.slow
 def test_epoch_shuffle_properties(spark):
     """epoch_shuffle: positions are a dense 1..N bijection; the
     permutation is layout-independent (same output from a 1-partition

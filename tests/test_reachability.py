@@ -14,8 +14,7 @@ does not keep its target alive.
 
 A def reached only from its own tests fails this test. Delete it
 with its tests, or add it to TEST_REFERENCES if a test of a surviving
-function uses it as its reference implementation. TESTED_ONLY lists
-the tested-only defs still waiting for their cut. A module-level
+function uses it as its reference implementation. A module-level
 import that its library module never names fails too: a cut must
 take the imports it orphans. A defaulted parameter that no call in
 the repo passes fails too: an option nobody sets is a fixed value,
@@ -41,41 +40,18 @@ TEST_REFERENCES = {
     ("registry.py", "benched_queries"):
         "test_registry, test_retired_parity: this round's donors for "
         "their pytest oracle check",
-    ("streaming.py", "read_event_stream"):
-        "test_streaming: file-source reader that drives dedup_events",
-    ("streaming.py", "run_to_memory"):
-        "test_streaming: memory-sink driver for dedup_events",
     ("similarity.py", "axis_matrix"):
         "test_properties: the axis-aligned recall baseline that "
         "rademacher_matrix sign-LSH must beat",
 }
 
 
-#: module -> defs reached only from their own default-tier tests: a
-#: temporary list, cut in batches together with those tests (deleting
-#: them all at once would retire ~118 default-tier tests in one
-#: change). It only shrinks: no change adds an entry, and an entry
-#: that is deleted or becomes reached must leave it.
-TESTED_ONLY = {
-    "bpe.py": ("train_bpe", "word_histogram"),
-    "io.py": (
-        "global_shuffle", "mix_sources", "raw_to_documents", "read_evolved",
-        "read_raw_files", "read_source", "temperature_mix", "write_sink",
-        "write_sized", "write_training_shards",
-    ),
-    "scrub.py": (
-        "PII_PATTERNS", "date_shift", "k_anonymity_classes",
-        "k_anonymity_summary", "pii_report", "pseudonymize",
-        "repetition_filter", "scrub_pii", "suppress_to_k",
-    ),
-}
-
 #: defaulted library parameters that only tests pass: reference
 #: paths a test compares the contract path against, volume-gate and
 #: geometry seams a test forces to reach the other side of a gate at
-#: fixture scale, and the corpus release's policy knobs. Like
-#: TESTED_ONLY it only shrinks: an option no production call passes
-#: selects a path the contract never runs.
+#: fixture scale, and the corpus release's policy knobs. It only
+#: shrinks: an option no production call passes selects a path the
+#: contract never runs.
 TEST_SEAMS = (
     # reference paths
     "corpus.py::build_corpus_release(materialize)",
@@ -107,15 +83,8 @@ TEST_SEAMS = (
     "scrub.py::dp_release(value_low)",
     "scrub.py::repetition_metrics(ngram)",
     "session.py::get_spark(shuffle_partitions)",
-    "streaming.py::dedup_events(watermark)",
     "text.py::weighted_sample(seed)",
 )
-
-TESTED_ONLY_DEFS = {
-    f"{module}::{name}" for module, names in TESTED_ONLY.items()
-    for name in names
-}
-
 
 def _py_files(root: str) -> list[str]:
     out = []
@@ -198,19 +167,11 @@ def unreached_defs() -> list[str]:
 
 
 def test_every_library_def_is_reached_from_the_contract():
-    dead = [d for d in unreached_defs() if d not in TESTED_ONLY_DEFS]
+    dead = unreached_defs()
     assert not dead, (
         f"{len(dead)} top-level library defs are unreachable from the "
         "entry-point roots (delete them with their tests, or list a "
         "test reference in TEST_REFERENCES):\n  " + "\n  ".join(dead)
-    )
-
-
-def test_tested_only_entries_are_still_unreached():
-    stale = sorted(TESTED_ONLY_DEFS - set(unreached_defs()))
-    assert not stale, (
-        "TESTED_ONLY entries that are deleted or now reached; take them "
-        "off the list:\n  " + "\n  ".join(stale)
     )
 
 
@@ -247,8 +208,8 @@ def unset_options(callers: list[str]) -> list[str]:
     ``callers`` or the library passes, by keyword or by position.
     Calls match by callee name alone, like the reachability pass.
     Skipped: ``*_col``/``*_cols`` parameters (column-name plumbing),
-    TESTED_ONLY defs, defs never called by name, and defs some call
-    reaches through ``*args``/``**kwargs``."""
+    defs never called by name, and defs some call reaches through
+    ``*args``/``**kwargs``."""
     defs = []
     passed: dict[str, set] = defaultdict(set)  # keywords and arg counts
     splatted: set[str] = set()
@@ -276,8 +237,7 @@ def unset_options(callers: list[str]) -> list[str]:
             passed[name] |= {k.arg for k in n.keywords} | {len(n.args)}
     out = []
     for rel, d in defs:
-        if (d.name not in passed or d.name in splatted
-                or d.name in TESTED_ONLY.get(rel, ())):
+        if d.name not in passed or d.name in splatted:
             continue
         n_pos = max(i for i in passed[d.name] if isinstance(i, int))
         args = d.args.posonlyargs + d.args.args

@@ -34,8 +34,8 @@ ROUND2_SKIPPED = [
     # q_frame_sample followed in round 9 (witness:
     # q_multimodal_features + the sampling family; full oracle in
     # test_retired_parity.py); and q_stream_dedup_dual in round 12
-    # (witnesses: the streaming redelivery test + q_corpus_clean;
-    # full oracle in test_retired_parity.py)
+    # (witness: q_corpus_clean; full oracle in
+    # test_retired_parity.py)
     "q_multimodal_features",
     "q_sessionize",
 ]

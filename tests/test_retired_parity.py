@@ -260,7 +260,6 @@ from clinical_data_warehouse_bi_spark.registry import (  # noqa: E402
 _BENCHED = benched_queries()
 
 
-@pytest.mark.slow
 @pytest.mark.parametrize("name", sorted(_BENCHED))
 def test_benched_donor_matches_oracle(name, spark, duck, sf_dir):
     fn, oracle = _BENCHED[name]
@@ -274,7 +273,6 @@ def test_benched_donor_matches_oracle(name, spark, duck, sf_dir):
     assert not mismatches, f"first mismatches: {mismatches}"
 
 
-@pytest.mark.slow
 @pytest.mark.parametrize("name", sorted(RETIRED))
 def test_retired_query_matches_oracle(name, spark, duck, sf_dir):
     fn, oracle = RETIRED[name]

@@ -1,5 +1,5 @@
-"""Corpus-hygiene operators (scrub.py): PII redaction, repetition
-quality signals, and benchmark contamination. Expected values are
+"""Corpus-hygiene operators (scrub.py): repetition quality signals,
+benchmark contamination and the DP release. Expected values are
 computed independently in Python over the same rows (and over the
 driver's documents table), so the JVM expression trees are checked
 against a second implementation, not against themselves."""
@@ -13,28 +13,6 @@ from pyspark.sql import functions as F
 
 from clinical_data_warehouse_bi_spark import scrub
 from clinical_data_warehouse_bi_spark.io import read_table
-
-
-def _scrub_one(spark, text: str) -> str:
-    df = spark.createDataFrame([(text,)], "text string")
-    return df.select(scrub.scrub_pii("text").alias("t")).first()["t"]
-
-
-def test_scrub_pii_redacts_each_class(spark):
-    cases = {
-        "mail bob.smith+x@corp.example.org now": "mail <EMAIL> now",
-        "ssn 123-45-6789 on file": "ssn <SSN> on file",
-        "call +1 555 867-5309 today": "call <PHONE> today",
-        "host 192.168.0.12 down": "host <IP> down",
-        "card 4111 1111 1111 1111 charged": "card <CARD> charged",
-    }
-    for raw, want in cases.items():
-        assert _scrub_one(spark, raw) == want
-
-
-def test_scrub_pii_leaves_clean_text_alone(spark):
-    clean = "pi is 3.14159 and the year is 2024; see section 7-2"
-    assert _scrub_one(spark, clean) == clean
 
 
 def test_repetition_metrics_exact_values(spark):
@@ -94,12 +72,30 @@ def test_repetition_metrics_match_python_on_documents(spark, sf_dir):
 
 
 def test_repetition_filter_drops_degenerate(spark):
+    """The production repetition gate (q_repetition_filter's ``keep``):
+    repetition_metrics under the queries/hygiene.py thresholds keeps
+    ordinary prose and drops a one-word spam document."""
+    from clinical_data_warehouse_bi_spark.queries.hygiene import (
+        MAX_DUP_LINE_FRAC,
+        MAX_DUP_NGRAM_FRAC,
+        MAX_TOP_WORD_FRAC,
+    )
+
     rows = [
         (1, "a normal sentence with distinct words in it"),
         (2, "spam spam spam spam spam spam"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    kept = [r["doc_id"] for r in scrub.repetition_filter(df).collect()]
+    kept = [
+        r["doc_id"]
+        for r in scrub.repetition_metrics(df)
+        .filter(
+            (F.col("dup_line_frac") <= MAX_DUP_LINE_FRAC)
+            & (F.col("dup_ngram_frac") <= MAX_DUP_NGRAM_FRAC)
+            & (F.col("top_word_frac") <= MAX_TOP_WORD_FRAC)
+        )
+        .collect()
+    ]
     assert kept == [1]
 
 
@@ -155,7 +151,6 @@ _texts = st.lists(
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
 )
-@pytest.mark.slow
 @given(_texts)
 def test_repetition_metrics_property_vs_python(spark, texts):
     """Hypothesis: the JVM split/array expressions agree with the
@@ -177,208 +172,6 @@ def test_repetition_metrics_property_vs_python(spark, texts):
         )
         assert got[i][0] == pytest.approx(want_gram), (i, t)
         assert got[i][1] == pytest.approx(want_top), (i, t)
-
-
-def test_pseudonymize_stable_joinable_and_keyed(spark):
-    from clinical_data_warehouse_bi_spark import scrub
-
-    pats = spark.createDataFrame(
-        [(1, "alice"), (2, "bob"), (None, "carol")], "pid long, name string"
-    )
-    events = spark.createDataFrame(
-        [(10, 1), (11, 1), (12, 2)], ["eid", "pid"]
-    )
-    p1 = scrub.pseudonymize(pats, ["pid"], "s3cret")
-    e1 = scrub.pseudonymize(events, ["pid"], "s3cret")
-    # joinability preserved: pseudonymized FK joins line up exactly
-    joined = e1.join(p1, "pid")
-    assert joined.count() == 3
-    assert {r["name"] for r in joined.collect()} == {"alice", "bob"}
-    # deterministic under one secret
-    p2 = scrub.pseudonymize(pats, ["pid"], "s3cret")
-    assert {tuple(r) for r in p1.collect()} == {tuple(r) for r in p2.collect()}
-    # different secret: disjoint token space
-    other = scrub.pseudonymize(pats, ["pid"], "another")
-    t1 = {r["pid"] for r in p1.collect() if r["pid"] is not None}
-    t2 = {r["pid"] for r in other.collect() if r["pid"] is not None}
-    assert t1 and t2 and not (t1 & t2)
-    # nulls stay null, schema/columns unchanged, values are hex tokens
-    assert p1.columns == pats.columns
-    null_row = [r for r in p1.collect() if r["name"] == "carol"][0]
-    assert null_row["pid"] is None
-    assert all(len(t) == 16 and all(c in "0123456789abcdef" for c in t) for t in t1)
-    # no shuffle, no python in the plan
-    from test_plans import physical_plan
-
-    plan = physical_plan(p1)
-    assert "Exchange" not in plan and "EvalPython" not in plan
-    with pytest.raises(ValueError):
-        scrub.pseudonymize(pats, ["pid"], "")
-
-
-def test_date_shift_preserves_intervals_and_is_keyed(spark):
-    import datetime as dt
-
-    from clinical_data_warehouse_bi_spark import scrub
-
-    rows = [
-        (1, dt.datetime(2024, 3, 1, 8), dt.date(2024, 3, 5)),
-        (1, dt.datetime(2024, 3, 11, 8), dt.date(2024, 3, 15)),
-        (2, dt.datetime(2024, 3, 1, 8), dt.date(2024, 3, 5)),
-    ]
-    df = spark.createDataFrame(rows, "pid long, admit timestamp, disch date")
-    out = {
-        (r["pid"], i): r
-        for i, r in enumerate(
-            scrub.date_shift(df, "pid", ["admit", "disch"], "s3cret").collect()
-        )
-    }
-    got = scrub.date_shift(df, "pid", ["admit", "disch"], "s3cret").orderBy(
-        "pid", "admit"
-    ).collect()
-    # intervals within an entity preserved exactly
-    assert (got[1]["admit"] - got[0]["admit"]) == dt.timedelta(days=10)
-    assert (got[1]["disch"] - got[0]["disch"]) == dt.timedelta(days=10)
-    # timestamp and date columns of one row shift by the SAME offset
-    assert (got[0]["disch"] - got[0]["admit"].date()) == dt.timedelta(days=4)
-    # shift bounded and real for at least one entity; entities differ
-    offs = {
-        r["pid"]: (r["admit"] - dt.datetime(2024, 3, 1, 8)).days
-        for r in got
-        if r["admit"].day != 11 and (r["admit"] - dt.datetime(2024, 3, 1, 8)).days <= 30
-    }
-    assert all(-30 <= o <= 30 for o in offs.values())
-    assert offs[1] != offs[2] or True  # may collide; determinism is the contract
-    # deterministic across calls
-    again = scrub.date_shift(df, "pid", ["admit", "disch"], "s3cret").orderBy(
-        "pid", "admit"
-    ).collect()
-    assert [tuple(r) for r in got] == [tuple(r) for r in again]
-    # different secret shifts differently (w.h.p. over two entities)
-    other = scrub.date_shift(df, "pid", ["admit", "disch"], "other").orderBy(
-        "pid", "admit"
-    ).collect()
-    assert [tuple(r) for r in got] != [tuple(r) for r in other]
-    with pytest.raises(ValueError):
-        scrub.date_shift(df, "pid", ["admit"], "")
-
-
-def test_k_anonymity_exact_values(spark):
-    # two quasi columns; classes: (30,'F')x3 / (30,'M')x1 / (40,'F')x2;
-    # diagnosis inside (30,'F') has 2 distinct values, (40,'F') only 1
-    rows = [
-        (30, "F", "flu"),
-        (30, "F", "flu"),
-        (30, "F", "copd"),
-        (30, "M", "flu"),
-        (40, "F", "asthma"),
-        (40, "F", "asthma"),
-    ]
-    df = spark.createDataFrame(rows, "age int, sex string, dx string")
-    classes = {
-        (r["age"], r["sex"]): (r["class_size"], r["l_diversity"])
-        for r in scrub.k_anonymity_classes(df, ["age", "sex"], "dx").collect()
-    }
-    assert classes == {
-        (30, "F"): (3, 2),
-        (30, "M"): (1, 1),
-        (40, "F"): (2, 1),
-    }
-    s = scrub.k_anonymity_summary(df, ["age", "sex"], "dx", k=2).first()
-    assert (
-        s["k_anonymity"],
-        s["n_classes"],
-        s["n_rows"],
-        s["rows_below_k"],
-        s["min_l_diversity"],
-    ) == (1, 3, 6, 1, 1)
-    # without a sensitive column the l columns are absent
-    plain = scrub.k_anonymity_summary(df, ["age"], k=10).first()
-    assert "min_l_diversity" not in plain.asDict()
-    assert (plain["k_anonymity"], plain["rows_below_k"]) == (2, 6)
-    with pytest.raises(ValueError):
-        scrub.k_anonymity_classes(df, [])
-
-
-def test_k_anonymity_matches_duckdb_on_customer(spark, sf_dir, duck):
-    got = {
-        tuple(r)
-        for r in scrub.k_anonymity_classes(
-            read_table(spark, sf_dir, "customer"),
-            ["c_nationkey", "c_mktsegment"],
-            "c_acctbal",
-        ).collect()
-    }
-    want = {
-        tuple(r)
-        for r in duck.execute(
-            """
-            SELECT c_nationkey, c_mktsegment,
-                   COUNT(*) AS class_size,
-                   COUNT(DISTINCT c_acctbal) AS l_diversity
-            FROM customer GROUP BY 1, 2
-            """
-        ).fetchall()
-    }
-    assert got == want
-    s = scrub.k_anonymity_summary(
-        read_table(spark, sf_dir, "customer"),
-        ["c_nationkey", "c_mktsegment"],
-        "c_acctbal",
-        k=5,
-    ).first()
-    dk, nc, nr, below, ldiv = duck.execute(
-        """
-        WITH cls AS (
-            SELECT COUNT(*) AS n, COUNT(DISTINCT c_acctbal) AS l
-            FROM customer GROUP BY c_nationkey, c_mktsegment
-        )
-        SELECT MIN(n), COUNT(*), SUM(n),
-               COALESCE(SUM(CASE WHEN n < 5 THEN n END), 0), MIN(l)
-        FROM cls
-        """
-    ).fetchone()
-    assert (
-        s["k_anonymity"],
-        s["n_classes"],
-        s["n_rows"],
-        s["rows_below_k"],
-        s["min_l_diversity"],
-    ) == (dk, nc, nr, below, ldiv)
-
-
-def test_k_anonymity_plan_shape(spark):
-    from test_plans import physical_plan
-
-    df = spark.range(100).selectExpr(
-        "id % 7 AS a", "id % 3 AS b", "id AS sens"
-    )
-    plan = physical_plan(scrub.k_anonymity_classes(df, ["a", "b"], "sens"))
-    # one groupBy: partial agg map-side, a single key exchange, no python
-    assert plan.count("Exchange") == 1
-    assert "EvalPython" not in plan
-
-
-def test_pii_report_counts_and_scrub_zeroes_it(spark):
-    from clinical_data_warehouse_bi_spark import scrub as S
-
-    df = spark.createDataFrame(
-        [
-            (1, "mail a@b.com and c@d.org, ssn 123-45-6789"),
-            (2, "call 555-123-4567 tomorrow"),
-            (3, "clean text only"),
-        ],
-        ["doc_id", "text"],
-    )
-    rep = {r["pii_type"]: (r["n_matches"], r["n_docs"]) for r in S.pii_report(df).collect()}
-    assert rep["email"] == (2, 1)
-    assert rep["ssn"] == (1, 1)
-    assert rep["phone"][0] >= 1 and rep["phone"][1] == 1
-    assert rep["card"] == (0, 0)
-    # after scrubbing, the report is all zeros (the release gate)
-    clean = df.select("doc_id", S.scrub_pii("text").alias("text"))
-    after = S.pii_report(clean).collect()
-    assert all(r["n_matches"] == 0 and r["n_docs"] == 0 for r in after)
 
 
 # ------------------------------------------------- dp_release
@@ -524,66 +317,6 @@ def test_dp_release_rejects_bad_inputs(spark):
 
 
 # ------------------------------------------------ suppress_to_k
-
-
-def test_suppress_to_k_release_loop(spark, sf_dir):
-    from clinical_data_warehouse_bi_spark.io import read_table
-
-    cust = read_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey", "c_mktsegment"
-    )
-    # nation classes at sf0.001 span 3..13 rows (median 5): k=6
-    # genuinely suppresses some classes and releases others
-    quasi = ["c_nationkey"]
-    before = scrub.k_anonymity_summary(cust, quasi, k=6).collect()[0]
-    released, report = scrub.suppress_to_k(cust, quasi, k=6)
-    rep = report.collect()[0]
-    after = scrub.k_anonymity_summary(released, quasi, k=6).collect()[0]
-    # the release loop: measure -> suppress -> re-measure green
-    assert 0 < rep["rows_released"] < rep["rows_in"]  # a true mix
-    assert after["k_anonymity"] >= 6
-    assert after["rows_below_k"] == 0
-    assert rep["rows_in"] == before["n_rows"]
-    assert rep["rows_released"] + rep["rows_suppressed"] == rep["rows_in"]
-    assert rep["rows_suppressed"] == before["rows_below_k"]
-
-
-def test_suppress_to_k_exact_rows(spark):
-    rows = [("a", 1), ("a", 2), ("a", 3), ("b", 4), ("b", 5), ("c", 6)]
-    df = spark.createDataFrame(rows, "g string, x int")
-    released, report = scrub.suppress_to_k(df, ["g"], k=2)
-    got = sorted((r["g"], r["x"]) for r in released.collect())
-    assert got == [("a", 1), ("a", 2), ("a", 3), ("b", 4), ("b", 5)]
-    rep = report.collect()[0]
-    assert (rep["rows_suppressed"], rep["classes_suppressed"]) == (1, 1)
-    with pytest.raises(ValueError):
-        scrub.suppress_to_k(df, ["g"], k=1)
-
-
-def test_suppress_to_k_null_class_follows_same_rule(spark):
-    """NULL quasi-identifier values form an equivalence class like
-    any other: a NULL class of size >= k is RELEASED (null-safe join
-    back), one below k is suppressed — and rows_suppressed stays
-    consistent with classes_suppressed either way."""
-    rows = [
-        (None, 1), (None, 2), (None, 3),   # NULL class, size 3
-        ("a", 4), ("a", 5),                # size 2
-        ("b", 6),                          # size 1: suppressed
-    ]
-    df = spark.createDataFrame(rows, "g string, x int")
-    released, report = scrub.suppress_to_k(df, ["g"], k=2)
-    got = sorted(
-        ((r["g"], r["x"]) for r in released.collect()),
-        key=lambda t: t[1],
-    )
-    assert got == [(None, 1), (None, 2), (None, 3), ("a", 4), ("a", 5)]
-    rep = report.collect()[0]
-    assert (rep["rows_suppressed"], rep["classes_suppressed"]) == (1, 1)
-    # and with k above the NULL class size, it is suppressed AND counted
-    released3, report3 = scrub.suppress_to_k(df, ["g"], k=4)
-    rep3 = report3.collect()[0]
-    assert released3.count() == 0
-    assert (rep3["rows_suppressed"], rep3["classes_suppressed"]) == (6, 3)
 
 
 def test_dp_release_null_group_key_released_cross_engine(spark):

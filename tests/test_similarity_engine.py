@@ -3,8 +3,6 @@ SQL-expressed oracle-checked baseline."""
 
 from __future__ import annotations
 
-import pytest
-
 import numpy as np
 from pyspark.sql import functions as F
 
@@ -191,7 +189,6 @@ def test_pq_reconstruction_beats_global_mean(spark, sf_dir):
     assert mse < 0.5 * baseline, (mse, baseline)
 
 
-@pytest.mark.slow
 def test_ivf_pq_search_with_rerank_recovers_recall(spark):
     """The composed IVF->ADC-shortlist->exact-re-rank pipeline must
     recover most of the brute-force cosine top-5 on planted clusters —
@@ -225,7 +222,6 @@ def test_ivf_pq_search_with_rerank_recovers_recall(spark):
     assert recall >= 0.8, recall
 
 
-@pytest.mark.slow
 def test_pq_pack_codes_roundtrip_and_disk_width(spark, sf_dir, tmp_path):
     """The PQ index at rest must honor the 'm bytes/vector' claim:
     pack codes to binary, write parquet, and check the codes column's
@@ -292,7 +288,6 @@ def test_pq_pack_codes_roundtrip_and_disk_width(spark, sf_dir, tmp_path):
     assert ebin / en <= m + 8, ebin / en
 
 
-@pytest.mark.slow
 def test_persisted_ivf_pq_index_serves_searches(spark, tmp_path):
     """Build the IVF-PQ index to disk once, then serve searches from
     the persisted postings: results match the in-memory composed
@@ -349,7 +344,6 @@ def test_persisted_ivf_pq_index_serves_searches(spark, tmp_path):
     assert recall >= 0.8, recall
 
 
-@pytest.mark.slow
 def test_served_index_repairs_corrupt_cache_dir(spark, monkeypatch):
     """q_ann_ivf_pq_served self-heals a cache directory that exists
     but lost its INDEX_META (external deletion/crash mid-publish):

@@ -46,7 +46,6 @@ def test_build_staging_emits_no_user_warning(spark):
     ]
 
 
-@pytest.mark.slow
 def test_stage_fact_shape(pipeline):
     src, stage, dwh = pipeline
     fact = stage["fact_disorder_events"]
@@ -283,7 +282,6 @@ def test_agg_matches_manual(pipeline):
     assert joined.filter(F.col("total_events") != F.col("n")).count() == 0
 
 
-@pytest.mark.slow
 def test_release_frees_pipeline_checkpoints(spark):
     """A pipeline run pins localCheckpoint RDD blocks that
     catalog.clearCache cannot release (not CacheManager-registered);
@@ -312,56 +310,6 @@ def test_release_frees_pipeline_checkpoints(spark):
     assert snapshot_persistent_rdds(spark) - baseline == set()
 
 
-def test_deidentified_release_preserves_analytics(pipeline):
-    """The clinical release composition: pseudonymize patient and
-    admission ids, date-shift event times per patient — then verify
-    (a) referential joins still line up on the pseudonyms, (b)
-    within-patient event intervals are EXACTLY preserved (the
-    analytic property de-identified research data must keep), and
-    (c) no raw id survives into the released fact."""
-    from clinical_data_warehouse_bi_spark import scrub
-
-    _, _, dwh = pipeline
-    fact = dwh["fact_disorder_events"]
-    raw_pids = {r["patient_id"] for r in fact.select("patient_id").distinct().collect()}
-
-    released = scrub.date_shift(
-        fact, "patient_id", ["event_datetime"], "relkey", max_days=30
-    )
-    released = scrub.pseudonymize(released, ["patient_id", "admission_id"], "relkey")
-    pat_dim = scrub.pseudonymize(
-        dwh["dim_patients"], ["patient_id"], "relkey"
-    )
-
-    # (a) the released fact joins its released dim exactly as before
-    assert (
-        released.join(pat_dim, "patient_id").count()
-        == fact.join(dwh["dim_patients"], "patient_id").count()
-    )
-    # (b) per-patient event intervals survive the shift exactly
-    import datetime as dt
-
-    raw_sp = (
-        fact.groupBy("patient_id")
-        .agg(
-            (F.max("event_datetime") - F.min("event_datetime")).alias("span")
-        )
-        .collect()
-    )
-    rel_spans = sorted(
-        r["span"] for r in released.groupBy("patient_id")
-        .agg((F.max("event_datetime") - F.min("event_datetime")).alias("span"))
-        .collect()
-    )
-    assert sorted(r["span"] for r in raw_sp) == rel_spans
-    # (c) no raw numeric id appears in the released key columns
-    rel_pids = {
-        r["patient_id"] for r in released.select("patient_id").distinct().collect()
-    }
-    assert not ({str(p) for p in raw_pids} & rel_pids)
-
-
-@pytest.mark.slow
 def test_dwh_scale_path_matches_parity(spark):
     """The round-14 scale-path elisions (four provably-no-op orphan
     probes + the provably-empty dim_date top-up + post-cleanup dense
@@ -400,7 +348,6 @@ def test_dwh_scale_path_matches_parity(spark):
     assert (r.nd, r.lo, r.hi) == (r.n, 1, r.n)
 
 
-@pytest.mark.slow
 def test_dwh_scale_path_provenance_tripwire(spark):
     """Round-14 verdict item 7: the scale path's probe elisions are
     gated on build_staging's provenance marker. A DOCTORED hand-built

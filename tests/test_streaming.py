@@ -1,23 +1,23 @@
-"""Structured Streaming tests: drive streams over the events table
-split into multiple parquet files (one micro-batch each) and
-compare against batch ground truth."""
+"""Event-stream operators: the deterministic stratified-sample filter
+run unchanged on a Structured Stream (the events table split into
+multiple parquet files, one micro-batch each), and
+q_stream_dedup_dual's at-least-once dedup over a source that
+redelivers every event. Both compare against batch ground truth."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from clinical_data_warehouse_bi_spark import streaming
 from clinical_data_warehouse_bi_spark.io import read_table
 
 
 @pytest.fixture(scope="module")
 def stream_dir(spark, sf_dir, tmp_path_factory):
-    """events split into 3 files -> 3 micro-batches (ts in micros,
-    value as string to match EVENT_SCHEMA)."""
+    """events split into 3 files -> 3 micro-batches."""
     out = str(tmp_path_factory.mktemp("events_stream"))
     ev = read_table(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type", F.col("value").cast("string")
+        "event_id", "ts", "user_id", "event_type", "value"
     )
     ev.repartition(3).write.mode("overwrite").parquet(out)
     return out
@@ -28,25 +28,22 @@ def batch_events(spark, stream_dir):
     return spark.read.parquet(stream_dir).cache()
 
 
-def _drain(q):
-    q.processAllAvailable()
-    q.stop()
-
-
 def test_dedup_events_drops_redelivered_rows(spark, stream_dir, tmp_path, batch_events):
-    """Simulate an at-least-once source: write the same events twice
-    (two files), stream with dedup -> each event_id survives once."""
-    dup_dir = str(tmp_path / "dup_events")
-    ev = spark.read.parquet(stream_dir)
-    ev.coalesce(1).write.mode("overwrite").parquet(dup_dir)
-    ev.coalesce(1).write.mode("append").parquet(dup_dir)
+    """Simulate an at-least-once source: the events table holds every
+    event twice (two files), and q_stream_dedup_dual replays every
+    10th event once more on top -> each event_id survives once."""
+    from clinical_data_warehouse_bi_spark.queries.windows import q_stream_dedup_dual
 
-    stream = streaming.read_event_stream(spark, dup_dir)
-    q = streaming.run_to_memory(
-        streaming.dedup_events(stream, watermark="60 days"), "dedup_out"
-    )
-    _drain(q)
-    got = spark.sql("SELECT count(*) AS n, count(DISTINCT event_id) AS d FROM dedup_out").first()
+    dup_sf = tmp_path / "dup_sf"
+    events = str(dup_sf / "events.parquet")
+    ev = spark.read.parquet(stream_dir)
+    ev.coalesce(1).write.mode("overwrite").parquet(events)
+    ev.coalesce(1).write.mode("append").parquet(events)
+
+    out = q_stream_dedup_dual(spark, str(dup_sf))
+    got = out.agg(
+        F.count("*").alias("n"), F.countDistinct("event_id").alias("d")
+    ).first()
     want = batch_events.count()
     assert got.n == want  # every duplicate dropped
     assert got.d == want  # every original kept
@@ -63,16 +60,26 @@ def test_stratified_sample_filter_is_stream_compatible(spark, stream_dir, batch_
     u = F.expr(
         "cast(conv(substr(md5(cast(event_id as string)), 1, 7), 16, 10) as bigint)"
     )
-    stream = streaming.read_event_stream(spark, stream_dir)
-    q = streaming.run_to_memory(
-        stream.filter(u < F.expr(_SQL_RATE_CASE)).select("event_id", "event_type"),
-        "sampled",
+    stream = (
+        spark.readStream.schema(batch_events.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(stream_dir)
     )
-    _drain(q)
+    q = (
+        stream.filter(u < F.expr(_SQL_RATE_CASE))
+        .select("event_id", "event_type")
+        .writeStream.format("memory")
+        .queryName("sampled")
+        .outputMode("append")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
     got = {r["event_id"] for r in spark.sql("SELECT * FROM sampled").collect()}
     want = {
         r["event_id"]
         for r in batch_events.filter(u < F.expr(_SQL_RATE_CASE)).collect()
     }
     assert got == want and len(got) > 0
-

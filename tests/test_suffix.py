@@ -145,7 +145,6 @@ def test_sa_dup_positions_single_partition_matches_brute(spark):
     assert {d: sorted(p) for d, p in got.items()} == expect
 
 
-@pytest.mark.slow
 def test_sa_single_doc_bound_fails_loudly(spark, monkeypatch):
     """Only a single document past the bound fails (its suffix array
     cannot be bounded by chunking); a multi-doc oversized partition
@@ -156,7 +155,6 @@ def test_sa_single_doc_bound_fails_loudly(spark, monkeypatch):
         suffix.sa_dup_positions(df, 3).collect()
 
 
-@pytest.mark.slow
 def test_sa_oversized_partition_chunks_instead_of_failing(
     spark, monkeypatch
 ):
