@@ -15,6 +15,8 @@ import json
 import os
 import sys
 import time
+from collections.abc import Callable
+from typing import NamedTuple
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -106,30 +108,42 @@ BENCH_QUERIES = [
 ]
 
 
-def _best_of_2(run, after=None) -> float:
+class Setup(NamedTuple):
+    """A bench composition after its untimed warm-up: ``run`` is one
+    timed execution, ``after`` runs untimed after each, ``anchors``
+    are the warm-up's sanity counts and ``sources`` the input frames
+    the run reads, when it reads driver-built rows."""
+
+    run: Callable[[], object]
+    anchors: dict
+    after: Callable[[], None] | None = None
+    sources: dict | None = None
+
+
+def _best_of_2(setup: Setup) -> float:
     """Best wall time of two timed ``run()`` calls, rounded to 4
     decimals: the pipeline benches' timing protocol, after the
-    caller's own warm-up run. ``after`` runs untimed after each."""
+    setup's own warm-up run."""
     best = None
     for _ in range(2):
         t0 = time.time()
-        run()
+        setup.run()
         dt = time.time() - t0
         best = dt if best is None or dt < best else best
-        if after is not None:
-            after()
+        if setup.after is not None:
+            setup.after()
     return round(best, 4)
 
 
-def bench_pipeline(spark, sf: float) -> float:
-    """Wall-clock of the reference's whole artifact: the 3-layer
-    clinical star pipeline (staging -> DWH -> pre-agg) on the
-    deterministic MIMIC-shaped fixtures, scaled by sf. Sources are
-    cached first so the timing isolates the pipeline's own plan-build
-    + compute (in production the sources are tables on disk, not
-    driver-generated rows). Sanity anchors: both fact layers
-    non-empty, the DWH fact no larger than staging (orphan cleanup
-    only removes), and the pre-agg has one row per admission."""
+def star_setup(spark, sf: float) -> Setup:
+    """The reference's whole artifact: the 3-layer clinical star
+    pipeline (staging -> DWH -> pre-agg) on the deterministic
+    MIMIC-shaped fixtures, scaled by sf. Sources are cached first so
+    the timing isolates the pipeline's own plan-build + compute (in
+    production the sources are tables on disk, not driver-generated
+    rows). Sanity anchors: both fact layers non-empty, the DWH fact
+    no larger than staging (orphan cleanup only removes), and the
+    pre-agg has one row per admission."""
     from clinical_data_warehouse_bi_spark import star
     from clinical_data_warehouse_bi_spark.fixtures import make_sources
     from clinical_data_warehouse_bi_spark.io import (
@@ -158,24 +172,34 @@ def bench_pipeline(spark, sf: float) -> float:
         return out
 
     out = run()  # warm-up + anchor material
-    n_stage = out["stage"]["fact_disorder_events"].count()
-    n_dwh = out["dwh"]["fact_disorder_events"].count()
-    n_agg = out["dwh"]["agg_disorders_per_admission"].count()
-    n_adm = (
-        out["dwh"]["fact_disorder_events"].select("admission_id").distinct().count()
-    )
-    assert 0 < n_dwh <= n_stage, (n_stage, n_dwh)
-    assert n_agg == n_adm, (n_agg, n_adm)
+    anchors = {
+        "stage_fact": out["stage"]["fact_disorder_events"].count(),
+        "dwh_fact": out["dwh"]["fact_disorder_events"].count(),
+        "agg_rows": out["dwh"]["agg_disorders_per_admission"].count(),
+        "admissions": out["dwh"]["fact_disorder_events"]
+        .select("admission_id").distinct().count(),
+    }
+    assert 0 < anchors["dwh_fact"] <= anchors["stage_fact"], anchors
+    assert anchors["agg_rows"] == anchors["admissions"], anchors
     print(
-        f"pipeline_star anchor: patients={n_patients} stage_fact={n_stage}"
-        f" dwh_fact={n_dwh} agg_rows={n_agg}",
+        f"pipeline_star anchor: patients={n_patients}"
+        f" stage_fact={anchors['stage_fact']} dwh_fact={anchors['dwh_fact']}"
+        f" agg_rows={anchors['agg_rows']}",
         file=sys.stderr,
     )
-    release_new_persistent_rdds(spark, rdd_baseline)
-    best = _best_of_2(
-        run, after=lambda: release_new_persistent_rdds(spark, rdd_baseline)
-    )
-    for df in src.values():
+
+    def after():
+        release_new_persistent_rdds(spark, rdd_baseline)
+
+    after()
+    return Setup(run, anchors, after, src)
+
+
+def bench_pipeline(spark, sf: float) -> float:
+    """Wall-clock of ``star_setup``'s pipeline, best of 2."""
+    setup = star_setup(spark, sf)
+    best = _best_of_2(setup)
+    for df in setup.sources.values():
         df.unpersist()
     return best
 
@@ -247,10 +271,10 @@ def bench_corpus(spark, sf_dir: str) -> float:
         f" chunks={anchor['rows']} verified={anchor['ok']}",
         file=sys.stderr,
     )
-    return _best_of_2(run)
+    return _best_of_2(Setup(run, anchor))
 
 
-def bench_corpus_full(spark, sf_dir: str) -> float:
+def corpus_full_setup(spark, sf_dir: str) -> Setup:
     """pipeline_corpus with the round-14 dedup additions enabled:
     the same release composition plus exact-substring dedup
     (keep-one-copy) and persisted-index decontamination against a
@@ -258,7 +282,8 @@ def bench_corpus_full(spark, sf_dir: str) -> float:
     end-to-end (round-14 verdict item 4). The reference digest index
     builds ONCE per corpus outside the timed loop (a training org
     maintains it across releases; per-release cost is the probe,
-    which is what this times), cached through io.cached_index."""
+    which is what this times), cached through io.cached_index. The
+    warm-up run's anchors carry the released doc_id list."""
     import shutil
     import tempfile
 
@@ -290,7 +315,7 @@ def bench_corpus_full(spark, sf_dir: str) -> float:
     )
     rdd_baseline = snapshot_persistent_rdds(spark)
 
-    def run() -> dict:
+    def run(ids: bool = False) -> dict:
         out_dir = tempfile.mkdtemp(prefix="bench-corpus-full-")
         try:
             r = build_corpus_release(
@@ -302,18 +327,28 @@ def bench_corpus_full(spark, sf_dir: str) -> float:
             r["chunks"].repartition(8).write.parquet(
                 out_dir, mode="overwrite"
             )
-            return {"n_release": r["n_release"]}
+            out = {"n_release": r["n_release"]}
+            if ids:
+                out["doc_ids"] = sorted(
+                    row[0] for row in r["release"].select("doc_id").collect()
+                )
+            return out
         finally:
             shutil.rmtree(out_dir, ignore_errors=True)
             release_new_persistent_rdds(spark, rdd_baseline)
 
-    anchor = run()
+    anchor = run(ids=True)
     assert anchor["n_release"] > 0, anchor
     print(
         f"pipeline_corpus_full anchor: release_docs={anchor['n_release']}",
         file=sys.stderr,
     )
-    return _best_of_2(run)
+    return Setup(run, anchor)
+
+
+def bench_corpus_full(spark, sf_dir: str) -> float:
+    """Wall-clock of ``corpus_full_setup``'s release, best of 2."""
+    return _best_of_2(corpus_full_setup(spark, sf_dir))
 
 
 def main() -> None:
@@ -328,20 +363,8 @@ def main() -> None:
 
     spark = get_spark("bench")
     # registry-retired operators stay in the bench for historical
-    # comparability: auditable_queries() resolves every rotation-pool
-    # retiree; the three rows-only retirees are not in the pool
-    from clinical_data_warehouse_bi_spark.queries.core import q_approx_stats
-    from clinical_data_warehouse_bi_spark.queries.similarity import (
-        q_ann_hnsw_routed,
-        q_ann_ivf_learned,
-    )
-
-    queries = {
-        **auditable_queries(),
-        "q_approx_stats": q_approx_stats,
-        "q_ann_ivf_learned": q_ann_ivf_learned,
-        "q_ann_hnsw_routed": q_ann_hnsw_routed,
-    }
+    # comparability: auditable_queries() resolves every retiree
+    queries = auditable_queries()
     timings: dict[str, float] = {}
     spreads: dict[str, float] = {}
     load_start = os.getloadavg()
@@ -353,8 +376,8 @@ def main() -> None:
     # Snapshot once, release everything newer after each query.
     rdd_baseline = snapshot_persistent_rdds(spark)
     for name in BENCH_QUERIES:
-        fn = queries[name]
         try:
+            fn = queries[name]  # an unresolved name records -1 below
             # drop cached relations from prior queries: each query
             # caches fresh DataFrame instances, so leftovers only add
             # memory pressure (they are never hit again)

@@ -461,7 +461,8 @@ def q_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     verdict item 1) after three rounds as the staged named
     candidate; slot freed by retiring q_calendar_dim (witnesses in
     its docstring). The full oracle comparison against SQL_BENFORD
-    also stays in tests/test_retired_parity.py, and the
+    runs in tests/test_oracle_parity.py (or, in a round it donates
+    its slot, test_retired_parity.py's donor check), and the
     digit-law value checks in tests/test_properties.py. Probabilities
     quantized decimal(28,12)->string per the cross-engine convention.
 
@@ -517,8 +518,8 @@ def q_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     discovering its hot key the slow way. REGISTERED round 12
     (round-11 verdict item 1); slot freed by retiring
     q_stream_dedup_dual (witness in its docstring). The full oracle
-    comparison against SQL_SKEW_REPORT also stays in
-    tests/test_retired_parity.py.
+    comparison against SQL_SKEW_REPORT runs in
+    tests/test_oracle_parity.py.
 
     Quantization: share is floor(n/total * 1e9 + 0.5) BIGINT — n and
     total are exact integers, the division is one IEEE op, and floor
@@ -591,7 +592,7 @@ def q_freshness_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     check when a dashboard flatlines. REGISTERED round 12 (round-11
     verdict item 1); slot freed by retiring q_scalar_lookup_default
     (witnesses in its docstring). The full oracle comparison against
-    SQL_FRESHNESS also stays in tests/test_retired_parity.py.
+    SQL_FRESHNESS runs in tests/test_oracle_parity.py.
 
     Cross-engine notes: as_of is an explicit literal (the repo's
     reproducibility rule — never now()); the lag mirrors Spark's
@@ -619,8 +620,8 @@ def q_freshness_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Round-12 registration: row-level snapshot diff. Slot freed by
 # retiring q_anti_new_dates (witnesses in its docstring,
-# queries/join_ops.py). The full oracle comparison also stays in
-# tests/test_retired_parity.py (sf0.01 + sf0.1 sweep).
+# queries/join_ops.py). The full oracle comparison runs in
+# tests/test_oracle_parity.py.
 # ---------------------------------------------------------------------------
 
 #: key shift for the demo's simulated late-arriving rows — above any

@@ -359,6 +359,15 @@ ROTATION_POOL: list[RotationSpec] = [
     RotationSpec("q_scalar_lookup_default", f"{_Q}.join_ops", "q_scalar_lookup_default", "SQL_SCALAR_LOOKUP_DEFAULT"),
 ]
 
+#: the rows-only retirees (no DuckDB oracle, so never rotated back
+#: under the gate), by module: bench.py and scripts/ still time and
+#: audit them by name
+ROWS_ONLY_RETIREES: dict[str, str] = {
+    "q_approx_stats": f"{_Q}.core",
+    "q_ann_ivf_learned": f"{_Q}.similarity",
+    "q_ann_hnsw_routed": f"{_Q}.similarity",
+}
+
 #: long-stable, full-oracle registered entries eligible to donate
 #: their gate slot for one round. NEVER eligible: rows-only entries
 #: (the gate row IS their whole driver-side evidence), the round-2
@@ -481,9 +490,7 @@ def all_oracles() -> dict[str, str]:
 
 def registered_queries() -> dict[str, QueryFn]:
     """EVERY registered query, independent of this round's gate
-    rotation — the resolution surface for bench.py and scripts/,
-    which track all operators across rounds regardless of which 50
-    the driver's gate samples."""
+    rotation (see ``auditable_queries`` for the retirees too)."""
     _load()
     return {n: _REGISTRY[n].fn for n in _REGISTRY}
 
@@ -500,13 +507,25 @@ def registered_oracles() -> dict[str, str]:
 
 
 def auditable_queries() -> dict[str, QueryFn]:
-    """Registered queries PLUS every rotation-pool retiree — the
-    widest resolvable surface, for plan audits and ad-hoc tooling
-    that address operators by name regardless of gate status."""
+    """Registered queries PLUS every retiree (the rotation pool and
+    the rows-only ones) — the widest resolvable surface, and the only
+    one bench.py, scripts/ and tests use to address an operator by
+    name regardless of gate status."""
     out = registered_queries()
     for spec in ROTATION_POOL:
-        if spec.name not in out:
-            out[spec.name] = _resolve_spec(spec).fn
+        out[spec.name] = _resolve_spec(spec).fn
+    for name, module in ROWS_ONLY_RETIREES.items():
+        out[name] = getattr(importlib.import_module(module), name)
+    return out
+
+
+def auditable_oracles() -> dict[str, str]:
+    """``auditable_queries``' oracles: every registered oracle plus
+    each rotation-pool retiree's preserved SQL (the rows-only
+    retirees have none)."""
+    out = registered_oracles()
+    for spec in ROTATION_POOL:
+        out[spec.name] = _resolve_spec(spec).oracle
     return out
 
 

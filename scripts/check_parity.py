@@ -24,12 +24,14 @@ from clinical_data_warehouse_bi_spark.registry import all_oracles, all_queries
 from clinical_data_warehouse_bi_spark.session import get_spark
 
 
-def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
+def duck_con(sf_dir: str, tables=DRIVER_TABLES) -> duckdb.DuckDBPyConnection:
+    """DuckDB views over ``sf_dir/<table>.parquet``: one parquet file
+    (the driver's testdata) or a Spark-written directory of them."""
     con = duckdb.connect()
-    for t in DRIVER_TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    for t in tables:
+        p = f"{sf_dir}/{t}.parquet"
+        src = f"{p}/*.parquet" if os.path.isdir(p) else p
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{src}')")
     return con
 
 

@@ -24,6 +24,7 @@ def main() -> None:
     sf_dir = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.01"
     only = set(sys.argv[4:])
 
+    from clinical_data_warehouse_bi_spark.registry import auditable_queries
     from clinical_data_warehouse_bi_spark.session import get_spark
 
     out_dir = os.path.join(
@@ -34,8 +35,8 @@ def main() -> None:
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("dump-plans")
 
-    # same query map the bench harness times (registry + retired)
-    queries = bench_query_map()
+    # the same resolver the bench harness times through
+    queries = auditable_queries()
     for name, fn in sorted(queries.items()):
         if only and name not in only:
             continue
@@ -53,66 +54,6 @@ def main() -> None:
                 f.write("ERROR\n" + traceback.format_exc())
             print(f"ERR  {name}")
     spark.stop()
-
-
-def bench_query_map():
-    from clinical_data_warehouse_bi_spark.queries.core import (
-        q_agg_per_order,
-        q_approx_stats,
-        q_calendar_dim,
-        q_grouped_percentiles,
-    )
-    from clinical_data_warehouse_bi_spark.queries.dedup import (
-        q_minhash_lsh_pairs,
-        q_paragraph_dedup,
-        q_repeated_spans,
-        q_simhash_pairs,
-    )
-    from clinical_data_warehouse_bi_spark.queries.join_ops import (
-        q_anti_new_dates,
-        q_range_join,
-    )
-    from clinical_data_warehouse_bi_spark.queries.similarity import (
-        q_ann_hnsw_routed,
-        q_ann_ivf_learned,
-        q_cosine_topk,
-    )
-    from clinical_data_warehouse_bi_spark.queries.text_ops import q_quota_sample
-    from clinical_data_warehouse_bi_spark.queries.windows import (
-        q_cohort_retention,
-        q_frame_sample,
-        q_funnel_steps,
-        q_readmission_gap,
-        q_resample_fill,
-        q_scd2_dim,
-        q_stream_dedup_dual,
-    )
-    from clinical_data_warehouse_bi_spark.registry import registered_queries
-
-    return {
-        **registered_queries(),
-        "q_approx_stats": q_approx_stats,
-        "q_paragraph_dedup": q_paragraph_dedup,
-        "q_range_join": q_range_join,
-        "q_frame_sample": q_frame_sample,
-        "q_agg_per_order": q_agg_per_order,
-        "q_cosine_topk": q_cosine_topk,
-        "q_minhash_lsh_pairs": q_minhash_lsh_pairs,
-        "q_scd2_dim": q_scd2_dim,
-        "q_funnel_steps": q_funnel_steps,
-        "q_cohort_retention": q_cohort_retention,
-        "q_quota_sample": q_quota_sample,
-        "q_ann_ivf_learned": q_ann_ivf_learned,
-        "q_ann_hnsw_routed": q_ann_hnsw_routed,
-        "q_resample_fill": q_resample_fill,
-        "q_readmission_gap": q_readmission_gap,
-        "q_grouped_percentiles": q_grouped_percentiles,
-        "q_repeated_spans": q_repeated_spans,
-        "q_calendar_dim": q_calendar_dim,
-        "q_stream_dedup_dual": q_stream_dedup_dual,
-        "q_simhash_pairs": q_simhash_pairs,
-        "q_anti_new_dates": q_anti_new_dates,
-    }
 
 
 if __name__ == "__main__":

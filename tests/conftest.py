@@ -3,7 +3,6 @@ from __future__ import annotations
 import os
 import sys
 
-import duckdb
 import pytest
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -29,12 +28,8 @@ def sf_dir() -> str:
 
 @pytest.fixture(scope="session")
 def duck(sf_dir):
-    from clinical_data_warehouse_bi_spark.io import DRIVER_TABLES
+    from scripts.check_parity import duck_con
 
-    con = duckdb.connect()
-    for t in DRIVER_TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = duck_con(sf_dir)
     yield con
     con.close()

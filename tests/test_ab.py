@@ -1,0 +1,30 @@
+"""Smoke test of scripts/ab.py, the A/B harness: one Spark arm and one
+DuckDB arm on a cheap oracle-checked query agree and report executor
+CPU and tasks, and two arms that disagree make it exit non-zero."""
+
+from __future__ import annotations
+
+from scripts import ab
+
+
+def test_spark_and_duckdb_arms_agree_and_report_cpu(sf_dir):
+    arms = [ab.Arm("spark", sf_dir), ab.Arm("duck", sf_dir)]
+    rows, status = ab.compare([[(a, "q_join_lookup_cast") for a in arms]], pairs=1)
+    assert status == 0
+    spark, duck = rows[0]["cells"]
+    assert rows[0]["agree"] and spark["checksum"] == duck["checksum"]
+    assert not spark["checksum"].startswith("0:")
+    (run,) = spark["runs"]
+    assert run["cpu_s"] > 0 and run["tasks"] > 0
+    assert run["wall_s"] > 0 and duck["runs"][0]["wall_s"] > 0
+
+
+def test_a_checksum_mismatch_exits_non_zero(sf_dir):
+    duck = ab.Arm("duck", sf_dir)
+    rows, status = ab.compare(
+        [[(duck, "q_join_lookup_cast"), (duck, "q_join_normalized")]], pairs=1
+    )
+    assert status == 1
+    assert rows[0]["agree"] is False
+    a, b = rows[0]["cells"]
+    assert a["checksum"] != b["checksum"]

@@ -13,8 +13,11 @@ from clinical_data_warehouse_bi_spark.registry import (
     ROTATION_DONORS,
     ROTATION_POOL,
     ROTATION_SLOTS,
+    ROWS_ONLY_RETIREES,
     all_oracles,
     all_queries,
+    auditable_oracles,
+    auditable_queries,
     benched_queries,
     rotation_batch,
     rotation_donors_out,
@@ -155,3 +158,36 @@ def test_rotation_pool_is_disjoint_from_registry_and_donors_stable():
 
 def test_oracles_subset_of_queries():
     assert set(all_oracles()) <= set(all_queries())
+
+
+# --- the one resolver (bench.py, scripts/ and tests address every
+# operator by name through it) ----------------------------------------
+
+
+def test_every_bench_query_resolves():
+    """bench.py records -1 for a name it cannot resolve; fail here
+    instead."""
+    from bench import BENCH_QUERIES
+
+    queries = auditable_queries()
+    missing = [n for n in BENCH_QUERIES if n not in queries]
+    assert not missing, f"BENCH_QUERIES names the resolver lacks: {missing}"
+    assert all(callable(queries[n]) for n in BENCH_QUERIES)
+
+
+def test_every_pool_retiree_has_a_callable_and_an_oracle():
+    queries, oracles = auditable_queries(), auditable_oracles()
+    for spec in ROTATION_POOL:
+        assert callable(queries[spec.name]), spec.name
+        assert isinstance(oracles.get(spec.name), str), spec.name
+        assert oracles[spec.name].strip(), spec.name
+
+
+def test_rows_only_retirees_resolve_without_an_oracle():
+    queries, oracles = auditable_queries(), auditable_oracles()
+    assert set(ROWS_ONLY_RETIREES) == {
+        "q_approx_stats", "q_ann_ivf_learned", "q_ann_hnsw_routed"
+    }
+    for name in ROWS_ONLY_RETIREES:
+        assert callable(queries[name]) and queries[name].__name__ == name
+        assert name not in oracles

@@ -5,247 +5,22 @@ when a query is retired to free a slot, the convention is that a
 registered witness carries its operator shapes. This file keeps the
 retired queries' own value-level cross-engine checks alive in pytest,
 so retirement never weakens the evidence — the same normalize/compare
-protocol as tests/test_oracle_parity.py, run against the oracle SQL
-each retired query preserved at module level."""
+protocol as tests/test_oracle_parity.py, run on every
+``registry.ROTATION_POOL`` retiree against the oracle SQL it preserved
+at module level, both resolved through ``registry.auditable_*``. For
+the gate scale, point SPARK_GRAFT_TEST_SF_DIR at the sf0.01 testdata."""
 
 from __future__ import annotations
 
 import pytest
 
-from clinical_data_warehouse_bi_spark.queries.core import (
-    SQL_AGG_PER_ORDER,
-    SQL_DUP_PROBE,
-    SQL_KEYWORD_FILTER,
-    SQL_SENTINEL_TIMESTAMPS,
-    SQL_STRATIFIED_SAMPLE,
-    SQL_SURROGATE_KEY,
-    q_agg_per_order,
-    q_dup_probe,
-    q_keyword_filter,
-    q_sentinel_timestamps,
-    q_stratified_sample,
-    q_surrogate_key,
-)
-from clinical_data_warehouse_bi_spark.queries.dedup import (
-    SQL_CHUNK_DEDUP,
-    SQL_MINHASH_LSH_PAIRS,
-    SQL_NGRAM_JACCARD,
-    SQL_PARAGRAPH_DEDUP,
-    q_chunk_dedup,
-    q_minhash_lsh_pairs,
-    q_ngram_jaccard,
-    q_paragraph_dedup,
-)
-from clinical_data_warehouse_bi_spark.queries.join_ops import (
-    SQL_INSERT_IF_ABSENT,
-    SQL_RANGE_JOIN,
-    SQL_SEMI_VALID_FACT,
-    q_insert_if_absent,
-    q_range_join,
-    q_semi_valid_fact,
-)
-from clinical_data_warehouse_bi_spark.queries.qa_report import (
-    SQL_QA_AGG_CONSISTENCY,
-    SQL_QA_ROWCOUNT,
-    q_qa_agg_consistency,
-    q_qa_rowcount_report,
-)
-from clinical_data_warehouse_bi_spark.queries.similarity import (
-    SQL_ANN_IVF_NPROBE,
-    SQL_COSINE_TOPK,
-    SQL_EMBED_QUANTIZE,
-    q_ann_ivf_nprobe,
-    q_cosine_topk,
-    q_embed_quantize,
-)
-from clinical_data_warehouse_bi_spark.queries.windows import (
-    SQL_COHORT_RETENTION,
-    SQL_FRAME_SAMPLE,
-    SQL_FUNNEL_STEPS,
-    SQL_SCD2_DIM,
-    SQL_WINDOW_TUMBLING,
-    q_cohort_retention,
-    q_frame_sample,
-    q_funnel_steps,
-    q_scd2_dim,
-    q_window_tumbling,
-)
-from clinical_data_warehouse_bi_spark.queries.text_ops import (
-    SQL_LANG_ID,
-    SQL_QUOTA_SAMPLE,
-    SQL_TEXT_STATS,
-    q_lang_id,
-    q_quota_sample,
-    q_text_stats,
+from clinical_data_warehouse_bi_spark.registry import (
+    ROTATION_POOL,
+    auditable_oracles,
+    auditable_queries,
+    benched_queries,
 )
 from scripts.check_parity import normalize
-
-RETIRED = {
-    "q_insert_if_absent": (q_insert_if_absent, SQL_INSERT_IF_ABSENT),
-    "q_semi_valid_fact": (q_semi_valid_fact, SQL_SEMI_VALID_FACT),
-    "q_dup_probe": (q_dup_probe, SQL_DUP_PROBE),
-    "q_stratified_sample": (q_stratified_sample, SQL_STRATIFIED_SAMPLE),
-    "q_window_tumbling": (q_window_tumbling, SQL_WINDOW_TUMBLING),
-    "q_embed_quantize": (q_embed_quantize, SQL_EMBED_QUANTIZE),
-    "q_surrogate_key": (q_surrogate_key, SQL_SURROGATE_KEY),
-    "q_keyword_filter": (q_keyword_filter, SQL_KEYWORD_FILTER),
-    "q_ngram_jaccard": (q_ngram_jaccard, SQL_NGRAM_JACCARD),
-    "q_ann_ivf_nprobe": (q_ann_ivf_nprobe, SQL_ANN_IVF_NPROBE),
-    "q_lang_id": (q_lang_id, SQL_LANG_ID),
-    "q_text_stats": (q_text_stats, SQL_TEXT_STATS),
-    "q_qa_rowcount_report": (q_qa_rowcount_report, SQL_QA_ROWCOUNT),
-    "q_qa_agg_consistency": (q_qa_agg_consistency, SQL_QA_AGG_CONSISTENCY),
-    "q_chunk_dedup": (q_chunk_dedup, SQL_CHUNK_DEDUP),
-    # round-9 retirements (slots went to the round-8 verdict's named
-    # candidates q_weighted_sample / q_boilerplate / q_hybrid_topk /
-    # q_bm25_served)
-    "q_paragraph_dedup": (q_paragraph_dedup, SQL_PARAGRAPH_DEDUP),
-    "q_frame_sample": (q_frame_sample, SQL_FRAME_SAMPLE),
-    "q_range_join": (q_range_join, SQL_RANGE_JOIN),
-    "q_sentinel_timestamps": (q_sentinel_timestamps, SQL_SENTINEL_TIMESTAMPS),
-    # round-9 retirements, part 3 (slots went to q_pivot_report and
-    # q_top_ngrams, the round-9 survey log's named candidates)
-    "q_agg_per_order": (q_agg_per_order, SQL_AGG_PER_ORDER),
-    "q_cosine_topk": (q_cosine_topk, SQL_COSINE_TOPK),
-    # round-9 retirements, part 4 (slot went to q_grouped_percentiles;
-    # witness: q_lsh_near_dup supersets the whole candidate chain)
-    "q_minhash_lsh_pairs": (q_minhash_lsh_pairs, SQL_MINHASH_LSH_PAIRS),
-    # round-9 retirements, part 5 (slot went to q_readmission_gap;
-    # witness: q_scd2_asof calls q_scd2_dim and embeds its oracle CTE
-    # chain verbatim)
-    "q_scd2_dim": (q_scd2_dim, SQL_SCD2_DIM),
-    # round-10 retirements (slots went to q_daily_census,
-    # q_rolling_aggregate, q_dp_release, q_ann_ivf_pq_served; the
-    # fourth retiree, q_ann_ivf_learned, was rows-only — its recall
-    # and probe-machinery evidence lives in
-    # tests/test_similarity_engine.py and the q_ann_ivf_nprobe row
-    # above)
-    "q_funnel_steps": (q_funnel_steps, SQL_FUNNEL_STEPS),
-    "q_cohort_retention": (q_cohort_retention, SQL_COHORT_RETENTION),
-    "q_quota_sample": (q_quota_sample, SQL_QUOTA_SAMPLE),
-}
-
-# round-11 retirements (slots went to q_split_assign,
-# q_vocabulary_divergence, q_outlier_report, q_attribution per the
-# round-10 verdict items 2-4 and 6; witnesses named in each
-# retiree's docstring)
-from clinical_data_warehouse_bi_spark.queries.core import (  # noqa: E402
-    SQL_GROUPED_PERCENTILES,
-    q_grouped_percentiles,
-)
-from clinical_data_warehouse_bi_spark.queries.dedup import (  # noqa: E402
-    SQL_REPEATED_SPANS,
-    q_repeated_spans,
-)
-from clinical_data_warehouse_bi_spark.queries.windows import (  # noqa: E402
-    SQL_READMISSION_GAP,
-    SQL_RESAMPLE_FILL,
-    q_readmission_gap,
-    q_resample_fill,
-)
-
-RETIRED.update(
-    {
-        "q_resample_fill": (q_resample_fill, SQL_RESAMPLE_FILL),
-        "q_readmission_gap": (q_readmission_gap, SQL_READMISSION_GAP),
-        "q_grouped_percentiles": (
-            q_grouped_percentiles,
-            SQL_GROUPED_PERCENTILES,
-        ),
-        "q_repeated_spans": (q_repeated_spans, SQL_REPEATED_SPANS),
-    }
-)
-
-# round-12 retirements (slots went to q_benford, q_skew_report,
-# q_freshness_report — the three staged candidates registered per
-# the round-11 verdict item 1, now under the driver's gate AND
-# test_oracle_parity; witnesses named in each retiree's docstring)
-from clinical_data_warehouse_bi_spark.queries.core import (  # noqa: E402
-    SQL_CALENDAR_DIM,
-    q_calendar_dim,
-)
-from clinical_data_warehouse_bi_spark.queries.join_ops import (  # noqa: E402
-    SQL_SCALAR_LOOKUP_DEFAULT,
-    q_scalar_lookup_default,
-)
-from clinical_data_warehouse_bi_spark.queries.windows import (  # noqa: E402
-    SQL_STREAM_DEDUP_DUAL,
-    q_stream_dedup_dual,
-)
-
-# round-12 registrations (staged and registered same round after
-# green sf0.01 + sf0.1 candidate sweeps): q_tfidf_keywords (slot
-# freed by retiring q_simhash_pairs) and q_snapshot_diff (slot freed
-# by retiring q_anti_new_dates). The registered gate covers them per
-# round; these rows keep the same full-oracle comparison alive in
-# pytest — the three round-12-registered QA reports set the
-# precedent.
-from clinical_data_warehouse_bi_spark.queries.text_ops import (  # noqa: E402
-    SQL_TFIDF_KEYWORDS,
-    q_tfidf_keywords,
-)
-
-RETIRED.update({"q_tfidf_keywords": (q_tfidf_keywords, SQL_TFIDF_KEYWORDS)})
-
-from clinical_data_warehouse_bi_spark.queries.qa_report import (  # noqa: E402
-    SQL_SNAPSHOT_DIFF,
-    q_snapshot_diff,
-)
-
-RETIRED.update({"q_snapshot_diff": (q_snapshot_diff, SQL_SNAPSHOT_DIFF)})
-
-# round-12 retirements (slots went to q_tfidf_keywords and
-# q_snapshot_diff; witnesses named in each retiree's docstring)
-from clinical_data_warehouse_bi_spark.queries.dedup import (  # noqa: E402
-    SQL_SIMHASH_PAIRS,
-    q_simhash_pairs,
-)
-from clinical_data_warehouse_bi_spark.queries.join_ops import (  # noqa: E402
-    SQL_ANTI_NEW_DATES,
-    q_anti_new_dates,
-)
-
-RETIRED.update(
-    {
-        "q_simhash_pairs": (q_simhash_pairs, SQL_SIMHASH_PAIRS),
-        "q_anti_new_dates": (q_anti_new_dates, SQL_ANTI_NEW_DATES),
-    }
-)
-
-# the three round-12-registered QA reports keep their own
-# registry-independent full-oracle rows here too — their docstrings
-# promise it ("the full oracle comparison ... also stays in
-# tests/test_retired_parity.py"), and the promise briefly went
-# unbacked when the staging CANDIDATES block was deleted at
-# registration (round-12 review finding)
-from clinical_data_warehouse_bi_spark.queries.qa_report import (  # noqa: E402
-    SQL_BENFORD,
-    SQL_FRESHNESS,
-    SQL_SKEW_REPORT,
-    q_benford,
-    q_freshness_report,
-    q_skew_report,
-)
-
-RETIRED.update(
-    {
-        "q_benford": (q_benford, SQL_BENFORD),
-        "q_skew_report": (q_skew_report, SQL_SKEW_REPORT),
-        "q_freshness_report": (q_freshness_report, SQL_FRESHNESS),
-    }
-)
-
-RETIRED.update(
-    {
-        "q_calendar_dim": (q_calendar_dim, SQL_CALENDAR_DIM),
-        "q_stream_dedup_dual": (q_stream_dedup_dual, SQL_STREAM_DEDUP_DUAL),
-        "q_scalar_lookup_default": (
-            q_scalar_lookup_default,
-            SQL_SCALAR_LOOKUP_DEFAULT,
-        ),
-    }
-)
-
 
 # --- rotation donors (round-13) --------------------------------------
 # Registered entries sitting the current round out of the driver's
@@ -253,10 +28,6 @@ RETIRED.update(
 # cross-engine comparison here, so donating a slot never weakens the
 # evidence. The donor set is deterministic per driver round; this
 # parametrization follows it automatically.
-from clinical_data_warehouse_bi_spark.registry import (  # noqa: E402
-    benched_queries,
-)
-
 _BENCHED = benched_queries()
 
 
@@ -273,9 +44,9 @@ def test_benched_donor_matches_oracle(name, spark, duck, sf_dir):
     assert not mismatches, f"first mismatches: {mismatches}"
 
 
-@pytest.mark.parametrize("name", sorted(RETIRED))
+@pytest.mark.parametrize("name", sorted(s.name for s in ROTATION_POOL))
 def test_retired_query_matches_oracle(name, spark, duck, sf_dir):
-    fn, oracle = RETIRED[name]
+    fn, oracle = auditable_queries()[name], auditable_oracles()[name]
     s_cols, s_rows = normalize(fn(spark, sf_dir).toPandas())
     d_cols, d_rows = normalize(duck.execute(oracle).df())
     assert s_cols == d_cols
