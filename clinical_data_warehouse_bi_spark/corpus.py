@@ -41,19 +41,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+#: release policy. The quality gate is q_corpus_clean's
+#: (queries/text_ops.py CLEAN_MIN_TOKENS / CLEAN_MIN_QUALITY); the
+#: ExactSubstr stage strips duplicated spans of at least
+#: SUBSTRING_MIN_TOKENS tokens; the source mix (temperature 0.7)
+#: keeps MIX_BUDGET_FRAC of the cleaned release; chunks are
+#: CHUNK_TOKENS tokens with OVERLAP_TOKENS carried over
+SUBSTRING_MIN_TOKENS = 12
+MIX_BUDGET_FRAC = 0.6
+CHUNK_TOKENS = 64
+OVERLAP_TOKENS = 8
+
 
 def build_corpus_release(
     spark,
     docs: DataFrame,
     *,
-    min_tokens: int | None = None,
-    min_quality: float | None = None,
     decontaminate_index: str | None = None,
     substring_dedup: bool = False,
-    substring_min_tokens: int = 12,
-    budget_frac: float = 0.6,
-    chunk_tokens: int = 64,
-    overlap_tokens: int = 8,
     materialize: bool = True,
 ) -> dict:
     """Run the release pipeline over ``docs`` (doc_id, source, text).
@@ -64,7 +69,7 @@ def build_corpus_release(
     ``doc_id || ':' || chunk_idx`` (round-16 fix: the former
     ``doc_id*1000 + chunk_idx`` arithmetic key silently collided
     whenever a document yielded >= 1000 chunks — ~56k tokens at the
-    default 64/8 geometry, exactly the long-document tail a 100 TB
+    64/8 chunk geometry, exactly the long-document tail a 100 TB
     crawl has). Joins and shuffles should key on the composite
     (doc_id, chunk_idx) columns, which stay first-class in the
     schema; chunk_id exists for single-column sinks/manifests.
@@ -85,11 +90,11 @@ def build_corpus_release(
     improving with volume, vs the exact w=1 form's terminal ~3.3x
     plateau — BASELINE.md). The guarantee trade: winnowing certifies
     removal only for duplicated spans of at least
-    ``substring_min_tokens + 7`` tokens (Schleimer et al.'s winnowing
+    ``SUBSTRING_MIN_TOKENS + 7`` tokens (Schleimer et al.'s winnowing
     bound, L + w - 1); shorter duplicated spans MAY survive. The
     exact >= min_tokens guarantee is suffix.strip_duplicate_spans
     with winnow_w=1, at the enumeration cost (the q_substring_dedup
-    gate form). The source mix uses temperature alpha=0.7.
+    gate form).
 
     ``materialize`` (round-16 optimization): checkpoint the reused
     stage outputs (``cleaned`` — consumed by the dedup window AND the
@@ -131,9 +136,6 @@ def build_corpus_release(
         remove_boilerplate,
     )
 
-    min_tokens = CLEAN_MIN_TOKENS if min_tokens is None else min_tokens
-    min_quality = CLEAN_MIN_QUALITY if min_quality is None else min_quality
-
     cleaned = remove_boilerplate(docs)
     if materialize:
         # two consumers (the slim dedup relation and the winners
@@ -147,7 +149,8 @@ def build_corpus_release(
         qx["n_tokens"].alias("n_tokens"),
         qx["quality_score"].alias("q"),
     ).filter(
-        (F.col("n_tokens") >= min_tokens) & (F.col("q") >= min_quality)
+        (F.col("n_tokens") >= CLEAN_MIN_TOKENS)
+        & (F.col("q") >= CLEAN_MIN_QUALITY)
     )
     w = Window.partitionBy("fingerprint").orderBy("doc_id")
     winners = (
@@ -180,7 +183,7 @@ def build_corpus_release(
             release = release.localCheckpoint(eager=False)
         stripped = strip_duplicate_spans(
             release,
-            min_tokens=substring_min_tokens,
+            min_tokens=SUBSTRING_MIN_TOKENS,
             winnow_w=8,
             keep_first=True,
         )
@@ -197,10 +200,10 @@ def build_corpus_release(
     n_release = release.count()
     mixed = temperature_mix_keyed(
         release, "source", "doc_id", alpha=0.7,
-        budget=n_release * budget_frac,
+        budget=n_release * MIX_BUDGET_FRAC,
     )
     chunks = chunk_text(
-        mixed, chunk_tokens=chunk_tokens, overlap_tokens=overlap_tokens
+        mixed, chunk_tokens=CHUNK_TOKENS, overlap_tokens=OVERLAP_TOKENS
     ).select(
         "doc_id",
         "chunk_idx",

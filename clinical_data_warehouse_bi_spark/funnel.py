@@ -79,18 +79,16 @@ def cohort_retention(
     events: DataFrame,
     user_col: str = "user_id",
     ts_col: str = "ts",
-    period: str = "month",
 ) -> DataFrame:
-    """Cohort retention matrix — the other canonical ordered-behavior
-    BI query next to the funnel (the reference's per-admission
-    pre-agg generalized across time): users are cohorted by the
-    ``period`` ('month' or 'day') of their FIRST event; each later
-    period they appear in increments that cohort's retention at that
-    offset. Returns (cohort period-start date, month_offset int —
-    the offset in PERIODS, column name kept stable across
-    granularities — n_active bigint). Day granularity serves
-    short-span product analytics (and small fixtures) where a month
-    matrix collapses to one cell.
+    """Daily cohort retention matrix — the other canonical
+    ordered-behavior BI query next to the funnel (the reference's
+    per-admission pre-agg generalized across time): users are
+    cohorted by the DAY of their FIRST event; each later day they
+    appear in increments that cohort's retention at that offset.
+    Returns (cohort date, month_offset int — the offset in DAYS; the
+    column keeps the name the retired oracle SQL pins — n_active
+    bigint). Day granularity serves short-span product analytics
+    (and small fixtures) where a month matrix collapses to one cell.
 
     Scale shape: one user-key shuffle computes each user's cohort
     (partial min pushes map-side); the events join back to the
@@ -98,23 +96,16 @@ def cohort_retention(
     reuses the exchange); the (cohort, offset, user) distinct +
     count is a single-DISTINCT aggregation, never an Expand. The
     matrix itself is tiny (cohorts x offsets)."""
-    if period not in ("month", "day"):
-        raise ValueError(f"unknown cohort period: {period!r}")
     cohorts = events.groupBy(user_col).agg(
-        F.date_trunc(period, F.min(ts_col)).alias("__cohort")
-    )
-    offset = (
-        F.round(F.months_between("__m", "__cohort"))
-        if period == "month"
-        else F.datediff("__m", "__cohort")
+        F.date_trunc("day", F.min(ts_col)).alias("__cohort")
     )
     active = (
-        events.select(user_col, F.date_trunc(period, ts_col).alias("__m"))
+        events.select(user_col, F.date_trunc("day", ts_col).alias("__m"))
         .join(cohorts, user_col)
         .select(
             user_col,
             "__cohort",
-            offset.cast("int").alias("month_offset"),
+            F.datediff("__m", "__cohort").cast("int").alias("month_offset"),
         )
         .distinct()
     )

@@ -408,7 +408,6 @@ def temperature_mix_keyed(
     id_col: str,
     alpha: float,
     budget: float,
-    weight_col: str | None = None,
 ) -> DataFrame:
     """Temperature-weighted training mixture over one table of many
     sources (a ``source`` column): sizes every source in ONE scan (a
@@ -427,14 +426,11 @@ def temperature_mix_keyed(
     The size collect() is bounded by source cardinality — a dozen
     scalars per corpus, not data."""
     k = F.coalesce(F.col(key_col).cast("string"), F.lit("\x00null"))
-    measure = (
-        F.count(F.lit(1)).cast("double")
-        if weight_col is None
-        else F.coalesce(F.sum(weight_col), F.lit(0)).cast("double")
-    )
     sizes = {
         r["k"]: float(r["s"])
-        for r in df.groupBy(k.alias("k")).agg(measure.alias("s")).collect()
+        for r in df.groupBy(k.alias("k"))
+        .agg(F.count(F.lit(1)).cast("double").alias("s"))
+        .collect()
     }
     if not sizes:
         raise ValueError("temperature_mix_keyed: empty input")

@@ -582,7 +582,6 @@ def grouped_percentiles(
     group_cols: list[str],
     value_col: str,
     quantiles: list[float],
-    round_to: int | None = 6,
 ) -> DataFrame:
     """Exact interpolated percentiles PER GROUP — the grouped
     companion of exact_percentiles_distributed: one row per group
@@ -597,19 +596,15 @@ def grouped_percentiles(
     exact_percentiles_distributed, whose state is bounded histograms
     — that trade is the module's whole design note.
 
-    Values are rounded (default 6 dp) for display-grade outputs;
-    ``round_to=None`` skips rounding entirely — the interpolation
-    itself is bit-identical to DuckDB's quantile_cont on the same
-    doubles (the q_percentiles precedent), only the two engines'
-    round() implementations can diverge in the last ulp."""
+    Values are the raw interpolated doubles, never rounded: the
+    interpolation is bit-identical to DuckDB's quantile_cont on the
+    same doubles (the q_percentiles precedent), while the two
+    engines' round() implementations can diverge in the last ulp."""
     if not quantiles or not all(0.0 <= q <= 1.0 for q in quantiles):
         raise ValueError("quantiles must be fractions in [0, 1]")
     aggs = [
-        F.expr(
-            f"percentile({value_col}, {q!r})"
-            if round_to is None
-            else f"round(percentile({value_col}, {q!r}), {int(round_to)})"
-        ).alias(f"q_{str(q).replace('.', '_')}")
+        F.expr(f"percentile({value_col}, {q!r})")
+        .alias(f"q_{str(q).replace('.', '_')}")
         for q in quantiles
     ]
     return df.groupBy(*group_cols).agg(*aggs)

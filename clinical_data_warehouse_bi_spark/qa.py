@@ -460,9 +460,7 @@ def pivot_report(
     return df.groupBy(*rows).agg(*agg_exprs)
 
 
-def benford_profile(
-    df: DataFrame, col: str, int_scale: int | None = None
-) -> DataFrame:
+def benford_profile(df: DataFrame, col: str, int_scale: int) -> DataFrame:
     """First-significant-digit distribution vs Benford's law — the
     classic fabricated-numbers / data-entry-anomaly screen for
     financial and clinical measurement columns (Newcomb 1881,
@@ -476,28 +474,19 @@ def benford_profile(
     abs_dev < 0.006 close conformity, > 0.015 nonconformity — left
     to the caller because the right band depends on n.
 
-    Digit derivation (round-11 ADVICE): when the column is a
-    fixed-point quantity with a known decimal scale (prices: pass
-    ``int_scale=2``), the digit comes from the EXACT decimal string
-    of the integer ``floor(|x| * 10^scale + 0.5)`` — one IEEE
-    multiply/add/floor (bit-identical in any IEEE engine) followed
-    by integer-to-string, which is exact. This is the cross-engine
-    registered form: it avoids BOTH known divergence channels —
-    libm log10 is not correctly rounded at exact powers of 10 (JVM
-    vs DuckDB can flip the digit bucket), and double-to-string
-    rendering differs too (JDK-4511638: Java 17 prints 1e23 as
-    9.999999999999999E22 where shortest-roundtrip prints 1.0E23).
-    Values that round to 0 at the given scale are excluded with the
-    zeros (sub-resolution noise, not a leading digit).
-
-    The default (``int_scale=None``) keeps the general log10 path
-    for arbitrary-magnitude doubles, hardened against the exponent
-    off-by-one: if floor(log10(v)) lands one low/high the raw
-    quotient falls in [10,100) / [0,1) and is renormalized, so a
-    miscomputed log10 can no longer emit digit 0 or 10 — but the
-    corrected digit may still differ by one bucket from another
-    engine's libm at exact powers of 10, so cross-engine gates use
-    the int_scale form.
+    Digit derivation (round-11 ADVICE): the column is a fixed-point
+    quantity with a known decimal scale (prices: ``int_scale=2``),
+    and the digit comes from the EXACT decimal string of the integer
+    ``floor(|x| * 10^scale + 0.5)`` — one IEEE multiply/add/floor
+    (bit-identical in any IEEE engine) followed by integer-to-string,
+    which is exact. This avoids BOTH known cross-engine divergence
+    channels — libm log10 is not correctly rounded at exact powers
+    of 10 (JVM vs DuckDB can flip the digit bucket), and
+    double-to-string rendering differs too (JDK-4511638: Java 17
+    prints 1e23 as 9.999999999999999E22 where shortest-roundtrip
+    prints 1.0E23). Values that round to 0 at the given scale are
+    excluded with the zeros (sub-resolution noise, not a leading
+    digit).
 
     Scale shape: digit extraction is one per-row JVM expression;
     then ONE groupBy over a 9-value key space — map-side partials
@@ -505,20 +494,9 @@ def benford_profile(
     no second scan (the total comes from a window over the 9-row
     relation, not another pass)."""
     v = F.abs(F.col(col).cast("double"))
-    if int_scale is not None:
-        units = F.floor(v * F.pow(F.lit(10.0), F.lit(int_scale)) + F.lit(0.5))
-        keep = F.col(col).isNotNull() & (units > 0)
-        digit = F.substring(units.cast("string"), 1, 1).cast("int")
-    else:
-        e = F.floor(F.log10(v))
-        raw = v / F.pow(F.lit(10.0), e)
-        d0 = F.floor(raw)
-        digit = (
-            F.when(d0 >= 10, F.floor(raw / F.lit(10.0)))
-            .when(d0 < 1, F.floor(raw * F.lit(10.0)))
-            .otherwise(d0)
-        ).cast("int")
-        keep = F.col(col).isNotNull() & (v > 0)
+    units = F.floor(v * F.pow(F.lit(10.0), F.lit(int_scale)) + F.lit(0.5))
+    keep = F.col(col).isNotNull() & (units > 0)
+    digit = F.substring(units.cast("string"), 1, 1).cast("int")
     counts = (
         df.filter(keep)
         .groupBy(digit.alias("digit"))
@@ -617,11 +595,11 @@ def freshness_report(
     df: DataFrame,
     ts_col: str,
     as_of,
-    source_col: str | None = None,
+    source_col: str,
     recent_hours: int = 24,
 ) -> DataFrame:
-    """Data-freshness audit for an event-time table: per source (or
-    one row overall), the newest and oldest event, the lag from
+    """Data-freshness audit for an event-time table: per source, the
+    newest and oldest event, the lag from
     ``as_of`` to the newest event in hours, and the row count inside
     the trailing ``recent_hours`` window — the first thing an
     on-call checks when a dashboard flatlines (is the pipeline
@@ -637,7 +615,6 @@ def freshness_report(
     if recent_hours <= 0:
         raise ValueError("recent_hours must be positive")
     ref = F.lit(as_of).cast("timestamp")
-    keys = [F.col(source_col)] if source_col else []
     lag_h = (
         (F.unix_timestamp(ref) - F.unix_timestamp(F.max(F.col(ts_col))))
         / 3600.0
@@ -648,7 +625,7 @@ def freshness_report(
             >= ref - F.make_dt_interval(hours=F.lit(int(recent_hours)))
         ).cast("long")
     )
-    out = df.groupBy(*keys).agg(
+    out = df.groupBy(source_col).agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.min(ts_col).alias("oldest"),
         F.max(ts_col).alias("newest"),
@@ -658,83 +635,11 @@ def freshness_report(
     return out
 
 
-#: auto-mode budget for snapshot_diff's uniqueness probe: probe when
-#: the side's parquet-footer row count is at or under this (or when
-#: the input is not a file scan — then it is driver-bounded anyway)
-SNAPSHOT_UNIQUE_PROBE_MAX_ROWS = 100_000_000
-
-
-#: optimized-plan node names that can EMIT MORE ROWS than their scan
-#: holds — any of these voids the footer-sum upper bound below
-_ROW_MULTIPLYING_NODES = (
-    "Join", "Generate", "InPandas", "MapPartitions", "CoGroup",
-    "MapGroups", "FlatMap",
-    # round-16 advice: Expand (rollup/cube/grouping-sets) replicates
-    # every input row per grouping set, MapInArrow and the
-    # *EvalPython nodes run arbitrary-arity Python — all can emit
-    # more rows than the scan footers hold
-    "Expand", "MapInArrow", "EvalPython",
-)
-
-
-def _plan_multiplies_rows(df: DataFrame) -> bool:
-    """True when ``df``'s optimized plan contains an operator that
-    can produce more output rows than its inputs hold (join,
-    generate/explode, arbitrary-arity Python transforms) — the
-    shapes for which a parquet-footer sum is NOT an upper bound.
-    Conservative: an unreadable plan counts as multiplying."""
-    try:
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-    except Exception:  # noqa: BLE001 — plan not inspectable
-        return True
-    import re
-
-    # operator names lead each plan line (after tree-drawing glyphs);
-    # matching there never confuses a column alias for an operator
-    pat = "|".join(_ROW_MULTIPLYING_NODES)
-    return bool(
-        re.search(rf"^[\s+:\-]*'?\w*(?:{pat})", plan, re.MULTILINE)
-    )
-
-
-def _footer_rows(df: DataFrame) -> int | None:
-    """Sum of parquet-footer row counts behind ``df``'s scan — a
-    driver-side metadata read (io.parquet_num_rows per input file),
-    no job. None when any input is not footer-readable OR the plan
-    contains a row-multiplying operator (join/generate/...), since
-    the footer sum upper-bounds only scan/filter/project-shaped
-    plans — filters shrink a scan, but a join or explode can emit
-    far more rows than its input files hold (round-14 advice)."""
-    import pyarrow.parquet as pq
-
-    if _plan_multiplies_rows(df):
-        return None
-    try:
-        files = df.inputFiles()
-    except Exception:  # noqa: BLE001 — non-file-backed plan
-        return None
-    if not files:
-        return 0  # in-memory relation: driver-bounded by construction
-    total = 0
-    for f in files:
-        if not f.endswith(".parquet"):
-            return None
-        try:
-            total += int(
-                pq.ParquetFile(f.removeprefix("file:")).metadata.num_rows
-            )
-        except Exception:  # noqa: BLE001 — unreadable footer
-            return None
-    return total
-
-
 def snapshot_diff(
     old: DataFrame,
     new: DataFrame,
     key_cols: list[str],
     fingerprint_col: str = "fp",
-    *,
-    check_unique: bool | None = None,
 ) -> DataFrame:
     """Row-level diff between two snapshots of the same table — the
     reconciliation primitive an incremental pipeline runs before
@@ -759,41 +664,16 @@ def snapshot_diff(
     ~key + 32 hex chars per row, the minimum a row-level diff can
     ship. Snapshots bucketed by the key join with zero exchange.
 
-    ASSUMES ``key_cols`` is a unique key on EACH side — a snapshot
-    diff is only defined per key. Duplicate keys fan out in the
-    full-outer join, silently multiplying added/removed/changed rows
-    (and the join skews on the duplicated key). DEFAULT
-    (``check_unique=None``, round-13 verdict item 9): the probe runs
-    AUTOMATICALLY — loud failure on a duplicate-keyed snapshot —
-    gated by a free footer check: when a side's parquet-footer row
-    count (driver-side metadata, no job) exceeds
-    SNAPSHOT_UNIQUE_PROBE_MAX_ROWS the probe is skipped for that
-    side (at that scale the two extra count jobs are real money and
-    the caller is expected to own key hygiene upstream; pass
-    ``check_unique=True`` to force it anyway). Non-file-backed
-    inputs are driver-bounded and always probed. ``check_unique=
-    False`` opts out entirely (the hot-path production setting once
-    a pipeline's keys are trusted)."""
+    PRECONDITION: ``key_cols`` is a unique key on EACH side — a
+    snapshot diff is only defined per key, and nothing here checks
+    it. Duplicate keys fan out in the full-outer join, silently
+    multiplying added/removed/changed rows (and the join skews on
+    the duplicated key). The caller owns key hygiene: the registered
+    caller diffs the orders table on its primary key, with added
+    rows re-keyed past the key range, so its keys are unique by
+    construction."""
     if not key_cols:
         raise ValueError("key_cols must be non-empty")
-    if check_unique is None:
-        rows_old, rows_new = _footer_rows(old), _footer_rows(new)
-        check_unique = (
-            rows_old is not None
-            and rows_new is not None
-            and rows_old <= SNAPSHOT_UNIQUE_PROBE_MAX_ROWS
-            and rows_new <= SNAPSHOT_UNIQUE_PROBE_MAX_ROWS
-        )
-    if check_unique:
-        for side, df in (("old", old), ("new", new)):
-            total = df.count()
-            distinct = df.select(*key_cols).distinct().count()
-            if distinct != total:
-                raise ValueError(
-                    f"snapshot_diff: key_cols {key_cols} are not unique "
-                    f"on the {side} side ({total} rows, {distinct} "
-                    "distinct keys) — the diff would fan out"
-                )
     # explicit presence markers: a NULL key or NULL fingerprint on a
     # PRESENT side must not read as side-absent (NULL keys are real
     # groups here, the repo's null-safe-join convention)

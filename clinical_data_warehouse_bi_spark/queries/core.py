@@ -632,18 +632,16 @@ def q_grouped_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     linear-interpolation definition as DuckDB's quantile_cont, hence
     bit-identical on the same doubles — is the right plan: ONE
     shuffle, per-group state proportional to that group's values on
-    one executor. ``round_to=None`` keeps the raw bit-equal doubles
-    for the hash compare (rounding is the one step whose last-ulp
-    behaviour is engine-specific).
+    one executor. The raw doubles are bit-equal to DuckDB's, so the
+    hash compare needs no rounding (rounding is the one step whose
+    last-ulp behaviour is engine-specific).
 
     Reference analogue: the BI summary surface (DWH.sql:203-210),
     generalised to arbitrary grouping columns."""
     from clinical_data_warehouse_bi_spark.percentiles import grouped_percentiles
 
     ev = load_tables(spark, sf_dir, ("events",))["events"]
-    return grouped_percentiles(
-        ev, ["event_type"], "value", [0.5, 0.9, 0.99], round_to=None
-    )
+    return grouped_percentiles(ev, ["event_type"], "value", [0.5, 0.9, 0.99])
 
 
 #: stratified-sampling rates per event_type (training-mix shaping:

@@ -1,8 +1,10 @@
 """QA-suite queries (SURVEY.md sections 2.3 J11, 2.4 A3-A6, 2.7 U1)
 — the reference's QA.sql reconciliation suite re-expressed on the
 driver star schema. These both exercise operators and ARE the
-engine's data-quality surface (qa.py wraps them for arbitrary star
-schemas)."""
+engine's data-quality surface. Most wrap qa.py's schema-agnostic
+operators (expectation_report, pivot_report, outlier_report,
+benford_profile, freshness_report, snapshot_diff) around the driver's
+tables."""
 
 from __future__ import annotations
 
@@ -612,7 +614,7 @@ def q_freshness_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev,
         "ts",
         FRESHNESS_AS_OF,
-        source_col="event_type",
+        "event_type",
         recent_hours=FRESHNESS_HOURS,
     )
 
@@ -737,9 +739,4 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         o.withColumn("fp", fp),
         new.withColumn("fp", fp),
         ["o_orderkey"],
-        # keys are unique BY CONSTRUCTION (o_orderkey is the orders
-        # PK; the 'added' side re-keys at key+SHIFT beyond the key
-        # range), so the default auto-probe would spend four count
-        # jobs proving a tautology on every bench/gate run
-        check_unique=False,
     )

@@ -449,17 +449,15 @@ SQL_COHORT_RETENTION = """
 def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohort retention matrix (funnel.cohort_retention) — the other
     canonical ordered-behavior BI rollup next to the funnel: users
-    cohorted by first-event period, actives counted per (cohort,
+    cohorted by first-event day, actives counted per (cohort, day
     offset).
 
     Round-10 registry retirement (cap is 50; the slot went to
     q_rolling_aggregate): hash-checked since round 5 on a frozen
     implementation. Witnesses: q_readmission_gap carries the
     registered first-event-then-offset window family on the clinical
-    grain, and the month-granularity form keeps its own DuckDB parity
-    test in tests/test_properties.py. The full oracle comparison
-    stays live in tests/test_retired_parity.py against
-    SQL_COHORT_RETENTION.
+    grain. The full oracle comparison stays live in
+    tests/test_retired_parity.py against SQL_COHORT_RETENTION.
 
     Cohort rendered as a plain date STRING: a DATE column reaches
     the comparator as '2024-01-01' from Spark but as a pandas
@@ -467,7 +465,7 @@ def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     from clinical_data_warehouse_bi_spark.funnel import cohort_retention
 
     ev = load_tables(spark, sf_dir, ("events",))["events"]
-    return cohort_retention(ev, period="day").select(
+    return cohort_retention(ev).select(
         F.to_date("cohort").cast("string").alias("cohort"),
         "month_offset",
         "n_active",
@@ -783,6 +781,5 @@ def q_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return attribution(
         ev, "user_id", "ts", "event_type",
-        F.col("event_type") == "purchase",
-        model="both", lookback_days=ATTR_LOOKBACK_DAYS,
+        F.col("event_type") == "purchase", ATTR_LOOKBACK_DAYS,
     ).select("model", "user", "conversion_ts", "credited_channel", "touch_ts")

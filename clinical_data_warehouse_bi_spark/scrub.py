@@ -231,65 +231,41 @@ def dp_release(
     group_cols: list[str],
     epsilon: float,
     secret: str,
-    *,
-    k_min: float | None = None,
-    value_col: str | None = None,
-    value_low: float = 0.0,
-    value_high: float | None = None,
+    k_min: float,
 ) -> DataFrame:
-    """Differentially-private aggregate release (Laplace mechanism,
-    Dwork et al. 2006): per-group noisy counts — and, optionally, a
-    noisy BOUNDED sum — safe to publish outside the clinical zone.
-    The release-side complement of the k-anonymity gate: k-anonymity
-    measures a raw release's risk; dp_release produces a protected
-    one with a quantified privacy budget.
+    """Differentially-private count release (Laplace mechanism,
+    Dwork et al. 2006): per-group noisy counts safe to publish
+    outside the clinical zone. The release-side complement of the
+    k-anonymity gate: k-anonymity measures a raw release's risk;
+    dp_release produces a protected one with a quantified privacy
+    budget.
 
     Mechanics:
-    - count: sensitivity 1, Laplace(1/eps_c) noise.
-    - sum of ``value_col`` clamped to [value_low, value_high]:
-      sensitivity max(|low|, |high|), Laplace(sens/eps_s). Clamping
-      BEFORE aggregation is what makes the sensitivity finite — an
-      unbounded column has no finite-noise release.
-    - budget: epsilon is split evenly across the released statistics
-      (sequential composition), eps_c = eps_s = epsilon/2 when both.
-    - suppression (opt-in, ``k_min`` not None): groups whose NOISY
-      count < ``k_min`` are dropped —
+    - count: sensitivity 1, Laplace(1/epsilon) noise; the whole
+      budget goes to the one released statistic.
+    - suppression: groups whose NOISY count < ``k_min`` are dropped —
       thresholding on the noised value (the stability-based
       (eps,delta) construction used by production DP SQL engines),
       never on the true count, which would leak smallness exactly.
 
-    Noise is DETERMINISTIC per (secret, group, statistic) — keyed
-    md5, not an RNG. Deliberate: re-running the same release yields
-    the SAME noise, so repeated publication does not average the
-    noise away (the classic repeated-query attack) and incremental
-    pipelines stay idempotent. The secret must stay inside the
-    trust boundary with the raw data; anyone holding it can invert
-    the noise.
+    Noise is DETERMINISTIC per (secret, group) — keyed md5, not an
+    RNG. Deliberate: re-running the same release yields the SAME
+    noise, so repeated publication does not average the noise away
+    (the classic repeated-query attack) and incremental pipelines
+    stay idempotent. The secret must stay inside the trust boundary
+    with the raw data; anyone holding it can invert the noise.
 
-    Output: group_cols..., count (bigint, >= 0, rounded),
-    count_noisy (double, the pre-rounding value the threshold saw),
-    and with value_col: sum_<col> (double). ONE exchange (the
-    groupBy); the noise is a per-row JVM expression over the
-    group-grain relation."""
+    Output: group_cols..., count (bigint, >= 0, rounded) and
+    count_noisy (double, the pre-rounding value the threshold saw).
+    ONE exchange (the groupBy); the noise is a per-row JVM
+    expression over the group-grain relation."""
     if epsilon <= 0:
         raise ValueError("epsilon must be positive")
     if not secret:
         raise ValueError("dp_release requires a non-empty secret")
-    if value_col is not None and value_high is None:
-        raise ValueError("bounded sum needs value_high")
-    if value_col is not None and not value_high > value_low:
-        raise ValueError("value_high must exceed value_low")
-    n_stats = 2 if value_col is not None else 1
-    eps_each = float(epsilon) / n_stats
-
-    aggs = [F.count(F.lit(1)).cast("double").alias("__true_n")]
-    if value_col is not None:
-        clamped = F.greatest(
-            F.lit(float(value_low)),
-            F.least(F.lit(float(value_high)), F.col(value_col).cast("double")),
-        )
-        aggs.append(F.sum(clamped).alias("__true_s"))
-    grouped = df.groupBy(*[F.col(c) for c in group_cols]).agg(*aggs)
+    grouped = df.groupBy(*[F.col(c) for c in group_cols]).agg(
+        F.count(F.lit(1)).cast("double").alias("__true_n")
+    )
 
     # one stable key string per (secret, group, statistic)
     key_parts: list[Column] = [F.lit(secret)]
@@ -300,27 +276,13 @@ def dp_release(
     noised = grouped.withColumn(
         "count_noisy",
         F.col("__true_n")
-        + _laplace_noise(F.concat(gkey, F.lit("\x02count")), 1.0 / eps_each),
+        + _laplace_noise(
+            F.concat(gkey, F.lit("\x02count")), 1.0 / float(epsilon)
+        ),
     )
-    if value_col is not None:
-        sens = max(abs(float(value_low)), abs(float(value_high)))
-        noised = noised.withColumn(
-            f"sum_{value_col}",
-            F.col("__true_s")
-            + _laplace_noise(F.concat(gkey, F.lit("\x02sum")), sens / eps_each),
-        )
-    kept = (
-        noised
-        if k_min is None
-        else noised.filter(F.col("count_noisy") >= F.lit(float(k_min)))
+    return noised.filter(F.col("count_noisy") >= F.lit(float(k_min))).select(
+        *[F.col(c) for c in group_cols],
+        F.greatest(F.round("count_noisy", 0).cast("bigint"), F.lit(0))
+        .alias("count"),
+        F.col("count_noisy"),
     )
-    out_cols = (
-        [F.col(c) for c in group_cols]
-        + [
-            F.greatest(F.round("count_noisy", 0).cast("bigint"), F.lit(0))
-            .alias("count"),
-            F.col("count_noisy"),
-        ]
-        + ([F.col(f"sum_{value_col}")] if value_col is not None else [])
-    )
-    return kept.select(*out_cols)

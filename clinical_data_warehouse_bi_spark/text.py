@@ -301,7 +301,6 @@ def quota_sample(
     group_col: str = "source",
     n_per_group: int = 100,
     id_col: str = "doc_id",
-    priority_col: str | None = None,
 ) -> DataFrame:
     """Per-group quota cap: keep at most ``n_per_group`` documents
     per ``group_col`` value — the domain-capping step a corpus mix
@@ -313,8 +312,7 @@ def quota_sample(
     Selection is deterministic and unbiased WITHIN a group: priority
     is the md5 of the document id (a uniform content-independent
     ranking both engines reproduce — the q_corpus_clean fingerprint
-    convention), unless ``priority_col`` names a quality score to
-    keep the BEST n instead (descending, id-tiebroken).
+    convention), id-tiebroken.
 
     Scale shape: ONE shuffle on the group key. The rank<=n predicate
     compiles to WindowGroupLimit (plan-tested), so every map task
@@ -324,11 +322,9 @@ def quota_sample(
     one-giant-domain skew case at 100 TB."""
     from pyspark.sql import Window
 
-    if priority_col is None:
-        order = [F.md5(F.col(id_col).cast("string")).asc(), F.col(id_col).asc()]
-    else:
-        order = [F.col(priority_col).desc(), F.col(id_col).asc()]
-    w = Window.partitionBy(group_col).orderBy(*order)
+    w = Window.partitionBy(group_col).orderBy(
+        F.md5(F.col(id_col).cast("string")).asc(), F.col(id_col).asc()
+    )
     return (
         docs.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") <= int(n_per_group))
@@ -950,7 +946,15 @@ NGRAM_CAND_CAP = 100_000
 def _ngram_tokenize_flat(texts):
     """(flat token object-array, per-doc lengths) for a pandas Series
     of texts — the text.tokens contract ([a-z0-9]+ over lower()),
-    vectorized via pandas C string ops; nulls tokenize to nothing."""
+    vectorized via pandas C string ops; nulls tokenize to nothing.
+
+    Python's lower() is not the JVM's; the token streams agree as
+    long as both lowercase every character whose lowercase form is
+    in [a-z0-9] the same way (A-Z, U+0130 -> 'i' + U+0307, the Kelvin
+    sign -> 'k'). Other non-ASCII letters drop out of both streams.
+    tests/test_properties.py pins this on dotted I, the Kelvin sign,
+    sharp s, Greek final sigma, a ligature and fullwidth letters; no
+    input there tokenizes differently."""
     import itertools
 
     import numpy as np

@@ -143,73 +143,55 @@ def attribution(
     ts_col: str,
     channel_col: str,
     conversion_pred,
-    model: str = "last_touch",
-    lookback_days: int | None = None,
+    lookback_days: int,
 ) -> DataFrame:
     """Marketing/journey attribution: credit each CONVERSION event
-    to a touch channel — ``last_touch`` (the touch nearest before
-    the conversion) or ``first_touch`` (the journey's opener) —
-    the BI report behind every acquisition dashboard.
+    to a touch channel under both models at once — ``last_touch``
+    (the nearest touch before the conversion) and ``first_touch``
+    (the earliest one) — the BI report behind every acquisition
+    dashboard.
 
     ``conversion_pred`` is a Column predicate marking conversion
     rows; every other row is a touch. ``lookback_days`` is a window
     filter: only touches within that many days BEFORE the conversion
     are eligible, so ``first_touch`` credits the EARLIEST touch
     inside the window (not the journey opener, which may be stale)
-    and ``last_touch`` the nearest one inside it (None = unbounded
-    journey).
+    and ``last_touch`` the nearest one inside it.
 
-    Returns one row per conversion: (user, conversion ts, credited
-    channel, touch ts) — NULL channel when no touch qualifies.
+    Returns two rows per conversion, one per model: (model, user,
+    conversion ts, credited channel, touch ts) — NULL channel when
+    no touch qualifies.
 
     Declared tiebreak (round 11): same-instant touches are credited
     by CHANNEL order — last_touch takes the lexicographically
     GREATEST channel at the winning instant, first_touch the LEAST.
     Both models pick via min/max over a (epoch, channel, ts) struct,
     so the result is a total order — deterministic in any engine —
-    and channel+ts always come from the SAME touch row (the previous
-    two independent last_value(ignorenulls) picks could split them
-    when a touch carried a NULL channel). Touches with a NULL
-    channel are not creditable (they carry no attribution target).
+    and channel+ts always come from the SAME touch row. Touches with
+    a NULL channel are not creditable (they carry no attribution
+    target).
 
-    ``model="both"`` computes last_touch AND first_touch in the SAME
-    single window pass (min and max share one WindowSpec, so Catalyst
-    plans one Window operator over one exchange — half the scans and
-    shuffles of unioning two single-model calls) and emits one row
-    per conversion per model with a leading ``model`` column.
-
-    Scale shape: ONE user-keyed exchange; both models are a single
-    window pass over each user's timeline (running arg-max/arg-min
-    via min/max over the touch struct; the lookback swaps the rows
-    frame for a RANGE frame over epoch microseconds — same single
-    pass), never a per-conversion self-join against the touch
-    history (that join is O(conversions x touches) on power users —
-    the skew trap)."""
-    if model not in ("last_touch", "first_touch", "both"):
-        raise ValueError("model must be last_touch, first_touch or both")
+    Scale shape: ONE user-keyed exchange. min and max share one
+    RANGE-frame WindowSpec over epoch microseconds, so Catalyst plans
+    one Window operator over one exchange, and stack() unpivots the
+    two picks per conversion. Never a per-conversion self-join
+    against the touch history (that join is O(conversions x touches)
+    on power users — the skew trap)."""
     base = events.withColumn("__conv", conversion_pred)
     # epoch MICROSECONDS, not seconds: second-truncation silently
     # reorders same-second touch/conversion pairs and shifts the
     # lookback horizon by up to a second (the rolling_aggregate
     # sf0.1 lesson applied here)
     epoch = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    if lookback_days is None:
-        w = (
-            Window.partitionBy(user_col)
-            .orderBy(epoch, F.col("__conv").cast("int"))
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-    else:
-        # RANGE frame: eligible touches are those within the horizon
-        # before each row's own timestamp. The frame includes same-ts
-        # rows (conversions carry NULL touch columns, so only genuine
-        # same-instant touches — already eligible under the rows
-        # frame — contribute).
-        w = (
-            Window.partitionBy(user_col)
-            .orderBy(epoch)
-            .rangeBetween(-int(lookback_days) * 86400 * 1_000_000, 0)
-        )
+    # RANGE frame: eligible touches are those within the horizon
+    # before each row's own timestamp. The frame includes same-ts
+    # rows (conversions carry NULL touch columns, so only genuine
+    # same-instant touches contribute).
+    w = (
+        Window.partitionBy(user_col)
+        .orderBy(epoch)
+        .rangeBetween(-int(lookback_days) * 86400 * 1_000_000, 0)
+    )
     touch = F.when(
         ~F.col("__conv") & F.col(channel_col).isNotNull(),
         F.struct(
@@ -218,31 +200,18 @@ def attribution(
             F.col(ts_col).alias("t"),
         ),
     )
-    if model == "both":
-        conv = (
-            base.withColumn("__pl", F.max(touch).over(w))
-            .withColumn("__pf", F.min(touch).over(w))
-            .filter(F.col("__conv"))
-        )
-        return conv.select(
-            F.col(user_col).alias("user"),
-            F.col(ts_col).alias("conversion_ts"),
-            F.expr(
-                "stack(2,"
-                " 'last_touch',  __pl.c, __pl.t,"
-                " 'first_touch', __pf.c, __pf.t"
-                ") AS (model, credited_channel, touch_ts)"
-            ),
-        )
-    pick = (F.max if model == "last_touch" else F.min)(touch).over(w)
-    return (
-        base.withColumn("credited_channel", pick.getField("c"))
-        .withColumn("touch_ts", pick.getField("t"))
+    conv = (
+        base.withColumn("__pl", F.max(touch).over(w))
+        .withColumn("__pf", F.min(touch).over(w))
         .filter(F.col("__conv"))
-        .select(
-            F.col(user_col).alias("user"),
-            F.col(ts_col).alias("conversion_ts"),
-            "credited_channel",
-            "touch_ts",
-        )
+    )
+    return conv.select(
+        F.col(user_col).alias("user"),
+        F.col(ts_col).alias("conversion_ts"),
+        F.expr(
+            "stack(2,"
+            " 'last_touch',  __pl.c, __pl.t,"
+            " 'first_touch', __pf.c, __pf.t"
+            ") AS (model, credited_channel, touch_ts)"
+        ),
     )

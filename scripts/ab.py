@@ -17,6 +17,7 @@ Arms: spark@1x; duck@1x with --duckdb (the oracle, or the DuckDB
 mirror); both again on the N-fold replica with --factor N (for
 pipeline_star, N times the patients); the Spark arms from another
 checkout, e.g. a parent exported with git archive, with --tree DIR.
+Replicas are built once per run in one temp dir, removed at exit.
 --planted swaps in the planted-duplication corpus; --update-baseline
 writes BASELINE.md's BENCH_COMPARE block (implies --duckdb). --pairs 2
 is BENCH_COMPARE's best-of-2, --pairs 10 the A/B a claim needs.
@@ -38,6 +39,7 @@ import os
 import shutil
 import statistics
 import sys
+import tempfile
 import traceback
 from dataclasses import dataclass
 
@@ -47,7 +49,6 @@ sys.path.insert(0, ROOT)
 # Nothing at module level imports the engine: a worker for another
 # checkout puts that tree first on sys.path before its first import.
 
-OUT = "/tmp/spark_graft_scale"
 STAR, CORPUS, FLOOR = "pipeline_star", "pipeline_corpus_full", "spark_floor"
 
 
@@ -79,12 +80,13 @@ SHIFT_KEYS = {
 }
 
 
-def replicate(spark, factor: int, base: str) -> str:
-    """``base`` N-fold, keys shifted by replica * (max_key + 1): the
-    row count scales, the per-key group and cluster sizes do not."""
+def replicate(spark, factor: int, base: str, work: str) -> str:
+    """``base`` N-fold under the run's ``work`` dir, keys shifted by
+    replica * (max_key + 1): the row count scales, the per-key group
+    and cluster sizes do not."""
     from pyspark.sql import functions as F
 
-    out = f"{OUT}_{os.path.basename(base)}_{factor}x"
+    out = f"{work}/{os.path.basename(base)}_{factor}x"
     marker = os.path.join(out, "_READY")
     if os.path.exists(marker):
         return out
@@ -96,7 +98,7 @@ def replicate(spark, factor: int, base: str) -> str:
     # to each source's own max, so composition preserves referential
     # integrity and per-key cardinality exactly like one stage.
     if factor > 64 and factor % 4 == 0:
-        src = replicate(spark, factor // 4, base)
+        src = replicate(spark, factor // 4, base, work)
         mult = 4
     else:
         src, mult = base, factor
@@ -140,7 +142,7 @@ PLANTED_VOCAB = 30_000
 PLANTED_SEED = 101
 
 
-def replicate_planted(spark, factor: int, base: str) -> str:
+def replicate_planted(spark, factor: int, base: str, work: str) -> str:
     """documents := factor * PLANTED_BASE_DOCS UNIQUE synthetic docs
     (20-90 tokens, drawn per-doc-deterministically from a 30k vocab,
     so no 12-token window repeats by chance) with PLANTED_DUP_PCT %
@@ -151,7 +153,7 @@ def replicate_planted(spark, factor: int, base: str) -> str:
     so the oracle connection binds every view."""
     import numpy as np
 
-    out = f"{OUT}_planted_{os.path.basename(base)}_{factor}x"
+    out = f"{work}/planted_{os.path.basename(base)}_{factor}x"
     marker = os.path.join(out, "_READY")
     if os.path.exists(marker):
         return out
@@ -575,18 +577,19 @@ class Arm:
     def label(self) -> str:
         return f"{'tree:' if self.tree else ''}{self.engine}@{self.factor}x"
 
-    def data_dir(self, spark=None) -> str:
-        """Built by the Spark arm, which runs before DuckDB's."""
+    def data_dir(self, work: str, spark=None) -> str:
+        """Built under the run's ``work`` dir by the Spark arm, which
+        runs before DuckDB's."""
         if self.planted:
-            return replicate_planted(spark, self.factor, self.sf_dir)
+            return replicate_planted(spark, self.factor, self.sf_dir, work)
         if self.factor == 1:
             return self.sf_dir
-        return replicate(spark, self.factor, self.sf_dir)
+        return replicate(spark, self.factor, self.sf_dir, work)
 
-    def star(self) -> tuple[float, str]:
+    def star(self, work: str) -> tuple[float, str]:
         """pipeline_star's sf (sf_dir's, N-fold) and its DuckDB fixture dir."""
         sf = float(self.sf_dir.rstrip("/").rsplit("sf", 1)[-1]) * self.factor
-        return sf, f"{OUT}_star_sf{sf:g}"
+        return sf, f"{work}/star_sf{sf:g}"
 
 
 def _substring_w8(spark, sf_dir):
@@ -610,12 +613,12 @@ VARIANTS = {"q_substring_dedup_w8": _substring_w8, FLOOR: _floor}
 
 
 class SparkEngine:
-    def __init__(self, arm: Arm):
+    def __init__(self, arm: Arm, work: str):
         from clinical_data_warehouse_bi_spark.io import snapshot_persistent_rdds
         from clinical_data_warehouse_bi_spark.session import get_spark
         from perfbench.tracing import SparkAccount
 
-        self.arm, self.n = arm, 0
+        self.arm, self.work, self.n = arm, work, 0
         self.spark = get_spark("ab", extra_conf={"spark.ui.showConsoleProgress": "false"})
         self.acct = SparkAccount(self.spark)
         self.rdds = snapshot_persistent_rdds(self.spark)
@@ -634,14 +637,14 @@ class SparkEngine:
         spark = self.spark
         self.reset()
         if name == STAR:
-            sf, out = self.arm.star()
+            sf, out = self.arm.star(self.work)
             s = bench.star_setup(spark, sf)
             if not os.path.exists(f"{out}/_READY"):
                 for t, df in s.sources.items():
                     df.write.mode("overwrite").parquet(f"{out}/{t}.parquet")
                 open(f"{out}/_READY", "w").write("ok")
             return s.run, s.after, json.dumps(s.anchors, sort_keys=True)
-        data = self.arm.data_dir(spark)
+        data = self.arm.data_dir(self.work, spark)
         if name == CORPUS:
             s = bench.corpus_full_setup(spark, data)
             ids = s.anchors["doc_ids"]
@@ -679,6 +682,7 @@ class SparkEngine:
 @dataclass
 class DuckEngine:
     arm: Arm
+    work: str
 
     def setup(self, name: str) -> tuple | None:
         """(run, None, checksum) of ``name``'s DuckDB twin, after its
@@ -688,12 +692,12 @@ class DuckEngine:
         from scripts.check_parity import duck_con
 
         if name == STAR:
-            con = duck_con(self.arm.star()[1], SOURCES)
+            con = duck_con(self.arm.star(self.work)[1], SOURCES)
             con.execute(DUCK_PIPELINE)  # warm-up
             counts = {k: con.execute(q).fetchone()[0] for k, q in STAR_COUNTS.items()}
             counts = json.dumps(counts, sort_keys=True)
             return lambda: con.execute(DUCK_PIPELINE), None, counts
-        con = duck_con(self.arm.data_dir())
+        con = duck_con(self.arm.data_dir(self.work))
         if name == CORPUS:
             sql = duck_mirror_sql(_STOP_LIST_SQL)
             ids = sorted(con.execute(sql).fetchone()[1])  # warm-up
@@ -717,7 +721,7 @@ class DuckEngine:
                 "py_cpu_s": 0.0, "tasks": 0, "shuffle_mb": 0.0, "spill_mb": 0.0}
 
 
-def _serve(conn, arm: Arm) -> None:
+def _serve(conn, arm: Arm, work: str) -> None:
     """A worker: ("setup", name) -> {"checksum"} | {"skip"}, ("run", name)
     -> one run's record, ("stop", None); a failure answers {"error"}."""
     import perfbench.tracing  # noqa: F401 - the measuring code is this checkout's
@@ -728,7 +732,7 @@ def _serve(conn, arm: Arm) -> None:
     while (msg := conn.recv())[0] != "stop":
         cmd, name = msg
         try:
-            eng = eng or (SparkEngine if arm.engine == "spark" else DuckEngine)(arm)
+            eng = eng or (SparkEngine if arm.engine == "spark" else DuckEngine)(arm, work)
             if cmd == "setup":
                 cells[name] = eng.setup(name)
                 conn.send({"skip": True} if cells[name] is None
@@ -782,15 +786,18 @@ def _report(c: dict, first: dict) -> None:
 def compare(rows: list[list[tuple[Arm, str]]], pairs: int) -> tuple[list[dict], int]:
     """Time each row's (arm, name) cells against each other. Cells on
     the same data must agree. Returns the row records and the exit
-    status, 1 on a mismatch or an error."""
+    status, 1 on a mismatch or an error. Replicas and fixture dirs are
+    built under one temp dir that is removed when the workers stop."""
     ctx = mp.get_context("spawn")
+    work = tempfile.mkdtemp(prefix="spark_graft_scale_")
     workers = {}
-    for arm in dict.fromkeys(a for row in rows for a, _ in row):
-        conn, child = ctx.Pipe()
-        workers[arm] = (conn, ctx.Process(target=_serve, args=(child, arm), daemon=True))
-        workers[arm][1].start()
     out, status = [], 0
     try:
+        for arm in dict.fromkeys(a for row in rows for a, _ in row):
+            conn, child = ctx.Pipe()
+            proc = ctx.Process(target=_serve, args=(child, arm, work), daemon=True)
+            workers[arm] = (conn, proc)
+            proc.start()
         for row in rows:
             cells = []
             for arm, name in row:  # Spark before DuckDB: see Arm.data_dir
@@ -825,6 +832,7 @@ def compare(rows: list[list[tuple[Arm, str]]], pairs: int) -> tuple[list[dict], 
             proc.join(timeout=120)
             if proc.is_alive():
                 proc.terminate()
+        shutil.rmtree(work, ignore_errors=True)
     return out, status
 
 

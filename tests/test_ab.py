@@ -1,8 +1,13 @@
 """Smoke test of scripts/ab.py, the A/B harness: one Spark arm and one
 DuckDB arm on a cheap oracle-checked query agree and report executor
-CPU and tasks, and two arms that disagree make it exit non-zero."""
+CPU and tasks, two arms that disagree make it exit non-zero, and a
+replica run leaves no replica behind."""
 
 from __future__ import annotations
+
+import glob
+import os
+import tempfile
 
 from scripts import ab
 
@@ -28,3 +33,13 @@ def test_a_checksum_mismatch_exits_non_zero(sf_dir):
     assert rows[0]["agree"] is False
     a, b = rows[0]["cells"]
     assert a["checksum"] != b["checksum"]
+
+
+def test_factor_run_removes_its_replicas(sf_dir):
+    """--factor 2 builds the 2x replica in a per-run temp dir and
+    removes it when the run ends."""
+    pattern = os.path.join(tempfile.gettempdir(), "spark_graft_scale_*")
+    before = set(glob.glob(pattern))
+    assert ab.main(["--sf-dir", sf_dir, "--factor", "2", "--pairs", "1",
+                    "q_join_lookup_cast"]) == 0
+    assert set(glob.glob(pattern)) <= before

@@ -266,7 +266,6 @@ def test_full_release_drops_planted_contamination_and_substring_dups(
         corpus,
         decontaminate_index=idx,
         substring_dedup=True,
-        substring_min_tokens=12,
     )
     rel = {
         r["doc_id"]: r["text"] for r in full["release"].collect()
@@ -288,37 +287,34 @@ def test_release_chunk_ids_collision_free_past_1000_chunks(spark):
     key must not collide for documents longer than 1000 chunks. The
     former arithmetic key (doc_id*1000 + chunk_idx) mapped doc 7's
     chunk 1000 onto doc 8's chunk 0 — exactly the long-document tail
-    a 100 TB crawl has (~56k tokens at the default 64/8 geometry).
+    a 100 TB crawl has (~56k tokens at the 64/8 chunk geometry).
     The fixed contract: chunks carry the composite (doc_id,
     chunk_idx) as first-class columns plus the collision-free string
     key doc_id||':'||chunk_idx."""
-    from clinical_data_warehouse_bi_spark.corpus import build_corpus_release
+    from clinical_data_warehouse_bi_spark.corpus import (
+        CHUNK_TOKENS,
+        OVERLAP_TOKENS,
+        build_corpus_release,
+    )
 
-    # doc 7: 4004 distinct-ish tokens -> 1001 chunks at 4/0 geometry;
-    # doc 8 exists so the old key's collision target is present.
-    long_text = " ".join(f"w{i} alpha{i % 97}" for i in range(2002))
+    # doc 7: distinct tokens, enough for 1001+ chunks at the release
+    # geometry; doc 8 exists so the old key's collision target is
+    # present. All-distinct tokens pass the quality gate, and docs 7
+    # and 8 each sit alone in a source next to a 20-doc source, so
+    # the temperature mix keeps both whole.
+    n_tok = 1001 * (CHUNK_TOKENS - OVERLAP_TOKENS) + OVERLAP_TOKENS
+    words = lambda p, n: " ".join(f"{p}{i}" for i in range(n))  # noqa: E731
     docs = spark.createDataFrame(
-        [
-            (7, "a", long_text),
-            (8, "a", "short document body with plain words here"),
-            (9, "b", "another short document body entirely unlike it"),
-        ],
+        [(7, "a", words("w", n_tok)), (8, "b", words("short", 40))]
+        + [(100 + i, "big", words(f"d{i}x", 40)) for i in range(20)],
         "doc_id long, source string, text string",
     )
-    r = build_corpus_release(
-        spark,
-        docs,
-        min_tokens=1,
-        min_quality=-1e9,
-        budget_frac=1.0,
-        chunk_tokens=4,
-        overlap_tokens=0,
-    )
+    r = build_corpus_release(spark, docs)
     chunks = r["chunks"]
     assert set(chunks.columns) == {
         "doc_id", "chunk_idx", "chunk_id", "chunk_text"
     }
-    rows = chunks.collect()
+    rows = chunks.filter("doc_id IN (7, 8)").collect()
     per_doc = {}
     for row in rows:
         per_doc.setdefault(row["doc_id"], []).append(row)
@@ -326,12 +322,12 @@ def test_release_chunk_ids_collision_free_past_1000_chunks(spark):
     assert len(per_doc[7]) > 1000, "long doc must exceed 1000 chunks"
     # the old arithmetic key would have collided 7:1000 with 8:0 —
     # the string key cannot: every chunk_id is globally unique
-    ids = [row["chunk_id"] for row in rows]
+    ids = [row["chunk_id"] for row in chunks.select("chunk_id").collect()]
     assert len(ids) == len(set(ids))
     assert "7:1000" in set(ids) and "8:0" in set(ids)
 
 
-def test_release_barriers_equal_unmaterialized(spark):
+def test_release_barriers_equal_unmaterialized(spark, sf_dir):
     """Round-16 optimization: the localCheckpoint barriers added to
     build_corpus_release (cleaned / pre-strip release / final
     release) are pure reuse points — the released doc set, the mixed
@@ -340,29 +336,25 @@ def test_release_barriers_equal_unmaterialized(spark):
     where a plan recomputes, never what it computes."""
     from clinical_data_warehouse_bi_spark.corpus import build_corpus_release
 
-    rows = []
-    for i in range(40):
-        body = f"document {i} body token{i % 7} " + " ".join(
-            f"w{j * (i % 5 + 1)}" for j in range(30)
-        )
-        # plant exact duplicates so the dedup window has work
-        rows.append(
-            (i, f"src{i % 3}", body if i % 11 or not rows else rows[0][2])
-        )
-    docs = spark.createDataFrame(rows, "doc_id long, source string, text string")
+    real = read_table(spark, sf_dir, "documents").select(
+        "doc_id", "source", "text"
+    )
+    # plant exact duplicates and a shared span past the ExactSubstr
+    # guarantee (L + w - 1 tokens) so the dedup stages have work
+    first = real.orderBy("doc_id").limit(3).collect()
+    base_id = real.agg(F.max("doc_id")).first()[0] + 1
+    span = " ".join(f"sharedspan{i}" for i in range(24))
+    planted = spark.createDataFrame(
+        [(base_id + i, r["source"], r["text"]) for i, r in enumerate(first)]
+        + [(base_id + 10 + i, r["source"], r["text"] + "\n" + span)
+           for i, r in enumerate(first)],
+        "doc_id long, source string, text string",
+    )
+    docs = real.unionByName(planted)
 
     def snap(materialize):
         r = build_corpus_release(
-            spark,
-            docs,
-            min_tokens=1,
-            min_quality=-1e9,
-            substring_dedup=True,
-            substring_min_tokens=6,
-            budget_frac=0.9,
-            chunk_tokens=8,
-            overlap_tokens=2,
-            materialize=materialize,
+            spark, docs, substring_dedup=True, materialize=materialize
         )
         release = sorted(
             (row["doc_id"], row["source"], row["text"])

@@ -268,7 +268,7 @@ def test_distributed_special_output_names(spark):
 
 def test_grouped_percentiles_match_duckdb_quantile_cont(spark, duck, sf_dir):
     """Exact per-group interpolated percentiles == DuckDB's
-    quantile_cont for every group, at the rounding digit."""
+    quantile_cont for every group, unrounded."""
     from clinical_data_warehouse_bi_spark.io import load_tables
     from clinical_data_warehouse_bi_spark.percentiles import grouped_percentiles
 
@@ -283,9 +283,9 @@ def test_grouped_percentiles_match_duckdb_quantile_cont(spark, duck, sf_dir):
         r[0]: (r[1], r[2], r[3])
         for r in duck.execute("""
             SELECT l_returnflag,
-                   round(quantile_cont(l_extendedprice, 0.5), 6),
-                   round(quantile_cont(l_extendedprice, 0.9), 6),
-                   round(quantile_cont(l_extendedprice, 0.99), 6)
+                   quantile_cont(CAST(l_extendedprice AS DOUBLE), 0.5),
+                   quantile_cont(CAST(l_extendedprice AS DOUBLE), 0.9),
+                   quantile_cont(CAST(l_extendedprice AS DOUBLE), 0.99)
             FROM lineitem GROUP BY l_returnflag
         """).fetchall()
     }

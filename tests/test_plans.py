@@ -523,8 +523,8 @@ def test_expectations_scans_each_table_once_plus_anti(spark, sf_dir):
 def test_attribution_both_single_exchange_single_scan(spark, sf_dir):
     """q_attribution: min and max over the SAME WindowSpec must plan
     one Window pass over one user-keyed exchange and ONE events scan
-    — the model=\"both\" fusion's whole point (the union-of-models
-    form paid 2 scans + 2 exchanges)."""
+    — the two-model fusion's whole point (a union of two single-model
+    passes paid 2 scans + 2 exchanges)."""
     import re
 
     plan = physical_plan(QUERIES["q_attribution"](spark, sf_dir))

@@ -752,8 +752,8 @@ def test_lm_perplexity_semantics(spark):
 
 def test_quota_sample_matches_duckdb(spark, sf_dir, duck):
     """text.quota_sample vs the same row_number construction in
-    DuckDB on the real documents table: identical kept doc set for
-    the hash-priority form AND the quality-priority form."""
+    DuckDB on the real documents table: identical kept doc set under
+    the md5-of-id priority."""
     from clinical_data_warehouse_bi_spark import text as T
     from clinical_data_warehouse_bi_spark.io import read_table
 
@@ -772,24 +772,6 @@ def test_quota_sample_matches_duckdb(spark, sf_dir, duck):
         """).fetchall()
     )
     assert got == want and len(got) > 0
-
-    got_q = sorted(
-        r.doc_id
-        for r in T.quota_sample(
-            docs, "source", 30, priority_col="n_chars"
-        ).collect()
-    )
-    want_q = sorted(
-        r[0]
-        for r in duck.execute("""
-            SELECT doc_id FROM (
-              SELECT doc_id, row_number() OVER (
-                PARTITION BY source
-                ORDER BY n_chars DESC, doc_id) AS rn
-              FROM documents) t WHERE rn <= 30
-        """).fetchall()
-    )
-    assert got_q == want_q
     # every group capped, none emptied
     from collections import Counter
 
@@ -814,20 +796,20 @@ def test_cohort_retention_matches_duckdb(spark, sf_dir, duck):
         (str(c), int(o)): n
         for c, o, n in duck.execute("""
             WITH c AS (SELECT user_id,
-                              date_trunc('month', min(ts)) AS cohort
+                              date_trunc('day', min(ts)) AS cohort
                        FROM events GROUP BY user_id),
             a AS (SELECT DISTINCT e.user_id, c.cohort,
-                         datediff('month', c.cohort,
-                                  date_trunc('month', e.ts)) AS off
+                         datediff('day', c.cohort,
+                                  date_trunc('day', e.ts)) AS off
                   FROM events e JOIN c USING (user_id))
             SELECT CAST(cohort AS DATE), off, count(*)
             FROM a GROUP BY 1, 2
         """).fetchall()
     }
     assert got == want and len(got) > 0
-    # offset-0 row exists for every cohort (a user is active in their
-    # own first month by construction)
-    assert all((c, 0) in got for c, o in got if o == 0)
+    # offset-0 row exists for every cohort (a user is active on their
+    # own first day by construction)
+    assert all((c, 0) in got for c, _ in got)
 
 
 def test_resample_fill_matches_duckdb(spark, sf_dir, duck):
@@ -1380,6 +1362,49 @@ def test_top_ngrams_rejects_non_bigint_id(spark):
         T2.top_ngrams(docs, n=2, k=3)
 
 
+def test_ngram_tokenizer_matches_jvm_tokens_on_non_ascii(spark):
+    """The Python n-gram tokenizer (``_ngram_tokenize_flat``: pandas
+    ``str.lower()`` then ``[a-z0-9]+``) and the JVM ``text.tokens``
+    (Spark ``lower`` then the same regex) agree on non-ASCII input.
+    The two lowercasings are different code (Python's Unicode tables
+    vs the JVM's), so equivalence rests on one assumption: they agree
+    on every character whose lowercase form falls in ``[a-z0-9]``.
+    Besides A-Z, that is U+0130 (dotted capital I, which lowers to
+    'i' plus a combining dot) and U+212A (the Kelvin sign, which
+    lowers to 'k'). Characters that lower to non-ASCII letters (the
+    capital sharp s, Greek with its final sigma, ligatures) drop out
+    of both token streams the same way, so any difference there is
+    invisible. No input below tokenizes differently."""
+    import pandas as pd
+
+    inputs = [
+        "\u0130stanbul",          # dotted capital I
+        "\u212aelvin 5\u212a",    # Kelvin sign
+        "STRA\u1e9eE stra\u00dfe",  # capital and small sharp s
+        "\u039f\u0394\u039f\u03a3 abc \u03c3\u03b1\u03c2",  # final sigma
+        "\ufb01ne \uff21BC",      # fi ligature, fullwidth A
+        "plain ASCII 42",
+    ]
+    df = spark.createDataFrame(list(enumerate(inputs)), "i int, text string")
+    jvm = {
+        r["i"]: list(r["t"])
+        for r in df.select("i", T.tokens("text").alias("t")).collect()
+    }
+    flat, lens = T._ngram_tokenize_flat(pd.Series(inputs))
+    py, at = {}, 0
+    for i, n in enumerate(lens):
+        py[i], at = list(flat[at:at + n]), at + n
+    assert py == jvm
+    assert py == {
+        0: ["i", "stanbul"],
+        1: ["kelvin", "5k"],
+        2: ["stra", "e", "stra", "e"],
+        3: ["abc"],
+        4: ["ne", "bc"],
+        5: ["plain", "ascii", "42"],
+    }
+
+
 # ------------------------------------------------ benford_profile
 
 
@@ -1389,18 +1414,22 @@ def test_benford_matches_duckdb_on_lineitem(spark, sf_dir, duck):
     li = read_table(spark, sf_dir, "lineitem")
     got = sorted(
         (r["digit"], r["n"], round(r["observed_p"], 9))
-        for r in qa.benford_profile(li, "l_extendedprice").collect()
+        for r in qa.benford_profile(
+            li, "l_extendedprice", int_scale=2
+        ).collect()
     )
     want = sorted(
         (d, n, round(p, 9))
         for d, n, p in duck.execute("""
-            WITH v AS (
-              SELECT floor(abs(CAST(l_extendedprice AS DOUBLE))
-                     / pow(10, floor(log10(abs(CAST(l_extendedprice AS DOUBLE))))))
-                     ::INT AS digit
+            WITH u AS (
+              SELECT CAST(floor(abs(CAST(l_extendedprice AS DOUBLE))
+                                * 100.0 + 0.5) AS BIGINT) AS units
               FROM lineitem
-              WHERE l_extendedprice IS NOT NULL
-                AND abs(CAST(l_extendedprice AS DOUBLE)) > 0)
+              WHERE l_extendedprice IS NOT NULL),
+            v AS (
+              SELECT CAST(substring(CAST(units AS VARCHAR), 1, 1) AS INT)
+                     AS digit
+              FROM u WHERE units > 0)
             SELECT digit, count(*) AS n,
                    count(*) / sum(count(*)) OVER () AS p
             FROM v GROUP BY digit
@@ -1420,7 +1449,7 @@ def test_benford_discriminates_natural_from_uniform(spark):
 
     def mad(rows):
         df = spark.createDataFrame(rows, "v double")
-        out = qa.benford_profile(df, "v").collect()
+        out = qa.benford_profile(df, "v", int_scale=2).collect()
         return sum(r["abs_dev"] for r in out) / len(out)
 
     assert mad(natural) < 0.01        # log-uniform IS Benford
@@ -1433,7 +1462,8 @@ def test_benford_excludes_zero_null_and_uses_abs(spark):
     df = spark.createDataFrame(
         [(0.0,), (None,), (-314.0,), (0.0072,)], "v double"
     )
-    rows = {r["digit"]: r["n"] for r in qa.benford_profile(df, "v").collect()}
+    rows = {r["digit"]: r["n"]
+            for r in qa.benford_profile(df, "v", int_scale=4).collect()}
     assert rows == {3: 1, 7: 1}
 
 
@@ -1544,6 +1574,9 @@ def _attribution_python(rows, model, lookback_days=None):
 
 
 def test_attribution_matches_python_model(spark, sf_dir):
+    from clinical_data_warehouse_bi_spark.queries.windows import (
+        ATTR_LOOKBACK_DAYS,
+    )
     from clinical_data_warehouse_bi_spark.timeseries import attribution
 
     ev = read_table(spark, sf_dir, "events").select(
@@ -1554,18 +1587,19 @@ def test_attribution_matches_python_model(spark, sf_dir):
          r["event_type"], r["event_type"] == "purchase")
         for r in ev.collect()
     ]
+    out = attribution(
+        ev, "user_id", "ts", "event_type",
+        F.col("event_type") == "purchase", ATTR_LOOKBACK_DAYS,
+    ).collect()
     for model in ("last_touch", "first_touch"):
         got = sorted(
             (r["user"], int(round(r["conversion_ts"].timestamp() * 1_000_000)),
              r["credited_channel"],
              int(round(r["touch_ts"].timestamp() * 1_000_000))
              if r["touch_ts"] else None)
-            for r in attribution(
-                ev, "user_id", "ts", "event_type",
-                F.col("event_type") == "purchase", model=model,
-            ).collect()
+            for r in out if r["model"] == model
         )
-        want = _attribution_python(rows, model)
+        want = _attribution_python(rows, model, ATTR_LOOKBACK_DAYS)
         assert got == want and len(got) > 0
 
 
@@ -1582,13 +1616,15 @@ def test_attribution_lookback_voids_stale_credit(spark):
         rows, "user_id int, ts string, event_type string, conv boolean"
     ).withColumn("ts", F.to_timestamp("ts"))
     out = {
-        r["user"]: r["credited_channel"]
+        (r["model"], r["user"]): r["credited_channel"]
         for r in attribution(
-            df, "user_id", "ts", "event_type", F.col("conv"),
-            lookback_days=30,
+            df, "user_id", "ts", "event_type", F.col("conv"), 30
         ).collect()
     }
-    assert out == {1: None, 2: "ad"}
+    for model in ("last_touch", "first_touch"):
+        assert {u: out[m, u] for m, u in out if m == model} == {
+            1: None, 2: "ad"
+        }
 
 
 def test_attribution_first_touch_lookback_is_window_filter(spark):
@@ -1606,11 +1642,13 @@ def test_attribution_first_touch_lookback_is_window_filter(spark):
     df = spark.createDataFrame(
         rows, "user_id int, ts string, event_type string, conv boolean"
     ).withColumn("ts", F.to_timestamp("ts"))
-    out = attribution(
-        df, "user_id", "ts", "event_type", F.col("conv"),
-        model="first_touch", lookback_days=30,
-    ).collect()
-    assert len(out) == 1 and out[0]["credited_channel"] == "ad"
+    out = {
+        r["model"]: r["credited_channel"]
+        for r in attribution(
+            df, "user_id", "ts", "event_type", F.col("conv"), 30
+        ).collect()
+    }
+    assert out == {"first_touch": "ad", "last_touch": "email"}
 
 
 def test_attribution_tiebreak_is_deterministic_by_channel(spark):
@@ -1629,14 +1667,17 @@ def test_attribution_tiebreak_is_deterministic_by_channel(spark):
     df = spark.createDataFrame(
         rows, "user_id int, ts string, event_type string, conv boolean"
     ).withColumn("ts", F.to_timestamp("ts"))
-    for model, want in (("last_touch", "email"), ("first_touch", "ad")):
-        out = attribution(
-            df, "user_id", "ts", "event_type", F.col("conv"), model=model
+    out = {
+        r["model"]: r
+        for r in attribution(
+            df, "user_id", "ts", "event_type", F.col("conv"), 30
         ).collect()
-        assert len(out) == 1
-        assert out[0]["credited_channel"] == want, (model, out)
+    }
+    assert len(out) == 2
+    for model, want in (("last_touch", "email"), ("first_touch", "ad")):
+        assert out[model]["credited_channel"] == want, (model, out)
         # channel and ts from the SAME row: never the NULL-channel ts
-        assert str(out[0]["touch_ts"]) == "2024-01-01 00:00:00"
+        assert str(out[model]["touch_ts"]) == "2024-01-01 00:00:00"
 
 
 def test_attribution_single_exchange(spark, sf_dir):
@@ -1647,7 +1688,7 @@ def test_attribution_single_exchange(spark, sf_dir):
     )
     out = attribution(
         ev, "user_id", "ts", "event_type",
-        F.col("event_type") == "purchase",
+        F.col("event_type") == "purchase", 30,
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1, plan
@@ -1798,7 +1839,8 @@ def test_freshness_report_single_aggregation(spark, sf_dir):
     import pytest
 
     with pytest.raises(ValueError):
-        qa.freshness_report(ev, "ts", "2025-01-01", recent_hours=0)
+        qa.freshness_report(ev, "ts", "2025-01-01", "event_type",
+                            recent_hours=0)
 
 
 # --------------------------------------- chunk_text property sweep
@@ -2040,35 +2082,6 @@ def test_outlier_report_oracle_shaped_duckdb_parity(spark, sf_dir, duck):
     assert got == want
 
 
-def test_attribution_both_equals_union_of_models(spark, sf_dir):
-    """model=\"both\" (one window pass + stack) returns exactly the
-    union of the two single-model outputs, row for row."""
-    from clinical_data_warehouse_bi_spark.timeseries import attribution
-
-    ev = read_table(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_type"
-    )
-    pred = F.col("event_type") == "purchase"
-    both = sorted(
-        (r["model"], r["user"], str(r["conversion_ts"]),
-         r["credited_channel"], str(r["touch_ts"]))
-        for r in attribution(
-            ev, "user_id", "ts", "event_type", pred,
-            model="both", lookback_days=30,
-        ).collect()
-    )
-    want = sorted(
-        (m, r["user"], str(r["conversion_ts"]),
-         r["credited_channel"], str(r["touch_ts"]))
-        for m in ("last_touch", "first_touch")
-        for r in attribution(
-            ev, "user_id", "ts", "event_type", pred,
-            model=m, lookback_days=30,
-        ).collect()
-    )
-    assert both == want and len(both) > 0
-
-
 def test_tfidf_keywords_hand_computed(spark):
     """text.tfidf_keywords on a corpus small enough to check by hand:
     N = 4 docs (doc 4 tokenizes empty but still counts toward N);
@@ -2180,110 +2193,6 @@ def test_snapshot_diff_rejects_empty_keys_and_handles_null_fp(spark):
     new = spark.createDataFrame([(1, None), (2, "x")], "k int, fp string")
     got = {r["k"]: r["change"] for r in snapshot_diff(old, new, ["k"]).collect()}
     assert got == {2: "changed"}
-
-
-def test_snapshot_diff_check_unique_probe(spark):
-    """check_unique=True fails loudly on duplicate keys (the silent
-    full-outer fan-out mode the round-12 advice flagged) and passes
-    through unchanged on unique keys — including NULL keys, which
-    are one real group under the null-safe join, so two NULL-key
-    rows on one side count as duplicates."""
-    import pytest as _pytest
-
-    from clinical_data_warehouse_bi_spark.qa import snapshot_diff
-
-    uniq = spark.createDataFrame([(1, "a"), (2, "b")], "k int, fp string")
-    dup = spark.createDataFrame([(1, "a"), (1, "b")], "k int, fp string")
-    # unique sides: probe passes, diff unchanged
-    assert snapshot_diff(uniq, uniq, ["k"], check_unique=True).count() == 0
-    for bad_old, bad_new in ((dup, uniq), (uniq, dup)):
-        with _pytest.raises(ValueError, match="not unique"):
-            snapshot_diff(bad_old, bad_new, ["k"], check_unique=True)
-    nulldup = spark.createDataFrame(
-        [(None, "a"), (None, "b")], "k int, fp string"
-    )
-    with _pytest.raises(ValueError, match="not unique"):
-        snapshot_diff(nulldup, uniq, ["k"], check_unique=True)
-
-
-def test_snapshot_diff_probe_on_by_default(spark, tmp_path, monkeypatch):
-    """Round-13 verdict item 9: at DEFAULT settings a duplicate-keyed
-    snapshot fails loudly (auto probe), the footer row-budget gate
-    skips the probe for sides past SNAPSHOT_UNIQUE_PROBE_MAX_ROWS,
-    and check_unique=False opts out entirely."""
-    import pytest as _pytest
-
-    from clinical_data_warehouse_bi_spark import qa
-    from clinical_data_warehouse_bi_spark.qa import snapshot_diff
-
-    uniq = spark.createDataFrame([(1, "a"), (2, "b")], "k int, fp string")
-    dup = spark.createDataFrame([(1, "a"), (1, "b")], "k int, fp string")
-    # in-memory (driver-bounded) inputs: the default probes and raises
-    with _pytest.raises(ValueError, match="not unique"):
-        snapshot_diff(dup, uniq, ["k"])
-    # explicit opt-out: the fan-out mode, silently (documented)
-    assert snapshot_diff(dup, uniq, ["k"], check_unique=False).count() > 0
-    # parquet-backed inputs under the budget: probed, raises
-    p_dup, p_uniq = str(tmp_path / "dup"), str(tmp_path / "uniq")
-    dup.write.parquet(p_dup)
-    uniq.write.parquet(p_uniq)
-    r_dup, r_uniq = spark.read.parquet(p_dup), spark.read.parquet(p_uniq)
-    with _pytest.raises(ValueError, match="not unique"):
-        snapshot_diff(r_dup, r_uniq, ["k"])
-    # past the budget: the gate skips the probe (diff fans out, no
-    # raise) — and forcing check_unique=True overrides the gate
-    monkeypatch.setattr(qa, "SNAPSHOT_UNIQUE_PROBE_MAX_ROWS", 0)
-    assert snapshot_diff(r_dup, r_uniq, ["k"]).count() > 0
-    with _pytest.raises(ValueError, match="not unique"):
-        snapshot_diff(r_dup, r_uniq, ["k"], check_unique=True)
-
-
-def test_footer_rows_void_for_row_multiplying_plans(spark, tmp_path):
-    """The footer-sum upper bound holds only for scan/filter/project
-    shapes: a join- or explode-bearing side can emit far more rows
-    than its input files hold, so _footer_rows must return None for
-    it (auto probe gate falls back to 'not provably bounded' — probe
-    skipped unless forced), while plain scans and filtered scans
-    still read their footers (round-14 advice item 3)."""
-    from clinical_data_warehouse_bi_spark import qa
-
-    p = str(tmp_path / "t")
-    spark.createDataFrame(
-        [(i, "x") for i in range(10)], "k int, fp string"
-    ).write.parquet(p)
-    scan = spark.read.parquet(p)
-    assert qa._footer_rows(scan) == 10
-    assert qa._footer_rows(scan.where("k > 3").select("k")) == 10
-    # join: output can exceed both inputs' footers
-    assert qa._footer_rows(scan.join(scan.select("k"), "k")) is None
-    # explode: one row fans out arbitrarily
-    exploded = scan.select(
-        F.explode(F.array(F.lit(1), F.lit(2), F.lit(3))).alias("v")
-    )
-    assert qa._footer_rows(exploded) is None
-    # round-16 advice: Expand (rollup/cube) replicates each input row
-    # per grouping set, and MapInArrow/EvalPython run arbitrary-arity
-    # Python — both void the footer bound too
-    rolled = scan.rollup("k", "fp").count()
-    assert qa._footer_rows(rolled) is None
-
-    def _fan(it):
-        yield from it
-
-    arrowed = scan.mapInArrow(_fan, "k int, fp string")
-    assert qa._footer_rows(arrowed) is None
-    # and the auto gate therefore does NOT launch the probe on a
-    # duplicate-keyed join-shaped side (no raise — not provably
-    # bounded), while check_unique=True still forces it
-    dup_join = scan.unionByName(scan).join(
-        spark.range(1).selectExpr("0 as j"), F.lit(True), "left"
-    ).select("k", "fp")
-    uniq = spark.createDataFrame([(1, "a")], "k int, fp string")
-    assert qa.snapshot_diff(dup_join, uniq, ["k"]).count() > 0
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="not unique"):
-        qa.snapshot_diff(dup_join, uniq, ["k"], check_unique=True)
 
 
 def test_snapshot_diff_plan_is_slim(spark, sf_dir):

@@ -20,7 +20,12 @@ take the imports it orphans. A defaulted parameter that no call in
 the repo passes fails too: an option nobody sets is a fixed value,
 so write the value in. So does one that only tests pass, unless
 TEST_SEAMS lists it: an option only a test selects is a code path
-the contract never runs. No Spark work.
+the contract never runs. The same holds for a passed option whose
+value picks a branch: when every production call binds a defaulted
+parameter that steers an ``if``/``while``/conditional of its def to
+one value (an omitted argument binds the default) and a test binds
+another, the branch only the test's value selects fails too, unless
+TEST_SEAMS lists it with its reason. No Spark work.
 """
 
 from __future__ import annotations
@@ -46,45 +51,66 @@ TEST_REFERENCES = {
 }
 
 
-#: defaulted library parameters that only tests pass: reference
-#: paths a test compares the contract path against, volume-gate and
-#: geometry seams a test forces to reach the other side of a gate at
-#: fixture scale, and the corpus release's policy knobs. It only
-#: shrinks: an option no production call passes selects a path the
-#: contract never runs.
-TEST_SEAMS = (
+#: defaulted library parameter -> reason: options that only tests
+#: pass, or branch options every production call binds to one value
+#: while a test binds another. Each is a reference path a test
+#: compares the contract path against, a volume-gate or geometry seam
+#: a named test forces to reach the other side of a gate at fixture
+#: scale, or an operator parameter a named test varies. It only
+#: shrinks: any other such option selects a path the contract never
+#: runs.
+TEST_SEAMS = {
     # reference paths
-    "corpus.py::build_corpus_release(materialize)",
-    "star.py::build_dwh(parity_keys)",
-    "star.py::build_staging(parity_keys)",
+    "corpus.py::build_corpus_release(materialize)":
+        "test_corpus_pipeline::test_release_barriers_equal_unmaterialized "
+        "checks the checkpoint barriers against the plain plan",
+    "star.py::build_dwh(parity_keys)":
+        "test_star_pipeline: the scale-key DWH equals the DuckDB-parity "
+        "key build row for row",
+    "star.py::build_staging(parity_keys)":
+        "test_plans: the scale-key dimension plans against the "
+        "DuckDB-parity key plans",
     # volume gates and geometry
-    "hnsw.py::build_graph(upper_every)",
-    "hnsw.py::build_routed_hnsw_index(sub_shards)",
-    "joins.py::range_join_binned(bin_width)",
-    "lm.py::perplexity(model_broadcast_max_rows)",
-    "multimodal.py::phash_near_dup_pairs(max_hamming)",
-    "multimodal.py::phash_near_dup_pairs(n_bands)",
-    "percentiles.py::exact_percentiles_distributed(native_distinct_max)",
-    "percentiles.py::exact_percentiles_distributed(refine_cap)",
-    "similarity.py::train_pq_codebooks(ksub)",
-    "similarity.py::train_pq_codebooks(sample_cap)",
-    "text.py::epoch_shuffle(n_ranges)",
-    "text.py::tfidf_keywords(vocab_broadcast_max_rows)",
-    # corpus release policy
-    "corpus.py::build_corpus_release(budget_frac)",
-    "corpus.py::build_corpus_release(chunk_tokens)",
-    "corpus.py::build_corpus_release(min_quality)",
-    "corpus.py::build_corpus_release(min_tokens)",
-    "corpus.py::build_corpus_release(overlap_tokens)",
-    "corpus.py::build_corpus_release(substring_min_tokens)",
+    "hnsw.py::build_graph(upper_every)":
+        "test_hnsw: a denser upper layer on fixture-sized shards",
+    "hnsw.py::build_routed_hnsw_index(sub_shards)":
+        "test_hnsw::test_routed_index_sub_shards_and_guards splits a "
+        "fixture cell into sub-shards",
+    "joins.py::range_join_binned(bin_width)":
+        "test_plans: an explicit bin width against the self-tuned one",
+    "lm.py::perplexity(model_broadcast_max_rows)":
+        "test_plans: 0 forces the shuffled-model side of the broadcast gate",
+    "multimodal.py::phash_near_dup_pairs(max_hamming)":
+        "test_multimodal: radii around the banded join's exactness bound",
+    "multimodal.py::phash_near_dup_pairs(n_bands)":
+        "test_multimodal: band counts around the exactness bound",
+    "percentiles.py::exact_percentiles_distributed(native_distinct_max)":
+        "test_percentiles_distributed: 0 forces the bucketed refinement",
+    "percentiles.py::exact_percentiles_distributed(refine_cap)":
+        "test_percentiles_distributed: a tiny cap forces the rank "
+        "through the refinement levels",
+    "similarity.py::train_pq_codebooks(ksub)":
+        "test_similarity_engine: codebooks small enough for fixture rows",
+    "similarity.py::train_pq_codebooks(sample_cap)":
+        "test_similarity_engine: a training sample that fits the fixture",
+    "text.py::epoch_shuffle(n_ranges)":
+        "test_properties::test_epoch_shuffle_properties checks layout "
+        "independence across range counts",
+    "text.py::tfidf_keywords(vocab_broadcast_max_rows)":
+        "test_plans: 0 forces the shuffled-vocabulary side of the gate",
+    "scrub.py::repetition_metrics(ngram)":
+        "test_scrub::test_repetition_metrics_property_vs_python uses "
+        "bigrams on short generated texts",
+    "session.py::get_spark(shuffle_partitions)":
+        "conftest: 8 shuffle partitions for fixture-sized data",
     # operator parameters a test varies
-    "graph.py::connected_components(stats)",
-    "scrub.py::dp_release(value_high)",
-    "scrub.py::dp_release(value_low)",
-    "scrub.py::repetition_metrics(ngram)",
-    "session.py::get_spark(shuffle_partitions)",
-    "text.py::weighted_sample(seed)",
-)
+    "graph.py::connected_components(stats)":
+        "test_properties: the fallback tests read the round count and "
+        "fallback flag it fills",
+    "text.py::weighted_sample(seed)":
+        "test_properties::test_weighted_sample_favors_heavy_weights "
+        "draws 15 independent samples",
+}
 
 def _py_files(root: str) -> list[str]:
     out = []
@@ -265,6 +291,103 @@ def test_library_options_are_set():
     )
 
 
+def _branch_params(d: ast.FunctionDef) -> set[str]:
+    """Parameters of ``d`` named in the test of an ``if`` (unless its
+    body only raises), conditional expression, ``while`` or
+    comprehension ``if`` anywhere in its body."""
+    params = {a.arg for a in d.args.posonlyargs + d.args.args + d.args.kwonlyargs}
+    named: set[str] = set()
+    for n in ast.walk(d):
+        if isinstance(n, ast.If):
+            if all(isinstance(b, ast.Raise) for b in n.body):
+                continue
+            tests = [n.test]
+        elif isinstance(n, (ast.IfExp, ast.While)):
+            tests = [n.test]
+        elif isinstance(n, ast.comprehension):
+            tests = n.ifs
+        else:
+            continue
+        for t in tests:
+            named |= {x.id for x in ast.walk(t) if isinstance(x, ast.Name)}
+    return named & params
+
+
+def _bound_value(node: ast.expr) -> str:
+    """A bound argument as a comparable token: a literal's repr, an
+    UPPERCASE constant's name, anything else ``varies``."""
+    try:
+        return repr(ast.literal_eval(node))
+    except ValueError:
+        pass
+    name = getattr(node, "id", None) or getattr(node, "attr", None)
+    return name if name and name.isupper() else "varies"
+
+
+def _calls_by_name(files: list[str]) -> dict[str, list[ast.Call]]:
+    out: dict[str, list[ast.Call]] = defaultdict(list)
+    for path in files:
+        for n in ast.walk(ast.parse(open(path).read(), path)):
+            if isinstance(n, ast.Call):
+                name = getattr(n.func, "id", None) or getattr(n.func, "attr", None)
+                if name:
+                    out[name].append(n)
+    return out
+
+
+def _bound_values(d: ast.FunctionDef, calls: list[ast.Call]) -> dict[str, set]:
+    """Per defaulted parameter of ``d``: the values ``calls`` bind
+    (an omitted argument binds the default; one hidden behind
+    ``*args``/``**kwargs`` varies)."""
+    args = [a.arg for a in d.args.posonlyargs + d.args.args]
+    defaults = dict(zip(args[len(args) - len(d.args.defaults):], d.args.defaults))
+    defaults.update(
+        (a.arg, v) for a, v in zip(d.args.kwonlyargs, d.args.kw_defaults)
+        if v is not None
+    )
+    out: dict[str, set] = defaultdict(set)
+    for c in calls:
+        kw = {k.arg: k.value for k in c.keywords if k.arg}
+        splat = any(isinstance(a, ast.Starred) for a in c.args) or any(
+            k.arg is None for k in c.keywords
+        )
+        for p, default in defaults.items():
+            if p in kw:
+                node = kw[p]
+            elif p in args and args.index(p) < len(c.args):
+                node = c.args[args.index(p)]
+            else:
+                node = None if splat else default
+            out[p].add("varies" if node is None else _bound_value(node))
+    return out
+
+
+def branch_values_only_tests_bind(callers: list[str], tests: list[str]) -> list[str]:
+    """Defaulted parameters of top-level library defs that steer a
+    branch of the def, that every call in ``callers`` or the library
+    binds to ONE value, and that some call in ``tests`` binds to
+    another: the branch that value selects runs only under tests.
+    Calls match by callee name alone, like the reachability pass."""
+    prod = _calls_by_name(callers + _py_files(LIB))
+    test = _calls_by_name(tests)
+    out = []
+    for path in _py_files(LIB):
+        rel = os.path.relpath(path, LIB)
+        for d in ast.parse(open(path).read(), path).body:
+            if not isinstance(d, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            branch = _branch_params(d)
+            if not branch or d.name not in prod:
+                continue
+            pv = _bound_values(d, prod[d.name])
+            tv = _bound_values(d, test.get(d.name, []))
+            out += [
+                f"{rel}::{d.name}({p})" for p in sorted(branch & set(pv))
+                if len(pv[p]) == 1 and "varies" not in pv[p] and tv[p] - pv[p]
+            ]
+    return sorted(out)
+
+
 def test_library_options_have_a_production_caller():
     test_only = set(unset_options(_root_files()))
     new = sorted(test_only - set(TEST_SEAMS))
@@ -273,11 +396,34 @@ def test_library_options_have_a_production_caller():
         "the path the option selects, with its tests, or pass it from "
         "the contract):\n  " + "\n  ".join(new)
     )
-    stale = sorted(set(TEST_SEAMS) - test_only)
-    assert not stale, (
-        "TEST_SEAMS entries that are deleted or now passed outside "
-        "tests/; take them off the list:\n  " + "\n  ".join(stale)
+
+
+def test_library_branches_run_a_production_value():
+    flagged = branch_values_only_tests_bind(
+        _root_files(), _py_files(os.path.join(REPO_ROOT, "tests"))
     )
+    new = sorted(set(flagged) - set(TEST_SEAMS))
+    assert not new, (
+        f"{len(new)} branch options that every production call binds to "
+        "one value and a test binds to another (delete the branch only "
+        "the test's value selects, and the option with it):\n  "
+        + "\n  ".join(new)
+    )
+
+
+def test_test_seams_are_live_and_reasoned():
+    live = set(unset_options(_root_files())) | set(
+        branch_values_only_tests_bind(
+            _root_files(), _py_files(os.path.join(REPO_ROOT, "tests"))
+        )
+    )
+    stale = sorted(set(TEST_SEAMS) - live)
+    assert not stale, (
+        "TEST_SEAMS entries that are deleted or now run with the test's "
+        "value outside tests/; take them off the list:\n  "
+        + "\n  ".join(stale)
+    )
+    assert all(reason.strip() for reason in TEST_SEAMS.values())
 
 
 def create_dataframe_calls() -> list[str]:

@@ -226,9 +226,9 @@ def test_dp_release_matches_duckdb_twin(spark, sf_dir, duck):
 
 def test_dp_release_deterministic_and_secret_sensitive(spark, sf_dir):
     ev = read_table(spark, sf_dir, "events")
-    a = scrub.dp_release(ev, ["event_type"], 1.0, "k1").collect()
-    b = scrub.dp_release(ev, ["event_type"], 1.0, "k1").collect()
-    c = scrub.dp_release(ev, ["event_type"], 1.0, "k2").collect()
+    a = scrub.dp_release(ev, ["event_type"], 1.0, "k1", 0.0).collect()
+    b = scrub.dp_release(ev, ["event_type"], 1.0, "k1", 0.0).collect()
+    c = scrub.dp_release(ev, ["event_type"], 1.0, "k2", 0.0).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
     assert {r["count_noisy"] for r in a} != {r["count_noisy"] for r in c}
 
@@ -237,10 +237,13 @@ def test_dp_release_noise_scale_is_laplace(spark):
     # ~4000 single-row groups: mean |noise| estimates b within a few
     # percent (std of the estimator is b/sqrt(n) ~ 1.6%); the sign
     # split is ~half/half. Checks the inverse CDF, not just hashing.
+    # k_min=-inf keeps every group, negative noise included.
     n = 4000
     df = spark.range(n).withColumn("g", F.col("id").cast("string"))
     eps = 0.25  # b = 4
-    out = scrub.dp_release(df, ["g"], eps, "scale-test").select(
+    out = scrub.dp_release(
+        df, ["g"], eps, "scale-test", float("-inf")
+    ).select(
         (F.col("count_noisy") - F.lit(1.0)).alias("noise")
     ).collect()
     noises = [r["noise"] for r in out]
@@ -250,40 +253,6 @@ def test_dp_release_noise_scale_is_laplace(spark):
     assert abs(mean_abs - b) / b < 0.10
     pos = sum(1 for x in noises if x > 0)
     assert 0.45 < pos / n < 0.55
-
-
-def test_dp_release_epsilon_splits_across_statistics(spark):
-    # with a sum requested, the count's budget halves -> its noise
-    # scale doubles (same keyed uniforms, so the ratio is EXACTLY 2)
-    n = 500
-    df = spark.range(n).withColumn("g", F.col("id").cast("string")).withColumn(
-        "v", F.lit(1.0)
-    )
-    only = {
-        r["g"]: r["count_noisy"] - 1.0
-        for r in scrub.dp_release(df, ["g"], 1.0, "split").collect()
-    }
-    both = {
-        r["g"]: r["count_noisy"] - 1.0
-        for r in scrub.dp_release(
-            df, ["g"], 1.0, "split", value_col="v", value_high=1.0
-        ).collect()
-    }
-    for g, x in only.items():
-        if abs(x) > 1e-12:
-            assert abs(both[g] / x - 2.0) < 1e-9
-
-
-def test_dp_release_sum_clamps_before_noising(spark):
-    # huge epsilon -> noise ~ 0; out-of-bound values must enter the
-    # sum clamped to [0, 10]
-    rows = [("a", -5.0), ("a", 3.0), ("a", 25.0)]
-    df = spark.createDataFrame(rows, "g string, v double")
-    out = scrub.dp_release(
-        df, ["g"], 1e9, "clamp", value_col="v", value_high=10.0
-    ).collect()[0]
-    assert out["count"] == 3
-    assert abs(out["sum_v"] - (0.0 + 3.0 + 10.0)) < 1e-3
 
 
 def test_dp_release_suppresses_on_noisy_threshold(spark):
@@ -298,7 +267,7 @@ def test_dp_release_suppresses_on_noisy_threshold(spark):
 
 def test_dp_release_single_exchange_plan(spark, sf_dir):
     ev = read_table(spark, sf_dir, "events")
-    out = scrub.dp_release(ev, ["event_type"], 1.0, "plan")
+    out = scrub.dp_release(ev, ["event_type"], 1.0, "plan", 3.0)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1, plan
 
@@ -306,14 +275,9 @@ def test_dp_release_single_exchange_plan(spark, sf_dir):
 def test_dp_release_rejects_bad_inputs(spark):
     df = spark.range(3).withColumn("g", F.lit("x"))
     with pytest.raises(ValueError):
-        scrub.dp_release(df, ["g"], 0.0, "s")
+        scrub.dp_release(df, ["g"], 0.0, "s", 3.0)
     with pytest.raises(ValueError):
-        scrub.dp_release(df, ["g"], 1.0, "")
-    with pytest.raises(ValueError):
-        scrub.dp_release(df, ["g"], 1.0, "s", value_col="id")
-    with pytest.raises(ValueError):
-        scrub.dp_release(df, ["g"], 1.0, "s", value_col="id",
-                         value_low=5.0, value_high=1.0)
+        scrub.dp_release(df, ["g"], 1.0, "", 3.0)
 
 
 # ------------------------------------------------ suppress_to_k
