@@ -35,6 +35,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # Python workers fork from a daemon that has the Arrow stack
+        # imported and skips re-reading unchanged zip archives per task
+        # (daemon.py)
+        .config("spark.python.daemon.module", "clinical_data_warehouse_bi_spark.daemon")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
         .config(

@@ -291,6 +291,33 @@ def sampled_kmeans_centroids(
     return [(j, [float(v) for v in best[j]]) for j in range(n_clusters)]
 
 
+def _sq_dists(x: np.ndarray, xsq: np.ndarray, c: np.ndarray) -> np.ndarray:
+    """|x-c|^2 for every (row of x, row of c) pair via the GEMM
+    identity — one matmul instead of an O(N x k x D) broadcast
+    temporary; ``xsq`` is x's row norms squared."""
+    return np.maximum(
+        xsq[:, None] - 2.0 * (x @ c.T) + np.einsum("ij,ij->i", c, c)[None, :],
+        0.0,
+    )
+
+
+def _kmeanspp_init(
+    x: np.ndarray, xsq: np.ndarray, n_clusters: int, rng: np.random.RandomState
+) -> np.ndarray:
+    """k-means++ seeding: each next center is drawn with probability
+    proportional to a sample's squared distance to its nearest chosen
+    center. That distance is a running minimum updated with the newest
+    center's column only, O(k N d) per restart."""
+    centers = [x[rng.randint(len(x))]]
+    d2 = None
+    for _ in range(1, n_clusters):
+        newest = _sq_dists(x, xsq, centers[-1][None, :])[:, 0]
+        d2 = newest if d2 is None else np.minimum(d2, newest)
+        probs = d2 / d2.sum() if d2.sum() > 0 else np.full(len(x), 1.0 / len(x))
+        centers.append(x[rng.choice(len(x), p=probs)])
+    return np.array(centers)
+
+
 def _lloyd(x: np.ndarray, n_clusters: int, seed: int, n_init: int) -> np.ndarray:
     """Seeded restarted Lloyd's k-means over a driver-side sample —
     the shared fit core of the learned-IVF quantizer and the PQ
@@ -298,29 +325,12 @@ def _lloyd(x: np.ndarray, n_clusters: int, seed: int, n_init: int) -> np.ndarray
     farthest-point reseeding of empty clusters, lowest-inertia
     restart wins; byte-deterministic for a given (x, seed)."""
     xsq = np.einsum("ij,ij->i", x, x)
-
-    def dists(c: np.ndarray) -> np.ndarray:
-        # |x-c|^2 via the GEMM identity — one matmul instead of an
-        # O(N x k x D) broadcast temporary
-        return np.maximum(
-            xsq[:, None] - 2.0 * (x @ c.T) + np.einsum("ij,ij->i", c, c)[None, :],
-            0.0,
-        )
-
     best, best_inertia = None, None
     for trial in range(n_init):  # restarts: keep the lowest-inertia fit
         rng = np.random.RandomState(seed + trial)
-        # k-means++ init
-        centers = [x[rng.randint(len(x))]]
-        for _ in range(1, n_clusters):
-            d2 = dists(np.array(centers)).min(axis=1)
-            probs = (
-                d2 / d2.sum() if d2.sum() > 0 else np.full(len(x), 1.0 / len(x))
-            )
-            centers.append(x[rng.choice(len(x), p=probs)])
-        c = np.array(centers)
+        c = _kmeanspp_init(x, xsq, n_clusters, rng)
         for _ in range(20):
-            d2 = dists(c)
+            d2 = _sq_dists(x, xsq, c)
             assign = d2.argmin(axis=1)
             far = None  # farthest-first order, computed on demand
             n_far = 0
@@ -339,7 +349,7 @@ def _lloyd(x: np.ndarray, n_clusters: int, seed: int, n_init: int) -> np.ndarray
                         far = np.argsort(-d2.min(axis=1), kind="stable")
                     c[j] = x[far[n_far % len(far)]]
                     n_far += 1
-        inertia = float(dists(c).min(axis=1).sum())
+        inertia = float(_sq_dists(x, xsq, c).min(axis=1).sum())
         if best_inertia is None or inertia < best_inertia:
             best, best_inertia = c, inertia
     return best

@@ -845,10 +845,10 @@ def top_ngrams(
     polynomial+splitmix finalizer (numpy: no per-window string, no
     per-window Python bytecode), then
 
-    - count pass: partial-count per task via np.unique, so only slim
-      (h1, h2, cnt) partials — vocabulary-sized, not window-sized —
-      reach the JVM aggregation; n-gram strings and doc ids never
-      enter the count shuffle.
+    - count pass: partial-count per task (per Arrow batch, merged),
+      so only slim (h1, h2, cnt) partials — vocabulary-sized, not
+      window-sized — reach the JVM aggregation; n-gram strings and
+      doc ids never enter the count shuffle.
     - recovery pass: np.isin against the driver-collected candidate
       h1 set; strings are built ONLY for the ~k surviving grams'
       occurrences, broadcast-joined against the bounded candidate
@@ -1008,16 +1008,40 @@ def _ngram_window_mask(lens, n):
     return doc_of[: total - n + 1] == doc_of[n - 1 :]
 
 
+def _sum_by_pair(h1, h2, cnt):
+    """(h1, h2, cnt) with ``cnt`` summed per distinct (h1, h2), sorted
+    by the pair. A lexsort of the two uint64 columns (several times
+    faster than np.unique over a 128-bit structured view, and near
+    linear on input made of already sorted runs)."""
+    import numpy as np
+
+    if not len(h1):
+        return h1, h2, cnt
+    order = np.lexsort((h2, h1))
+    h1, h2, cnt = h1[order], h2[order], cnt[order]
+    first = np.ones(len(h1), dtype=bool)
+    first[1:] = (h1[1:] != h1[:-1]) | (h2[1:] != h2[:-1])
+    idx = np.flatnonzero(first)
+    return h1[idx], h2[idx], np.add.reduceat(cnt, idx)
+
+
 def _ngram_count_partials(n: int):
     """mapInPandas op: slim (h1, h2, cnt) partial counts per task —
-    ONE np.unique over the task's valid windows, so the JVM
-    aggregation receives vocabulary-sized partials only."""
+    counted per Arrow batch, so the JVM aggregation receives
+    vocabulary-sized partials only. The batch counts are merged into
+    one table whenever the unmerged ones outgrow it: the task holds
+    at most about twice its vocabulary plus one batch (never all of
+    its windows), and the doubling re-merges each entry only a
+    logarithmic number of times."""
 
     def op(it):
         import numpy as np
         import pandas as pd
 
-        parts = []
+        def merged(runs):
+            return _sum_by_pair(*(np.concatenate(col) for col in zip(*runs)))
+
+        runs, unmerged = [], 0  # runs[0] is the merged table
         for pdf in it:
             flat, lens = _ngram_tokenize_flat(pdf["__text"])
             if len(flat) < n:
@@ -1027,20 +1051,17 @@ def _ngram_count_partials(n: int):
             ).to_numpy()
             h1, h2 = _ngram_win_hashes(th, n)
             mask = _ngram_window_mask(lens, n)
-            parts.append(np.stack([h1[mask], h2[mask]], axis=1))
-        if parts:
-            import numpy as np
-            import pandas as pd
-
-            allw = np.concatenate(parts)
-            v = np.ascontiguousarray(allw).view([("a", "<u8"), ("b", "<u8")])
-            uniq, cnt = np.unique(v, return_counts=True)
+            runs.append(
+                _sum_by_pair(h1[mask], h2[mask], np.ones(int(mask.sum()), np.int64))
+            )
+            if len(runs) > 1:
+                unmerged += len(runs[-1][0])
+                if unmerged > len(runs[0][0]):
+                    runs, unmerged = [merged(runs)], 0
+        if runs:
+            h1, h2, cnt = merged(runs) if len(runs) > 1 else runs[0]
             yield pd.DataFrame(
-                {
-                    "h1": uniq["a"].view(np.int64),
-                    "h2": uniq["b"].view(np.int64),
-                    "cnt": cnt.astype(np.int64),
-                }
+                {"h1": h1.view(np.int64), "h2": h2.view(np.int64), "cnt": cnt}
             )
 
     return op

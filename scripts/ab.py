@@ -728,6 +728,10 @@ def _serve(conn, arm: Arm, work: str) -> None:
 
     if arm.tree:
         sys.path.insert(0, arm.tree)
+    # the JVM starts its Python workers (``python -m`` the daemon) in
+    # this working directory, and they import the engine's UDF code
+    # and worker daemon from it: run them on the arm's own checkout
+    os.chdir(arm.tree or ROOT)
     eng, cells = None, {}
     while (msg := conn.recv())[0] != "stop":
         cmd, name = msg

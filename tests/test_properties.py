@@ -1333,6 +1333,34 @@ def test_top_ngrams_matches_duckdb_and_never_shuffles_text(spark, sf_dir, duck):
     assert outs[0] == outs[1] and len(outs[0]) > 0
 
 
+def test_top_ngrams_rows_do_not_depend_on_arrow_batch_size(spark, sf_dir):
+    """_ngram_count_partials runs one np.unique per Arrow batch and
+    merges the partial counts: with a batch size small enough that
+    every task sees several batches, q_top_ngrams returns the same
+    rows as with the default batch size."""
+    from clinical_data_warehouse_bi_spark.queries.text_ops import q_top_ngrams
+
+    def batches(it):
+        import pandas as pd
+
+        yield pd.DataFrame({"n": [sum(1 for _ in it)]})
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    want = q_top_ngrams(spark, sf_dir).collect()
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        per_task = (
+            spark.read.parquet(f"{sf_dir}/documents.parquet")
+            .select("text").mapInPandas(batches, "n long").collect()
+        )
+        assert max(r["n"] for r in per_task) > 1, per_task
+        got = q_top_ngrams(spark, sf_dir).collect()
+    finally:
+        spark.conf.set(key, old)
+    assert want and got == want
+
+
 def test_top_ngrams_edges(spark):
     from clinical_data_warehouse_bi_spark import text as T2
 

@@ -142,10 +142,25 @@ def _unit_names(stmt: ast.stmt) -> list[str]:
     return []
 
 
+def _daemon_module_file() -> str:
+    """The file of the module ``session.py`` configures as
+    ``spark.python.daemon.module``."""
+    tree = ast.parse(open(os.path.join(LIB, "session.py")).read())
+    (module,) = [
+        n.args[1].value for n in ast.walk(tree)
+        if isinstance(n, ast.Call) and getattr(n.func, "attr", None) == "config"
+        and len(n.args) == 2
+        and all(isinstance(a, ast.Constant) for a in n.args)
+        and n.args[0].value == "spark.python.daemon.module"
+    ]
+    return os.path.join(REPO_ROOT, *module.split(".")) + ".py"
+
+
 def _root_files() -> list[str]:
     return [
         os.path.join(REPO_ROOT, "__spark_entry__.py"),
         os.path.join(REPO_ROOT, "bench.py"),
+        _daemon_module_file(),
         *_py_files(os.path.join(REPO_ROOT, "perfbench")),
         *_py_files(os.path.join(REPO_ROOT, "scripts")),
     ]

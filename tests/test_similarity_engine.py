@@ -58,6 +58,33 @@ def test_nprobe_never_worse_than_single_probe(spark, sf_dir, duck):
     assert all(two[k] >= one[k] for k in one)
 
 
+def test_kmeanspp_running_minimum_picks_the_same_centers():
+    """similarity._kmeanspp_init keeps each sample's distance to its
+    nearest chosen center as a running minimum; it must draw the same
+    centers as the formula that recomputes the distances to every
+    chosen center at each step, on PQ-shaped (4096 x 8, k=256) and
+    IVF-shaped samples. (Once k exceeds the distinct rows, the draws
+    after every distinct row is chosen may differ: the recomputed
+    minimum leaves GEMM rounding residue of ~1e-14 where the running
+    one has exact zeros and draws uniformly.)"""
+
+    def recomputed(x, xsq, k, rng):
+        centers = [x[rng.randint(len(x))]]
+        for _ in range(1, k):
+            d2 = similarity._sq_dists(x, xsq, np.array(centers)).min(axis=1)
+            probs = d2 / d2.sum() if d2.sum() > 0 else np.full(len(x), 1.0 / len(x))
+            centers.append(x[rng.choice(len(x), p=probs)])
+        return np.array(centers)
+
+    for n, dims, k, seed in [(4096, 8, 256, 7), (2000, 64, 32, 11), (300, 4, 250, 3)]:
+        x = np.random.RandomState(seed).randn(n, dims)
+        x[: n // 10] = x[0]  # duplicate rows: zero distances, repeated picks
+        xsq = np.einsum("ij,ij->i", x, x)
+        want = recomputed(x, xsq, k, np.random.RandomState(seed))
+        got = similarity._kmeanspp_init(x, xsq, k, np.random.RandomState(seed))
+        assert np.array_equal(got, want), (n, dims, k)
+
+
 def test_learned_ivf_recall_beats_arbitrary_on_clustered_data(spark):
     """VERDICT r3 missing #3: the learned-IVF search must be wired
     end-to-end, and learning must demonstrably pay where there is
