@@ -10,7 +10,7 @@ hypothetical 1-ulp divergence cannot flip the compared output."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from clinical_data_warehouse_bi_spark import io
@@ -126,13 +126,12 @@ def q_ann_ivf_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     is nprobe x bucket size; a data vector lives in exactly one
     bucket, so probing distinct buckets never duplicates a candidate).
 
-    Both vector-math stages run on the Arrow/GEMM path
-    (similarity.centroid_rank / pairwise_cosine): centroid assignment
-    is one matrix multiply per scan batch against the broadcast
-    centroid matrix — replacing a crossJoin + 64-step scalar fold +
-    row_number window (whose per-vector shuffle disappears: ranking
-    happens inside the batch) — and candidate scoring is a row-wise
-    einsum over the joined pairs. The unchanged DuckDB oracle
+    It is similarity.ivf_search over the first {N_CENTROIDS} vectors
+    as centroids, bucketed by cosine: centroid assignment is one
+    matrix multiply per scan batch against the broadcast centroid
+    matrix (similarity.centroid_rank) — replacing a crossJoin + 64-step
+    scalar fold + row_number window — and candidate scoring is a
+    row-wise einsum over the joined pairs. The unchanged DuckDB oracle
     hash-checks the GEMM numerics end-to-end.
 
     Round-7 registry retirement (cap is 50; slot went to
@@ -144,48 +143,15 @@ def q_ann_ivf_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL_ANN_IVF_NPROBE, and tests/test_similarity_engine.py checks
     that nprobe=2 is never worse than the single-probe oracle. Kept
     unregistered as the raw-vector IVF API."""
-    from clinical_data_warehouse_bi_spark.similarity import (
-        centroid_rank,
-        pairwise_cosine,
-    )
+    from clinical_data_warehouse_bi_spark.similarity import ivf_search
 
     emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
     centroids = [
         (r["vec_id"], list(r["embedding"]))
         for r in emb.filter(F.col("vec_id") < N_CENTROIDS).collect()
     ]
-    # both the assignment and the probe set read the ranked relation:
-    # persist the tiny (vec_id, cid, rn) output so the GEMM stage runs
-    # once, not once per consumer (scalars cache nearly free)
-    ranked = centroid_rank(emb, centroids, max_rank=NPROBE).persist()
-    assign = ranked.filter(F.col("rn") == 1).select(
-        F.col("vec_id").alias("cand_id"), F.col("cid").alias("cb")
-    )
-    probes = ranked.filter(
-        (F.col("rn") <= NPROBE) & (F.col("vec_id") < N_QUERIES)
-    ).select(F.col("vec_id").alias("p_vec"), F.col("cid").alias("bucket"))
-    q = emb.join(probes, emb["vec_id"] == F.col("p_vec")).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qe"), "bucket"
-    )
-    pairs = (
-        q.join(assign, F.col("bucket") == F.col("cb"))
-        .join(emb, F.col("cand_id") == emb["vec_id"])
-        .filter(F.col("cand_id") != F.col("qid"))
-        .select(
-            "qid",
-            F.col("cand_id").alias("nid"),
-            "qe",
-            F.col("embedding").alias("e"),
-        )
-    )
-    p = pairwise_cosine(pairs, ("qid", "nid"), ("qe", "e"))
-    w = Window.partitionBy("qid").orderBy(
-        F.round(F.col("cos"), 6).desc(), F.col("nid").asc()
-    )
-    return (
-        p.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select("qid", "nid", "rank", F.round("cos", 4).alias("cosine"))
+    return ivf_search(
+        emb, centroids, n_queries=N_QUERIES, nprobe=NPROBE, topk=5, metric="cosine"
     )
 
 
@@ -208,8 +174,24 @@ LEARNED_SEED = 7
 _QUANTIZER_CACHE: dict[tuple, list] = {}
 
 
-def _quantizer_key(spark: SparkSession, sf_dir: str, *params) -> tuple:
-    return (spark.sparkContext.applicationId, sf_dir, *params)
+def _fitted(spark: SparkSession, sf_dir: str, params: tuple, fit) -> list:
+    """The memoized result of ``fit()`` for this application, table and
+    quantizer ``params``: fitted once, reused by every later search."""
+    key = (spark.sparkContext.applicationId, sf_dir, *params)
+    if key not in _QUANTIZER_CACHE:
+        _QUANTIZER_CACHE[key] = fit()
+    return _QUANTIZER_CACHE[key]
+
+
+def _learned_centroids(spark: SparkSession, sf_dir: str, emb: DataFrame) -> list:
+    """The learned IVF quantizer, one fit shared by q_ann_ivf_learned
+    and q_ann_ivf_pq."""
+    from clinical_data_warehouse_bi_spark.similarity import sampled_kmeans_centroids
+
+    return _fitted(
+        spark, sf_dir, ("ivf", LEARNED_K, LEARNED_SEED),
+        lambda: sampled_kmeans_centroids(emb, n_clusters=LEARNED_K, seed=LEARNED_SEED),
+    )
 
 
 def q_ann_ivf_learned(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -253,10 +235,7 @@ def q_ann_ivf_learned(spark: SparkSession, sf_dir: str) -> DataFrame:
     one broadcast-GEMM Arrow pass each (similarity.ivf_search — no
     crossJoin, no per-vector window shuffle); candidate volume is
     nprobe x bucket size with buckets sized by k."""
-    from clinical_data_warehouse_bi_spark.similarity import (
-        ivf_search,
-        sampled_kmeans_centroids,
-    )
+    from clinical_data_warehouse_bi_spark.similarity import ivf_search
 
     emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
     # The quantizer is a pure function of (table, k, seed) — sample
@@ -265,16 +244,9 @@ def q_ann_ivf_learned(spark: SparkSession, sf_dir: str) -> DataFrame:
     # memoization rationale as io.read_table (a production index
     # trains once and serves many searches; refitting per query would
     # misrepresent the operator's cost at any scale).
-    ck = _quantizer_key(spark, sf_dir, "ivf", LEARNED_K, LEARNED_SEED)
-    centroids = _QUANTIZER_CACHE.get(ck)
-    if centroids is None:
-        centroids = sampled_kmeans_centroids(
-            emb, n_clusters=LEARNED_K, seed=LEARNED_SEED
-        )
-        _QUANTIZER_CACHE[ck] = centroids
     return ivf_search(
-        emb, centroids, n_queries=N_QUERIES, nprobe=NPROBE, topk=5,
-        metric="euclidean",
+        emb, _learned_centroids(spark, sf_dir, emb), n_queries=N_QUERIES,
+        nprobe=NPROBE, topk=5, metric="euclidean",
     )
 
 
@@ -311,26 +283,17 @@ def q_ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     many searches."""
     from clinical_data_warehouse_bi_spark.similarity import (
         ivf_pq_search,
-        sampled_kmeans_centroids,
         train_pq_codebooks,
     )
 
     emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    ck = _quantizer_key(spark, sf_dir, "ivf", LEARNED_K, LEARNED_SEED)
-    centroids = _QUANTIZER_CACHE.get(ck)
-    if centroids is None:
-        centroids = sampled_kmeans_centroids(
-            emb, n_clusters=LEARNED_K, seed=LEARNED_SEED
-        )
-        _QUANTIZER_CACHE[ck] = centroids
-    bk = _quantizer_key(spark, sf_dir, "pq", PQ_M, LEARNED_SEED)
-    codebooks = _QUANTIZER_CACHE.get(bk)
-    if codebooks is None:
-        codebooks = train_pq_codebooks(emb, m=PQ_M, seed=LEARNED_SEED)
-        _QUANTIZER_CACHE[bk] = codebooks
+    codebooks = _fitted(
+        spark, sf_dir, ("pq", PQ_M, LEARNED_SEED),
+        lambda: train_pq_codebooks(emb, m=PQ_M, seed=LEARNED_SEED),
+    )
     return ivf_pq_search(
         emb,
-        centroids,
+        _learned_centroids(spark, sf_dir, emb),
         codebooks,
         n_queries=N_QUERIES,
         nprobe=NPROBE,
@@ -525,7 +488,7 @@ def q_ann_ivf_pq_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     operational half of q_ann_ivf_pq, registered per the round-9
     verdict so the on-disk VECTOR index contract sits under the
     driver's gate like q_bm25_served put the text one: bucket=
-    partitioned postings with packed PQ codes, centroids + codebooks
+    partitioned postings with m-byte PQ codes, centroids + codebooks
     as JSON inside the directory committed after the postings, probe
     restriction executed as PARTITION PRUNING on the bucket=
     directories (plan-asserted in tests/test_similarity_engine.py),
@@ -539,9 +502,8 @@ def q_ann_ivf_pq_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     coarse quantizer and PQ codebooks come from seeded iterative
     Lloyd's, which no portable SQL reproduces. Value-level evidence
     in tests/test_similarity_engine.py: served == in-memory composed
-    pipeline on the same seeded quantizers, recall >= 0.8 vs brute
-    force on planted clusters, and filtered-search pre-join
-    semantics."""
+    pipeline row for row on the same seeded quantizers, and recall
+    >= 0.8 vs brute force on planted clusters."""
     from clinical_data_warehouse_bi_spark.similarity import (
         INDEX_META,
         IVF_PQ_FORMAT_VERSION,

@@ -18,6 +18,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: the directory holding the package, whatever the working directory
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "clinical-dwh-bi-spark",
@@ -39,6 +42,10 @@ def get_spark(
         # imported and skips re-reading unchanged zip archives per task
         # (daemon.py)
         .config("spark.python.daemon.module", "clinical_data_warehouse_bi_spark.daemon")
+        # the daemon and the library's Arrow functions import the
+        # package in the workers: Spark merges this into their
+        # PYTHONPATH, so a script run from any directory finds it
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
         .config(

@@ -75,12 +75,19 @@ def cosine_topk_numpy(vectors: DataFrame, queries: list[tuple[int, list[float]]]
                 yield pd.concat(out, ignore_index=True)
 
     partials = vectors.select("vec_id", "embedding").mapInPandas(op, TOPK_SCHEMA)
+    return _rank_by_cosine(partials, k)
+
+
+def _rank_by_cosine(scored: DataFrame, topk: int) -> DataFrame:
+    """(qid, nid, cos) -> (qid, nid, rank, cosine): the top ``topk``
+    rows per query under the engine's total order — (round(cos, 6)
+    desc, nid asc) — with the cosine shown to 4 places."""
     w = Window.partitionBy("qid").orderBy(
         F.round(F.col("cos"), 6).desc(), F.col("nid").asc()
     )
     return (
-        partials.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= topk)
         .select("qid", "nid", "rank", F.round("cos", 4).alias("cosine"))
     )
 
@@ -279,16 +286,21 @@ def sampled_kmeans_centroids(
     math at any k where IVF makes sense. Assignment of the full table
     stays distributed either way (centroid_rank's broadcast-GEMM
     Arrow pass)."""
-    sample = (
+    best = _lloyd(_hash_sample(vectors, 4096), n_clusters, seed, n_init=8)
+    return [(j, [float(v) for v in best[j]]) for j in range(n_clusters)]
+
+
+def _hash_sample(vectors: DataFrame, cap: int) -> np.ndarray:
+    """The vectors of the ``cap`` hash-smallest vec_ids, in id order
+    (RNG-independent): a TakeOrdered, no full shuffle."""
+    rows = (
         vectors.select("vec_id", "embedding")
         .orderBy(F.md5(F.col("vec_id").cast("string")))
-        .limit(4096)
+        .limit(cap)
         .collect()
     )
-    sample.sort(key=lambda r: r["vec_id"])  # RNG-independent order
-    x = np.array([list(r["embedding"]) for r in sample], dtype=np.float64)
-    best = _lloyd(x, n_clusters, seed, n_init=8)
-    return [(j, [float(v) for v in best[j]]) for j in range(n_clusters)]
+    rows.sort(key=lambda r: r["vec_id"])
+    return np.array([list(r["embedding"]) for r in rows], dtype=np.float64)
 
 
 def _sq_dists(x: np.ndarray, xsq: np.ndarray, c: np.ndarray) -> np.ndarray:
@@ -372,39 +384,52 @@ def ivf_search(
     (pairwise_cosine). ``metric`` picks the bucketing geometry and
     must match how the centroids were trained (euclidean for Lloyd's
     k-means, cosine for first-N-vector demos)."""
-    assign = centroid_rank(vectors, centroids, max_rank=1, metric=metric)
+    cand = _ivf_candidates(vectors, centroids, n_queries, nprobe, metric)
+    return _rerank(vectors, cand, n_queries, topk)
+
+
+def _ivf_candidates(
+    vectors: DataFrame,
+    centroids: list[tuple[int, list[float]]],
+    n_queries: int,
+    nprobe: int,
+    metric: str,
+) -> DataFrame:
+    """(qid, nid): every vector bucketed (rn=1) into one of the query's
+    ``nprobe`` nearest centroids, the query itself excluded; a vector
+    has one bucket and the probed buckets differ, so no pair repeats."""
+    assign = centroid_rank(vectors, centroids, max_rank=1, metric=metric).select(
+        F.col("vec_id").alias("nid"), F.col("cid").alias("cb")
+    )
     probes = centroid_rank(
         vectors.filter(F.col("vec_id") < n_queries),
         centroids,
         max_rank=nprobe,
         metric=metric,
-    ).select(F.col("vec_id").alias("p_vec"), F.col("cid").alias("bucket"))
-    cand = assign.select(
-        F.col("vec_id").alias("cand_id"), F.col("cid").alias("cb")
-    )
-    q = vectors.join(probes, vectors["vec_id"] == F.col("p_vec")).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qe"), "bucket"
-    )
-    pairs = (
-        q.join(cand, F.col("bucket") == F.col("cb"))
-        .join(vectors, F.col("cand_id") == vectors["vec_id"])
-        .filter(F.col("cand_id") != F.col("qid"))
-        .select(
-            "qid",
-            F.col("cand_id").alias("nid"),
-            "qe",
-            F.col("embedding").alias("e"),
-        )
-    )
-    p = pairwise_cosine(pairs, ("qid", "nid"), ("qe", "e"))
-    w = Window.partitionBy("qid").orderBy(
-        F.round(F.col("cos"), 6).desc(), F.col("nid").asc()
-    )
+    ).select(F.col("vec_id").alias("qid"), F.col("cid").alias("bucket"))
     return (
-        p.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
-        .select("qid", "nid", "rank", F.round("cos", 4).alias("cosine"))
+        probes.join(assign, F.col("bucket") == F.col("cb"))
+        .filter(F.col("nid") != F.col("qid"))
+        .select("qid", "nid")
     )
+
+
+def _rerank(
+    vectors: DataFrame, cand: DataFrame, n_queries: int, topk: int
+) -> DataFrame:
+    """The exact verify stage of every IVF search: join a (qid, nid)
+    candidate relation to the query and candidate raw vectors, score
+    the pairs with pairwise_cosine and keep the top ``topk`` per query
+    (_rank_by_cosine). Queries are the table's first ``n_queries``
+    vectors."""
+    qvecs = vectors.filter(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
+    )
+    pairs = cand.join(qvecs, "qid").join(
+        vectors.select(F.col("vec_id").alias("nid"), F.col("embedding").alias("e")),
+        "nid",
+    )
+    return _rank_by_cosine(pairwise_cosine(pairs, ("qid", "nid"), ("qe", "e")), topk)
 
 
 def train_pq_codebooks(
@@ -430,14 +455,7 @@ def train_pq_codebooks(
     codebooks[sub][code][subdim], plain floats for closure capture.
 
     D must divide by ``m`` (PQ's standard constraint)."""
-    sample = (
-        vectors.select("vec_id", "embedding")
-        .orderBy(F.md5(F.col("vec_id").cast("string")))
-        .limit(sample_cap)
-        .collect()
-    )
-    sample.sort(key=lambda r: r["vec_id"])  # RNG-independent order
-    x = np.array([list(r["embedding"]) for r in sample], dtype=np.float64)
+    x = _hash_sample(vectors, sample_cap)
     dims = x.shape[1]
     if dims % m:
         raise ValueError(f"dims {dims} not divisible by m={m}")
@@ -452,16 +470,18 @@ def train_pq_codebooks(
 
 
 def pq_encode(vectors: DataFrame, codebooks: list[list[list[float]]]) -> DataFrame:
-    """(vec_id, codes array<int>): each vector's per-subspace nearest
-    codeword — one GEMM per (subspace, Arrow batch) against the
-    broadcast codebook, fully distributed, no shuffle. The codes
-    relation is the PQ index; pq_pack_codes gives it the m-byte
-    binary physical form for the hot tier and generic sinks
-    (measured nuance: parquet's element dictionary already stores
-    ksub<=256 int codes at ~1.2 B/element, so at rest on parquet the
-    two forms are comparable — the binary bound matters for memory /
-    Arrow / broadcast and non-columnar storage)."""
+    """(vec_id, codes binary): each vector's nearest codeword per
+    subspace, one byte each — one GEMM per (subspace, Arrow batch)
+    against the broadcast codebook, no shuffle. The m-byte code is the
+    PQ index's one form: it bounds caches, Arrow transfer and
+    broadcasts to m bytes a vector (on parquet at rest an int array
+    costs about the same, ~1.2 B/element through its dictionary). A
+    codebook over 256 codewords (PQ's ksub <= 256 invariant) raises
+    rather than wrapping its codes modulo 256."""
     mats = [np.array(b, dtype=np.float64) for b in codebooks]
+    ksub = max(len(c) for c in mats)
+    if ksub > 256:
+        raise ValueError(f"PQ codes are one byte: {ksub} codewords > 256")
     csq = [np.einsum("ij,ij->i", c, c) for c in mats]
     m = len(mats)
     dsub = mats[0].shape[1]
@@ -472,38 +492,74 @@ def pq_encode(vectors: DataFrame, codebooks: list[list[list[float]]]) -> DataFra
                 continue
             ids = pdf["vec_id"].to_numpy(dtype=np.int64)
             mat = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            codes = np.empty((len(ids), m), dtype=np.int64)
+            codes = np.empty((len(ids), m), dtype=np.uint8)
             for sub in range(m):
                 xs = mat[:, sub * dsub : (sub + 1) * dsub]
                 # argmin |x-c|^2 == argmin |c|^2 - 2 x.c (|x|^2 const/row)
                 codes[:, sub] = np.argmin(
                     csq[sub][None, :] - 2.0 * (xs @ mats[sub].T), axis=1
                 )
-            yield pd.DataFrame({"vec_id": ids, "codes": list(codes)})
+            yield pd.DataFrame({"vec_id": ids, "codes": [c.tobytes() for c in codes]})
 
     return vectors.select("vec_id", "embedding").mapInPandas(
-        op, "vec_id long, codes array<int>"
+        op, "vec_id long, codes binary"
     )
 
 
-def pq_pack_codes(codes: DataFrame, codes_col: str = "codes") -> DataFrame:
-    """Pack an ``array<int>`` PQ-code column into an m-byte ``binary``
-    — the physical type that makes the 'm bytes/vector' bound HARD:
-    in-memory caches, Arrow transfer, broadcasts, and row-oriented
-    sinks all hold exactly m payload bytes (an int array costs 4-8x
-    there). On parquet at rest the element dictionary already stores
-    ksub<=256 int codes at ~1.2 B/element, so both forms are the same
-    order on disk — measured in tests/test_similarity_engine.py,
-    which also asserts the packed column's on-disk width. Vectorized
-    per Arrow batch; codes must fit a byte (PQ's ksub <= 256
-    invariant — bytes() raises on violation rather than silently
-    truncating). Write the result with any parquet sink."""
+def _query_vectors(vectors: DataFrame, n_queries: int) -> list[tuple[int, list]]:
+    """The first ``n_queries`` vectors, collected driver-side in id
+    order — bounded, like every query-side structure here."""
+    rows = vectors.filter(F.col("vec_id") < n_queries).select("vec_id", "embedding")
+    return sorted((r["vec_id"], list(r["embedding"])) for r in rows.collect())
 
-    @F.pandas_udf("binary")
-    def pack(s: pd.Series) -> pd.Series:
-        return s.map(lambda a: bytes(bytearray(int(c) for c in a)))
 
-    return codes.withColumn(codes_col, pack(codes_col))
+def _adc_tables(
+    queries: list[tuple[int, list]], codebooks: list[list[list[float]]]
+) -> dict[int, np.ndarray]:
+    """Per-query ADC (asymmetric distance computation) lookup tables:
+    ``tables[qid][s, c]`` is the squared distance from the query's
+    subspace-``s`` slice to codeword ``c``, so a PQ-coded vector's
+    distance to the query is a sum of m table entries."""
+    mats = [np.array(b, dtype=np.float64) for b in codebooks]
+    tables = {}
+    for qid, qv in queries:
+        subs = np.asarray(qv, dtype=np.float64).reshape(len(mats), -1)
+        tables[qid] = np.stack([np.sum((c - q) ** 2, axis=1) for c, q in zip(mats, subs)])
+    return tables
+
+
+def _adc_shortlist(
+    cand: DataFrame, tables: dict[int, np.ndarray], shortlist: int
+) -> DataFrame:
+    """(qid, nid, codes binary) -> (qid, nid): each query's
+    ``shortlist`` candidates nearest by ADC distance (round(d, 6) asc,
+    nid asc), scored per Arrow batch without touching a float vector."""
+
+    def adc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            qids = pdf["qid"].to_numpy(dtype=np.int64)
+            codes = np.frombuffer(b"".join(pdf["codes"]), dtype=np.uint8)
+            codes = codes.reshape(len(pdf), -1)
+            sub_idx = np.arange(codes.shape[1])[None, :]
+            dist = np.empty(len(qids), dtype=np.float64)
+            for qid in np.unique(qids):
+                rows = qids == qid
+                dist[rows] = tables[qid][sub_idx, codes[rows]].sum(axis=1)
+            yield pd.DataFrame(
+                {"qid": qids, "nid": pdf["nid"].to_numpy(dtype=np.int64), "adist": dist}
+            )
+
+    w = Window.partitionBy("qid").orderBy(
+        F.round(F.col("adist"), 6).asc(), F.col("nid").asc()
+    )
+    return (
+        cand.mapInPandas(adc, "qid long, nid long, adist double")
+        .withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= shortlist)
+        .select("qid", "nid")
+    )
 
 
 def ivf_pq_search(
@@ -527,88 +583,12 @@ def ivf_pq_search(
     m-byte codes, and the shortlist rows are ever hot.
 
     Queries are the table's first ``n_queries`` vectors (the engine's
-    demo convention); their raw vectors are collected driver-side to
-    build the LUTs — bounded, like every query-side structure here."""
-    qrows = (
-        vectors.filter(F.col("vec_id") < n_queries)
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    queries = sorted((r["vec_id"], list(r["embedding"])) for r in qrows)
-    mats = [np.array(b, dtype=np.float64) for b in codebooks]
-    m = len(mats)
-    dsub = mats[0].shape[1]
-    luts = {}
-    for qid, qv in queries:
-        qarr = np.asarray(qv, dtype=np.float64)
-        luts[qid] = np.stack(
-            [
-                np.sum(
-                    (mats[s] - qarr[s * dsub : (s + 1) * dsub][None, :]) ** 2,
-                    axis=1,
-                )
-                for s in range(m)
-            ]
-        )
-
-    assign = centroid_rank(vectors, centroids, max_rank=1, metric="euclidean")
-    probes = centroid_rank(
-        vectors.filter(F.col("vec_id") < n_queries),
-        centroids,
-        max_rank=nprobe,
-        metric="euclidean",
-    ).select(F.col("vec_id").alias("qid"), F.col("cid").alias("bucket"))
-    codes = pq_encode(vectors, codebooks)
-    cand = (
-        probes.join(
-            assign.select(F.col("vec_id").alias("nid"), F.col("cid").alias("cb")),
-            F.col("bucket") == F.col("cb"),
-        )
-        .filter(F.col("nid") != F.col("qid"))
-        .join(codes.select(F.col("vec_id").alias("nid"), "codes"), "nid")
-        .select("qid", "nid", "codes")
-    )
-
-    def adc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sub_idx = np.arange(m)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            qids = pdf["qid"].to_numpy(dtype=np.int64)
-            nids = pdf["nid"].to_numpy(dtype=np.int64)
-            cm = np.array(pdf["codes"].tolist(), dtype=np.int64)
-            dist = np.empty(len(qids), dtype=np.float64)
-            for qid in np.unique(qids):
-                rows = qids == qid
-                dist[rows] = luts[qid][sub_idx[None, :], cm[rows]].sum(axis=1)
-            yield pd.DataFrame({"qid": qids, "nid": nids, "adist": dist})
-
-    scored = cand.mapInPandas(adc, "qid long, nid long, adist double")
-    ws = Window.partitionBy("qid").orderBy(
-        F.round(F.col("adist"), 6).asc(), F.col("nid").asc()
-    )
-    short = (
-        scored.withColumn("__rn", F.row_number().over(ws))
-        .filter(F.col("__rn") <= shortlist)
-        .drop("__rn", "adist")
-    )
-    # exact re-rank of the tiny shortlist on raw vectors
-    qvecs = vectors.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
-    )
-    pairs = short.join(qvecs, "qid").join(
-        vectors.select(F.col("vec_id").alias("nid"), F.col("embedding").alias("e")),
-        "nid",
-    )
-    p = pairwise_cosine(pairs, ("qid", "nid"), ("qe", "e"))
-    wf = Window.partitionBy("qid").orderBy(
-        F.round(F.col("cos"), 6).desc(), F.col("nid").asc()
-    )
-    return (
-        p.withColumn("rank", F.row_number().over(wf))
-        .filter(F.col("rank") <= topk)
-        .select("qid", "nid", "rank", F.round("cos", 4).alias("cosine"))
-    )
+    demo convention), collected driver-side to build the LUTs."""
+    tables = _adc_tables(_query_vectors(vectors, n_queries), codebooks)
+    codes = pq_encode(vectors, codebooks).withColumnRenamed("vec_id", "nid")
+    cand = _ivf_candidates(vectors, centroids, n_queries, nprobe, "euclidean")
+    short = _adc_shortlist(cand.join(codes, "nid"), tables, shortlist)
+    return _rerank(vectors, short, n_queries, topk)
 
 
 #: metadata filename inside a persisted IVF-PQ index directory
@@ -651,7 +631,7 @@ def build_ivf_pq_index(
     assign = centroid_rank(
         vectors, centroids, max_rank=1, metric="euclidean"
     ).select("vec_id", F.col("cid").alias("bucket"))
-    codes = pq_pack_codes(pq_encode(vectors, codebooks))
+    codes = pq_encode(vectors, codebooks)
     postings = codes.join(assign, "vec_id").select("vec_id", "codes", "bucket")
     postings.write.mode("overwrite").partitionBy("bucket").parquet(path)
     meta = {
@@ -696,34 +676,14 @@ def search_ivf_pq_index(
     against the float vector table (semi-joined by id). No training,
     no full-index pass, no shuffle of anything corpus-sized."""
     meta = load_ivf_pq_index(path)
-    cents = meta["centroids"]
-    cmat = np.array([v for _, v in cents], dtype=np.float64)
-    cids = np.array([c for c, _ in cents], dtype=np.int64)
-    mats = [np.array(b, dtype=np.float64) for b in meta["codebooks"]]
-    m = len(mats)
-    dsub = mats[0].shape[1]
-
-    qrows = (
-        vectors.filter(F.col("vec_id") < n_queries)
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    queries = sorted((r["vec_id"], list(r["embedding"])) for r in qrows)
-    luts, probe_rows = {}, []
+    cmat = np.array([v for _, v in meta["centroids"]], dtype=np.float64)
+    cids = np.array([c for c, _ in meta["centroids"]], dtype=np.int64)
+    queries = _query_vectors(vectors, n_queries)
+    probe_rows = []
     for qid, qv in queries:
-        qarr = np.asarray(qv, dtype=np.float64)
-        d2 = np.sum((cmat - qarr[None, :]) ** 2, axis=1)
-        order = np.argsort(d2, kind="stable")[:nprobe]
-        probe_rows += [(int(qid), int(cids[i])) for i in order]
-        luts[qid] = np.stack(
-            [
-                np.sum(
-                    (mats[s] - qarr[s * dsub : (s + 1) * dsub][None, :]) ** 2,
-                    axis=1,
-                )
-                for s in range(m)
-            ]
-        )
+        d2 = np.sum((cmat - np.asarray(qv, dtype=np.float64)) ** 2, axis=1)
+        top = np.argsort(d2, kind="stable")[:nprobe]
+        probe_rows += [(int(qid), int(cids[i])) for i in top]
 
     buckets = sorted({b for _, b in probe_rows})
     probes = local_frame(spark, probe_rows, "qid long, bucket int")
@@ -733,46 +693,5 @@ def search_ivf_pq_index(
         .filter(F.col("vec_id") != F.col("qid"))
         .select("qid", F.col("vec_id").alias("nid"), "codes")
     )
-
-    def adc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sub_idx = np.arange(m)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            qids = pdf["qid"].to_numpy(dtype=np.int64)
-            nids = pdf["nid"].to_numpy(dtype=np.int64)
-            cm = np.array(
-                [list(bytes(b)) for b in pdf["codes"]], dtype=np.int64
-            )
-            dist = np.empty(len(qids), dtype=np.float64)
-            for qid in np.unique(qids):
-                rows = qids == qid
-                dist[rows] = luts[qid][sub_idx[None, :], cm[rows]].sum(axis=1)
-            yield pd.DataFrame({"qid": qids, "nid": nids, "adist": dist})
-
-    scored = cand.mapInPandas(adc, "qid long, nid long, adist double")
-    ws = Window.partitionBy("qid").orderBy(
-        F.round(F.col("adist"), 6).asc(), F.col("nid").asc()
-    )
-    short = (
-        scored.withColumn("__rn", F.row_number().over(ws))
-        .filter(F.col("__rn") <= shortlist)
-        .drop("__rn", "adist")
-    )
-    qvecs = vectors.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
-    )
-    pairs = short.join(qvecs, "qid").join(
-        vectors.select(F.col("vec_id").alias("nid"), F.col("embedding").alias("e")),
-        "nid",
-    )
-    p = pairwise_cosine(pairs, ("qid", "nid"), ("qe", "e"))
-    wf = Window.partitionBy("qid").orderBy(
-        F.round(F.col("cos"), 6).desc(), F.col("nid").asc()
-    )
-    return (
-        p.withColumn("rank", F.row_number().over(wf))
-        .filter(F.col("rank") <= topk)
-        .select("qid", "nid", "rank", F.round("cos", 4).alias("cosine"))
-    )
-
+    tables = _adc_tables(queries, meta["codebooks"])
+    return _rerank(vectors, _adc_shortlist(cand, tables, shortlist), n_queries, topk)

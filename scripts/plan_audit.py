@@ -2,9 +2,11 @@
 checks by eye before shipping a plan to a 1000-executor cluster —
 exchange count and keys, join strategies, top-k form, pushdown,
 codegen span count, Python-RDD scans. Prints one summary row per
-query plus the formatted plan when --full is given.
+query plus the formatted plan when --full is given; with no names it
+audits every query auditable_queries() resolves.
 
-Usage: python scripts/plan_audit.py [sf_dir] q_name [q_name ...] [--full]
+Usage: python scripts/plan_audit.py [sf_dir] [q_name ...] [--full]
+Record plans: python scripts/plan_audit.py --full > plans/<tag>.txt
 """
 
 from __future__ import annotations
@@ -68,9 +70,9 @@ def main() -> None:
     args = [a for a in sys.argv[1:] if a != "--full"]
     full = "--full" in sys.argv
     sf_dir = args[0] if args and args[0].startswith("/") else "/root/testdata/sf0.01"
-    names = [a for a in args if a.startswith("q_")]
-    spark = get_spark("plan-audit")
     queries = auditable_queries()
+    names = [a for a in args if a.startswith("q_")] or sorted(queries)
+    spark = get_spark("plan-audit")
     for name in names:
         a = audit(queries[name](spark, sf_dir))
         print(

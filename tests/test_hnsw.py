@@ -335,10 +335,10 @@ def test_route_queries_probe_guard(spark, corpus, tmp_path):
 
 def test_routed_64_cell_recall_floor_at_operating_point(spark, tmp_path):
     """Round-16 verdict item 8: the 64-cell operating point, pinned.
-    On a 64-cluster corpus (the regime routing is FOR — the
-    scripts/bench_hnsw_recall_curve.py record on the near-uniform
-    driver embeddings shows the honest complement: uniform data needs
-    ~50% probe for 0.93), probing 8 of 64 cells (12.5%) must hold
+    On a 64-cluster corpus (the regime routing is FOR — the recall
+    curve BASELINE.md records on the near-uniform driver embeddings,
+    taken with a script deleted since, shows the honest complement:
+    uniform data needs ~50% probe for 0.93), probing 8 of 64 cells (12.5%) must hold
     recall >= 0.9 with a per-query eval budget bounded by the probed
     cells — the sublinear serving claim at a shard count 8x the
     earlier 8-cell evidence."""

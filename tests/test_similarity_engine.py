@@ -4,6 +4,7 @@ SQL-expressed oracle-checked baseline."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from clinical_data_warehouse_bi_spark import similarity
@@ -168,8 +169,9 @@ def test_quantize_roundtrip_error_bound(spark, sf_dir):
 
 
 def test_pq_encode_shapes_and_determinism(spark, sf_dir):
-    """PQ codes: one code per subspace, every code a valid codebook
-    index, and encoding is deterministic (seeded training + argmin)."""
+    """PQ codes: m bytes a vector, one per subspace, every byte a valid
+    codebook index, and encoding is deterministic (seeded training +
+    argmin)."""
     from clinical_data_warehouse_bi_spark.io import read_table
 
     emb = read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -177,14 +179,32 @@ def test_pq_encode_shapes_and_determinism(spark, sf_dir):
     assert len(books) == 8
     dims = len(emb.first()["embedding"])
     assert len(books[0][0]) == dims // 8
-    codes = {r["vec_id"]: r["codes"] for r in similarity.pq_encode(emb, books).collect()}
+    encoded = similarity.pq_encode(emb, books)
+    assert dict(encoded.dtypes)["codes"] == "binary"
+    codes = {r["vec_id"]: bytes(r["codes"]) for r in encoded.collect()}
     assert len(codes) == emb.count()
     for c in codes.values():
         assert len(c) == 8 and all(0 <= x < 16 for x in c)
     again = {
-        r["vec_id"]: r["codes"] for r in similarity.pq_encode(emb, books).collect()
+        r["vec_id"]: bytes(r["codes"])
+        for r in similarity.pq_encode(emb, books).collect()
     }
     assert codes == again
+
+
+def test_pq_encode_rejects_codes_wider_than_a_byte(spark, sf_dir):
+    """PQ's ksub <= 256 invariant: a codebook of 257 codewords cannot
+    be coded in one byte, and pq_encode must say so instead of
+    wrapping codes modulo 256."""
+    from clinical_data_warehouse_bi_spark.io import read_table
+
+    emb = read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    dsub = len(emb.first()["embedding"]) // 8
+    books = [[[float(c)] * dsub for c in range(16)] for _ in range(8)]
+    similarity.pq_encode(emb, books)  # 16 codewords fit a byte
+    books[3] = [[float(c)] * dsub for c in range(257)]
+    with pytest.raises(ValueError, match="257"):
+        similarity.pq_encode(emb, books)
 
 
 def test_pq_reconstruction_beats_global_mean(spark, sf_dir):
@@ -202,7 +222,10 @@ def test_pq_reconstruction_beats_global_mean(spark, sf_dir):
     # (no cluster structure), where tiny codebooks plateau — this pins
     # that a realistic codebook budget halves the quantization error
     books = similarity.train_pq_codebooks(emb, m=8, ksub=64, sample_cap=512)
-    codes = {r["vec_id"]: r["codes"] for r in similarity.pq_encode(emb, books).collect()}
+    codes = {
+        r["vec_id"]: bytes(r["codes"])
+        for r in similarity.pq_encode(emb, books).collect()
+    }
     mats = [np.array(b) for b in books]
     dsub = x.shape[1] // 8
     recon = np.stack(
@@ -249,37 +272,24 @@ def test_ivf_pq_search_with_rerank_recovers_recall(spark):
     assert recall >= 0.8, recall
 
 
-def test_pq_pack_codes_roundtrip_and_disk_width(spark, sf_dir, tmp_path):
+def test_pq_codes_disk_width(spark, sf_dir, tmp_path):
     """The PQ index at rest must honor the 'm bytes/vector' claim:
-    pack codes to binary, write parquet, and check the codes column's
+    write pq_encode's codes to parquet and check the codes column's
     uncompressed size is ~m bytes/vector (plus parquet's per-value
-    length prefix) and far below the array<int> form's footprint.
-    Unpacking the bytes must give back the codes exactly."""
+    length prefix), on the fixture's codes and at full code entropy."""
+    import os
+
     import pyarrow.parquet as pq
 
     from clinical_data_warehouse_bi_spark.io import read_table
 
-    m = 8
-    emb = read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    books = similarity.train_pq_codebooks(emb, m=m, ksub=16, sample_cap=512)
-    codes = similarity.pq_encode(emb, books)
-    packed = similarity.pq_pack_codes(codes)
-    assert dict(packed.dtypes)["codes"] == "binary"
-
-    # exact round-trip
-    want = {r["vec_id"]: list(r["codes"]) for r in codes.collect()}
-    got = {r["vec_id"]: list(r["codes"]) for r in packed.collect()}
-    assert got == want
-
     def col_bytes(path, col):
         total = 0
         n = 0
-        import os as _os
-
-        for fn in _os.listdir(path):
+        for fn in os.listdir(path):
             if not fn.endswith(".parquet"):
                 continue
-            md = pq.ParquetFile(_os.path.join(path, fn)).metadata
+            md = pq.ParquetFile(os.path.join(path, fn)).metadata
             n += md.num_rows
             for rg in range(md.num_row_groups):
                 for ci in range(md.num_columns):
@@ -288,29 +298,39 @@ def test_pq_pack_codes_roundtrip_and_disk_width(spark, sf_dir, tmp_path):
                         total += c.total_uncompressed_size
         return total, n
 
+    m = 8
+    emb = read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    books = similarity.train_pq_codebooks(emb, m=m, ksub=16, sample_cap=512)
     p_bin = str(tmp_path / "pq_bin")
-    packed.coalesce(1).write.parquet(p_bin)
+    similarity.pq_encode(emb, books).coalesce(1).write.parquet(p_bin)
     bin_bytes, n = col_bytes(p_bin, "codes")
     assert n > 0
     # plain-encoded BYTE_ARRAY = 4-byte length prefix + m payload
     assert bin_bytes / n <= m + 8, bin_bytes / n
 
     # Measured footprint note (full-range ksub=256 codes, 4096 rows):
-    # parquet's ELEMENT-level dictionary already encodes int codes at
+    # parquet's ELEMENT-level dictionary encodes an int-array form at
     # ~1.2 bytes/element (~9.3 B/vec for m=8) because the 256-value
     # dictionary always fits a page, while binary BYTE_ARRAY pays a
     # 4-byte length prefix (~12 B/vec). So on parquet at rest the two
     # are the same order; the binary form's hard m-byte bound is what
     # matters for the HOT tier — in-memory caches, Arrow transfer,
     # broadcast — and non-columnar sinks. Assert the bound holds at
-    # full code entropy too.
-    import random
-
-    rnd = random.Random(7)
-    rows = [(i, [rnd.randrange(256) for _ in range(m)]) for i in range(4096)]
-    ent = spark.createDataFrame(rows, "vec_id long, codes array<int>")
+    # full code entropy too: vectors planted on random codewords of
+    # 256-word codebooks encode back to exactly the planted codes.
+    rng = np.random.RandomState(7)
+    full = rng.normal(size=(m, 256, 2))
+    planted = rng.randint(256, size=(4096, m))
+    rows = [
+        (i, [float(v) for s in range(m) for v in full[s, planted[i, s]]])
+        for i in range(len(planted))
+    ]
+    ent = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    ent_codes = similarity.pq_encode(ent, full.tolist())
+    got = {r["vec_id"]: bytes(r["codes"]) for r in ent_codes.collect()}
+    assert got == {i: bytes(planted[i].astype(np.uint8)) for i in range(len(planted))}
     p_ebin = str(tmp_path / "ent_bin")
-    similarity.pq_pack_codes(ent).coalesce(1).write.parquet(p_ebin)
+    ent_codes.coalesce(1).write.parquet(p_ebin)
     ebin, en = col_bytes(p_ebin, "codes")
     assert ebin / en <= m + 8, ebin / en
 
@@ -343,13 +363,15 @@ def test_persisted_ivf_pq_index_serves_searches(spark, tmp_path):
     # partition pruning reaches the postings scan
     plan = got._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "bucket" in plan
-    hits = [(r.qid, r.nid) for r in got.collect()]
-    assert len(hits) == n_queries * 5
+    served = sorted(tuple(r) for r in got.collect())
+    assert len(served) == n_queries * 5
+    hits = {(qid, nid) for qid, nid, _, _ in served}
 
-    # parity with the in-memory composed pipeline (same quantizers:
-    # both train via the same seeded bounded fits)
-    mem = {
-        (r.qid, r.nid)
+    # parity with the in-memory composed pipeline, row for row — the
+    # same (qid, nid, rank, cosine) (same quantizers: both train via
+    # the same seeded bounded fits)
+    mem = sorted(
+        tuple(r)
         for r in similarity.ivf_pq_search(
             emb,
             similarity.sampled_kmeans_centroids(emb, n_clusters=k, seed=7),
@@ -358,8 +380,8 @@ def test_persisted_ivf_pq_index_serves_searches(spark, tmp_path):
             nprobe=nprobe,
             topk=5,
         ).collect()
-    }
-    assert set(hits) == mem
+    )
+    assert served == mem
 
     # recall vs brute force on the planted clusters
     queries = [r for r in rows if r[0] < n_queries]
@@ -367,7 +389,7 @@ def test_persisted_ivf_pq_index_serves_searches(spark, tmp_path):
         (r.qid, r.nid)
         for r in similarity.cosine_topk_numpy(emb, queries, k=5).collect()
     }
-    recall = len(set(hits) & truth) / len(truth)
+    recall = len(hits & truth) / len(truth)
     assert recall >= 0.8, recall
 
 

@@ -1,12 +1,13 @@
 """The Python worker daemon (``clinical_data_warehouse_bi_spark.daemon``):
-stat-checked zip-importer invalidation, and workers forked with the
-Arrow stack already imported."""
+stat-checked zip-importer invalidation, workers forked with the Arrow
+stack already imported, and the package root on the workers' path."""
 
 from __future__ import annotations
 
 import importlib
 import importlib.util
 import os
+import subprocess
 import sys
 import zipfile
 import zipimport
@@ -83,3 +84,33 @@ def test_workers_fork_from_the_library_daemon(spark):
     assert len(rows) == 1, rows
     assert os.path.realpath(rows[0]["invalidate"]) == os.path.realpath(daemon.__file__)
     assert rows[0]["pyarrow_preloaded"]
+
+
+def test_workers_import_the_library_from_any_directory(tmp_path):
+    """get_spark gives the Python workers the package root: a script
+    run from outside the repo, with the repo on its own sys.path only,
+    runs a library mapInPandas function (without it every Python task
+    fails with ModuleNotFoundError)."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = f"""
+import sys
+sys.path.insert(0, {repo!r})
+from clinical_data_warehouse_bi_spark.session import get_spark
+from clinical_data_warehouse_bi_spark.similarity import centroid_rank
+
+spark = get_spark("workers-path", shuffle_partitions=2)
+vecs = spark.range(4).selectExpr(
+    "id AS vec_id", "array(1.0D, CAST(id AS DOUBLE)) AS embedding"
+)
+print(sorted(tuple(r) for r in centroid_rank(vecs, [(7, [1.0, 0.0])], 1).collect()))
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="2", SPARK_DRIVER_MEMORY="1g")
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert out.stdout.strip().splitlines()[-1] == str(
+        [(i, 7, 1) for i in range(4)]
+    )
