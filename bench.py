@@ -4,9 +4,10 @@ local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
   {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 Methodology: per query, one warm-up execution (codegen + file-footer
-caches) then one timed execution to a noop sink (full computation, no
-driver-side result materialization skew). `value` is the sum of timed
-seconds across queries.
+caches) then timed executions to a noop sink (full computation, no
+driver-side result materialization skew), each after the session's
+cached relations and checkpoints are dropped, so no run reads what an
+earlier one cached. `value` is the sum of timed seconds across queries.
 """
 
 from __future__ import annotations
@@ -368,22 +369,34 @@ def main() -> None:
     timings: dict[str, float] = {}
     spreads: dict[str, float] = {}
     load_start = os.getloadavg()
-    # localCheckpoint blocks are NOT CacheManager-registered, so
-    # clearCache never frees them; queries that checkpoint
-    # (percentiles, dedup_clusters, similarity index builds) leak
-    # executor storage across the 40-query session otherwise — the
+    # Every query run starts from an empty cache. Spark's CacheManager
+    # matches a fresh DataFrame whose plan equals a cached one, so a
+    # library .cache()/.persist() left by the warm-up (or by the first
+    # timed run) would be READ by the next run instead of recomputed —
+    # lsh_candidate_pairs' band signatures were, timing q_dedup_clusters
+    # at a third of its cost. localCheckpoint blocks are not
+    # CacheManager-registered, so clearCache never frees them; queries
+    # that checkpoint (percentiles, dedup_clusters, similarity index
+    # builds) leak executor storage across the session otherwise — the
     # round-7 q_ann_ivf_learned 0.85->3.81 s "regression" mechanism.
-    # Snapshot once, release everything newer after each query.
+    # Snapshot once, release everything newer before each run.
     rdd_baseline = snapshot_persistent_rdds(spark)
+
+    def reset() -> None:
+        spark.catalog.clearCache()
+        release_new_persistent_rdds(spark, rdd_baseline)
+
     for name in BENCH_QUERIES:
         try:
             fn = queries[name]  # an unresolved name records -1 below
-            # drop cached relations from prior queries: each query
-            # caches fresh DataFrame instances, so leftovers only add
-            # memory pressure (they are never hit again)
-            spark.catalog.clearCache()
-            release_new_persistent_rdds(spark, rdd_baseline)
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()  # warm-up
+
+            def timed_run() -> float:
+                reset()
+                t0 = time.time()
+                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+                return time.time() - t0
+
+            timed_run()  # warm-up
             # Best-of-2, plus a third run for sub-2s entries: the
             # host-noise band on those is +/-30% of a few hundred ms,
             # the same order as real regressions (two rounds of
@@ -391,22 +404,16 @@ def main() -> None:
             # per-query spread (max-min over timed runs) goes to
             # stderr so moves can be attributed noise-vs-code against
             # the bands recorded in BASELINE.md.
-            runs = []
-            for _ in range(2):
-                t0 = time.time()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                runs.append(time.time() - t0)
+            runs = [timed_run() for _ in range(2)]
             if min(runs) < 2.0:
-                t0 = time.time()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                runs.append(time.time() - t0)
+                runs.append(timed_run())
             timings[name] = round(min(runs), 4)
             spreads[name] = round(max(runs) - min(runs), 4)
         except Exception as e:  # noqa: BLE001
             timings[name] = -1.0
             print(f"bench error in {name}: {e}", file=sys.stderr)
     try:
-        spark.catalog.clearCache()
+        reset()
         timings["pipeline_star"] = bench_pipeline(
             spark, float(sf) if sf.replace(".", "").isdigit() else 0.01
         )
@@ -449,7 +456,7 @@ def main() -> None:
         ),
         "noise": {
             "timing_protocol": "min over 2 runs after 1 warm-up; "
-            "3rd run when best < 2s",
+            "3rd run when best < 2s; caches reset before every run",
             "per_query_spread_sec": spreads,
             "spread_total_sec": round(sum(spreads.values()), 4),
             "host_load_1m_start": round(load_start[0], 2),

@@ -113,11 +113,7 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     against SQL_NGRAM_JACCARD. Kept unregistered as the
     verification-tool API."""
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    sh = (
-        docs.filter(F.col("doc_id") < 200)
-        .select("doc_id", F.explode(T.word_shingles(T.tokens("text"), 3)).alias("sh"))
-        .distinct()
-    )
+    sh = T.shingled(docs.filter(F.col("doc_id") < 200)).distinct()
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     a = sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))

@@ -8,7 +8,11 @@ md5- or arithmetic-based so the DuckDB oracle can reproduce it
 bit-for-bit (Spark's hash()/xxhash64() and DuckDB's hash() are
 different algorithms — never use them in compared output).
 
-Scale notes: shingle explode multiplies rows by ~tokens-per-doc; the
+Scale notes: each document is tokenized once, and the token array is
+bound to a column before any lambda reads it (Spark shares no
+subexpression inside a higher-order function, so a tokenizer inside
+the shingle lambda re-ran once per element: O(tokens^2) regex work per
+doc). Shingle explode multiplies rows by ~tokens-per-doc; the
 minhash groupBy keys on (doc_id, seed) which is uniformly distributed
 by construction — no skew. Band-bucket self-join is the standard
 LSH candidate generation: join key (band_id, signature) keeps the
@@ -61,14 +65,18 @@ def _name(col, c: Column) -> str:
     raise ValueError("tokens() requires a column name (used inside expr)")
 
 
-def word_shingles(tok_col: Column, n: int = 3) -> Column:
-    """n-word shingles: positions 1..len-n+1 of the token array
-    (empty array when the doc is shorter than n)."""
-    parts = lambda i: [F.element_at(tok_col, i + off) for off in range(n)]  # noqa: E731
+def word_shingles(tok_col: str, n: int = 3) -> Column:
+    """n-word shingles of the token-array column ``tok_col``: positions
+    1..len-n+1 (empty array when the doc is shorter than n). A column
+    name, not an expression: the lambda reads the array n times per
+    shingle, and Spark does not share subexpressions inside a lambda —
+    a tokenizer expression here would re-run once per element read."""
+    tok = F.col(tok_col)
+    parts = lambda i: [F.element_at(tok, i + off) for off in range(n)]  # noqa: E731
     return F.when(
-        F.size(tok_col) >= n,
+        F.size(tok) >= n,
         F.transform(
-            F.sequence(F.lit(1), F.size(tok_col) - (n - 1)),
+            F.sequence(F.lit(1), F.size(tok) - (n - 1)),
             lambda i: F.concat_ws(" ", *parts(i)),
         ),
     ).otherwise(F.array().cast("array<string>"))
@@ -83,13 +91,14 @@ def shingled(docs: DataFrame, id_col: str = "doc_id",
     every core, not on however few splits the input file happens to
     have (no-op on a well-split cluster read). Keyed on doc_id so the
     downstream per-doc aggregations (minhash min(), shingle-set
-    distinct) inherit the partitioning and need no further exchange."""
+    distinct) inherit the partitioning and need no further exchange.
+    Each document is tokenized once, into a column the shingle lambda
+    then reads."""
     from clinical_data_warehouse_bi_spark.io import fan_out
 
     return fan_out(docs.select(id_col, text_col), id_col).select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(word_shingles(tokens(text_col), 3)).alias("sh"),
-    )
+        F.col(id_col).alias("doc_id"), tokens(text_col).alias("__toks")
+    ).select("doc_id", F.explode(word_shingles("__toks", 3)).alias("sh"))
 
 
 def minhash_wide(

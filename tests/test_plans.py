@@ -625,3 +625,49 @@ def test_zip_index_key_offsets_are_a_local_relation(spark):
     lineage = rdd_leaves[0].rdd().toDebugString()
     assert "LocalCheckpointRDD" in lineage and "PythonRDD" not in lineage, lineage
     assert any(lf.nodeName() == "LocalRelation" for lf in leaves), plan.toString()
+
+
+def test_no_registered_query_retokenizes_inside_a_lambda(
+    spark, sf_dir, monkeypatch
+):
+    """Spark shares no subexpression inside a higher-order function,
+    so a tokenizer (or digest) over a whole document placed in a
+    lambda re-runs per element — text.word_shingles over an inline
+    tokens() expression was O(tokens^2) regex work per doc. Every
+    registered plan must read a token column bound before the lambda.
+    Plans materialized while a query is built (q_dedup_clusters ends
+    in localCheckpoints, so its final plan never shows the shingles)
+    are checked too, as each cache/persist/checkpoint call sees them."""
+    from scripts.plan_audit import lambda_recomputes
+
+    from clinical_data_warehouse_bi_spark.io import (
+        release_new_persistent_rdds,
+        snapshot_persistent_rdds,
+    )
+
+    frame_cls = type(spark.range(1))
+    materialized: list[tuple[str, int]] = []
+    audited_frames = []
+    for meth in ("localCheckpoint", "checkpoint", "cache", "persist"):
+        def audited(self, *args, _orig=getattr(frame_cls, meth), _meth=meth,
+                    **kwargs):
+            materialized.append((_meth, lambda_recomputes(self)))
+            audited_frames.append(self)
+            return _orig(self, *args, **kwargs)
+
+        monkeypatch.setattr(frame_cls, meth, audited)
+
+    baseline = snapshot_persistent_rdds(spark)
+    found = {}
+    try:
+        for name, fn in sorted(registered_queries().items()):
+            materialized.clear()
+            n = lambda_recomputes(fn(spark, sf_dir))
+            n += sum(c for _, c in materialized)
+            if n:
+                found[name] = (n, list(materialized))
+    finally:
+        for df in audited_frames:
+            df.unpersist()
+        release_new_persistent_rdds(spark, baseline)
+    assert found == {}, found

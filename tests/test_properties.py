@@ -957,6 +957,50 @@ def test_quota_sample_idempotent_and_capped(spark, docs, n):
     assert {g for g in by_g} == groups or not docs
 
 
+# ------------------------------------------------- word shingles --
+
+
+def _py_shingles(text):
+    """The shingle contract in plain Python: lowercase alphanumeric
+    tokens, every run of 3 joined by one space, none under 3 tokens."""
+    import re
+
+    toks = re.findall("[a-z0-9]+", text.lower()) if text is not None else []
+    return [" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)]
+
+
+def test_word_shingles_match_python_model(spark):
+    """word_shingles over a bound token column and shingled over raw
+    text agree with the Python model on the edge inputs: empty, NULL,
+    punctuation-only, short, exactly-3 and repeated-token documents.
+    NULL and short documents yield an empty array and no rows."""
+    from clinical_data_warehouse_bi_spark import text as T
+
+    docs = [
+        (1, ""),
+        (2, None),
+        (3, "?! ... --"),
+        (4, "Two words."),
+        (5, "exactly three tokens"),
+        (6, "the the THE, the the"),
+        (7, "A-b c d e"),
+    ]
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    arrays = {
+        r.doc_id: r.sh
+        for r in df.select("doc_id", T.tokens("text").alias("t"))
+        .select("doc_id", T.word_shingles("t", 3).alias("sh"))
+        .collect()
+    }
+    assert arrays == {d: _py_shingles(t) for d, t in docs}
+    assert arrays[2] == [] and arrays[4] == []
+    assert arrays[6] == ["the the the"] * 3
+
+    rows = sorted((r.doc_id, r.sh) for r in T.shingled(df).collect())
+    assert rows == sorted((d, s) for d, t in docs for s in _py_shingles(t))
+    assert {d for d, _ in rows} == {5, 6, 7}
+
+
 # ------------------------- content-defined chunk dedup (CDC, r8) --
 
 from clinical_data_warehouse_bi_spark import text as T  # noqa: E402
