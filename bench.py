@@ -373,7 +373,7 @@ def main() -> None:
     # matches a fresh DataFrame whose plan equals a cached one, so a
     # library .cache()/.persist() left by the warm-up (or by the first
     # timed run) would be READ by the next run instead of recomputed —
-    # lsh_candidate_pairs' band signatures were, timing q_dedup_clusters
+    # text.band_join's cached band signatures were, timing q_dedup_clusters
     # at a third of its cost. localCheckpoint blocks are not
     # CacheManager-registered, so clearCache never frees them; queries
     # that checkpoint (percentiles, dedup_clusters, similarity index

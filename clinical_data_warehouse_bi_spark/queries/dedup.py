@@ -15,13 +15,12 @@ from clinical_data_warehouse_bi_spark.registry import register
 
 # shared SQL fragments for the DuckDB oracles ------------------------------
 
-_SQL_TOKENS = "regexp_extract_all(lower(text), '[a-z0-9]+')"
 _SQL_SHINGLES = f"""
   SELECT doc_id,
          unnest(list_transform(
            generate_series(1, greatest(len(w) - 2, 0)),
            i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS sh
-  FROM (SELECT doc_id, {_SQL_TOKENS} AS w FROM documents)
+  FROM (SELECT doc_id, {T.SQL_TOKENS} AS w FROM documents)
 """
 _SQL_MINHASH = f"""
   SELECT doc_id, seed, min(md5(CAST(seed AS VARCHAR) || ':' || sh)) AS minhash
@@ -52,7 +51,7 @@ SQL_MINHASH_LSH_PAIRS = _SQL_LSH_PAIRS
 
 def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash LSH candidate pairs: band the 16-hash signature into
-    4 bands x 4 rows, bucket-join on (band_id, band-signature md5),
+    4 bands x 4 rows, bucket-join on (band, band-signature md5),
     emit distinct doc_a < doc_b. The band join is the scale path: no
     all-pairs comparison ever happens; work is proportional to true
     collision clusters (Broder's shingling/LSH construction).
@@ -68,12 +67,12 @@ def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_grouped_percentiles): the registered q_lsh_near_dup is a strict
     SUPERSET of this query — its oracle's pairs CTE is _SQL_LSH_PAIRS
     verbatim and its Spark side runs the identical
-    minhash_wide -> lsh_band_signatures_wide -> lsh_candidate_pairs
-    chain before the exact-Jaccard verify stage. The candidates-only
-    form keeps its own full oracle comparison in
-    tests/test_retired_parity.py against SQL_MINHASH_LSH_PAIRS."""
+    minhash_bands -> band_join chain before the exact-Jaccard verify
+    stage. The candidates-only form keeps its own full oracle
+    comparison in tests/test_retired_parity.py against
+    SQL_MINHASH_LSH_PAIRS."""
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    return T.lsh_candidate_pairs(T.lsh_band_signatures_wide(T.minhash_wide(docs)))
+    return T.band_join(T.minhash_bands(T.shingled(docs)))
 
 
 #: q_ngram_jaccard's DuckDB oracle, preserved after its round-7
@@ -114,7 +113,6 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     verification-tool API."""
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
     sh = T.shingled(docs.filter(F.col("doc_id") < 200)).distinct()
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     a = sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
     inter = (
@@ -122,8 +120,19 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_a", "doc_b")
         .agg(F.count("*").alias("inter_n"))
     )
+    return _jaccard(sh, inter)
+
+
+def _jaccard(sh: DataFrame, inter: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, inter_n, union_n, jaccard): the exact-Jaccard
+    verify over the distinct (doc_id, sh) shingle relation and the
+    per-pair shared-shingle counts (doc_a, doc_b, inter_n). The
+    division is long / long cast to double, IEEE-identical to the
+    oracles' CAST(... AS DOUBLE) division."""
+    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
     sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
+    union = F.col("na") + F.col("nb") - F.col("inter_n")
     return (
         inter.join(sa, "doc_a")
         .join(sb, "doc_b")
@@ -131,11 +140,8 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_a",
             "doc_b",
             "inter_n",
-            (F.col("na") + F.col("nb") - F.col("inter_n")).alias("union_n"),
-            (
-                F.col("inter_n").cast("double")
-                / (F.col("na") + F.col("nb") - F.col("inter_n")).cast("double")
-            ).alias("jaccard"),
+            union.alias("union_n"),
+            (F.col("inter_n").cast("double") / union.cast("double")).alias("jaccard"),
         )
     )
 
@@ -164,18 +170,11 @@ def q_lsh_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (q_ngram_jaccard) exists only as its ground-truth check."""
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
     # the candidate generation and the verification both consume the
-    # shingle relation; cache it (and the tiny candidate set) so the
-    # DAG does not re-derive shingles three times — and repeated
-    # invocations reuse it via plan matching
+    # shingle relation; cache it so the DAG does not re-derive
+    # shingles three times — and repeated invocations reuse it via
+    # plan matching
     sh = T.shingled(docs).distinct().cache()
-    wide = sh.groupBy("doc_id").agg(
-        *[
-            F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("sh")))).alias(f"mh{i}")
-            for i in range(T.MINHASH_SEEDS)
-        ]
-    )
-    cand = T.lsh_candidate_pairs(T.lsh_band_signatures_wide(wide))
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
+    cand = T.band_join(T.minhash_bands(sh))
     a = sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col("doc_id").alias("b_id"), F.col("sh").alias("sh_b"))
     inter = (
@@ -184,20 +183,7 @@ def q_lsh_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_a", "doc_b")
         .agg(F.count("*").alias("inter_n"))
     )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
-    return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            (
-                F.col("inter_n").cast("double")
-                / (F.col("na") + F.col("nb") - F.col("inter_n")).cast("double")
-            ).alias("jaccard"),
-        )
-    )
+    return _jaccard(sh, inter).select("doc_a", "doc_b", "jaccard")
 
 
 _SQL_SIMHASH = f"""
@@ -212,7 +198,7 @@ _SQL_SIMHASH = f"""
                          substr(md5(t.tok), CAST(b.j // 4 AS INT) + 1, 1)) - 1)
                  >> (b.j % 4)) & 1 = 1
                THEN 1 ELSE -1 END AS c
-        FROM (SELECT doc_id, unnest({_SQL_TOKENS}) AS tok FROM documents) t,
+        FROM (SELECT doc_id, unnest({T.SQL_TOKENS}) AS tok FROM documents) t,
              (SELECT unnest(generate_series(0, 31)) AS j) b) contrib
       GROUP BY doc_id, j) bitsum
     GROUP BY doc_id
@@ -258,7 +244,7 @@ def _simhash_fingerprints(docs: DataFrame) -> DataFrame:
 #: over a 32-bit fingerprint, banding is EXACT for k <= 3 (pigeonhole:
 #: 3 differing bits can spoil at most 3 of the 4 bands).
 SIMHASH_HAMMING_K = 3
-SIMHASH_BANDS, SIMHASH_BAND_BITS = 4, 8
+SIMHASH_BANDS = 4
 
 
 #: q_simhash_pairs' DuckDB oracle, preserved after its round-12
@@ -297,54 +283,18 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_retired_parity.py against SQL_SIMHASH_PAIRS (sf0.01 +
     the sf0.1 density sweep), so retirement weakens no evidence.
 
-    Band-of-bits LSH: split each 32-bit fingerprint into 4 x 8-bit
-    bands, equi-join on (band, band value) — candidates only, never
-    all-pairs — then verify Hamming <= {{k}} with bit_count(a ^ b).
-    For k <= 3 the banding loses nothing (pigeonhole), so this is an
-    EXACT Hamming-radius join expressed as bucketed equi-joins: the
-    same construction scales to 64/128-bit fingerprints by adding
-    bands. The fingerprint relation is cached once; both self-join
-    sides and the verification read the materialized form (and a
-    repeated invocation reuses it via plan matching — callers mixing
-    many queries in one session clear the cache between them, as
-    bench.py and tests/test_plans.py do)."""
+    Band-of-bits LSH through text.hamming_pairs (the join
+    q_image_near_dup runs on 64-bit pHashes): split each 32-bit
+    fingerprint into 4 x 8-bit bands, equi-join on (band, band value)
+    — candidates only, never all-pairs — then verify Hamming <= {{k}}
+    with bit_count(a ^ b). For k <= 3 the banding loses nothing
+    (pigeonhole), so this is an EXACT Hamming-radius join expressed
+    as bucketed equi-joins. The band relation is cached once by the
+    band join; both self-join sides and the verification read the
+    materialized form."""
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    fp = _simhash_fingerprints(docs).persist()
-    bands = fp.select(
-        "doc_id",
-        "simhash",
-        F.posexplode(
-            F.array(
-                *[
-                    (F.shiftright("simhash", j * SIMHASH_BAND_BITS) % 256).cast("bigint")
-                    for j in range(SIMHASH_BANDS)
-                ]
-            )
-        ).alias("band", "sig"),
-    )
-    a = bands.select(
-        F.col("doc_id").alias("doc_a"), F.col("simhash").alias("ha"), "band", "sig"
-    )
-    b = bands.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("simhash").alias("hb"),
-        F.col("band").alias("band_b"),
-        F.col("sig").alias("sig_b"),
-    )
-    cand = (
-        a.join(
-            b,
-            (F.col("band") == F.col("band_b"))
-            & (F.col("sig") == F.col("sig_b"))
-            & (F.col("doc_a") < F.col("doc_b")),
-        )
-        .select("doc_a", "doc_b", "ha", "hb")
-        .distinct()
-    )
-    hamming = F.expr("cast(bit_count(ha ^ hb) as int)")
-    return (
-        cand.select("doc_a", "doc_b", hamming.alias("hamming"))
-        .filter(F.col("hamming") <= SIMHASH_HAMMING_K)
+    return T.hamming_pairs(
+        _simhash_fingerprints(docs), "simhash", 32, SIMHASH_BANDS, SIMHASH_HAMMING_K
     )
 
 
@@ -363,7 +313,7 @@ CHUNK_TOKENS = 8
 #: tests/test_retired_parity.py plus its idempotence property test)
 SQL_CHUNK_DEDUP = f"""
     WITH t AS (
-      SELECT doc_id, {_SQL_TOKENS} AS w FROM documents),
+      SELECT doc_id, {T.SQL_TOKENS} AS w FROM documents),
     chunks AS (
       SELECT doc_id, i AS pos,
              array_to_string(
@@ -465,7 +415,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from clinical_data_warehouse_bi_spark.graph import connected_components
 
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    pairs = T.lsh_candidate_pairs(T.lsh_band_signatures_wide(T.minhash_wide(docs)))
+    pairs = T.band_join(T.minhash_bands(T.shingled(docs)))
     labels = connected_components(
         pairs,
         vertices=docs.select("doc_id"),
@@ -557,7 +507,7 @@ _SQL_CDC_CUT = (
 
 @register("q_cdc_chunk_dedup", oracle=f"""
     WITH t AS (
-      SELECT doc_id, {_SQL_TOKENS} AS w FROM documents),
+      SELECT doc_id, {T.SQL_TOKENS} AS w FROM documents),
     cutd AS (
       SELECT doc_id, w,
              list_filter(range(1, len(w)), i -> {_SQL_CDC_CUT}) AS cuts
@@ -624,7 +574,7 @@ SPAN_MAX_OCC = 1
 
 SQL_REPEATED_SPANS = f"""
     WITH t AS (
-      SELECT doc_id, {_SQL_TOKENS} AS w FROM documents),
+      SELECT doc_id, {T.SQL_TOKENS} AS w FROM documents),
     grams AS (
       SELECT doc_id, s, array_to_string(w[s:s+{SPAN_N - 1}], ' ') AS g
       FROM t, unnest(generate_series(1, len(w) - {SPAN_N - 1})) AS u(s)
@@ -707,7 +657,7 @@ SUBSTRING_MIN_TOKENS = 12
 
 
 @register("q_substring_dedup", oracle=f"""
-    WITH t AS (SELECT doc_id, {_SQL_TOKENS} AS toks FROM documents),
+    WITH t AS (SELECT doc_id, {T.SQL_TOKENS} AS toks FROM documents),
     w AS (SELECT doc_id, i,
                  array_to_string(toks[i:i+{SUBSTRING_MIN_TOKENS - 1}],
                                  chr(1)) AS win
@@ -786,7 +736,7 @@ def q_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register("q_decontaminate_exact", oracle=f"""
-    WITH t AS (SELECT doc_id, {_SQL_TOKENS} AS toks FROM documents),
+    WITH t AS (SELECT doc_id, {T.SQL_TOKENS} AS toks FROM documents),
     w AS (SELECT doc_id, i,
                  array_to_string(toks[i:i+{SUBSTRING_MIN_TOKENS - 1}],
                                  chr(1)) AS win

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from clinical_data_warehouse_bi_spark import scrub
 from clinical_data_warehouse_bi_spark.io import fan_out, load_tables
 from clinical_data_warehouse_bi_spark.registry import register
+from clinical_data_warehouse_bi_spark.text import SQL_TOKENS
 
 #: Gopher-rule thresholds: the one copy of the repetition-quality
 #: cut (a document passes when every fraction is at or under its
@@ -171,14 +172,11 @@ def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: LM tokenizer in DuckDB — the exact mirror of text.tokens
-#: ([a-z0-9]+ extraction, the dedup-family tokenizer, NOT the
-#: apostrophe-aware scrub split above)
-_SQL_LM_TOKENS = "regexp_extract_all(lower(text), '[a-z0-9]+')"
-
-
+# the oracle tokenizes with text.SQL_TOKENS, the exact mirror of
+# text.tokens ([a-z0-9]+ extraction, the dedup-family tokenizer, NOT
+# the apostrophe-aware scrub split above)
 @register("q_lm_perplexity", oracle=f"""
-    WITH t AS (SELECT doc_id, {_SQL_LM_TOKENS} AS w FROM documents),
+    WITH t AS (SELECT doc_id, {SQL_TOKENS} AS w FROM documents),
     toks AS (
       SELECT doc_id, i AS pos, w[i+1] AS tok
       FROM t, unnest(generate_series(0, len(w) - 1)) AS u(i)),
@@ -199,7 +197,7 @@ _SQL_LM_TOKENS = "regexp_extract_all(lower(text), '[a-z0-9]+')"
       CROSS JOIN vv),
     mlp AS (SELECT doc_id, avg(lp) AS mlp FROM scored GROUP BY doc_id)
     SELECT d.doc_id,
-           CAST(len({_SQL_LM_TOKENS}) AS BIGINT) AS n_tokens,
+           CAST(len({SQL_TOKENS}) AS BIGINT) AS n_tokens,
            round(exp(-m.mlp), 4) AS ppl
     FROM documents d LEFT JOIN mlp m ON m.doc_id = d.doc_id
     """)

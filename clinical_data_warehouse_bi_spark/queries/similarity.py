@@ -424,8 +424,9 @@ def q_embed_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: band signatures come from ONE GEMM per Arrow batch
     (similarity.sign_lsh_bands); the band relation (vec_id, band,
-    sig — three scalars, no arrays) is persisted once and self-joined
-    for candidates (bounded buckets, never all-pairs); ONLY candidate
+    sig — three scalars, no arrays) is cached once and self-joined
+    for candidates by text.band_join (bounded buckets, never
+    all-pairs; the MinHash and Hamming joins run it too); ONLY candidate
     pairs pay exact vector math, as a row-wise einsum
     (similarity.pairwise_cosine). Rounded before thresholding so a
     1-ulp divergence cannot flip membership. The DuckDB oracle
@@ -436,33 +437,19 @@ def q_embed_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver's synthetic vectors are near-orthogonal; the structural
     point (bounded buckets, candidates-only verification) is what
     carries to 100 TB."""
-    from clinical_data_warehouse_bi_spark.similarity import sign_lsh_bands
+    from clinical_data_warehouse_bi_spark.similarity import (
+        pairwise_cosine,
+        sign_lsh_bands,
+    )
+    from clinical_data_warehouse_bi_spark.text import band_join
 
     emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
     e = F.transform("embedding", lambda x: x.cast("double"))
     v = emb.select("vec_id", e.alias("e"))
 
-    bands = sign_lsh_bands(
-        emb, _lsh_matrix(), LSH_BANDS, LSH_BAND_BITS
-    ).persist()
-    left = bands.select(F.col("vec_id").alias("vec_a"), "band", "sig")
-    right = bands.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("band").alias("band_r"),
-        F.col("sig").alias("sig_r"),
+    pairs = band_join(
+        sign_lsh_bands(emb, _lsh_matrix(), LSH_BANDS, LSH_BAND_BITS), "vec_id"
     )
-    pairs = (
-        left.join(
-            right,
-            (F.col("band") == F.col("band_r"))
-            & (F.col("sig") == F.col("sig_r"))
-            & (F.col("vec_a") < F.col("vec_b")),
-        )
-        .select("vec_a", "vec_b")
-        .distinct()
-    )
-    from clinical_data_warehouse_bi_spark.similarity import pairwise_cosine
-
     va = v.select(F.col("vec_id").alias("vec_a"), F.col("e").alias("ea"))
     vb = v.select(F.col("vec_id").alias("vec_b"), F.col("e").alias("eb"))
     scored = pairwise_cosine(

@@ -11,8 +11,6 @@ from clinical_data_warehouse_bi_spark import text as T
 from clinical_data_warehouse_bi_spark.io import fan_out, load_tables
 from clinical_data_warehouse_bi_spark.registry import register
 
-_SQL_TOKENS = "regexp_extract_all(lower(text), '[a-z0-9]+')"
-
 # language lexicon rendered once for the oracle (MUST mirror T.LANG_LEXICON)
 _LEX_VALUES = ", ".join(f"('{lang}', '{w}')" for lang, w in T.LANG_LEXICON)
 _STOP_LIST_SQL = "[" + ", ".join(f"'{w}'" for w in T.EN_STOPWORDS) + "]"
@@ -23,7 +21,7 @@ _STOP_LIST_SQL = "[" + ", ".join(f"'{w}'" for w in T.EN_STOPWORDS) + "]"
 #: check survives in tests/test_retired_parity.py.
 SQL_TEXT_STATS = f"""
     WITH t AS (
-      SELECT doc_id, text, {_SQL_TOKENS} AS toks,
+      SELECT doc_id, text, {T.SQL_TOKENS} AS toks,
              length(text) AS n_chars_actual,
              length(regexp_replace(lower(text), '[^a-z0-9]', '', 'g')) AS alnum_chars,
              len(regexp_extract_all(text,
@@ -79,8 +77,8 @@ def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _lang_argmax_sql() -> str:
     """The lexicon-hit argmax as ONE SQL expression over a
     token-array column named ``t`` — the single source of truth for
-    language assignment (_predicted_lang and q_token_budget both
-    compose it, so they cannot silently diverge). Returns a struct
+    language assignment (q_lang_id and q_token_budget both compose
+    it, so they cannot silently diverge). Returns a struct
     (h: best hit count, r: reverse-alphabet rank, lang: winner)."""
     langs = sorted({lang for lang, _ in T.LANG_LEXICON})
     structs = []
@@ -94,46 +92,11 @@ def _lang_argmax_sql() -> str:
     return f"array_max(array({', '.join(structs)}))"
 
 
-def _predicted_lang(spark: SparkSession, docs: DataFrame) -> DataFrame:
-    """(doc_id, lang, hits): lexicon-hit argmax per document — shared
-    by q_lang_id and q_token_budget so the language assignment cannot
-    silently diverge between them.
-
-    Round-13 rewrite (the former shape exploded EVERY corpus token
-    through a broadcast join, one (doc, lang) exchange and an argmax
-    window — token-scale map work + a shuffle + a window for a
-    28-word lexicon): the per-language hit count is a per-row
-    ``size(filter(tokens, x -> x IN (...)))`` expression and the
-    argmax is ``array_max`` over (hits, rev_rank, lang) structs,
-    whose lexicographic max IS 'hits DESC, lang ASC' (rev_rank
-    reverses the alphabet so ties pick the alphabetically first
-    language). Zero shuffles, zero joins, one scan; value-identical
-    to the join+window form — langs absent from a doc have hit count
-    0 and cannot win, and docs with no hits at all are dropped by
-    the h > 0 filter exactly like the old inner join. Scales as pure
-    map work; a lexicon too large for an IN-list would flip back to
-    the broadcast-join form (the size_gated_broadcast convention).
-    The argmax expression itself is single-sourced in
-    ``_lang_argmax_sql`` — q_token_budget composes the IDENTICAL
-    expression inline (its single-pass form), so the two consumers
-    still cannot diverge."""
-    return (
-        docs.select("doc_id", T.tokens("text").alias("t"))
-        .select("doc_id", F.expr(_lang_argmax_sql()).alias("b"))
-        .where(F.col("b.h") > 0)
-        .select(
-            "doc_id",
-            F.col("b.lang").alias("lang"),
-            F.col("b.h").alias("hits"),
-        )
-    )
-
-
 #: q_lang_id's DuckDB oracle, preserved after its round-7 registry
 #: retirement (slot went to q_chunk_dedup) — the cross-engine value
 #: check survives in tests/test_retired_parity.py.
 SQL_LANG_ID = f"""
-    WITH tok AS (SELECT doc_id, unnest({_SQL_TOKENS}) AS tok FROM documents),
+    WITH tok AS (SELECT doc_id, unnest({T.SQL_TOKENS}) AS tok FROM documents),
     lex(lang, word) AS (VALUES {_LEX_VALUES}),
     hits AS (
       SELECT t.doc_id, l.lang, count(*) AS hits
@@ -151,8 +114,8 @@ SQL_LANG_ID = f"""
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heuristic language ID: count stopword-lexicon hits per
     language, argmax per document (ties broken alphabetically).
-    Per-row expressions end-to-end since round 13 (_predicted_lang /
-    _lang_argmax_sql — zero shuffles, zero joins); value-identical
+    Per-row expressions end-to-end since round 13 (_lang_argmax_sql
+    — zero shuffles, zero joins); value-identical
     to the former explode + broadcast-join + window form, which the
     SQL_LANG_ID oracle still expresses. N-gram extension slot
     documented in text.py.
@@ -167,14 +130,20 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle comparison in tests/test_retired_parity.py against
     SQL_LANG_ID. Kept unregistered as the narrow-API form."""
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    return _predicted_lang(spark, docs).select(
-        "doc_id", F.col("lang").alias("pred_lang"), "hits"
+    # the argmax runs inside a generator: a filter on a generator's
+    # output cannot be pushed below it, so the h > 0 filter reads the
+    # bound argmax instead of re-tokenizing once per language
+    return (
+        docs.select("doc_id", T.tokens("text").alias("t"))
+        .select("doc_id", F.inline(F.array(F.expr(_lang_argmax_sql()))))
+        .where(F.col("h") > 0)
+        .select("doc_id", F.col("lang").alias("pred_lang"), F.col("h").alias("hits"))
     )
 
 
 @register("q_quality_score", oracle=f"""
     WITH t AS (
-      SELECT doc_id, {_SQL_TOKENS} AS toks FROM documents)
+      SELECT doc_id, {T.SQL_TOKENS} AS toks FROM documents)
     SELECT doc_id,
            len(toks) AS n_tokens,
            CAST(len(list_intersect(toks, {_STOP_LIST_SQL})) AS DOUBLE)
@@ -208,7 +177,7 @@ def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register("q_token_budget", oracle=f"""
-    WITH tok AS (SELECT doc_id, unnest({_SQL_TOKENS}) AS tok FROM documents),
+    WITH tok AS (SELECT doc_id, unnest({T.SQL_TOKENS}) AS tok FROM documents),
     lex(lang, word) AS (VALUES {_LEX_VALUES}),
     hits AS (
       SELECT t.doc_id, l.lang, count(*) AS hits
@@ -220,7 +189,7 @@ def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
                                 ORDER BY hits DESC, lang ASC) AS rn
       FROM hits),
     counts AS (
-      SELECT doc_id, len({_SQL_TOKENS}) AS n_tokens FROM documents)
+      SELECT doc_id, len({T.SQL_TOKENS}) AS n_tokens FROM documents)
     SELECT coalesce(r.lang, 'unknown') AS pred_lang,
            count(*) AS n_docs,
            CAST(sum(c.n_tokens) AS BIGINT) AS total_tokens
@@ -235,7 +204,7 @@ def q_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Single-pass since round 13: the argmax is the shared per-row
     ``_lang_argmax_sql`` expression (the same single-sourced unit
-    _predicted_lang / q_lang_id serve), so the token count and the
+    q_lang_id serves), so the token count and the
     language ride ONE documents scan into a 5-group aggregate —
     no token explode, no lexicon join, no doc_id exchange. The only
     shuffle is 5 partial rows per task."""
@@ -271,7 +240,7 @@ _SQL_QUALITY = f"""
            + 0.3 * (CAST(len(list_distinct(toks)) AS DOUBLE)
                     / greatest(len(toks), 1))
            + 0.3 * least(CAST(len(toks) AS DOUBLE) / 100.0, 1.0) AS quality_score
-      FROM (SELECT doc_id, text, {_SQL_TOKENS} AS toks FROM documents) raw
+      FROM (SELECT doc_id, text, {T.SQL_TOKENS} AS toks FROM documents) raw
 """
 
 
@@ -342,7 +311,7 @@ PACK_SHARDS = 8
 @register("q_pack_sequences", oracle=f"""
     WITH t AS (
       SELECT doc_id, doc_id % {PACK_SHARDS} AS shard,
-             len({_SQL_TOKENS}) AS n_tokens
+             len({T.SQL_TOKENS}) AS n_tokens
       FROM documents),
     packed AS (
       SELECT doc_id, shard, n_tokens,
@@ -687,7 +656,7 @@ NGRAM_K = 100
 
 @register("q_top_ngrams", oracle=f"""
     WITH t AS (
-      SELECT doc_id, {_SQL_TOKENS} AS w FROM documents),
+      SELECT doc_id, {T.SQL_TOKENS} AS w FROM documents),
     g AS (
       SELECT doc_id, array_to_string(w[i:i+{NGRAM_N - 1}], ' ') AS ngram
       FROM t, unnest(generate_series(1, len(w) - {NGRAM_N - 1})) AS u(i)
@@ -930,7 +899,7 @@ TFIDF_K = 5
 
 SQL_TFIDF_KEYWORDS = f"""
     WITH tok AS (
-      SELECT doc_id, unnest({_SQL_TOKENS}) AS term FROM documents),
+      SELECT doc_id, unnest({T.SQL_TOKENS}) AS term FROM documents),
     tf AS (
       SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY doc_id, term),
     df AS (

@@ -89,8 +89,8 @@ _CHECK_ORDER = [
     "q_contamination",
     "q_ann_ivf_pq",
     # round-7 additions, part 2 (slots freed by retiring q_lang_id —
-    # witness: q_token_budget composes the identical _predicted_lang
-    # relation — and q_text_stats — witness: q_quality_score carries
+    # witness: q_token_budget composes the identical _lang_argmax_sql
+    # expression — and q_text_stats — witness: q_quality_score carries
     # the token-count leg; both keep full oracle comparisons in
     # tests/test_retired_parity.py)
     "q_fuzzy_match",

@@ -13,10 +13,11 @@ bound to a column before any lambda reads it (Spark shares no
 subexpression inside a higher-order function, so a tokenizer inside
 the shingle lambda re-ran once per element: O(tokens^2) regex work per
 doc). Shingle explode multiplies rows by ~tokens-per-doc; the
-minhash groupBy keys on (doc_id, seed) which is uniformly distributed
-by construction — no skew. Band-bucket self-join is the standard
-LSH candidate generation: join key (band_id, signature) keeps the
-pair blow-up bounded by true near-duplicate clusters.
+minhash groupBy keys on doc_id (k min columns in one aggregation),
+which is uniformly distributed by construction — no skew. The band-bucket self-join (band_join) is
+the standard LSH candidate generation, shared by MinHash, SimHash,
+pHash and sign-LSH: join key (band, sig) keeps the pair blow-up
+bounded by true near-duplicate clusters.
 """
 
 from __future__ import annotations
@@ -53,16 +54,13 @@ def normalized_text(col: Column | str) -> Column:
     return F.trim(F.regexp_replace(F.lower(c), "[^a-z0-9]+", " "))
 
 
-def tokens(col: Column | str) -> Column:
-    """array of lowercase alphanumeric tokens."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.expr(f"regexp_extract_all(lower({_name(col, c)}), '[a-z0-9]+', 0)")
+def tokens(col: str) -> Column:
+    """array of lowercase alphanumeric tokens of the column ``col``."""
+    return F.expr(f"regexp_extract_all(lower({col}), '[a-z0-9]+', 0)")
 
 
-def _name(col, c: Column) -> str:
-    if isinstance(col, str):
-        return col
-    raise ValueError("tokens() requires a column name (used inside expr)")
+#: tokens("text") as the DuckDB oracles write it
+SQL_TOKENS = "regexp_extract_all(lower(text), '[a-z0-9]+')"
 
 
 def word_shingles(tok_col: str, n: int = 3) -> Column:
@@ -101,71 +99,173 @@ def shingled(docs: DataFrame, id_col: str = "doc_id",
     ).select("doc_id", F.explode(word_shingles("__toks", 3)).alias("sh"))
 
 
-def minhash_wide(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """(doc_id, mh0..mh{k-1}): all k minhashes in ONE aggregation —
-    k min() columns over the exploded shingles, one shuffle total.
-    (The naive shape — explode x seeds then groupBy(doc, seed) —
-    multiplies the shuffle k-fold for no reason; this one holds at
-    100 TB: map-side partial min per column, tiny reduce.)"""
-    sh = shingled(docs, id_col, text_col)
+def minhash_bands(sh: DataFrame) -> DataFrame:
+    """(doc_id, band, sig) over a (doc_id, sh) shingle relation: the
+    k minhashes (h_i = min md5(i || ':' || sh)) in ONE aggregation —
+    k min() columns over the shingles, one shuffle total (the naive
+    explode x seeds then groupBy(doc, seed) multiplies the shuffle
+    k-fold; this one is a map-side partial min per column and a tiny
+    reduce) — then each band's signature, the md5 of its minhashes
+    joined in seed order, as a pure projection + unpivot."""
+    rows = MINHASH_SEEDS // MINHASH_BANDS
     # one parsed SQL string per column: k Column-object towers cost
     # ~4 py4j round-trips each in plan-build time, a string costs one
-    return sh.groupBy("doc_id").agg(
+    wide = sh.groupBy("doc_id").agg(
         *[
             F.expr(f"min(md5(concat('{i}:', sh)))").alias(f"mh{i}")
             for i in range(MINHASH_SEEDS)
         ]
     )
-
-
-def lsh_band_signatures_wide(wide: DataFrame) -> DataFrame:
-    """(doc_id, band_id, band_sig) from the wide signature matrix:
-    band_sig = md5 of the band's minhashes joined in seed order —
-    pure projection + unpivot, no shuffle."""
-    bands = MINHASH_BANDS
-    rows = MINHASH_SEEDS // bands
-    exprs = []
-    for b in range(bands):
-        cols = ", ".join(f"mh{b * rows + r}" for r in range(rows))
-        exprs.append(f"{b}, md5(concat_ws('|', {cols}))")
+    bands = ", ".join(
+        f"{b}, md5(concat_ws('|', "
+        + ", ".join(f"mh{b * rows + r}" for r in range(rows))
+        + "))"
+        for b in range(MINHASH_BANDS)
+    )
     return wide.select(
-        "doc_id",
-        F.expr(f"stack({bands}, {', '.join(exprs)}) AS (band_id, band_sig)"),
-    ).select("doc_id", F.col("band_id").cast("int"), "band_sig")
+        "doc_id", F.expr(f"stack({MINHASH_BANDS}, {bands}) AS (band, sig)")
+    ).select("doc_id", F.col("band").cast("int"), "sig")
 
 
-def lsh_candidate_pairs(band_sigs: DataFrame) -> DataFrame:
-    """distinct (doc_a < doc_b) sharing at least one band signature.
+def band_join(
+    bands: DataFrame, id_col: str = "doc_id", carry: str | None = None
+) -> DataFrame:
+    """The LSH candidate join, the one banded self-join of the dedup
+    family (MinHash, SimHash, pHash, sign-LSH): distinct id pairs
+    a < b sharing at least one (band, sig) bucket of an
+    (``id_col``, band, sig[, ``carry``]) relation — bounded buckets,
+    never all-pairs. Returns ({stem}_a, {stem}_b) for an ``id_col``
+    named {stem}_id, plus ``carry``_a / ``carry``_b when a per-id
+    column rides along for the caller's verify step.
 
     The input is cached first: a self-join otherwise re-derives the
-    entire upstream minhash DAG for BOTH sides. band_sigs is tiny
-    (docs x bands rows of hashes) — at 100 TB it is still ~GBs and
-    cache-able; if not, materialize it to parquet instead. cache (not
+    whole upstream signature DAG for BOTH sides. The band relation is
+    ids x bands rows of scalars — at 100 TB still ~GBs and cache-able;
+    if not, materialize it to parquet instead. cache (not
     localCheckpoint) deliberately: plan-matching lets repeated
     invocations in one session reuse the materialization; sessions
     running many unrelated queries should clearCache between them
     (bench.py does)."""
-    band_sigs = band_sigs.cache()
-    a = band_sigs.select(
-        F.col("doc_id").alias("doc_a"), "band_id", F.col("band_sig").alias("sig_a")
-    )
-    b = band_sigs.select(
-        F.col("doc_id").alias("doc_b"), F.col("band_id").alias("band_id_b"),
-        F.col("band_sig").alias("sig_b"),
-    )
-    return (
-        a.join(
-            b,
-            (F.col("band_id") == F.col("band_id_b"))
-            & (F.col("sig_a") == F.col("sig_b"))
-            & (F.col("doc_a") < F.col("doc_b")),
+    bands = bands.cache()
+    stem = id_col.removesuffix("_id")
+    carried = [carry] if carry else []
+
+    def side(s: str) -> DataFrame:
+        return bands.select(
+            F.col(id_col).alias(f"{stem}_{s}"),
+            *[F.col(c).alias(f"{c}_{s}") for c in carried],
+            F.col("band").alias(f"band_{s}"),
+            F.col("sig").alias(f"sig_{s}"),
         )
-        .select("doc_a", "doc_b")
+
+    return (
+        side("a")
+        .join(
+            side("b"),
+            (F.col("band_a") == F.col("band_b"))
+            & (F.col("sig_a") == F.col("sig_b"))
+            & (F.col(f"{stem}_a") < F.col(f"{stem}_b")),
+        )
+        .select(
+            f"{stem}_a", f"{stem}_b",
+            *[f"{c}_{s}" for c in carried for s in ("a", "b")],
+        )
         .distinct()
+    )
+
+
+def hamming_pairs(
+    hashes: DataFrame, hash_col: str, bits: int, n_bands: int, max_hamming: int
+) -> DataFrame:
+    """(doc_a, doc_b, hamming) for every pair of (doc_id, ``hash_col``)
+    rows within ``max_hamming`` bits — an EXACT Hamming-radius join
+    expressed as bucketed equi-joins: split each ``bits``-bit hash
+    into ``n_bands`` bands, band_join on (band, band value), then
+    verify with bit_count(a ^ b). Exact (pigeonhole: k differing bits
+    spoil at most k bands) while max_hamming < n_bands; a wider
+    radius needs more, narrower bands. Bands are cut as
+    shiftrightunsigned(h, k) & mask: a 64-bit hash is a signed long,
+    on which a remainder (shiftright(h, k) % 2^width) goes negative
+    and splits equal bands by the sign bit."""
+    if max_hamming >= n_bands:
+        raise ValueError(
+            f"banding is exact only for max_hamming < n_bands"
+            f" ({max_hamming} >= {n_bands}): raise n_bands"
+        )
+    if bits % n_bands:
+        raise ValueError(f"n_bands must divide {bits}, got {n_bands}")
+    width = bits // n_bands
+    mask = (1 << width) - 1
+    cut = ", ".join(
+        f"shiftrightunsigned({hash_col}, {j * width}) & {mask}"
+        for j in range(n_bands)
+    )
+    bands = hashes.select(
+        "doc_id", hash_col, F.posexplode(F.expr(f"array({cut})")).alias("band", "sig")
+    )
+    hamming = F.expr(f"cast(bit_count({hash_col}_a ^ {hash_col}_b) as int)")
+    return (
+        band_join(bands, carry=hash_col)
+        .select("doc_a", "doc_b", hamming.alias("hamming"))
+        .filter(F.col("hamming") <= max_hamming)
+    )
+
+
+def _keep_first(
+    units: DataFrame, id_col: str, count_col: str, sep: str
+) -> DataFrame:
+    """The keep-first core of the unit dedups (chunk_dedup,
+    paragraph_dedup, cdc_chunk_dedup): over (__id, __units), one
+    non-NULL array of unit strings per document (the callers guard
+    Spark's descending sequence(0, -1) and map NULL text to an empty
+    array), keep the globally first
+    occurrence of each distinct unit (order: id, then position) and
+    rebuild each document from its surviving units joined by ``sep``.
+    Returns (``id_col``, ``count_col``, n_kept, clean_text), one row
+    per input row: a document with no units (NULL or token-less text)
+    gives (id, 0, 0, '').
+
+    Text never shuffles: unit identity is two salted xxhash64s, 128
+    bits, computed in the scan's map stage, so the keep-first window
+    exchanges only the slim (id, pos, h1, h2) relation, and the
+    rebuild joins the kept positions back to a re-derived units scan
+    (re-splitting is cheaper than shuffling or caching raw text; the
+    q_corpus_clean measurement). NOTE: xxhash64 is engine-specific —
+    the DuckDB oracles dedup on the unit STRINGS instead, which is
+    what verifies this shortcut."""
+    from pyspark.sql import Window
+
+    w_keep = Window.partitionBy("h1", "h2").orderBy("__id", "pos")
+    kept = (
+        _unit_hashes(units)
+        .withColumn("rn", F.row_number().over(w_keep))
+        .filter(F.col("rn") == 1)
+        .groupBy("__id")
+        .agg(
+            F.sort_array(F.collect_list("pos")).alias("kept_pos"),
+            F.count("*").cast("bigint").alias("n_kept"),
+        )
+    )
+    rebuild = F.array_join(
+        F.transform("kept_pos", lambda p: F.element_at("__units", p + 1)), sep
+    )
+    return units.join(kept, "__id", "left").select(
+        F.col("__id").alias(id_col),
+        F.size("__units").cast("bigint").alias(count_col),
+        F.coalesce("n_kept", F.lit(0).cast("bigint")).alias("n_kept"),
+        F.coalesce(rebuild, F.lit("")).alias("clean_text"),
+    )
+
+
+def _unit_hashes(units: DataFrame) -> DataFrame:
+    """(__id, pos, h1, h2): every element of the (__id, __units)
+    relation's unit array as its 0-based position and two salted
+    xxhash64s — the slim relation a keep-first window shuffles."""
+    hp = F.expr(
+        "transform(__units, s -> struct(xxhash64(s) as h1, xxhash64(s, 'b') as h2))"
+    )
+    return units.select("__id", F.posexplode(hp).alias("pos", "hp")).select(
+        "__id", "pos", "hp.h1", "hp.h2"
     )
 
 
@@ -181,56 +281,16 @@ def chunk_dedup(
     split into non-overlapping ``chunk_tokens``-token chunks, keep the
     globally first occurrence of each distinct chunk (order: id, then
     position), rebuild each document from its surviving chunks.
-
-    Returns (id, n_chunks, n_kept, clean_text). Text never shuffles:
-    the keep-first window runs on a slim (id, pos, h1, h2) relation —
-    two independently-salted xxhash64s of the chunk, 128 bits total —
-    and reconstruction joins the kept positions back to a
-    re-tokenized scan (re-splitting is cheaper than shuffling or
-    caching raw text; the q_corpus_clean measurement). NOTE: xxhash64
-    is engine-specific — the registered query's DuckDB oracle dedups
-    on chunk STRINGS instead, which is what verifies this shortcut.
-    """
-    from pyspark.sql import Window
-
+    Returns (id, n_chunks, n_kept, clean_text); the scale shape is
+    _keep_first's."""
     c = int(chunk_tokens)
+    units = F.expr(
+        f"CASE WHEN size(w) > 0 THEN transform(sequence(0, (size(w) - 1) div {c}),"
+        f" i -> concat_ws(' ', slice(w, i * {c} + 1, {c}))) ELSE array() END"
+    )
     toks = docs.select(F.col(id_col).alias("__id"), tokens(text_col).alias("w"))
-    n_chunks = F.expr(f"cast((size(w) + {c - 1}) div {c} as bigint)")
-    hash_pairs = F.expr(
-        f"transform("
-        f"  transform(sequence(0, cast((size(w) + {c - 1}) div {c} as int) - 1),"
-        f"            i -> concat_ws(' ', slice(w, i*{c}+1, {c}))),"
-        f"  s -> struct(xxhash64(s) as h1, xxhash64(s, 'b') as h2))"
-    )
-    chunked = (
-        toks.filter(F.size("w") > 0)
-        .select("__id", F.posexplode(hash_pairs).alias("pos", "hp"))
-        .select("__id", "pos", F.col("hp.h1").alias("h1"), F.col("hp.h2").alias("h2"))
-    )
-    w_keep = Window.partitionBy("h1", "h2").orderBy("__id", "pos")
-    kept = (
-        chunked.withColumn("rn", F.row_number().over(w_keep))
-        .filter(F.col("rn") == 1)
-        .groupBy("__id")
-        .agg(
-            F.sort_array(F.collect_list("pos")).alias("kept_pos"),
-            F.count("*").cast("bigint").alias("n_kept"),
-        )
-    )
-    rebuild = F.expr(
-        f"array_join(flatten(transform(kept_pos,"
-        f" i -> slice(w, i*{c}+1, {c}))), ' ')"
-    )
-    return (
-        toks.join(kept, "__id", "left")
-        .select(
-            F.col("__id").alias(id_col),
-            n_chunks.alias("n_chunks"),
-            F.coalesce("n_kept", F.lit(0).cast("bigint")).alias("n_kept"),
-            F.when(F.col("kept_pos").isNull(), F.lit(""))
-            .otherwise(rebuild)
-            .alias("clean_text"),
-        )
+    return _keep_first(
+        toks.select("__id", units.alias("__units")), id_col, "n_chunks", " "
     )
 
 
@@ -248,60 +308,25 @@ def paragraph_dedup(
     each distinct unit (order: id, then position), rebuild each
     document from its survivors joined by ``delim``.
 
-    Returns (id, n_paras, n_kept, clean_text). Same scale shape as
-    chunk_dedup: unit text is hashed to two salted 64-bit values in
-    the scan's map stage, only (id, pos, h1, h2) ever shuffles, and
-    reconstruction joins kept positions back to a re-split scan.
-    Idempotent by construction (units are delimiter-bounded, so
-    re-splitting the rebuilt text reproduces exactly the kept units).
-    """
+    Returns (id, n_paras, n_kept, clean_text); the scale shape is
+    _keep_first's. Idempotent by construction (units are
+    delimiter-bounded, so re-splitting the rebuilt text reproduces
+    exactly the kept units). F.split takes a Java REGEX, so the
+    delimiter is escaped there (a '.' or '|' would split
+    per-character)."""
     import re as _re
 
-    from pyspark.sql import Window
-
-    # two escapings for the two roles the delimiter plays: F.split
-    # treats its pattern as a Java REGEX (a '.' or '|' delimiter
-    # would split per-character unescaped), while the array_join
-    # rebuild embeds it as a SQL STRING literal
-    split_pat = _re.escape(delim)
-    d_lit = delim.replace("\\", "\\\\").replace("'", "\\'")
-    parts = docs.select(
-        F.col(id_col).alias("__id"), F.split(text_col, split_pat).alias("u")
+    units = F.filter(
+        F.split(text_col, _re.escape(delim)), lambda s: F.trim(s) != ""
     )
-    hashed = (
-        parts.select("__id", F.posexplode("u").alias("pos", "s"))
-        .filter(F.trim("s") != "")
-        .select(
-            "__id",
-            "pos",
-            F.xxhash64("s").alias("h1"),
-            F.xxhash64("s", F.lit("b")).alias("h2"),
-        )
-    )
-    w_keep = Window.partitionBy("h1", "h2").orderBy("__id", "pos")
-    kept = (
-        hashed.withColumn("rn", F.row_number().over(w_keep))
-        .filter(F.col("rn") == 1)
-        .groupBy("__id")
-        .agg(
-            F.sort_array(F.collect_list("pos")).alias("kept_pos"),
-            F.count("*").cast("bigint").alias("n_kept"),
-        )
-    )
-    n_paras = F.expr("cast(size(filter(u, s -> trim(s) != '')) as bigint)")
-    rebuild = F.expr(
-        f"array_join(transform(kept_pos, i -> element_at(u, i + 1)), '{d_lit}')"
-    )
-    return (
-        parts.join(kept, "__id", "left")
-        .select(
-            F.col("__id").alias(id_col),
-            n_paras.alias("n_paras"),
-            F.coalesce("n_kept", F.lit(0).cast("bigint")).alias("n_kept"),
-            F.when(F.col("kept_pos").isNull(), F.lit(""))
-            .otherwise(rebuild)
-            .alias("clean_text"),
-        )
+    return _keep_first(
+        docs.select(
+            F.col(id_col).alias("__id"),
+            F.coalesce(units, F.array().cast("array<string>")).alias("__units"),
+        ),
+        id_col,
+        "n_paras",
+        delim,
     )
 
 
@@ -359,72 +384,46 @@ def cdc_chunk_dedup(
     chunk_dedup's fixed windows (and the reason storage dedup
     abandoned fixed blocks).
 
-    Same scale shape as chunk_dedup: boundaries, chunks and their two
-    salted xxhash64s are all per-row array expressions; only the slim
-    (id, chunk_idx, h1, h2) relation reaches the keep-first window,
-    and reconstruction joins kept chunk indexes back to a re-chunked
-    scan. Text never shuffles. Returns (id, n_chunks, n_kept,
+    Boundaries and chunks are per-row array expressions; the scale
+    shape is _keep_first's. Returns (id, n_chunks, n_kept,
     clean_text)."""
-    from pyspark.sql import Window
-
     k, d = int(hash_window), int(divisor)
     toks = docs.select(F.col(id_col).alias("__id"), tokens(text_col).alias("w"))
     # boundary hash is PORTABLE md5 (int of the first 8 hex chars) so
     # the DuckDB oracle can recompute the same cuts — xxhash64 is
-    # engine-specific and stays confined to the chunk-identity pairs
-    # below, which the oracle verifies by deduping chunk STRINGS
+    # engine-specific and stays confined to the unit identity, which
+    # the oracle verifies by deduping chunk STRINGS. Both sequences
+    # are guarded: Spark's sequence(1, 0) descends instead of
+    # returning empty.
     cuts = F.expr(
-        f"filter(sequence(1, size(w) - 1),"
+        f"CASE WHEN size(w) > 1 THEN filter(sequence(1, size(w) - 1),"
         f" i -> pmod(cast(conv(substring(md5(concat_ws(' ',"
         f"   slice(w, greatest(1, i - {k} + 1), least({k}, i)))), 1, 8),"
-        f"   16, 10) as bigint), {d}) = 0)"
+        f"   16, 10) as bigint), {d}) = 0) ELSE array() END"
     )
     chunks = F.expr(
-        "zip_with("
+        "CASE WHEN size(w) > 0 THEN zip_with("
         "  concat(array(1), transform(__cuts, c -> c + 1)),"
         "  concat(__cuts, array(size(w))),"
-        "  (s, e) -> concat_ws(' ', slice(w, s, e - s + 1)))"
+        "  (s, e) -> concat_ws(' ', slice(w, s, e - s + 1))) ELSE array() END"
     )
-    chunked_docs = (
-        toks.filter(F.size("w") > 0)
-        .withColumn("__cuts", cuts)
-        .withColumn("__chunks", chunks)
+    units = toks.withColumn("__cuts", cuts).select("__id", chunks.alias("__units"))
+    return _keep_first(units, id_col, "n_chunks", " ")
+
+
+def _md5_uniform(seed: str, col: str) -> Column:
+    """A reproducible uniform u in (0, 1] per row: (h + 1) / (2^32 + 1)
+    for h the int of the first 8 hex digits of md5(seed:value) —
+    never 0, the same on any cluster layout, and IEEE double
+    arithmetic a DuckDB twin reproduces exactly."""
+    h = F.conv(
+        F.substring(
+            F.md5(F.concat(F.lit(seed), F.lit(":"), F.col(col).cast("string"))), 1, 8
+        ),
+        16,
+        10,
     )
-    hash_pairs = F.expr(
-        "transform(__chunks, s -> struct(xxhash64(s) as h1, xxhash64(s, 'b') as h2))"
-    )
-    slim = chunked_docs.select(
-        "__id", F.posexplode(hash_pairs).alias("pos", "hp")
-    ).select("__id", "pos", F.col("hp.h1").alias("h1"), F.col("hp.h2").alias("h2"))
-    w_keep = Window.partitionBy("h1", "h2").orderBy("__id", "pos")
-    kept = (
-        slim.withColumn("rn", F.row_number().over(w_keep))
-        .filter(F.col("rn") == 1)
-        .groupBy("__id")
-        .agg(
-            F.sort_array(F.collect_list("pos")).alias("kept_pos"),
-            F.count("*").cast("bigint").alias("n_kept"),
-        )
-    )
-    rebuild = F.expr("array_join(transform(kept_pos, p -> __chunks[p]), ' ')")
-    nonempty = chunked_docs.join(kept, "__id", "left").select(
-        F.col("__id").alias(id_col),
-        F.size("__chunks").cast("bigint").alias("n_chunks"),
-        F.coalesce("n_kept", F.lit(0).cast("bigint")).alias("n_kept"),
-        F.when(F.col("kept_pos").isNull(), F.lit(""))
-        .otherwise(rebuild)
-        .alias("clean_text"),
-    )
-    # token-less docs contribute fixed literals — a union, never a
-    # join (joining the chunk-bearing relation back to the full doc
-    # set invites a corpus-sized broadcast of chunk text)
-    empty = toks.filter(F.size("w") == 0).select(
-        F.col("__id").alias(id_col),
-        F.lit(0).cast("bigint").alias("n_chunks"),
-        F.lit(0).cast("bigint").alias("n_kept"),
-        F.lit("").alias("clean_text"),
-    )
-    return nonempty.unionByName(empty)
+    return (h.cast("double") + F.lit(1.0)) / F.lit(4294967297.0)
 
 
 def weighted_sample(
@@ -452,15 +451,7 @@ def weighted_sample(
     (value-checked in tests)."""
     if k <= 0:
         raise ValueError("k must be positive")
-    u = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit(seed), F.lit(":"), F.col(id_col).cast("string"))), 1, 8),
-            16,
-            10,
-        ).cast("double")
-        + F.lit(1.0)
-    ) / F.lit(4294967297.0)  # (h+1)/(2^32+1): u in (0, 1], never 0
-    pri = F.pow(u, F.lit(1.0) / F.col(weight_col))
+    pri = F.pow(_md5_uniform(seed, id_col), F.lit(1.0) / F.col(weight_col))
     return (
         docs.where(F.col(weight_col) > 0)
         .withColumn("__pri", pri)
@@ -497,22 +488,7 @@ def repeat_upsample(
     DESCENDS instead of returning empty."""
     if any(f < 0 for f in factors.values()):
         raise ValueError("repeat factors must be >= 0")
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit(seed), F.lit(":"), F.col(id_col).cast("string")
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("double")
-        + F.lit(1.0)
-    ) / F.lit(4294967297.0)
+    u = _md5_uniform(seed, id_col)
     f = F.lit(1.0)
     for name, fac in factors.items():
         f = F.when(F.col(source_col) == name, F.lit(float(fac))).otherwise(f)
@@ -598,22 +574,7 @@ def split_assign(
     fracs = [float(fractions[n]) for n in names]
     if any(f <= 0 for f in fracs) or abs(sum(fracs) - 1.0) > 1e-9:
         raise ValueError("fractions must be positive and sum to 1")
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit(seed), F.lit(":"), F.col(by_col).cast("string")
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("double")
-        + F.lit(1.0)
-    ) / F.lit(4294967297.0)
+    u = _md5_uniform(seed, by_col)
     cum = 0.0
     expr = F.lit(names[-1])  # the last split takes the top interval
     bounds = []
@@ -780,16 +741,14 @@ def remove_repeated_spans(
     from pyspark.sql import Window
 
     toks = docs.select(F.col(id_col).alias("__id"), tokens(text_col).alias("w"))
-    gram_hashes = F.expr(
-        f"transform("
-        f"  transform(sequence(1, size(w) - {n - 1}),"
-        f"            i -> concat_ws(' ', slice(w, i, {n}))),"
-        f"  s -> struct(xxhash64(s) as h1, xxhash64(s, 'b') as h2))"
-    )
-    grams = (
-        toks.filter(F.size("w") >= n)
-        .select("__id", F.posexplode(gram_hashes).alias("pos", "hp"))
-        .select("__id", "pos", F.col("hp.h1").alias("h1"), F.col("hp.h2").alias("h2"))
+    grams = _unit_hashes(
+        toks.filter(F.size("w") >= n).select(
+            "__id",
+            F.expr(
+                f"transform(sequence(1, size(w) - {n - 1}),"
+                f" i -> concat_ws(' ', slice(w, i, {n})))"
+            ).alias("__units"),
+        )
     )
     part = Window.partitionBy("h1", "h2")
     marked = grams.select(

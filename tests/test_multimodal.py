@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from clinical_data_warehouse_bi_spark import multimodal
 from clinical_data_warehouse_bi_spark.io import read_table
+from clinical_data_warehouse_bi_spark.text import hamming_pairs
 
 
 @pytest.fixture(scope="module")
@@ -133,9 +134,10 @@ def test_phash_planted_near_dup_recall_raw(spark):
 
 
 def test_phash_banding_matches_bruteforce(spark):
-    """The banded candidate join is EXACT for radius < n_bands: its
-    pair set equals the brute-force all-pairs Hamming filter on the
-    same hashes (pigeonhole — 6 differing bits cannot spoil all 8
+    """The banded Hamming join at image_near_dup's geometry (8 bands
+    of 8 bits over the 64-bit pHash) is EXACT for radius < n_bands:
+    its pair set equals the brute-force all-pairs Hamming filter on
+    the same hashes (pigeonhole — 6 differing bits cannot spoil all 8
     bands)."""
     rng = np.random.RandomState(3)
     base = rng.randint(0, 2, 64)
@@ -153,7 +155,7 @@ def test_phash_banding_matches_bruteforce(spark):
     df = spark.createDataFrame(hashes, "doc_id long, phash long")
     got = {
         (r["doc_a"], r["doc_b"], r["hamming"])
-        for r in multimodal.phash_near_dup_pairs(df, max_hamming=6).collect()
+        for r in hamming_pairs(df, "phash", 64, 8, 6).collect()
     }
     want = set()
     for i, (ida, ha) in enumerate(hashes):
@@ -163,9 +165,9 @@ def test_phash_banding_matches_bruteforce(spark):
                 want.add((min(ida, idb), max(ida, idb), d))
     assert got == want
     with pytest.raises(ValueError, match="exact only"):
-        multimodal.phash_near_dup_pairs(df, max_hamming=8, n_bands=8)
+        hamming_pairs(df, "phash", 64, 8, 8)
     with pytest.raises(ValueError, match="divide 64"):
-        multimodal.phash_near_dup_pairs(df, max_hamming=2, n_bands=5)
+        hamming_pairs(df, "phash", 64, 5, 2)
 
 
 def test_q_image_near_dup_registered(spark, sf_dir):

@@ -12,7 +12,10 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from clinical_data_warehouse_bi_spark.io import fan_out, read_table
-from clinical_data_warehouse_bi_spark.registry import registered_queries
+from clinical_data_warehouse_bi_spark.registry import (
+    auditable_queries,
+    registered_queries,
+)
 
 
 def physical_plan(df) -> str:
@@ -379,6 +382,7 @@ def test_chunk_dedup_text_never_shuffles(spark, sf_dir):
     for b in blocks:
         assert "text#" not in b, b
         assert " w#" not in b and "[w#" not in b, b
+        assert "__units#" not in b, b
 
 
 def test_fuzzy_match_is_blocked_equi_join(spark, sf_dir):
@@ -443,7 +447,8 @@ def test_paragraph_dedup_text_never_shuffles(spark, sf_dir):
     """q_paragraph_dedup shares q_chunk_dedup's scale contract: unit
     text reduces to (id, pos, h1, h2) before any KEYED exchange —
     no hash/range exchange may carry the text or the split-unit
-    array (RoundRobin fan_out exempt, as in the chunk test)."""
+    array __units (RoundRobin fan_out exempt, as in the chunk
+    test)."""
     blocks = [
         b
         for b in _exchange_blocks(QUERIES["q_paragraph_dedup"](spark, sf_dir))
@@ -452,7 +457,7 @@ def test_paragraph_dedup_text_never_shuffles(spark, sf_dir):
     assert blocks, "expected at least one keyed exchange (keep-first window)"
     for b in blocks:
         assert "text#" not in b, b
-        assert " u#" not in b and "[u#" not in b, b
+        assert "__units#" not in b, b
 
 
 def test_cohort_retention_plan_shape(spark, sf_dir):
@@ -634,7 +639,8 @@ def test_no_registered_query_retokenizes_inside_a_lambda(
     so a tokenizer (or digest) over a whole document placed in a
     lambda re-runs per element — text.word_shingles over an inline
     tokens() expression was O(tokens^2) regex work per doc. Every
-    registered plan must read a token column bound before the lambda.
+    auditable plan (registered queries and retirees alike) must read
+    a token column bound before the lambda.
     Plans materialized while a query is built (q_dedup_clusters ends
     in localCheckpoints, so its final plan never shows the shingles)
     are checked too, as each cache/persist/checkpoint call sees them."""
@@ -660,7 +666,7 @@ def test_no_registered_query_retokenizes_inside_a_lambda(
     baseline = snapshot_persistent_rdds(spark)
     found = {}
     try:
-        for name, fn in sorted(registered_queries().items()):
+        for name, fn in sorted(auditable_queries().items()):
             materialized.clear()
             n = lambda_recomputes(fn(spark, sf_dir))
             n += sum(c for _, c in materialized)

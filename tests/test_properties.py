@@ -151,57 +151,57 @@ def test_zip_index_key_dense_unique(spark, rows, nparts):
     assert sorted(r.v for r in out) == sorted(rows)
 
 
+def _near_hashes(bits: int):
+    """Lists of ``bits``-bit hashes clustered around one base (each a
+    few bit flips away), stored as the signed long a Spark column
+    holds — so pairs fall on both sides of a small Hamming radius."""
+    flips = st.lists(st.integers(0, bits - 1), max_size=bits // 4)
+
+    def build(base, fl):
+        out = []
+        for f in fl:
+            h = base
+            for bit in f:
+                h ^= 1 << bit
+            out.append(h - (1 << 64) if h >= 1 << 63 else h)
+        return out
+
+    return st.builds(
+        build, st.integers(0, (1 << bits) - 1), st.lists(flips, min_size=2, max_size=16)
+    )
+
+
 @settings(**SETTINGS)
 @given(
     fps=st.lists(
         st.integers(min_value=0, max_value=(1 << 32) - 1), min_size=2, max_size=24
     ),
+    near32=_near_hashes(32),
+    near64=_near_hashes(64),
 )
-def test_simhash_band_join_exact_for_k3(spark, fps):
-    """4x8-bit banding over a 32-bit fingerprint is EXACT for Hamming
-    radius <= 3 (pigeonhole): the banded candidate join must find
-    precisely the brute-force pairs."""
-    from pyspark.sql import functions as F
+def test_simhash_band_join_exact_for_k3(spark, fps, near32, near64):
+    """Banding is EXACT below the band count (pigeonhole): k differing
+    bits spoil at most k bands. text.hamming_pairs must find precisely
+    the brute-force pairs for SimHash's 4x8 bands over 32 bits at
+    radius 3, and for pHash's 8x8 bands over signed 64-bit hashes
+    (the sign bit set or flipped) at radius 6."""
+    from clinical_data_warehouse_bi_spark.text import hamming_pairs
 
-    df = spark.createDataFrame(
-        [Row(doc_id=i, simhash=v) for i, v in enumerate(fps)],
-        "doc_id int, simhash long",
-    )
-    bands = df.select(
-        "doc_id",
-        "simhash",
-        F.posexplode(
-            F.array(*[
-                (F.shiftright("simhash", j * 8) % 256).cast("bigint")
-                for j in range(4)
-            ])
-        ).alias("band", "sig"),
-    )
-    a = bands.select(
-        F.col("doc_id").alias("da"), F.col("simhash").alias("ha"), "band", "sig"
-    )
-    b = bands.select(
-        F.col("doc_id").alias("db"), F.col("simhash").alias("hb"),
-        F.col("band").alias("bb"), F.col("sig").alias("sb"),
-    )
-    got = sorted(
-        (r.da, r.db)
-        for r in (
-            a.join(b, (F.col("band") == F.col("bb")) & (F.col("sig") == F.col("sb"))
-                   & (F.col("da") < F.col("db")))
-            .select("da", "db", "ha", "hb")
-            .distinct()
-            .filter(F.expr("bit_count(ha ^ hb)") <= 3)
-            .collect()
+    for hashes, bits, n_bands, k in (
+        (fps, 32, 4, 3), (near32, 32, 4, 3), (near64, 64, 8, 6),
+    ):
+        df = spark.createDataFrame(
+            [Row(doc_id=i, h=v) for i, v in enumerate(hashes)],
+            "doc_id int, h long",
         )
-    )
-    want = sorted(
-        (i, j)
-        for i in range(len(fps))
-        for j in range(i + 1, len(fps))
-        if bin(fps[i] ^ fps[j]).count("1") <= 3
-    )
-    assert got == want
+        got = sorted(map(tuple, hamming_pairs(df, "h", bits, n_bands, k).collect()))
+        want = sorted(
+            (i, j, d)
+            for i in range(len(hashes))
+            for j in range(i + 1, len(hashes))
+            if (d := bin((hashes[i] ^ hashes[j]) & ((1 << 64) - 1)).count("1")) <= k
+        )
+        assert got == want, (bits, hashes)
 
 
 def test_stratified_sample_rates_and_determinism(spark, sf_dir):
@@ -1062,7 +1062,7 @@ def test_cdc_chunk_dedup_deterministic(spark, sf_dir):
 def test_cdc_chunk_dedup_text_never_shuffles(spark, sf_dir):
     """Same scale contract as q_chunk_dedup: only the slim
     (id, pos, h1, h2) relation reaches a keyed exchange — never the
-    text, token array, or chunk-string array."""
+    text, token array, or chunk-string array __units."""
     from test_plans import _exchange_blocks
 
     docs = read_table(spark, sf_dir, "documents")
@@ -1075,7 +1075,62 @@ def test_cdc_chunk_dedup_text_never_shuffles(spark, sf_dir):
     for b in blocks:
         assert "text#" not in b, b
         assert " w#" not in b and "[w#" not in b, b
-        assert "__chunks#" not in b, b
+        assert "__units#" not in b, b
+
+
+#: degenerate and duplicate-bearing documents for the unit dedups:
+#: NULL, empty, whitespace-only and punctuation-only text (no units),
+#: a one-token document whose token is itself a CDC cut (md5 prefix
+#: = 0 mod 8), repeated words, an exact copy and a shifted copy
+_UNIT_DEDUP_DOCS = [
+    (1, None),
+    (2, ""),
+    (3, "   "),
+    (4, "!!! ... ???"),
+    (5, "beta"),
+    (6, "nu nu  nu"),
+    (7, "alpha gamma delta omega sigma kappa theta zeta iota rho tau phi"),
+    (8, "alpha gamma delta omega sigma kappa theta zeta iota rho tau phi"),
+    (9, "chi psi alpha gamma delta omega sigma kappa theta zeta iota rho"),
+    (10, "beta"),
+]
+
+
+def test_unit_dedups_match_their_oracles_on_degenerate_docs(spark):
+    """chunk_dedup, paragraph_dedup and cdc_chunk_dedup each return one
+    row per document, rows equal to their own DuckDB oracle over a
+    tiny documents table: a document with no units is (id, 0, 0, ''),
+    a one-token document is one chunk, and repeats keep their first
+    occurrence."""
+    import duckdb
+    import pandas as pd
+
+    from clinical_data_warehouse_bi_spark.queries import dedup as D
+    from clinical_data_warehouse_bi_spark.registry import auditable_oracles
+    from scripts.check_parity import normalize
+
+    docs = spark.createDataFrame(_UNIT_DEDUP_DOCS, "doc_id bigint, text string")
+    con = duckdb.connect()
+    con.register(
+        "documents", pd.DataFrame(_UNIT_DEDUP_DOCS, columns=["doc_id", "text"])
+    )
+    cases = [
+        (T.chunk_dedup(docs, chunk_tokens=D.CHUNK_TOKENS), D.SQL_CHUNK_DEDUP),
+        (T.paragraph_dedup(docs, delim=" "), D.SQL_PARAGRAPH_DEDUP),
+        (
+            T.cdc_chunk_dedup(
+                docs, hash_window=D.CDC_WINDOW, divisor=D.CDC_DIVISOR
+            ),
+            auditable_oracles()["q_cdc_chunk_dedup"],
+        ),
+    ]
+    try:
+        for got, sql in cases:
+            want = normalize(con.execute(sql).df())
+            assert normalize(got.toPandas()) == want
+            assert len(want[1]) == len(_UNIT_DEDUP_DOCS)
+    finally:
+        con.close()
 
 
 def test_weighted_sample_matches_duckdb_twin(spark, sf_dir, duck):

@@ -80,10 +80,6 @@ TEST_SEAMS = {
         "test_plans: an explicit bin width against the self-tuned one",
     "lm.py::perplexity(model_broadcast_max_rows)":
         "test_plans: 0 forces the shuffled-model side of the broadcast gate",
-    "multimodal.py::phash_near_dup_pairs(max_hamming)":
-        "test_multimodal: radii around the banded join's exactness bound",
-    "multimodal.py::phash_near_dup_pairs(n_bands)":
-        "test_multimodal: band counts around the exactness bound",
     "percentiles.py::exact_percentiles_distributed(native_distinct_max)":
         "test_percentiles_distributed: 0 forces the bucketed refinement",
     "percentiles.py::exact_percentiles_distributed(refine_cap)":
