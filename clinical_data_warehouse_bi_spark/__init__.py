@@ -16,9 +16,9 @@ Layout:
                  mixing, dataset manifests
   cleanse.py     cleansing expressions (sentinel timestamps, keyword
                  filters, regex-guarded numeric parse, calendar attrs)
-  keys.py        surrogate keys (row_number, zip_index_key)
-  joins.py       lookup / normalized-string / interval (as-of) /
-                 null-safe / semi / anti / range / fuzzy join operators
+  keys.py        dense distributed surrogate keys (zip_index_key)
+  joins.py       interval (as-of) / orphan-cleanup / size-gated
+                 broadcast / range / fuzzy join operators
   fixtures.py    seeded MIMIC-shaped sources for the star pipeline
   star.py        the 3-stage clinical pipeline (staging -> dwh -> agg)
   qa.py          the reference's QA suite plus expectation, pivot,

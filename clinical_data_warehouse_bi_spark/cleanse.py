@@ -51,12 +51,12 @@ def keyword_filter(col: Column | str, keywords: list[str]) -> Column:
     return pred
 
 
-def regex_guarded_numeric(col: Column | str, target: str = "decimal(10,2)") -> Column:
-    """M1/P5/F7: value-as-string -> numeric iff it matches the numeric
-    regex, else NULL (the reference's UPDATE ... WHERE REGEXP idiom as
-    a pure recompute)."""
+def regex_guarded_numeric(col: Column | str) -> Column:
+    """M1/P5/F7: value-as-string -> DECIMAL(10,2) iff it matches the
+    numeric regex, else NULL (the reference's UPDATE ... WHERE REGEXP
+    idiom as a pure recompute)."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.when(c.rlike(NUMERIC_RE), c.cast(target))
+    return F.when(c.rlike(NUMERIC_RE), c.cast("decimal(10,2)"))
 
 
 def normalized_key(col: Column | str) -> Column:

@@ -1,17 +1,20 @@
-"""Join operators (SURVEY.md section 2.3, J1-J12).
+"""Join operators that hide real logic (SURVEY.md section 2.3).
 
-Reference parity (all citations into /root/reference):
-- J1-J3 dim lookup left joins: Stage_area.sql:181-182, 200-202.
-- J4 normalized-string join: Stage_area.sql:219-220
-  (`ON TRIM(LOWER(result_name)) = TRIM(LOWER(concept_name))`).
-- J5/J6 interval (as-of) joins: Stage_area.sql:237-245, 251-256
-  (`event_datetime BETWEEN intime AND outtime`). MariaDB's UPDATE
-  keeps an arbitrary match; here multi-matches are deduplicated
-  DETERMINISTICALLY (row_number over an explicit order).
-- J7 null-safe join: Stage_area.sql:278-283
-  (`(a IS NULL AND b IS NULL) OR a=b` == Spark `<=>`).
-- J8-J10 anti/semi patterns: Stage_area.sql:299-301; DWH.sql:124-177.
-- J12 scalar-subquery lookup: Stage_area.sql:225-231.
+- J5/J6 interval (as-of) joins, ``interval_join_pick_first``:
+  Stage_area.sql:237-245, 251-256 (`event_datetime BETWEEN intime AND
+  outtime`). MariaDB's UPDATE keeps an arbitrary match; here
+  multi-matches are deduplicated DETERMINISTICALLY (row_number over
+  an explicit order).
+- J10 orphan DELETE as a recompute, ``orphan_cleanup``:
+  DWH.sql:150-177.
+- ``size_gated_broadcast``, ``range_join_binned`` (no equi key) and
+  ``fuzzy_blocked_pairs`` (blocked Levenshtein entity resolution).
+
+The one-call shapes are plain DataFrame calls at their callers: J1-J3
+dim lookups `join(F.broadcast(dim), on, "left")`, the J4 normalized
+key `cleanse.normalized_key` on both sides, J7 `eqNullSafe`, J8/J9
+`"left_anti"`, J11 `"left_semi"` and the J12 scalar default
+`.first()` + `coalesce`.
 
 Scale notes: dimension sides are broadcast (classic star-schema win —
 no shuffle of the fact). The interval join is an equi-join on the
@@ -24,34 +27,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-from clinical_data_warehouse_bi_spark.cleanse import normalized_key
-
-
-def lookup_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    on: Column,
-) -> DataFrame:
-    """J1-J3: fact x (filtered) dimension left lookup. Dim is
-    broadcast — at warehouse scale dims are MBs while facts are TBs."""
-    return fact.join(F.broadcast(dim), on, "left")
-
-
-def normalized_string_join(
-    left: DataFrame,
-    right: DataFrame,
-    left_col: str,
-    right_col: str,
-) -> DataFrame:
-    """J4: left equi-join on TRIM(LOWER(x)) of both sides."""
-    return left.join(
-        F.broadcast(right),
-        normalized_key(left.__getattr__(left_col)).eqNullSafe(
-            normalized_key(right.__getattr__(right_col))
-        ),
-        "left",
-    )
 
 
 def interval_join_pick_first(
@@ -81,28 +56,6 @@ def interval_join_pick_first(
     )
 
 
-def null_safe_join(
-    left: DataFrame, right: DataFrame, pairs: list[tuple[str, str]]
-) -> DataFrame:
-    """J7: inner join where NULL == NULL (junk-dim linkage)."""
-    cond = None
-    for lc, rc in pairs:
-        c = left.__getattr__(lc).eqNullSafe(right.__getattr__(rc))
-        cond = c if cond is None else (cond & c)
-    return left.join(F.broadcast(right), cond, "inner")
-
-
-def anti_join(left: DataFrame, right: DataFrame, on) -> DataFrame:
-    """J8/J9: rows of left with no match in right (insert-if-absent /
-    NOT EXISTS; Catalyst decorrelates either way)."""
-    return left.join(right, on, "left_anti")
-
-
-def semi_join(left: DataFrame, right: DataFrame, on) -> DataFrame:
-    """J10/J11 keep-side: rows of left with a match in right."""
-    return left.join(right, on, "left_semi")
-
-
 def orphan_cleanup(
     fact: DataFrame, dim: DataFrame, fk: str, dim_key: str
 ) -> DataFrame:
@@ -117,17 +70,6 @@ def orphan_cleanup(
         .filter(fact.__getattr__(fk).isNull() | F.col("__dim_key").isNotNull())
         .drop("__dim_key")
     )
-
-
-def scalar_lookup_default(
-    fact: DataFrame, col: str, scalar_df: DataFrame, out: str | None = None
-) -> DataFrame:
-    """J12/M2: UPDATE ... SET x = (scalar subquery) WHERE x IS NULL as
-    coalesce with a driver-side one-row lookup (one tiny job — fine at
-    any scale; it is one row by construction)."""
-    row = scalar_df.first()
-    default = None if row is None else row[0]
-    return fact.withColumn(out or col, F.coalesce(F.col(col), F.lit(default)))
 
 
 #: (applicationId, plan semanticHash, max_rows) -> fits; see

@@ -1,30 +1,25 @@
-"""Surrogate-key strategies (SURVEY.md section 2.5, W1/W2).
+"""Surrogate keys (SURVEY.md section 2.5, W1/W2).
 
 The reference uses `ROW_NUMBER() OVER ()` (Stage_area.sql:58) and
 MariaDB AUTO_INCREMENT (Stage_area.sql:77,154,263; DWH.sql:99). Spark
-has no auto-increment; two strategies:
+has no auto-increment. A global `F.row_number().over(Window.orderBy(...))`
+is exact and deterministic but collapses to ONE partition, so callers
+write it inline only over bounded relations (the star junk dim,
+q_join_nullsafe_junk, q_surrogate_key).
 
-- ``row_number_key``: exact, contiguous, deterministic given an
-  ORDER BY — but a global window collapses to ONE partition. Fine for
-  dimension tables (thousands of rows); never for the fact table.
-- ``zip_index_key``: contiguous AND distributed: per-partition counts
-  + offset cumsum, one extra tiny job. The offsets come back as a JVM
-  local relation (``io.local_frame``), so plans that scan the keyed
-  relation run no job for them. Use when downstream genuinely needs
-  dense keys at scale.
+``zip_index_key`` is the distributed form: contiguous dense keys from
+per-partition counts + an offset cumsum, one extra tiny job. The
+offsets come back as a JVM local relation (``io.local_frame``), so
+plans that scan the keyed relation run no job for them. Use it when
+downstream genuinely needs dense keys at scale.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from clinical_data_warehouse_bi_spark.io import local_frame
-
-
-def row_number_key(order_by: list[str | Column]) -> Column:
-    """W1: dense surrogate key; single-partition — dims only."""
-    return F.row_number().over(Window.orderBy(*order_by))
 
 
 def zip_index_key(df: DataFrame, name: str = "surrogate_id") -> DataFrame:

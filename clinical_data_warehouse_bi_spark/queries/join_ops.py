@@ -3,10 +3,11 @@ schema, per the role mapping in FIXTURES.md section C."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from clinical_data_warehouse_bi_spark import joins
+from clinical_data_warehouse_bi_spark.cleanse import normalized_key
 from clinical_data_warehouse_bi_spark.io import fan_out, load_tables, local_frame
 from clinical_data_warehouse_bi_spark.registry import register
 
@@ -31,10 +32,10 @@ def q_join_lookup_cast(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain form end-to-end in tests/test_star_pipeline.py."""
     t = load_tables(spark, sf_dir, ("lineitem", "part"))
     dim = t["part"].filter(F.col("p_size") > 25)
-    out = joins.lookup_join(
-        t["lineitem"],
-        dim,
+    out = t["lineitem"].join(
+        F.broadcast(dim),
         t["lineitem"]["l_partkey"].cast("string") == dim["p_partkey"].cast("string"),
+        "left",
     )
     return out.select("l_orderkey", "l_linenumber", "p_name")
 
@@ -52,7 +53,11 @@ def q_join_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashes/broadcasts like any other key."""
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
     dim = docs.select(F.upper("source").alias("source_name")).distinct()
-    out = joins.normalized_string_join(docs, dim, "source", "source_name")
+    out = docs.join(
+        F.broadcast(dim),
+        normalized_key(docs["source"]).eqNullSafe(normalized_key(dim["source_name"])),
+        "left",
+    )
     return out.select("doc_id", "source_name")
 
 
@@ -142,8 +147,6 @@ def q_join_nullsafe_junk(spark: SparkSession, sf_dir: str) -> DataFrame:
     DISTINCT low-cardinality combos get a surrogate key, then link
     back with NULL-safe equality (`<=>`; MariaDB spells it
     `(a IS NULL AND b IS NULL) OR a=b`)."""
-    from clinical_data_warehouse_bi_spark.keys import row_number_key
-
     ev = load_tables(spark, sf_dir, ("events",))["events"]
     base = ev.select(
         "event_id",
@@ -152,19 +155,21 @@ def q_join_nullsafe_junk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.upper("event_type"))
         .alias("channel"),
     )
+    w = Window.orderBy(F.col("event_type").asc_nulls_first(), F.col("channel").asc_nulls_first())
     junk = (
         base.select("event_type", "channel")
         .distinct()
         .select(
-            row_number_key(
-                [F.col("event_type").asc_nulls_first(), F.col("channel").asc_nulls_first()]
-            ).alias("junk_id"),
+            F.row_number().over(w).alias("junk_id"),
             F.col("event_type").alias("j_event_type"),
             F.col("channel").alias("j_channel"),
         )
     )
-    out = joins.null_safe_join(
-        base, junk, [("event_type", "j_event_type"), ("channel", "j_channel")]
+    out = base.join(
+        F.broadcast(junk),
+        base["event_type"].eqNullSafe(junk["j_event_type"])
+        & base["channel"].eqNullSafe(junk["j_channel"]),
+        "inner",
     )
     return out.select("event_id", "junk_id")
 
@@ -201,7 +206,7 @@ def q_anti_new_dates(spark: SparkSession, sf_dir: str) -> DataFrame:
     new = t["lineitem"].select(F.col("l_shipdate").cast("date").alias("new_date")).distinct()
     existing = t["orders"].select(F.col("o_orderdate").cast("date").alias("d")).distinct()
     return (
-        joins.anti_join(new, existing, new["new_date"] == existing["d"])
+        new.join(existing, new["new_date"] == existing["d"], "left_anti")
         .select(F.date_format("new_date", "yyyy-MM-dd").alias("new_date"))
     )
 
@@ -225,13 +230,13 @@ def q_semi_valid_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
     frozen implementation. Witness: q_orphan_cleanup carries the
     registered J10 keep/drop recompute (its LEFT-join survivor
     filter IS this semi-join unioned with the NULL-FK branch), and
-    the star pipeline's six orphan deletes exercise joins.semi_join's
-    sibling anti path e2e. The full oracle comparison stays live in
+    the star pipeline's orphan deletes exercise the sibling
+    keep/drop path e2e. The full oracle comparison stays live in
     tests/test_retired_parity.py against SQL_SEMI_VALID_FACT."""
     t = load_tables(spark, sf_dir, ("lineitem", "orders"))
     dim = t["orders"].filter(F.col("o_orderstatus") == "F")
-    out = joins.semi_join(
-        t["lineitem"], dim, t["lineitem"]["l_orderkey"] == dim["o_orderkey"]
+    out = t["lineitem"].join(
+        dim, t["lineitem"]["l_orderkey"] == dim["o_orderkey"], "left_semi"
     )
     return out.select("l_orderkey", "l_linenumber")
 
@@ -327,17 +332,15 @@ def q_scalar_lookup_default(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL_SCALAR_LOOKUP_DEFAULT in tests/test_retired_parity.py."""
     t = load_tables(spark, sf_dir, ("lineitem", "part"))
     dim = t["part"].filter(F.col("p_size") > 40)
-    joined = joins.lookup_join(
-        t["lineitem"], dim, t["lineitem"]["l_partkey"] == dim["p_partkey"]
+    joined = t["lineitem"].join(
+        F.broadcast(dim), t["lineitem"]["l_partkey"] == dim["p_partkey"], "left"
     )
-    scalar = t["part"].agg(F.min("p_partkey"))
-    out = joins.scalar_lookup_default(
-        joined.select("l_orderkey", "l_linenumber", "p_partkey"),
-        "p_partkey",
-        scalar,
-        out="concept_key",
+    default = t["part"].agg(F.min("p_partkey")).first()[0]
+    return joined.select(
+        "l_orderkey",
+        "l_linenumber",
+        F.coalesce(F.col("p_partkey"), F.lit(default)).alias("concept_key"),
     )
-    return out.select("l_orderkey", "l_linenumber", "concept_key")
 
 
 #: q_range_join's DuckDB oracle, preserved after its round-9

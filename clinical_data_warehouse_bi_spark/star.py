@@ -4,21 +4,25 @@ promote (DWH.sql) -> pre-aggregation, with QA in qa.py.
 
 MariaDB's mutable-state idioms become pure recomputes:
 - UPDATE + regex guard        -> withColumn(when(rlike, cast))
-- UPDATE + scalar subquery    -> coalesce with driver-side scalar
+- UPDATE + scalar subquery    -> coalesce with a broadcast one-row dim
 - UPDATE + BETWEEN join       -> interval join + deterministic
                                  row_number pick-first (MariaDB kept
                                  an arbitrary match)
 - DELETE + LEFT JOIN IS NULL  -> orphan_cleanup (semi-join keep)
-- AUTO_INCREMENT              -> row_number over explicit order
-                                 (dims) / monotonically_increasing_id
-                                 (facts at scale)
+- AUTO_INCREMENT              -> keys.zip_index_key: dense 1..N, no
+                                 global window (the junk dim, bounded
+                                 by construction, keeps row_number)
+
+Key VALUES are consistent but not MariaDB's: every consumer joins on
+natural keys, and tests/test_star_pipeline.py checks all 16 relations
+against the reference's own SQL run by DuckDB (scripts/ab.py
+DUCK_PIPELINE) after resolving each surrogate to its natural key.
 
 Every transform chains lazily inside one Catalyst plan per layer. The
-materialization barriers are the lazy ``localCheckpoint``s at the two
-consumer-shared event-scale relations: the enriched staging fact and
-the cleaned DWH fact. In the scale path (``parity_keys=False``) those
-are the checkpoints ``keys.zip_index_key`` takes of its input, and the
-two key-built dims pass through the same barrier.
+materialization barriers are the lazy ``localCheckpoint``s
+``keys.zip_index_key`` takes of its input at the two consumer-shared
+event-scale relations, the enriched staging fact and the cleaned DWH
+fact; the two key-built dims pass through the same barrier.
 
 Scale notes: concept/junk/date dims are broadcast in every fact
 lookup. The interval joins key on (patient_id, admission_id) — the
@@ -28,13 +32,16 @@ admission skew typical of clinical data.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from clinical_data_warehouse_bi_spark.cleanse import (
-    NUMERIC_RE,
     keyword_filter,
     normalized_key,
+    regex_guarded_numeric,
     sentinel_timestamp,
 )
 from clinical_data_warehouse_bi_spark.io import local_frame
@@ -80,35 +87,28 @@ def _calendar(src: DataFrame) -> DataFrame:
 
 class _StageDict(dict):
     """build_staging's return type: a plain dict of DataFrames plus a
-    provenance marker build_dwh's scale path checks before eliding
-    the probes that are no-ops only for build_staging output (the
-    round-14 verdict item 7 tripwire). In-place mutation (the test
-    suite's per-table localCheckpoint) keeps the marker; constructing
-    a FRESH plain dict — the hand-built case the tripwire exists
-    for — drops it, and build_dwh then runs the full probe set."""
+    provenance marker build_dwh checks before eliding the probes that
+    are no-ops only for build_staging output (the provenance
+    tripwire). In-place mutation of the dict keeps the marker;
+    constructing a FRESH plain dict — the hand-built case the
+    tripwire exists for — drops it, and build_dwh then runs the full
+    probe set."""
 
     _from_build_staging = True
 
 
-def build_staging(
-    src: dict[str, DataFrame], parity_keys: bool = False
-) -> dict[str, DataFrame]:
+def build_staging(src: dict[str, DataFrame]) -> dict[str, DataFrame]:
     """Stage_area.sql as one lazy dataflow. ``src`` holds the 8
     MIMIC-IV-shaped tables: patients, admissions, transfers,
     d_labitems, d_icd_diagnoses, labevents, diagnoses_icd, omr.
 
-    ``parity_keys``: surrogate keys for the event-scale relations
-    (fact, dim_provider) come from a global ``ROW_NUMBER() OVER ()``
-    — byte-for-byte the reference's AUTO_INCREMENT semantics, but a
-    single-partition funnel. The default (False) is the scale path:
-    ``keys.zip_index_key`` — dense 1..N, fully parallel, no global
-    sort. Keys only need to be consistent, not identical to MariaDB's
-    (oracle parity joins on natural keys; SURVEY.md section 7c).
-    The concept dim follows the same gate since round 12 (bounded
-    today, but vocabularies grow — the scale path is now globally
-    single-partition-window-free); only the junk dim keeps
-    row_number either way (bounded distinct attribute combos by
-    construction)."""
+    Surrogate keys of the fact, dim_provider and dim_concepts come
+    from ``keys.zip_index_key`` — dense 1..N, fully parallel, no
+    global sort. Keys only need to be consistent, not identical to
+    MariaDB's AUTO_INCREMENT values (oracle parity joins on natural
+    keys; SURVEY.md section 7c), so no relation crosses a
+    single-partition window except the junk dim's row_number
+    (bounded distinct attribute combos by construction)."""
     # -- dim_patients (Stage_area.sql:25-30): project + rename
     dim_patients = src["patients"].select(
         F.col("subject_id").alias("patient_id"), "gender", "dod"
@@ -125,10 +125,9 @@ def build_staging(
     )
 
     # -- dim_provider (56-70): ROW_NUMBER() OVER () surrogate.
-    #    transfers scales with events, so the parity-mode global window
-    #    (explicit deterministic order; insertion order is undefined in
-    #    the reference's SELECT anyway) is single-partition — the scale
-    #    default assigns the dense key with zip_index_key instead.
+    #    transfers scales with events, so the dense key comes from
+    #    zip_index_key (keyed below together with dim_concepts), not a
+    #    single-partition global window.
     prov_base = src["transfers"].select(
         F.col("subject_id").alias("patient_id"),
         F.col("hadm_id").alias("admission_id"),
@@ -136,38 +135,16 @@ def build_staging(
         sentinel_timestamp("intime", "1900-01-01 00:00:00").alias("intime"),
         sentinel_timestamp("outtime", "2999-12-31 23:59:59").alias("outtime"),
     )
-    if parity_keys:
-        w_prov = Window.orderBy(
-            F.col("patient_id").asc_nulls_first(),
-            F.col("admission_id").asc_nulls_first(),
-            F.col("intime").asc_nulls_first(),
-            F.col("careunit_id").asc_nulls_first(),
-        )
-        dim_provider = prov_base.withColumn(
-            "provider_id", F.row_number().over(w_prov)
-        )
-    else:
-        # scale path: keyed below TOGETHER with dim_concepts — the two
-        # zip_index_key stats jobs are independent, so they overlap in
-        # a 2-thread pool (round-16, guide-style job overlap: each
-        # call's result is a pure function of its own checkpointed
-        # input, threading only hides the second job's latency behind
-        # the first's straggler tail; measured 0.99 -> 0.75 s for the
-        # pair at the bench fixture scale, outputs identical)
-        dim_provider = None
-    if dim_provider is not None:
-        dim_provider = dim_provider.select(
-            "provider_id", "patient_id", "admission_id", "careunit_id", "intime", "outtime"
-        )
 
     # -- dim_concepts (76-113): keyword extracts + 'Unknown' fallback;
-    #    AUTO_INCREMENT across the three insert batches -> row_number
-    #    over (batch, code)
+    #    AUTO_INCREMENT across the three insert batches -> a dense
+    #    zip_index_key (bounded today, but vocabularies grow; facts
+    #    join concepts on the natural key, so any consistent dense id
+    #    works)
     labs = (
         src["d_labitems"]
         .filter(keyword_filter("label", LAB_KEYWORDS))
         .select(
-            F.lit(1).alias("__batch"),
             F.lit("Lab").alias("concept_type"),
             F.col("label").alias("concept_name"),
             F.col("itemid").cast("string").alias("code"),
@@ -178,7 +155,6 @@ def build_staging(
         src["d_icd_diagnoses"]
         .filter(keyword_filter("long_title", DIAGNOSIS_KEYWORDS))
         .select(
-            F.lit(2).alias("__batch"),
             F.lit("Diagnosis").alias("concept_type"),
             F.col("long_title").alias("concept_name"),
             F.col("icd_code").alias("code"),
@@ -188,66 +164,42 @@ def build_staging(
     spark = src["patients"].sparkSession
     unknown = local_frame(
         spark,
-        [(3, "Unknown", "Unknown concept", "UNKNOWN", "No matching concept found")],
-        "__batch bigint, concept_type string, concept_name string, code string, "
-        "description string",
+        [("Unknown", "Unknown concept", "UNKNOWN", "No matching concept found")],
+        "concept_type string, concept_name string, code string, description string",
     )
     concept_base = labs.unionByName(diags).unionByName(unknown)
-    if parity_keys:
-        # exact AUTO_INCREMENT emulation: one global row_number over
-        # (insert batch, code) — single-partition by construction,
-        # which is why it sits behind the flag
-        w_concept = Window.orderBy(
-            F.col("__batch"), F.col("code").asc_nulls_first()
-        )
-        dim_concepts = concept_base.withColumn(
-            "clinical_concept_id", F.row_number().over(w_concept)
-        )
-    else:
-        # scale default (round-11 verdict item 4): the concept dim is
-        # bounded today (keyword-filtered vocab + 1 literal row), but
-        # vocabularies grow — dense keys come from zip_index_key like
-        # the fact/provider keys, so NO relation in the scale path
-        # crosses a single-partition window. Facts join concepts on
-        # the natural key (code), so any consistent dense id works.
-        # Both dim key builds run here, overlapped (see dim_provider
-        # note above).
-        from concurrent.futures import ThreadPoolExecutor
 
-        from pyspark.util import inheritable_thread_target
-
-        # inheritable_thread_target(spark) copies this thread's
-        # JVM-local properties (job group/description, scheduler pool)
-        # and the session's spark.addTag tags into the worker threads —
-        # under pinned-thread mode a plain pool thread would not inherit
-        # them, so caller-side job cancellation or tagging would miss
-        # these two jobs. Given no session it copies the properties
-        # only, drops the tags and warns on every call. Without pinned
-        # threads (PYSPARK_PIN_THREAD=false) there is nothing to copy
-        # and it hands the session itself back.
-        wrap = inheritable_thread_target(spark)
-        key_build = zip_index_key if wrap is spark else wrap(zip_index_key)
-        with ThreadPoolExecutor(max_workers=2) as _pool:
-            _f_prov = _pool.submit(key_build, prov_base, "provider_id")
-            _f_conc = _pool.submit(
-                key_build, concept_base, "clinical_concept_id"
-            )
-            dim_provider = _f_prov.result().select(
-                "provider_id", "patient_id", "admission_id",
-                "careunit_id", "intime", "outtime",
-            )
-            dim_concepts = _f_conc.result()
-    dim_concepts = dim_concepts.drop("__batch").select(
-        "clinical_concept_id", "concept_type", "concept_name", "code", "description"
-    )
+    # Both dim key builds: the two zip_index_key stats jobs are
+    # independent, so they overlap in a 2-thread pool (each call's
+    # result is a pure function of its own checkpointed input;
+    # threading only hides the second job's latency behind the
+    # first's straggler tail — measured 0.99 -> 0.75 s for the pair at
+    # the bench fixture scale, outputs identical).
+    # inheritable_thread_target(spark) copies this thread's JVM-local
+    # properties (job group/description, scheduler pool) and the
+    # session's spark.addTag tags into the worker threads — under
+    # pinned-thread mode a plain pool thread would not inherit them,
+    # so caller-side job cancellation or tagging would miss these two
+    # jobs. Given no session it copies the properties only, drops the
+    # tags and warns on every call. Without pinned threads
+    # (PYSPARK_PIN_THREAD=false) there is nothing to copy and it hands
+    # the session itself back.
+    wrap = inheritable_thread_target(spark)
+    key_build = zip_index_key if wrap is spark else wrap(zip_index_key)
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        f_prov = pool.submit(key_build, prov_base, "provider_id")
+        f_conc = pool.submit(key_build, concept_base, "clinical_concept_id")
+        dim_provider = f_prov.result().select(
+            "provider_id", "patient_id", "admission_id",
+            "careunit_id", "intime", "outtime",
+        )
+        dim_concepts = f_conc.result().select(
+            "clinical_concept_id", "concept_type", "concept_name", "code", "description"
+        )
 
     # -- omr_filtered (133-147): keyword filter + regex-guarded parse
     omr_filtered = src["omr"].filter(keyword_filter("result_name", OMR_KEYWORDS)).withColumn(
-        "result_value_numeric",
-        F.when(
-            F.col("result_value").rlike(NUMERIC_RE),
-            F.col("result_value").cast("decimal(10,2)").cast("float"),
-        ),
+        "result_value_numeric", regex_guarded_numeric("result_value").cast("float")
     )
 
     # -- fact build (153-222): three conformed branches unioned
@@ -271,7 +223,6 @@ def build_staging(
     lab_events = le.join(
         concepts_lab, le["itemid"].cast("string") == concepts_lab["code"], "left"
     ).select(
-        F.lit(1).alias("__batch"),
         F.col("subject_id").alias("patient_id"),
         F.col("hadm_id").alias("admission_id"),
         F.col("charttime").alias("event_datetime"),
@@ -292,7 +243,6 @@ def build_staging(
         d.join(adm_lookup, d["hadm_id"] == F.col("a_admission_id"), "left")
         .join(concepts_diag, d["icd_code"] == F.col("diag_code"), "left")
         .select(
-            F.lit(2).alias("__batch"),
             F.col("subject_id").alias("patient_id"),
             F.col("hadm_id").alias("admission_id"),
             F.coalesce(
@@ -318,7 +268,6 @@ def build_staging(
     omr_events = o.join(
         concepts_lab_norm, normalized_key(o["result_name"]) == F.col("norm_name"), "left"
     ).select(
-        F.lit(3).alias("__batch"),
         F.col("subject_id").alias("patient_id"),
         F.lit(None).cast(o.schema["subject_id"].dataType).alias("admission_id"),
         F.col("chartdate").alias("event_datetime"),
@@ -329,36 +278,20 @@ def build_staging(
         F.col("chartdate").alias("event_date"),
     )
 
-    # AUTO_INCREMENT id across batches (lab -> diagnosis -> omr).
-    # Parity mode: dense global row_number with an explicit order —
-    # exact AUTO_INCREMENT semantics, single-partition funnel.
-    # Scale default (round 13): the dense key is assigned AFTER the
-    # two interval joins, at the junk-dim barrier below — the dedup
-    # windows only need a unique per-row identity, and a sparse
-    # monotonically_increasing_id provides it shuffle-free (it is
-    # deterministic here: the union is narrow over the cached
-    # sources). Fusing the key barrier into the enrichment barrier
-    # halves staging's event-scale materializations (two
-    # localCheckpoint write+read passes -> one), the biggest fixed
-    # cost in the 256x pipeline_star bill.
-    union = lab_events.unionByName(diag_events).unionByName(omr_events)
-    if parity_keys:
-        w_fact = Window.orderBy(
-            F.col("__batch"),
-            F.col("patient_id").asc_nulls_first(),
-            F.col("event_datetime").asc_nulls_first(),
-            F.col("clinical_concept_id").asc_nulls_first(),
-            F.col("measurement_value").asc_nulls_first(),
-        )
-        fact = union.withColumn(
-            "disorder_event_id", F.row_number().over(w_fact)
-        ).drop("__batch")
-        row_key = "disorder_event_id"
-    else:
-        fact = union.drop("__batch").withColumn(
-            "__uid", F.monotonically_increasing_id()
-        )
-        row_key = "__uid"
+    # AUTO_INCREMENT id across batches (lab -> diagnosis -> omr). The
+    # dense key is assigned AFTER the two interval joins, at the
+    # junk-dim barrier below — the dedup windows only need a unique
+    # per-row identity, and a sparse monotonically_increasing_id
+    # provides it shuffle-free (it is deterministic here: the union
+    # is narrow over the cached sources). Fusing the key barrier into
+    # the enrichment barrier halves staging's event-scale
+    # materializations (two localCheckpoint write+read passes -> one),
+    # the biggest fixed cost in the 256x pipeline_star bill.
+    fact = (
+        lab_events.unionByName(diag_events)
+        .unionByName(omr_events)
+        .withColumn("__uid", F.monotonically_increasing_id())
+    )
 
     # -- UPDATE 1 (225-231): unknown-concept default via scalar
     #    lookup. LAZY form: the one-row filtered dim rides in as a
@@ -366,8 +299,8 @@ def build_staging(
     #    — same semantics (the filter yields exactly one row by
     #    construction), but the pipeline build stays action-free here
     #    (an eager scalar cost 0.4 s of build latency per run; the
-    #    registered J12 query keeps the driver-side idiom in
-    #    joins.scalar_lookup_default).
+    #    retired J12 query q_scalar_lookup_default keeps the
+    #    driver-side idiom).
     unknown_row = F.broadcast(
         dim_concepts.filter(F.col("concept_name") == "Unknown concept").select(
             F.col("clinical_concept_id").alias("__unknown_id")
@@ -410,7 +343,7 @@ def build_staging(
         ts_col=F.col("event_datetime"),
         lo_col=F.col("t_intime"),
         hi_col=F.col("t_outtime"),
-        left_key=["patient_id", "admission_id", row_key],
+        left_key=["patient_id", "admission_id", "__uid"],
         order=[
             F.col("t_intime").asc_nulls_last(),
             F.col("t_careunit").asc_nulls_last(),
@@ -437,9 +370,9 @@ def build_staging(
         ts_col=F.col("event_datetime"),
         lo_col=F.col("p_intime"),
         hi_col=F.col("p_outtime"),
-        left_key=["patient_id", "admission_id", row_key],
+        left_key=["patient_id", "admission_id", "__uid"],
         # natural-column order first so the pick does not depend on the
-        # surrogate-key strategy; p_provider_id only breaks exact ties
+        # surrogate-key values; p_provider_id only breaks exact ties
         order=[
             F.col("p_intime").asc_nulls_last(),
             F.col("p_outtime").asc_nulls_last(),
@@ -455,14 +388,11 @@ def build_staging(
     #    BACK to it — without a barrier every action recomputes both
     #    interval joins twice (once per traversal). Materialize the
     #    enriched fact once; this is also the point the reference's
-    #    own staging table would exist as real rows. In the scale
-    #    path the dense surrogate key is assigned HERE, inside the
-    #    same barrier (zip_index_key localCheckpoints its input), so
-    #    staging pays exactly one event-scale materialization.
-    if parity_keys:
-        fact = fact.localCheckpoint(eager=False)
-    else:
-        fact = zip_index_key(fact.drop("__uid"), name="disorder_event_id")
+    #    own staging table would exist as real rows. The dense
+    #    surrogate key is assigned HERE, inside the same barrier
+    #    (zip_index_key localCheckpoints its input), so staging pays
+    #    exactly one event-scale materialization.
+    fact = zip_index_key(fact.drop("__uid"), name="disorder_event_id")
     w_junk = Window.orderBy(
         F.col("event_source_type").asc_nulls_first(),
         F.col("measurement_unit").asc_nulls_first(),
@@ -514,27 +444,24 @@ def build_staging(
     )
 
 
-def build_dwh(
-    stage: dict[str, DataFrame], parity_keys: bool = False
-) -> dict[str, DataFrame]:
+def build_dwh(stage: dict[str, DataFrame]) -> dict[str, DataFrame]:
     """DWH.sql: DISTINCT-promote every table, top-up dim_date, keep
     the 'Unknown concept' row, six orphan cleanups, pre-aggregate.
-    ``parity_keys`` as in build_staging (fact surrogate strategy).
+    The fact takes dense 1..N keys over the rows that survive the
+    cleanups.
 
-    The scale path (parity_keys=False, round-14) exploits the
-    STAGING INVARIANTS build_staging guarantees to elide the probes
-    that are no-ops by construction — output rows are identical, and
-    the pipeline's own QA probes (qa.orphan_checks, asserted all-zero
-    e2e) are the standing witness for every elision. The contract is
-    SELF-ENFORCING (round-14 verdict item 7): the elisions apply only
-    when ``stage`` carries build_staging's provenance marker
-    (_StageDict) — a hand-built plain dict, whose invariants nothing
-    guarantees, gets the reference's full probe set at default
-    settings (keys stay scale-mode dense; only the probe elision is
-    provenance-gated)."""
-    full_probes = parity_keys or not getattr(
-        stage, "_from_build_staging", False
-    )
+    The build exploits the STAGING INVARIANTS build_staging
+    guarantees to elide the probes that are no-ops by construction —
+    output rows are identical (tests/test_star_pipeline.py checks
+    every DWH relation against the reference's SQL run by DuckDB,
+    which runs all six DELETEs and the top-up), and the pipeline's
+    own QA probes (qa.orphan_checks, asserted all-zero e2e) are the
+    standing witness for every elision. The contract is
+    SELF-ENFORCING: the elisions apply only when ``stage`` carries
+    build_staging's provenance marker (_StageDict) — a hand-built
+    plain dict, whose invariants nothing guarantees, gets the
+    reference's full probe set."""
+    full_probes = not getattr(stage, "_from_build_staging", False)
     dim_patients = stage["dim_patients"].distinct()
     dim_admissions = stage["dim_admissions"].distinct()
     dim_provider = stage["dim_provider"].distinct()
@@ -551,11 +478,10 @@ def build_dwh(
     # datetimes — PROVABLY EMPTY against a build_staging stage:
     # stage dim_date is _calendar() over exactly the stage fact's
     # non-null datetimes, and neither the DISTINCT promote nor the
-    # cleanups can add a datetime. Parity mode runs the reference's
-    # anti-join verbatim; the scale path elides it (witness: the
-    # 'Orphan dates' QA probe stays zero e2e, and
-    # tests/test_star_pipeline.py::test_dwh_scale_path_matches_parity
-    # pins row-set equality between the two modes).
+    # cleanups can add a datetime, so it runs only for a hand-built
+    # stage (witness: the 'Orphan dates' QA probe stays zero e2e, and
+    # tests/test_star_pipeline.py pins dim_date to DuckDB's run of the
+    # reference's top-up).
     if full_probes:
         missing = (
             stage["fact_disorder_events"]
@@ -579,72 +505,41 @@ def build_dwh(
     )
     dim_concepts = dim_concepts.unionByName(unknown_missing)
 
-    if parity_keys:
-        # reference-exact: key BEFORE the DELETEs (CTAS with
-        # AUTO_INCREMENT, then DELETE orphans — surviving keys keep
-        # the gap structure), then all six probes (150-177);
-        # patient_id is NOT NULL so the first degenerates to a semi
-        # join
-        w_fact = Window.orderBy(
-            *[F.col(c).asc_nulls_first() for c in fact_cols]
-        )
-        fact = deduped.withColumn(
-            "disorder_event_id", F.row_number().over(w_fact)
-        ).select("disorder_event_id", *fact_cols)
-        fact = orphan_cleanup(fact, dim_patients, "patient_id", "patient_id")
-        fact = orphan_cleanup(fact, dim_admissions, "admission_id", "admission_id")
+    # orphan cleanups (150-177; the DWH build was the measured
+    # pipeline_star residue at 256x). Two facts about
+    # build_staging's output make four of the six probes no-ops:
+    # every fact FK in {clinical_concept_id, junk_id, provider_id}
+    # was ASSIGNED from the very dim it is probed against (concept
+    # lookup + Unknown default, junk link-back, provider interval
+    # join), and dim_date derives from the fact's own datetimes —
+    # while DISTINCT promotion can only shrink row multiplicity,
+    # never a dim's key set. Only patient_id and admission_id arrive
+    # from SOURCE tables (labevents/diagnoses/omr subject+hadm ids)
+    # and can genuinely dangle, so only those two probes can delete.
+    # Eliding the other four drops their dim-key DISTINCT exchanges
+    # (provider is transfers-scale, date is event-scale) and
+    # broadcast builds from the hot path.
+    #
+    # Keys are assigned AFTER the probes: they are arbitrary-but-dense
+    # by contract (build_staging docstring), so the surviving rows
+    # take dense 1..N keys and zip_index_key's internal
+    # localCheckpoint IS the two-consumer barrier (the fact table and
+    # the pre-agg) — the DWH build pays ONE event-scale
+    # materialization and no separate checkpoint. The reference's
+    # key gaps after its DELETEs are a key-VALUE property, not kept.
+    fact = orphan_cleanup(deduped, dim_patients, "patient_id", "patient_id")
+    fact = orphan_cleanup(fact, dim_admissions, "admission_id", "admission_id")
+    if full_probes:
+        # provenance tripwire: an untagged (hand-built) stage dict
+        # gets the four elided probes back — correctness never rests
+        # on invariants nothing checked
         fact = orphan_cleanup(fact, dim_concepts, "clinical_concept_id", "clinical_concept_id")
         fact = orphan_cleanup(fact, dim_date, "event_datetime", "event_datetime")
         fact = orphan_cleanup(fact, dim_junk, "junk_id", "junk_id")
         fact = orphan_cleanup(fact, dim_provider, "provider_id", "provider_id")
-        # the cleaned fact is consumed twice (the fact table itself
-        # AND the pre-agg) — without a barrier each consumer
-        # recomputes the whole promote + cleanup chain. Lazy
-        # checkpoint: materialized by whichever consumer acts first,
-        # reused by the other — the same role the reference's
-        # physical DWH fact table plays (DWH.sql:111-118).
-        fact = fact.localCheckpoint(eager=False)
-    else:
-        # scale path (round-14 rewrite; the DWH build was the
-        # measured pipeline_star residue at 256x). Two facts about
-        # build_staging's output make four of the six probes no-ops:
-        # every fact FK in {clinical_concept_id, junk_id,
-        # provider_id} was ASSIGNED from the very dim it is probed
-        # against (concept lookup + Unknown default, junk link-back,
-        # provider interval join), and dim_date derives from the
-        # fact's own datetimes — while DISTINCT promotion can only
-        # shrink row multiplicity, never a dim's key set. Only
-        # patient_id and admission_id arrive from SOURCE tables
-        # (labevents/diagnoses/omr subject+hadm ids) and can
-        # genuinely dangle, so only those two probes can delete.
-        # Eliding the other four drops their dim-key DISTINCT
-        # exchanges (provider is transfers-scale, date is
-        # event-scale) and broadcast builds from the hot path.
-        #
-        # Key assignment moves AFTER the two live probes: scale-mode
-        # keys are arbitrary-but-dense BY CONTRACT (build_staging
-        # docstring; parity joins on natural keys), so the surviving
-        # rows take dense 1..N keys and zip_index_key's internal
-        # localCheckpoint IS the two-consumer barrier — the DWH build
-        # pays ONE event-scale materialization instead of two and no
-        # separate checkpoint. (Round 13's rejected fusion kept
-        # pre-cleanup keys and needed a determinizing sort; assigning
-        # post-cleanup needs neither.) The reference's gap structure
-        # is a key-VALUE property, preserved only under
-        # parity_keys=True like the key values themselves.
-        fact = orphan_cleanup(deduped, dim_patients, "patient_id", "patient_id")
-        fact = orphan_cleanup(fact, dim_admissions, "admission_id", "admission_id")
-        if full_probes:
-            # provenance tripwire: an untagged (hand-built) stage dict
-            # gets the four elided probes back — correctness never
-            # rests on invariants nothing checked
-            fact = orphan_cleanup(fact, dim_concepts, "clinical_concept_id", "clinical_concept_id")
-            fact = orphan_cleanup(fact, dim_date, "event_datetime", "event_datetime")
-            fact = orphan_cleanup(fact, dim_junk, "junk_id", "junk_id")
-            fact = orphan_cleanup(fact, dim_provider, "provider_id", "provider_id")
-        fact = zip_index_key(fact, name="disorder_event_id").select(
-            "disorder_event_id", *fact_cols
-        )
+    fact = zip_index_key(fact, name="disorder_event_id").select(
+        "disorder_event_id", *fact_cols
+    )
 
     # pre-aggregation (203-210). countDistinct x2 (the Expand form)
     # measured FASTER than the collect_set rewrite here (3.4 s vs

@@ -236,7 +236,8 @@ def _sentinel(col: str, sentinel: str) -> str:
 #: the staging + DWH build as one DuckDB script over views
 #: patients/admissions/transfers/d_labitems/d_icd_diagnoses/
 #: labevents/diagnoses_icd/omr (cites the same Stage_area.sql /
-#: DWH.sql lines star.py implements)
+#: DWH.sql lines star.py implements); also the value oracle that
+#: tests/test_star_pipeline.py checks star.py's 16 relations against
 DUCK_PIPELINE = f"""
 -- Stage_area.sql:25-30 — project + rename
 CREATE OR REPLACE TABLE s_dim_patients AS

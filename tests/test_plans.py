@@ -206,37 +206,21 @@ def test_range_join_auto_bin_matches_explicit(spark, sf_dir):
 
 
 def test_star_fact_scale_keys_avoid_single_partition(spark):
-    """W2 at scale: the default (scale) surrogate-key path must not
-    funnel the fact or dim_provider through a single-partition window;
-    only the genuinely tiny dims (concepts/junk) may. Parity mode
-    (exact AUTO_INCREMENT emulation) is allowed to — that is why it is
-    behind a flag."""
+    """W2 at scale: the staging build must not funnel the fact,
+    dim_provider or dim_concepts through a single-partition window;
+    only the junk dim's bounded row_number may (its combos are few by
+    construction). All three read from one build."""
     from clinical_data_warehouse_bi_spark import star
     from tests.clinical_fixtures import make_sources
 
-    src = make_sources(spark)
-    scale_plan = physical_plan(star.build_staging(src)["fact_disorder_events"])
-    assert scale_plan.count("Exchange SinglePartition") <= 1
-    # dim_provider is the event-scale dim: parity mode funnels it
-    # through a global row_number window, the scale default must not
-    # (the fact plans are checkpoint-truncated, so assert here where
-    # the full lineage is visible)
-    scale_prov = physical_plan(star.build_staging(src)["dim_provider"])
-    parity_prov = physical_plan(
-        star.build_staging(src, parity_keys=True)["dim_provider"]
-    )
-    assert scale_prov.count("Exchange SinglePartition") == 0
-    assert parity_prov.count("Exchange SinglePartition") >= 1
-    # dim_concepts joined the gate in round 12 (round-11 verdict item
-    # 4): bounded today, but the scale path must be end-to-end free
-    # of ungated global windows — zip_index_key default, row_number
-    # only under parity_keys
-    scale_con = physical_plan(star.build_staging(src)["dim_concepts"])
-    parity_con = physical_plan(
-        star.build_staging(src, parity_keys=True)["dim_concepts"]
-    )
-    assert scale_con.count("Exchange SinglePartition") == 0
-    assert parity_con.count("Exchange SinglePartition") >= 1
+    stage = star.build_staging(make_sources(spark))
+    assert physical_plan(stage["fact_disorder_events"]).count("Exchange SinglePartition") <= 1
+    # the fact plan is checkpoint-truncated, so assert on the two
+    # key-built dims too, where the full lineage is visible:
+    # dim_provider is the event-scale dim, and dim_concepts is
+    # bounded today but vocabularies grow
+    assert physical_plan(stage["dim_provider"]).count("Exchange SinglePartition") == 0
+    assert physical_plan(stage["dim_concepts"]).count("Exchange SinglePartition") == 0
 
 
 def test_interval_join_windows_reuse_join_exchange(spark):

@@ -64,12 +64,6 @@ TEST_SEAMS = {
     "corpus.py::build_corpus_release(materialize)":
         "test_corpus_pipeline::test_release_barriers_equal_unmaterialized "
         "checks the checkpoint barriers against the plain plan",
-    "star.py::build_dwh(parity_keys)":
-        "test_star_pipeline: the scale-key DWH equals the DuckDB-parity "
-        "key build row for row",
-    "star.py::build_staging(parity_keys)":
-        "test_plans: the scale-key dimension plans against the "
-        "DuckDB-parity key plans",
     # volume gates and geometry
     "hnsw.py::build_graph(upper_every)":
         "test_hnsw: a denser upper layer on fixture-sized shards",

@@ -32,7 +32,7 @@ def qa_reports(pipeline):
 
 
 def test_build_staging_emits_no_user_warning(spark):
-    """The scale path's key-build pool hands inheritable_thread_target
+    """build_staging's key-build pool hands inheritable_thread_target
     the session: given none, pinned-thread mode warns on every run
     that spark.addTag tags are not inherited by the two key jobs."""
     import warnings
@@ -310,56 +310,122 @@ def test_release_frees_pipeline_checkpoints(spark):
     assert snapshot_persistent_rdds(spark) - baseline == set()
 
 
-def test_dwh_scale_path_matches_parity(spark):
-    """The round-14 scale-path elisions (four provably-no-op orphan
-    probes + the provably-empty dim_date top-up + post-cleanup dense
-    keys) must be invisible in the DATA: every DWH relation equals
-    the parity build row-for-row, with only the fact surrogate-key
-    VALUES allowed to differ (dense-over-survivors vs
-    gap-preserving, both unique)."""
-    src = make_sources(spark, n_patients=200)
-    stage = star.build_staging(src)
-    for name, df in stage.items():
-        stage[name] = df.localCheckpoint()  # one shared staging input
-    scale = star.build_dwh(stage, parity_keys=False)
-    parity = star.build_dwh(stage, parity_keys=True)
-
-    def rows(df, drop=()):
-        cols = sorted(c for c in df.columns if c not in drop)
-        return sorted(
-            tuple(str(r[c]) for c in cols) for r in df.select(*cols).collect()
-        )
-
-    for name in (
-        "dim_patients", "dim_admissions", "dim_provider", "dim_concepts",
-        "dim_date", "dim_junk_disorder_event", "agg_disorders_per_admission",
-    ):
-        assert rows(scale[name]) == rows(parity[name]), name
-    assert rows(
-        scale["fact_disorder_events"], drop=("disorder_event_id",)
-    ) == rows(parity["fact_disorder_events"], drop=("disorder_event_id",))
-    # scale keys: dense 1..N over the SURVIVING rows
-    r = scale["fact_disorder_events"].agg(
-        F.count("*").alias("n"),
-        F.count_distinct("disorder_event_id").alias("nd"),
-        F.min("disorder_event_id").alias("lo"),
-        F.max("disorder_event_id").alias("hi"),
-    ).first()
-    assert (r.nd, r.lo, r.hi) == (r.n, 1, r.n)
+#: each star relation -> the DUCK_PIPELINE table holding the same
+#: relation as the reference's own SQL builds it
+_DUCK_TABLES = {
+    "stage": {
+        "dim_patients": "s_dim_patients",
+        "dim_admissions": "s_dim_admissions",
+        "dim_provider": "s_dim_provider",
+        "dim_concepts": "s_dim_concepts",
+        "omr_filtered": "s_omr_filtered",
+        "dim_date": "s_dim_date",
+        "dim_junk_disorder_event": "s_dim_junk",
+        "fact_disorder_events": "s_fact",
+    },
+    "dwh": {
+        "dim_patients": "d_dim_patients",
+        "dim_admissions": "d_dim_admissions",
+        "dim_provider": "d_dim_provider",
+        "dim_concepts": "d_dim_concepts",
+        "dim_date": "d_dim_date",
+        "dim_junk_disorder_event": "d_dim_junk",
+        "fact_disorder_events": "d_fact",
+        "agg_disorders_per_admission": "d_agg",
+    },
+}
 
 
-def test_dwh_scale_path_provenance_tripwire(spark):
-    """Round-14 verdict item 7: the scale path's probe elisions are
-    gated on build_staging's provenance marker. A DOCTORED hand-built
-    stage dict (a plain dict whose dim_concepts lost a key the fact
-    references) at DEFAULT settings must get the full probe set —
-    orphaned fact rows deleted, output row-set equal to the parity
-    build on the same doctored input — instead of silently-elided
-    probes leaking orphans; the tagged build_staging dict keeps the
-    elision (pinned separately by
-    test_dwh_scale_path_matches_parity)."""
-    src = make_sources(spark, n_patients=120)
-    stage = star.build_staging(src)
+def _natural_key_sql(name: str, tables: dict[str, str]) -> str:
+    """``name``'s rows with every surrogate key the two engines assign
+    differently replaced by what it stands for: the dims lose their
+    key, and the fact's concept and provider FKs resolve through the
+    same layer's dims. junk_id stays: both engines number the junk
+    dim with the same ordered row_number."""
+    t = tables[name]
+    if name == "dim_provider":
+        return f"SELECT * EXCLUDE (provider_id) FROM {t}"
+    if name == "dim_concepts":
+        return f"SELECT * EXCLUDE (clinical_concept_id) FROM {t}"
+    if name == "fact_disorder_events":
+        return f"""
+            SELECT f.* EXCLUDE (disorder_event_id, clinical_concept_id, provider_id),
+                   c.concept_type, c.code,
+                   p.patient_id AS p_patient_id, p.admission_id AS p_admission_id,
+                   p.careunit_id AS p_careunit_id, p.intime AS p_intime,
+                   p.outtime AS p_outtime
+            FROM {t} f
+            LEFT JOIN {tables["dim_concepts"]} c USING (clinical_concept_id)
+            LEFT JOIN {tables["dim_provider"]} p USING (provider_id)"""
+    return f"SELECT * FROM {t}"
+
+
+def _comparable(con, sql: str) -> tuple[list[str], str]:
+    """``sql``'s column names, and ``sql`` with its columns sorted and
+    its timestamps cast to UTC wall-clock TIMESTAMPs (Spark's arrive
+    tz-aware, DuckDB's naive)."""
+    cols = sorted(con.execute(f"DESCRIBE {sql}").fetchall())
+    select = ", ".join(
+        f'CAST("{c}" AS TIMESTAMP) AS "{c}"' if ty.startswith("TIMESTAMP") else f'"{c}"'
+        for c, ty, *_ in cols
+    )
+    return [c for c, *_ in cols], f"SELECT {select} FROM ({sql})"
+
+
+def test_star_matches_reference_sql_in_duckdb(pipeline):
+    """The reference is SQL (Stage_area.sql / DWH.sql), so its own
+    CTAS / UPDATE / DELETE chain run by DuckDB (scripts/ab.py
+    DUCK_PIPELINE, all six orphan DELETEs and the dim_date top-up
+    included) is the oracle: all 16 stage and DWH relations equal it
+    as multisets once each surrogate key is resolved to its natural
+    key (_natural_key_sql). Arrow, not pandas, carries the rows: the
+    2999-12-31 sentinel overflows pandas' ns range."""
+    import duckdb
+
+    from scripts.ab import DUCK_PIPELINE, SOURCES
+
+    src, stage, dwh = pipeline
+    con = duckdb.connect()
+    con.execute("SET TimeZone = 'UTC'")
+    for t in SOURCES:
+        con.register(t, src[t].toArrow())
+    con.execute(DUCK_PIPELINE)
+
+    for layer, out in (("stage", stage), ("dwh", dwh)):
+        duck_tables = _DUCK_TABLES[layer]
+        spark_tables = {n: f"spark_{t}" for n, t in duck_tables.items()}
+        assert set(out) == set(duck_tables)
+        for name, t in spark_tables.items():
+            con.register(t, out[name].toArrow())
+        for name in duck_tables:
+            spark_cols, spark_sql = _comparable(con, _natural_key_sql(name, spark_tables))
+            duck_cols, duck_sql = _comparable(con, _natural_key_sql(name, duck_tables))
+            assert spark_cols == duck_cols, (layer, name)
+            only_spark = con.execute(f"{spark_sql} EXCEPT ALL {duck_sql}").fetchall()
+            only_duck = con.execute(f"{duck_sql} EXCEPT ALL {spark_sql}").fetchall()
+            assert not only_spark and not only_duck, (
+                f"{layer}.{name}: {len(only_spark)} rows only in Spark "
+                f"(e.g. {only_spark[:2]}), {len(only_duck)} only in DuckDB "
+                f"(e.g. {only_duck[:2]})"
+            )
+    # the DWH fact's keys are dense 1..N over the SURVIVING rows
+    n, nd, lo, hi = con.execute(
+        "SELECT count(*), count(DISTINCT disorder_event_id),"
+        " min(disorder_event_id), max(disorder_event_id)"
+        " FROM spark_d_fact"
+    ).fetchone()
+    assert (nd, lo, hi) == (n, 1, n)
+
+
+def test_dwh_scale_path_provenance_tripwire(pipeline):
+    """build_dwh's probe elisions are gated on build_staging's
+    provenance marker. A DOCTORED hand-built stage dict (a plain dict
+    whose dim_concepts lost a key the fact references) must get the
+    full probe set: its DWH fact is the tagged build's fact minus
+    exactly the orphaned rows, instead of silently-elided probes
+    leaking them. The tagged dict's elisions are checked by
+    test_star_matches_reference_sql_in_duckdb."""
+    _, stage, dwh = pipeline
     assert getattr(stage, "_from_build_staging", False)
     # hand-built: a FRESH plain dict (marker dropped), with one
     # referenced concept removed from the dim — fact rows carrying it
@@ -374,22 +440,17 @@ def test_dwh_scale_path_provenance_tripwire(spark):
     doctored["dim_concepts"] = stage["dim_concepts"].filter(
         F.col("clinical_concept_id") != victim
     )
-    scale = star.build_dwh(doctored, parity_keys=False)
-    parity = star.build_dwh(doctored, parity_keys=True)
+    got = star.build_dwh(doctored)["fact_disorder_events"]
     # the orphaned concept rows are gone at default settings
-    assert (
-        scale["fact_disorder_events"]
-        .filter(F.col("clinical_concept_id") == victim)
-        .count()
-        == 0
-    )
+    assert got.filter(F.col("clinical_concept_id") == victim).count() == 0
 
-    def rows(df, drop=()):
-        cols = sorted(c for c in df.columns if c not in drop)
+    def rows(df):
+        cols = sorted(c for c in df.columns if c != "disorder_event_id")
         return sorted(
             tuple(str(r[c]) for c in cols) for r in df.select(*cols).collect()
         )
 
-    assert rows(
-        scale["fact_disorder_events"], drop=("disorder_event_id",)
-    ) == rows(parity["fact_disorder_events"], drop=("disorder_event_id",))
+    tagged = dwh["fact_disorder_events"]
+    expected = tagged.filter(F.col("clinical_concept_id") != victim)
+    assert tagged.count() > expected.count()
+    assert rows(got) == rows(expected)
