@@ -40,9 +40,9 @@ def sentinel_timestamp(col: Column | str, sentinel: str = SENTINEL_LOW) -> Colum
 def keyword_filter(col: Column | str, keywords: list[str]) -> Column:
     """P3: OR-chain of LIKE '%kw%' over a lowercased column.
 
-    Catalyst folds this into a single predicate pushed to the scan;
-    at scale prefer one `rlike("kw1|kw2|...")` (same pushdown, one
-    regex eval) — both forms provided for parity + performance.
+    Catalyst folds this into a single predicate pushed to the scan.
+    This OR-chain is the only form: one `rlike("kw1|kw2|...")` would
+    push down the same way with one regex eval, but is not provided.
     """
     c = F.lower(F.col(col) if isinstance(col, str) else col)
     pred = F.lit(False)

@@ -10,8 +10,9 @@ time, wall time without hypervisor steal and, read after the clock
 stops, its Spark job group's executor CPU, tasks, shuffle and spill
 plus the Python-worker CPU (perfbench/tracing); a DuckDB arm's CPU is
 its process CPU. Arms on the same data must agree (a query checksums
-check_parity.normalize of its rows, pipeline_star its anchor counts,
-pipeline_corpus_full its released doc_ids), else the exit status is 1.
+check_parity.normalize of its rows, pipeline_star its 8 DWH relations'
+natural-key rows (star_checksum), pipeline_corpus_full its released
+doc_ids), else the exit status is 1.
 
 Arms: spark@1x; duck@1x with --duckdb (the oracle, or the DuckDB
 mirror); both again on the N-fold replica with --factor N (for
@@ -212,8 +213,9 @@ def replicate_planted(spark, factor: int, base: str, work: str) -> str:
 
 # ----------------------------------------------- DuckDB mirrors
 # pipeline_star's DuckDB side is the declarative CTAS chain a DuckDB
-# user would write, mirroring Stage_area.sql / DWH.sql as star.py does;
-# its counts do not depend on either engine's surrogate-key numbering.
+# user would write, mirroring Stage_area.sql / DWH.sql as star.py does.
+# Its checksum reads natural keys, so it does not depend on either
+# engine's surrogate-key numbering.
 
 LAB_KW = ["sodium", "potassium", "bicarbonate", "chloride", "ph", "base excess",
           "anion gap"]
@@ -463,14 +465,81 @@ FROM d_fact GROUP BY admission_id;
 SOURCES = ("patients", "admissions", "transfers", "d_labitems",
            "d_icd_diagnoses", "labevents", "diagnoses_icd", "omr")
 
-#: pipeline_star's anchors as bench.star_setup counts them (the subquery
-#: counts a NULL admission_id, like Spark's .distinct().count())
-STAR_COUNTS = {
-    "stage_fact": "SELECT count(*) FROM s_fact",
-    "dwh_fact": "SELECT count(*) FROM d_fact",
-    "agg_rows": "SELECT count(*) FROM d_agg",
-    "admissions": "SELECT count(*) FROM (SELECT DISTINCT admission_id FROM d_fact)",
+#: each star relation -> the DUCK_PIPELINE table holding the same
+#: relation as the reference's own SQL builds it
+DUCK_TABLES = {
+    "stage": {
+        "dim_patients": "s_dim_patients",
+        "dim_admissions": "s_dim_admissions",
+        "dim_provider": "s_dim_provider",
+        "dim_concepts": "s_dim_concepts",
+        "omr_filtered": "s_omr_filtered",
+        "dim_date": "s_dim_date",
+        "dim_junk_disorder_event": "s_dim_junk",
+        "fact_disorder_events": "s_fact",
+    },
+    "dwh": {
+        "dim_patients": "d_dim_patients",
+        "dim_admissions": "d_dim_admissions",
+        "dim_provider": "d_dim_provider",
+        "dim_concepts": "d_dim_concepts",
+        "dim_date": "d_dim_date",
+        "dim_junk_disorder_event": "d_dim_junk",
+        "fact_disorder_events": "d_fact",
+        "agg_disorders_per_admission": "d_agg",
+    },
 }
+
+
+def natural_key_sql(name: str, tables: dict[str, str]) -> str:
+    """``name``'s rows with every surrogate key the two engines assign
+    differently replaced by what it stands for: the dims lose their
+    key, and the fact's concept and provider FKs resolve through the
+    same layer's dims. junk_id stays: both engines number the junk
+    dim with the same ordered row_number."""
+    t = tables[name]
+    if name == "dim_provider":
+        return f"SELECT * EXCLUDE (provider_id) FROM {t}"
+    if name == "dim_concepts":
+        return f"SELECT * EXCLUDE (clinical_concept_id) FROM {t}"
+    if name == "fact_disorder_events":
+        return f"""
+            SELECT f.* EXCLUDE (disorder_event_id, clinical_concept_id, provider_id),
+                   c.concept_type, c.code,
+                   p.patient_id AS p_patient_id, p.admission_id AS p_admission_id,
+                   p.careunit_id AS p_careunit_id, p.intime AS p_intime,
+                   p.outtime AS p_outtime
+            FROM {t} f
+            LEFT JOIN {tables["dim_concepts"]} c USING (clinical_concept_id)
+            LEFT JOIN {tables["dim_provider"]} p USING (provider_id)"""
+    return f"SELECT * FROM {t}"
+
+
+def comparable(con, sql: str) -> tuple[list[str], str]:
+    """``sql``'s column names, and ``sql`` with its columns sorted and
+    its timestamps cast to UTC wall-clock TIMESTAMPs (Spark's arrive
+    tz-aware, DuckDB's naive)."""
+    cols = sorted(con.execute(f"DESCRIBE {sql}").fetchall())
+    select = ", ".join(
+        f'CAST("{c}" AS TIMESTAMP) AS "{c}"' if ty.startswith("TIMESTAMP") else f'"{c}"'
+        for c, ty, *_ in cols
+    )
+    return [c for c, *_ in cols], f"SELECT {select} FROM ({sql})"
+
+
+def star_checksum(con, tables: dict[str, str]) -> str:
+    """pipeline_star's checksum: a digest of the 8 DWH relations'
+    natural-key rows (``tables`` names them in ``con``, a DuckDB
+    connection under UTC), each as sorted text rows, so it covers
+    values and both engines' arms compute it with the same SQL."""
+    n, parts = 0, []
+    for name in DUCK_TABLES["dwh"]:
+        cols, sql = comparable(con, natural_key_sql(name, tables))
+        text = ", ".join(f'CAST("{c}" AS VARCHAR)' for c in cols)
+        rows = con.execute(f"SELECT {text} FROM ({sql}) ORDER BY ALL").fetchall()
+        n += len(rows)
+        parts.append((name, cols, rows))
+    return _digest(n, parts)
 
 
 L = 12  # decontamination window + substring span length (bench_corpus_full)
@@ -613,6 +682,23 @@ def _floor(spark, sf_dir):
 VARIANTS = {"q_substring_dedup_w8": _substring_w8, FLOOR: _floor}
 
 
+def _spark_star_checksum(sources: dict) -> str:
+    """star_checksum of star.run_pipeline(sources)'s DWH relations,
+    handed to DuckDB as Arrow (the 2999-12-31 sentinel overflows
+    pandas' ns range)."""
+    import duckdb
+
+    from clinical_data_warehouse_bi_spark import star
+
+    with duckdb.connect() as con:
+        con.execute("SET TimeZone = 'UTC'")
+        tables = {}
+        for name, df in star.run_pipeline(sources)["dwh"].items():
+            tables[name] = f"spark_{name}"
+            con.register(tables[name], df.toArrow())
+        return star_checksum(con, tables)
+
+
 class SparkEngine:
     def __init__(self, arm: Arm, work: str):
         from clinical_data_warehouse_bi_spark.io import snapshot_persistent_rdds
@@ -644,7 +730,11 @@ class SparkEngine:
                 for t, df in s.sources.items():
                     df.write.mode("overwrite").parquet(f"{out}/{t}.parquet")
                 open(f"{out}/_READY", "w").write("ok")
-            return s.run, s.after, json.dumps(s.anchors, sort_keys=True)
+            # computed here from the setup's sources, not read from its
+            # anchors, so a --tree arm (that tree's bench.py) gets it too
+            checksum = _spark_star_checksum(s.sources)
+            s.after()  # the checksum run's checkpoints; the sources stay cached
+            return s.run, s.after, checksum
         data = self.arm.data_dir(self.work, spark)
         if name == CORPUS:
             s = bench.corpus_full_setup(spark, data)
@@ -694,10 +784,10 @@ class DuckEngine:
 
         if name == STAR:
             con = duck_con(self.arm.star(self.work)[1], SOURCES)
+            con.execute("SET TimeZone = 'UTC'")
             con.execute(DUCK_PIPELINE)  # warm-up
-            counts = {k: con.execute(q).fetchone()[0] for k, q in STAR_COUNTS.items()}
-            counts = json.dumps(counts, sort_keys=True)
-            return lambda: con.execute(DUCK_PIPELINE), None, counts
+            checksum = star_checksum(con, DUCK_TABLES["dwh"])
+            return lambda: con.execute(DUCK_PIPELINE), None, checksum
         con = duck_con(self.arm.data_dir(self.work))
         if name == CORPUS:
             sql = duck_mirror_sql(_STOP_LIST_SQL)

@@ -9,6 +9,7 @@ would check by eye before shipping a plan to a 1000-executor cluster.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from clinical_data_warehouse_bi_spark.io import fan_out, read_table
@@ -24,6 +25,12 @@ def physical_plan(df) -> str:
 
 def optimized_plan(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def generated_code(df) -> str:
+    return df.sparkSession._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "codegen"
+    )
 
 
 # rotation-independent: plan locks cover every registered operator
@@ -205,15 +212,21 @@ def test_range_join_auto_bin_matches_explicit(spark, sf_dir):
     assert explicit.exceptAll(auto).count() == 0
 
 
-def test_star_fact_scale_keys_avoid_single_partition(spark):
+@pytest.fixture(scope="module")
+def stage(spark):
+    """One build_staging of the clinical fixtures, read by every star
+    plan test here."""
+    from clinical_data_warehouse_bi_spark import star
+    from tests.clinical_fixtures import make_sources
+
+    return star.build_staging(make_sources(spark))
+
+
+def test_star_fact_scale_keys_avoid_single_partition(stage):
     """W2 at scale: the staging build must not funnel the fact,
     dim_provider or dim_concepts through a single-partition window;
     only the junk dim's bounded row_number may (its combos are few by
     construction). All three read from one build."""
-    from clinical_data_warehouse_bi_spark import star
-    from tests.clinical_fixtures import make_sources
-
-    stage = star.build_staging(make_sources(spark))
     assert physical_plan(stage["fact_disorder_events"]).count("Exchange SinglePartition") <= 1
     # the fact plan is checkpoint-truncated, so assert on the two
     # key-built dims too, where the full lineage is visible:
@@ -221,6 +234,44 @@ def test_star_fact_scale_keys_avoid_single_partition(spark):
     # bounded today but vocabularies grow
     assert physical_plan(stage["dim_provider"]).count("Exchange SinglePartition") == 0
     assert physical_plan(stage["dim_concepts"]).count("Exchange SinglePartition") == 0
+
+
+def test_case_mapping_never_calls_icu(spark, stage):
+    """get_spark maps case through the JVM, not ICU: ICU's first
+    lower() in a JVM builds a title-case table (CollationAwareUTF8String's
+    static init) while every other task waits on it. Every lower() /
+    upper() the engine generates must compile to the JVM form: the
+    star's keyword filter (omr_filtered; dim_concepts and the fact
+    scan checkpoints, so their plans hide theirs), normalized_key, the
+    tokenizer and normalized_text. The fixture rows are local
+    relations, into which the optimizer folds filters and projections
+    (evaluated on the driver, with no generated code); with that rule
+    off they compile as over a real scan."""
+    from clinical_data_warehouse_bi_spark.cleanse import keyword_filter, normalized_key
+    from clinical_data_warehouse_bi_spark.io import local_frame
+    from clinical_data_warehouse_bi_spark.text import normalized_text, tokens
+
+    probe = local_frame(spark, [("Sodium \u03a3",)], "s string").select(
+        keyword_filter("s", ["sodium"]).alias("kw"),
+        normalized_key("s").alias("key"),
+        tokens("s").alias("toks"),
+        normalized_text("s").alias("norm"),
+        F.upper("s").alias("up"),
+    )
+    spark.conf.set(
+        "spark.sql.optimizer.excludedRules",
+        "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation",
+    )
+    try:
+        # select("*"): a fresh plan, optimized under the conf above
+        codes = [generated_code(df.select("*")) for df in (stage["omr_filtered"], probe)]
+    finally:
+        spark.conf.unset("spark.sql.optimizer.excludedRules")
+    for code in codes:
+        assert "CollationSupport.Lower.execBinary" in code
+        assert "execBinaryICU" not in code
+        assert "CollationAwareUTF8String" not in code
+    assert "CollationSupport.Upper.execBinary" in codes[1]
 
 
 def test_interval_join_windows_reuse_join_exchange(spark):

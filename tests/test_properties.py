@@ -1501,8 +1501,19 @@ def test_ngram_tokenizer_matches_jvm_tokens_on_non_ascii(spark):
     lowers to 'k'). Characters that lower to non-ASCII letters (the
     capital sharp s, Greek with its final sigma, ligatures) drop out
     of both token streams the same way, so any difference there is
-    invisible. No input below tokenizes differently."""
+    invisible. No input below tokenizes differently.
+
+    The same holds between Spark's two case mappings (get_spark picks
+    the JVM's over ICU's). They differ on non-ASCII letters only:
+    case pairs newer than the JDK's Unicode (U+2C2F, U+A7C0) and the
+    final-sigma rule next to case-ignorable or uncased characters
+    (U+00A8, U+00B2). Both lower to non-ASCII, so neither a token nor
+    a keyword match can change; the last two inputs and the
+    keyword_filter check below pin that without asserting either
+    JDK's lower() output."""
     import pandas as pd
+
+    from clinical_data_warehouse_bi_spark.cleanse import keyword_filter
 
     inputs = [
         "\u0130stanbul",          # dotted capital I
@@ -1511,6 +1522,8 @@ def test_ngram_tokenizer_matches_jvm_tokens_on_non_ascii(spark):
         "\u039f\u0394\u039f\u03a3 abc \u03c3\u03b1\u03c2",  # final sigma
         "\ufb01ne \uff21BC",      # fi ligature, fullwidth A
         "plain ASCII 42",
+        "\u2c2f\ua7c0 abc",        # case pairs of Unicode 14
+        "Ab\u00a8\u03a3 x \u00b2\u03a3 y",  # sigma after case-ignorable / uncased
     ]
     df = spark.createDataFrame(list(enumerate(inputs)), "i int, text string")
     jvm = {
@@ -1529,7 +1542,11 @@ def test_ngram_tokenizer_matches_jvm_tokens_on_non_ascii(spark):
         3: ["abc"],
         4: ["ne", "bc"],
         5: ["plain", "ascii", "42"],
+        6: ["abc"],
+        7: ["ab", "x", "y"],
     }
+    kw = spark.createDataFrame([("SODIUM \u00a8\u03a3",)], "s string")
+    assert kw.filter(keyword_filter("s", ["sodium"])).count() == 1
 
 
 # ------------------------------------------------ benford_profile

@@ -310,79 +310,24 @@ def test_release_frees_pipeline_checkpoints(spark):
     assert snapshot_persistent_rdds(spark) - baseline == set()
 
 
-#: each star relation -> the DUCK_PIPELINE table holding the same
-#: relation as the reference's own SQL builds it
-_DUCK_TABLES = {
-    "stage": {
-        "dim_patients": "s_dim_patients",
-        "dim_admissions": "s_dim_admissions",
-        "dim_provider": "s_dim_provider",
-        "dim_concepts": "s_dim_concepts",
-        "omr_filtered": "s_omr_filtered",
-        "dim_date": "s_dim_date",
-        "dim_junk_disorder_event": "s_dim_junk",
-        "fact_disorder_events": "s_fact",
-    },
-    "dwh": {
-        "dim_patients": "d_dim_patients",
-        "dim_admissions": "d_dim_admissions",
-        "dim_provider": "d_dim_provider",
-        "dim_concepts": "d_dim_concepts",
-        "dim_date": "d_dim_date",
-        "dim_junk_disorder_event": "d_dim_junk",
-        "fact_disorder_events": "d_fact",
-        "agg_disorders_per_admission": "d_agg",
-    },
-}
-
-
-def _natural_key_sql(name: str, tables: dict[str, str]) -> str:
-    """``name``'s rows with every surrogate key the two engines assign
-    differently replaced by what it stands for: the dims lose their
-    key, and the fact's concept and provider FKs resolve through the
-    same layer's dims. junk_id stays: both engines number the junk
-    dim with the same ordered row_number."""
-    t = tables[name]
-    if name == "dim_provider":
-        return f"SELECT * EXCLUDE (provider_id) FROM {t}"
-    if name == "dim_concepts":
-        return f"SELECT * EXCLUDE (clinical_concept_id) FROM {t}"
-    if name == "fact_disorder_events":
-        return f"""
-            SELECT f.* EXCLUDE (disorder_event_id, clinical_concept_id, provider_id),
-                   c.concept_type, c.code,
-                   p.patient_id AS p_patient_id, p.admission_id AS p_admission_id,
-                   p.careunit_id AS p_careunit_id, p.intime AS p_intime,
-                   p.outtime AS p_outtime
-            FROM {t} f
-            LEFT JOIN {tables["dim_concepts"]} c USING (clinical_concept_id)
-            LEFT JOIN {tables["dim_provider"]} p USING (provider_id)"""
-    return f"SELECT * FROM {t}"
-
-
-def _comparable(con, sql: str) -> tuple[list[str], str]:
-    """``sql``'s column names, and ``sql`` with its columns sorted and
-    its timestamps cast to UTC wall-clock TIMESTAMPs (Spark's arrive
-    tz-aware, DuckDB's naive)."""
-    cols = sorted(con.execute(f"DESCRIBE {sql}").fetchall())
-    select = ", ".join(
-        f'CAST("{c}" AS TIMESTAMP) AS "{c}"' if ty.startswith("TIMESTAMP") else f'"{c}"'
-        for c, ty, *_ in cols
-    )
-    return [c for c, *_ in cols], f"SELECT {select} FROM ({sql})"
-
-
 def test_star_matches_reference_sql_in_duckdb(pipeline):
     """The reference is SQL (Stage_area.sql / DWH.sql), so its own
     CTAS / UPDATE / DELETE chain run by DuckDB (scripts/ab.py
     DUCK_PIPELINE, all six orphan DELETEs and the dim_date top-up
     included) is the oracle: all 16 stage and DWH relations equal it
     as multisets once each surrogate key is resolved to its natural
-    key (_natural_key_sql). Arrow, not pandas, carries the rows: the
+    key (natural_key_sql). Arrow, not pandas, carries the rows: the
     2999-12-31 sentinel overflows pandas' ns range."""
     import duckdb
 
-    from scripts.ab import DUCK_PIPELINE, SOURCES
+    from scripts.ab import (
+        DUCK_PIPELINE,
+        DUCK_TABLES,
+        SOURCES,
+        comparable,
+        natural_key_sql,
+        star_checksum,
+    )
 
     src, stage, dwh = pipeline
     con = duckdb.connect()
@@ -392,14 +337,14 @@ def test_star_matches_reference_sql_in_duckdb(pipeline):
     con.execute(DUCK_PIPELINE)
 
     for layer, out in (("stage", stage), ("dwh", dwh)):
-        duck_tables = _DUCK_TABLES[layer]
+        duck_tables = DUCK_TABLES[layer]
         spark_tables = {n: f"spark_{t}" for n, t in duck_tables.items()}
         assert set(out) == set(duck_tables)
         for name, t in spark_tables.items():
             con.register(t, out[name].toArrow())
         for name in duck_tables:
-            spark_cols, spark_sql = _comparable(con, _natural_key_sql(name, spark_tables))
-            duck_cols, duck_sql = _comparable(con, _natural_key_sql(name, duck_tables))
+            spark_cols, spark_sql = comparable(con, natural_key_sql(name, spark_tables))
+            duck_cols, duck_sql = comparable(con, natural_key_sql(name, duck_tables))
             assert spark_cols == duck_cols, (layer, name)
             only_spark = con.execute(f"{spark_sql} EXCEPT ALL {duck_sql}").fetchall()
             only_duck = con.execute(f"{duck_sql} EXCEPT ALL {spark_sql}").fetchall()
@@ -408,6 +353,10 @@ def test_star_matches_reference_sql_in_duckdb(pipeline):
                 f"(e.g. {only_spark[:2]}), {len(only_duck)} only in DuckDB "
                 f"(e.g. {only_duck[:2]})"
             )
+    # ab.py's pipeline_star checksum reads the same rows, so it agrees
+    # across the two engines' types
+    spark_dwh = {n: f"spark_{t}" for n, t in DUCK_TABLES["dwh"].items()}
+    assert star_checksum(con, spark_dwh) == star_checksum(con, DUCK_TABLES["dwh"])
     # the DWH fact's keys are dense 1..N over the SURVIVING rows
     n, nd, lo, hi = con.execute(
         "SELECT count(*), count(DISTINCT disorder_event_id),"
