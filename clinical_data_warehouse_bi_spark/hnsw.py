@@ -1,54 +1,37 @@
 """HNSW-class graph ANN: sharded navigable-small-world indexes with
 beam search — the serving-side recall/latency alternative to IVF-PQ
-(similarity.py), added per the round-12 verdict item 8.
+(similarity.py). The reference warehouse has no vector search; this
+module tiers the engine's ANN family the way a production retrieval
+stack does: IVF-PQ for the memory-bounded sweep, a proximity graph
+for high-recall low-latency serving (Malkov & Yashunin 2018,
+"Efficient and robust approximate nearest neighbor search using
+Hierarchical Navigable Small World graphs").
 
-Reference context: the reference warehouse (MariaDB BI SQL) has no
-vector search at all; this module extends the engine's beyond-
-reference ANN family (q_cosine_topk brute force -> q_ann_ivf_pq
-quantized -> THIS, graph-based) the way a production retrieval stack
-tiers them: IVF-PQ for the memory-bounded training-pipeline sweep,
-a proximity graph for high-recall low-latency serving (Malkov &
-Yashunin 2018, "Efficient and robust approximate nearest neighbor
-search using Hierarchical Navigable Small World graphs").
-
-Distributed design — the part that must survive 100 TB:
-
-- **Shard-parallel graphs, not one global graph.** HNSW's insert
-  loop is inherently sequential pointer-chasing; a faithful single
-  graph would serialize on the driver. Instead vectors hash-shard by
-  id and each shard builds its OWN small-world graph inside one
-  ``applyInPandas`` task (numpy GEMM for the k-NN base layer — no
-  Python loops over rows for distance work). Shards build in
-  parallel, and a query fans out to every shard's graph and merges
-  top-k — the standard sharded-HNSW layout (what
-  Vespa/Qdrant/Weaviate do across segments). Searching S
-  shards costs S small beam searches; recall is UNHURT by sharding
-  (each shard's true top-k is a superset contributor to the global
-  top-k candidates).
+- **Shard-parallel graphs, not one global graph.** HNSW's insert loop
+  is sequential pointer-chasing, so each shard builds its OWN graph
+  inside one ``applyInPandas`` task (numpy GEMM for the k-NN base
+  layer, no Python loop over rows for distance work). A query
+  searches each shard's graph and merges top-k, the standard
+  sharded-HNSW layout. Shards are either hash buckets of the id
+  (build_hnsw_index, every query fans out to every shard) or IVF
+  cells (build_routed_hnsw_index, a query probes its nearest cells).
 - **Two layers, HNSW-style.** Each shard keeps an upper layer: a
-  deterministic 1-in-R sample of its nodes with its own k-NN links.
-  Search greedy-descends the upper layer first (cheap: |shard|/R
-  nodes) to pick entry points for the base-layer beam — the
-  hierarchy's whole job in HNSW. More layers are a constant-factor
-  refinement; two suffice to make entry selection O(sqrt-ish) and
-  are honest to name "HNSW-class".
+  deterministic 1-in-UPPER_EVERY sample of its nodes with its own
+  k-NN links. Search greedy-descends it to pick entry points for the
+  base-layer beam — the hierarchy's whole job in HNSW.
 - **Persisted, atomically published.** The graph is parquet
-  partitioned by shard (vec_id, embedding, neighbors, layer) plus a
-  meta JSON written last (complete-iff-present marker), built once
-  and published through io.cached_index — the exact contract of the
-  BM25 and IVF-PQ indexes (lost race discarded, corrupt leftover
-  healed).
+  partitioned by shard plus a meta JSON written last
+  (complete-iff-present), published through io.cached_index like
+  the BM25 and IVF-PQ indexes.
 - **Budget accounting.** Every search reports distance evaluations
-  (``n_evals``), the currency recall-vs-cost comparisons use; the
-  property tests pin recall at EQUAL probe budget against IVF-PQ's
-  shortlist size and against a random-scan baseline.
+  (``n_evals``); the property tests pin recall at EQUAL budget
+  against a random-scan baseline.
 
-Build cost: the per-shard base layer here is an exact k-NN graph via
-one GEMM (O(n_s^2) per shard) — the right trade while shards are
-bounded (<=a few 10k vectors: one task, vectorized, no shuffle). At
-web scale the same layout swaps the exact per-shard k-NN for
-incremental NSW insertion inside the same task without changing the
-on-disk format or the search path; the format is the contract.
+Build cost: the per-shard base layer is an exact k-NN graph, one
+blockwise GEMM (O(n_s^2) per shard), which is the right trade while
+shards stay under MAX_SHARD_ROWS. At web scale an incremental NSW
+inserter can replace it inside the same task without changing the
+on-disk format or the search path.
 """
 
 from __future__ import annotations
@@ -60,6 +43,11 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from clinical_data_warehouse_bi_spark.similarity import (
+    rank_centroids,
+    sampled_kmeans_centroids,
+)
 
 HNSW_INDEX_META = "_hnsw_meta.json"
 #: bump when the on-disk layout changes (retrieval.BM25_FORMAT_VERSION
@@ -152,6 +140,10 @@ def _with_long_links(base: list[np.ndarray], n: int) -> list[np.ndarray]:
 #: the same task instead.
 MAX_SHARD_ROWS = 50_000
 
+#: one node in UPPER_EVERY (vec_id % UPPER_EVERY == 0) joins a shard's
+#: upper layer; written to every index meta
+UPPER_EVERY = 16
+
 
 def _make_shard_builder(m: int, upper_every: int, vec_col: str):
     """The per-shard graph construction as an applyInPandas
@@ -162,8 +154,9 @@ def _make_shard_builder(m: int, upper_every: int, vec_col: str):
             raise ValueError(
                 f"hnsw shard has {len(pdf)} rows > MAX_SHARD_ROWS="
                 f"{MAX_SHARD_ROWS}: the exact per-shard k-NN build is "
-                "an n^2 GEMM — raise n_shards so shards stay bounded "
-                "(rows / MAX_SHARD_ROWS shards minimum)"
+                "an n^2 GEMM — raise n_shards (hash-sharded index) or "
+                "n_clusters (routed index, shard = cell) so shards stay "
+                "bounded (rows / MAX_SHARD_ROWS shards minimum)"
             )
         if pdf.empty:
             return pd.DataFrame(
@@ -207,7 +200,7 @@ def build_graph(
     vectors: DataFrame,
     n_shards: int = 8,
     m: int = 12,
-    upper_every: int = 16,
+    upper_every: int = UPPER_EVERY,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
@@ -231,6 +224,30 @@ def build_graph(
     )
 
 
+def _write_index(graph: DataFrame, path: str, meta: dict) -> dict:
+    """Write ``graph`` as parquet PARTITIONED BY shard, then the meta
+    JSON last (the complete-iff-present marker). Writes in place; the
+    registered queries build through io.cached_index, which publishes
+    the directory atomically."""
+    graph.write.mode("overwrite").partitionBy("shard").parquet(path)
+    meta = {"format_version": HNSW_FORMAT_VERSION, **meta}
+    with open(os.path.join(path, HNSW_INDEX_META), "w") as f:
+        json.dump(meta, f)
+    return meta
+
+
+def _load_meta(path: str) -> dict:
+    """A persisted index's meta; a stale format refuses to serve."""
+    with open(os.path.join(path, HNSW_INDEX_META)) as f:
+        meta = json.load(f)
+    if meta.get("format_version") != HNSW_FORMAT_VERSION:
+        raise ValueError(
+            f"hnsw index format {meta.get('format_version')} != "
+            f"{HNSW_FORMAT_VERSION} at {path}"
+        )
+    return meta
+
+
 def build_hnsw_index(
     vectors: DataFrame,
     path: str,
@@ -239,23 +256,14 @@ def build_hnsw_index(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> dict:
-    """Persist the graph as parquet PARTITIONED BY shard plus a meta
-    JSON written last (complete-iff-present marker). Writes in place;
-    the registered query builds it through io.cached_index, which
-    publishes the directory atomically."""
+    """Persist the hash-sharded graph (build_graph) through
+    _write_index."""
     g = build_graph(
         vectors, n_shards=n_shards, m=m, vec_col=vec_col, id_col=id_col
     )
-    g.write.mode("overwrite").partitionBy("shard").parquet(path)
-    meta = {
-        "format_version": HNSW_FORMAT_VERSION,
-        "n_shards": n_shards,
-        "m": m,
-        "upper_every": 16,
-    }
-    with open(os.path.join(path, HNSW_INDEX_META), "w") as f:
-        json.dump(meta, f)
-    return meta
+    return _write_index(
+        g, path, {"n_shards": n_shards, "m": m, "upper_every": UPPER_EVERY}
+    )
 
 
 def _beam_search_one(
@@ -356,12 +364,9 @@ def shard_search(
     are rounded to 6 decimals (float32 storage; GEMM order is
     engine-noise at the last bits).
 
-    ``queries_by_shard`` (the routed tier, round-13 verdict item 3):
-    shard id -> positions into ``queries`` that shard should serve.
-    A shard absent from the dict searches nothing — per-query work
-    drops from O(all shards) to O(routed shards); pair with a scan
-    filter on the routed shard set so pruned shards are not even
-    read."""
+    ``queries_by_shard`` (the routed tier, route_queries' output):
+    shard id -> positions into ``queries`` that shard serves; a shard
+    absent from the dict searches nothing."""
     if not queries:
         raise ValueError("queries must be non-empty")
     # the beam bounds the result set: a beam smaller than k would
@@ -454,14 +459,7 @@ def hnsw_index_search(
     operational twin of search_graph): meta is the
     complete-iff-present marker, the scan reads the shard-partitioned
     parquet, and the search path is identical."""
-    meta_path = os.path.join(path, HNSW_INDEX_META)
-    with open(meta_path) as f:
-        meta = json.load(f)
-    if meta.get("format_version") != HNSW_FORMAT_VERSION:
-        raise ValueError(
-            f"hnsw index format {meta.get('format_version')} != "
-            f"{HNSW_FORMAT_VERSION} at {path}"
-        )
+    _load_meta(path)
     graph = spark.read.parquet(path)
     return search_graph(graph, queries, k, beam=beam)
 
@@ -471,149 +469,72 @@ def hnsw_index_search(
 # search_graph fans every query out to EVERY shard, so query cost is
 # O(n_shards) — linear in corpus size at fixed MAX_SHARD_ROWS (a
 # 10^9-vector corpus at 50k rows/shard is >=20k beam searches per
-# query). The routed tier makes shard assignment CLUSTER-AWARE (the
-# IVF trick already serving similarity.py's coarse quantizer): shards
-# are k-means cells (optionally hash-sub-sharded to respect the GEMM
-# bound), the cell centroids live in the index meta, and a query
-# probes only its top-``probe_clusters`` cells — per-query cost is
-# O(probed fraction of the corpus), sublinear in total shard count,
-# while the per-shard graph format, builder, and beam search stay
-# byte-identical to the hash-sharded tier.
-
-
-def _default_cell_shards(
-    n_clusters: int, sub_shards: int
-) -> dict[int, list[int]]:
-    """The dense cell -> shard-id mapping a fresh routed build uses:
-    cell c owns [c*sub_shards, (c+1)*sub_shards). The mapping is
-    persisted in the index meta and read back."""
-    return {
-        c: list(range(c * sub_shards, (c + 1) * sub_shards))
-        for c in range(n_clusters)
-    }
-
-
-def _meta_cell_shards(meta: dict) -> dict[int, list[int]]:
-    """cell -> shard ids from a routed index's meta; pre-skew-guard
-    indexes (no ``cell_shards`` key) fall back to the dense layout
-    derived from n_clusters/sub_shards they were built with."""
-    if "cell_shards" in meta:
-        return {int(c): [int(s) for s in ss] for c, ss in meta["cell_shards"]}
-    return _default_cell_shards(
-        int(meta["n_clusters"]), int(meta.get("sub_shards", 1))
-    )
-
-
-def _assign_clusters(
-    base: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    cell_shards: dict[int, list[int]],
-) -> DataFrame:
-    """(shard, vec_id, embedding) with shard = the row's nearest-
-    centroid cell's sub-shard picked by id hash (crc32(id) %
-    len(cell_shards[cell])): ONE broadcast-GEMM Arrow pass (the
-    centroid_rank kernel, embedding kept in the output so no join
-    back), no exchange until the caller's groupBy(shard)."""
-    from typing import Iterator
-
-    cids = np.array(sorted(cell_shards), dtype=np.int64)
-    cent_of = dict(centroids)
-    cmat = np.array([cent_of[int(c)] for c in cids], dtype=np.float64)
-    csq = np.einsum("ij,ij->i", cmat, cmat)
-    shard_lists = {int(c): np.asarray(ss, dtype=np.int32)
-                   for c, ss in cell_shards.items()}
-
-    def op(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            mat = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            # |x - c|^2 ranking needs only |c|^2 - 2 x.c (|x|^2 is
-            # constant per row); round like centroid_rank so the
-            # assignment is the same one the IVF tier would make
-            d2 = np.round(csq[None, :] - 2.0 * (mat @ cmat.T), 6)
-            # lexsort tiebreak on cid, matching centroid_rank
-            order = np.lexsort((np.broadcast_to(cids, d2.shape), d2), axis=1)
-            cluster = cids[order[:, 0]]
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            hashes = np.array(
-                [_crc32_int(str(i)) for i in ids], dtype=np.int64
-            )
-            shard = np.empty(len(ids), dtype=np.int32)
-            for i, c in enumerate(cluster):
-                ss = shard_lists[int(c)]
-                shard[i] = ss[hashes[i] % len(ss)]
-            yield pd.DataFrame(
-                {
-                    "shard": shard,
-                    "vec_id": ids,
-                    "embedding": pdf["embedding"],
-                }
-            )
-
-    return base.mapInPandas(
-        op, "shard int, vec_id bigint, embedding array<float>"
-    )
-
-
-def _crc32_int(s: str) -> int:
-    """CRC32 of the id string — the same sub-shard hash family the
-    hash tier uses (F.crc32), computed worker-side in the Arrow
-    batch."""
-    import zlib
-
-    return zlib.crc32(s.encode())
+# query). The routed tier is the IVF layout with a graph inside each
+# cell: shard = k-means cell id, assigned by similarity.rank_centroids
+# (the coarse quantizer IVF and IVF-PQ rank with), the centroids live
+# in the index meta, and a query probes only its top-``probe_clusters``
+# cells ranked by the same kernel — per-query cost is O(probed
+# fraction of the corpus), sublinear in total shard count, while the
+# per-shard graph format, builder and beam search are the hash tier's.
+# A cell past MAX_SHARD_ROWS fails the build loudly; more n_clusters
+# is the fix.
 
 
 def build_routed_hnsw_index(
     vectors: DataFrame,
     path: str,
     n_clusters: int = 8,
-    sub_shards: int = 1,
     m: int = 12,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> dict:
-    """Persist a ROUTED graph index: shard = k-means cell (trained on
-    a bounded sample, similarity.sampled_kmeans_centroids) x optional
-    hash sub-shard, centroids stored in the meta so searches can rank
-    cells driver-side. ``sub_shards > 1`` splits each cell by id hash
-    when a cell would exceed MAX_SHARD_ROWS (the shard builder still
-    fails loudly if one does — raise sub_shards or n_clusters).
-    Same GRAPH_SCHEMA, same shard builder, same meta-written-last
-    commit marker as build_hnsw_index."""
-    if n_clusters < 1 or sub_shards < 1:
-        raise ValueError("n_clusters >= 1 and sub_shards >= 1")
-    from clinical_data_warehouse_bi_spark.similarity import (
-        sampled_kmeans_centroids,
-    )
-
+    """Persist a ROUTED graph index: k-means centroids trained on a
+    bounded sample (similarity.sampled_kmeans_centroids), every row
+    sent to its rank-1 cell by one mapInPandas pass that keeps the
+    embedding (no join back, no exchange before the builder's
+    groupBy(shard)), one graph per cell, and the centroids stored in
+    the meta so searches rank cells driver-side. Same GRAPH_SCHEMA,
+    shard builder and meta-written-last marker as build_hnsw_index."""
+    if n_clusters < 1:
+        raise ValueError("n_clusters >= 1")
     base = vectors.select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
     )
     centroids = sampled_kmeans_centroids(base, n_clusters, seed=7)
-    cell_shards = _default_cell_shards(n_clusters, sub_shards)
-    sharded = _assign_clusters(base, centroids, cell_shards)
-    g = sharded.groupBy("shard").applyInPandas(
-        _make_shard_builder(m, 16, "embedding"), GRAPH_SCHEMA
+
+    def assign(batches):
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            cells = rank_centroids(
+                pdf["embedding"].tolist(), centroids, 1, "euclidean"
+            )
+            pdf.insert(0, "shard", cells[:, 0].astype(np.int32))
+            yield pdf
+
+    g = (
+        base.mapInPandas(
+            assign, "shard int, vec_id bigint, embedding array<float>"
+        )
+        .groupBy("shard")
+        .applyInPandas(
+            _make_shard_builder(m, UPPER_EVERY, "embedding"), GRAPH_SCHEMA
+        )
     )
-    g.write.mode("overwrite").partitionBy("shard").parquet(path)
-    meta = {
-        "format_version": HNSW_FORMAT_VERSION,
-        "kind": "routed",
-        "n_shards": n_clusters * sub_shards,
-        "n_clusters": n_clusters,
-        "sub_shards": sub_shards,
-        "m": m,
-        "upper_every": 16,
-        "centroids": [
-            [int(c), [float(x) for x in v]] for c, v in centroids
-        ],
-        "cell_shards": [[c, ss] for c, ss in sorted(cell_shards.items())],
-    }
-    with open(os.path.join(path, HNSW_INDEX_META), "w") as f:
-        json.dump(meta, f)
-    return meta
+    return _write_index(
+        g,
+        path,
+        {
+            "kind": "routed",
+            "n_shards": n_clusters,
+            "n_clusters": n_clusters,  # format-1 readers map cells by it
+            "m": m,
+            "upper_every": UPPER_EVERY,
+            "centroids": [
+                [int(c), [float(x) for x in v]] for c, v in centroids
+            ],
+        },
+    )
 
 
 def route_queries(
@@ -621,33 +542,24 @@ def route_queries(
     queries: list[tuple[int, list[float]]],
     probe_clusters: int,
 ) -> dict[int, list[int]]:
-    """shard -> positions into ``queries``: each query ranks the meta
-    centroids by euclidean distance (the assignment metric) and
-    probes every sub-shard of its top-``probe_clusters`` cells (the
-    meta's persisted cell_shards mapping). Driver-side numpy
-    over a bounded query list — the IVF probe-selection pattern
-    (similarity.search_ivf_pq_index)."""
+    """cell (= shard) -> positions into ``queries``: each query's top-
+    ``probe_clusters`` cells, ranked against the meta centroids by
+    similarity.rank_centroids under the euclidean metric the rows were
+    assigned with."""
     if probe_clusters < 1:
         raise ValueError(
             f"probe_clusters={probe_clusters} < 1 would rout every "
             "query to zero shards (empty results with no error) — "
             "probe at least one cell"
         )
-    cents = meta["centroids"]
-    cids = np.array([c for c, _ in cents], dtype=np.int64)
-    cmat = np.array([v for _, v in cents], dtype=np.float64)
-    cell_shards = _meta_cell_shards(meta)
-    p = min(probe_clusters, len(cids))
+    cells = rank_centroids(
+        [v for _, v in queries], meta["centroids"], probe_clusters,
+        "euclidean",
+    )
     out: dict[int, list[int]] = {}
-    for pos, (_, qv) in enumerate(queries):
-        q = np.asarray(qv, dtype=np.float64)
-        d2 = np.round(
-            np.einsum("ij,ij->i", cmat, cmat) - 2.0 * (cmat @ q), 6
-        )
-        order = np.lexsort((cids, d2))[:p]
-        for c in cids[order]:
-            for s in cell_shards[int(c)]:
-                out.setdefault(s, []).append(pos)
+    for pos, row in enumerate(cells):
+        for c in row:
+            out.setdefault(int(c), []).append(pos)
     return out
 
 
@@ -659,24 +571,14 @@ def hnsw_routed_search(
     beam: int = 32,
     probe_clusters: int = 2,
 ) -> DataFrame:
-    """Serve queries from a ROUTED persisted index: rank cells
-    driver-side against the meta centroids, scan ONLY the routed
-    shard= directories (partition pruning — unprobed cells are never
-    read), and beam-search each shard for its routed queries only.
-    Per-query cost: probe_clusters cells' worth of graph, regardless
-    of how many cells the corpus has — the sublinear serving path
-    search_graph's full fan-out lacks. Recall is bounded by routing
-    (a true neighbor in an unprobed cell is unreachable), the
-    standard IVF trade dialed by ``probe_clusters``; the recall
-    property test pins >=0.85 at a 25% probe fraction on clustered
-    data."""
-    with open(os.path.join(path, HNSW_INDEX_META)) as f:
-        meta = json.load(f)
-    if meta.get("format_version") != HNSW_FORMAT_VERSION:
-        raise ValueError(
-            f"hnsw index format {meta.get('format_version')} != "
-            f"{HNSW_FORMAT_VERSION} at {path}"
-        )
+    """Serve queries from a ROUTED persisted index: route_queries
+    picks each query's cells, the scan reads ONLY those shard=
+    directories (partition pruning), and each shard beam-searches its
+    routed queries only. Per-query cost is probe_clusters cells of
+    graph however many cells the corpus has; recall is bounded by
+    routing (a true neighbor in an unprobed cell is unreachable), the
+    standard IVF trade dialed by ``probe_clusters``."""
+    meta = _load_meta(path)
     if meta.get("kind") != "routed":
         raise ValueError(
             f"index at {path} is not a routed index — build it with "

@@ -68,14 +68,13 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     worst bench ratio) with per-batch BLAS; the DuckDB oracle is
     unchanged, so the hash gate proves GEMM == fold numerics after
     round(6)/round(4)."""
-    from clinical_data_warehouse_bi_spark.similarity import cosine_topk_numpy
+    from clinical_data_warehouse_bi_spark.similarity import (
+        cosine_topk_numpy,
+        query_vectors,
+    )
 
     emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    queries = [
-        (r["vec_id"], list(r["embedding"]))
-        for r in emb.filter(F.col("vec_id") < N_QUERIES).collect()
-    ]
-    return cosine_topk_numpy(emb, queries, k=TOP_K)
+    return cosine_topk_numpy(emb, query_vectors(emb, N_QUERIES), k=TOP_K)
 
 
 #: probe the NPROBE nearest centroid buckets per query (the standard
@@ -127,9 +126,9 @@ def q_ann_ivf_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket, so probing distinct buckets never duplicates a candidate).
 
     It is similarity.ivf_search over the first {N_CENTROIDS} vectors
-    as centroids, bucketed by cosine: centroid assignment is one
-    matrix multiply per scan batch against the broadcast centroid
-    matrix (similarity.centroid_rank) — replacing a crossJoin + 64-step
+    as centroids, bucketed by cosine: centroid ranking is one matrix
+    multiply per scan batch against the broadcast centroid matrix
+    (similarity.centroid_rank over rank_centroids) — replacing a crossJoin + 64-step
     scalar fold + row_number window — and candidate scoring is a
     row-wise einsum over the joined pairs. The unchanged DuckDB oracle
     hash-checks the GEMM numerics end-to-end.
@@ -143,15 +142,12 @@ def q_ann_ivf_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL_ANN_IVF_NPROBE, and tests/test_similarity_engine.py checks
     that nprobe=2 is never worse than the single-probe oracle. Kept
     unregistered as the raw-vector IVF API."""
-    from clinical_data_warehouse_bi_spark.similarity import ivf_search
+    from clinical_data_warehouse_bi_spark.similarity import ivf_search, query_vectors
 
     emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    centroids = [
-        (r["vec_id"], list(r["embedding"]))
-        for r in emb.filter(F.col("vec_id") < N_CENTROIDS).collect()
-    ]
     return ivf_search(
-        emb, centroids, n_queries=N_QUERIES, nprobe=NPROBE, topk=5, metric="cosine"
+        emb, query_vectors(emb, N_CENTROIDS), n_queries=N_QUERIES,
+        nprobe=NPROBE, topk=5, metric="cosine",
     )
 
 
@@ -530,16 +526,13 @@ HNSW_BEAM = 32
 
 @register("q_ann_hnsw", oracle=None)
 def q_ann_hnsw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HNSW-class graph ANN served FROM a persisted sharded
-    small-world index (hnsw.build_hnsw_index + hnsw_index_search) —
-    the high-recall serving-side alternative to IVF-PQ the round-12
-    verdict named (item 8), registered so the graph index's on-disk
-    contract sits under the driver's gate next to q_ann_ivf_pq_served
-    and q_bm25_served: shard=-partitioned parquet adjacency + vectors,
-    meta JSON committed last (complete-iff-present), atomic publish
-    with lost-race discard, per-shard beam search fanned out as ONE
-    vectorized task per shard, global (query_id) top-k merge as the
-    only post-scan exchange.
+    """HNSW-class graph ANN served FROM a persisted hash-sharded
+    small-world index (hnsw.build_hnsw_index + hnsw_index_search), the
+    high-recall serving alternative to IVF-PQ, under the driver's gate
+    next to q_ann_ivf_pq_served and q_bm25_served: shard=-partitioned
+    parquet adjacency + vectors, meta JSON committed last, atomic
+    publish, ONE beam-search task per shard for all queries, and a
+    global (query_id) top-k merge as the only post-scan exchange.
 
     No SQL oracle BY DESIGN (the q_ann_ivf_pq convention): beam
     search over a k-NN graph is an iterative traversal no portable
@@ -554,6 +547,7 @@ def q_ann_hnsw(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_hnsw_index,
         hnsw_index_search,
     )
+    from clinical_data_warehouse_bi_spark.similarity import query_vectors
 
     emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
     path = io.cached_index(
@@ -563,11 +557,9 @@ def q_ann_hnsw(spark: SparkSession, sf_dir: str) -> DataFrame:
         HNSW_INDEX_META,
         lambda d: build_hnsw_index(emb, d, n_shards=HNSW_SHARDS, m=HNSW_M),
     )
-    queries = [
-        (r["vec_id"], list(r["embedding"]))
-        for r in emb.filter(F.col("vec_id") < N_QUERIES).collect()
-    ]
-    return hnsw_index_search(spark, path, queries, k=5, beam=HNSW_BEAM)
+    return hnsw_index_search(
+        spark, path, query_vectors(emb, N_QUERIES), k=5, beam=HNSW_BEAM
+    )
 
 
 #: routed tier geometry: 8 cells so the 2-cell probe is a 25% scan
@@ -576,23 +568,23 @@ HNSW_PROBE_CLUSTERS = 2
 
 
 def q_ann_hnsw_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Graph ANN served through the ROUTED tier (round-13 verdict
-    item 3; hnsw.build_routed_hnsw_index + hnsw_routed_search):
-    shards are k-means cells with centroids in the index meta, each
-    query probes its top-2 of 8 cells — a partition-pruned scan of
-    25% of the shard= directories and per-shard beam search
-    restricted to the routed queries, the sublinear serving path the
-    full fan-out (q_ann_hnsw) lacks at large shard counts. Bench-only
-    (not a gate slot): the routing contract is property-tested in
-    tests/test_hnsw.py (recall >= 0.85 at the 25% probe fraction,
-    strictly fewer distance evals than fan-out); this entry records
-    the serving-latency number next to q_ann_hnsw's."""
+    """Graph ANN served through the ROUTED tier
+    (hnsw.build_routed_hnsw_index + hnsw_routed_search): the IVF
+    layout with a graph per cell. Shard = k-means cell; rows are
+    assigned and queries routed by IVF's own coarse quantizer
+    (similarity.rank_centroids), with the centroids in the index meta.
+    Each query probes its top-2 of 8 cells: a partition-pruned scan
+    of 25% of the shard= directories, the sublinear serving path the
+    full fan-out (q_ann_hnsw) lacks at large shard counts. Bench-only:
+    tests/test_hnsw.py pins recall >= 0.85 at the 25% probe fraction
+    and fewer distance evals than fan-out."""
     from clinical_data_warehouse_bi_spark.hnsw import (
         HNSW_FORMAT_VERSION,
         HNSW_INDEX_META,
         build_routed_hnsw_index,
         hnsw_routed_search,
     )
+    from clinical_data_warehouse_bi_spark.similarity import query_vectors
 
     emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
     path = io.cached_index(
@@ -604,11 +596,7 @@ def q_ann_hnsw_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
             emb, d, n_clusters=HNSW_ROUTED_CLUSTERS, m=HNSW_M
         ),
     )
-    queries = [
-        (r["vec_id"], list(r["embedding"]))
-        for r in emb.filter(F.col("vec_id") < N_QUERIES).collect()
-    ]
     return hnsw_routed_search(
-        spark, path, queries, k=5, beam=HNSW_BEAM,
+        spark, path, query_vectors(emb, N_QUERIES), k=5, beam=HNSW_BEAM,
         probe_clusters=HNSW_PROBE_CLUSTERS,
     )

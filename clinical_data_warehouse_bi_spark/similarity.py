@@ -16,6 +16,8 @@ partial top-k, and a final tiny reduce merges k rows per query.
 
 from __future__ import annotations
 
+import json
+import os
 from typing import Iterator
 
 import numpy as np
@@ -204,60 +206,60 @@ def sign_lsh_bands(
     )
 
 
+def rank_centroids(
+    vectors: list, centroids: list[tuple[int, list[float]]], max_rank: int,
+    metric: str,
+) -> np.ndarray:
+    """The engine's one coarse quantizer: the ``max_rank`` best
+    centroid ids of each of N ``vectors``, best first (N x max_rank).
+    One GEMM, then one row-wise lexsort under (round(score, 6), cid
+    asc), the total order the SQL form uses. IVF assignment and
+    probes, IVF-PQ probes and the routed HNSW tier's cells all rank
+    here. ``metric``: "cosine" (descending, the oracle-checked form)
+    or "euclidean" (ascending distance, k-means' own assignment rule,
+    so probes of learned centroids agree with the bucketing)."""
+    cids = np.array([c for c, _ in centroids], dtype=np.int64)
+    cmat = np.array([v for _, v in centroids], dtype=np.float64)
+    mat = np.array(vectors, dtype=np.float64)
+    dots = mat @ cmat.T  # N x C — the one GEMM either way
+    if metric == "cosine":
+        # descending cosine -> negate for the ascending sort
+        norms = np.outer(np.linalg.norm(mat, axis=1), np.linalg.norm(cmat, axis=1))
+        score = -np.round(dots / norms, 6)
+    else:
+        # |x - c|^2 = |x|^2 - 2 x.c + |c|^2; |x|^2 is constant per row
+        # so the ranking needs only |c|^2 - 2 x.c
+        csq = np.einsum("ij,ij->i", cmat, cmat)
+        score = np.round(csq[None, :] - 2.0 * dots, 6)
+    order = np.lexsort((np.broadcast_to(cids, score.shape), score), axis=1)
+    return cids[order[:, :max_rank]]
+
+
 def centroid_rank(
     vectors: DataFrame,
     centroids: list[tuple[int, list[float]]],
     max_rank: int,
     metric: str = "cosine",
 ) -> DataFrame:
-    """(vec_id, cid, rn): each vector's centroids ranked by the given
-    metric — rn=1 is the IVF bucket assignment, rn<=nprobe the probe
-    set. One GEMM against the broadcast centroid matrix per Arrow
-    batch replaces a crossJoin + scalar-fold + window (the window's
-    shuffle disappears: ranking happens inside the batch).
-    Deterministic order: (round(score, 6) best-first, cid asc), the
-    same total order the SQL form uses.
-
-    ``metric``: "cosine" (descending, the oracle-checked form) or
-    "euclidean" (ascending distance — matching MLlib KMeans's own
-    assignment rule, so probing learned centroids agrees with the
-    index's bucketing)."""
+    """(vec_id, cid, rn): each vector's centroids ranked by
+    rank_centroids — rn=1 is the IVF bucket assignment, rn<=nprobe the
+    probe set. One broadcast-GEMM Arrow pass replaces a crossJoin +
+    scalar-fold + window (the window's shuffle disappears: ranking
+    happens inside the batch)."""
     if metric not in ("cosine", "euclidean"):
         raise ValueError(f"unknown metric: {metric!r}")
-    cids = np.array([c[0] for c in centroids], dtype=np.int64)
-    cmat = np.array([c[1] for c in centroids], dtype=np.float64)
-    cnorm = np.linalg.norm(cmat, axis=1)
-    csq = np.einsum("ij,ij->i", cmat, cmat)
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if pdf.empty:
                 continue
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            mat = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            dots = mat @ cmat.T  # N x C — the one GEMM either way
-            if metric == "cosine":
-                # descending cosine -> negate for the ascending sort
-                score = -np.round(
-                    dots / np.outer(np.linalg.norm(mat, axis=1), cnorm), 6
-                )
-            else:
-                # |x - c|^2 = |x|^2 - 2 x.c + |c|^2; |x|^2 is constant
-                # per row so the ranking needs only |c|^2 - 2 x.c
-                score = np.round(csq[None, :] - 2.0 * dots, 6)
-            out = []
-            for i in range(len(ids)):
-                order = np.lexsort((cids, score[i]))[:max_rank]
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "vec_id": ids[i],
-                            "cid": cids[order],
-                            "rn": np.arange(1, len(order) + 1),
-                        }
-                    )
-                )
-            yield pd.concat(out, ignore_index=True)
+            top = rank_centroids(pdf["embedding"].tolist(), centroids, max_rank, metric)
+            n, r = top.shape
+            yield pd.DataFrame({
+                "vec_id": np.repeat(pdf["vec_id"].to_numpy(dtype=np.int64), r),
+                "cid": top.ravel(),
+                "rn": np.tile(np.arange(1, r + 1), n),
+            })
 
     return vectors.select("vec_id", "embedding").mapInPandas(
         op, "vec_id long, cid long, rn int"
@@ -506,7 +508,7 @@ def pq_encode(vectors: DataFrame, codebooks: list[list[list[float]]]) -> DataFra
     )
 
 
-def _query_vectors(vectors: DataFrame, n_queries: int) -> list[tuple[int, list]]:
+def query_vectors(vectors: DataFrame, n_queries: int) -> list[tuple[int, list]]:
     """The first ``n_queries`` vectors, collected driver-side in id
     order — bounded, like every query-side structure here."""
     rows = vectors.filter(F.col("vec_id") < n_queries).select("vec_id", "embedding")
@@ -584,7 +586,7 @@ def ivf_pq_search(
 
     Queries are the table's first ``n_queries`` vectors (the engine's
     demo convention), collected driver-side to build the LUTs."""
-    tables = _adc_tables(_query_vectors(vectors, n_queries), codebooks)
+    tables = _adc_tables(query_vectors(vectors, n_queries), codebooks)
     codes = pq_encode(vectors, codebooks).withColumnRenamed("vec_id", "nid")
     cand = _ivf_candidates(vectors, centroids, n_queries, nprobe, "euclidean")
     short = _adc_shortlist(cand.join(codes, "nid"), tables, shortlist)
@@ -623,9 +625,6 @@ def build_ivf_pq_index(
     Metadata (centroids + codebooks, a few KB) lands as JSON inside
     the directory, written AFTER the postings commit so a complete
     meta file implies complete postings. Returns the metadata dict."""
-    import json
-    import os
-
     centroids = sampled_kmeans_centroids(vectors, n_clusters, seed=seed)
     codebooks = train_pq_codebooks(vectors, m=m, seed=seed)
     assign = centroid_rank(
@@ -645,18 +644,6 @@ def build_ivf_pq_index(
     return meta
 
 
-def load_ivf_pq_index(path: str) -> dict:
-    """Read a persisted index's metadata (the complete-iff-present
-    commit marker build_ivf_pq_index documents)."""
-    import json
-    import os
-
-    with open(os.path.join(path, INDEX_META)) as f:
-        meta = json.load(f)
-    meta["centroids"] = [(int(c), list(v)) for c, v in meta["centroids"]]
-    return meta
-
-
 def search_ivf_pq_index(
     spark,
     path: str,
@@ -666,25 +653,23 @@ def search_ivf_pq_index(
     shortlist: int = 50,
     topk: int = 5,
 ) -> DataFrame:
-    """Serve ANN queries FROM the persisted index: probe selection is
-    driver-side numpy against the loaded centroids (queries are
-    bounded); the postings scan filters to the probed buckets, which
+    """Serve ANN queries FROM the persisted index: probe selection
+    ranks the loaded centroids driver-side (queries are bounded) with
+    rank_centroids, the rule the buckets were assigned with; the
+    postings scan filters to the probed buckets, which
     Catalyst turns into PARTITION PRUNING on the bucket= directories
     (plan-tested) — the scan reads ~nprobe/n_clusters of the index
     regardless of corpus size; ADC LUT-sums score the packed codes
     per Arrow batch; only the per-query shortlist pays exact cosine
     against the float vector table (semi-joined by id). No training,
     no full-index pass, no shuffle of anything corpus-sized."""
-    meta = load_ivf_pq_index(path)
-    cmat = np.array([v for _, v in meta["centroids"]], dtype=np.float64)
-    cids = np.array([c for c, _ in meta["centroids"]], dtype=np.int64)
-    queries = _query_vectors(vectors, n_queries)
-    probe_rows = []
-    for qid, qv in queries:
-        d2 = np.sum((cmat - np.asarray(qv, dtype=np.float64)) ** 2, axis=1)
-        top = np.argsort(d2, kind="stable")[:nprobe]
-        probe_rows += [(int(qid), int(cids[i])) for i in top]
-
+    with open(os.path.join(path, INDEX_META)) as f:
+        meta = json.load(f)  # the complete-iff-present commit marker
+    queries = query_vectors(vectors, n_queries)
+    top = rank_centroids(
+        [v for _, v in queries], meta["centroids"], nprobe, "euclidean"
+    )
+    probe_rows = [(qid, int(c)) for (qid, _), cs in zip(queries, top) for c in cs]
     buckets = sorted({b for _, b in probe_rows})
     probes = local_frame(spark, probe_rows, "qid long, bucket int")
     postings = spark.read.parquet(path).filter(F.col("bucket").isin(buckets))

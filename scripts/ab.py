@@ -853,8 +853,11 @@ def _call(conn, cmd: str, name: str | None = None) -> dict:
 
 
 def _report(c: dict, first: dict) -> None:
-    """Summarize a cell (best, median and IQR of each run field) and
-    print it; a later cell counts the pairs it beat the first in."""
+    """Summarize a cell (best, median and IQR of each run field, and
+    the median wall of its first and second half of runs) and print
+    it; a cell whose second half is faster than its first by more than
+    its wall IQR is flagged warming (not at steady state). A later
+    cell counts the pairs it beat the first in."""
     head = f"{c['query']:28s} {c['arm']:16s}"
     if "error" in c:
         print(f"{head} ERROR {c['error'].strip().splitlines()[-1]}", file=sys.stderr)
@@ -865,11 +868,17 @@ def _report(c: dict, first: dict) -> None:
         q = statistics.quantiles(xs, n=4, method="inclusive") if len(xs) > 1 else xs * 3
         s[k] = {"best": xs[0], "median": statistics.median(xs), "iqr": q[2] - q[0]}
     w, cpu = s["wall_s"], s["cpu_s"]
+    half, drift = len(c["runs"]) // 2, ""
+    if half:
+        walls = [r["wall_s"] for r in c["runs"]]
+        h1, h2 = statistics.median(walls[:half]), statistics.median(walls[-half:])
+        s["halves"] = {"first_s": h1, "second_s": h2, "warming": h1 - h2 > w["iqr"]}
+        drift = f" | halves {h1:.3f}/{h2:.3f}" + (" WARMING" if s["halves"]["warming"] else "")
     line = (f"{head} wall best {w['best']:.3f} med {w['median']:.3f} iqr {w['iqr']:.3f}"
             f" | no-steal {s['wall_ns_s']['median']:.3f} | cpu {cpu['median']:.2f}"
             f" iqr {cpu['iqr']:.2f} py {s['py_cpu_s']['median']:.2f}"
             f" tasks {s['tasks']['median']:.0f} shuffle {s['shuffle_mb']['median']:.1f}MB"
-            f" spill {s['spill_mb']['median']:.1f}MB | {c['checksum']}")
+            f" spill {s['spill_mb']['median']:.1f}MB | {c['checksum']}{drift}")
     if c is not first and first.get("runs") and len(c["runs"]) == len(first["runs"]):
         pairs = list(zip(c["runs"], first["runs"]))
         c["beats_first"] = b = {k: sum(x[k] < y[k] for x, y in pairs)

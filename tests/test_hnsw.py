@@ -12,7 +12,7 @@ import os
 import numpy as np
 import pytest
 
-from clinical_data_warehouse_bi_spark import hnsw
+from clinical_data_warehouse_bi_spark import hnsw, similarity
 
 
 def _clustered(n_clusters=30, per_cluster=20, dim=16, seed=11):
@@ -185,9 +185,10 @@ def test_beam_clamped_to_k(spark, corpus):
     assert got.count() == 20
 
 
-def test_oversized_shard_fails_loudly(spark, monkeypatch):
+def test_oversized_shard_fails_loudly(spark, monkeypatch, tmp_path):
     """A shard past the GEMM bound must raise with sizing guidance,
-    not OOM an executor mid-task."""
+    not OOM an executor mid-task; the guidance names the knob of both
+    index kinds (n_shards for hash shards, n_clusters for cells)."""
     monkeypatch.setattr(hnsw, "MAX_SHARD_ROWS", 10)
     df = spark.createDataFrame(
         [(i, [float(i), 1.0]) for i in range(40)],
@@ -195,6 +196,11 @@ def test_oversized_shard_fails_loudly(spark, monkeypatch):
     )
     with pytest.raises(Exception, match="MAX_SHARD_ROWS"):
         hnsw.build_graph(df, n_shards=1, m=4).collect()
+    with pytest.raises(Exception, match="MAX_SHARD_ROWS") as err:
+        hnsw.build_routed_hnsw_index(
+            df, str(tmp_path / "routed_big"), n_clusters=1, m=4
+        )
+    assert "n_shards" in str(err.value) and "n_clusters" in str(err.value)
 
 
 def test_routed_index_recall_at_bounded_probe_fraction(
@@ -256,26 +262,14 @@ def test_routed_index_recall_at_bounded_probe_fraction(
     assert routed_evals < fanout_evals, (routed_evals, fanout_evals)
 
 
-def test_routed_index_sub_shards_and_guards(spark, corpus, tmp_path):
-    """sub_shards splits cells under the GEMM bound without changing
-    the search contract; a hash-sharded index refuses routed serving
-    and a routed index still serves the classic fan-out path."""
+def test_routed_index_guards(spark, corpus, tmp_path):
+    """A routed index still serves the classic fan-out path, a
+    hash-sharded index refuses routed serving, and a routed build
+    needs at least one cell."""
     x, df = corpus
-    path = str(tmp_path / "routed_sub")
-    meta = hnsw.build_routed_hnsw_index(
-        df, path, n_clusters=4, sub_shards=3, m=12
-    )
-    assert meta["n_shards"] == 12
+    path = str(tmp_path / "routed_guard")
+    hnsw.build_routed_hnsw_index(df, path, n_clusters=4, m=12)
     queries = [(qid, [float(v) for v in x[qid]]) for qid in QUERIES]
-    got = hnsw.hnsw_routed_search(
-        spark, path, queries, K, probe_clusters=2
-    ).collect()
-    by_q = {}
-    for r in got:
-        by_q.setdefault(r["query_id"], []).append(r["vec_id"])
-    for qid in QUERIES:
-        truth = set(_exact_topk(x, x[qid], K))
-        assert len(set(by_q[qid]) & truth) / K >= 0.85
     # a routed index is still a valid fan-out index (same format)
     full = hnsw.hnsw_index_search(spark, path, queries, K).collect()
     assert len(full) == len(QUERIES) * K
@@ -318,6 +312,61 @@ def test_routed_real_embeddings_self_retrieval(spark, sf_dir, tmp_path):
         top_r = max(routed[qid], key=lambda t: (t[0], -t[1]))
         top_f = max(fanout[qid], key=lambda t: (t[0], -t[1]))
         assert top_r == top_f == (1.0, qid), (qid, top_r, top_f)
+
+
+def test_routed_tier_ranks_with_the_ivf_quantizer(
+    spark, corpus, tmp_path, monkeypatch
+):
+    """One coarse quantizer: a routed index's rows sit in the cell
+    centroid_rank ranks first, route_queries probes exactly the cells
+    centroid_rank ranks rn <= p for the query vectors, and a served
+    IVF-PQ index probes exactly its rn <= nprobe buckets."""
+    x, df = corpus
+    path = str(tmp_path / "routed_rank")
+    meta = hnsw.build_routed_hnsw_index(df, path, n_clusters=8, m=12)
+
+    def ranked(vectors, centroids, max_rank):
+        out = {}
+        for r in similarity.centroid_rank(
+            vectors, centroids, max_rank, metric="euclidean"
+        ).collect():
+            out.setdefault(r["vec_id"], set()).add(r["cid"])
+        return out
+
+    rank1 = ranked(df, meta["centroids"], 1)
+    placed = spark.read.parquet(path).select("vec_id", "shard").collect()
+    assert len(placed) == len(x)
+    assert {r["vec_id"]: {r["shard"]} for r in placed} == rank1
+
+    queries = [(qid, [float(v) for v in x[qid]]) for qid in QUERIES]
+    qdf = df.where(hnsw.F.col("vec_id").isin(QUERIES))
+    routed = {}
+    for cell, positions in hnsw.route_queries(meta, queries, 3).items():
+        for p in positions:
+            routed.setdefault(queries[p][0], set()).add(cell)
+    assert routed == ranked(qdf, meta["centroids"], 3)
+    # the vectorised ranking equals a per-query loop under the same order
+    cids = np.array([c for c, _ in meta["centroids"]])
+    cmat = np.array([v for _, v in meta["centroids"]])
+    for qid, qv in queries:
+        d2 = np.round((cmat * cmat).sum(axis=1) - 2.0 * (cmat @ qv), 6)
+        assert routed[qid] == set(cids[np.lexsort((cids, d2))[:3]].tolist())
+
+    ivf_path = str(tmp_path / "ivfpq_rank")
+    ivf_meta = similarity.build_ivf_pq_index(df, ivf_path, n_clusters=8, m=4)
+    probed = {}
+    real_local_frame = similarity.local_frame
+
+    def spy(spark_, rows, schema):  # the probe rows search_ivf_pq_index ships
+        for qid, bucket in rows:
+            probed.setdefault(qid, set()).add(bucket)
+        return real_local_frame(spark_, rows, schema)
+
+    monkeypatch.setattr(similarity, "local_frame", spy)
+    similarity.search_ivf_pq_index(spark, ivf_path, df, 8, 2).collect()
+    assert probed == ranked(
+        df.where("vec_id < 8"), ivf_meta["centroids"], 2
+    )
 
 
 def test_route_queries_probe_guard(spark, corpus, tmp_path):

@@ -67,9 +67,6 @@ TEST_SEAMS = {
     # volume gates and geometry
     "hnsw.py::build_graph(upper_every)":
         "test_hnsw: a denser upper layer on fixture-sized shards",
-    "hnsw.py::build_routed_hnsw_index(sub_shards)":
-        "test_hnsw::test_routed_index_sub_shards_and_guards splits a "
-        "fixture cell into sub-shards",
     "joins.py::range_join_binned(bin_width)":
         "test_plans: an explicit bin width against the self-tuned one",
     "lm.py::perplexity(model_broadcast_max_rows)":
